@@ -11,8 +11,8 @@ Scale shapes:
   * the generic-polygon path prefilters candidates by coarse cell cover
     before the exact test (the reference's buffer-prefilter idea,
     baseGrid.py:776-781, made explicit);
-  * kNN for a large query set has a cell-bucketed variant (ring search),
-    the broadcast variant is exact and used when queries fit a broadcast.
+  * kNN is a cell-bucketed ring search with an exact broadcast fallback
+    for the queries whose ring cannot prove the answer.
 """
 
 from __future__ import annotations
@@ -21,8 +21,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from rgr_pdal_topo_spark.synth import segments_df
 
 # --------------------------------------------------------------------------
 # J1: point-in-polygon
@@ -198,9 +196,12 @@ def profile_project(points: DataFrame) -> DataFrame:
     double loop folds into a pure column expression: per profile, a
     WHEN(seg0 valid)...WHEN(segN valid) chain evaluated inside whole-stage
     codegen — NO join, NO shuffle, perfectly parallel scan->explode(profiles)
-    ->filter.  (profile_project_join below is the equivalent join+agg
-    spelling, kept for cross-checking; it shuffles ~|points| groups and
-    loses badly at scale — see BENCH/BASELINE.md.)
+    ->filter.  Each segment's projection parameter t, and from it the
+    projected point, is computed once as a named column in a select below
+    the explode; the chain refers to those columns.  Spark eliminates no
+    common subexpressions inside a Generate, so inlining t there repeats
+    it at every use and more than doubles the stage's generated code
+    (tests/test_plan_shapes.py pins the size).
     """
     from rgr_pdal_topo_spark.synth import profile_segments
 
@@ -210,18 +211,29 @@ def profile_project(points: DataFrame) -> DataFrame:
         by_profile.setdefault(s.profile_id, []).append(s)
 
     x, y = F.col("x"), F.col("y")
+    t_cols, proj_cols = [], []
+    for s in segs:
+        n = f"_{s.profile_id}_{s.seg_idx}"
+        t = (
+            (x - F.lit(s.x1)) * F.lit(s.x2 - s.x1)
+            + (y - F.lit(s.y1)) * F.lit(s.y2 - s.y1)
+        ) / F.lit(s.l2)
+        t_cols.append(t.alias(f"t{n}"))
+        proj_cols.append(
+            (F.lit(s.x1) + F.col(f"t{n}") * F.lit(s.x2 - s.x1)).alias(f"px{n}")
+        )
+        proj_cols.append(
+            (F.lit(s.y1) + F.col(f"t{n}") * F.lit(s.y2 - s.y1)).alias(f"py{n}")
+        )
+
     profile_structs = []
     for prof_id, plist in sorted(by_profile.items()):
         chain = F.lit(None).cast(
             "struct<seg_idx:int,t:double,d:double,l:double>"
         )
         for s in sorted(plist, key=lambda s: s.seg_idx, reverse=True):
-            t = (
-                (x - F.lit(s.x1)) * F.lit(s.x2 - s.x1)
-                + (y - F.lit(s.y1)) * F.lit(s.y2 - s.y1)
-            ) / F.lit(s.l2)
-            projx = F.lit(s.x1) + t * F.lit(s.x2 - s.x1)
-            projy = F.lit(s.y1) + t * F.lit(s.y2 - s.y1)
+            n = f"_{s.profile_id}_{s.seg_idx}"
+            t, projx, projy = F.col(f"t{n}"), F.col(f"px{n}"), F.col(f"py{n}")
             d = F.sqrt(
                 (projx - x) * (projx - x) + (projy - y) * (projy - y)
             )
@@ -242,9 +254,12 @@ def profile_project(points: DataFrame) -> DataFrame:
             F.struct(F.lit(prof_id).alias("profile_id"), chain.alias("hit"))
         )
 
-    out = points.select(
-        "pid", "z", F.explode(F.array(*profile_structs)).alias("pr")
-    ).filter(F.col("pr.hit").isNotNull())
+    out = (
+        points.select("pid", "z", "x", "y", *t_cols)
+        .select("*", *proj_cols)
+        .select("pid", "z", F.explode(F.array(*profile_structs)).alias("pr"))
+        .filter(F.col("pr.hit").isNotNull())
+    )
     return out.select(
         "pid",
         "z",
@@ -253,61 +268,6 @@ def profile_project(points: DataFrame) -> DataFrame:
         F.col("pr.hit.t").alias("t"),
         F.col("pr.hit.d").alias("d"),
         F.col("pr.hit.l").alias("l"),
-    )
-
-
-def profile_project_join(
-    points: DataFrame, segments: DataFrame | None = None
-) -> DataFrame:
-    """Join+agg spelling of profile_project (broadcast nested-loop join then
-    argmin(seg_idx) via min(struct)) — semantically identical; kept as the
-    general path for segment tables too large to fold into expressions."""
-    if segments is None:
-        segments = segments_df(points.sparkSession)
-    s = F.broadcast(segments)
-    p = points
-    j = p.crossJoin(s)
-    t = (
-        (p.x - s.x1) * (s.x2 - s.x1) + (p.y - s.y1) * (s.y2 - s.y1)
-    ) / s.l2
-    j = j.withColumn("t", t).filter((F.col("t") >= 0) & (F.col("t") <= 1))
-    projx = s.x1 + F.col("t") * (s.x2 - s.x1)
-    projy = s.y1 + F.col("t") * (s.y2 - s.y1)
-    j = (
-        j.withColumn("projx", projx)
-        .withColumn("projy", projy)
-        .withColumn(
-            "d",
-            F.sqrt(
-                (F.col("projx") - p.x) * (F.col("projx") - p.x)
-                + (F.col("projy") - p.y) * (F.col("projy") - p.y)
-            ),
-        )
-        .withColumn(
-            "l",
-            s.l_start
-            + F.sqrt(
-                (F.col("projx") - s.x1) * (F.col("projx") - s.x1)
-                + (F.col("projy") - s.y1) * (F.col("projy") - s.y1)
-            ),
-        )
-    )
-    # first-segment-wins == argmin(seg_idx) over valid candidates: one
-    # partial+final agg of min(struct(...)) instead of a windowed sort —
-    # map-side combinable, no per-(pid,profile) sort shuffle at scale.
-    return (
-        j.groupBy("pid", "profile_id")
-        .agg(
-            F.min(F.struct("seg_idx", "t", "d", "l")).alias("b")
-        )
-        .select(
-            "pid",
-            "profile_id",
-            F.col("b.seg_idx").alias("seg_idx"),
-            F.col("b.t").alias("t"),
-            F.col("b.d").alias("d"),
-            F.col("b.l").alias("l"),
-        )
     )
 
 
@@ -396,47 +356,6 @@ def swath_filter(projected: DataFrame, swath_width: float) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def knn_join_broadcast(
-    points: DataFrame,
-    queries: DataFrame,
-    qx: str = "gx",
-    qy: str = "gy",
-    qid: str = "gps_id",
-    k: int = 1,
-    max_dist: float | None = None,
-    sentinel: float = -9999.0,
-    value_col: str = "z",
-) -> DataFrame:
-    """Exact kNN when the query set is broadcastable (the reference's case:
-    ~10^3 GPS points).  dist2 is exact double arithmetic; ties broken by
-    pid — the deterministic-tie-break discipline of stablePriorityQueue
-    (stablePriorityQueue.py:39-50) applied to Spark ordering.
-
-    max_dist cap: value -> sentinel when the winner is farther than
-    max_dist (networkGraph.py:739-741).
-    """
-    p = points
-    q = F.broadcast(queries)
-    j = p.crossJoin(q)
-    d2 = (p.x - F.col(qx)) * (p.x - F.col(qx)) + (p.y - F.col(qy)) * (
-        p.y - F.col(qy)
-    )
-    j = j.withColumn("dist2", d2)
-    w = Window.partitionBy(qid).orderBy(F.col("dist2").asc(), F.col("pid").asc())
-    out = j.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
-    out = out.withColumn("nn_dist", F.sqrt(F.col("dist2")))
-    if max_dist is not None:
-        out = out.withColumn(
-            "nn_value",
-            F.when(F.col("nn_dist") > F.lit(max_dist), F.lit(sentinel)).otherwise(
-                F.col(value_col)
-            ),
-        )
-    else:
-        out = out.withColumn("nn_value", F.col(value_col))
-    return out
-
-
 def knn_join_grid(
     points: DataFrame,
     queries: DataFrame,
@@ -479,10 +398,34 @@ def knn_join_grid(
         .drop("bx0", "by0", "ox", "oy")
     )
     cand = p.join(F.broadcast(q), ["bx", "by"])
-    d2 = (cand.x - F.col(qx)) * (cand.x - F.col(qx)) + (
-        cand.y - F.col(qy)
-    ) * (cand.y - F.col(qy))
-    best = (
+    best = _nearest(cand, qid, qx, qy, value_col)
+    # best is one row per query (tiny): materialize it once so the
+    # resolved/unresolved split and the union don't re-execute the
+    # candidate join DAG (localCheckpoint frees with the DataFrame,
+    # unlike persist which would leak across calls)
+    best = best.localCheckpoint(eager=True)
+    resolved = best.filter(F.col("dist2") <= F.lit(bucket * bucket))
+    unresolved = queries.join(
+        resolved.select(qid), qid, "left_anti"
+    )
+    if unresolved.isEmpty():  # common case: ring guarantee held everywhere
+        return _nn_output(resolved, max_dist, sentinel)
+    # rare fallback: exact global argmin for the unresolved handful
+    fb = _nearest(
+        points.crossJoin(F.broadcast(unresolved)), qid, qx, qy, value_col
+    )
+    return _nn_output(resolved.unionByName(fb), max_dist, sentinel)
+
+
+def _nearest(
+    cand: DataFrame, qid: str, qx: str, qy: str, value_col: str
+) -> DataFrame:
+    """Per-query argmin over (point, query) candidate pairs: one agg of
+    min(struct(dist2, pid, v)), so ties break by pid."""
+    d2 = (F.col("x") - F.col(qx)) * (F.col("x") - F.col(qx)) + (
+        F.col("y") - F.col(qy)
+    ) * (F.col("y") - F.col(qy))
+    return (
         cand.withColumn("dist2", d2)
         .groupBy(qid, qx, qy)
         .agg(
@@ -499,61 +442,20 @@ def knn_join_grid(
             F.col("b.v").alias("_v"),
         )
     )
-    # best is one row per query (tiny): materialize it once so the
-    # resolved/unresolved split and the union don't re-execute the
-    # candidate join DAG (localCheckpoint frees with the DataFrame,
-    # unlike persist which would leak across calls)
-    best = best.localCheckpoint(eager=True)
-    resolved = best.filter(F.col("dist2") <= F.lit(bucket * bucket))
-    unresolved = queries.join(
-        resolved.select(qid), qid, "left_anti"
-    )
-    if unresolved.isEmpty():  # common case: ring guarantee held everywhere
-        out = resolved.withColumn("nn_dist", F.sqrt("dist2"))
-        if max_dist is not None:
-            out = out.withColumn(
-                "nn_value",
-                F.when(
-                    F.col("nn_dist") > F.lit(max_dist), F.lit(sentinel)
-                ).otherwise(F.col("_v")),
-            )
-        else:
-            out = out.withColumn("nn_value", F.col("_v"))
-        return out.drop("_v")
-    # rare fallback: exact global argmin for the unresolved handful
-    fb = (
-        points.crossJoin(F.broadcast(unresolved))
-        .withColumn(
-            "dist2",
-            (F.col("x") - F.col(qx)) * (F.col("x") - F.col(qx))
-            + (F.col("y") - F.col(qy)) * (F.col("y") - F.col(qy)),
-        )
-        .groupBy(qid, qx, qy)
-        .agg(
-            F.min(
-                F.struct(
-                    F.col("dist2"), F.col("pid"), F.col(value_col).alias("v")
-                )
-            ).alias("b")
-        )
-        .select(
-            qid, qx, qy,
-            F.col("b.dist2").alias("dist2"),
-            F.col("b.pid").alias("pid"),
-            F.col("b.v").alias("_v"),
-        )
-    )
-    out = resolved.unionByName(fb).withColumn("nn_dist", F.sqrt("dist2"))
+
+
+def _nn_output(
+    best: DataFrame, max_dist: float | None, sentinel: float
+) -> DataFrame:
+    """nn_dist and nn_value from the argmin rows; nn_value -> sentinel
+    when the winner is farther than max_dist (networkGraph.py:739-741)."""
+    out = best.withColumn("nn_dist", F.sqrt("dist2"))
+    value = F.col("_v")
     if max_dist is not None:
-        out = out.withColumn(
-            "nn_value",
-            F.when(F.col("nn_dist") > F.lit(max_dist), F.lit(sentinel)).otherwise(
-                F.col("_v")
-            ),
-        )
-    else:
-        out = out.withColumn("nn_value", F.col("_v"))
-    return out.drop("_v")
+        value = F.when(
+            F.col("nn_dist") > F.lit(max_dist), F.lit(sentinel)
+        ).otherwise(value)
+    return out.withColumn("nn_value", value).drop("_v")
 
 
 # --------------------------------------------------------------------------
@@ -636,9 +538,7 @@ def _str_pack(
     return bounds, leaves
 
 
-def pip_join_rtree(
-    points: DataFrame, polygons: DataFrame, leaf_cap: int = 16
-) -> DataFrame:
+def pip_join_rtree(points: DataFrame, polygons: DataFrame) -> DataFrame:
     """The north-star phrase implemented literally: a *broadcast R-tree
     per partition*.  Polygon bboxes are STR-packed driver-side (the
     dimension is driver-sized by definition — it broadcasts), shipped
@@ -681,7 +581,7 @@ def pip_join_rtree(
         ],
         dtype=np.float64,
     )
-    bounds, leaves = _str_pack(boxes, leaf_cap)
+    bounds, leaves = _str_pack(boxes)
     spark = points.sparkSession
     bc = spark.sparkContext.broadcast(
         (bounds, [l.copy() for l in leaves], boxes, pids)
@@ -760,30 +660,18 @@ PIP_RECT_MAX = 4096
 PIP_BROADCAST_MAX = 1_000_000
 
 
-def pick_pip_strategy(
-    n_polygons: int,
-    rect_max: int = PIP_RECT_MAX,
-    broadcast_max: int = PIP_BROADCAST_MAX,
-) -> str:
+def pick_pip_strategy(n_polygons: int) -> str:
     """Pure cost rule behind :func:`pip_join` (unit-testable without a
-    session): polygon-layer cardinality -> strategy name."""
-    if n_polygons <= rect_max:
+    session): polygon-layer cardinality -> strategy name.  Reads the
+    module thresholds at call time."""
+    if n_polygons <= PIP_RECT_MAX:
         return "rect"
-    if n_polygons <= broadcast_max:
+    if n_polygons <= PIP_BROADCAST_MAX:
         return "rtree"
     return "partitioned"
 
 
-def pip_join(
-    points: DataFrame,
-    polygons: DataFrame,
-    strategy: str = "auto",
-    n_polygons: int | None = None,
-    rect_max: int = PIP_RECT_MAX,
-    broadcast_max: int = PIP_BROADCAST_MAX,
-    cell: float = 50.0,
-    leaf_cap: int = 16,
-) -> DataFrame:
+def pip_join(points: DataFrame, polygons: DataFrame) -> DataFrame:
     """J1 front door: cost-based dispatch over the three rectangle PIP
     strategies (rect / rtree / partitioned — pip_join_generic takes a
     different input shape, explicit rings, and stays its own entry).
@@ -791,30 +679,19 @@ def pip_join(
     All three are output-identical (same half-open containment, pinned
     by tests + the shared pip oracle); what differs is the physical
     plan, so the pick is a pure function of the polygon-layer
-    cardinality (:func:`pick_pip_strategy`).  Pass ``n_polygons`` when
-    a catalog already knows it (e.g. manifest stats) — otherwise
-    ``auto`` pays one COUNT job on the dimension, the same cost class
-    as the rtree's own driver-side collect and negligible next to the
-    fact-side scan.
+    cardinality (:func:`pick_pip_strategy`).  The pick pays one COUNT
+    job on the dimension, the same cost class as the rtree's own
+    driver-side collect and negligible next to the fact-side scan.
+    Callers that want one fixed strategy call its function directly.
 
     Returns the (pid, polygon_id) pair set — the common schema of the
     three strategies."""
-    if strategy == "auto":
-        if n_polygons is None:
-            n_polygons = polygons.count()
-        strategy = pick_pip_strategy(n_polygons, rect_max, broadcast_max)
+    strategy = pick_pip_strategy(polygons.count())
     if strategy == "rect":
         return pip_join_rect(points, polygons).select("pid", "polygon_id")
     if strategy == "rtree":
-        return pip_join_rtree(points, polygons, leaf_cap=leaf_cap)
-    if strategy == "partitioned":
-        return pip_join_partitioned(points, polygons, cell=cell).select(
-            "pid", "polygon_id"
-        )
-    raise ValueError(
-        f"unknown PIP strategy {strategy!r} "
-        "(want auto|rect|rtree|partitioned)"
-    )
+        return pip_join_rtree(points, polygons)
+    return pip_join_partitioned(points, polygons).select("pid", "polygon_id")
 
 
 # --------------------------------------------------------------------------

@@ -7,8 +7,7 @@ kernels eagerly per grid (dem.py).  Here the same shape is Spark-native:
   1. long-form grid rows are assigned to their home tile AND replicated
      into the halo region of up-to-3 neighboring tiles (a deliberate
      row-duplication transform — Catalyst cannot invent it, SURVEY.md §4);
-  2. one grouped-map stage per tile (``applyInArrow`` by default,
-     ``applyInPandas`` spelling available) materializes a dense
+  2. one grouped-map stage per tile (``applyInArrow``) materializes a dense
      (T+2h) x (T+2h) float64 array (NaN = missing/NoData) and runs the
      *identical* reference kernel (functions/kernels.py);
   3. each tile emits only its own core cells, so the union over tiles is
@@ -30,7 +29,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -87,24 +85,17 @@ def run_stencils(
     specs: dict[str, tuple[str, dict]],
     tile_cells: int = 64,
     value_col: str = "value",
-    transport: str = "arrow",
 ) -> DataFrame:
     """Run one or more stencil kernels over a long-form grid in ONE shuffle.
 
     specs: {output_column: (kernel_name, params)}.
     Returns (cell_row int, cell_col int, <out> double ...) for every cell of
     the dense grid universe covered by tiles (missing input cells = NaN in,
-    NaN/kernel-defined out).
+    NaN/kernel-defined out; a NaN output is emitted as SQL NULL).
 
-    transport: "arrow" (default) runs the per-tile NumPy core via
-    ``applyInArrow`` — RecordBatch columns convert to/from NumPy without
-    the pandas block-manager copy on either side of the worker;
-    "pandas" is the equivalent ``applyInPandas`` spelling.  Both call the
-    IDENTICAL tile core, so outputs are bit-for-bit equal
-    (tests/test_stencils.py asserts it); measured A/B at sf0.1 the arrow
-    path is ~14% faster on the 10-output stencil_suite (2.26 vs 2.63 s,
-    3-run means) and within noise on single-kernel queries — the win is
-    per-column conversion overhead, so it grows with output width.
+    The per-tile NumPy core runs via ``applyInArrow``: RecordBatch columns
+    convert to/from NumPy without the pandas block-manager copy on either
+    side of the worker.
     """
     if value_col != "value":
         grid_df = grid_df.withColumn("value", F.col(value_col))
@@ -121,13 +112,20 @@ def run_stencils(
         f"{c} double" for c in out_cols
     )
 
-    def tile_core(
-        tr2: int, tc2: int,
-        rows_in: np.ndarray, cols_in: np.ndarray, vals_in: np.ndarray,
-    ) -> dict[str, np.ndarray]:
-        """The per-tile NumPy computation, transport-agnostic: dense-ify
-        the tile's (row, col, value) triples with halo, run every kernel,
-        return the core-region output columns."""
+    def run_tile(tbl):
+        """Dense-ify one tile's (row, col, value) triples with halo, run
+        every kernel, return the core-region output columns."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        tr2 = tbl.column("tr2")[0].as_py()
+        tc2 = tbl.column("tc2")[0].as_py()
+        # drop the universe anchor row
+        data = tbl.filter(pc.is_valid(tbl.column("cell_row")))
+        rows_in = data.column("cell_row").to_numpy().astype("int64")
+        cols_in = data.column("cell_col").to_numpy().astype("int64")
+        vals_in = data.column("value").to_numpy().astype("float64")
+
         r0, c0 = tr2 * T - halo, tc2 * T - halo  # padded-window origin
         r1, c1 = tr2 * T + T + halo, tc2 * T + T + halo  # exclusive
         gr0, gc0 = max(r0, 0), max(c0, 0)
@@ -165,45 +163,16 @@ def run_stencils(
             np.arange(tc2 * T, tc2 * T + n_core_c),
             indexing="ij",
         )
-        data = {
+        result = {
             "cell_row": rows_idx.ravel().astype("int32"),
             "cell_col": cols_idx.ravel().astype("int32"),
         }
         for out in out_cols:
-            data[out] = cols[out].ravel()
-        return data
-
-    def per_tile(pdf: pd.DataFrame) -> pd.DataFrame:
-        tr2 = int(pdf["tr2"].iloc[0])
-        tc2 = int(pdf["tc2"].iloc[0])
-        data = pdf[pdf["cell_row"].notna()]  # drop the universe anchor row
-        return pd.DataFrame(tile_core(
-            tr2, tc2,
-            data["cell_row"].to_numpy(dtype="int64"),
-            data["cell_col"].to_numpy(dtype="int64"),
-            data["value"].to_numpy(dtype="float64"),
-        ))
-
-    def per_tile_arrow(tbl):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        tr2 = tbl.column("tr2")[0].as_py()
-        tc2 = tbl.column("tc2")[0].as_py()
-        data = tbl.filter(pc.is_valid(tbl.column("cell_row")))
-        out = tile_core(
-            tr2, tc2,
-            data.column("cell_row").to_numpy().astype("int64"),
-            data.column("cell_col").to_numpy().astype("int64"),
-            data.column("value").to_numpy().astype("float64"),
-        )
-        # from_pandas=True converts NaN -> NULL, matching what the
-        # applyInPandas serializer does implicitly: both transports must
-        # emit the SAME null mask (missing cell = SQL NULL, never NaN)
-        # or the default-transport switch would silently change the
-        # engine's output contract.
+            result[out] = cols[out].ravel()
+        # from_pandas=True converts NaN -> NULL: the output contract is
+        # missing cell = SQL NULL, never NaN
         return pa.table(
-            {k: pa.array(v, from_pandas=True) for k, v in out.items()}
+            {k: pa.array(v, from_pandas=True) for k, v in result.items()}
         )
 
     tiles = _materialize_with_halo(grid_df, grid, tile_cells, halo)
@@ -222,12 +191,7 @@ def run_stencils(
         "CAST(NULL AS DOUBLE) AS value",
     )
     tiles = tiles.unionByName(anchors)
-    grouped = tiles.groupBy("tile_id")
-    if transport == "arrow":
-        return grouped.applyInArrow(per_tile_arrow, schema=schema)
-    if transport == "pandas":
-        return grouped.applyInPandas(per_tile, schema=schema)
-    raise ValueError(f"unknown transport {transport!r}")
+    return tiles.groupBy("tile_id").applyInArrow(run_tile, schema=schema)
 
 
 def run_stencil(
@@ -237,11 +201,10 @@ def run_stencil(
     params: dict | None = None,
     tile_cells: int = 64,
     out_col: str | None = None,
-    transport: str = "arrow",
 ) -> DataFrame:
     return run_stencils(
         grid_df, grid, {out_col or kernel: (kernel, params or {})},
-        tile_cells, transport=transport,
+        tile_cells,
     )
 
 

@@ -11822,8 +11822,8 @@ def q_score_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     immaterial; the only window runs over the DISTINCT score groups.
 
     Scale shape: the corpus folds into per-score-group (npos, nneg)
-    partials map-side; the cumulative window runs on <= 16385 group
-    rows (the q13 score range), never the raw table — the classic
+    partials map-side; the cumulative window runs on a row count
+    bounded by distinct score values, never the raw table — the classic
     "histogram AUC" trick that makes sklearn-style pairwise AUC
     feasible at 10^12 rows."""
     from pyspark.sql import Window

@@ -114,70 +114,95 @@ def test_pip_generic_concave_oracle(spark, pts, pts_pdf):
 
 
 def _project_oracle(pts_pdf: pd.DataFrame) -> pd.DataFrame:
-    """Direct reimplementation of projectPointsOntoLine semantics."""
-    rows = []
+    """projectPointsOntoLine semantics in NumPy over every point: per
+    profile, the first segment (by seg_idx) with t in [0, 1] wins.  Same
+    arithmetic order as the engine, so the comparison is exact."""
+    x, y = pts_pdf.x.to_numpy(), pts_pdf.y.to_numpy()
+    pid = pts_pdf.pid.to_numpy()
+    out = []
     segs = profile_segments()
     for prof in PROFILES:
-        psegs = [s for s in segs if s.profile_id == prof["profile_id"]]
-        for _, p in pts_pdf.iterrows():
-            for s in psegs:
-                t = ((p.x - s.x1) * (s.x2 - s.x1) + (p.y - s.y1) * (s.y2 - s.y1)) / s.l2
-                if 0 <= t <= 1:
-                    px = s.x1 + t * (s.x2 - s.x1)
-                    py = s.y1 + t * (s.y2 - s.y1)
-                    d = math.sqrt((px - p.x) ** 2 + (py - p.y) ** 2)
-                    l = s.l_start + math.sqrt((px - s.x1) ** 2 + (py - s.y1) ** 2)
-                    rows.append((p.pid, prof["profile_id"], s.seg_idx, d, l))
-                    break
-    return pd.DataFrame(rows, columns=["pid", "profile_id", "seg_idx", "d", "l"])
+        won = np.zeros(len(x), dtype=bool)
+        psegs = sorted(
+            (s for s in segs if s.profile_id == prof["profile_id"]),
+            key=lambda s: s.seg_idx,
+        )
+        for s in psegs:
+            t = ((x - s.x1) * (s.x2 - s.x1) + (y - s.y1) * (s.y2 - s.y1)) / s.l2
+            hit = ~won & (t >= 0) & (t <= 1)
+            won |= hit
+            px = s.x1 + t * (s.x2 - s.x1)
+            py = s.y1 + t * (s.y2 - s.y1)
+            d = np.sqrt((px - x) * (px - x) + (py - y) * (py - y))
+            l = s.l_start + np.sqrt(
+                (px - s.x1) * (px - s.x1) + (py - s.y1) * (py - s.y1)
+            )
+            out.append(pd.DataFrame({
+                "pid": pid[hit], "profile_id": prof["profile_id"],
+                "seg_idx": s.seg_idx, "t": t[hit], "d": d[hit], "l": l[hit],
+            }))
+    return pd.concat(out, ignore_index=True)
 
 
 def test_profile_projection_oracle(spark, pts, pts_pdf):
+    key = ["profile_id", "pid"]
     got = (
         joins.profile_project(pts)
-        .select("pid", "profile_id", "seg_idx", "d", "l")
+        .select("pid", "profile_id", "seg_idx", "t", "d", "l")
         .toPandas()
-        .sort_values(["profile_id", "pid"])
+        .sort_values(key)
         .reset_index(drop=True)
     )
-    exp = (
-        _project_oracle(pts_pdf.head(500) if len(pts_pdf) > 500 else pts_pdf)
-    )
-    # oracle over a subset: compare on the intersection
-    sub = got[got.pid.isin(exp.pid)].sort_values(["profile_id", "pid"]).reset_index(drop=True)
-    exp = exp.sort_values(["profile_id", "pid"]).reset_index(drop=True)
-    exp = exp[exp.pid.isin(sub.pid)].reset_index(drop=True)
-    assert len(sub) == len(exp)
-    assert (sub.seg_idx.to_numpy() == exp.seg_idx.to_numpy()).all()
-    np.testing.assert_allclose(sub.d, exp.d, rtol=1e-12)
-    np.testing.assert_allclose(sub.l, exp.l, rtol=1e-12)
+    exp = _project_oracle(pts_pdf).sort_values(key).reset_index(drop=True)
+    assert len(got) == len(exp) > 0
+    for c in ["pid", "profile_id", "seg_idx", "t", "d", "l"]:
+        np.testing.assert_array_equal(got[c].to_numpy(), exp[c].to_numpy(), c)
+
+
+def _knn_oracle(pts_pdf, gps_pdf, bucket, max_dist=100.0):
+    """Brute-force argmin over every point (pid tiebreak) plus the
+    max-distance sentinel; also counts the queries whose 3x3 bucket
+    ring cannot prove the answer (knn_join_grid's fallback set)."""
+    x, y = pts_pdf.x.to_numpy(), pts_pdf.y.to_numpy()
+    pid, z = pts_pdf.pid.to_numpy(), pts_pdf.z.to_numpy()
+    bx, by = np.floor(x / bucket), np.floor(y / bucket)
+    rows, n_fallback = [], 0
+    for g in gps_pdf.itertuples():
+        d2 = (x - g.gx) * (x - g.gx) + (y - g.gy) * (y - g.gy)
+        dmin = d2.min()
+        i = np.flatnonzero(d2 == dmin)[np.argmin(pid[d2 == dmin])]
+        dist = math.sqrt(dmin)
+        rows.append((g.gps_id, pid[i], dist, z[i] if dist <= max_dist else -9999.0))
+        ring = (np.abs(bx - math.floor(g.gx / bucket)) <= 1) & (
+            np.abs(by - math.floor(g.gy / bucket)) <= 1
+        )
+        n_fallback += not ring.any() or d2[ring].min() > bucket * bucket
+    exp = pd.DataFrame(rows, columns=["gps_id", "pid", "nn_dist", "nn_value"])
+    return exp.sort_values("gps_id").reset_index(drop=True), n_fallback
 
 
 def test_knn_broadcast_oracle(spark, pts, pts_pdf):
+    """knn_join_grid against a brute-force broadcast argmin, exactly: at
+    the default bucket (the ring guarantee holds for every query) and at
+    a bucket small enough that some queries take the global fallback."""
     gps = gps_df(spark, SF_DIR)
-    got = (
-        joins.knn_join_broadcast(pts, gps, max_dist=100.0)
-        .select("gps_id", "pid", "nn_dist", "nn_value")
-        .toPandas()
-        .sort_values("gps_id")
-        .reset_index(drop=True)
-    )
     gps_pdf = gps.toPandas()
-    exp_rows = []
-    for _, g in gps_pdf.iterrows():
-        d2 = (pts_pdf.x - g.gx) ** 2 + (pts_pdf.y - g.gy) ** 2
-        best = d2.round(20).sort_values(kind="mergesort").index
-        # argmin with pid tiebreak
-        dmin = d2.min()
-        cands = pts_pdf[d2 == dmin].sort_values("pid")
-        p = cands.iloc[0]
-        dist = math.sqrt(dmin)
-        val = p.z if dist <= 100.0 else -9999.0
-        exp_rows.append((g.gps_id, p.pid, dist, val))
-    exp = pd.DataFrame(exp_rows, columns=["gps_id", "pid", "nn_dist", "nn_value"]).sort_values("gps_id").reset_index(drop=True)
-    assert (got.pid.to_numpy() == exp.pid.to_numpy()).all()
-    np.testing.assert_allclose(got.nn_dist, exp.nn_dist, rtol=1e-12)
-    np.testing.assert_allclose(got.nn_value, exp.nn_value, rtol=1e-12)
+    for bucket in (50.0, 10.0):
+        got = (
+            joins.knn_join_grid(pts, gps, bucket=bucket, max_dist=100.0)
+            .select("gps_id", "pid", "nn_dist", "nn_value")
+            .toPandas()
+            .sort_values("gps_id")
+            .reset_index(drop=True)
+        )
+        exp, n_fallback = _knn_oracle(pts_pdf, gps_pdf, bucket)
+        if bucket == 10.0:
+            assert n_fallback > 0  # the fallback path is exercised
+        assert len(got) == len(exp) == len(gps_pdf)
+        for c in ["gps_id", "pid", "nn_dist", "nn_value"]:
+            np.testing.assert_array_equal(
+                got[c].to_numpy(), exp[c].to_numpy(), f"{c} @ {bucket}"
+            )
 
 
 def test_hag(spark, pts):
@@ -200,50 +225,6 @@ def test_grid_residuals(spark, pts):
     r = joins.grid_residuals(a, b).first()
     assert r.n_cells > 0
     assert r.ssr >= 0.0
-
-
-def test_knn_grid_equals_broadcast(spark, pts):
-    from rgr_pdal_topo_spark.synth import gps_df
-
-    gps = gps_df(spark, SF_DIR)
-    a = (
-        joins.knn_join_broadcast(pts, gps, max_dist=100.0)
-        .select("gps_id", "pid", "nn_dist", "nn_value")
-        .toPandas()
-        .sort_values("gps_id")
-        .reset_index(drop=True)
-    )
-    b = (
-        joins.knn_join_grid(pts, gps, max_dist=100.0)
-        .select("gps_id", "pid", "nn_dist", "nn_value")
-        .toPandas()
-        .sort_values("gps_id")
-        .reset_index(drop=True)
-    )
-    assert (a.pid.to_numpy() == b.pid.to_numpy()).all()
-    np.testing.assert_allclose(a.nn_dist, b.nn_dist, rtol=0)
-    np.testing.assert_allclose(a.nn_value, b.nn_value, rtol=0)
-
-
-def test_profile_folded_equals_join(spark, pts):
-    a = (
-        joins.profile_project(pts)
-        .select("pid", "profile_id", "seg_idx", "t", "d", "l")
-        .toPandas()
-        .sort_values(["profile_id", "pid"])
-        .reset_index(drop=True)
-    )
-    b = (
-        joins.profile_project_join(pts)
-        .select("pid", "profile_id", "seg_idx", "t", "d", "l")
-        .toPandas()
-        .sort_values(["profile_id", "pid"])
-        .reset_index(drop=True)
-    )
-    assert len(a) == len(b)
-    assert (a.seg_idx.to_numpy() == b.seg_idx.to_numpy()).all()
-    np.testing.assert_array_equal(a.d.to_numpy(), b.d.to_numpy())
-    np.testing.assert_array_equal(a.l.to_numpy(), b.l.to_numpy())
 
 
 def test_profile_peaks_savgol_and_peak(spark):
@@ -470,10 +451,10 @@ def test_pip_partitioned_matches_rect_and_never_broadcasts(spark):
     assert ("SortMergeJoin" in plan) or ("ShuffledHashJoin" in plan)
 
 
-def test_pip_join_dispatcher(spark):
-    """pip_join: the pure cost rule picks by cardinality, every forced
-    strategy returns the identical pair set, and auto (which pays one
-    COUNT on the dimension) equals the forced pick."""
+def test_pip_join_dispatcher(spark, monkeypatch):
+    """pip_join: the pure cost rule picks by cardinality, and each of the
+    three routes (forced by lowering the module thresholds, which
+    pip_join reads at call time) returns the pip_join_rect pair set."""
     import numpy as np
 
     assert joins.pick_pip_strategy(25) == "rect"
@@ -505,30 +486,23 @@ def test_pip_join_dispatcher(spark):
     )
     want = sorted(
         (r.pid, r.polygon_id)
-        for r in joins.pip_join(pts, polys, strategy="rect").collect()
+        for r in joins.pip_join_rect(pts, polys)
+        .select("pid", "polygon_id").collect()
     )
     assert want  # non-vacuous
-    for s in ("rtree", "partitioned", "auto"):
-        got = sorted(
-            (r.pid, r.polygon_id)
-            for r in joins.pip_join(pts, polys, strategy=s).collect()
-        )
-        assert got == want, s
-    # forcing thresholds re-routes auto without touching the data
-    got_rt = sorted(
-        (r.pid, r.polygon_id)
-        for r in joins.pip_join(pts, polys, rect_max=10).collect()
-    )
-    got_part = sorted(
-        (r.pid, r.polygon_id)
-        for r in joins.pip_join(
-            pts, polys, rect_max=10, broadcast_max=20
-        ).collect()
-    )
-    assert got_rt == got_part == want
-
-    with pytest.raises(ValueError):
-        joins.pip_join(pts, polys, strategy="quadtree")
+    # (PIP_RECT_MAX, PIP_BROADCAST_MAX) -> the plan node only that route has
+    routes = [
+        (joins.PIP_RECT_MAX, joins.PIP_BROADCAST_MAX, "BroadcastNestedLoopJoin"),
+        (10, joins.PIP_BROADCAST_MAX, "MapInPandas"),
+        (10, 20, "__cover"),
+    ]
+    for n_rect, n_rtree, marker in routes:
+        monkeypatch.setattr(joins, "PIP_RECT_MAX", n_rect)
+        monkeypatch.setattr(joins, "PIP_BROADCAST_MAX", n_rtree)
+        df = joins.pip_join(pts, polys)
+        assert marker in df._jdf.queryExecution().executedPlan().toString()
+        got = sorted((r.pid, r.polygon_id) for r in df.collect())
+        assert got == want, marker
 
 
 def test_zonal_overlay_hand_computed(spark):

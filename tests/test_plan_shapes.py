@@ -73,6 +73,26 @@ def test_profile_project_no_shuffle(spark):
     assert "*(1)" in plan  # whole-stage codegen span
 
 
+def test_profile_project_codegen_size(spark):
+    """Each segment's t (and projected point) is a named column below the
+    explode, not inlined at every use inside the Generate.  On this input
+    the inlined spelling generated 155,115 characters of whole-stage code;
+    the pin is 69,000."""
+    from tests.conftest import SF_DIR_ORACLE
+
+    from rgr_pdal_topo_spark.operators.joins import profile_project
+    from rgr_pdal_topo_spark.synth import points_df
+
+    df = profile_project(points_df(spark, SF_DIR_ORACLE))
+    df.write.format("noop").mode("overwrite").save()
+    stages = spark._jvm.org.apache.spark.sql.execution.debug.package \
+        .codegenStringSeq(df._jdf.queryExecution().executedPlan())
+    it, total = stages.iterator(), 0
+    while it.hasNext():
+        total += len(it.next()._2())
+    assert 0 < total < 69_000, total
+
+
 def test_whole_stage_codegen_on_points(spark):
     from rgr_pdal_topo_spark.synth import points_df
 
@@ -175,15 +195,11 @@ def test_multimodal_features_single_python_stage(spark):
 def test_stencil_suite_two_arrow_stages(spark):
     """Eleven DEM kernels must share ONE grouped-map stage (plus one for
     the mask grid) — per-kernel stages would multiply the halo shuffle.
-    The stencil engine defaults to applyInArrow (FlatMapGroupsInArrow);
-    count both spellings so a transport change can't hide extra stages."""
+    The stencil engine runs on applyInArrow (FlatMapGroupsInArrow)."""
     from rgr_pdal_topo_spark.queries import QUERIES
 
     plan = _plan(QUERIES["stencil_suite"](spark, SF_DIR))
-    n_grouped = plan.count("FlatMapGroupsInArrow") + plan.count(
-        "FlatMapGroupsInPandas"
-    )
-    assert n_grouped == 2
+    assert plan.count("FlatMapGroupsInArrow") == 2
     assert "CartesianProduct" not in plan
 
 

@@ -1,4 +1,4 @@
-"""Stencil engine: tiled applyInPandas == whole-grid NumPy oracle, plus
+"""Stencil engine: tiled applyInArrow == whole-grid NumPy oracle, plus
 analytic property checks matching the reference formulas (dem.py)."""
 
 from __future__ import annotations
@@ -103,44 +103,45 @@ def test_tile_size_invariance(spark, dem_df):
     np.testing.assert_allclose(ga, gb, rtol=0, atol=0, equal_nan=True)
 
 
-def test_arrow_pandas_transport_bit_exact(spark, dem_df):
-    """applyInArrow and applyInPandas transports share one tile core and
-    must be bit-for-bit identical — incl. NaN positions and masked
-    (NULL-value) input cells."""
+def test_null_contract_with_all_null_tile(spark, dem_df):
+    """Output contract on masked input (NULL-value cells) plus one tile
+    whose input cells are all NULL: the full dense row set, a missing
+    output is SQL NULL and never NaN — exactly where the whole-grid
+    oracle has NaN — and every other value equals the oracle bit for
+    bit."""
     import pyspark.sql.functions as F
 
-    masked = dem_df.withColumn(
-        "value",
-        F.when((F.col("cell_row") * 97 + F.col("cell_col")) % 13 == 5, None)
-        .otherwise(F.col("value")),
+    T = 32
+    masked_expr = ((F.col("cell_row") * 97 + F.col("cell_col")) % 13 == 5) | (
+        (F.col("cell_row") < T) & (F.col("cell_col") >= 2 * T)
+        & (F.col("cell_col") < 3 * T)
     )
+    masked = dem_df.withColumn(
+        "value", F.when(masked_expr, None).otherwise(F.col("value"))
+    )
+    dem = make_dem()
+    r, c = np.meshgrid(np.arange(NR), np.arange(NC), indexing="ij")
+    dem[((r * 97 + c) % 13 == 5) | ((r < T) & (c >= 2 * T) & (c < 3 * T))] = np.nan
     specs = {
         "hs": ("hillshade", {}),
         "tpi": ("tpi", {"inner_radius": 10.0, "outer_radius": 30.0}),
         "med": ("windowed_median", {"pixel_width": 5}),
     }
-    key = ["cell_row", "cell_col"]
-    da = run_stencils(masked, GRID, specs, tile_cells=32, transport="arrow")
-    dp = run_stencils(masked, GRID, specs, tile_cells=32, transport="pandas")
-    # SQL-level null masks must agree BEFORE toPandas (which collapses
-    # NULL to NaN and would hide a transport that emits NaN where the
-    # other emits NULL — the exact bug from_pandas=True fixes)
-    import pyspark.sql.functions as SF
-    for c in specs:
-        na = da.select(SF.count(SF.when(SF.isnull(c), 1))).first()[0]
-        np_ = dp.select(SF.count(SF.when(SF.isnull(c), 1))).first()[0]
-        nana = da.select(SF.count(SF.when(SF.isnan(c), 1))).first()[0]
-        nanp = dp.select(SF.count(SF.when(SF.isnan(c), 1))).first()[0]
-        assert (na, nana) == (np_, nanp), (c, na, nana, np_, nanp)
-    a = da.toPandas().sort_values(key).reset_index(drop=True)
-    p = dp.toPandas().sort_values(key).reset_index(drop=True)
-    assert len(a) == len(p) == GRID.nrows * GRID.ncols
-    for c in specs:
-        assert np.array_equal(
-            a[c].to_numpy().view("int64"), p[c].to_numpy().view("int64")
-        ), c
-    with pytest.raises(ValueError, match="transport"):
-        run_stencils(dem_df, GRID, specs, transport="rowwise")
+    out = run_stencils(masked, GRID, specs, tile_cells=T)
+    assert out.count() == NR * NC
+    got = out.toPandas()
+    for col, (kernel, params) in specs.items():
+        exp = apply_kernel_full(dem, GRID, kernel, params)
+        n_null, n_nan = out.select(
+            F.count(F.when(F.isnull(col), 1)),
+            F.count(F.when(F.isnan(col), 1)),
+        ).first()
+        assert n_nan == 0, col
+        assert n_null == np.isnan(exp).sum() > 0, col
+        g = df_to_grid(got, col)
+        assert np.array_equal(np.isnan(g), np.isnan(exp)), col
+        ok = ~np.isnan(exp)
+        assert np.array_equal(g[ok].view("int64"), exp[ok].view("int64")), col
 
 
 def test_multi_kernel_single_shuffle(spark, dem_df):
