@@ -25,6 +25,11 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # The headline subset: one per operator family (scan/derive, gridding agg,
 # stencil engine, spatial joins, dedup, similarity, relational, windows).
+# The first 20 entries are the "comparable-20 subtotal" of
+# BENCH/BASELINE.md.  A query whose builder does its work eagerly
+# (localCheckpoint or collect at build time) is left out, because the
+# noop-sink timing would measure a checkpoint re-read, not the work; each
+# such absence is noted where it would otherwise sit.
 HEADLINE = [
     "points_extract",
     "grid_idw",
@@ -46,96 +51,73 @@ HEADLINE = [
     "extract_pages",
     "perm_ensemble",
     "network_dissolve",
-    # round-4 additions — compare totals across rounds on the 20 queries
-    # above (the "comparable-20 subtotal" in BENCH/BASELINE.md); these
-    # three get their own per-query series from r4 on
     "terrain_pipeline",
     "corpus_pipeline",
     "hex_pages",
-    # round-5 additions — own series from r5 on (neardup_incremental and
-    # pagerank_hosts are deliberately absent: their work runs eagerly
-    # inside the query builder — the LSH store protocol and the
-    # localCheckpoint-pinned supersteps — so the noop-sink timing would
-    # measure a checkpoint re-read, not the work)
+    # (neardup_incremental and pagerank_hosts are absent: the LSH store
+    # protocol and the localCheckpoint-pinned supersteps run eagerly)
     "pip_rtree",
     "cosine_topk_ivf_sq8",
     "hex_ring_density",
     "pages_pipeline",
     "line_dedup",
-    # late-r5 additions — own series (cms_heavy_hitters is absent for the
-    # same eager-builder reason: its shared shingle-id input is
+    # (cms_heavy_hitters is absent: its shared shingle-id input is
     # localCheckpoint-pinned at build time)
     "crawl_latest",
     "hll_distinct",
     "views_asof",
     "bm25_scores",
     "kwic_snippets",
-    # r5 continuation — own series (dedup_keep, hll_overlap, and
-    # dup_spans + dsir_weights + bigram_ppl + winnow_fingerprints are absent for the eager-builder reason:
-    # connected components, the sketch register folds, and the
-    # positional-shingle / bigram streams localCheckpoint inside the
-    # builder)
+    # (dedup_keep, hll_overlap, dup_spans, dsir_weights, bigram_ppl and
+    # winnow_fingerprints are absent: connected components, the sketch
+    # register folds, and the positional-shingle / bigram streams
+    # localCheckpoint inside the builder)
     "anchor_text",
     "search_results",
     "hll_by_lang",
-    # closing-session additions — own series from here on
     "source_quality",
     "semdedup",
     "token_packing",
     "release_pipeline",
-    # final-session additions — own series (ccnet_buckets is absent for
-    # the eager-builder reason: it builds on bigram_ppl's checkpointed
+    # (ccnet_buckets is absent: it builds on bigram_ppl's checkpointed
     # occurrence stream)
     "bpe_pairs",
     "contour_cells",
     "aspect_rose",
-    "zipf_slope",
     "hypsometry",
-    "pmi_collocations",
-    # closing additions — own series (hits_hosts / host_distance /
-    # lpa_communities are absent for the eager-builder reason: their
-    # edge lists localCheckpoint inside the builder; twi and
+    # (hits_hosts, host_distance and lpa_communities are absent: their
+    # edge lists localCheckpoint inside the builder.  twi and
     # grid_mean_salted share upstream passes with flow_chi / grid_idw
-    # but time their OWN marginal plans, the hypsometry precedent)
+    # but time their OWN marginal plans)
     "viewshed",
     "grid_mean_salted",
     "twi",
     "cocitation_hosts",
-    "token_entropy",
     "link_geo_bands",
     "funnel_steps",
-    "retention_cohorts",
-    # (host_triangles is absent for the eager-builder reason: its
-    # oriented edge list localCheckpoints inside triangle_counts)
+    # (host_triangles is absent: its oriented edge list localCheckpoints
+    # inside triangle_counts)
     "degree_histogram",
     "curvature_classes",
     "tile_pyramid",
     "link_reciprocity",
-    "event_transitions",
     "doc_keywords",
-    "corpus_rollup",
     "langid_confusion",
     "hotspot_cells",
     "slope_area_fit",
     "crawl_segment_diff",
-    "error_bursts",
-    "props_histogram",
     "morans_i",
-    # (bowtie_components is absent for the eager-builder reason: its BFS
-    # supersteps localCheckpoint inside bowtie)
+    # (bowtie_components is absent: its BFS supersteps localCheckpoint
+    # inside bowtie)
     "degree_assortativity",
     "indegree_gini",
     "session_peaks",
-    "active_users",
     "semivariogram",
     "ripley_k",
-    "cusum_alarms",
     "rich_club",
     "trade_volumes",
-    "lang_kl",
     "adaptive_grid",
-    # last-session additions — own series (kcore_hosts, canonical_chains
-    # and clustering_coeff are absent for the eager-builder reason: the
+    # (kcore_hosts, canonical_chains and clustering_coeff are absent: the
     # peel rounds, the pointer-doubling rounds, and triangle_counts'
     # oriented edge list all localCheckpoint inside their builders)
     "geary_c",
@@ -157,11 +139,9 @@ HEADLINE = [
     "phrase_search",
     "trend_mk",
     "dbscan_grid",
-    # this session's additions — own series (trustrank_hosts and
-    # crawl_schedule are absent for the eager-builder reason: the
-    # trust supersteps localCheckpoint inside trustrank_int; hand
-    # times its OWN marginal plan over the shared memoized flow pass,
-    # the flow_chi/twi precedent)
+    # (trustrank_hosts and crawl_schedule are absent: the trust
+    # supersteps localCheckpoint inside trustrank_int.  hand times its
+    # OWN marginal plan over the shared memoized flow pass)
     "hand",
     "geomorphons",
     "zonal_overlay",
@@ -169,54 +149,33 @@ HEADLINE = [
     "cosine_topk_ivf_pq",
     "decayed_activity",
     "postings_gaps",
-    "small_qty_revenue",
     "search_rrf",
     "emerging_hotspots",
     "geo_language_map",
     "good_turing",
-    "funnel_wilson",
-    "chi2_independence",
-    # (link_prediction and cost_distance are absent for the
-    # eager-builder reason: the symmetrized edge list localCheckpoints
-    # inside adamic_adar; the relaxation rounds checkpoint per step)
-    # final-stretch additions — own series (neardup_eval is absent for
-    # the eager-builder reason: its shingle-id input localCheckpoints
-    # inside the builder; basin_drainage times its OWN marginal plan
-    # over the shared memoized flow pass, the flow_chi/twi/hand
-    # precedent)
-    "late_suppliers",
-    "score_auc",
-    "segment_psi",
-    "lang_budget",
+    # (link_prediction and cost_distance are absent: the symmetrized
+    # edge list localCheckpoints inside adamic_adar; the relaxation
+    # rounds checkpoint per step.  neardup_eval is absent: its shingle-id
+    # input localCheckpoints inside the builder.  basin_drainage times
+    # its OWN marginal plan over the shared memoized flow pass)
     "search_ndcg",
     "vrm",
     "langid_kappa",
-    "score_calibration",
-    "vocab_coverage",
-    "theil_decomposition",
-    "lang_source_mi",
-    "benford_digits",
     "basin_drainage",
     "tile_skew",
-    "customer_orders_hist",
     "lang_homophily",
     "openness",
-    "ks_lengths",
     "semivariogram_aniso",
-    # (dedup_cluster_sizes is absent for the eager-builder reason: its
-    # shingle-id input localCheckpoints inside the builder)
+    # (dedup_cluster_sizes is absent: its shingle-id input
+    # localCheckpoints inside the builder)
     "ann_recall_eval",
     "funnel_latency",
-    "heaps_law",
-    "traffic_fano",
     "hill_tail",
     "langid_margin",
     "resample_error",
-    # (order_census times its OWN marginal plan over the shared
-    # memoized flow pass, the flow_chi/twi/hand precedent)
+    # (order_census times its OWN marginal plan over the shared memoized
+    # flow pass)
     "order_census",
-    "user_value_concentration",
-    "events_dow_profile",
 ]
 
 

@@ -657,9 +657,8 @@ def top_anchors(pairs: DataFrame, k: int = 3) -> DataFrame:
     is deterministic in both engines.
 
     The ranking window runs over the AGGREGATED (host, anchor) table —
-    bounded by hosts x vocab, never the raw link stream — the same
-    "window the rollup, not the data" discipline as vocab_topk and the
-    hex k-ring join."""
+    bounded by hosts x vocab, never the raw link stream: the window's
+    sort sees one row per distinct (host, anchor), not one per link."""
     from pyspark.sql import Window
 
     agg = pairs.groupBy("host", "anchor").agg(
@@ -943,7 +942,7 @@ AA_Q = 8192       #: 2^-13 grid for ln(deg) and the reciprocal weights
 
 #: shared integer spelling of the Adamic-Adar wedge weight: pin ln(deg)
 #: to the 2^-13 grid (integer-valued double -> bit-identical libm input,
-#: the bm25/zipf contract), then one exact floor-division gives the
+#: the bm25 contract), then one exact floor-division gives the
 #: reciprocal on the same grid: rq = floor(8192 * 8192 / wq).
 AA_WQ_SQL = (
     "CAST(FLOOR(LN(CAST(deg AS DOUBLE)) * 8192.0 + 0.5) AS BIGINT)"

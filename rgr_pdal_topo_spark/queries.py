@@ -996,7 +996,7 @@ _FUNNEL_WINDOW = "INTERVAL 48 HOUR"  # sessionize-proven portable syntax
 
 
 # the funnel CTE chain + counts union — ONE spelling shared by
-# funnel_steps and the funnel_wilson inference layer
+# funnel_steps and funnel_latency
 _FUNNEL_CTE_LIST = [
     (
         f"s{i} AS (SELECT user_id, ts, event_id FROM "
@@ -1473,112 +1473,6 @@ def q_session_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rgr_pdal_topo_spark.operators import temporal
 
     return temporal.daily_coverage(_session_intervals(spark, sf_dir))
-
-
-@query(
-    "retention_cohorts",
-    _with(
-        "d AS (SELECT DISTINCT user_id, "
-        "CAST(FLOOR(epoch(ts)) AS BIGINT) // 86400 AS day FROM events)",
-        "c AS (SELECT user_id, MIN(day) AS cohort_day FROM d "
-        "GROUP BY user_id)",
-    )
-    + "SELECT c.cohort_day, d.day - c.cohort_day AS day_offset, "
-    "CAST(COUNT(*) AS BIGINT) AS n_users "
-    "FROM d JOIN c ON c.user_id = d.user_id "
-    "GROUP BY c.cohort_day, d.day - c.cohort_day",
-)
-def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort retention triangle: users grouped by first-activity
-    epoch-day, counted on each later active day as an offset from
-    their cohort day — THE product-analytics rollup next to
-    funnel_steps.  All-integer (epoch-day division on the
-    views_asof precedent: Spark unix_timestamp == DuckDB
-    FLOOR(epoch()) for positive epochs), so parity is exact.
-
-    Scale shape: the distinct (user, day) projection collapses the
-    event stream first (bounded by users x days, not events), the
-    cohort table is users-sized, and both the join and the final
-    rollup combine map-side."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    d = ev.select(
-        "user_id",
-        (F.unix_timestamp("ts") / 86400).cast("long").alias("day"),
-    ).distinct()
-    c = d.groupBy("user_id").agg(F.min("day").alias("cohort_day"))
-    return (
-        d.join(c, "user_id")
-        .groupBy(
-            "cohort_day",
-            (F.col("day") - F.col("cohort_day")).alias("day_offset"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_users"))
-    )
-
-
-@query(
-    "active_users",
-    _with(
-        "d AS (SELECT DISTINCT user_id, "
-        "CAST(FLOOR(epoch(ts)) AS BIGINT) // 86400 AS day FROM events)",
-        "dau AS (SELECT day, CAST(COUNT(*) AS BIGINT) AS dau FROM d "
-        "GROUP BY day)",
-        "w AS (SELECT user_id, day + u.o AS day FROM d, "
-        "LATERAL (SELECT unnest(generate_series(0, 6)) AS o) u)",
-        "wau AS (SELECT day, CAST(COUNT(DISTINCT user_id) AS BIGINT) "
-        "AS wau FROM w GROUP BY day)",
-    )
-    + "SELECT dau.day, dau.dau, wau.wau, "
-    "ROUND(CAST(dau.dau AS DOUBLE) / CAST(wau.wau AS DOUBLE), 6) "
-    "AS stickiness FROM dau JOIN wau ON wau.day = dau.day",
-)
-def q_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DAU / trailing-7-day WAU / stickiness per epoch-day — the
-    rolling-distinct product metric every analytics stack reports.
-    Rolling COUNT DISTINCT has no window-function spelling (distinct
-    isn't decomposable over frames), so the engine uses the
-    replicate-to-offsets plan: a user active on ``day`` is replicated
-    to the 7 window-anchor days it keeps active, and WAU is one
-    count-distinct per anchor.  Rows exist for days with at least one
-    event (WAU there is never 0 — the day's own users are in the
-    window — so the one float division needs no guard); dau, wau are
-    exact BIGINTs, stickiness is ROUND(,6) of their ratio.
-
-    Scale shape: the distinct (user, day) projection collapses the
-    event stream FIRST (bounded by users x days, the retention_cohorts
-    precedent); the x7 replication and both distinct aggs run on that
-    rollup, never on raw events; the final join is day-keyed on two
-    days-sized tables."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    d = ev.select(
-        "user_id",
-        (F.unix_timestamp("ts") / 86400).cast("long").alias("day"),
-    ).distinct()
-    dau = d.groupBy("day").agg(F.count(F.lit(1)).alias("dau"))
-    w = d.select(
-        "user_id",
-        F.explode(
-            F.sequence(F.col("day"), F.col("day") + F.lit(6))
-        ).alias("day"),
-    )
-    wau = w.groupBy("day").agg(
-        F.countDistinct("user_id").alias("wau")
-    )
-    return (
-        dau.join(wau, "day")
-        .select(
-            "day",
-            "dau",
-            "wau",
-            F.round(
-                F.col("dau").cast("double") / F.col("wau").cast("double"), 6
-            ).alias("stickiness"),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2289,7 +2183,7 @@ def q_semivariogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells contribute no pairs at any lag.
 
     Scale shape: each grid cell replicates to its 2 x 8 lag targets
-    through ONE inline explode (the active_users/sweep trick — no
+    through ONE inline explode of a sequence of offsets (no
     16-branch union, no band join), then one equi-join against the
     cells-sized grid on the exact target key and one partial+final
     groupBy(h).  At raster scale the same pairs fall out of the
@@ -4341,7 +4235,7 @@ def q_twi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Slope-area OLS spellings: BOTH regression variables are ln of
-# INTEGER-VALUED doubles (the bm25/zipf contract — arbitrary-double ln
+# INTEGER-VALUED doubles (the bm25 contract — arbitrary-double ln
 # may differ by an ulp between engines, integer-valued arguments are
 # measured bit-identical): x = ln(area in CELLS) and y = ln(slope
 # scaled to its exact 2^-13 integer).  The 8192 scaling shifts y by a
@@ -4394,7 +4288,8 @@ def q_slope_area_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer — the constant ln(8192) shift cancels because an OLS slope
     is shift-invariant in y), pinned to the 2^-13 grid, so all five
     accumulators are exact BIGINTs and the coefficient is ONE guarded
-    division (the zipf_slope contract end to end).  Sub-quantum slopes
+    division of two exact integer combinations (the 8192 scale cancels
+    in the ratio).  Sub-quantum slopes
     (FLOOR(s*8192+0.5) = 0) are excluded identically in both engines
     (ln(0) is undefined in the model anyway).
 
@@ -6511,149 +6406,6 @@ _PII_PLANT_SQL = (
 _PII_COUNTS, _PII_SCRUBBED = pagesops.pii_scrub_sql("ptext")
 
 
-@query(
-    "vocab_topk",
-    _with(
-        "t AS (SELECT lang, unnest(list_filter(string_split(text, ' '), "
-        "x -> x <> '')) AS tok FROM documents)",
-        "c AS (SELECT lang, tok, COUNT(*) AS n FROM t GROUP BY lang, tok)",
-        "r AS (SELECT lang, tok, n, ROW_NUMBER() OVER (PARTITION BY lang "
-        "ORDER BY n DESC, tok ASC) AS rank FROM c)",
-    )
-    + "SELECT lang, rank, tok, CAST(n AS BIGINT) AS n FROM r "
-    "WHERE rank <= 20",
-)
-def q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vocabulary statistics: per-language top-20 tokens by occurrence —
-    the corpus-stats pass of tokenizer training (BPE/unigram trainers
-    start from exactly this table) and the quickest corpus-drift
-    monitor.  Deterministic tie-break (count desc, token asc) keeps the
-    cut replayable.
-
-    Scale shape: tokens fold straight into a partial+final (lang, tok)
-    count — the shuffle carries (lang, tok, int), never documents — and
-    the ranking window runs on the AGGREGATED vocab table, partitioned
-    by language (at 10^12 docs the vocab table is millions of rows, not
-    trillions; no global single-partition window anywhere)."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-    from pyspark.sql import Window
-
-    docs = load_table(spark, sf_dir, "documents")
-    c = (
-        docs.select("lang", F.explode(F.split("text", " ")).alias("tok"))
-        .filter(F.col("tok") != "")
-        .groupBy("lang", "tok")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    w = Window.partitionBy("lang").orderBy(
-        F.col("n").desc(), F.col("tok").asc()
-    )
-    return (
-        c.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 20)
-        .select("lang", "rank", "tok", "n")
-    )
-
-
-# PMI single spelling (F.expr + oracle): the ln argument is a chain of
-# three divisions and two multiplies over integer-valued doubles in ONE
-# spelled association — every IEEE op is correctly rounded over
-# identical operands, so the argument (and hence ln, which both engines
-# take from the same libm-compatible implementation: the bm25 contract)
-# is bit-identical; the 2^-13 pin makes pmi_q13 an exact BIGINT.  The
-# divide-first shape also keeps every intermediate near 1.0 — the
-# all-integer numerator c12 * ntok^2 would overflow int64 at corpus
-# scale.
-_PMI_SQL = (
-    "CAST(FLOOR(ln("
-    "CAST(c12 AS DOUBLE) / CAST(nbg AS DOUBLE) * "
-    "(CAST(ntok AS DOUBLE) / CAST(c1 AS DOUBLE)) * "
-    "(CAST(ntok AS DOUBLE) / CAST(c2 AS DOUBLE))"
-    ") * 8192 + 0.5) AS BIGINT)"
-)
-
-
-@query(
-    "pmi_collocations",
-    _with(
-        f"toks AS ({_TOKS_DUCK})",
-        "tt AS (SELECT unnest(t) AS w FROM toks)",
-        "uni AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c FROM tt "
-        "GROUP BY w)",
-        "nt AS (SELECT CAST(COUNT(*) AS BIGINT) AS ntok FROM tt)",
-        "bg AS (SELECT t[u.i] AS w1, t[u.i + 1] AS w2 FROM toks, "
-        "LATERAL (SELECT unnest(generate_series(1, len(t) - 1)) AS i) u "
-        "WHERE len(t) >= 2)",
-        "cb AS (SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS c12 FROM bg "
-        "GROUP BY w1, w2)",
-        "nb AS (SELECT CAST(SUM(c12) AS BIGINT) AS nbg FROM cb)",
-        "sc AS (SELECT cb.w1, cb.w2, cb.c12, u1.c AS c1, u2.c AS c2, "
-        "nb.nbg, nt.ntok FROM cb "
-        "JOIN uni u1 ON u1.w = cb.w1 JOIN uni u2 ON u2.w = cb.w2, "
-        "nb, nt WHERE cb.c12 >= 3)",
-        f"p AS (SELECT w1, w2, c12, {_PMI_SQL} AS pmi_q13 FROM sc)",
-    )
-    + "SELECT * FROM (SELECT CAST(ROW_NUMBER() OVER (ORDER BY "
-    "pmi_q13 DESC, w1, w2) AS BIGINT) AS rank, w1, w2, c12, pmi_q13 "
-    "FROM p) r WHERE rank <= 20",
-)
-def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Collocation extraction by pointwise mutual information: the
-    top-20 adjacent token pairs by PMI = ln(p(w1,w2) / (p(w1) p(w2)))
-    with a c12 >= 3 support floor — the classic corpus-linguistics
-    collocation pass (and a phrase-vocabulary candidate generator for
-    tokenizer/embedding pipelines).  pmi_q13 is an exact BIGINT via the
-    shared _PMI_SQL spelling (divide-first association, no int64
-    overflow at any corpus size); ties broken lexicographically.
-
-    Scale shape: two map-side-combinable counts (unigram, bigram) over
-    the token stream, two scalar totals, equi-joins of the bigram-TYPE
-    table (vocab^2-bounded, millions of rows at web scale — never the
-    corpus) against the unigram table, and the top-k window over that
-    aggregated table only."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-    from pyspark.sql import Window
-
-    docs = load_table(spark, sf_dir, "documents")
-    t = docs.select(
-        F.filter(F.split("text", " "), lambda x: x != "").alias("t")
-    )
-    tt = t.select(F.explode("t").alias("w"))
-    uni = tt.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
-    nt = tt.agg(F.count(F.lit(1)).alias("ntok"))
-    bg = (
-        t.filter(F.size("t") >= 2)
-        .select(
-            "t",
-            F.explode(
-                F.sequence(F.lit(1), F.size("t") - F.lit(1))
-            ).alias("i"),
-        )
-        .select(
-            F.element_at("t", F.col("i")).alias("w1"),
-            F.element_at("t", F.col("i") + F.lit(1)).alias("w2"),
-        )
-    )
-    cb = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
-    nb = cb.agg(F.sum("c12").alias("nbg"))
-    sc = (
-        cb.filter(F.col("c12") >= 3)
-        .join(uni.withColumnRenamed("w", "w1").withColumnRenamed("c", "c1"), "w1")
-        .join(uni.withColumnRenamed("w", "w2").withColumnRenamed("c", "c2"), "w2")
-        .crossJoin(F.broadcast(nb))
-        .crossJoin(F.broadcast(nt))
-    )
-    p = sc.select("w1", "w2", "c12", F.expr(_PMI_SQL).alias("pmi_q13"))
-    order = Window.orderBy(
-        F.col("pmi_q13").desc(), F.col("w1").asc(), F.col("w2").asc()
-    )
-    return (
-        p.withColumn("rank", F.row_number().over(order).cast("long"))
-        .filter(F.col("rank") <= 20)
-        .select("rank", "w1", "w2", "c12", "pmi_q13")
-    )
-
-
 from rgr_pdal_topo_spark.operators import viewshed as vsops  # noqa: E402
 
 # Viewshed oracle: the engine's all-BIGINT R3 ray sampling replayed
@@ -6721,156 +6473,6 @@ def q_viewshed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return vsops.viewshed(dem)
 
 
-# Zipf-fit single spellings (run verbatim as F.expr AND in the oracle):
-# ln of an integer-valued double is bit-identical across engines (the
-# bm25 ln contract), pinned to the 2^-13 grid so the OLS sums are exact
-# BIGINTs; the slope is one division of two exact integer combinations
-# (the 8192 scale cancels in the ratio), ROUND(,6)-guarded.
-_ZIPF_X_SQL = "CAST(FLOOR(ln(CAST(rank AS DOUBLE)) * 8192 + 0.5) AS BIGINT)"
-_ZIPF_Y_SQL = "CAST(FLOOR(ln(CAST(n AS DOUBLE)) * 8192 + 0.5) AS BIGINT)"
-_ZIPF_SLOPE_SQL = (
-    "ROUND(CAST(n_types * sxy - sx * sy AS DOUBLE) / "
-    "CAST(n_types * sxx - sx * sx AS DOUBLE), 6)"
-)
-
-
-@query(
-    "zipf_slope",
-    _with(
-        "t AS (SELECT lang, unnest(list_filter(string_split(text, ' '), "
-        "x -> x <> '')) AS tok FROM documents)",
-        "c AS (SELECT lang, tok, COUNT(*) AS n FROM t GROUP BY lang, tok)",
-        "r AS (SELECT lang, n, ROW_NUMBER() OVER (PARTITION BY lang "
-        "ORDER BY n DESC, tok ASC) AS rank FROM c)",
-        f"q AS (SELECT lang, {_ZIPF_X_SQL} AS x, {_ZIPF_Y_SQL} AS y "
-        "FROM r)",
-        "s AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_types, "
-        "CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy, "
-        "CAST(SUM(x * y) AS BIGINT) AS sxy, "
-        "CAST(SUM(x * x) AS BIGINT) AS sxx FROM q GROUP BY lang)",
-    )
-    + "SELECT lang, n_types, sx, sy, sxy, sxx, "
-    f"{_ZIPF_SLOPE_SQL} AS slope FROM s WHERE n_types >= 2",
-)
-def q_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zipf-law fit per language: OLS slope of ln(count) against
-    ln(rank) over the full vocabulary — the corpus power-law statistic
-    (natural text sits near -1; strong departures flag boilerplate or
-    synthetic floods).  Exactness: ln runs on integer-valued doubles
-    (bit-identical across engines), pinned to the 2^-13 grid before the
-    sums, so all five OLS accumulators are exact BIGINTs and the slope
-    is ONE division of identical integer combinations (the quantization
-    scale cancels in the ratio), ROUND(,6)-guarded.  Degenerate
-    single-type languages are excluded (zero variance).  On the
-    synthetic corpus every language draws from the same 31-token vocab,
-    so the rank-side accumulators (n_types, sx, sxx) are constant
-    ACROSS languages by construction (the source_quality n_docs
-    precedent) — the count-side columns (sy, sxy, slope) discriminate.
-
-    Scale shape: identical to vocab_topk — tokens fold into a
-    partial+final (lang, tok) count, the rank window runs per-language
-    on the AGGREGATED vocab table (millions of rows at 10^12 docs, not
-    trillions), and the OLS sums combine map-side onto one row per
-    language.  The int64 headroom note: x, y <= 8192*ln(N) ~ 4e5 at
-    N=10^21, so sum(x*y) stays under 2^63 up to ~5e7 vocabulary types
-    per language; beyond that, rescale the grid."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-    from pyspark.sql import Window
-
-    docs = load_table(spark, sf_dir, "documents")
-    c = (
-        docs.select("lang", F.explode(F.split("text", " ")).alias("tok"))
-        .filter(F.col("tok") != "")
-        .groupBy("lang", "tok")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    w = Window.partitionBy("lang").orderBy(
-        F.col("n").desc(), F.col("tok").asc()
-    )
-    q = c.withColumn("rank", F.row_number().over(w)).select(
-        "lang",
-        F.expr(_ZIPF_X_SQL).alias("x"),
-        F.expr(_ZIPF_Y_SQL).alias("y"),
-    )
-    s = q.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_types"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-    )
-    return s.filter(F.col("n_types") >= 2).select(
-        "lang",
-        "n_types",
-        "sx",
-        "sy",
-        "sxy",
-        "sxx",
-        F.expr(_ZIPF_SLOPE_SQL).alias("slope"),
-    )
-
-
-@query(
-    "corpus_rollup",
-    _with(
-        "d AS (SELECT lang, doc_id % 4 AS shard, "
-        "CAST(len(list_filter(string_split(text, ' '), x -> x <> '')) "
-        "AS BIGINT) AS ntok, CAST(length(text) AS BIGINT) AS nch "
-        "FROM documents)",
-    )
-    + "SELECT COALESCE(lang, 'ALL') AS lang, "
-    "COALESCE(shard, -1) AS shard, "
-    "CAST(GROUPING(lang) AS BIGINT) AS g_lang, "
-    "CAST(GROUPING(shard) AS BIGINT) AS g_shard, "
-    "CAST(COUNT(*) AS BIGINT) AS n_docs, "
-    "CAST(SUM(ntok) AS BIGINT) AS n_tokens, "
-    "CAST(SUM(nch) AS BIGINT) AS n_chars "
-    "FROM d GROUP BY ROLLUP(lang, shard)",
-)
-def q_corpus_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-level corpus datasheet in ONE pass: doc / token / char
-    totals at (lang, shard), (lang) and grand-total granularities via
-    ROLLUP — the OLAP grouping-sets operator (Catalyst's Expand node:
-    each row replicates to its grouping levels BEFORE the partial agg,
-    so all levels come out of one shuffle instead of one job per
-    level, which is how a 10^12-row datasheet has to be built).
-    Rolled-up dimensions are COALESCEd to 'ALL' / -1 sentinels and
-    GROUPING() flags disambiguate a real 'ALL' value — all-integer +
-    string output, exact parity.
-
-    Scale shape: one scan -> Expand(3 levels) -> partial+final agg;
-    output is (langs x shards + langs + 1)-sized."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda t: t != "")
-    d = docs.select(
-        "lang",
-        (F.col("doc_id") % 4).alias("shard"),
-        F.size(toks).cast("long").alias("ntok"),
-        F.length("text").cast("long").alias("nch"),
-    )
-    return (
-        d.rollup("lang", "shard")
-        .agg(
-            F.grouping("lang").cast("long").alias("g_lang"),
-            F.grouping("shard").cast("long").alias("g_shard"),
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("ntok").alias("n_tokens"),
-            F.sum("nch").alias("n_chars"),
-        )
-        .select(
-            F.coalesce("lang", F.lit("ALL")).alias("lang"),
-            F.coalesce("shard", F.lit(-1)).alias("shard"),
-            "g_lang",
-            "g_shard",
-            "n_docs",
-            "n_tokens",
-            "n_chars",
-        )
-    )
-
-
 # Unigram Shannon entropy, ONE set of spellings (F.expr + oracle): with
 # S = SUM(c * lnq13(c)) and lnq13(N) both exact BIGINTs, H = ln(N) -
 # (1/N) * SUM(c/N... ) rearranges to (lnq13(N)*N - S) / (8192*N) — ONE
@@ -6888,153 +6490,11 @@ _ENT_H_SQL = (
 )
 
 
-@query(
-    "token_entropy",
-    _with(
-        "t AS (SELECT lang, unnest(list_filter(string_split(text, ' '), "
-        "x -> x <> '')) AS tok FROM documents)",
-        "c AS (SELECT lang, tok, COUNT(*) AS n FROM t GROUP BY lang, tok)",
-        f"q AS (SELECT lang, n, {_ENT_LNC_SQL} AS lnq FROM c)",
-        "s AS (SELECT lang, CAST(SUM(n) AS BIGINT) AS n_tokens, "
-        "CAST(COUNT(*) AS BIGINT) AS n_types, "
-        "CAST(SUM(n * lnq) AS BIGINT) AS s_clnc FROM q GROUP BY lang)",
-        f"s2 AS (SELECT lang, n_tokens, n_types, s_clnc, {_ENT_LNN_SQL} "
-        "AS ln_n_q FROM s)",
-    )
-    + "SELECT lang, n_tokens, n_types, s_clnc, ln_n_q, "
-    f"{_ENT_H_SQL} AS entropy_nats FROM s2",
-)
-def q_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language unigram Shannon entropy H = ln(N) - (1/N) *
-    SUM(c * ln(c)) in nats — the vocabulary-diversity quality signal
-    beside zipf_slope (low entropy flags boilerplate floods and
-    template spam; the Gopher/C4 report statistic for a corpus slice).
-
-    Exactness: ln runs only on integer-valued doubles (the bm25
-    contract), pinned to the 2^-13 grid, so both accumulators are
-    exact BIGINTs (the hashed verification surface) and the one float
-    is a single division of identical integer-valued operands,
-    ROUND(,6)-guarded.  On the synthetic corpus every language draws
-    from the same 31-token vocab, so n_types is constant ACROSS
-    languages by construction (the zipf_slope precedent) — the count
-    accumulators and the entropy discriminate.
-
-    Scale shape: identical to zipf_slope — tokens fold into a partial+
-    final (lang, tok) count, then the entropy accumulators combine
-    map-side onto one row per language; nothing ever shuffles at
-    corpus size."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    c = (
-        docs.select("lang", F.explode(F.split("text", " ")).alias("tok"))
-        .filter(F.col("tok") != "")
-        .groupBy("lang", "tok")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    s = (
-        c.select("lang", "n", F.expr(_ENT_LNC_SQL).alias("lnq"))
-        .groupBy("lang")
-        .agg(
-            F.sum("n").alias("n_tokens"),
-            F.count(F.lit(1)).alias("n_types"),
-            F.sum(F.col("n") * F.col("lnq")).alias("s_clnc"),
-        )
-    )
-    return s.withColumn("ln_n_q", F.expr(_ENT_LNN_SQL)).select(
-        "lang",
-        "n_tokens",
-        "n_types",
-        "s_clnc",
-        "ln_n_q",
-        F.expr(_ENT_H_SQL).alias("entropy_nats"),
-    )
-
-
-# KL term with ln ONLY on integer-valued doubles (the token_entropy /
-# bm25 contract): ln(p/q) = ln(clt) + ln(T) - ln(tlx) - ln(ctx), each
-# factor q13-pinned, so the per-language accumulator SUM(clt * lsum)
-# is an exact BIGINT and the KL is one guarded division.
+# Pinned ln of one factor: ln runs ONLY on an integer-valued double (the
+# bm25 contract: bit-identical across engines) and is q13-pinned, so a
+# sum of count-weighted terms is an exact BIGINT and the statistic built
+# on it is one guarded division.
 _KL_LQ = "CAST(FLOOR(ln(CAST({x} AS DOUBLE)) * 8192 + 0.5) AS BIGINT)"
-_KL_SQL = (
-    "ROUND(CAST(acc AS DOUBLE) / (CAST(tlx AS DOUBLE) * 8192.0), 6)"
-)
-
-
-@query(
-    "lang_kl",
-    _with(
-        "t AS (SELECT lang, unnest(list_filter(string_split(text, ' '), "
-        "x -> x <> '')) AS tok FROM documents)",
-        "c AS (SELECT lang, tok, CAST(COUNT(*) AS BIGINT) AS clt "
-        "FROM t GROUP BY 1, 2)",
-        "tl AS (SELECT lang, CAST(SUM(clt) AS BIGINT) AS tlx FROM c "
-        "GROUP BY 1)",
-        "ct AS (SELECT tok, CAST(SUM(clt) AS BIGINT) AS ctx FROM c "
-        "GROUP BY 1)",
-        "tt AS (SELECT CAST(SUM(clt) AS BIGINT) AS t FROM c)",
-        "q AS (SELECT c.lang, tlx, clt * ("
-        + _KL_LQ.format(x="clt") + " + " + _KL_LQ.format(x="t") + " - "
-        + _KL_LQ.format(x="tlx") + " - " + _KL_LQ.format(x="ctx")
-        + ") AS term FROM c JOIN tl ON tl.lang = c.lang "
-        "JOIN ct ON ct.tok = c.tok CROSS JOIN tt)",
-        "s AS (SELECT lang, MIN(tlx) AS tlx, "
-        "CAST(SUM(term) AS BIGINT) AS acc FROM q GROUP BY lang)",
-    )
-    + f"SELECT lang, tlx AS n_tokens, acc, {_KL_SQL} AS kl_nats FROM s",
-)
-def q_lang_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language KL divergence from the whole-corpus unigram
-    distribution — the distribution-drift statistic a training-data
-    pipeline runs per shard / per snapshot ("did this slice's token
-    mix move?"); the directional companion of token_entropy (entropy
-    measures diversity, KL measures departure from the reference mix).
-
-    Exactness: ln(p/q) decomposes to ln(clt) + ln(T) - ln(tlx) -
-    ln(ctx), each on an INTEGER-valued double and q13-pinned (the
-    token_entropy/bm25 contract), so the per-language accumulator
-    SUM(clt * lsum) is an exact BIGINT (the hashed surface) and the
-    KL is one guarded division, ROUND(,6).  KL >= 0 up to the stated
-    2^-13 ln quantization.
-
-    Scale shape: tokens fold into a partial+final (lang, tok) count;
-    the three marginals are rollups of THAT table (langs-, vocab-,
-    and 1-sized); the join back runs on the (lang, tok) rollup, never
-    raw tokens."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    c = (
-        docs.select("lang", F.explode(F.split("text", " ")).alias("tok"))
-        .filter(F.col("tok") != "")
-        .groupBy("lang", "tok")
-        .agg(F.count(F.lit(1)).alias("clt"))
-    )
-    tl = c.groupBy("lang").agg(F.sum("clt").cast("long").alias("tlx"))
-    ct = c.groupBy("tok").agg(F.sum("clt").cast("long").alias("ctx"))
-    tt = c.agg(F.sum("clt").cast("long").alias("t"))
-    lsum = (
-        F.expr(_KL_LQ.format(x="clt"))
-        + F.expr(_KL_LQ.format(x="t"))
-        - F.expr(_KL_LQ.format(x="tlx"))
-        - F.expr(_KL_LQ.format(x="ctx"))
-    )
-    q = (
-        c.join(tl, "lang")
-        .join(F.broadcast(ct), "tok")
-        .crossJoin(F.broadcast(tt))
-        .select("lang", "tlx", (F.col("clt") * lsum).alias("term"))
-    )
-    s = q.groupBy("lang").agg(
-        F.min("tlx").alias("tlx"),
-        F.sum("term").cast("long").alias("acc"),
-    )
-    return s.select(
-        "lang",
-        F.col("tlx").alias("n_tokens"),
-        "acc",
-        F.expr(_KL_SQL).alias("kl_nats"),
-    )
 
 
 @query(
@@ -8368,45 +7828,6 @@ def q_link_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "event_transitions",
-    _with(
-        "s AS (SELECT user_id, event_type, LAG(event_type) OVER ("
-        "PARTITION BY user_id ORDER BY ts, event_id) AS prev_type "
-        "FROM events)",
-    )
-    + "SELECT prev_type, event_type AS next_type, "
-    "CAST(COUNT(*) AS BIGINT) AS n "
-    "FROM s WHERE prev_type IS NOT NULL GROUP BY prev_type, event_type",
-)
-def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Behavioral transition matrix: counts of consecutive event-type
-    pairs per user in the exact (ts, event_id) order — the Markov-chain
-    census behind next-action prediction and funnel design (which
-    states feed purchases, where errors send users).  Pure lag-window
-    integer counting, bit-exact with no rounding policy; each user's
-    first event has no predecessor and is excluded identically.
-
-    Scale shape: one hash-partition by user_id for the lag window
-    (bounded per-user sequences), then a map-side-combinable fold onto
-    the |event_types|^2-bounded matrix."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-    from pyspark.sql import Window
-
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    s = ev.select(
-        "user_id",
-        "event_type",
-        F.lag("event_type").over(w).alias("prev_type"),
-    )
-    return (
-        s.filter(F.col("prev_type").isNotNull())
-        .groupBy("prev_type", F.col("event_type").alias("next_type"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
 #: bow-tie reachability horizon (hops).  6 covers the synthetic host
 #: graph's effective diameter; the CLASSIFICATION CONTRACT is stated
 #: as "within BOWTIE_K hops" so bounded rounds stay exact, not
@@ -9019,37 +8440,6 @@ def q_smrf_ground(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "events_sliding",
-    "SELECT CAST((CAST(FLOOR(epoch(ts)) AS BIGINT) // 600 - k.k) * 600 AS BIGINT) "
-    "AS window_start, event_type, COUNT(*) AS n, ROUND(SUM(value), 6) AS "
-    "sum_value FROM events CROSS JOIN (VALUES (0), (1), (2)) k(k) "
-    "GROUP BY 1, 2",
-)
-def q_events_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding-window aggregation (30 min window, 10 min slide) via the
-    native streaming-capable window() construct — each event lands in 3
-    overlapping windows; the oracle replays the window replication with a
-    3-row cross join (epoch-aligned starts, matching Spark's default)."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(
-            F.window("ts", "30 minutes", "10 minutes").alias("w"),
-            "event_type",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value"), 6).alias("sum_value"),
-        )
-        .select(
-            F.unix_timestamp("w.start").alias("window_start"),
-            "event_type", "n", "sum_value",
-        )
-    )
-
-
 @query("random_terrain")  # seeded procedural ensemble — rows-only check
 def q_random_terrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X8: random-priority-filling terrain ensemble
@@ -9200,199 +8590,6 @@ def q_crawl_segment_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(one(a.subtract(b), "n_only_a"))
         .crossJoin(one(b.subtract(a), "n_only_b"))
     )
-
-
-@query(
-    "props_histogram",
-    _with(
-        "p AS (SELECT event_type, "
-        "CAST(json_extract_string(props, '$.k') AS BIGINT) AS k "
-        "FROM events)",
-    )
-    + "SELECT event_type, k // 10 AS k_bucket, "
-    "CAST(COUNT(*) AS BIGINT) AS n, "
-    "CAST(SUM(k) AS BIGINT) AS sum_k, MIN(k) AS min_k, MAX(k) AS max_k "
-    "FROM p GROUP BY event_type, k // 10",
-)
-def q_props_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi-structured payload analytics: the integer property k
-    extracted from every event's JSON props blob, bucketed by decade
-    per event type with exact count/sum/min/max — the
-    schema-on-read verb of event pipelines (Spark get_json_object /
-    DuckDB json_extract_string; the engines spell extraction
-    differently but an integer capture is representation-free, so
-    parity is exact with no shared-text requirement — unlike the
-    float-sensitive families).
-
-    Domain note: bucketing uses integer division, which is floor (//)
-    in DuckDB and trunc (DIV) in Spark — identical on the payload's
-    nonnegative k (0-99 by construction); a signed property would
-    need the subtract-modulus exact_div spelling
-    (operators/linkgraph.py).  Events with no k key fold into a NULL
-    bucket identically in both engines.
-
-    Scale shape: one scan -> JVM-side JSON path extraction (no
-    Python) -> partial+final fold onto the (types x buckets)-bounded
-    census."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    p = ev.select(
-        "event_type",
-        F.get_json_object("props", "$.k").cast("long").alias("k"),
-    )
-    return (
-        p.groupBy(
-            "event_type",
-            F.expr("k DIV 10").alias("k_bucket"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("k").alias("sum_k"),
-            F.min("k").alias("min_k"),
-            F.max("k").alias("max_k"),
-        )
-    )
-
-
-@query(
-    "error_bursts",
-    _with(
-        "h AS (SELECT CAST(FLOOR(epoch(ts)) AS BIGINT) // 3600 AS hour, "
-        "CASE WHEN event_type = 'error' THEN 1 ELSE 0 END AS is_err "
-        "FROM events)",
-        "hh AS (SELECT hour, CAST(SUM(is_err) AS BIGINT) AS n_err, "
-        "CAST(COUNT(*) AS BIGINT) AS n_events FROM h GROUP BY hour)",
-        "tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_hours, "
-        "CAST(SUM(n_err) AS BIGINT) AS total_err FROM hh)",
-    )
-    + "SELECT hour, n_err, n_events FROM hh CROSS JOIN tot "
-    "WHERE n_err * n_hours > 2 * total_err",
-)
-def q_error_bursts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Error-burst detection: hours whose error count exceeds TWICE
-    the uniform expectation across all observed hours — the temporal
-    twin of hotspot_cells (same cross-multiplied integer test: n_err *
-    n_hours > 2 * total_err — no division, no float), and the ops
-    anomaly sweep every event pipeline runs.
-
-    Scale shape: one partial+final hour fold over the stream, a
-    one-row total broadcast back, and a hours-sized filter."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    hh = (
-        ev.select(
-            (F.unix_timestamp("ts") / 3600).cast("long").alias("hour"),
-            (F.col("event_type") == "error").cast("long").alias("is_err"),
-        )
-        .groupBy("hour")
-        .agg(
-            F.sum("is_err").alias("n_err"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-    )
-    tot = hh.agg(
-        F.count(F.lit(1)).alias("n_hours"),
-        F.sum("n_err").alias("total_err"),
-    )
-    return (
-        hh.crossJoin(F.broadcast(tot))
-        .filter(
-            F.col("n_err") * F.col("n_hours")
-            > F.lit(2) * F.col("total_err")
-        )
-        .select("hour", "n_err", "n_events")
-    )
-
-
-@query(
-    "cusum_alarms",
-    _with(
-        "b AS (SELECT DATE_TRUNC('hour', MIN(ts)) AS h0, "
-        "DATE_TRUNC('hour', MAX(ts)) AS h1 FROM events)",
-        "spine AS (SELECT unnest(generate_series(h0, h1, "
-        "INTERVAL 1 HOUR)) AS hr FROM b)",
-        "e AS (SELECT DATE_TRUNC('hour', ts) AS hr, "
-        "CAST(COUNT(*) AS BIGINT) AS x FROM events "
-        "WHERE event_type = 'error' GROUP BY 1)",
-        "d AS (SELECT spine.hr, COALESCE(e.x, CAST(0 AS BIGINT)) AS x "
-        "FROM spine LEFT JOIN e ON e.hr = spine.hr)",
-        "sc AS (SELECT CAST(SUM(x) AS BIGINT) AS terr, "
-        "CAST(COUNT(*) AS BIGINT) AS nh FROM d)",
-        # integer ceil-division: // here, DIV in the Spark twin — the
-        # props_histogram representation-free precedent (exact BIGINTs)
-        "kk AS (SELECT CAST((terr + nh - 1) // nh AS BIGINT) AS k "
-        "FROM sc)",
-        "pp AS (SELECT hr, x, CAST(SUM(x - k) OVER (ORDER BY hr "
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) "
-        "AS p FROM d CROSS JOIN kk)",
-        "ss AS (SELECT hr, x, p - LEAST(CAST(0 AS BIGINT), "
-        "CAST(MIN(p) OVER (ORDER BY hr ROWS BETWEEN UNBOUNDED "
-        "PRECEDING AND CURRENT ROW) AS BIGINT)) AS s FROM pp)",
-    )
-    + "SELECT hr, x, s FROM ss WHERE s > 0",
-)
-def q_cusum_alarms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUSUM change-point detection over the hourly error series (Page
-    1954): hours where the one-sided cumulative sum S_t = max(0,
-    S_{t-1} + x_t - k) is positive, with the drift allowance k =
-    ceil(mean hourly errors) derived from the data as an exact
-    integer.  error_bursts flags hours that are INDIVIDUALLY extreme;
-    CUSUM accumulates evidence, so it also catches sustained
-    just-above-normal drifts a per-hour test misses.
-
-    The recurrence is non-associative (the max-with-zero reset), so no
-    window function computes it directly — the engine uses the classic
-    prefix identity S_t = P_t - min(0, min_{j<=t} P_j) with P the
-    plain cumulative sum of (x - k): two stacked windows over the
-    DENSE hour spine (zero-error hours must decay the statistic, so
-    the spine is generate_series'd and left-joined).  Every value is
-    an exact BIGINT; there is no float anywhere.
-
-    Scale shape: the error rollup and the spine are hours-sized; the
-    two global windows run over that rollup, never raw events (the
-    indegree_gini contract — at 10^6 hours it is one narrow
-    (timestamp, int64) range-partitioned sort)."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-    from pyspark.sql import Window
-
-    ev = load_table(spark, sf_dir, "events")
-    b = ev.agg(
-        F.date_trunc("hour", F.min("ts")).alias("h0"),
-        F.date_trunc("hour", F.max("ts")).alias("h1"),
-    )
-    spine = b.selectExpr(
-        "explode(sequence(h0, h1, INTERVAL 1 HOUR)) AS hr"
-    )
-    e = (
-        ev.filter(F.col("event_type") == "error")
-        .groupBy(F.date_trunc("hour", "ts").alias("hr"))
-        .agg(F.count(F.lit(1)).alias("x"))
-    )
-    d = spine.join(e, "hr", "left").select(
-        "hr", F.coalesce("x", F.lit(0).cast("long")).alias("x")
-    )
-    sc = d.agg(
-        F.sum("x").cast("long").alias("terr"),
-        F.count(F.lit(1)).cast("long").alias("nh"),
-    )
-    kk = sc.selectExpr("CAST((terr + nh - 1) DIV nh AS BIGINT) AS k")
-    w = Window.orderBy("hr").rowsBetween(Window.unboundedPreceding, 0)
-    pp = d.crossJoin(F.broadcast(kk)).select(
-        "hr", "x",
-        F.sum(F.col("x") - F.col("k")).over(w).cast("long").alias("p"),
-    )
-    ss = pp.select(
-        "hr", "x",
-        (
-            F.col("p")
-            - F.least(
-                F.lit(0).cast("long"), F.min("p").over(w).cast("long")
-            )
-        ).alias("s"),
-    )
-    return ss.filter(F.col("s") > 0)
 
 
 @query(
@@ -10171,8 +9368,8 @@ def q_shingle_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exactness: all-integer (per-doc-distinct portable shingle ids;
     first occurrence = MIN(doc_id); batch = integer division — Spark
-    DIV, DuckDB //, identical on the non-negative domain per the
-    props_histogram doctrine); the rate is one division of two
+    DIV, DuckDB //, identical because doc_id is never negative, where
+    truncation and floor agree); the rate is one division of two
     integer-valued doubles.
 
     Scale shape: one groupBy(tid) with map-side combine assigns first
@@ -11129,7 +10326,7 @@ def q_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     hubs), feeding crawl-frontier discovery beside cocitation's
     related-domain signal.  Exact: symmetrized simple graph, ln(deg)
     pinned to the 2^-13 grid (integer-valued libm input, the
-    bm25/zipf contract), reciprocal by one exact floor-division,
+    bm25 contract), reciprocal by one exact floor-division,
     aa_q an exact BIGINT sum; the k-cut orders on the total
     (aa_q, host_a, host_b) so the reported set is deterministic.
     Wedge centres above deg 64 drop FIRST (the cocitation fan-out
@@ -11137,70 +10334,6 @@ def q_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     the k-cut is a TakeOrdered."""
     pages = pagesops.linked_pages_df(spark, sf_dir)
     return linkgraph.adamic_adar(linkgraph.extract_links(pages))
-
-
-_Q17_BRAND = "Brand#23"
-
-
-@query(
-    "small_qty_revenue",
-    "SELECT CAST(COUNT(*) AS BIGINT) AS n_small, "
-    "CAST(SUM(CAST(FLOOR(l.l_extendedprice * 100.0 + 0.5) AS BIGINT)) "
-    "AS BIGINT) AS revenue_cents, "
-    "ROUND(CAST(SUM(CAST(FLOOR(l.l_extendedprice * 100.0 + 0.5) "
-    "AS BIGINT)) AS DOUBLE) / 700.0, 4) AS avg_yearly "
-    "FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey "
-    f"WHERE p.p_brand = '{_Q17_BRAND}' "
-    "AND 10 * CAST(l.l_quantity AS BIGINT) * (SELECT COUNT(*) FROM "
-    "lineitem l2 WHERE l2.l_partkey = l.l_partkey) < 2 * "
-    "(SELECT CAST(SUM(CAST(l3.l_quantity AS BIGINT)) AS BIGINT) FROM "
-    "lineitem l3 WHERE l3.l_partkey = l.l_partkey)",
-)
-def q_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17-flavored small-quantity-order revenue — the
-    CORRELATED-SUBQUERY planner stress: revenue from the brand's
-    lineitems whose quantity falls below 20% of that part's average.
-    The oracle states the textbook correlated spelling (two scalar
-    subqueries per row); the engine states the decorrelated plan a
-    warehouse actually runs (ONE per-part partial+final (count, sum)
-    fold joined back, brand dim broadcast) — a green row certifies
-    Catalyst's decorrelation == DuckDB's.  Exactness: the 20% gate is
-    cross-multiplied all-integer (10*qty*cnt < 2*sumq — quantities are
-    integer-valued), revenue quantizes to exact BIGINT cents per row
-    BEFORE the sum (the trade_volumes money doctrine), avg_yearly is
-    one shared /700 spelling."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    li = load_table(spark, sf_dir, "lineitem")
-    pt = load_table(spark, sf_dir, "part").filter(
-        F.col("p_brand") == _Q17_BRAND
-    )
-    per_part = li.groupBy("l_partkey").agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.sum(F.col("l_quantity").cast("long")).alias("sumq"),
-    )
-    cents = F.floor(
-        F.col("l_extendedprice") * F.lit(100.0) + F.lit(0.5)
-    ).cast("long")
-    small = (
-        li.join(F.broadcast(pt.select("p_partkey")),
-                li.l_partkey == F.col("p_partkey"))
-        .join(per_part, "l_partkey")
-        .filter(
-            F.lit(10) * F.col("l_quantity").cast("long") * F.col("cnt")
-            < F.lit(2) * F.col("sumq")
-        )
-    )
-    return small.agg(
-        F.count(F.lit(1)).alias("n_small"),
-        F.sum(cents).alias("revenue_cents"),
-    ).select(
-        "n_small",
-        "revenue_cents",
-        F.round(
-            F.col("revenue_cents").cast("double") / F.lit(700.0), 4
-        ).alias("avg_yearly"),
-    )
 
 
 _RRF_DIV = linkgraph.exact_div_sql(str(retrieval.RRF_Q), "60 + {r}")
@@ -11458,11 +10591,12 @@ def q_geo_language_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     diversity entropy — the linguistic-landscape census a multilingual
     crawl publishes per region (and the mixing signal behind
     region-aware sampling).  Composes the geocode stage with the
-    corpus language attribute through the SAME shared CTE fragments as
-    pages_geocode and token_entropy: ln only on integer-valued doubles
-    pinned to the 2^-13 grid, both accumulators exact BIGINTs, the
-    entropy ONE shared guarded spelling; the argmax is a window over
-    the (cell, lang) AGGREGATE with a total tie-break order."""
+    corpus language attribute through pages_geocode's shared CTE
+    fragments and the shared _ENT_* entropy spellings: ln only on
+    integer-valued doubles pinned to the 2^-13 grid, both accumulators
+    exact BIGINTs, the entropy ONE shared guarded spelling; the argmax
+    is a window over the (cell, lang) AGGREGATE with a total tie-break
+    order."""
     from pyspark.sql import Window
 
     geo = pagesops.geo_lonlat(spark, sf_dir).select(
@@ -11554,515 +10688,6 @@ def q_good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.col("n_r").cast("double"),
             6,
         ).alias("r_star"),
-    )
-
-
-#: Wilson interval at z = 2 (the textbook "add 2 successes and 2
-#: failures" Agresti-Coull form — z^2 = 4 keeps every non-sqrt term
-#: integer); ONE spelling, engine via F.expr:
-_WILSON_HALF = (
-    "2.0 * SQRT(CAST(x AS DOUBLE) * CAST(n - x AS DOUBLE) / "
-    "CAST(n AS DOUBLE) + 1.0)"
-)
-_WILSON_LO = (
-    f"ROUND((CAST(x + 2 AS DOUBLE) - {_WILSON_HALF}) / "
-    "CAST(n + 4 AS DOUBLE), 6)"
-)
-_WILSON_HI = (
-    f"ROUND((CAST(x + 2 AS DOUBLE) + {_WILSON_HALF}) / "
-    "CAST(n + 4 AS DOUBLE), 6)"
-)
-_WILSON_RATE = "ROUND(CAST(x AS DOUBLE) / CAST(n AS DOUBLE), 6)"
-
-
-@query(
-    "funnel_wilson",
-    _with(
-        *_FUNNEL_CTE_LIST,
-        f"fc AS ({_FUNNEL_UNION})",
-        "pr AS (SELECT a.stage AS stage, a.stage_name, b.stage_name AS "
-        "next_stage, a.n_users AS n, b.n_users AS x FROM fc a "
-        "JOIN fc b ON b.stage = a.stage + 1)",
-    )
-    + "SELECT stage, stage_name, next_stage, n, x, "
-    f"{_WILSON_RATE} AS rate, {_WILSON_LO} AS wilson_lo, "
-    f"{_WILSON_HI} AS wilson_hi FROM pr",
-)
-def q_funnel_wilson(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conversion-rate confidence intervals for every funnel step —
-    the inference layer a product team actually reads (is
-    view -> click REALLY worse this week, or noise?): the Wilson score
-    interval at z = 2 in its Agresti-Coull "plus four" form,
-    lo/hi = ((x + 2) -/+ 2 sqrt(x (n - x)/n + 1)) / (n + 4) — chosen
-    because z^2 = 4 keeps every term except the single sqrt exact
-    integer arithmetic, and sqrt is correctly rounded under IEEE-754
-    (the traffic_autocorr doctrine) so both engines build bit-identical
-    doubles from identical integers; rate and both bounds are ONE
-    shared ROUND(,6) spelling.  Composes the funnel through the SAME
-    CTE chain as funnel_steps (refactored to shared constants), so
-    solo/inference drift fails parity.  The stage-pair join runs on
-    the 4-row funnel aggregate."""
-    fc = q_funnel_steps(spark, sf_dir)
-    pr = fc.alias("a").join(
-        fc.selectExpr(
-            "stage - 1 AS stage",
-            "stage_name AS next_stage",
-            "n_users AS x",
-        ),
-        "stage",
-    ).select(
-        "stage",
-        "stage_name",
-        "next_stage",
-        F.col("n_users").alias("n"),
-        "x",
-    )
-    return pr.select(
-        "stage",
-        "stage_name",
-        "next_stage",
-        "n",
-        "x",
-        F.expr(_WILSON_RATE).alias("rate"),
-        F.expr(_WILSON_LO).alias("wilson_lo"),
-        F.expr(_WILSON_HI).alias("wilson_hi"),
-    )
-
-
-#: chi-square cell term, ONE spelling (E = R*C/N is correctly rounded
-#: from exact integers; the (O-E)^2/E chain is bit-identical; the q13
-#: pin makes the cross-cell SUM exact):
-_CHI2_TERM = (
-    "CAST(FLOOR((CAST(o AS DOUBLE) - e) * (CAST(o AS DOUBLE) - e) / e "
-    "* 8192 + 0.5) AS BIGINT)"
-)
-_CHI2_E = "CAST(r * c AS DOUBLE) / CAST(n AS DOUBLE)"
-
-
-@query(
-    "chi2_independence",
-    _with(
-        "ct AS (SELECT lang, source, CAST(COUNT(*) AS BIGINT) AS o "
-        "FROM documents GROUP BY 1, 2)",
-        "rl AS (SELECT lang, CAST(SUM(o) AS BIGINT) AS r FROM ct "
-        "GROUP BY 1)",
-        "cs AS (SELECT source, CAST(SUM(o) AS BIGINT) AS c FROM ct "
-        "GROUP BY 1)",
-        "nn AS (SELECT CAST(SUM(o) AS BIGINT) AS n FROM ct)",
-        "grid2 AS (SELECT rl.lang, cs.source, rl.r, cs.c, nn.n, "
-        "COALESCE(ct.o, 0) AS o FROM rl CROSS JOIN cs CROSS JOIN nn "
-        "LEFT JOIN ct ON ct.lang = rl.lang AND ct.source = cs.source)",
-        f"tq AS (SELECT r, c, n, o, {_CHI2_E} AS e FROM grid2)",
-        f"agg AS (SELECT CAST(SUM({_CHI2_TERM}) AS BIGINT) AS chi2_q, "
-        "CAST(MAX(n) AS BIGINT) AS n FROM tq)",
-        "dims AS (SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM rl) AS "
-        "n_langs, (SELECT CAST(COUNT(*) AS BIGINT) FROM cs) AS "
-        "n_sources)",
-    )
-    + "SELECT agg.n, dims.n_langs, dims.n_sources, "
-    "(dims.n_langs - 1) * (dims.n_sources - 1) AS dof, agg.chi2_q, "
-    "CAST(agg.chi2_q AS DOUBLE) / 8192.0 AS chi2, "
-    "ROUND(SQRT(CAST(agg.chi2_q AS DOUBLE) / 8192.0 / (CAST(agg.n AS DOUBLE) * "
-    "CAST(LEAST(dims.n_langs, dims.n_sources) - 1 AS DOUBLE))), 6) "
-    "AS cramers_v FROM agg CROSS JOIN dims",
-)
-def q_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pearson chi-square test of independence on the lang x source
-    contingency table + Cramer's V effect size — the categorical
-    drift/bias detector (is language mix independent of the source
-    domain?  the release-audit question beside langid_confusion).
-    Exactness: E = R*C/N is one correctly-rounded division of exact
-    integers (R*C < 2^53), the (O-E)^2/E chain is bit-identical in
-    both engines, and each cell term pins to the 2^-13 grid BEFORE
-    the cross-cell sum, so chi2_q is an exact BIGINT (aggregation
-    order immaterial) and chi2 / V are shared spellings over it.
-    ZERO cells included (the full dim cross with COALESCE — omitting
-    them silently understates the statistic).  Everything runs on the
-    langs x sources aggregate, never the corpus."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    ct = docs.groupBy("lang", "source").agg(F.count(F.lit(1)).alias("o"))
-    rl = ct.groupBy("lang").agg(F.sum("o").alias("r"))
-    cs = ct.groupBy("source").agg(F.sum("o").alias("c"))
-    nn = ct.agg(F.sum("o").alias("n"))
-    grid2 = (
-        rl.crossJoin(cs)
-        .crossJoin(F.broadcast(nn))
-        .join(ct, ["lang", "source"], "left")
-        .select(
-            "r", "c", "n", F.coalesce(F.col("o"), F.lit(0)).alias("o")
-        )
-    )
-    tq = grid2.withColumn("e", F.expr(_CHI2_E))
-    agg = tq.agg(
-        F.sum(F.expr(_CHI2_TERM)).alias("chi2_q"),
-        F.max("n").alias("n"),
-    )
-    dims = rl.agg(F.count(F.lit(1)).alias("n_langs")).crossJoin(
-        cs.agg(F.count(F.lit(1)).alias("n_sources"))
-    )
-    return agg.crossJoin(F.broadcast(dims)).selectExpr(
-        "n",
-        "n_langs",
-        "n_sources",
-        "(n_langs - 1) * (n_sources - 1) AS dof",
-        "chi2_q",
-        "CAST(chi2_q AS DOUBLE) / 8192.0 AS chi2",
-        "ROUND(SQRT(CAST(chi2_q AS DOUBLE) / 8192.0 / (CAST(n AS DOUBLE) * "
-        "CAST(LEAST(n_langs, n_sources) - 1 AS DOUBLE))), 6) "
-        "AS cramers_v",
-    )
-
-
-@query(
-    "late_suppliers",
-    _with(
-        "late AS (SELECT DISTINCT l.l_orderkey AS ok, l.l_suppkey AS sk "
-        "FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey "
-        "WHERE l.l_shipdate > o.o_orderdate + INTERVAL 90 DAY)",
-        "alls AS (SELECT DISTINCT l_orderkey AS ok, l_suppkey AS sk "
-        "FROM lineitem)",
-    )
-    + "SELECT s.s_suppkey, s.s_name, CAST(COUNT(*) AS BIGINT) AS numwait "
-    "FROM late t JOIN supplier s ON s.s_suppkey = t.sk "
-    "WHERE EXISTS (SELECT 1 FROM alls a WHERE a.ok = t.ok "
-    "AND a.sk <> t.sk) "
-    "AND NOT EXISTS (SELECT 1 FROM late o2 WHERE o2.ok = t.ok "
-    "AND o2.sk <> t.sk) "
-    "GROUP BY s.s_suppkey, s.s_name",
-)
-def q_late_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q21-flavored "lone late supplier": per supplier, the count
-    of multi-supplier orders where THIS supplier shipped a line > 90
-    days after the order date and NO other supplier in the order did —
-    the registry's only NOT-EXISTS row, exercising Spark's physical
-    LeftSemi AND LeftAnti joins with a non-equi residual (orderkey
-    equality + suppkey inequality) in one plan (order_priority covers
-    plain EXISTS; U2 covers set-difference semantics).  Adapted to this
-    schema's columns: no commit/receipt dates, so "late" is shipdate
-    vs order date + 90d (reference analogue: the exclusion-set
-    semantics of maskDifference, baseGrid.py).
-
-    Exactness: join keys and the count are integers end to end — no
-    float anywhere, no rounding needed.
-
-    Scale shape: lateness is decided on the lineitem x orders equi-join
-    (fact streams once), then EVERYTHING runs on the DISTINCT
-    (order, supplier) rollups — two tables ~|orders| in size, shuffled
-    once on ok and reused by both the semi and the anti probe; the
-    supplier dim broadcasts onto the post-anti aggregate."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    supp = load_table(spark, sf_dir, "supplier")
-    late = (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .filter(
-            F.col("l_shipdate")
-            > F.col("o_orderdate") + F.expr("INTERVAL 90 DAY")
-        )
-        .select(
-            F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("sk")
-        )
-        .distinct()
-    )
-    alls = li.select(
-        F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("sk")
-    ).distinct()
-    a, b, c = late.alias("a"), alls.alias("b"), late.alias("c")
-    lone = a.join(
-        b,
-        (F.col("a.ok") == F.col("b.ok")) & (F.col("a.sk") != F.col("b.sk")),
-        "leftsemi",
-    ).join(
-        c,
-        (F.col("a.ok") == F.col("c.ok")) & (F.col("a.sk") != F.col("c.sk")),
-        "leftanti",
-    )
-    return (
-        lone.join(F.broadcast(supp), F.col("sk") == F.col("s_suppkey"))
-        .groupBy("s_suppkey", "s_name")
-        .agg(F.count(F.lit(1)).alias("numwait"))
-    )
-
-
-@query(
-    "score_auc",
-    _with(
-        "sc AS (SELECT CAST(FLOOR(CAST(embedding[1] AS DOUBLE) * 8192 "
-        "+ 0.5) AS BIGINT) AS score_q, CASE WHEN label % 2 = 1 THEN 1 "
-        "ELSE 0 END AS pos FROM embeddings)",
-        "g AS (SELECT score_q, CAST(SUM(pos) AS BIGINT) AS npos, "
-        "CAST(COUNT(*) - SUM(pos) AS BIGINT) AS nneg FROM sc GROUP BY 1)",
-        "w AS (SELECT npos, nneg, CAST(SUM(nneg) OVER (ORDER BY score_q "
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) "
-        "- nneg AS cumneg FROM g)",
-        "a AS (SELECT CAST(SUM(npos * (2 * cumneg + nneg)) AS BIGINT) "
-        "AS u2, CAST(SUM(npos) AS BIGINT) AS n_pos, "
-        "CAST(SUM(nneg) AS BIGINT) AS n_neg FROM w)",
-    )
-    + "SELECT n_pos, n_neg, u2, "
-    "ROUND(CAST(u2 AS DOUBLE) / (2.0 * n_pos * n_neg), 6) AS auc, "
-    "ROUND(CAST(u2 AS DOUBLE) / (1.0 * n_pos * n_neg) - 1.0, 6) AS gini "
-    "FROM a",
-)
-def q_score_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact tie-corrected ROC-AUC (Mann-Whitney U) of a scalar score
-    against a binary label — the evaluation statistic every
-    quality-classifier gate (fastText/C4-style filters, source_quality)
-    needs before its threshold is trusted.  Score = first embedding
-    component q13-pinned to an integer; positives = odd cluster label
-    (a deterministic binary split of the labeled table).
-
-    Exactness: AUC = P(score_pos > score_neg) + P(=)/2 computed from
-    per-score-group counts — u2 accumulates npos * (2 * cumneg_below +
-    nneg_at_tie), an exact BIGINT (doubles the classic U to keep the
-    half-credit tie term integer), so AUC and Gini are each ONE
-    division of exact integers, ROUND(,6).  Group-count order is
-    immaterial; the only window runs over the DISTINCT score groups.
-
-    Scale shape: the corpus folds into per-score-group (npos, nneg)
-    partials map-side; the cumulative window runs on a row count
-    bounded by distinct score values, never the raw table — the classic
-    "histogram AUC" trick that makes sklearn-style pairwise AUC
-    feasible at 10^12 rows."""
-    from pyspark.sql import Window
-
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    sc = emb.select(
-        qint_col(F.element_at("embedding", 1).cast("double"), Q13).alias(
-            "score_q"
-        ),
-        F.when(F.col("label") % 2 == 1, 1).otherwise(0).alias("pos"),
-    )
-    g = sc.groupBy("score_q").agg(
-        F.sum("pos").cast("long").alias("npos"),
-        (F.count(F.lit(1)) - F.sum("pos")).cast("long").alias("nneg"),
-    )
-    win = Window.orderBy("score_q").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    w = g.select(
-        "npos",
-        "nneg",
-        (F.sum("nneg").over(win).cast("long") - F.col("nneg")).alias(
-            "cumneg"
-        ),
-    )
-    a = w.agg(
-        F.sum(
-            F.col("npos") * (2 * F.col("cumneg") + F.col("nneg"))
-        ).cast("long").alias("u2"),
-        F.sum("npos").cast("long").alias("n_pos"),
-        F.sum("nneg").cast("long").alias("n_neg"),
-    )
-    return a.selectExpr(
-        "n_pos",
-        "n_neg",
-        "u2",
-        "ROUND(CAST(u2 AS DOUBLE) / (2.0 * n_pos * n_neg), 6) AS auc",
-        "ROUND(CAST(u2 AS DOUBLE) / (1.0 * n_pos * n_neg) - 1.0, 6) "
-        "AS gini",
-    )
-
-
-#: PSI per-bin integer accumulator, ONE spelling (the lang_kl pinned-ln
-#: doctrine: each ln runs on an INTEGER-valued double, q13-pinned, so
-#: the cross-bin SUM is an exact BIGINT):
-_PSI_TERM = (
-    "(ca * nb - cb * na) * ("
-    + _KL_LQ.format(x="ca") + " + " + _KL_LQ.format(x="nb") + " - "
-    + _KL_LQ.format(x="cb") + " - " + _KL_LQ.format(x="na") + ")"
-)
-_PSI_OF = (
-    "ROUND(CAST({x} AS DOUBLE) / (CAST(na AS DOUBLE) * "
-    "CAST(nb AS DOUBLE) * 8192.0), 6)"
-)
-
-
-@query(
-    "segment_psi",
-    _with(
-        "seg AS (SELECT lang, CAST(SUM(CASE WHEN doc_id % 2 = 0 THEN 1 "
-        "ELSE 0 END) + 1 AS BIGINT) AS ca, CAST(SUM(CASE WHEN doc_id % 2 "
-        "= 1 THEN 1 ELSE 0 END) + 1 AS BIGINT) AS cb "
-        "FROM documents GROUP BY lang)",
-        "tot AS (SELECT CAST(SUM(ca) AS BIGINT) AS na, "
-        "CAST(SUM(cb) AS BIGINT) AS nb FROM seg)",
-        f"t AS (SELECT lang, ca, cb, na, nb, CAST({_PSI_TERM} AS BIGINT) "
-        "AS term FROM seg CROSS JOIN tot)",
-    )
-    + "SELECT lang, ca, cb, "
-    + _PSI_OF.format(x="term")
-    + " AS psi_term, "
-    + _PSI_OF.format(x="SUM(term) OVER ()")
-    + " AS psi_total FROM t",
-)
-def q_segment_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Population Stability Index between two corpus segments (even vs
-    odd doc_id — the deterministic stand-in for crawl snapshot A vs B),
-    binned by language: the drift gate a training-data pipeline runs
-    before mixing a new snapshot in (PSI < 0.1 stable, > 0.25 act),
-    directional sibling of lang_kl (KL of one slice vs the corpus;
-    PSI is the SYMMETRIZED slice-vs-slice divergence).
-
-    PSI = sum_bins (pa - pb) * ln(pa / pb) with +1 smoothing per bin
-    (both segments, same lang universe — zero-count bins would make
-    the log undefined; smoothing keeps every count a positive
-    integer).  Exactness: multiplied through by na * nb, the per-bin
-    term (ca*nb - cb*na) * (lq(ca) + lq(nb) - lq(cb) - lq(na)) is an
-    exact BIGINT (each ln q13-pinned on an integer-valued double, the
-    lang_kl doctrine), so per-bin and total PSI are each ONE division,
-    ROUND(,6), and the cross-bin SUM is order-immaterial.  Integer
-    envelope: |term| < counts^2 * lq-range — exact through segment
-    sizes ~3e8; beyond that, rescale the accumulator (documented, not
-    silent).
-
-    Scale shape: one partial+final count per (lang, parity) — the
-    corpus folds map-side; everything downstream (totals cross join,
-    the OVER () total) runs on the langs-sized aggregate."""
-    from pyspark.sql import Window
-
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    seg = docs.groupBy("lang").agg(
-        (
-            F.sum(F.when(F.col("doc_id") % 2 == 0, 1).otherwise(0)) + 1
-        ).cast("long").alias("ca"),
-        (
-            F.sum(F.when(F.col("doc_id") % 2 == 1, 1).otherwise(0)) + 1
-        ).cast("long").alias("cb"),
-    )
-    tot = seg.agg(
-        F.sum("ca").cast("long").alias("na"),
-        F.sum("cb").cast("long").alias("nb"),
-    )
-    t = seg.crossJoin(F.broadcast(tot)).withColumn(
-        "term", F.expr(_PSI_TERM).cast("long")
-    )
-    return t.select(
-        "lang",
-        "ca",
-        "cb",
-        "na",
-        "nb",
-        "term",
-        F.sum("term").over(
-            Window.rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        ).alias("total"),
-    ).select(
-        "lang",
-        "ca",
-        "cb",
-        F.expr(_PSI_OF.format(x="term")).alias("psi_term"),
-        F.expr(_PSI_OF.format(x="total")).alias("psi_total"),
-    )
-
-
-#: waterfilling shared spellings (integer flag; ONE division for the
-#: uncapped share):
-_WF_FLAG = "CASE WHEN cap * (l - k + 1) <= b - cum THEN 1 ELSE 0 END"
-_WF_ALLOC = (
-    "CASE WHEN capped = 1 THEN CAST(cap AS DOUBLE) "
-    "ELSE ROUND(CAST(b - s_capped AS DOUBLE) / "
-    "CAST(l - n_capped AS DOUBLE), 6) END"
-)
-
-
-@query(
-    "lang_budget",
-    _with(
-        "tok AS (SELECT lang, CAST(SUM(len(list_filter(string_split("
-        "text, ' '), x -> x <> ''))) AS BIGINT) AS n_tokens "
-        "FROM documents GROUP BY lang)",
-        "c AS (SELECT lang, n_tokens, n_tokens AS cap FROM tok)",
-        "tot AS (SELECT CAST(FLOOR(SUM(n_tokens) / 2) AS BIGINT) AS b, "
-        "CAST(COUNT(*) AS BIGINT) AS l FROM c)",
-        "r AS (SELECT lang, n_tokens, cap, b, l, "
-        "ROW_NUMBER() OVER (ORDER BY cap, lang) AS k, "
-        "CAST(COALESCE(SUM(cap) OVER (ORDER BY cap, lang ROWS BETWEEN "
-        "UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum "
-        "FROM c CROSS JOIN tot)",
-        f"f AS (SELECT *, {_WF_FLAG} AS flag FROM r)",
-        "p AS (SELECT *, CAST(MIN(flag) OVER (ORDER BY cap, lang ROWS "
-        "BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS "
-        "capped FROM f)",
-        "s AS (SELECT *, CAST(SUM(capped * cap) OVER () AS BIGINT) AS "
-        "s_capped, CAST(SUM(capped) OVER () AS BIGINT) AS n_capped "
-        "FROM p)",
-    )
-    + f"SELECT lang, n_tokens, cap, capped, {_WF_ALLOC} AS alloc FROM s",
-)
-def q_lang_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UniMax-style token-budget allocation across languages by
-    closed-form waterfilling: each language is capped at 1 epoch of its
-    own tokens (cap = n_tokens), the total budget is half the corpus,
-    and the budget fills languages UNIFORMLY up to their caps — small
-    languages get their full epoch (capped = 1), large languages split
-    the remainder equally (the anti-proportional sampling that keeps
-    head languages from drowning the mix; cf. the UniMax allocation of
-    Chung et al. 2023, public).
-
-    Closed form, no iteration: in cap-ascending order (tie-break lang),
-    language k is capped iff cap_k * (L - k + 1) <= B - cum_{k-1} —
-    the true capped set is a PREFIX of this order (caps below the water
-    level are exactly the smaller caps), and a prefix-AND (windowed
-    MIN of the integer flag) guards the boundary row.  Every
-    comparison, cumsum, and count is exact integer arithmetic; the
-    uncapped share is ONE division of two exact integers, ROUND(,6).
-
-    Scale shape: tokens fold map-side into per-lang counts; every
-    window runs over the LANGS-sized table (tens of rows), never the
-    corpus."""
-    from pyspark.sql import Window
-
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    tok = docs.groupBy("lang").agg(
-        F.sum(
-            F.size(F.expr("filter(split(text, ' '), x -> x <> '')"))
-        ).cast("long").alias("n_tokens")
-    )
-    c = tok.withColumn("cap", F.col("n_tokens"))
-    tot = c.agg(
-        F.floor(F.sum("n_tokens") / 2).cast("long").alias("b"),
-        F.count(F.lit(1)).cast("long").alias("l"),
-    )
-    order = Window.orderBy("cap", "lang")
-    full = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    r = (
-        c.crossJoin(F.broadcast(tot))
-        .withColumn("k", F.row_number().over(order))
-        .withColumn(
-            "cum",
-            F.coalesce(
-                F.sum("cap").over(
-                    order.rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ).cast("long"),
-        )
-    )
-    p = r.withColumn("flag", F.expr(_WF_FLAG)).withColumn(
-        "capped",
-        F.min("flag").over(
-            order.rowsBetween(Window.unboundedPreceding, 0)
-        ).cast("long"),
-    )
-    s = p.withColumn(
-        "s_capped",
-        F.sum(F.col("capped") * F.col("cap")).over(full).cast("long"),
-    ).withColumn("n_capped", F.sum("capped").over(full).cast("long"))
-    return s.select(
-        "lang", "n_tokens", "cap", "capped", F.expr(_WF_ALLOC).alias("alloc")
     )
 
 
@@ -12393,501 +11018,6 @@ def q_langid_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: calibration shared spellings — the per-bin absolute gap is the
-#: exact integer |8192 * pos_b - sum(prob_q)|, so ECE is one division:
-_CAL_BIN = (
-    "CAST(LEAST(FLOOR(CAST(prob_q * 10 AS DOUBLE) / 8192.0), 9.0) "
-    "AS BIGINT)"
-)
-_CAL_ACC = "ROUND(CAST(pos_b AS DOUBLE) / CAST(n_b AS DOUBLE), 6)"
-_CAL_CONF = (
-    "ROUND(CAST(s_b AS DOUBLE) / (CAST(n_b AS DOUBLE) * 8192.0), 6)"
-)
-_CAL_ECE = (
-    "ROUND(CAST({x} AS DOUBLE) / (CAST(nn AS DOUBLE) * 8192.0), 6)"
-)
-
-
-@query(
-    "score_calibration",
-    _with(
-        "sc AS (SELECT LEAST(GREATEST(CAST(FLOOR(CAST(embedding[1] AS "
-        "DOUBLE) * 8192 + 0.5) AS BIGINT), 0), 8192) AS prob_q, "
-        "CASE WHEN label % 2 = 1 THEN 1 ELSE 0 END AS pos "
-        "FROM embeddings)",
-        f"b AS (SELECT {_CAL_BIN} AS bin, CAST(COUNT(*) AS BIGINT) AS "
-        "n_b, CAST(SUM(pos) AS BIGINT) AS pos_b, CAST(SUM(prob_q) AS "
-        "BIGINT) AS s_b FROM sc GROUP BY 1)",
-        "g AS (SELECT bin, n_b, pos_b, s_b, "
-        "ABS(8192 * pos_b - s_b) AS gap, "
-        "CAST(SUM(n_b) OVER () AS BIGINT) AS nn, "
-        "CAST(SUM(ABS(8192 * pos_b - s_b)) OVER () AS BIGINT) AS gap_t "
-        "FROM b)",
-    )
-    + f"SELECT bin, n_b, pos_b, s_b, {_CAL_ACC} AS acc, "
-    f"{_CAL_CONF} AS conf, {_CAL_ECE.format(x='gap')} AS ece_term, "
-    f"{_CAL_ECE.format(x='gap_t')} AS ece_total FROM g",
-)
-def q_score_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reliability diagram + Expected Calibration Error for the same
-    score/label pair score_auc evaluates — AUC says the score RANKS
-    well; calibration says its VALUE means what it claims (a 0.9 bin
-    should be 90% positive), the second gate before a quality score's
-    threshold is trusted.  Score clipped to [0, 1] in q13 units is the
-    "predicted probability"; deciles of it are the bins.
-
-    Exactness: per-bin the absolute gap |8192 * pos_b - sum(prob_q)|
-    is an exact BIGINT (acc - conf multiplied through by n_b * 8192),
-    so each ECE term and the n_b-weighted total are ONE division of
-    exact integers, ROUND(,6); bin ids come from a floor whose
-    boundary cases are exactly-representable doubles (prob_q * 10 /
-    8192 is exact only at 0 and 8192).  acc and conf are the
-    reliability-diagram coordinates.
-
-    Scale shape: one map-side fold to <= 10 bin rows; the OVER ()
-    totals run on those 10 rows."""
-    from pyspark.sql import Window
-
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    sc = emb.select(
-        F.least(
-            F.greatest(
-                qint_col(
-                    F.element_at("embedding", 1).cast("double"), Q13
-                ),
-                F.lit(0),
-            ),
-            F.lit(8192),
-        ).alias("prob_q"),
-        F.when(F.col("label") % 2 == 1, 1).otherwise(0).alias("pos"),
-    )
-    b = sc.groupBy(F.expr(_CAL_BIN).alias("bin")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_b"),
-        F.sum("pos").cast("long").alias("pos_b"),
-        F.sum("prob_q").cast("long").alias("s_b"),
-    )
-    full = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    g = b.select(
-        "bin",
-        "n_b",
-        "pos_b",
-        "s_b",
-        F.abs(8192 * F.col("pos_b") - F.col("s_b")).alias("gap"),
-        F.sum("n_b").over(full).cast("long").alias("nn"),
-        F.sum(F.abs(8192 * F.col("pos_b") - F.col("s_b")))
-        .over(full).cast("long").alias("gap_t"),
-    )
-    return g.selectExpr(
-        "bin",
-        "n_b",
-        "pos_b",
-        "s_b",
-        f"{_CAL_ACC} AS acc",
-        f"{_CAL_CONF} AS conf",
-        f"{_CAL_ECE.format(x='gap')} AS ece_term",
-        f"{_CAL_ECE.format(x='gap_t')} AS ece_total",
-    )
-
-
-@query(
-    "vocab_coverage",
-    _with(
-        "t AS (SELECT unnest(list_filter(string_split(text, ' '), "
-        "x -> x <> '')) AS tok FROM documents)",
-        "c AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS cnt FROM t "
-        "GROUP BY tok)",
-        "r AS (SELECT cnt, ROW_NUMBER() OVER (ORDER BY cnt DESC, tok) "
-        "AS rk FROM c)",
-        "cum AS (SELECT rk, CAST(SUM(cnt) OVER (ORDER BY rk ROWS "
-        "BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS "
-        "cumc FROM r)",
-        "tt AS (SELECT CAST(SUM(cnt) AS BIGINT) AS total, "
-        "CAST(COUNT(*) AS BIGINT) AS nv FROM c)",
-        "ks AS (SELECT CAST(k AS BIGINT) AS k FROM (VALUES (10), "
-        "(100), (1000), (10000)) v(k))",
-    )
-    + "SELECT ks.k, LEAST(ks.k, tt.nv) AS n_vocab_used, tt.nv AS "
-    "n_vocab, cum.cumc AS n_tokens_covered, tt.total AS n_tokens, "
-    "ROUND(CAST(cum.cumc AS DOUBLE) / CAST(tt.total AS DOUBLE), 6) "
-    "AS coverage FROM ks CROSS JOIN tt "
-    "JOIN cum ON cum.rk = LEAST(ks.k, tt.nv)",
-)
-def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vocabulary coverage curve: what fraction of all token
-    occurrences the top-k most frequent types cover, at k = 10 / 100 /
-    1000 / 10000 — the curve that sizes a BPE/word vocabulary and
-    quantifies the Zipf head (zipf_slope fits the tail exponent; THIS
-    reads the head mass straight off).  Deterministic rank: count DESC
-    then token text.
-
-    Exactness: counts, cumulative sums, and checkpoints are integers
-    end to end; coverage is ONE division per checkpoint, ROUND(,6).
-
-    Scale shape: tokens fold map-side into the vocab count table; the
-    ranking window runs over the VOCAB aggregate (heavy-tail bounded,
-    ~10^6-10^8 types at corpus scale, not the 10^12 token stream).
-    At the extreme, the rank cutoff can be pushed down with a
-    frequency-of-frequencies prepass (the good_turing histogram gives
-    the count threshold of rank 10^4 without a global sort) — the
-    checkpoint join is already written against ranks, so that swap is
-    local."""
-    from pyspark.sql import Window
-
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    c = (
-        docs.select(
-            F.explode(
-                F.filter(F.split("text", " "), lambda t: t != "")
-            ).alias("tok")
-        )
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
-    r = c.select(
-        "cnt",
-        F.row_number().over(
-            Window.orderBy(F.col("cnt").desc(), F.col("tok"))
-        ).alias("rk"),
-    )
-    cum = r.select(
-        "rk",
-        F.sum("cnt").over(
-            Window.orderBy("rk").rowsBetween(
-                Window.unboundedPreceding, Window.currentRow
-            )
-        ).cast("long").alias("cumc"),
-    )
-    tt = c.agg(
-        F.sum("cnt").cast("long").alias("total"),
-        F.count(F.lit(1)).cast("long").alias("nv"),
-    )
-    ks = spark.createDataFrame([(10,), (100,), (1000,), (10000,)], "k long")
-    return (
-        ks.crossJoin(F.broadcast(tt))
-        .join(cum, F.col("rk") == F.least(F.col("k"), F.col("nv")))
-        .selectExpr(
-            "k",
-            "LEAST(k, nv) AS n_vocab_used",
-            "nv AS n_vocab",
-            "cumc AS n_tokens_covered",
-            "total AS n_tokens",
-            "ROUND(CAST(cumc AS DOUBLE) / CAST(total AS DOUBLE), 6) "
-            "AS coverage",
-        )
-    )
-
-
-#: Theil accumulators, ONE spelling each (pinned-ln doctrine; the
-#: decomposition T = T_B + T_W holds EXACTLY in the integer
-#: accumulators because acc_W := acc_T - acc_B):
-_THEIL_T_TERM = (
-    "cx * x * (" + _KL_LQ.format(x="x") + " + " + _KL_LQ.format(x="n")
-    + " - " + _KL_LQ.format(x="s") + ")"
-)
-_THEIL_B_TERM = (
-    "sg * (" + _KL_LQ.format(x="sg") + " + " + _KL_LQ.format(x="n")
-    + " - " + _KL_LQ.format(x="s") + " - " + _KL_LQ.format(x="ng") + ")"
-)
-_THEIL_OF = "ROUND(CAST({x} AS DOUBLE) / (CAST(s AS DOUBLE) * 8192.0), 6)"
-
-
-@query(
-    "theil_decomposition",
-    _with(
-        "d AS (SELECT source, CAST(n_chars AS BIGINT) AS x FROM "
-        "documents WHERE n_chars > 0)",
-        "xs AS (SELECT x, CAST(COUNT(*) AS BIGINT) AS cx FROM d "
-        "GROUP BY x)",
-        "grp AS (SELECT source, CAST(SUM(x) AS BIGINT) AS sg, "
-        "CAST(COUNT(*) AS BIGINT) AS ng FROM d GROUP BY source)",
-        "tot AS (SELECT CAST(SUM(sg) AS BIGINT) AS s, "
-        "CAST(SUM(ng) AS BIGINT) AS n FROM grp)",
-        f"at AS (SELECT CAST(SUM({_THEIL_T_TERM}) AS BIGINT) AS acc_t "
-        "FROM xs CROSS JOIN tot)",
-        f"ab AS (SELECT CAST(SUM({_THEIL_B_TERM}) AS BIGINT) AS acc_b "
-        "FROM grp CROSS JOIN tot)",
-    )
-    + "SELECT tot.n, tot.s, at.acc_t, ab.acc_b, "
-    + _THEIL_OF.format(x="at.acc_t")
-    + " AS theil_total, "
-    + _THEIL_OF.format(x="ab.acc_b")
-    + " AS theil_between, "
-    + _THEIL_OF.format(x="at.acc_t - ab.acc_b")
-    + " AS theil_within FROM tot CROSS JOIN at CROSS JOIN ab",
-)
-def q_theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Theil-T inequality index of document lengths, decomposed into
-    between-source and within-source components — the additive
-    inequality decomposition (Gini cannot do this) a corpus curator
-    reads to learn WHERE length skew lives: do sources differ from
-    each other, or is each source internally skewed?  T_total =
-    T_between + T_within holds EXACTLY here because the within
-    accumulator is DEFINED as the integer difference acc_t - acc_b.
-
-    Exactness: T = sum_i (x_i/S) ln(x_i N / S) folds by LENGTH VALUE
-    (cnt_x * x * [lq(x) + lq(N) - lq(S)]) and T_B by group
-    (S_g * [lq(S_g) + lq(N) - lq(S) - lq(N_g)]) — every ln q13-pinned
-    on an integer-valued double (the lang_kl doctrine), both
-    accumulators exact BIGINTs, each reported index ONE division
-    ROUND(,6).  Zero-length docs are excluded (ln undefined), stated
-    not silent.
-
-    Scale shape: two map-side folds (by length value, by source) of
-    one scan; every cross join carries 1-row scalars."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("n_chars") > 0)
-        .select("source", F.col("n_chars").cast("long").alias("x"))
-    )
-    xs = d.groupBy("x").agg(F.count(F.lit(1)).cast("long").alias("cx"))
-    grp = d.groupBy("source").agg(
-        F.sum("x").cast("long").alias("sg"),
-        F.count(F.lit(1)).cast("long").alias("ng"),
-    )
-    tot = grp.agg(
-        F.sum("sg").cast("long").alias("s"),
-        F.sum("ng").cast("long").alias("n"),
-    )
-    at = xs.crossJoin(F.broadcast(tot)).agg(
-        F.sum(F.expr(_THEIL_T_TERM)).cast("long").alias("acc_t")
-    )
-    ab = grp.crossJoin(F.broadcast(tot)).agg(
-        F.sum(F.expr(_THEIL_B_TERM)).cast("long").alias("acc_b")
-    )
-    return (
-        tot.crossJoin(F.broadcast(at))
-        .crossJoin(F.broadcast(ab))
-        .selectExpr(
-            "n",
-            "s",
-            "acc_t",
-            "acc_b",
-            _THEIL_OF.format(x="acc_t") + " AS theil_total",
-            _THEIL_OF.format(x="acc_b") + " AS theil_between",
-            _THEIL_OF.format(x="acc_t - acc_b") + " AS theil_within",
-        )
-    )
-
-
-#: mutual-information accumulators (pinned-ln doctrine; zero cells
-#: contribute NOTHING — n ln(n...) -> 0 — so the inner join is exact,
-#: no COALESCE cross needed, unlike chi2's E-term):
-_MI_TERM = (
-    "o * (" + _KL_LQ.format(x="o") + " + " + _KL_LQ.format(x="n") + " - "
-    + _KL_LQ.format(x="r") + " - " + _KL_LQ.format(x="c") + ")"
-)
-_MI_H_TERM = "{m} * (" + _KL_LQ.format(x="n") + " - " + _KL_LQ.format(x="{m}") + ")"
-_MI_OF = "ROUND(CAST({x} AS DOUBLE) / (CAST(n AS DOUBLE) * 8192.0), 6)"
-_MI_NMI = (
-    "ROUND(CAST(acc_mi AS DOUBLE) / SQRT(CAST(acc_hl AS DOUBLE) * "
-    "CAST(acc_hs AS DOUBLE)), 6)"
-)
-
-
-@query(
-    "lang_source_mi",
-    _with(
-        "ct AS (SELECT lang, source, CAST(COUNT(*) AS BIGINT) AS o "
-        "FROM documents GROUP BY 1, 2)",
-        "rl AS (SELECT lang, CAST(SUM(o) AS BIGINT) AS r FROM ct "
-        "GROUP BY 1)",
-        "cs AS (SELECT source, CAST(SUM(o) AS BIGINT) AS c FROM ct "
-        "GROUP BY 1)",
-        "nn AS (SELECT CAST(SUM(o) AS BIGINT) AS n FROM ct)",
-        f"mi AS (SELECT CAST(SUM({_MI_TERM}) AS BIGINT) AS acc_mi "
-        "FROM ct JOIN rl ON rl.lang = ct.lang "
-        "JOIN cs ON cs.source = ct.source CROSS JOIN nn)",
-        "hl AS (SELECT CAST(SUM("
-        + _MI_H_TERM.format(m="r")
-        + ") AS BIGINT) AS acc_hl FROM rl CROSS JOIN nn)",
-        "hs AS (SELECT CAST(SUM("
-        + _MI_H_TERM.format(m="c")
-        + ") AS BIGINT) AS acc_hs FROM cs CROSS JOIN nn)",
-    )
-    + "SELECT nn.n, mi.acc_mi, hl.acc_hl, hs.acc_hs, "
-    + _MI_OF.format(x="acc_mi")
-    + " AS mi_nats, "
-    + _MI_OF.format(x="acc_hl")
-    + " AS h_lang, "
-    + _MI_OF.format(x="acc_hs")
-    + " AS h_source, "
-    + _MI_NMI
-    + " AS nmi FROM nn CROSS JOIN mi CROSS JOIN hl CROSS JOIN hs",
-)
-def q_lang_source_mi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mutual information between language and source + the
-    sqrt-normalized NMI — the information-theoretic companion of
-    chi2_independence on the same contingency table (chi2 answers "is
-    there dependence"; MI answers "how many nats does knowing the
-    source tell you about the language", and NMI scales it to [0, 1]
-    against the marginal entropies).
-
-    Exactness: MI folds as n_ij * [lq(n_ij) + lq(N) - lq(r_i) -
-    lq(c_j)] over OCCUPIED cells only (zero cells contribute exactly
-    nothing — the inner join is semantically exact, no COALESCE cross
-    like chi2's E-term needs); both marginal entropies fold as
-    m * [lq(N) - lq(m)].  All three accumulators are exact BIGINTs;
-    MI / H are ONE division each, and NMI's denominator multiplies the
-    two accumulators AS DOUBLES (each < 2^53, so the product is one
-    correctly-rounded operation — the BIGINT product would overflow
-    at corpus scale, documented not silent), ROUND(,6).
-
-    Scale shape: identical to chi2_independence — one scan folds to
-    the langs x sources census; marginals and scalars run on it."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    ct = docs.groupBy("lang", "source").agg(
-        F.count(F.lit(1)).cast("long").alias("o")
-    )
-    rl = ct.groupBy("lang").agg(F.sum("o").cast("long").alias("r"))
-    cs = ct.groupBy("source").agg(F.sum("o").cast("long").alias("c"))
-    nn = ct.agg(F.sum("o").cast("long").alias("n"))
-    mi = (
-        ct.join(rl, "lang")
-        .join(cs, "source")
-        .crossJoin(F.broadcast(nn))
-        .agg(F.sum(F.expr(_MI_TERM)).cast("long").alias("acc_mi"))
-    )
-    hl = rl.crossJoin(F.broadcast(nn)).agg(
-        F.sum(F.expr(_MI_H_TERM.format(m="r"))).cast("long")
-        .alias("acc_hl")
-    )
-    hs = cs.crossJoin(F.broadcast(nn)).agg(
-        F.sum(F.expr(_MI_H_TERM.format(m="c"))).cast("long")
-        .alias("acc_hs")
-    )
-    return (
-        nn.crossJoin(F.broadcast(mi))
-        .crossJoin(F.broadcast(hl))
-        .crossJoin(F.broadcast(hs))
-        .selectExpr(
-            "n",
-            "acc_mi",
-            "acc_hl",
-            "acc_hs",
-            _MI_OF.format(x="acc_mi") + " AS mi_nats",
-            _MI_OF.format(x="acc_hl") + " AS h_lang",
-            _MI_OF.format(x="acc_hs") + " AS h_source",
-            _MI_NMI + " AS nmi",
-        )
-    )
-
-
-#: Benford shared spellings: the expected-share bracket per digit is
-#: the integer lq(d+1) - lq(d) over lq(10) (pinned-ln doctrine), and
-#: the total-variation accumulator multiplies through so every |.| is
-#: an exact BIGINT:
-_BENFORD_EXP = (
-    "ROUND(CAST(" + _KL_LQ.format(x="digit + 1") + " - "
-    + _KL_LQ.format(x="digit") + " AS DOUBLE) / CAST("
-    + _KL_LQ.format(x="10") + " AS DOUBLE), 6)"
-)
-_BENFORD_DEV = (
-    "ABS(n_d * " + _KL_LQ.format(x="10") + " - nn * ("
-    + _KL_LQ.format(x="digit + 1") + " - " + _KL_LQ.format(x="digit")
-    + "))"
-)
-_BENFORD_TVD = (
-    "ROUND(CAST({x} AS DOUBLE) / (2.0 * CAST(nn AS DOUBLE) * CAST("
-    + _KL_LQ.format(x="10") + " AS DOUBLE)), 6)"
-)
-
-
-@query(
-    "benford_digits",
-    _with(
-        "v AS (SELECT CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT) "
-        "AS cents FROM orders WHERE o_totalprice > 0)",
-        "dg AS (SELECT CAST(SUBSTR(CAST(cents AS VARCHAR), 1, 1) AS "
-        "BIGINT) AS digit FROM v)",
-        "c0 AS (SELECT digit, CAST(COUNT(*) AS BIGINT) AS n_d FROM dg "
-        "GROUP BY digit)",
-        # full 1..9 domain: unobserved digits MUST contribute their
-        # expected mass to the TV distance (the chi2 zero-cell lesson)
-        "c AS (SELECT CAST(t.d + 1 AS BIGINT) AS digit, "
-        "COALESCE(c0.n_d, 0) AS n_d FROM range(9) t(d) "
-        "LEFT JOIN c0 ON c0.digit = t.d + 1)",
-        "g1 AS (SELECT digit, n_d, CAST(SUM(n_d) OVER () AS BIGINT) AS "
-        "nn FROM c)",
-        f"g AS (SELECT digit, n_d, nn, CAST(SUM({_BENFORD_DEV}) OVER () "
-        "AS BIGINT) AS dev_t FROM g1)",
-    )
-    + "SELECT digit, n_d, "
-    "ROUND(CAST(n_d AS DOUBLE) / CAST(nn AS DOUBLE), 6) AS obs_share, "
-    f"{_BENFORD_EXP} AS exp_share, {_BENFORD_TVD.format(x='dev_t')} "
-    "AS tvd_total FROM g",
-)
-def q_benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benford first-digit census of order totals (in cents) + the
-    total-variation distance from the Benford law — the classic
-    synthetic-data / fraud / unit-mixup detector (real multi-scale
-    monetary data follows log10(1 + 1/d); generated or truncated data
-    does not, and THIS corpus is synthetic — the census quantifies
-    exactly how far off it is rather than assuming).
-
-    Exactness: first digit via integer-to-string SUBSTR (identical
-    decimal rendering both engines, no log10 float detour); expected
-    shares are the pinned-ln bracket (lq(d+1) - lq(d)) / lq(10); the
-    TV accumulator multiplies through by N * lq(10) so every absolute
-    deviation is an exact BIGINT and the distance is ONE division,
-    ROUND(,6).
-
-    Scale shape: one map-side fold to <= 9 digit rows; the OVER ()
-    totals run on those."""
-    from pyspark.sql import Window
-
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    orders = load_table(spark, sf_dir, "orders")
-    c0 = (
-        orders.filter(F.col("o_totalprice") > 0)
-        .select(
-            F.expr(
-                # STRING here, VARCHAR in the oracle: same rendering,
-                # Spark's parser rejects length-less VARCHAR
-                "CAST(SUBSTR(CAST(CAST(FLOOR(o_totalprice * 100.0 + 0.5) "
-                "AS BIGINT) AS STRING), 1, 1) AS BIGINT)"
-            ).alias("digit")
-        )
-        .groupBy("digit")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_d"))
-    )
-    # full 1..9 domain (unobserved digits contribute expected mass)
-    c = (
-        spark.range(9)
-        .select((F.col("id") + 1).cast("long").alias("digit"))
-        .join(c0, "digit", "left")
-        .select("digit", F.coalesce("n_d", F.lit(0)).alias("n_d"))
-    )
-    full = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    g = c.select(
-        "digit",
-        "n_d",
-        F.sum("n_d").over(full).cast("long").alias("nn"),
-    ).withColumn(
-        "dev_t",
-        F.sum(F.expr(_BENFORD_DEV)).over(full).cast("long"),
-    )
-    return g.selectExpr(
-        "digit",
-        "n_d",
-        "ROUND(CAST(n_d AS DOUBLE) / CAST(nn AS DOUBLE), 6) AS obs_share",
-        f"{_BENFORD_EXP} AS exp_share",
-        f"{_BENFORD_TVD.format(x='dev_t')} AS tvd_total",
-    )
-
-
 @query(
     "tile_skew",
     _BASE.rstrip()
@@ -13032,49 +11162,6 @@ def q_neardup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CASE WHEN n_cand > 0 THEN ROUND(CAST(n_hit AS DOUBLE) / "
             "CAST(n_cand AS DOUBLE), 6) END AS precision",
         )
-    )
-
-
-@query(
-    "customer_orders_hist",
-    _with(
-        "co AS (SELECT c.c_custkey, CAST(COUNT(o.o_orderkey) AS BIGINT) "
-        "AS c_count FROM customer c LEFT JOIN orders o "
-        "ON o.o_custkey = c.c_custkey GROUP BY c.c_custkey)",
-    )
-    + "SELECT c_count, CAST(COUNT(*) AS BIGINT) AS custdist "
-    "FROM co GROUP BY c_count",
-)
-def q_customer_orders_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q13-flavored customer order-count distribution: how many
-    customers placed exactly k orders, INCLUDING the zero-order
-    customers the left outer join preserves (the classic double
-    aggregation — inner-joining here silently drops the c_count = 0
-    bucket, the single most analyzed bucket of the real Q13).  The
-    relational family's outer-join row (tpch_pricing: agg;
-    region_revenue: star; trade_volumes/market_share: deep joins;
-    order_priority: EXISTS; late_suppliers: NOT EXISTS; THIS: left
-    outer + re-aggregation).
-
-    Exactness: COUNT(o_orderkey) counts non-NULL keys only (0 for
-    orderless customers) — integers end to end, nothing to round.
-
-    Scale shape: orders shuffle once on custkey into the per-customer
-    count (map-side combinable), then the histogram folds the
-    customer-sized table onto <= max-orders rows."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    cust = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders")
-    co = (
-        cust.join(
-            orders, F.col("o_custkey") == F.col("c_custkey"), "left"
-        )
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").cast("long").alias("c_count"))
-    )
-    return co.groupBy("c_count").agg(
-        F.count(F.lit(1)).cast("long").alias("custdist")
     )
 
 
@@ -13335,89 +11422,6 @@ def _openness_core(spark: SparkSession, zt: DataFrame) -> DataFrame:
     )
 
 
-@query(
-    "ks_lengths",
-    _with(
-        "d AS (SELECT doc_id % 2 AS g, CAST(n_chars AS BIGINT) AS x "
-        "FROM documents)",
-        "c AS (SELECT x, CAST(SUM(CASE WHEN g = 0 THEN 1 ELSE 0 END) "
-        "AS BIGINT) AS ca, CAST(SUM(CASE WHEN g = 1 THEN 1 ELSE 0 END) "
-        "AS BIGINT) AS cb FROM d GROUP BY x)",
-        "w AS (SELECT x, CAST(SUM(ca) OVER (ORDER BY x ROWS BETWEEN "
-        "UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cuma, "
-        "CAST(SUM(cb) OVER (ORDER BY x ROWS BETWEEN UNBOUNDED "
-        "PRECEDING AND CURRENT ROW) AS BIGINT) AS cumb FROM c)",
-        "t AS (SELECT CAST(SUM(ca) AS BIGINT) AS na, "
-        "CAST(SUM(cb) AS BIGINT) AS nb FROM c)",
-        "m AS (SELECT CAST(MAX(ABS(cuma * nb - cumb * na)) AS BIGINT) "
-        "AS dnum FROM w CROSS JOIN t)",
-    )
-    + "SELECT t.na, t.nb, m.dnum, "
-    "ROUND(CAST(m.dnum AS DOUBLE) / (CAST(t.na AS DOUBLE) * "
-    "CAST(t.nb AS DOUBLE)), 6) AS ks_d FROM t CROSS JOIN m",
-)
-def q_ks_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact two-sample Kolmogorov-Smirnov statistic on document
-    lengths between the two corpus segments (even vs odd doc_id — the
-    same deterministic snapshot split as segment_psi): D = max over x
-    of |F_A(x) - F_B(x)|, the BINLESS drift detector that catches
-    shape changes PSI's coarse bins smooth away (PSI on language bins,
-    KS on the length distribution — a drift suite reports both).
-
-    Exactness: multiplied through by n_A * n_B, the supremum runs over
-    exact integers |cum_A * n_B - cum_B * n_A| evaluated at every
-    distinct length (the ECDF only changes there, so the max over
-    distinct values IS the supremum); D is ONE division, ROUND(,6).
-    At 10^12-row segments the product needs the NMI double treatment
-    (documented, not silent).
-
-    Scale shape: one map-side fold to per-length group counts; the
-    cumulative window runs over the DISTINCT-lengths table (value-
-    histogram sized, never the corpus — the score_auc trick on an
-    unbounded-but-small value domain)."""
-    from pyspark.sql import Window
-
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    c = (
-        docs.select(
-            (F.col("doc_id") % 2).alias("g"),
-            F.col("n_chars").cast("long").alias("x"),
-        )
-        .groupBy("x")
-        .agg(
-            F.sum(F.when(F.col("g") == 0, 1).otherwise(0))
-            .cast("long").alias("ca"),
-            F.sum(F.when(F.col("g") == 1, 1).otherwise(0))
-            .cast("long").alias("cb"),
-        )
-    )
-    win = Window.orderBy("x").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    w = c.select(
-        F.sum("ca").over(win).cast("long").alias("cuma"),
-        F.sum("cb").over(win).cast("long").alias("cumb"),
-    )
-    t = c.agg(
-        F.sum("ca").cast("long").alias("na"),
-        F.sum("cb").cast("long").alias("nb"),
-    )
-    m = w.crossJoin(F.broadcast(t)).agg(
-        F.max(
-            F.abs(F.col("cuma") * F.col("nb") - F.col("cumb") * F.col("na"))
-        ).cast("long").alias("dnum")
-    )
-    return t.crossJoin(F.broadcast(m)).selectExpr(
-        "na",
-        "nb",
-        "dnum",
-        "ROUND(CAST(dnum AS DOUBLE) / (CAST(na AS DOUBLE) * "
-        "CAST(nb AS DOUBLE)), 6) AS ks_d",
-    )
-
-
 _ANISO_DIRS = (("ew", 0, 1), ("ns", 1, 0), ("ne", 1, 1), ("nw", 1, -1))
 _ANISO_H = 4  #: max lag per direction
 
@@ -13561,7 +11565,7 @@ def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     DESC, vec_id ASC — the cosine_topk contract), overlap counts are
     integers, recall is ONE division, the mean ONE more over the
     10-query census; zero-overlap queries survive via the qs LEFT
-    JOIN (the benford full-domain lesson).
+    JOIN (an inner join would drop them and inflate the mean).
 
     Scale shape: truth is the quadratic baseline on the SAME bounded
     query set the brute query already runs (10 queries — the eval
@@ -13627,7 +11631,7 @@ def q_funnel_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     completes signup -> ... -> purchase (the EXACT stage semantics
     funnel_steps counts, via the shared _funnel_frames chain), the
     seconds from first signup touch to the purchase touch — count,
-    min, max, MEDIAN, mean.  Conversion RATE (funnel_steps/wilson)
+    min, max, MEDIAN, mean.  Conversion RATE (funnel_steps)
     says how many; THIS says how long — the other number a growth
     team reads.
 
@@ -13683,195 +11687,6 @@ def q_funnel_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CAST(med2_s AS BIGINT) AS med2_s",
         "ROUND(CAST(sum_s AS DOUBLE) / CAST(n_converts AS DOUBLE), 6) "
         "AS mean_s",
-    )
-
-
-#: Heaps-fit spellings (the zipf_slope OLS doctrine: pinned-ln x/y on
-#: integer-valued doubles, exact BIGINT sums, slope one division):
-_HEAPS_X = "CAST(FLOOR(ln(CAST(ctok AS DOUBLE)) * 8192 + 0.5) AS BIGINT)"
-_HEAPS_Y = "CAST(FLOOR(ln(CAST(ctyp AS DOUBLE)) * 8192 + 0.5) AS BIGINT)"
-_HEAPS_BETA = (
-    "ROUND(CAST(np * sxy - sx * sy AS DOUBLE) / "
-    "CAST(np * sxx - sx * sx AS DOUBLE), 6)"
-)
-
-
-@query(
-    "heaps_law",
-    _with(
-        "t AS (SELECT doc_id, unnest(list_filter(string_split(text, "
-        "' '), x -> x <> '')) AS tok FROM documents)",
-        # first occurrence of each type, in doc_id order
-        "fo AS (SELECT tok, CAST(MIN(doc_id) AS BIGINT) AS d0 FROM t "
-        "GROUP BY tok)",
-        "nw AS (SELECT d0 AS doc_id, CAST(COUNT(*) AS BIGINT) AS "
-        "n_new FROM fo GROUP BY d0)",
-        "dl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tok "
-        "FROM t GROUP BY doc_id)",
-        "cm AS (SELECT dl.doc_id, "
-        "CAST(SUM(dl.n_tok) OVER (ORDER BY dl.doc_id ROWS BETWEEN "
-        "UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS ctok, "
-        "CAST(SUM(COALESCE(nw.n_new, 0)) OVER (ORDER BY dl.doc_id "
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) "
-        "AS ctyp, ROW_NUMBER() OVER (ORDER BY dl.doc_id) AS rn, "
-        "COUNT(*) OVER () AS nd FROM dl "
-        "LEFT JOIN nw ON nw.doc_id = dl.doc_id)",
-        # 10 checkpoints at the rank deciles (always includes the last)
-        "cp AS (SELECT rn, ctok, ctyp FROM cm "
-        "WHERE rn % GREATEST(CAST(FLOOR(nd / 10.0) AS BIGINT), 1) = 0 "
-        "OR rn = nd)",
-        f"q AS (SELECT rn, ctok, ctyp, {_HEAPS_X} AS x, {_HEAPS_Y} AS y "
-        "FROM cp)",
-        "s AS (SELECT CAST(COUNT(*) AS BIGINT) AS np, "
-        "CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy, "
-        "CAST(SUM(x * y) AS BIGINT) AS sxy, "
-        "CAST(SUM(x * x) AS BIGINT) AS sxx FROM q)",
-    )
-    + f"SELECT np, sx, sy, sxy, sxx, {_HEAPS_BETA} AS heaps_beta "
-    "FROM s",
-)
-def q_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heaps'-law vocabulary-growth exponent: V(n) ~ K * n^beta fit by
-    OLS on (ln cumulative tokens, ln cumulative types) at 10 corpus
-    checkpoints in doc_id order — the growth-side companion of
-    zipf_slope (Zipf reads the static rank curve; Heaps predicts how
-    the VOCAB table grows as the crawl grows, i.e. how big tomorrow's
-    vocabulary — and its shuffle — will be; beta ~ 1/zipf-alpha under
-    the classic duality).
-
-    Exactness: cumulative distinct-type counts NEVER re-scan prefixes
-    — each type folds to its FIRST doc (min doc_id), per-doc new-type
-    counts cumsum exactly (the shingle_novelty trick applied to the
-    vocabulary), checkpoint selection is integer modular arithmetic
-    on dense ranks, and the OLS runs the zipf_slope pinned-ln
-    doctrine: exact BIGINT sums, beta ONE division, ROUND(,6).
-
-    Scale shape: tokens fold map-side twice ((tok) -> first doc;
-    (doc) -> length); the cumulative window runs over the DOCS-sized
-    table and the fit over 10 rows.  At 10^12 docs the window becomes
-    a two-pass prefix sum over doc-id ranges — the spelling is
-    unchanged."""
-    from pyspark.sql import Window
-
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    t = docs.select(
-        "doc_id",
-        F.explode(
-            F.filter(F.split("text", " "), lambda x: x != "")
-        ).alias("tok"),
-    )
-    fo = t.groupBy("tok").agg(F.min("doc_id").cast("long").alias("d0"))
-    nw = fo.groupBy(F.col("d0").alias("doc_id")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_new")
-    )
-    dl = t.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_tok")
-    )
-    win = Window.orderBy("doc_id").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    full = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    cm = (
-        dl.join(nw, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_tok",
-            F.coalesce("n_new", F.lit(0)).alias("n_new"),
-        )
-        .select(
-            F.sum("n_tok").over(win).cast("long").alias("ctok"),
-            F.sum("n_new").over(win).cast("long").alias("ctyp"),
-            F.row_number().over(Window.orderBy("doc_id")).alias("rn"),
-            F.count(F.lit(1)).over(full).alias("nd"),
-        )
-    )
-    cp = cm.filter(
-        F.expr(
-            "rn % GREATEST(CAST(FLOOR(nd / 10.0) AS BIGINT), 1) = 0 "
-            "OR rn = nd"
-        )
-    )
-    q = cp.select(F.expr(_HEAPS_X).alias("x"), F.expr(_HEAPS_Y).alias("y"))
-    s = q.agg(
-        F.count(F.lit(1)).cast("long").alias("np"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-    )
-    return s.selectExpr(
-        "np", "sx", "sy", "sxy", "sxx", f"{_HEAPS_BETA} AS heaps_beta"
-    )
-
-
-@query(
-    "traffic_fano",
-    _with(
-        "hb AS (SELECT event_type, DATE_TRUNC('hour', ts) AS hour, "
-        "CAST(COUNT(*) AS BIGINT) AS x FROM events "
-        "GROUP BY event_type, DATE_TRUNC('hour', ts))",
-        "hr AS (SELECT CAST(FLOOR(epoch(MAX(hour) - MIN(hour)) / "
-        "3600.0) AS BIGINT) + 1 AS nh FROM hb)",
-        "s AS (SELECT event_type, CAST(SUM(x) AS BIGINT) AS sx, "
-        "CAST(SUM(x * x) AS BIGINT) AS sxx FROM hb GROUP BY 1)",
-    )
-    + "SELECT s.event_type, hr.nh AS n_hours, s.sx AS n_events, s.sxx, "
-    "ROUND(CAST(s.sx AS DOUBLE) / CAST(hr.nh AS DOUBLE), 6) AS "
-    "mean_per_hour, "
-    "ROUND(CAST(hr.nh * s.sxx - s.sx * s.sx AS DOUBLE) / "
-    "CAST(hr.nh * s.sx AS DOUBLE), 6) AS fano "
-    "FROM s CROSS JOIN hr",
-)
-def q_traffic_fano(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fano factor (index of dispersion) of hourly event counts per
-    event type: variance-to-mean over the FULL hour span of the
-    stream — the burstiness detector that separates Poisson-like
-    traffic (fano ~ 1) from bursty (>> 1) and clock-regular (<< 1)
-    load, the dispersion companion of traffic_autocorr's periodicity
-    and cusum_alarms' level shifts.
-
-    Exactness: empty hours are counted WITHOUT materializing them —
-    they add 0 to both sums, so only the bucket count n_hours (one
-    integer epoch difference over the global span) carries them; the
-    population identity var/mean = (n*sum(x^2) - (sum x)^2) / (n *
-    sum x) is ONE division of exact BIGINTs, ROUND(,6); the span is
-    shared across types (a type with no midnight events still
-    amortizes over the same clock).
-
-    Scale shape: one map-side fold to (type, hour) counts, a rollup
-    per type, one 1-row scalar; nothing wider than the hourly census
-    shuffles."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    hb = ev.groupBy(
-        "event_type", F.date_trunc("hour", "ts").alias("hour")
-    ).agg(F.count(F.lit(1)).cast("long").alias("x"))
-    hr = hb.agg(
-        (
-            F.expr(
-                "CAST(FLOOR(timestampdiff(SECOND, MIN(hour), MAX(hour)) "
-                "/ 3600.0) AS BIGINT) + 1"
-            )
-        ).alias("nh")
-    )
-    s = hb.groupBy("event_type").agg(
-        F.sum("x").cast("long").alias("sx"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-    )
-    return s.crossJoin(F.broadcast(hr)).selectExpr(
-        "event_type",
-        "nh AS n_hours",
-        "sx AS n_events",
-        "sxx",
-        "ROUND(CAST(sx AS DOUBLE) / CAST(nh AS DOUBLE), 6) AS "
-        "mean_per_hour",
-        "ROUND(CAST(nh * sxx - sx * sx AS DOUBLE) / "
-        "CAST(nh * sx AS DOUBLE), 6) AS fano",
     )
 
 
@@ -13997,8 +11812,8 @@ _HILL_K = 50  #: top-k order statistics in the Hill estimator
 def q_hill_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hill estimator of the power-law tail index of host in-degrees:
     H_k = (1/k) sum over the top-k order statistics of ln(x_i /
-    x_{k+1}), alpha = 1/H_k — the order-statistics MLE that
-    complements zipf_slope's OLS fit (OLS over-weights the noisy deep
+    x_{k+1}), alpha = 1/H_k — the order-statistics MLE, preferred over
+    an OLS fit of the rank-frequency plot (OLS over-weights the noisy deep
     tail; Hill reads only the extreme order statistics, which is what
     "is this crawl scale-free" actually asks) and indegree_gini's
     single-number concentration.
@@ -14295,175 +12110,6 @@ def q_order_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "user_value_concentration",
-    _with(
-        "uv AS (SELECT user_id, CAST(SUM(CAST(FLOOR(value * 100.0 + "
-        "0.5) AS BIGINT)) AS BIGINT) AS cents FROM events "
-        "GROUP BY user_id)",
-        "r AS (SELECT cents, CAST(ROW_NUMBER() OVER (ORDER BY cents "
-        "DESC, user_id ASC) AS BIGINT) AS rk FROM uv)",
-        "cum AS (SELECT rk, CAST(SUM(cents) OVER (ORDER BY rk ROWS "
-        "BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS "
-        "ccents FROM r)",
-        "tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, "
-        "CAST(SUM(cents) AS BIGINT) AS total FROM r)",
-        "ps AS (SELECT CAST(p AS BIGINT) AS pct FROM (VALUES (1), "
-        "(10), (20), (50)) v(p))",
-        # ceil(n * pct / 100) in pure integers — n * 0.01 in doubles
-        # can land a hair above the integer and ceil one too high
-        "ks AS (SELECT ps.pct, (tot.n * ps.pct + 99) // 100 AS k "
-        "FROM ps CROSS JOIN tot)",
-    )
-    + "SELECT ks.pct, ks.k AS n_top_users, cum.ccents AS top_cents, "
-    "tot.total AS total_cents, "
-    "ROUND(CAST(cum.ccents AS DOUBLE) / CAST(tot.total AS DOUBLE), 6) "
-    "AS value_share FROM ks CROSS JOIN tot "
-    "JOIN cum ON cum.rk = ks.k",
-)
-def q_user_value_concentration(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Value-concentration checkpoints over users: the share of total
-    event value carried by the top 1 / 10 / 20 / 50 % of users ranked
-    by their cent-quantized value sum — the Lorenz-curve readout
-    ("do whales drive the revenue?") that complements indegree_gini's
-    single number with the actual operating points a pricing or
-    abuse team quotes (vocab_coverage's head-mass trick applied to
-    users x money).
-
-    Exactness: per-user cents are exact BIGINTs (the trade_volumes
-    cent-quantization doctrine), ranks are a total order (cents DESC,
-    user_id), checkpoint sizes are ceil(n*pct/100) in PURE integer
-    arithmetic ((n*pct + 99) // 100 — n * 0.01 in doubles can land a
-    hair above the integer and ceil one too high), and each share is
-    ONE division, ROUND(,6).
-
-    Scale shape: events fold map-side to per-user cents; the rank
-    window runs over the USERS-sized table (the indegree_gini note:
-    the global sort is inherent to the statistic, one narrow
-    (int64, int64) range-partitioned sort at 10^9 users)."""
-    from pyspark.sql import Window
-
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    uv = ev.groupBy("user_id").agg(
-        F.sum(
-            F.floor(F.col("value") * 100.0 + 0.5).cast("long")
-        ).cast("long").alias("cents")
-    )
-    r = uv.select(
-        "cents",
-        F.row_number().over(
-            Window.orderBy(F.col("cents").desc(), F.col("user_id").asc())
-        ).cast("long").alias("rk"),
-    )
-    cum = r.select(
-        "rk",
-        F.sum("cents").over(
-            Window.orderBy("rk").rowsBetween(
-                Window.unboundedPreceding, Window.currentRow
-            )
-        ).cast("long").alias("ccents"),
-    )
-    tot = r.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("cents").cast("long").alias("total"),
-    )
-    ps = spark.createDataFrame([(1,), (10,), (20,), (50,)], "pct long")
-    ks = ps.crossJoin(F.broadcast(tot)).select(
-        "pct",
-        "total",
-        F.expr("(n * pct + 99) DIV 100").alias("k"),
-    )
-    return ks.join(cum, F.col("rk") == F.col("k")).selectExpr(
-        "pct",
-        "k AS n_top_users",
-        "ccents AS top_cents",
-        "total AS total_cents",
-        "ROUND(CAST(ccents AS DOUBLE) / CAST(total AS DOUBLE), 6) AS "
-        "value_share",
-    )
-
-
-@query(
-    "events_dow_profile",
-    _with(
-        # dow 0 = Monday via day-count arithmetic from a known Monday —
-        # the engines' native dayofweek() disagree on the start-of-week
-        # convention (Spark 1=Sunday, DuckDB 0=Sunday), day arithmetic
-        # does not
-        "e AS (SELECT datediff('day', DATE '1970-01-05', "
-        "CAST(ts AS DATE)) % 7 AS dow, "
-        "CAST(EXTRACT(HOUR FROM ts) AS BIGINT) AS hr FROM events)",
-        "c AS (SELECT CAST(dow AS BIGINT) AS dow, hr, "
-        "CAST(COUNT(*) AS BIGINT) AS n FROM e GROUP BY 1, 2)",
-        "t AS (SELECT dow, n, hr, CAST(SUM(n) OVER (PARTITION BY dow) "
-        "AS BIGINT) AS dow_total, ROW_NUMBER() OVER (PARTITION BY dow "
-        "ORDER BY n DESC, hr ASC) AS pk FROM c)",
-    )
-    + "SELECT dow, hr, n, dow_total, "
-    "ROUND(CAST(n AS DOUBLE) / CAST(dow_total AS DOUBLE), 6) AS "
-    "hour_share, CASE WHEN pk = 1 THEN 1 ELSE 0 END AS is_peak "
-    "FROM t",
-)
-def q_events_dow_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Day-of-week x hour-of-day load profile with the peak hour per
-    day — the basic traffic shape every capacity plan starts from
-    (the traffic family's missing first chart beside autocorr's
-    periodicity, fano's dispersion, cusum's level shifts): per (dow,
-    hour) counts, each hour's share of its day, and a deterministic
-    peak flag (count DESC, hour ASC — ties resolve to the earlier
-    hour).
-
-    Exactness: dow 0 = Monday comes from day-count arithmetic against
-    a known Monday — the engines' NATIVE dayofweek() disagree on the
-    start-of-week convention (Spark 1=Sunday, DuckDB 0=Sunday), day
-    differences do not; counts are integers, the share ONE division
-    ROUND(,6), the peak a ROW_NUMBER total order.
-
-    Scale shape: one map-side fold to <= 168 (dow, hour) rows; both
-    windows run over that census."""
-    from pyspark.sql import Window
-
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    c = (
-        ev.select(
-            # Spark datediff(end, start); dates post-1970 keep % >= 0
-            F.expr(
-                "datediff(CAST(ts AS DATE), DATE '1970-01-05') % 7"
-            ).cast("long").alias("dow"),
-            F.expr("EXTRACT(HOUR FROM ts)").cast("long").alias("hr"),
-        )
-        .groupBy("dow", "hr")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-    t = c.select(
-        "dow",
-        "hr",
-        "n",
-        F.sum("n").over(Window.partitionBy("dow")).cast("long")
-        .alias("dow_total"),
-        F.row_number().over(
-            Window.partitionBy("dow").orderBy(
-                F.col("n").desc(), F.col("hr").asc()
-            )
-        ).alias("pk"),
-    )
-    return t.selectExpr(
-        "dow",
-        "hr",
-        "n",
-        "dow_total",
-        "ROUND(CAST(n AS DOUBLE) / CAST(dow_total AS DOUBLE), 6) AS "
-        "hour_share",
-        "CASE WHEN pk = 1 THEN 1 ELSE 0 END AS is_peak",
-    )
-
-
 # ---------------------------------------------------------------------------
 # registration order
 #
@@ -14494,19 +12140,8 @@ DRIVER_WINDOW: list[str] = [
     "manifest_bbox_scan", "manifest_incremental",
     "pages_geocode",
     "dedup_clusters",
-    # late-r5 rotation IN: the four new subsystems of this round's
-    # continuation sessions (all pre-qualified per the rotation
-    # protocol: sf0.01 + sf0.1 oracle parity, ANSI-on session run,
-    # planted unit tests, plan pins)
     "crawl_latest", "views_asof", "cms_heavy_hitters",
-    # final-r5 rotation IN (continuation session; both pre-qualified per
-    # the protocol: 2-scale parity, ANSI-on run, determinism rerun,
-    # planted tests, plan pins)
     "hll_overlap", "search_results",
-    # round-5 rotation IN (VERDICT r4 "Next round" #1/#2/#3/#7/#9):
-    # the seven ANSI-verified past-window r4 subsystems, the three
-    # rotation-stale §2 operators, the incremental LSH store, streaming
-    # windowed aggregation, and the new IVF+SQ8 composed ANN query
     "manifest_delete_scan", "manifest_bloom_scan", "pip_rtree",
     "hex_ring_density", "decontaminate", "repetition_stats",
     "url_canonicalize",
@@ -14514,174 +12149,6 @@ DRIVER_WINDOW: list[str] = [
     "neardup_incremental", "cosine_topk_ivf_sq8", "events_hourly",
     "fft_parseval",
 ]
-# Round-5 rotation (VERDICT r4 "Next round" #1/#2/#3/#7/#9): thirteen
-# slots whose operators stay exercised by an in-window query rotated
-# OUT for the seven ANSI-verified r4 subsystems, the three
-# rotation-stale §2 operators, and three genuinely-new r5 rows —
-#   IN:  manifest_delete_scan (Iceberg-v2 merge-on-read deletes),
-#        manifest_bloom_scan (bloom point-lookup skipping),
-#        pip_rtree (broadcast STR-packed R-tree PIP strategy),
-#        hex_ring_density (hex encoding + k-ring equi-join),
-#        decontaminate + repetition_stats + url_canonicalize (the three
-#        text-quality subsystems added in r4),
-#        grid_extent (F15) + grid_stats (A4) + detrend_grid (X2) — the
-#        rotation-stale operators, driver-green r1-r3,
-#        neardup_incremental (r5: the persistent-LSH-store protocol,
-#        oracle = the per-batch capped candidate SQL),
-#        cosine_topk_ivf_sq8 (r5: IVF coarse quantizer OVER the SQ8
-#        compressed scan — the composed ANN architecture),
-#        events_hourly (streaming windowed aggregation's batch twin —
-#        past-window since r2, per VERDICT r4 #7),
-#        fft_parseval (late r5: the FFT VALUE oracle — Parseval + DC +
-#        Nyquist pinned trig-free against the detrended tiles; X3's
-#        first driver row ever, closing the carried r3/r4 stretch #8).
-# Late-r5 rotation (continuation sessions): four slots for the four new
-# subsystems — crawl_latest (CDX snapshot consolidation), hll_distinct
-# (HyperLogLog cardinality sketch), views_asof (time-series as-of join),
-# cms_heavy_hitters (count-min frequency sketch).
-# Final-r5 rotation (closing session): one swap —
-#   IN:  dup_spans — maximal duplicated-span detection, the positional
-#        ExactSubstr dedup signal (new this session; pre-qualified per
-#        the protocol: sf0.001/0.01/0.1 oracle parity, ANSI-on run,
-#        determinism rerun, planted run/gap/min-span test).
-#   OUT: tpch_pricing J7 -> plain attribute joins stay witnessed
-#        in-window by network_ksn (edge/node attribute joins),
-#        survivor accounting inside dedup-family rows, and the
-#        manifest scans' stats joins; tpch_pricing driver-green
-#        r1-r4 and oracle-swept every pytest run.  (split_leakage,
-#        the session's second addition, is equally pre-qualified and
-#        sits past-window.)
-# Final-r5 rotation (this session): two swaps —
-#   IN:  hll_overlap — strictly more HLL coverage than hll_distinct in
-#        one row: the SAME register fold twice (both segments), PLUS the
-#        merge law in-driver (harmonic_u hashes the element-wise-max
-#        union sketch), PLUS the inclusion-exclusion estimate;
-#        search_results — the composed search page (BM25 scoring +
-#        top-k cut + KWIC snippets in ONE plan; scores are the solo
-#        stage's exact BIGINTs, snippets the solo stage's strings, so
-#        one row witnesses the whole retrieval family end to end).
-#   OUT: hll_distinct    -> hll_overlap (same fold, same estimate
-#                           spelling, strictly superset coverage);
-#                           driver-green late-r5 gates
-#        flow_d8      G2 -> flow_area + flow_chi + flow_basins all
-#                           consume the D8 directions as the first
-#                           stage of _flow_metrics_raw — a direction
-#                           bug breaks their in-window rows; G4
-#                           (outlets, fd=0 subset) likewise survives
-#                           through the sweeps' outlet seeds;
-#                           flow_d8 driver-green r1-r5
-#   OUT (operator -> surviving window coverage):
-#        flow_order  G6 / flow_maxl G7 / flow_main_path G9 -> all three
-#                        are outputs of the SAME per-basin Arrow sweep
-#                        (_flow_metrics_raw) that stays window-witnessed
-#                        through flow_chi (G5) + flow_area (G3) +
-#                        flow_basins (G8); driver-green r1-r5-so-far,
-#                        oracle-swept every pytest run
-#        simhash_pairs   -> driver-green r4; the banded-pair machinery
-#                        stays witnessed by neardup_incremental +
-#                        dedup_clusters, the one-pass simhash fold by
-#                        the parity sweep
-#   OUT (operator -> surviving window coverage):
-#        pip_pairs        J1  -> pip_rtree (same oracle text, the
-#                                zero-shuffle R-tree strategy) +
-#                                pages_pip + terrain_pipeline
-#        profile_extract  J2  -> profile_peaks (projection + savgol)
-#        minhash_pairs        -> neardup_incremental (same banding,
-#                                per-batch caps) + dedup_clusters
-#                                (jaccard-verified pairs upstream)
-#        manifest_meta_scan   -> manifest_bbox_scan (stats pruning) +
-#                                manifest_bloom_scan (beats-stats) +
-#                                manifest_delete_scan (metadata tier)
-#        hex_pages        F13 -> hex_ring_density's hexed CTE (same
-#                                encoder); quadkeys via pages_geocode
-#        cosine_topk_sq8 + cosine_topk_ivf -> cosine_topk_ivf_sq8
-#                                composes BOTH operators in one row
-#        points_assign    F3  -> terrain ops (driver-green r4)
-#        resample_average K7  -> mosaic_tiles overlap-average
-#        radial_histogram A7/F11, plane_fit X1, reproject_utm F5 ->
-#                                driver-green r1-r4; plane fit survives
-#                                in-window inside detrend_grid (X2 =
-#                                fit minus surface)
-#        sessionize       U4  -> events_hourly keeps streaming
-#                                witnessed; session windows green r1-r4
-#        grid_mean        A2  -> streaming_grid_resume (late-r5 swap):
-#                                the SAME oracle text (GRID_MEAN_CTE),
-#                                so A2 stays witnessed, now through the
-#                                stateful-streaming kill/restart path —
-#                                the one load-bearing streaming
-#                                subsystem that had pytest-only
-#                                evidence (VERDICT r4 #7); grid_mean
-#                                itself driver-green r1-r4
-#        pages_pip        J1  -> (late-r5 swap for fft_parseval)
-#                                pip_rtree carries the identical PIP
-#                                oracle text and terrain_pipeline
-#                                composes PIP; the pages layer stays
-#                                witnessed by extract_pages +
-#                                pages_geocode; pages_pip driver-green
-#                                r4-r5
-# Closing-session rotation (this session): two swaps, both pre-
-# qualified per the protocol (sf0.001/0.01/0.1 oracle parity, ANSI-on
-# session run, determinism rerun, planted tests, plan pins) —
-#   IN:  geomorphons — the 10-class landform map, a genuinely new
-#        terrain subsystem (LCM-integer horizons + form matrix);
-#        hand — height above nearest drainage, the flow family's new
-#        flood-susceptibility member (consumes z + fd + area off the
-#        SAME memoized metrics pass, so it re-witnesses G3's
-#        accumulation alongside flow_chi).
-#   OUT: slope_hillshade -> W1/W2/W5 stay in-window through
-#        terrain_pipeline (composes hillshade + slope_mag +
-#        windowed_std) and stencil_suite's shared tile engine;
-#        driver-green r1-r5
-#        flow_area       -> G3 stays in-window through flow_chi (the
-#        chi integral consumes the area column directly) and hand
-#        (nearest-drainage thresholds on the same area); driver-green
-#        r1-r5
-# This session's other additions are past-window but equally
-# pre-qualified (rotation-ready): zonal_overlay, cosine_topk_pq,
-# cosine_topk_ivf_pq (kept out only because cosine_topk_ivf_sq8
-# holds the composed-ANN slot per the r4 ask), trustrank_hosts,
-# decayed_activity, crawl_schedule (its oracle embeds the full
-# trustrank CTE chain), postings_gaps.
-# All rotated-out queries remain registered and pytest-parity-checked
-# every run (tests/test_query_parity.py sweeps every oracle pair).
-# Remaining past-window oracle-backed extras: cell_rollup,
-# multimodal_meta, events_sliding, grid_count, resample_near,
-# resample_bilinear, reproject_mercator, pip_stats, TPC-H variants,
-# embedding_buckets, lang_dist, cosine_topk_lsh, s2_cell_index,
-# frame_sample, resize_images, manifest_time_scan, manifest_scan,
-# pages_grid, cell_index, cosine_topk, filter_noise, doc_fingerprint,
-# langid, quality_filter, text_stats, dedup_exact, simhash,
-# minhash_buckets, embedding_near_dups, pii_scrub + lang_mix_sample +
-# shingle_dup_stats + vocab_topk + knn_haversine + pages_pipeline +
-# pip_auto + line_dedup + pagerank_hosts + crawl_latest + hll_distinct +
-# views_asof + cms_heavy_hitters + quantile_sketch + bm25_scores +
-# manifest_ndv + kwic_snippets + ccnet_buckets + bpe_pairs +
-# contour_cells + aspect_rose + zipf_slope + hypsometry +
-# grid_mean_salted + pmi_collocations + viewshed + hits_hosts +
-# host_distance + cocitation_hosts + twi + token_entropy +
-# lpa_communities + link_geo_bands + funnel_steps + retention_cohorts +
-# host_triangles + degree_histogram + curvature_classes + tile_pyramid +
-# link_reciprocity + event_transitions + doc_keywords + corpus_rollup +
-# langid_confusion + hotspot_cells + slope_area_fit +
-# crawl_segment_diff + error_bursts + bowtie_components +
-# props_histogram + morans_i + every later r5 addition inventoried in
-# COVERAGE.md (semivariogram through dbscan_grid)
-# (all r5 additions ANSI-verified at sf0.01 —
-# rotation-ready) — plus the r5 OUT list above.
-# Final-stretch additions (this session, past-window, PRE-QUALIFIED
-# per the rotation protocol in one recorded sweep — sf0.001/0.01
-# parity, ANSI-ON sf0.01 parity, sf0.1 cross-scale parity, planted
-# tests, bench series): late_suppliers (the registry's only
-# NOT-EXISTS row), score_auc, segment_psi, lang_budget, search_ndcg,
-# vrm, langid_kappa, score_calibration, vocab_coverage,
-# theil_decomposition, lang_source_mi, benford_digits,
-# basin_drainage, tile_skew, neardup_eval; second wave, same sweep:
-# customer_orders_hist, lang_homophily, openness, ks_lengths,
-# semivariogram_aniso; third wave, same sweep: ann_recall_eval,
-# funnel_latency, heaps_law, traffic_fano, dedup_cluster_sizes;
-# fourth wave, same sweep: hill_tail, langid_margin,
-# resample_error; fifth wave, same sweep: order_census,
-# user_value_concentration, events_dow_profile.
 
 
 def _reorder_registration() -> None:

@@ -409,40 +409,6 @@ def test_shingle_dup_stats_planted(spark):
     assert got[3].dup_ratio == 0.0
 
 
-def test_vocab_topk_rank_and_tiebreak(spark):
-    """Counts, rank order, and the deterministic count-desc/token-asc
-    tie-break on a planted corpus."""
-    from rgr_pdal_topo_spark.queries import QUERIES
-    import os
-    import shutil
-    import tempfile
-
-    d = tempfile.mkdtemp()
-    try:
-        spark.createDataFrame(
-            [
-                (1, "aa bb aa cc", "en", "s", 11),
-                (2, "bb aa dd dd", "en", "s", 11),
-                (3, "xx yy xx", "fr", "s", 8),
-            ],
-            "doc_id long, text string, lang string, source string, "
-            "n_chars long",
-        ).coalesce(1).write.parquet(os.path.join(d, "documents.parquet"))
-        got = [
-            (r.lang, r.rank, r.tok, r.n)
-            for r in QUERIES["vocab_topk"](spark, d)
-            .orderBy("lang", "rank")
-            .collect()
-        ]
-        assert got == [
-            ("en", 1, "aa", 3), ("en", 2, "bb", 2), ("en", 3, "dd", 2),
-            ("en", 4, "cc", 1),
-            ("fr", 1, "xx", 2), ("fr", 2, "yy", 1),
-        ]
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
 def test_line_dedup_planted_boilerplate(spark):
     """A nav-menu line shared by 3 docs is dropped everywhere; a line in
     only 2 docs survives; reassembly preserves original line order and

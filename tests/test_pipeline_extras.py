@@ -564,123 +564,6 @@ def test_ccnet_buckets_matches_ntile_replay(spark):
     assert {b for (_, b) in got} == {1, 2, 3}
 
 
-def test_zipf_slope_python_replay(spark):
-    """Pure-Python replay of the exact OLS contract: q13-pinned ln of
-    rank/count, integer accumulator sums, one final ratio — on a
-    planted corpus with known token frequencies (10/5/2/1 -> a clean
-    descending Zipf profile) plus a single-type language that must be
-    excluded (zero variance)."""
-    import math
-
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    text_a = " ".join(["w0"] * 10 + ["w1"] * 5 + ["w2"] * 2 + ["w3"])
-    rows = [(0, text_a, "aa"), (1, "only only only", "bb")]
-    docs = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string"
-    )
-    import tempfile, os
-    d = tempfile.mkdtemp()
-    docs.write.mode("overwrite").parquet(os.path.join(d, "documents.parquet"))
-
-    got = {r["lang"]: r for r in QUERIES["zipf_slope"](spark, d).collect()}
-    assert set(got) == {"aa"}  # single-type 'bb' excluded
-
-    q = lambda v: math.floor(math.log(float(v)) * 8192 + 0.5)
-    pts = [(q(rank), q(cnt)) for rank, cnt in ((1, 10), (2, 5), (3, 2), (4, 1))]
-    n = len(pts)
-    sx = sum(x for x, _ in pts); sy = sum(y for _, y in pts)
-    sxy = sum(x * y for x, y in pts); sxx = sum(x * x for x, _ in pts)
-    r = got["aa"]
-    assert (r["n_types"], r["sx"], r["sy"], r["sxy"], r["sxx"]) == (
-        n, sx, sy, sxy, sxx
-    )
-    assert r["slope"] == round((n * sxy - sx * sy) / (n * sxx - sx * sx), 6)
-    assert r["slope"] < -0.9  # a real descending profile, near Zipf's -1
-
-
-def test_pmi_collocations_python_replay(spark):
-    """Pure replay of the PMI contract on a planted corpus where one
-    pair ('new york') always co-occurs and one frequent pair ('the a')
-    is independent: the collocation must out-rank the frequent pair,
-    and every pmi_q13 must equal the replayed divide-first spelling."""
-    import math
-    import os
-    import tempfile
-
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    base = "the a " * 10                      # frequent independent pair
-    rows = [(i, (base + "new york " * 3).strip()) for i in range(4)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    d = tempfile.mkdtemp()
-    docs.write.mode("overwrite").parquet(os.path.join(d, "documents.parquet"))
-
-    got = [
-        (r["rank"], r["w1"], r["w2"], r["c12"], r["pmi_q13"])
-        for r in QUERIES["pmi_collocations"](spark, d).orderBy("rank").collect()
-    ]
-
-    toks = [t for _, txt in rows for t in txt.split(" ")]
-    from collections import Counter
-    uni = Counter(toks)
-    bgs = Counter()
-    for _, txt in rows:
-        ts = txt.split(" ")
-        for i in range(len(ts) - 1):
-            bgs[(ts[i], ts[i + 1])] += 1
-    ntok, nbg = len(toks), sum(bgs.values())
-    exp = {}
-    for (w1, w2), c12 in bgs.items():
-        if c12 >= 3:
-            arg = c12 / nbg * (ntok / uni[w1]) * (ntok / uni[w2])
-            exp[(w1, w2)] = (c12, math.floor(math.log(arg) * 8192 + 0.5))
-    for rank, w1, w2, c12, q in got:
-        assert exp[(w1, w2)] == (c12, q)
-    ranks = {(w1, w2): rank for rank, w1, w2, _, _ in got}
-    assert ranks[("new", "york")] < ranks[("the", "a")]
-
-
-def test_token_entropy_python_replay(spark):
-    """Pure-Python replay of the exact entropy contract on a planted
-    two-language corpus: a uniform 4-token language (H = ln 4) and a
-    maximally skewed one (low H), accumulators bit-equal."""
-    import math
-    import os
-    import tempfile
-
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    rows = [
-        (0, "a b c d", "uu"),                    # uniform: H = ln(4)
-        (1, " ".join(["x"] * 9 + ["y"]), "sk"),  # skewed 9/1
-    ]
-    docs = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string"
-    )
-    d = tempfile.mkdtemp()
-    docs.write.mode("overwrite").parquet(
-        os.path.join(d, "documents.parquet")
-    )
-
-    got = {r["lang"]: r for r in QUERIES["token_entropy"](spark, d).collect()}
-    q = lambda v: math.floor(math.log(float(v)) * 8192 + 0.5)
-
-    for lang, counts in (("uu", [1, 1, 1, 1]), ("sk", [9, 1])):
-        n = sum(counts)
-        s_clnc = sum(c * q(c) for c in counts)
-        r = got[lang]
-        assert (r["n_tokens"], r["n_types"], r["s_clnc"], r["ln_n_q"]) == (
-            n, len(counts), s_clnc, q(n)
-        )
-        assert r["entropy_nats"] == round(
-            (q(n) * n - s_clnc) / (8192.0 * n), 6
-        )
-    # semantics: uniform beats skewed, and uniform ~ ln(4)
-    assert abs(got["uu"]["entropy_nats"] - math.log(4)) < 1e-3
-    assert got["sk"]["entropy_nats"] < got["uu"]["entropy_nats"]
-
-
 def test_link_geo_bands_partitions_edges(spark):
     """The band histogram partitions the host-graph edge set exactly:
     SUM(n_links) == |distinct edges|, bands are within 0..3, and
@@ -761,39 +644,6 @@ def test_funnel_steps_planted(spark):
     }
 
 
-def test_retention_cohorts_planted(spark):
-    """Hand-built retention triangle: per-user cohort = first active
-    epoch-day, one row per (cohort, offset) with exact user counts;
-    multiple events on one day collapse."""
-    from datetime import datetime
-
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    def day(n, hour=6):
-        return datetime(2024, 3, 1 + n, hour, 0, 0)
-
-    rows = [
-        # user 1: days 0, 1, 3 (two events on day 0 collapse)
-        (0, day(0), 1, "view", 0.0, "{}"),
-        (1, day(0, 20), 1, "click", 0.0, "{}"),
-        (2, day(1), 1, "view", 0.0, "{}"),
-        (3, day(3), 1, "view", 0.0, "{}"),
-        # user 2: cohort day 1, active days 1 and 2
-        (4, day(1), 2, "view", 0.0, "{}"),
-        (5, day(2), 2, "view", 0.0, "{}"),
-    ]
-    d = _write_events(spark, rows)
-    d0 = int(datetime(2024, 3, 1).timestamp()) // 86400
-    got = {
-        (r.cohort_day, r.day_offset): r.n_users
-        for r in QUERIES["retention_cohorts"](spark, d).collect()
-    }
-    assert got == {
-        (d0, 0): 1, (d0, 1): 1, (d0, 3): 1,
-        (d0 + 1, 0): 1, (d0 + 1, 1): 1,
-    }
-
-
 def test_curvature_classes_census_and_paraboloid(spark):
     """The census partitions the 100x100 universe exactly, classes stay
     in {-1, 0, 1, 9}; and on a pure paraboloid bowl every interior cell
@@ -846,58 +696,6 @@ def test_tile_pyramid_partitions_pages_per_zoom(spark):
         cells[r.zoom] = cells.get(r.zoom, 0) + 1
     assert per_zoom == {5: n, 8: n, 12: n}
     assert cells[5] <= cells[8] <= cells[12]
-
-
-def test_event_transitions_planted(spark):
-    """Known per-user sequences: transitions count consecutive pairs in
-    (ts, event_id) order, same-ts ties break by event_id, first events
-    are excluded, users never mix."""
-    from datetime import datetime, timedelta
-
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    t0 = datetime(2024, 4, 1)
-    rows = [
-        # user 1: view -> click -> view  (same ts on the last two:
-        # event_id orders click(2) before view(3))
-        (1, t0, 1, "view", 0.0, "{}"),
-        (2, t0 + timedelta(minutes=1), 1, "click", 0.0, "{}"),
-        (3, t0 + timedelta(minutes=1), 1, "view", 0.0, "{}"),
-        # user 2: a single event -> contributes nothing
-        (4, t0, 2, "purchase", 0.0, "{}"),
-        # user 3: view -> view
-        (5, t0, 3, "view", 0.0, "{}"),
-        (6, t0 + timedelta(minutes=2), 3, "view", 0.0, "{}"),
-    ]
-    d = _write_events(spark, rows)
-    got = {
-        (r.prev_type, r.next_type): r.n
-        for r in QUERIES["event_transitions"](spark, d).collect()
-    }
-    assert got == {
-        ("view", "click"): 1,
-        ("click", "view"): 1,
-        ("view", "view"): 1,
-    }
-
-
-def test_corpus_rollup_levels_consistent(spark):
-    """The three ROLLUP levels are mutually consistent: per-(lang,
-    shard) rows sum to their lang subtotal, lang subtotals sum to the
-    grand total, and grouping flags identify levels exactly."""
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    rows = QUERIES["corpus_rollup"](spark, "/root/testdata/sf0.001").collect()
-    leaf = [r for r in rows if (r.g_lang, r.g_shard) == (0, 0)]
-    sub = {r.lang: r for r in rows if (r.g_lang, r.g_shard) == (0, 1)}
-    tot = [r for r in rows if (r.g_lang, r.g_shard) == (1, 1)]
-    assert len(tot) == 1 and tot[0].lang == "ALL" and tot[0].shard == -1
-    for lang, s in sub.items():
-        mine = [r for r in leaf if r.lang == lang]
-        assert s.n_docs == sum(r.n_docs for r in mine)
-        assert s.n_tokens == sum(r.n_tokens for r in mine)
-        assert s.n_chars == sum(r.n_chars for r in mine)
-    assert tot[0].n_docs == sum(s.n_docs for s in sub.values()) == 500
 
 
 def test_langid_confusion_planted_matrix(spark):
@@ -985,66 +783,6 @@ def test_crawl_segment_diff_inclusion_exclusion(spark):
     assert r.n_a > r.n_b > 0 and r.n_common > 0
 
 
-def test_error_bursts_planted(spark):
-    """Hand-built hours: exactly the hours above 2x the uniform error
-    expectation are flagged, with exact counts."""
-    from datetime import datetime, timedelta
-
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    t0 = datetime(2024, 5, 1)
-    rows, eid = [], 0
-
-    def ev(hour_i, typ, k):
-        nonlocal eid
-        for j in range(k):
-            rows.append(
-                (eid, t0 + timedelta(hours=hour_i, minutes=j), 1, typ,
-                 0.0, "{}")
-            )
-            eid += 1
-
-    # 4 observed hours; errors: 8, 1, 1, 0 (total 10).  Burst test:
-    # n_err * 4 > 2 * 10  <=>  n_err > 5  -> only hour 0.
-    ev(0, "error", 8); ev(0, "view", 2)
-    ev(1, "error", 1); ev(1, "view", 3)
-    ev(2, "error", 1)
-    ev(3, "view", 5)
-    d = _write_events(spark, rows)
-    got = {
-        r.hour: (r.n_err, r.n_events)
-        for r in QUERIES["error_bursts"](spark, d).collect()
-    }
-    h0 = int(t0.timestamp()) // 3600
-    assert got == {h0: (8, 10)}
-
-
-def test_props_histogram_planted(spark):
-    """Hand events: JSON k extraction, decade bucketing, and the
-    missing-key NULL bucket, with exact sums and extrema."""
-    from datetime import datetime
-
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    t0 = datetime(2024, 6, 1)
-    rows = [
-        (0, t0, 1, "view", 0.0, '{"k": 5}'),
-        (1, t0, 1, "view", 0.0, '{"k": 9}'),
-        (2, t0, 1, "view", 0.0, '{"k": 17}'),
-        (3, t0, 1, "click", 0.0, '{"other": 1}'),  # no k -> NULL bucket
-    ]
-    d = _write_events(spark, rows)
-    got = {
-        (r.event_type, r.k_bucket): (r.n, r.sum_k, r.min_k, r.max_k)
-        for r in QUERIES["props_histogram"](spark, d).collect()
-    }
-    assert got == {
-        ("view", 0): (2, 14, 5, 9),
-        ("view", 1): (1, 17, 17, 17),
-        ("click", None): (1, None, None, None),
-    }
-
-
 def test_morans_i_checkerboard_vs_plane(spark):
     """Sign semantics of the Moran chain (same spelling the query
     uses): a checkerboard is strongly negative, a smooth gradient
@@ -1086,53 +824,6 @@ def test_morans_i_checkerboard_vs_plane(spark):
     plane = np.arange(64).reshape(8, 8) * 10
     assert moran(checker) < -0.9
     assert moran(plane) > 0.8
-
-
-def test_cusum_prefix_identity_matches_direct_recurrence(spark, tmp_path):
-    """The windowed spelling S_t = P_t - min(0, min_{j<=t} P_j) must
-    equal the direct non-associative recurrence S_t = max(0, S_{t-1} +
-    x_t - k) on a crafted series that exercises a rise, a RESET to
-    zero, and a second rise — the identity is the whole point of the
-    query, so it is pinned against the imperative loop."""
-    import datetime as dt
-
-    # hourly error counts: k will be ceil(16/8) = 2
-    xs = [1, 5, 0, 0, 0, 4, 6, 0]  # total 16 over 8 hours
-    rows = []
-    eid = 0
-    t0 = dt.datetime(2024, 3, 1, 0, 0, 0)
-    for h, x in enumerate(xs):
-        # one non-error event pins every hour into the spine bounds
-        rows.append((eid, t0 + dt.timedelta(hours=h), 1, "view", 0.0, "{}"))
-        eid += 1
-        for _ in range(x):
-            rows.append(
-                (eid, t0 + dt.timedelta(hours=h, minutes=5), 1, "error",
-                 0.0, "{}")
-            )
-            eid += 1
-    spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string",
-    ).coalesce(1).write.parquet(str(tmp_path / "events.parquet"))
-
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    got = {
-        r["hr"].hour: (r["x"], r["s"])
-        for r in QUERIES["cusum_alarms"](spark, str(tmp_path)).collect()
-    }
-    # direct recurrence with k = 2
-    k, s, exp = 2, 0, {}
-    for h, x in enumerate(xs):
-        s = max(0, s + x - k)
-        if s > 0:
-            exp[h] = (x, s)
-    assert got == exp
-    # the crafted series really resets (hour 4 has S == 0 again) and
-    # re-rises — otherwise this pins nothing
-    assert 1 in exp and 4 not in exp and 6 in exp
 
 
 def test_geary_c_checkerboard_vs_plane(spark):
@@ -1294,225 +985,6 @@ def test_robust_outliers_planted(spark, tmp_path):
         "aa": (5, 7.0, 2.0, 1),
         "bb": (4, 5.0, 2.0, 0),
     }
-
-
-def test_small_qty_revenue_boundary_and_cents(spark):
-    """Planted part with quantities [1, 2, 10, 17, 20] (avg 10): the
-    20% gate is STRICT (10*qty*cnt < 2*sumq), so qty 2 == 0.2*avg is
-    excluded and only qty 1 survives; its price 10.005 pins the
-    half-up cent quantization (-> 1001 cents)."""
-    import pandas as pd
-
-    from rgr_pdal_topo_spark.queries import QUERIES, _Q17_BRAND
-
-    li = pd.DataFrame(
-        {
-            "l_partkey": [7] * 5,
-            "l_quantity": [1.0, 2.0, 10.0, 17.0, 20.0],
-            "l_extendedprice": [10.005, 5.0, 5.0, 5.0, 5.0],
-        }
-    )
-    pt = pd.DataFrame({"p_partkey": [7], "p_brand": [_Q17_BRAND]})
-    import os
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as d:
-        li.to_parquet(os.path.join(d, "lineitem.parquet"))
-        pt.to_parquet(os.path.join(d, "part.parquet"))
-        [r] = QUERIES["small_qty_revenue"](spark, d).collect()
-    assert (r["n_small"], r["revenue_cents"]) == (1, 1001)
-    assert r["avg_yearly"] == round(1001 / 700.0, 4)
-
-
-def test_chi2_independence_exact_endpoints(spark):
-    """The two analytic endpoints are EXACT: a perfectly uniform 2x2
-    table gives chi2_q == 0 and V == 0; a perfectly diagonal one gives
-    chi2 == N and V == 1.0 (every term integer, the q13 pin is a
-    no-op)."""
-    import os
-    import tempfile
-
-    import pandas as pd
-
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    def run(rows):
-        df = pd.DataFrame(
-            {
-                "doc_id": range(len(rows)),
-                "text": ["x"] * len(rows),
-                "lang": [r[0] for r in rows],
-                "source": [r[1] for r in rows],
-                "n_chars": [1] * len(rows),
-            }
-        )
-        with tempfile.TemporaryDirectory() as d:
-            df.to_parquet(os.path.join(d, "documents.parquet"))
-            [r] = QUERIES["chi2_independence"](spark, d).collect()
-        return r
-
-    uni = run(
-        [("en", "s0")] * 5 + [("en", "s1")] * 5
-        + [("de", "s0")] * 5 + [("de", "s1")] * 5
-    )
-    assert (uni["chi2_q"], uni["chi2"], uni["cramers_v"]) == (0, 0.0, 0.0)
-    assert uni["dof"] == 1
-    diag = run([("en", "s0")] * 10 + [("de", "s1")] * 10)
-    assert diag["chi2"] == 20.0 and diag["n"] == 20
-    assert diag["cramers_v"] == 1.0
-
-
-def test_late_suppliers_planted(spark):
-    """Planted Q21 semantics: supplier 1 is the LONE late supplier of
-    multi-supplier order 1 (counts), order 2 has TWO late suppliers
-    (anti-join drops both), order 3 is single-supplier (semi-join
-    drops it), supplier 3 lone-late in order 4 (counts).  Exactly-90
-    days is NOT late (strict >): order 5 pins the boundary."""
-    import os
-    import tempfile
-
-    import pandas as pd
-
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    t0 = pd.Timestamp("1995-01-01")
-    day = pd.Timedelta(days=1)
-    rows = [  # (orderkey, suppkey, ship_offset_days)
-        (1, 1, 120), (1, 2, 10),
-        (2, 1, 120), (2, 2, 120),
-        (3, 1, 120),
-        (4, 2, 10), (4, 3, 200),
-        (5, 1, 90), (5, 2, 10),  # == 90 days: on time
-    ]
-    li = pd.DataFrame(
-        {
-            "l_orderkey": [r[0] for r in rows],
-            "l_suppkey": [r[1] for r in rows],
-            "l_shipdate": [t0 + r[2] * day for r in rows],
-        }
-    ).astype({"l_shipdate": "datetime64[us]"})  # Spark rejects NANOS
-    orders = pd.DataFrame(
-        {"o_orderkey": [1, 2, 3, 4, 5], "o_orderdate": [t0] * 5}
-    ).astype({"o_orderdate": "datetime64[us]"})
-    supp = pd.DataFrame(
-        {"s_suppkey": [1, 2, 3], "s_name": ["S1", "S2", "S3"]}
-    )
-    with tempfile.TemporaryDirectory() as d:
-        li.to_parquet(os.path.join(d, "lineitem.parquet"))
-        orders.to_parquet(os.path.join(d, "orders.parquet"))
-        supp.to_parquet(os.path.join(d, "supplier.parquet"))
-        got = {
-            r["s_name"]: r["numwait"]
-            for r in QUERIES["late_suppliers"](spark, d).collect()
-        }
-    assert got == {"S1": 1, "S3": 1}
-
-
-def test_score_auc_exact_endpoints(spark):
-    """AUC analytic endpoints are EXACT: perfectly separating scores
-    give 1.0 (gini 1.0), perfectly reversed give 0.0, and all-tied
-    scores give exactly 0.5 (the half-credit tie term) — every u2 an
-    integer, the q13 pin a no-op on integer-valued components."""
-    import os
-    import tempfile
-
-    import pandas as pd
-
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    def run(scores, labels):
-        df = pd.DataFrame(
-            {
-                "vec_id": range(len(scores)),
-                "embedding": [[float(s), 0.0] for s in scores],
-                "label": labels,
-            }
-        )
-        with tempfile.TemporaryDirectory() as d:
-            df.to_parquet(os.path.join(d, "embeddings.parquet"))
-            [r] = QUERIES["score_auc"](spark, d).collect()
-        return r
-
-    # positives (odd labels) all score 1.0, negatives all 0.0
-    sep = run([1.0, 1.0, 0.0, 0.0], [1, 3, 0, 2])
-    assert (sep["auc"], sep["gini"]) == (1.0, 1.0)
-    assert (sep["n_pos"], sep["n_neg"], sep["u2"]) == (2, 2, 8)
-    rev = run([0.0, 0.0, 1.0, 1.0], [1, 3, 0, 2])
-    assert (rev["auc"], rev["gini"]) == (0.0, -1.0)
-    tie = run([0.5, 0.5, 0.5, 0.5], [1, 3, 0, 2])
-    assert (tie["auc"], tie["u2"]) == (0.5, 4)
-
-
-def test_segment_psi_exact_endpoints(spark):
-    """Identical segments give per-bin and total PSI EXACTLY 0 (the
-    ca*nb - cb*na factor vanishes); the analytic 2-lang flip case
-    gives psi_total == the q13-pinned spelling of 2 * 0.5 * ln 3
-    (= 144000 / 131072 rounded) — every accumulator integer."""
-    import os
-    import tempfile
-
-    import pandas as pd
-
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    def run(doc_ids, langs):
-        df = pd.DataFrame(
-            {
-                "doc_id": doc_ids,
-                "text": ["x"] * len(doc_ids),
-                "lang": langs,
-                "source": ["s"] * len(doc_ids),
-                "n_chars": [1] * len(doc_ids),
-            }
-        )
-        with tempfile.TemporaryDirectory() as d:
-            df.to_parquet(os.path.join(d, "documents.parquet"))
-            return QUERIES["segment_psi"](spark, d).collect()
-
-    same = run([0, 1, 2, 3], ["en", "en", "de", "de"])
-    assert all(r["psi_term"] == 0.0 and r["psi_total"] == 0.0 for r in same)
-    # even docs all 'en', odd docs all 'de': ca'=(3,1), cb'=(1,3)
-    flip = {r["lang"]: r for r in run([0, 2, 1, 3], ["en", "en", "de", "de"])}
-    assert flip["en"]["psi_term"] == round(8 * 9000 / (16 * 8192.0), 6)
-    assert flip["en"]["psi_total"] == round(144000 / 131072.0, 6)
-    assert flip["de"]["psi_term"] == flip["en"]["psi_term"]
-
-
-def test_lang_budget_waterfilling_planted(spark):
-    """Hand-computed waterfilling: token counts (2, 4, 100), budget
-    53 -> the two small languages are capped at their full epoch
-    (2, 4) and the head language gets the exact remainder 47.0; equal
-    counts (4, 4), budget 4 -> nobody capped, uniform split 2.0."""
-    import os
-    import tempfile
-
-    import pandas as pd
-
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    def run(counts):
-        df = pd.DataFrame(
-            {
-                "doc_id": range(len(counts)),
-                "text": [" ".join(["t"] * n) for n in counts.values()],
-                "lang": list(counts),
-                "source": ["s"] * len(counts),
-                "n_chars": [1] * len(counts),
-            }
-        )
-        with tempfile.TemporaryDirectory() as d:
-            df.to_parquet(os.path.join(d, "documents.parquet"))
-            return {
-                r["lang"]: r
-                for r in QUERIES["lang_budget"](spark, d).collect()
-            }
-
-    got = run({"aa": 2, "bb": 4, "en": 100})
-    assert (got["aa"]["capped"], got["aa"]["alloc"]) == (1, 2.0)
-    assert (got["bb"]["capped"], got["bb"]["alloc"]) == (1, 4.0)
-    assert (got["en"]["capped"], got["en"]["alloc"]) == (0, 47.0)
-    eq = run({"aa": 4, "bb": 4})
-    assert all(r["capped"] == 0 and r["alloc"] == 2.0 for r in eq.values())
 
 
 def test_search_ndcg_equal_grades_exact_one(spark):
@@ -1694,241 +1166,6 @@ def test_langid_kappa_exact_endpoints(spark):
     assert (constant["accuracy"], constant["kappa"]) == (0.5, 0.0)
 
 
-def test_score_calibration_exact_endpoints(spark):
-    """A perfectly calibrated bin (score 0.5, half positive) has
-    ece_term EXACTLY 0; an anti-calibrated one (score 1.0, zero
-    positives) contributes its full bin mass; negative scores clip
-    into bin 0."""
-    import os
-    import tempfile
-
-    import pandas as pd
-
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    def run(scores, labels):
-        df = pd.DataFrame(
-            {
-                "vec_id": range(len(scores)),
-                "embedding": [[float(s), 0.0] for s in scores],
-                "label": labels,
-            }
-        )
-        with tempfile.TemporaryDirectory() as d:
-            df.to_parquet(os.path.join(d, "embeddings.parquet"))
-            return {
-                r["bin"]: r
-                for r in QUERIES["score_calibration"](spark, d).collect()
-            }
-
-    # bin 5: two docs at 0.5, one positive -> acc == conf == 0.5
-    # bin 9: two docs at 1.0, zero positive -> gap = 2*8192
-    # bin 0: one negative-score doc, clipped, not positive -> gap 0
-    got = run([0.5, 0.5, 1.0, 1.0, -0.7], [1, 0, 0, 2, 0])
-    assert got[5]["ece_term"] == 0.0
-    assert (got[5]["acc"], got[5]["conf"]) == (0.5, 0.5)
-    assert got[9]["ece_term"] == round(2 * 8192 / (5 * 8192.0), 6)
-    assert got[0]["s_b"] == 0 and got[0]["ece_term"] == 0.0
-    assert all(
-        r["ece_total"] == round(2 * 8192 / (5 * 8192.0), 6)
-        for r in got.values()
-    )
-
-
-def test_vocab_coverage_planted(spark):
-    """Hand-computed curve: counts (a:5, b:3, c:1, d:1) -> top-10
-    covers everything (vocab smaller than k, n_vocab_used clamps to 4,
-    coverage exactly 1.0); a 12-type corpus pins the rank-10 cut:
-    top-10 of twelve singleton-heavy types covers 20/22."""
-    import os
-    import tempfile
-
-    import pandas as pd
-
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    def run(text_rows):
-        df = pd.DataFrame(
-            {
-                "doc_id": range(len(text_rows)),
-                "text": text_rows,
-                "lang": ["en"] * len(text_rows),
-                "source": ["s"] * len(text_rows),
-                "n_chars": [1] * len(text_rows),
-            }
-        )
-        with tempfile.TemporaryDirectory() as d:
-            df.to_parquet(os.path.join(d, "documents.parquet"))
-            return {
-                r["k"]: r
-                for r in QUERIES["vocab_coverage"](spark, d).collect()
-            }
-
-    small = run(["a a a a a", "b b b c d"])
-    assert small[10]["n_vocab_used"] == 4
-    assert small[10]["coverage"] == 1.0
-    assert small[10]["n_tokens_covered"] == 10
-
-    # 12 types: 'x' * 6, 'y' * 5, ten singletons t0..t9
-    big = run(["x x x x x x y y y y y", " ".join(f"t{i}" for i in range(10))])
-    r10 = big[10]
-    assert r10["n_vocab_used"] == 10 and r10["n_vocab"] == 12
-    # top-10 = x(6) + y(5) + 8 singletons (t0..t7 by text order) = 19
-    assert r10["n_tokens_covered"] == 19
-    assert r10["coverage"] == round(19 / 21.0, 6)
-    assert big[100]["coverage"] == 1.0
-
-
-def test_theil_decomposition_planted(spark):
-    """Equal lengths give near-zero indices (within the q13 ln-pin
-    residue, NOT exact: lq(7)+lq(4)-lq(28) = 1, not 0); a segregated
-    corpus puts the inequality in the between term; and acc_t / acc_b
-    match an independent numpy recomputation of the pinned chain
-    bit-for-bit (so the identity acc_w = acc_t - acc_b is exact by
-    construction)."""
-    import math
-    import os
-    import tempfile
-
-    import pandas as pd
-
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    def run(sources, lens):
-        df = pd.DataFrame(
-            {
-                "doc_id": range(len(lens)),
-                "text": ["x"] * len(lens),
-                "lang": ["en"] * len(lens),
-                "source": sources,
-                "n_chars": lens,
-            }
-        )
-        with tempfile.TemporaryDirectory() as d:
-            df.to_parquet(os.path.join(d, "documents.parquet"))
-            [r] = QUERIES["theil_decomposition"](spark, d).collect()
-        return r
-
-    def lq(x):
-        return math.floor(math.log(x) * 8192 + 0.5)
-
-    def expected(sources, lens):
-        n, s = len(lens), sum(lens)
-        acc_t = sum(x * (lq(x) + lq(n) - lq(s)) for x in lens)
-        groups = {}
-        for g, x in zip(sources, lens):
-            sg, ng = groups.get(g, (0, 0))
-            groups[g] = (sg + x, ng + 1)
-        acc_b = sum(
-            sg * (lq(sg) + lq(n) - lq(s) - lq(ng))
-            for sg, ng in groups.values()
-        )
-        return acc_t, acc_b
-
-    flat = run(["a", "a", "b", "b"], [7, 7, 7, 7])
-    assert (flat["acc_t"], flat["acc_b"]) == expected(
-        ["a", "a", "b", "b"], [7, 7, 7, 7]
-    )
-    assert abs(flat["theil_total"]) < 3e-4
-    assert abs(flat["theil_within"]) < 3e-4
-
-    seg = run(["a", "a", "b", "b"], [2, 2, 8, 8])
-    assert (seg["acc_t"], seg["acc_b"]) == expected(
-        ["a", "a", "b", "b"], [2, 2, 8, 8]
-    )
-    assert seg["theil_between"] > 0.1
-    assert abs(seg["theil_within"]) < 3e-4
-    assert seg["theil_within"] == round(
-        (seg["acc_t"] - seg["acc_b"]) / (seg["s"] * 8192.0), 6
-    )
-
-
-def test_lang_source_mi_exact_endpoints(spark):
-    """Independence (uniform 2x2): MI is zero in the reals; the lq
-    pins cancel only up to rounding, so assert the near-zero bound.
-    Diagonal table: n_ij == r_i == c_j makes the MI bracket equal the
-    entropy bracket TERM-BY-TERM, so acc_mi == acc_hl == acc_hs as
-    exact integers and NMI is exactly 1.0."""
-    import os
-    import tempfile
-
-    import pandas as pd
-
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    def run(rows):
-        df = pd.DataFrame(
-            {
-                "doc_id": range(len(rows)),
-                "text": ["x"] * len(rows),
-                "lang": [r[0] for r in rows],
-                "source": [r[1] for r in rows],
-                "n_chars": [1] * len(rows),
-            }
-        )
-        with tempfile.TemporaryDirectory() as d:
-            df.to_parquet(os.path.join(d, "documents.parquet"))
-            [r] = QUERIES["lang_source_mi"](spark, d).collect()
-        return r
-
-    uni = run(
-        [("en", "s0")] * 5 + [("en", "s1")] * 5
-        + [("de", "s0")] * 5 + [("de", "s1")] * 5
-    )
-    assert abs(uni["mi_nats"]) < 3e-4
-    diag = run([("en", "s0")] * 10 + [("de", "s1")] * 10)
-    # diagonal: n_ij == r_i == c_j, so the MI bracket equals the
-    # entropy bracket TERM-BY-TERM -> exact integer equality
-    assert diag["acc_mi"] == diag["acc_hl"] == diag["acc_hs"]
-    assert diag["nmi"] == 1.0
-    assert diag["mi_nats"] == diag["h_lang"]
-
-
-def test_benford_digits_planted(spark):
-    """A perfect-Benford-shaped planted set (counts proportional to
-    the pinned expected brackets, total = lq(10)) gives tvd_total
-    EXACTLY 0; an all-9s corpus concentrates mass on one digit and its
-    TV distance is hand-computable from the pinned brackets."""
-    import math
-    import os
-    import tempfile
-
-    import pandas as pd
-
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    def lq(x):
-        return math.floor(math.log(x) * 8192 + 0.5)
-
-    def run(prices):
-        df = pd.DataFrame(
-            {
-                "o_orderkey": range(len(prices)),
-                "o_totalprice": prices,
-            }
-        )
-        with tempfile.TemporaryDirectory() as d:
-            df.to_parquet(os.path.join(d, "orders.parquet"))
-            return {
-                r["digit"]: r
-                for r in QUERIES["benford_digits"](spark, d).collect()
-            }
-
-    # counts exactly lq(d+1)-lq(d) per digit -> N = lq(10) and every
-    # deviation term is |c_d*lq10 - lq10*c_d| = 0
-    prices = []
-    for d in range(1, 10):
-        prices += [d * 1.0] * (lq(d + 1) - lq(d))
-    got = run(prices)
-    assert all(r["tvd_total"] == 0.0 for r in got.values())
-    assert got[1]["n_d"] == lq(2) - lq(1)
-
-    nines = run([9.0] * 4)
-    # TVD = 0.5 * (sum_{d<9} exp_d + (1 - exp_9)) = 1 - exp_9
-    exp9 = (lq(10) - lq(9)) / lq(10)
-    assert nines[9]["tvd_total"] == round(1.0 - exp9, 6)
-
-
 def test_tile_skew_planted(spark):
     """Uniform layout (equal count per tile) gives max_over_mean
     EXACTLY 1.0 and gini EXACTLY 0.0; the (1, 1, 98) concentration
@@ -1954,31 +1191,6 @@ def test_tile_skew_planted(spark):
     # gini = (2*(1+2+294) - 4*100) / (3*100) = 194/300
     assert conc["gini"] == round(194 / 300.0, 6)
     assert conc["top1_share"] == 0.98
-
-
-def test_customer_orders_hist_zero_bucket(spark):
-    """The zero-order customer survives the left join into the
-    c_count = 0 bucket (inner-joining drops it — the Q13 lesson);
-    counts are exact."""
-    import os
-    import tempfile
-
-    import pandas as pd
-
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    cust = pd.DataFrame({"c_custkey": [1, 2, 3]})
-    orders = pd.DataFrame(
-        {"o_orderkey": [10, 11, 12], "o_custkey": [1, 1, 2]}
-    )
-    with tempfile.TemporaryDirectory() as d:
-        cust.to_parquet(os.path.join(d, "customer.parquet"))
-        orders.to_parquet(os.path.join(d, "orders.parquet"))
-        got = {
-            r["c_count"]: r["custdist"]
-            for r in QUERIES["customer_orders_hist"](spark, d).collect()
-        }
-    assert got == {0: 1, 1: 1, 2: 1}
 
 
 def test_openness_analytic_endpoints(spark):
@@ -2016,46 +1228,6 @@ def test_openness_analytic_endpoints(spark):
         lambda r, c: (5 << 20) + ((10 << 20) if (r, c) == (9, 9) else 0)
     )
     assert peak[(9, 9)]["horizon_tan"] < -0.1
-
-
-def test_ks_lengths_exact_endpoints(spark):
-    """Identical segment distributions give D EXACTLY 0; fully
-    separated supports give D EXACTLY 1.0; the half-shifted case
-    matches the hand-computed supremum."""
-    import os
-    import tempfile
-
-    import pandas as pd
-
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    def run(lens_even, lens_odd):
-        ids = [2 * i for i in range(len(lens_even))] + [
-            2 * i + 1 for i in range(len(lens_odd))
-        ]
-        lens = lens_even + lens_odd
-        df = pd.DataFrame(
-            {
-                "doc_id": ids,
-                "text": ["x"] * len(ids),
-                "lang": ["en"] * len(ids),
-                "source": ["s"] * len(ids),
-                "n_chars": lens,
-            }
-        )
-        with tempfile.TemporaryDirectory() as d:
-            df.to_parquet(os.path.join(d, "documents.parquet"))
-            [r] = QUERIES["ks_lengths"](spark, d).collect()
-        return r
-
-    same = run([3, 5, 7], [3, 5, 7])
-    assert (same["dnum"], same["ks_d"]) == (0, 0.0)
-    sep = run([1, 2, 3], [10, 20, 30])
-    assert sep["ks_d"] == 1.0
-    # A = {1, 2}, B = {2, 3}: at x=1 |1*2-0| = 2, x=2 |2*2-1*2| = 2,
-    # x=3 |4-4| = 0 -> D = 2/4 = 0.5
-    half = run([1, 2], [2, 3])
-    assert (half["dnum"], half["ks_d"]) == (2, 0.5)
 
 
 def test_semivariogram_aniso_striped_fabric(spark):
@@ -2131,105 +1303,6 @@ def test_funnel_latency_planted(spark):
     assert r["mean_s"] == 15.0
 
 
-def test_heaps_law_pure_power_exact(spark):
-    """A corpus built so ctok(rn) = rn^2 and ctyp(rn) = rn + 1 (the
-    rn named types plus the shared filler type) fits beta ~ 0.5; the
-    accumulators are pinned bit-for-bit against an independent python
-    recomputation."""
-    import math
-    import os
-    import tempfile
-
-    import pandas as pd
-
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    # doc k (0-based): tokens = 2k+1 total; exactly 1 new type, the
-    # rest repeats of type 't0' -> ctok(k) = (k+1)^2? sum(2i+1) =
-    # (k+1)^2 yes; ctyp(k) = k+1 -> V = sqrt(ctok): beta = 0.5
-    texts = []
-    for k in range(20):
-        toks = [f"n{k}"] + ["t0"] * (2 * k)
-        texts.append(" ".join(toks))
-    df = pd.DataFrame(
-        {
-            "doc_id": range(20),
-            "text": texts,
-            "lang": ["en"] * 20,
-            "source": ["s"] * 20,
-            "n_chars": [1] * 20,
-        }
-    )
-    with tempfile.TemporaryDirectory() as d:
-        df.to_parquet(os.path.join(d, "documents.parquet"))
-        [r] = QUERIES["heaps_law"](spark, d).collect()
-
-    # independent recomputation with the same pin
-    def lq(v):
-        return math.floor(math.log(v) * 8192 + 0.5)
-
-    pts = []
-    stride = max(20 // 10, 1)
-    for rn in range(1, 21):
-        if rn % stride == 0 or rn == 20:
-            # rn docs: types n0..n_{rn-1} plus t0 (first at doc 1)
-            ctok, ctyp = rn * rn, rn + (1 if rn >= 2 else 0)
-            pts.append((lq(ctok), lq(ctyp)))
-    np_, sx = len(pts), sum(x for x, _ in pts)
-    sy = sum(y for _, y in pts)
-    sxy = sum(x * y for x, y in pts)
-    sxx = sum(x * x for x, _ in pts)
-    beta = round((np_ * sxy - sx * sy) / (np_ * sxx - sx * sx), 6)
-    assert (r["np"], r["sx"], r["sy"], r["sxy"], r["sxx"]) == (
-        np_, sx, sy, sxy, sxx
-    )
-    assert r["heaps_beta"] == beta
-    assert 0.35 < beta < 0.55  # sub-linear growth, ~sqrt
-
-
-def test_traffic_fano_exact_endpoints(spark):
-    """One event per hour for H hours gives fano EXACTLY 0 (clock-
-    regular); all k events in one hour of an H-hour span gives the
-    hand value k(H-1)/H; empty hours are counted via the span, not
-    materialized."""
-    import os
-    import tempfile
-
-    import pandas as pd
-
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    t0 = pd.Timestamp("2024-03-01 00:30:00")
-    h = pd.Timedelta(hours=1)
-
-    def run(rows):
-        ev = pd.DataFrame(
-            rows,
-            columns=[
-                "event_id", "ts", "user_id", "event_type", "value", "props",
-            ],
-        ).astype({"ts": "datetime64[us]"})
-        with tempfile.TemporaryDirectory() as d:
-            ev.to_parquet(os.path.join(d, "events.parquet"))
-            return {
-                r["event_type"]: r
-                for r in QUERIES["traffic_fano"](spark, d).collect()
-            }
-
-    # regular: one 'a' event in each of 6 hours -> fano 0
-    reg = run([(i, t0 + i * h, 1, "a", 1.0, "{}") for i in range(6)])
-    assert (reg["a"]["n_hours"], reg["a"]["fano"]) == (6, 0.0)
-
-    # burst: 4 'b' events in hour 0, span fixed to 6 hours by one 'a'
-    # at each end
-    rows = [(0, t0, 9, "a", 1.0, "{}"), (1, t0 + 5 * h, 9, "a", 1.0, "{}")]
-    rows += [(10 + i, t0, 1, "b", 1.0, "{}") for i in range(4)]
-    burst = run(rows)
-    assert burst["b"]["n_hours"] == 6
-    # fano = (6*16 - 16) / (6*4) = 80/24
-    assert burst["b"]["fano"] == round(80 / 24.0, 6)
-
-
 def test_langid_margin_planted(spark):
     """Hand-built margins: a doc with 3 'the' + 1 'der' has margin 2
     and is correct for lang=en; a doc tying en and de at 2-2 has
@@ -2301,77 +1374,3 @@ def test_resample_error_analytic(spark):
     pb = run([(0, 0, 0), (0, 1, 0), (1, 0, 3 * 8192)])
     eqs = [-3 * 8192, -3 * 8192, 6 * 8192]
     assert pb["sse144"] == sum(e * e * 16 for e in eqs)
-
-
-def test_user_value_concentration_planted(spark):
-    """Ten users with values 10..1 dollars: top-1% is ceil(0.1) = 1
-    user (1000 of 5500 cents), top-50% is 5 users (4000 of 5500);
-    the integer ceil spelling picks exactly these ranks."""
-    import os
-    import tempfile
-
-    import pandas as pd
-
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    ev = pd.DataFrame(
-        {
-            "event_id": range(10),
-            "ts": [pd.Timestamp("2024-01-01")] * 10,
-            "user_id": range(10),
-            "event_type": ["purchase"] * 10,
-            "value": [float(10 - i) for i in range(10)],
-            "props": ["{}"] * 10,
-        }
-    ).astype({"ts": "datetime64[us]"})
-    with tempfile.TemporaryDirectory() as d:
-        ev.to_parquet(os.path.join(d, "events.parquet"))
-        got = {
-            r["pct"]: r
-            for r in QUERIES["user_value_concentration"](spark, d).collect()
-        }
-    assert (got[1]["n_top_users"], got[1]["top_cents"]) == (1, 1000)
-    assert got[1]["value_share"] == round(1000 / 5500.0, 6)
-    assert (got[50]["n_top_users"], got[50]["top_cents"]) == (5, 4000)
-    assert got[50]["value_share"] == round(4000 / 5500.0, 6)
-    assert got[10]["n_top_users"] == 1 and got[20]["n_top_users"] == 2
-
-
-def test_events_dow_profile_planted(spark):
-    """2024-01-01 was a Monday -> dow 0 by the day-count spelling; a
-    planted Monday with 3 events at 09h and 1 at 17h gives the peak
-    at 09 with share 0.75; a peak TIE resolves to the earlier hour."""
-    import os
-    import tempfile
-
-    import pandas as pd
-
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    def run(stamps):
-        ev = pd.DataFrame(
-            {
-                "event_id": range(len(stamps)),
-                "ts": stamps,
-                "user_id": [1] * len(stamps),
-                "event_type": ["view"] * len(stamps),
-                "value": [1.0] * len(stamps),
-                "props": ["{}"] * len(stamps),
-            }
-        ).astype({"ts": "datetime64[us]"})
-        with tempfile.TemporaryDirectory() as d:
-            ev.to_parquet(os.path.join(d, "events.parquet"))
-            return QUERIES["events_dow_profile"](spark, d).collect()
-
-    mon9 = pd.Timestamp("2024-01-01 09:15:00")
-    mon17 = pd.Timestamp("2024-01-01 17:45:00")
-    rows = run([mon9, mon9, mon9, mon17])
-    by_hr = {r["hr"]: r for r in rows}
-    assert all(r["dow"] == 0 for r in rows)  # Monday
-    assert by_hr[9]["is_peak"] == 1 and by_hr[9]["hour_share"] == 0.75
-    assert by_hr[17]["is_peak"] == 0
-
-    tie = run([mon9, mon17])
-    by_hr = {r["hr"]: r for r in tie}
-    assert by_hr[9]["is_peak"] == 1  # tie -> earlier hour
-    assert by_hr[17]["is_peak"] == 0

@@ -704,17 +704,6 @@ def test_doc_keywords_topk_below_shuffle(spark):
     assert "EvalPython" not in plan
 
 
-def test_corpus_rollup_expand_single_scan(spark):
-    """ROLLUP plans as ONE scan -> Expand(3 grouping levels) ->
-    partial+final agg — not one job per level."""
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    plan = _plan(QUERIES["corpus_rollup"](spark, SF_DIR))
-    assert "Expand" in plan
-    assert max(plan.count("Scan parquet"), plan.count("FileScan")) == 1
-    assert "EvalPython" not in plan
-
-
 def test_session_peaks_global_window_only_on_hour_rollup(spark):
     """sweep_concurrency's scale contract, pinned in the physical plan:
     (1) exactly one SinglePartition exchange, and it feeds the carry
@@ -846,19 +835,6 @@ def test_zonal_overlay_broadcast_cell_join(spark):
     assert "EvalPython" not in plan
 
 
-def test_late_suppliers_semi_anti_broadcast(spark):
-    """Q21 shape: one physical LeftSemi AND one LeftAnti join (the
-    non-equi residual keeps them joins, not filters), the supplier dim
-    broadcast, and no cartesian product anywhere."""
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    plan = _plan(QUERIES["late_suppliers"](spark, SF_DIR))
-    assert "LeftSemi" in plan
-    assert "LeftAnti" in plan
-    assert "Broadcast" in plan
-    assert "Cartesian" not in plan
-
-
 def test_vrm_no_python_no_cartesian(spark):
     """VRM is pure whole-stage-codegen joins + aggregation: no Python
     evaluation nodes, no cartesian products (the 9-offset cross join
@@ -870,13 +846,3 @@ def test_vrm_no_python_no_cartesian(spark):
     assert "ArrowEvalPython" not in plan
     assert "CartesianProduct" not in plan
     assert plan.count("HashAggregate") >= 2  # partial+final window sums
-
-
-def test_score_auc_partial_final_fold(spark):
-    """The corpus folds map-side into score groups (partial+final
-    HashAggregate) before the single-partition group window."""
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    plan = _plan(QUERIES["score_auc"](spark, SF_DIR))
-    assert plan.count("HashAggregate") >= 2
-    assert "BatchEvalPython" not in plan

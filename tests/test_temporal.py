@@ -461,25 +461,3 @@ def test_emerging_hotspots_planted_classes(spark):
             else "stable"
         )
         assert r.trend == want, (r.cell, r.trend, want)
-
-
-def test_funnel_wilson_hand_computed(spark):
-    """Hand check: each step's interval equals the plus-four formula
-    recomputed in Python; the interval contains the point rate and
-    tightens as n grows within the funnel (wider intervals deeper in
-    the funnel where n is smaller)."""
-    import math
-
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    rows = QUERIES["funnel_wilson"](spark, SF_DIR).collect()
-    assert len(rows) == 3
-    for r in rows:
-        n, x = r["n"], r["x"]
-        half = 2.0 * math.sqrt(x * (n - x) / n + 1.0)
-        assert r["rate"] == round(x / n, 6)
-        assert r["wilson_lo"] == round((x + 2 - half) / (n + 4), 6)
-        assert r["wilson_hi"] == round((x + 2 + half) / (n + 4), 6)
-        assert r["wilson_lo"] <= r["rate"] + 1e-9
-        assert r["rate"] <= r["wilson_hi"] + 1e-9
-        assert 0.0 <= r["wilson_lo"] and r["wilson_hi"] <= 1.0
