@@ -2,7 +2,7 @@
 
 Pure NumPy, float64, NaN = NoData — the *identical formulas* of the
 reference's demAnalysisComponents (cited per kernel), factored so the same
-function runs (a) per tile inside ``applyInPandas`` on a halo-padded
+function runs (a) per tile inside ``applyInArrow`` on a halo-padded
 subarray and (b) on a whole grid as the single-process test oracle.
 
 Kernel contract

@@ -17,18 +17,48 @@ Cell encoding is the relational replacement for ``getRowColFromXY``
     the DuckDB oracle queries — parity is by construction, not by luck.
 
 For multi-tile scale-out, cells roll up into square tiles of
-``tile_cells`` x ``tile_cells`` cells (``tile_id`` row-major); stencil
-operators materialize one tile (+halo) per applyInPandas group, mirroring
-the reference's tiled requests with ``tileOverlap`` halo
-(pointCloudCreation.py:458-495, overlap at :489).
+``tile_cells`` x ``tile_cells`` cells (``tile_id`` row-major); ``GridSpec``
+owns the tile geometry (``tile_counts``, ``tile_window``).  Stencil and
+pit-fill operators materialize one tile (+halo) per ``applyInArrow``
+group (operators/stencils.py), mirroring the reference's tiled requests
+with ``tileOverlap`` halo (pointCloudCreation.py:458-495, overlap at :489).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import NamedTuple
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+
+class TileWindow(NamedTuple):
+    """One tile's cells in grid coordinates.
+
+    Core: the tile's own cells, rows ``[row0, row0 + nrows)`` x cols
+    ``[col0, col0 + ncols)``, cut short at the grid's south/east edge.
+    Window: the full ``tile_cells`` square grown by ``halo`` on every side
+    and clipped to the grid, rows ``[wr0, wr1)`` x cols ``[wc0, wc1)``;
+    ``pads`` ((top, bottom), (left, right)) is how far the unclipped
+    square reaches past the grid, in ``np.pad`` form.
+    """
+
+    row0: int
+    col0: int
+    nrows: int
+    ncols: int
+    wr0: int
+    wc0: int
+    wr1: int
+    wc1: int
+    pads: tuple[tuple[int, int], tuple[int, int]]
+
+    @property
+    def core(self) -> tuple[slice, slice]:
+        """The core cells as an index into the window array."""
+        r, c = self.row0 - self.wr0, self.col0 - self.wc0
+        return slice(r, r + self.nrows), slice(c, c + self.ncols)
 
 
 @dataclass(frozen=True)
@@ -69,8 +99,35 @@ class GridSpec:
             F.lit(float(self.nrows - 1)) - row.cast("double") + F.lit(0.5)
         ) * F.lit(self.cell) + F.lit(self.y0)
 
+    def contains(self, row: Column, col: Column) -> Column:
+        """True for cells inside the grid extent."""
+        return (
+            (row >= 0) & (row < self.nrows) & (col >= 0) & (col < self.ncols)
+        )
+
+    # ---- tile geometry ---------------------------------------------------------
+    def tile_counts(self, tile_cells: int) -> tuple[int, int]:
+        """(tiles_y, tiles_x): tiles down and across the grid."""
+        return -(-self.nrows // tile_cells), -(-self.ncols // tile_cells)
+
+    def tile_window(
+        self, tile_id: int, tile_cells: int, halo: int = 0
+    ) -> TileWindow:
+        """Core and ``halo``-padded window of tile ``tile_id``."""
+        T = tile_cells
+        tr, tc = divmod(tile_id, self.tile_counts(T)[1])
+        row0, col0 = tr * T, tc * T
+        r0, c0 = row0 - halo, col0 - halo
+        r1, c1 = row0 + T + halo, col0 + T + halo
+        wr0, wc0 = max(r0, 0), max(c0, 0)
+        wr1, wc1 = min(r1, self.nrows), min(c1, self.ncols)
+        return TileWindow(
+            row0, col0, min(T, self.nrows - row0), min(T, self.ncols - col0),
+            wr0, wc0, wr1, wc1, ((wr0 - r0, r1 - wr1), (wc0 - c0, c1 - wc1)),
+        )
+
     def tile_id(self, row: Column, col: Column, tile_cells: int) -> Column:
-        tiles_x = (self.ncols + tile_cells - 1) // tile_cells
+        tiles_x = self.tile_counts(tile_cells)[1]
         return (
             F.floor(row / F.lit(tile_cells)).cast("long") * F.lit(tiles_x)
             + F.floor(col / F.lit(tile_cells)).cast("long")

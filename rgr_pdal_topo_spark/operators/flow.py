@@ -13,8 +13,8 @@ algorithm by its true data dependence:
     monotonically to the sequential whole-grid fill (block Gauss-Seidel
     on the minimax Bellman equation; starting from below instead can
     lock in mutual underestimates across tile seams).  Asserted
-    cell-exact in tests/test_flow.py.  Only tiles whose halo changed are
-    recomputed after round 1.
+    cell-exact in tests/test_flow.py.  Only tiles whose padded window
+    holds a changed cell are recomputed after round 1.
   * D8 direction (G2)   — pure 3x3 stencil (functions/kernels.d8_flow_dir)
     through the tiled stencil engine: one shuffle.
   * basin labeling (G8) — pointer doubling on the downstream-edge table:
@@ -36,8 +36,6 @@ reference's _getNeighborIndices for square cells (flowRoutingGrids.py:617).
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -50,6 +48,11 @@ from rgr_pdal_topo_spark.functions.flow_kernels import (
     priority_flood,
 )
 from rgr_pdal_topo_spark.grid import GridSpec
+from rgr_pdal_topo_spark.operators.stencils import (
+    replicate_halo,
+    run_stencil,
+    run_tiles,
+)
 
 #: Flow analyses run on a coarser DEM than the stencil suite so that the
 #: sf0.01 oracle grid is dense (cells mostly non-empty): 50x50 cells of
@@ -62,38 +65,6 @@ FLOW_GRID = GridSpec(x0=0.0, y0=0.0, cell=20.0, nrows=50, ncols=50)
 # ---------------------------------------------------------------------------
 
 
-def _tile_rows(df: DataFrame, grid: GridSpec, tile_cells: int) -> DataFrame:
-    """Replicate (cell_row, cell_col, z, fill) rows into every tile whose
-    1-cell-padded window contains them (stencils._materialize_with_halo
-    shape, carrying two value columns)."""
-    spark = df.sparkSession
-    tiles_x = math.ceil(grid.ncols / tile_cells)
-    tiles_y = math.ceil(grid.nrows / tile_cells)
-    offs = spark.createDataFrame(
-        [(i, j) for i in (-1, 0, 1) for j in (-1, 0, 1)], "dtr int, dtc int"
-    )
-    t = F.lit(tile_cells)
-    return (
-        df.withColumn("tr", F.floor(F.col("cell_row") / t).cast("int"))
-        .withColumn("tc", F.floor(F.col("cell_col") / t).cast("int"))
-        .crossJoin(F.broadcast(offs))
-        .withColumn("tr2", F.col("tr") + F.col("dtr"))
-        .withColumn("tc2", F.col("tc") + F.col("dtc"))
-        .filter(
-            (F.col("tr2") >= 0) & (F.col("tr2") < tiles_y)
-            & (F.col("tc2") >= 0) & (F.col("tc2") < tiles_x)
-            & (F.col("cell_row") >= F.col("tr2") * t - 1)
-            & (F.col("cell_row") < (F.col("tr2") + 1) * t + 1)
-            & (F.col("cell_col") >= F.col("tc2") * t - 1)
-            & (F.col("cell_col") < (F.col("tc2") + 1) * t + 1)
-        )
-        .withColumn(
-            "tile_id", F.col("tr2").cast("long") * F.lit(tiles_x) + F.col("tc2")
-        )
-        .select("tile_id", "tr2", "tc2", "cell_row", "cell_col", "z", "fill")
-    )
-
-
 def fill_dem(
     grid_df: DataFrame,
     grid: GridSpec,
@@ -102,18 +73,20 @@ def fill_dem(
     max_rounds: int = 64,
     value_col: str = "value",
 ) -> DataFrame:
-    """G1: distributed pit filling.  Returns (cell_row, cell_col, z, fill).
+    """G1: distributed pit filling.  Returns (cell_row, cell_col, z, fill)
+    for every cell inside the grid extent with a value.
 
     Fixpoint-from-above: fill_0 = +inf; each round re-runs the reference's
     priority flood per tile with seeds at (a) the 1-cell halo ring at the
     neighbor tiles' current estimates, (b) true grid-border cells at z,
     (c) cells adjacent to NoData holes at z (the _findMaskBoundaries seed
     set, baseGrid.py:1198-1229).  Estimates decrease monotonically to the
-    sequential fill; converged tiles are skipped in later rounds.
+    sequential fill.  A tile's flood reads only its halo ring's estimates,
+    so after round 1 only tiles whose padded window holds a changed cell
+    are re-run.  Tiles go through the stencil engine's halo replication
+    and per-tile runner (operators/stencils.py).
     """
-    spark = grid_df.sparkSession
     dx = dy = float(grid.cell)
-    nrows, ncols = grid.nrows, grid.ncols
     T = tile_cells
     est = (
         grid_df.select(
@@ -122,32 +95,20 @@ def fill_dem(
         # NoData rows (NULL/NaN value, e.g. fill_empty_cells' explicit
         # markers) are holes, not cells: they would otherwise enter as
         # z=NaN with fill=+inf and never be touched by any tile flood.
-        .filter(F.col("z").isNotNull() & ~F.isnan(F.col("z")))
+        .filter(
+            F.col("z").isNotNull() & ~F.isnan(F.col("z"))
+            & grid.contains(F.col("cell_row"), F.col("cell_col"))
+        )
         .withColumn("fill", F.lit(float("inf")))
         .persist()
     )
     est.count()
 
-    schema = "cell_row int, cell_col int, fill double"
-
-    def per_tile(pdf: pd.DataFrame) -> pd.DataFrame:
-        tr2 = int(pdf["tr2"].iloc[0])
-        tc2 = int(pdf["tc2"].iloc[0])
-        r0, c0 = tr2 * T - 1, tc2 * T - 1
-        r1, c1 = tr2 * T + T + 1, tc2 * T + T + 1
-        gr0, gc0 = max(r0, 0), max(c0, 0)
-        gr1, gc1 = min(r1, nrows), min(c1, ncols)
-        h, w = gr1 - gr0, gc1 - gc0
-        z = np.full((h, w), np.nan)
-        estv = np.full((h, w), np.nan)
-        rr = pdf["cell_row"].to_numpy() - gr0
-        cc = pdf["cell_col"].to_numpy() - gc0
-        z[rr, cc] = pdf["z"].to_numpy(dtype="float64")
-        estv[rr, cc] = pdf["fill"].to_numpy(dtype="float64")
-
+    def flood(win, dense: dict) -> dict:
+        z, estv = dense["z"], dense["fill"]
+        h, w = z.shape
         core = np.zeros((h, w), dtype=bool)
-        core[tr2 * T - gr0 : tr2 * T + min(T, nrows - tr2 * T) - gr0,
-             tc2 * T - gc0 : tc2 * T + min(T, ncols - tc2 * T) - gc0] = True
+        core[win.core] = True
         valid = ~np.isnan(z)
 
         # flood input: z in the core, current estimates in the halo ring
@@ -155,13 +116,13 @@ def fill_dem(
         # seeds: halo ring + true-grid border + NoData-hole-adjacent cells
         seed = (~core) & valid
         border = np.zeros((h, w), dtype=bool)
-        if gr0 == 0:
+        if win.wr0 == 0:
             border[0, :] = True
-        if gr1 == nrows:
+        if win.wr1 == grid.nrows:
             border[-1, :] = True
-        if gc0 == 0:
+        if win.wc0 == 0:
             border[:, 0] = True
-        if gc1 == ncols:
+        if win.wc1 == grid.ncols:
             border[:, -1] = True
         hole = np.pad(valid, 1, mode="constant", constant_values=True)
         near_hole = np.zeros((h, w), dtype=bool)
@@ -173,23 +134,16 @@ def fill_dem(
         out = priority_flood(
             arr, dx, dy, agg_slope, seed_mask=seed, seed_elev=arr
         )
-        keep = core & valid
-        return pd.DataFrame(
-            {
-                "cell_row": (np.nonzero(keep)[0] + gr0).astype("int32"),
-                "cell_col": (np.nonzero(keep)[1] + gc0).astype("int32"),
-                "fill": out[keep],
-            }
-        )
+        # NoData core cells come out NaN -> NULL and match no est row
+        return {"fill": out[win.core]}
 
-    tiles_x = math.ceil(ncols / T)
     active: DataFrame | None = None  # None = all tiles
     converged = False
     for _ in range(max_rounds):
-        tiles = _tile_rows(est, grid, T)
+        tiles = replicate_halo(est, grid, T, 1)
         if active is not None:
             tiles = tiles.join(F.broadcast(active), "tile_id", "left_semi")
-        new_fill = tiles.groupBy("tile_id").applyInPandas(per_tile, schema)
+        new_fill = run_tiles(tiles, grid, T, 1, flood, ["fill"])
         updated = (
             est.withColumnRenamed("fill", "fill_old")
             .join(new_fill, ["cell_row", "cell_col"], "left")
@@ -211,27 +165,10 @@ def fill_dem(
         if n_changed == 0:
             converged = True
             break
-        # next round: only tiles whose padded window saw a change
-        t = F.lit(T)
-        active = (
-            changed.select(
-                F.floor(F.col("cell_row") / t).cast("int").alias("tr"),
-                F.floor(F.col("cell_col") / t).cast("int").alias("tc"),
-            )
-            .crossJoin(
-                F.broadcast(
-                    spark.createDataFrame(
-                        [(i, j) for i in (-1, 0, 1) for j in (-1, 0, 1)],
-                        "dtr int, dtc int",
-                    )
-                )
-            )
-            .select(
-                ((F.col("tr") + F.col("dtr")).cast("long") * F.lit(tiles_x)
-                 + F.col("tc") + F.col("dtc")).alias("tile_id")
-            )
-            .distinct()
-        )
+        # next round: only tiles whose padded window holds a changed cell
+        active = replicate_halo(
+            changed.select("cell_row", "cell_col"), grid, T, 1
+        ).select("tile_id").distinct()
     if not converged:
         raise RuntimeError(
             f"fill_dem did not converge within {max_rounds} rounds "
@@ -261,14 +198,12 @@ def d8_flow_dir_df(
     (_assignFlowDir, flowRoutingGrids.py:549-597).  Missing neighbors are
     excluded from the argmax (the engine's NoData rule; the reference's
     np.argmax NaN poisoning is an artifact, SURVEY.md §2.8)."""
-    from rgr_pdal_topo_spark.operators.stencils import run_stencil
-
     out = run_stencil(
         fill_df.withColumnRenamed(value_col, "value"), grid, "d8_flow_dir",
         tile_cells=tile_cells, out_col="fd",
     )
-    # applyInPandas maps NaN -> NULL through Arrow: filter both spellings
-    return out.filter(F.col("fd").isNotNull() & ~F.isnan("fd")).select(
+    # run_stencil emits a missing code as NULL, never NaN
+    return out.filter(F.col("fd").isNotNull()).select(
         "cell_row", "cell_col", F.col("fd").cast("int").alias("fd")
     )
 
@@ -601,10 +536,9 @@ def cost_distance(
     offs = F.explode(
         F.array(
             *[
-                F.struct(F.lit(dr).alias("dr"), F.lit(dc).alias("dc"))
-                for dr in (-1, 0, 1)
-                for dc in (-1, 0, 1)
-                if (dr, dc) != (0, 0)
+                F.struct(F.lit(D8_CODE_TO_DR[k]).alias("dr"),
+                         F.lit(D8_CODE_TO_DC[k]).alias("dc"))
+                for k in D8_CODE_TO_DR
             ]
         )
     ).alias("o")

@@ -342,14 +342,6 @@ def profile_peaks(
     ).filter(F.col("z_sm").isNotNull())
 
 
-def swath_filter(projected: DataFrame, swath_width: float) -> DataFrame:
-    """F4: keep D in [0, swathWidth] (filters.range "D[0:w]",
-    pointCloudCreation.py:599-604)."""
-    return projected.filter(
-        (F.col("d") >= 0) & (F.col("d") <= F.lit(swath_width))
-    )
-
-
 # --------------------------------------------------------------------------
 # J4: kNN join (k=1 with max-distance cap — assignNodesClosestValues,
 # networkGraph.py:688-741)

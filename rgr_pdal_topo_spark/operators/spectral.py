@@ -103,16 +103,13 @@ def _tile_groups(grid_df: DataFrame, grid: GridSpec, tile_cells: int):
     )
 
 
-def _dense_tile(pdf: pd.DataFrame, grid: GridSpec, tile_cells: int):
+def dense_tile(pdf: pd.DataFrame, grid: GridSpec, tile_cells: int):
     """Materialize one tile as dense arrays (z, x, y); missing cells are
     filled with the tile's fitted plane so they contribute 0 after
     detrending (the reference assumes complete grids)."""
     tile_id = int(pdf["tile_id"].iloc[0])
-    tiles_x = -(-grid.ncols // tile_cells)
-    tr, tc = divmod(tile_id, tiles_x)
-    r0, c0 = tr * tile_cells, tc * tile_cells
-    nr = min(tile_cells, grid.nrows - r0)
-    nc = min(tile_cells, grid.ncols - c0)
+    win = grid.tile_window(tile_id, tile_cells)
+    r0, c0, nr, nc = win.row0, win.col0, win.nrows, win.ncols
     z = np.full((nr, nc), np.nan)
     z[pdf["cell_row"] - r0, pdf["cell_col"] - c0] = pdf["value"].to_numpy(
         dtype="float64"
@@ -142,7 +139,7 @@ def fft_power_tiles(
     )
 
     def per_tile(pdf: pd.DataFrame) -> pd.DataFrame:
-        tile_id, _, _, z, x, y = _dense_tile(pdf, grid, tile_cells)
+        tile_id, _, _, z, x, y = dense_tile(pdf, grid, tile_cells)
         fwd = sk.fft_forward(z, x, y, grid.cell, grid.cell, hann=hann)
         nr, nc = z.shape
         fr, fc = np.meshgrid(np.arange(nr), np.arange(nc), indexing="ij")
@@ -174,7 +171,7 @@ def fft_filter_tiles(
     schema = "cell_row int, cell_col int, value double, filtered double"
 
     def per_tile(pdf: pd.DataFrame) -> pd.DataFrame:
-        _, r0, c0, z, x, y = _dense_tile(pdf, grid, tile_cells)
+        _, r0, c0, z, x, y = dense_tile(pdf, grid, tile_cells)
         fwd = sk.fft_forward(z, x, y, grid.cell, grid.cell, hann=hann)
         fs = [sk.FILTERS[name](fwd["L"], **kw) for name, kw in filters]
         back = sk.fft_inverse(fwd, fs)
@@ -214,7 +211,7 @@ def fft_binned_power_tiles(
     )
 
     def per_tile(pdf: pd.DataFrame) -> pd.DataFrame:
-        tile_id, _, _, z, x, y = _dense_tile(pdf, grid, tile_cells)
+        tile_id, _, _, z, x, y = dense_tile(pdf, grid, tile_cells)
         fwd = sk.fft_forward(z, x, y, grid.cell, grid.cell, hann=hann)
         b = sk.binned_median_power(fwd["L"], fwd["power"], n_bins)
         return pd.DataFrame(
@@ -290,7 +287,7 @@ def spectral_break_tiles(
     )
 
     def per_tile(pdf: pd.DataFrame) -> pd.DataFrame:
-        tile_id, _, _, z, x, y = _dense_tile(pdf, grid, tile_cells)
+        tile_id, _, _, z, x, y = dense_tile(pdf, grid, tile_cells)
         fwd = sk.fft_forward(z, x, y, grid.cell, grid.cell, hann=hann)
         fit = sk.piecewise_powerlaw(fwd["L"], fwd["power"], n_breaks)
         return pd.DataFrame(

@@ -4,15 +4,21 @@ The reference's tiled pipeline builds per-tile requests with a halo
 (``tileOverlap``, pointCloudCreation.py:458-495 at :489) and runs NumPy
 kernels eagerly per grid (dem.py).  Here the same shape is Spark-native:
 
-  1. long-form grid rows are assigned to their home tile AND replicated
-     into the halo region of up-to-3 neighboring tiles (a deliberate
-     row-duplication transform — Catalyst cannot invent it, SURVEY.md §4);
-  2. one grouped-map stage per tile (``applyInArrow``) materializes a dense
-     (T+2h) x (T+2h) float64 array (NaN = missing/NoData) and runs the
+  1. ``replicate_halo``: long-form grid rows are assigned to their home
+     tile AND replicated into the halo region of up-to-3 neighboring tiles
+     (a deliberate row-duplication transform — Catalyst cannot invent it,
+     SURVEY.md §4);
+  2. ``run_tiles``: one grouped-map stage per tile (``applyInArrow``)
+     materializes the tile's dense float64 window (NaN = missing/NoData);
+     ``run_stencils`` pads it out to (T+2h) x (T+2h) and runs the
      *identical* reference kernel (functions/kernels.py);
   3. each tile emits only its own core cells, so the union over tiles is
      exactly the single-machine full-grid result — asserted by
      tests/test_stencils.py against the whole-grid oracle.
+
+Steps 1 and 2 are the engine's one tiling path: ``flow.fill_dem`` runs its
+per-tile priority flood through them too.  Tile geometry (counts, core,
+padded window) comes from ``GridSpec``.
 
 Global-edge boundary conditions are applied per kernel ``pad_mode``
 ("repeat" = _getBCgrid edge replication, "nan" = constant-NaN,
@@ -26,57 +32,118 @@ replication overhead; tile size bounds executor memory at
 
 from __future__ import annotations
 
-import math
+from typing import Callable
 
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rgr_pdal_topo_spark.functions.kernels import KERNELS, kernel_halo
-from rgr_pdal_topo_spark.grid import GridSpec
+from rgr_pdal_topo_spark.grid import GridSpec, TileWindow
 
 _PAD_NUMPY_MODE = {"repeat": "edge", "reflect": "symmetric"}
 
 
-def _materialize_with_halo(
-    grid_df: DataFrame, grid: GridSpec, tile_cells: int, halo: int
+def _pad(arr: np.ndarray, pad_width, pad_mode: str) -> np.ndarray:
+    mode = _PAD_NUMPY_MODE.get(pad_mode)
+    if mode:
+        return np.pad(arr, pad_width, mode=mode)
+    return np.pad(arr, pad_width, mode="constant", constant_values=np.nan)
+
+
+def replicate_halo(
+    df: DataFrame, grid: GridSpec, tile_cells: int, halo: int
 ) -> DataFrame:
-    """Replicate each cell into every tile whose padded window needs it."""
+    """Replicate each cell row of ``df`` into every tile whose padded
+    window (``GridSpec.tile_window``) holds it, adding ``tile_id``.
+
+    Rows outside the grid extent are dropped: they would scatter into
+    wrong window positions (negative numpy indexing) or crash the worker.
+    """
     if halo > tile_cells:
         raise ValueError(f"halo {halo} must be <= tile_cells {tile_cells}")
-    spark = grid_df.sparkSession
-    # out-of-extent rows would scatter into wrong tile positions (negative
-    # numpy indexing) or crash the worker: clamp to the grid universe
-    grid_df = grid_df.filter(
-        (F.col("cell_row") >= 0) & (F.col("cell_row") < grid.nrows)
-        & (F.col("cell_col") >= 0) & (F.col("cell_col") < grid.ncols)
+    ty, tx = grid.tile_counts(tile_cells)
+    # halo <= tile_cells: a cell's tiles are its home tile and neighbours
+    offs = df.sparkSession.range(9).selectExpr(
+        "CAST(id DIV 3 - 1 AS INT) AS dtr", "CAST(id % 3 - 1 AS INT) AS dtc"
     )
-    tiles_x = math.ceil(grid.ncols / tile_cells)
-    tiles_y = math.ceil(grid.nrows / tile_cells)
-    offs = spark.createDataFrame(
-        [(i, j) for i in (-1, 0, 1) for j in (-1, 0, 1)], "dtr int, dtc int"
-    )
-    t = F.lit(tile_cells)
-    out = (
-        grid_df.withColumn("tr", F.floor(F.col("cell_row") / t).cast("int"))
-        .withColumn("tc", F.floor(F.col("cell_col") / t).cast("int"))
+    t, h = F.lit(tile_cells), F.lit(halo)
+    row, col = F.col("cell_row"), F.col("cell_col")
+    tr, tc = F.col("tr"), F.col("tc")
+    return (
+        df.filter(grid.contains(row, col))
         .crossJoin(F.broadcast(offs))
-        .withColumn("tr2", F.col("tr") + F.col("dtr"))
-        .withColumn("tc2", F.col("tc") + F.col("dtc"))
+        .withColumn("tr", F.floor(row / t).cast("int") + F.col("dtr"))
+        .withColumn("tc", F.floor(col / t).cast("int") + F.col("dtc"))
         .filter(
-            (F.col("tr2") >= 0) & (F.col("tr2") < tiles_y)
-            & (F.col("tc2") >= 0) & (F.col("tc2") < tiles_x)
-            & (F.col("cell_row") >= F.col("tr2") * t - F.lit(halo))
-            & (F.col("cell_row") < (F.col("tr2") + 1) * t + F.lit(halo))
-            & (F.col("cell_col") >= F.col("tc2") * t - F.lit(halo))
-            & (F.col("cell_col") < (F.col("tc2") + 1) * t + F.lit(halo))
+            (tr >= 0) & (tr < ty) & (tc >= 0) & (tc < tx)
+            & (row >= tr * t - h) & (row < (tr + 1) * t + h)
+            & (col >= tc * t - h) & (col < (tc + 1) * t + h)
         )
-        .withColumn(
-            "tile_id",
-            (F.col("tr2").cast("long") * F.lit(tiles_x) + F.col("tc2")),
+        .select(
+            (tr.cast("long") * F.lit(tx) + tc).alias("tile_id"),
+            *df.columns,
         )
     )
-    return out.select("tile_id", "tr2", "tc2", "cell_row", "cell_col", "value")
+
+
+def run_tiles(
+    tiles: DataFrame,
+    grid: GridSpec,
+    tile_cells: int,
+    halo: int,
+    fn: Callable[[TileWindow, dict[str, np.ndarray]], dict[str, np.ndarray]],
+    out_cols: list[str],
+) -> DataFrame:
+    """Per-tile runner over ``replicate_halo`` output: one ``applyInArrow``
+    group per tile.
+
+    Each carried column (all but tile_id/cell_row/cell_col) is scattered
+    into a dense float64 window array, NaN where no row landed.
+    ``fn(window, dense)`` returns ``{out_col: array}`` over the tile's core
+    cells; the runner emits (cell_row, cell_col, *out_cols) for every core
+    cell.  A row whose cell_row is NULL only makes its tile run.  RecordBatch
+    columns convert to/from NumPy without the pandas block-manager copy on
+    either side of the worker.
+    """
+    keys = ("tile_id", "cell_row", "cell_col")
+    carried = [c for c in tiles.columns if c not in keys]
+    schema = "cell_row int, cell_col int, " + ", ".join(
+        f"{c} double" for c in out_cols
+    )
+
+    def run_tile(tbl):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        tile_id = tbl.column("tile_id")[0].as_py()
+        win = grid.tile_window(tile_id, tile_cells, halo)
+        data = tbl.filter(pc.is_valid(tbl.column("cell_row")))
+        rr = data.column("cell_row").to_numpy().astype("int64") - win.wr0
+        cc = data.column("cell_col").to_numpy().astype("int64") - win.wc0
+        dense = {}
+        for c in carried:
+            dense[c] = np.full((win.wr1 - win.wr0, win.wc1 - win.wc0), np.nan)
+            dense[c][rr, cc] = data.column(c).to_numpy().astype("float64")
+        outs = fn(win, dense)
+        rows, cols = np.meshgrid(
+            np.arange(win.row0, win.row0 + win.nrows),
+            np.arange(win.col0, win.col0 + win.ncols),
+            indexing="ij",
+        )
+        result = {
+            "cell_row": rows.ravel().astype("int32"),
+            "cell_col": cols.ravel().astype("int32"),
+        }
+        for out in out_cols:
+            result[out] = outs[out].ravel()
+        # from_pandas=True converts NaN -> NULL: a missing output cell is
+        # SQL NULL, never NaN
+        return pa.table(
+            {k: pa.array(v, from_pandas=True) for k, v in result.items()}
+        )
+
+    return tiles.groupBy("tile_id").applyInArrow(run_tile, schema=schema)
 
 
 def run_stencils(
@@ -90,108 +157,49 @@ def run_stencils(
 
     specs: {output_column: (kernel_name, params)}.
     Returns (cell_row int, cell_col int, <out> double ...) for every cell of
-    the dense grid universe covered by tiles (missing input cells = NaN in,
-    NaN/kernel-defined out; a NaN output is emitted as SQL NULL).
-
-    The per-tile NumPy core runs via ``applyInArrow``: RecordBatch columns
-    convert to/from NumPy without the pandas block-manager copy on either
-    side of the worker.
+    the dense grid universe (missing input cells = NaN in, NaN/kernel-defined
+    out; a NaN output is emitted as SQL NULL).
     """
-    if value_col != "value":
-        grid_df = grid_df.withColumn("value", F.col(value_col))
     halos = {
         out: kernel_halo(kname, params, grid.cell, grid.cell)
         for out, (kname, params) in specs.items()
     }
     halo = max(halos.values())
     dx = dy = float(grid.cell)
-    nrows, ncols = grid.nrows, grid.ncols
-    T = tile_cells
-    out_cols = list(specs.keys())
-    schema = "cell_row int, cell_col int, " + ", ".join(
-        f"{c} double" for c in out_cols
-    )
 
-    def run_tile(tbl):
-        """Dense-ify one tile's (row, col, value) triples with halo, run
-        every kernel, return the core-region output columns."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        tr2 = tbl.column("tr2")[0].as_py()
-        tc2 = tbl.column("tc2")[0].as_py()
-        # drop the universe anchor row
-        data = tbl.filter(pc.is_valid(tbl.column("cell_row")))
-        rows_in = data.column("cell_row").to_numpy().astype("int64")
-        cols_in = data.column("cell_col").to_numpy().astype("int64")
-        vals_in = data.column("value").to_numpy().astype("float64")
-
-        r0, c0 = tr2 * T - halo, tc2 * T - halo  # padded-window origin
-        r1, c1 = tr2 * T + T + halo, tc2 * T + T + halo  # exclusive
-        gr0, gc0 = max(r0, 0), max(c0, 0)
-        gr1, gc1 = min(r1, nrows), min(c1, ncols)
-        valid = np.full((gr1 - gr0, gc1 - gc0), np.nan)
-        valid[rows_in - gr0, cols_in - gc0] = vals_in
-        pads = ((gr0 - r0, r1 - gr1), (gc0 - c0, c1 - gc1))
-
-        # core (tile-own) region size:
-        n_core_r = min(T, nrows - tr2 * T)
-        n_core_c = min(T, ncols - tc2 * T)
-
-        cols: dict[str, np.ndarray] = {}
-        for out, (kname, params) in specs.items():
+    def kernels(win: TileWindow, dense: dict) -> dict:
+        """Pad the tile's window out to the full (T+2*halo) square per
+        kernel pad_mode and run every kernel on it."""
+        out = {}
+        for name, (kname, params) in specs.items():
             k = KERNELS[kname]
-            h = halos[out]
-            if k.pad_mode in _PAD_NUMPY_MODE and (
-                pads[0][0] or pads[0][1] or pads[1][0] or pads[1][1]
-            ):
-                arr = np.pad(valid, pads, mode=_PAD_NUMPY_MODE[k.pad_mode])
-            else:
-                arr = np.pad(valid, pads, mode="constant",
-                             constant_values=np.nan)
-            # shrink padding to this kernel's own halo
-            s = halo - h
+            arr = _pad(dense["value"], win.pads, k.pad_mode)
+            # shrink padding to this kernel's own halo, so the result
+            # starts exactly at the tile origin
+            s = halo - halos[name]
             if s:
                 arr = arr[s:-s, s:-s]
-            res = k.fn(arr, dx, dy, **params)
-            # arr was normalized to this kernel's halo, so res always covers
-            # rows r0+halo..r1-halo-1, i.e. starts exactly at the tile origin.
-            cols[out] = res[:n_core_r, :n_core_c]
+            out[name] = k.fn(arr, dx, dy, **params)[: win.nrows, : win.ncols]
+        return out
 
-        rows_idx, cols_idx = np.meshgrid(
-            np.arange(tr2 * T, tr2 * T + n_core_r),
-            np.arange(tc2 * T, tc2 * T + n_core_c),
-            indexing="ij",
-        )
-        result = {
-            "cell_row": rows_idx.ravel().astype("int32"),
-            "cell_col": cols_idx.ravel().astype("int32"),
-        }
-        for out in out_cols:
-            result[out] = cols[out].ravel()
-        # from_pandas=True converts NaN -> NULL: the output contract is
-        # missing cell = SQL NULL, never NaN
-        return pa.table(
-            {k: pa.array(v, from_pandas=True) for k, v in result.items()}
-        )
-
-    tiles = _materialize_with_halo(grid_df, grid, tile_cells, halo)
+    cells = replicate_halo(
+        grid_df.select("cell_row", "cell_col", F.col(value_col).alias("value")),
+        grid, tile_cells, halo,
+    )
     # anchor row per tile: tiles with zero input cells must still emit
     # their (all-NaN-in) core universe so the output row set is the full
     # dense grid regardless of data sparsity (matches the SQL oracles)
-    spark = grid_df.sparkSession
-    tiles_x = math.ceil(grid.ncols / tile_cells)
-    tiles_y = math.ceil(grid.nrows / tile_cells)
-    anchors = spark.range(tiles_x * tiles_y).selectExpr(
+    ty, tx = grid.tile_counts(tile_cells)
+    anchors = grid_df.sparkSession.range(ty * tx).selectExpr(
         "id AS tile_id",
-        f"CAST(id DIV {tiles_x} AS INT) AS tr2",
-        f"CAST(id % {tiles_x} AS INT) AS tc2",
         "CAST(NULL AS INT) AS cell_row",
         "CAST(NULL AS INT) AS cell_col",
         "CAST(NULL AS DOUBLE) AS value",
     )
-    tiles = tiles.unionByName(anchors)
-    return tiles.groupBy("tile_id").applyInArrow(run_tile, schema=schema)
+    return run_tiles(
+        cells.unionByName(anchors), grid, tile_cells, halo, kernels,
+        list(specs),
+    )
 
 
 def run_stencil(
@@ -215,9 +223,4 @@ def apply_kernel_full(
     params = params or {}
     k = KERNELS[kernel]
     h = kernel_halo(kernel, params, grid.cell, grid.cell)
-    mode = _PAD_NUMPY_MODE.get(k.pad_mode)
-    if mode:
-        p = np.pad(arr, h, mode=mode)
-    else:
-        p = np.pad(arr, h, mode="constant", constant_values=np.nan)
-    return k.fn(p, float(grid.cell), float(grid.cell), **params)
+    return k.fn(_pad(arr, h, k.pad_mode), float(grid.cell), float(grid.cell), **params)

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from rgr_pdal_topo_spark.functions import spectral_kernels as sk
 from rgr_pdal_topo_spark.functions.terrain import diamond_square
 from rgr_pdal_topo_spark.grid import GridSpec
-from rgr_pdal_topo_spark.operators.spectral import _dense_tile, _tile_groups
+from rgr_pdal_topo_spark.operators.spectral import dense_tile
 
 
 def diamond_square_tiles(
@@ -36,19 +36,16 @@ def diamond_square_tiles(
     seed_base: int = 771,
 ) -> DataFrame:
     """X7: one independent fractal surface per tile, seed = f(tile_id)."""
-    tiles_x = -(-grid.ncols // tile_cells)
-    tiles_y = -(-grid.nrows // tile_cells)
-    ids = spark.range(tiles_x * tiles_y).select(
+    ty, tx = grid.tile_counts(tile_cells)
+    ids = spark.range(ty * tx).select(
         F.col("id").alias("tile_id")
     )
     schema = "tile_id long, cell_row int, cell_col int, value double"
 
     def per_tile(pdf: pd.DataFrame) -> pd.DataFrame:
         tile_id = int(pdf["tile_id"].iloc[0])
-        tr, tc = divmod(tile_id, tiles_x)
-        r0, c0 = tr * tile_cells, tc * tile_cells
-        nr = min(tile_cells, grid.nrows - r0)
-        nc = min(tile_cells, grid.ncols - c0)
+        win = grid.tile_window(tile_id, tile_cells)
+        r0, c0, nr, nc = win.row0, win.col0, win.nrows, win.ncols
         z = diamond_square(
             nr, nc, roughness, starting_scale, seed_base + tile_id
         )
@@ -86,13 +83,15 @@ def best_fit_roughness(
     hs = grid_df.sparkSession.range(n_h).select(
         F.col("id").cast("int").alias("h_idx")
     )
-    tiles = _tile_groups(grid_df, grid, tile_cells).crossJoin(F.broadcast(hs))
+    tiles = grid_df.withColumn(
+        "tile_id", grid.tile_id(F.col("cell_row"), F.col("cell_col"), tile_cells)
+    ).crossJoin(F.broadcast(hs))
     schema = "tile_id long, h double, l2 double"
 
     def per_pair(pdf: pd.DataFrame) -> pd.DataFrame:
         h_idx = int(pdf["h_idx"].iloc[0])
         h = float(np.linspace(0.0, 1.0, num=max(n_h, 2))[h_idx])
-        tile_id, _, _, z, x, y = _dense_tile(pdf, grid, tile_cells)
+        tile_id, _, _, z, x, y = dense_tile(pdf, grid, tile_cells)
         obs = sk.fft_forward(z, x, y, grid.cell, grid.cell, hann=True)
         bo = sk.binned_median_power(obs["L"], obs["power"], n_bins)
         scale = float(np.std(z - obs["plane"]))

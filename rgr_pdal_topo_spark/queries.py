@@ -4626,7 +4626,7 @@ def q_fft_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 #                 tile origins (r0, c0) are multiples of 50 so global
 #                 (cell_row + cell_col) parity equals in-tile parity.
 # Missing cells are filled with the tile's fitted plane (spectral.py
-# _dense_tile) so they detrend to exactly 0 and the refit over the full
+# dense_tile) so they detrend to exactly 0 and the refit over the full
 # tile equals the present-cell LSQ fit (zero-residual points don't move
 # the argmin) — the oracle therefore sums over present gmean rows only.
 # Engine fits via lstsq, oracle via Cramer: the coefficients agree only to

@@ -78,9 +78,11 @@ def test_priority_flood_fills_pits():
     assert interior_flat == 0
 
 
-@pytest.mark.parametrize("with_holes", [False, True])
-def test_distributed_fill_matches_sequential(spark, with_holes):
-    z = make_dem(with_holes)
+@pytest.mark.parametrize("holes", [False, True, "tile"])
+def test_distributed_fill_matches_sequential(spark, holes):
+    z = make_dem(with_holes=holes is True)
+    if holes == "tile":
+        z[0:16, 32:48] = np.nan  # the whole of tile (0, 2) is NoData
     expected = oracle_fill(z)
     out = (
         flow.fill_dem(dem_df(spark, z), GRID, AGG, tile_cells=16)
@@ -93,6 +95,42 @@ def test_distributed_fill_matches_sequential(spark, with_holes):
         np.nanmax(np.abs(got - expected))
     )
     assert np.all(np.isnan(got[~valid]))
+
+
+def test_fill_drops_out_of_extent_rows(spark):
+    """Rows outside the grid extent (cell_row -1 and nrows, cell_col -1
+    and ncols) are dropped, as run_stencils drops them: the output equals
+    fill_dem over the in-extent rows alone, which is the sequential fill
+    (test_distributed_fill_matches_sequential)."""
+    z = make_dem()
+    outside = pd.DataFrame(
+        {
+            "cell_row": np.array([-1, GRID.nrows, 7, 9], dtype="int32"),
+            "cell_col": np.array([3, 5, -1, GRID.ncols], dtype="int32"),
+            "value": 50.0,
+        }
+    )
+    dem = dem_df(spark, z).unionByName(spark.createDataFrame(outside))
+    got = (
+        flow.fill_dem(dem, GRID, AGG, tile_cells=16)
+        .toPandas()
+        .sort_values(["cell_row", "cell_col"], ignore_index=True)
+    )
+    rr, cc = np.nonzero(~np.isnan(z))
+    expected = pd.DataFrame(
+        {
+            "cell_row": rr.astype("int32"),
+            "cell_col": cc.astype("int32"),
+            "z": z[rr, cc],
+            "fill": oracle_fill(z)[rr, cc],
+        }
+    )
+    pd.testing.assert_frame_equal(got, expected, check_exact=True)
+
+
+def test_empty_input_fills_nothing(spark):
+    empty = spark.createDataFrame([], "cell_row int, cell_col int, value double")
+    assert flow.fill_dem(empty, GRID, AGG, tile_cells=16).count() == 0
 
 
 def test_flow_metrics_matches_sequential(spark):

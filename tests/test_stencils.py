@@ -10,6 +10,7 @@ import pytest
 from rgr_pdal_topo_spark.grid import GridSpec
 from rgr_pdal_topo_spark.operators.stencils import (
     apply_kernel_full,
+    replicate_halo,
     run_stencil,
     run_stencils,
 )
@@ -142,6 +143,60 @@ def test_null_contract_with_all_null_tile(spark, dem_df):
         assert np.array_equal(np.isnan(g), np.isnan(exp)), col
         ok = ~np.isnan(exp)
         assert np.array_equal(g[ok].view("int64"), exp[ok].view("int64")), col
+
+
+@pytest.mark.parametrize("nrows,ncols,T", [(40, 48, 16), (37, 53, 7)])
+def test_replicate_halo_brute_force(spark, nrows, ncols, T):
+    """Every in-extent cell lands in exactly the tiles whose padded window
+    holds it, one of them its home tile; out-of-extent cells land nowhere.
+    Checked against a NumPy enumeration of each tile's window, and
+    against GridSpec.tile_window."""
+    g = GridSpec(cell=10.0, nrows=nrows, ncols=ncols)
+    r, c = np.meshgrid(np.arange(-7, nrows + 7), np.arange(-7, ncols + 7),
+                       indexing="ij")
+    cells = spark.createDataFrame(pd.DataFrame(
+        {"cell_row": r.ravel().astype("int32"),
+         "cell_col": c.ravel().astype("int32")}
+    ))
+    ty, tx = -(-nrows // T), -(-ncols // T)
+    assert g.tile_counts(T) == (ty, tx)
+    for halo in (0, 1, 6):
+        got = replicate_halo(cells, g, T, halo).toPandas()
+        expected = set()
+        for tr in range(ty):
+            for tc in range(tx):
+                rows = np.arange(max(tr * T - halo, 0),
+                                 min((tr + 1) * T + halo, nrows))
+                cols = np.arange(max(tc * T - halo, 0),
+                                 min((tc + 1) * T + halo, ncols))
+                tid = tr * tx + tc
+                expected |= {(tid, a, b) for a in rows for b in cols}
+                win = g.tile_window(tid, T, halo)
+                assert (win.wr0, win.wr1) == (rows[0], rows[-1] + 1)
+                assert (win.wc0, win.wc1) == (cols[0], cols[-1] + 1)
+                core = np.zeros((len(rows), len(cols)), dtype=bool)
+                core[win.core] = True
+                assert np.array_equal(
+                    core,
+                    (rows[:, None] // T == tr) & (cols[None, :] // T == tc),
+                )
+        triples = list(zip(got.tile_id, got.cell_row, got.cell_col))
+        assert len(triples) == len(set(triples)), halo
+        assert set(triples) == expected, halo
+        home = got[got.tile_id == (got.cell_row // T) * tx
+                   + got.cell_col // T]
+        assert len(home) == nrows * ncols, halo
+        assert not home.duplicated(["cell_row", "cell_col"]).any(), halo
+
+
+def test_empty_input_emits_null_universe(spark):
+    empty = spark.createDataFrame([], "cell_row int, cell_col int, value double")
+    specs = {"hs": ("hillshade", {}), "smag": ("slope_mag", {}),
+             "tpi": ("tpi", {"inner_radius": 10.0, "outer_radius": 30.0})}
+    out = run_stencils(empty, GRID, specs, tile_cells=32).toPandas()
+    assert len(out) == NR * NC
+    assert not out.duplicated(["cell_row", "cell_col"]).any()
+    assert out[list(specs)].isna().all().all()
 
 
 def test_multi_kernel_single_shuffle(spark, dem_df):
