@@ -2,9 +2,9 @@
 spectral filters, wavelength-binned power.
 
 Pure NumPy, mirroring the reference formulas exactly (cited per function).
-Each runs per tile inside ``applyInPandas`` (a tile is the reference's
-whole grid — spectral analysis windows are tile-local by construction) and
-doubles as the whole-grid test oracle.
+Each runs per tile inside the stencil engine's ``applyInArrow`` tile runner
+(a tile is the reference's whole grid — spectral analysis windows are
+tile-local by construction) and doubles as the whole-grid test oracle.
 """
 
 from __future__ import annotations

@@ -18,10 +18,12 @@ Cell encoding is the relational replacement for ``getRowColFromXY``
 
 For multi-tile scale-out, cells roll up into square tiles of
 ``tile_cells`` x ``tile_cells`` cells (``tile_id`` row-major); ``GridSpec``
-owns the tile geometry (``tile_counts``, ``tile_window``).  Stencil and
-pit-fill operators materialize one tile (+halo) per ``applyInArrow``
-group (operators/stencils.py), mirroring the reference's tiled requests
-with ``tileOverlap`` halo (pointCloudCreation.py:458-495, overlap at :489).
+owns the tile geometry (``tile_counts``, ``tile_window``).  Every per-tile
+raster operator (stencils, pit fill, empty-cell fill, FFT and terrain
+tiles) materializes one tile (+halo) per ``applyInArrow`` group through
+the one tile runner (operators/stencils.py), mirroring the reference's
+tiled requests with ``tileOverlap`` halo (pointCloudCreation.py:458-495,
+overlap at :489).
 """
 
 from __future__ import annotations
@@ -34,7 +36,7 @@ from pyspark.sql import functions as F
 
 
 class TileWindow(NamedTuple):
-    """One tile's cells in grid coordinates.
+    """Tile ``tile_id``'s cells in grid coordinates.
 
     Core: the tile's own cells, rows ``[row0, row0 + nrows)`` x cols
     ``[col0, col0 + ncols)``, cut short at the grid's south/east edge.
@@ -44,6 +46,7 @@ class TileWindow(NamedTuple):
     square reaches past the grid, in ``np.pad`` form.
     """
 
+    tile_id: int
     row0: int
     col0: int
     nrows: int
@@ -122,7 +125,8 @@ class GridSpec:
         wr0, wc0 = max(r0, 0), max(c0, 0)
         wr1, wc1 = min(r1, self.nrows), min(c1, self.ncols)
         return TileWindow(
-            row0, col0, min(T, self.nrows - row0), min(T, self.ncols - col0),
+            tile_id, row0, col0,
+            min(T, self.nrows - row0), min(T, self.ncols - col0),
             wr0, wc0, wr1, wc1, ((wr0 - r0, r1 - wr1), (wc0 - c0, c1 - wc1)),
         )
 

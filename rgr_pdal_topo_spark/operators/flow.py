@@ -49,6 +49,7 @@ from rgr_pdal_topo_spark.functions.flow_kernels import (
 )
 from rgr_pdal_topo_spark.grid import GridSpec
 from rgr_pdal_topo_spark.operators.stencils import (
+    core_cells,
     replicate_halo,
     run_stencil,
     run_tiles,
@@ -135,7 +136,7 @@ def fill_dem(
             arr, dx, dy, agg_slope, seed_mask=seed, seed_elev=arr
         )
         # NoData core cells come out NaN -> NULL and match no est row
-        return {"fill": out[win.core]}
+        return core_cells(win, fill=out[win.core])
 
     active: DataFrame | None = None  # None = all tiles
     converged = False
@@ -143,7 +144,9 @@ def fill_dem(
         tiles = replicate_halo(est, grid, T, 1)
         if active is not None:
             tiles = tiles.join(F.broadcast(active), "tile_id", "left_semi")
-        new_fill = run_tiles(tiles, grid, T, 1, flood, ["fill"])
+        new_fill = run_tiles(
+            tiles, grid, T, 1, flood, "cell_row int, cell_col int, fill double"
+        )
         updated = (
             est.withColumnRenamed("fill", "fill_old")
             .join(new_fill, ["cell_row", "cell_col"], "left")

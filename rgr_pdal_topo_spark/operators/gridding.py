@@ -11,8 +11,9 @@ Reference semantics (pointCloudCreation.py:301-324, :311-322):
     densification; PDAL writers.gdal window_size).
 
 Spark shape: one hash aggregation (map-side partial + final) on the cell id —
-the canonical scalable groupBy.  The fallback is a second, much smaller join:
-empty cells x (<=13x13) neighbor offsets -> filled cells -> one more agg.
+the canonical scalable groupBy.  The fallback is a stencil kernel
+(``idw_fill``, halo = window radius) on the tiled stencil engine
+(operators/stencils.py), plus one join back to the input for ``n``.
 
 Skew (north_rule): a web-scale payload can hash astronomically many records
 to one cell.  ``grid_points(..., salt=N)`` runs the same aggregate as an
@@ -23,10 +24,13 @@ algebraic (sum/count/min/max decompose exactly).
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from rgr_pdal_topo_spark.functions.kernels import KERNELS, Kernel
 from rgr_pdal_topo_spark.grid import GridSpec
+from rgr_pdal_topo_spark.operators.stencils import run_stencil
 
 #: guards 1/d^2 when a point lies exactly on a cell center; value chosen so
 #: it never affects the 6-decimal rounded outputs for off-center points.
@@ -111,7 +115,7 @@ def grid_points(
 
 
 def all_cells(spark, grid: GridSpec) -> DataFrame:
-    """Dense cell universe (nrows x ncols) — used to densify sparse grids."""
+    """Dense cell universe (nrows x ncols)."""
     return (
         spark.range(grid.nrows * grid.ncols)
         .selectExpr(
@@ -121,102 +125,63 @@ def all_cells(spark, grid: GridSpec) -> DataFrame:
     )
 
 
-def densify(grid_df: DataFrame, grid: GridSpec) -> DataFrame:
-    """Left-join the sparse grid onto the dense cell universe
-    (value NULL = NoData, the relational NaN of baseGrid.py:856-858)."""
-    spark = grid_df.sparkSession
-    return (
-        all_cells(spark, grid)
-        .join(grid_df, ["cell_row", "cell_col"], "left")
-        .withColumn("n", F.coalesce(F.col("n"), F.lit(0)))
-    )
+def idw_fill(
+    p: np.ndarray, dx: float, dy: float, window_size: int = 6
+) -> np.ndarray:
+    """points2grid window fallback as a stencil kernel: each NaN cell takes
+    the 1/center-distance^2 weighted mean of the non-NaN cells within
+    Chebyshev radius ``window_size`` (centre excluded); other cells keep
+    their value.  NaN where no neighbor is in range."""
+    w = window_size
+    n, m = p.shape[0] - 2 * w, p.shape[1] - 2 * w
+    sw = np.zeros((n, m))
+    swv = np.zeros((n, m))
+    for dr in range(-w, w + 1):
+        for dc in range(-w, w + 1):
+            if dr == 0 and dc == 0:
+                continue
+            v = p[w + dr:w + dr + n, w + dc:w + dc + m]
+            ok = ~np.isnan(v)
+            wt = 1.0 / ((dr * dy) ** 2 + (dc * dx) ** 2)
+            sw += np.where(ok, wt, 0.0)
+            swv += np.where(ok, wt * v, 0.0)
+    core = p[w:w + n, w:w + m]
+    with np.errstate(invalid="ignore"):
+        return np.where(np.isnan(core), swv / sw, core)
 
 
-def neighbor_offsets(spark, radius: int, exclude_center: bool = True) -> DataFrame:
-    """Square (2r+1)^2 offset table (dr, dc) — broadcast-sized."""
-    off = spark.range(-radius, radius + 1).selectExpr("CAST(id AS INT) AS dr")
-    off2 = spark.range(-radius, radius + 1).selectExpr("CAST(id AS INT) AS dc")
-    out = off.crossJoin(off2)
-    if exclude_center:
-        out = out.filter("NOT (dr = 0 AND dc = 0)")
-    return out
+KERNELS["idw_fill"] = Kernel(
+    idw_fill, "nan", lambda p: int(p.get("window_size", 6))
+)
 
 
 def fill_empty_cells(
     grid_df: DataFrame, grid: GridSpec, window_size: int = 6,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """points2grid window fallback (A3): fill empty cells from filled
     neighbor-cell values within Chebyshev radius ``window_size``, weighted
     by 1/center-distance^2 (pointCloudCreation.py:320 window_size=6).
+    A NULL or NaN value is NoData: it is filled, never used as a neighbor.
 
     Returns the dense grid with columns (cell_row, cell_col, value, n,
-    filled int) where filled=1 marks fallback-filled cells.
-
-    checkpoint=True materializes the densified grid once before the
-    three branches that reuse it (filled pass-through, neighbor join,
-    unreachable anti-join) — Spark does not CSE common subplans, so the
-    upstream gridding aggregation would otherwise run 4x.  Same caveat
-    as cluster.kmeans_1d: localCheckpoint blocks are executor-local; on
-    a real cluster prefer DISK persist / reliable checkpoint if the
-    upstream pipeline is very expensive to replay.
+    filled int) where filled=1 marks fallback-filled cells; cells with no
+    value in range stay as NULL rows with n=0, filled=0.
     """
-    spark = grid_df.sparkSession
-    dense = densify(grid_df, grid)
-    if checkpoint:
-        dense = dense.localCheckpoint(eager=True)
-    filled = dense.filter(F.col("value").isNotNull())
-    empty = dense.filter(F.col("value").isNull()).select("cell_row", "cell_col")
-
-    offs = neighbor_offsets(spark, window_size)
-    # empty cell -> candidate neighbor coordinates -> join filled cells.
-    cand = (
-        empty.crossJoin(F.broadcast(offs))
-        .withColumn("n_row", F.col("cell_row") + F.col("dr"))
-        .withColumn("n_col", F.col("cell_col") + F.col("dc"))
-        .filter(
-            (F.col("n_row") >= 0)
-            & (F.col("n_row") < grid.nrows)
-            & (F.col("n_col") >= 0)
-            & (F.col("n_col") < grid.ncols)
-        )
+    # the halo (window_size) must fit inside one tile
+    filled = run_stencil(
+        grid_df, grid, "idw_fill", {"window_size": window_size},
+        tile_cells=max(64, window_size), out_col="value",
     )
-    cell = float(grid.cell)
-    joined = cand.join(
-        filled.select(
-            F.col("cell_row").alias("n_row"),
-            F.col("cell_col").alias("n_col"),
-            F.col("value").alias("n_value"),
-        ),
-        ["n_row", "n_col"],
-    )
-    d2 = (
-        (F.col("dr") * F.lit(cell)) * (F.col("dr") * F.lit(cell))
-        + (F.col("dc") * F.lit(cell)) * (F.col("dc") * F.lit(cell))
-    )
-    w = F.lit(1.0) / d2
-    fills = joined.groupBy("cell_row", "cell_col").agg(
-        (F.sum(w * F.col("n_value")) / F.sum(w)).alias("value")
-    )
-    # empties with no filled neighbor in range stay as explicit NoData
-    # rows so the result is the complete dense universe
-    unreachable = (
-        empty.join(fills.select("cell_row", "cell_col"),
-                   ["cell_row", "cell_col"], "left_anti")
-        .withColumn("value", F.lit(None).cast("double"))
-    )
-    return (
-        filled.withColumn("filled", F.lit(0))
-        .unionByName(
-            fills.withColumn("n", F.lit(0).cast("long")).withColumn(
-                "filled", F.lit(1)
-            )
-        )
-        .unionByName(
-            unreachable.withColumn("n", F.lit(0).cast("long")).withColumn(
-                "filled", F.lit(0)
-            )
-        )
+    src = grid_df.select("cell_row", "cell_col",
+                         F.col("value").alias("src"), "n")
+    # isnan(NULL) is false, so `had` is never NULL
+    had = F.col("src").isNotNull() & ~F.isnan("src")
+    return filled.join(src, ["cell_row", "cell_col"], "left").select(
+        "cell_row",
+        "cell_col",
+        "value",
+        F.when(had, F.col("n")).otherwise(F.lit(0)).alias("n"),
+        (~had & F.col("value").isNotNull()).cast("int").alias("filled"),
     )
 
 

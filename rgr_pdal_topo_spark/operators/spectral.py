@@ -6,9 +6,10 @@ Spark mapping:
     aggregation of the normal-equation sums + Cramer's rule (no collect of
     data, only the 3x3 system);
   * X2 detrend — columnar subtraction with broadcast coefficients;
-  * X3-X5 FFT forward/filter/inverse — per-tile ``applyInPandas`` running
-    the reference kernels verbatim (functions/spectral_kernels.py): a tile
-    is the reference's whole grid; spectral analysis windows are
+  * X3-X5 FFT forward/filter/inverse — the stencil engine's tile runner
+    (operators/stencils.py ``run_tiles``, ``applyInArrow``) with halo 0,
+    running the reference kernels verbatim (functions/spectral_kernels.py):
+    a tile is the reference's whole grid; spectral analysis windows are
     tile-local by construction, so no halo and no shuffle beyond the
     tile hash;
   * A6 binned median power — computed inside the same per-tile pass
@@ -21,12 +22,16 @@ Spark mapping:
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rgr_pdal_topo_spark.functions import spectral_kernels as sk
-from rgr_pdal_topo_spark.grid import GridSpec
+from rgr_pdal_topo_spark.grid import GridSpec, TileWindow
+from rgr_pdal_topo_spark.operators.stencils import (
+    core_cells,
+    replicate_halo,
+    run_tiles,
+)
 
 # ---------------------------------------------------------------------------
 # X1: distributed plane fit (normal equations, Cramer's rule)
@@ -97,25 +102,27 @@ def detrend(grid_df: DataFrame, grid: GridSpec) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _tile_groups(grid_df: DataFrame, grid: GridSpec, tile_cells: int):
-    return grid_df.withColumn(
-        "tile_id", grid.tile_id(F.col("cell_row"), F.col("cell_col"), tile_cells)
+def value_tiles(
+    grid_df: DataFrame, grid: GridSpec, tile_cells: int, fn, schema: str,
+    *carried,
+) -> DataFrame:
+    """Run ``fn(window, dense)`` (``stencils.run_tiles``, halo 0) on every
+    tile holding input rows; ``dense`` holds the tile's ``value`` window
+    and one window per extra ``carried`` column."""
+    cells = grid_df.select("cell_row", "cell_col", "value", *carried)
+    return run_tiles(
+        replicate_halo(cells, grid, tile_cells, 0), grid, tile_cells, 0,
+        fn, schema,
     )
 
 
-def dense_tile(pdf: pd.DataFrame, grid: GridSpec, tile_cells: int):
-    """Materialize one tile as dense arrays (z, x, y); missing cells are
-    filled with the tile's fitted plane so they contribute 0 after
-    detrending (the reference assumes complete grids)."""
-    tile_id = int(pdf["tile_id"].iloc[0])
-    win = grid.tile_window(tile_id, tile_cells)
-    r0, c0, nr, nc = win.row0, win.col0, win.nrows, win.ncols
-    z = np.full((nr, nc), np.nan)
-    z[pdf["cell_row"] - r0, pdf["cell_col"] - c0] = pdf["value"].to_numpy(
-        dtype="float64"
-    )
-    rows = np.arange(r0, r0 + nr)
-    cols = np.arange(c0, c0 + nc)
+def tile_surface(grid: GridSpec, win: TileWindow, z: np.ndarray):
+    """A tile's dense (z, x, y) from its value window ``z``; missing (NaN)
+    cells are filled in place with the tile's fitted plane so they
+    contribute 0 after detrending (the reference assumes complete grids)."""
+    nr, nc = z.shape
+    rows = np.arange(win.row0, win.row0 + nr)
+    cols = np.arange(win.col0, win.col0 + nc)
     x = (cols[None, :] + 0.5) * grid.cell + grid.x0
     y = ((grid.nrows - 1) - rows[:, None] + 0.5) * grid.cell + grid.y0
     x = np.broadcast_to(x, (nr, nc)).copy()
@@ -125,7 +132,7 @@ def dense_tile(pdf: pd.DataFrame, grid: GridSpec, tile_cells: int):
         ok = ~miss
         coeffs = sk.plane_fit(x[ok], y[ok], z[ok])
         z[miss] = sk.fitted_plane(x[miss], y[miss], coeffs)
-    return tile_id, r0, c0, z, x, y
+    return z, x, y
 
 
 def fft_power_tiles(
@@ -138,24 +145,20 @@ def fft_power_tiles(
         "tile_id long, f_row int, f_col int, wavelength double, power double"
     )
 
-    def per_tile(pdf: pd.DataFrame) -> pd.DataFrame:
-        tile_id, _, _, z, x, y = dense_tile(pdf, grid, tile_cells)
+    def per_tile(win: TileWindow, dense: dict) -> dict:
+        z, x, y = tile_surface(grid, win, dense["value"])
         fwd = sk.fft_forward(z, x, y, grid.cell, grid.cell, hann=hann)
         nr, nc = z.shape
         fr, fc = np.meshgrid(np.arange(nr), np.arange(nc), indexing="ij")
-        return pd.DataFrame(
-            {
-                "tile_id": tile_id,
-                "f_row": fr.ravel().astype("int32"),
-                "f_col": fc.ravel().astype("int32"),
-                "wavelength": fwd["L"].ravel(),
-                "power": fwd["power"].ravel(),
-            }
-        )
+        return {
+            "tile_id": np.full(z.size, win.tile_id, dtype="int64"),
+            "f_row": fr.ravel().astype("int32"),
+            "f_col": fc.ravel().astype("int32"),
+            "wavelength": fwd["L"].ravel(),
+            "power": fwd["power"].ravel(),
+        }
 
-    return _tile_groups(grid_df, grid, tile_cells).groupBy("tile_id").applyInPandas(
-        per_tile, schema
-    )
+    return value_tiles(grid_df, grid, tile_cells, per_tile, schema)
 
 
 def fft_filter_tiles(
@@ -167,35 +170,22 @@ def fft_filter_tiles(
 ) -> DataFrame:
     """X4/X5: apply spectral filters and invert, per tile
     (applyFilters + inverseTransform, fftGrid.py:104-150).
-    filters: [(name in spectral_kernels.FILTERS, kwargs), ...]."""
+    filters: [(name in spectral_kernels.FILTERS, kwargs), ...].
+    Emits only the cells that had an input row."""
     schema = "cell_row int, cell_col int, value double, filtered double"
 
-    def per_tile(pdf: pd.DataFrame) -> pd.DataFrame:
-        _, r0, c0, z, x, y = dense_tile(pdf, grid, tile_cells)
+    def per_tile(win: TileWindow, dense: dict) -> dict:
+        z, x, y = tile_surface(grid, win, dense["value"])
         fwd = sk.fft_forward(z, x, y, grid.cell, grid.cell, hann=hann)
         fs = [sk.FILTERS[name](fwd["L"], **kw) for name, kw in filters]
         back = sk.fft_inverse(fwd, fs)
-        nr, nc = z.shape
-        rr, cc = np.meshgrid(
-            np.arange(r0, r0 + nr), np.arange(c0, c0 + nc), indexing="ij"
-        )
-        out = pd.DataFrame(
-            {
-                "cell_row": rr.ravel().astype("int32"),
-                "cell_col": cc.ravel().astype("int32"),
-                "value": z.ravel(),
-                "filtered": back.ravel(),
-            }
-        )
-        # only emit cells that existed in the input
-        key = set(zip(pdf["cell_row"], pdf["cell_col"]))
-        mask = [
-            (r, c) in key for r, c in zip(out["cell_row"], out["cell_col"])
-        ]
-        return out[np.array(mask)]
+        out = core_cells(win, value=z, filtered=back)
+        had_row = ~np.isnan(dense["present"].ravel())
+        return {k: v[had_row] for k, v in out.items()}
 
-    return _tile_groups(grid_df, grid, tile_cells).groupBy("tile_id").applyInPandas(
-        per_tile, schema
+    return value_tiles(
+        grid_df, grid, tile_cells, per_tile, schema,
+        F.lit(1.0).alias("present"),
     )
 
 
@@ -210,24 +200,20 @@ def fft_binned_power_tiles(
         "median_power double, p_lo double, p_hi double"
     )
 
-    def per_tile(pdf: pd.DataFrame) -> pd.DataFrame:
-        tile_id, _, _, z, x, y = dense_tile(pdf, grid, tile_cells)
+    def per_tile(win: TileWindow, dense: dict) -> dict:
+        z, x, y = tile_surface(grid, win, dense["value"])
         fwd = sk.fft_forward(z, x, y, grid.cell, grid.cell, hann=hann)
         b = sk.binned_median_power(fwd["L"], fwd["power"], n_bins)
-        return pd.DataFrame(
-            {
-                "tile_id": tile_id,
-                "bin_id": np.arange(n_bins, dtype="int32"),
-                "mid_wavelength": b["mid_wavelength"],
-                "median_power": b["median_power"],
-                "p_lo": b["p_lo"],
-                "p_hi": b["p_hi"],
-            }
-        )
+        return {
+            "tile_id": np.full(n_bins, win.tile_id, dtype="int64"),
+            "bin_id": np.arange(n_bins, dtype="int32"),
+            "mid_wavelength": b["mid_wavelength"],
+            "median_power": b["median_power"],
+            "p_lo": b["p_lo"],
+            "p_hi": b["p_hi"],
+        }
 
-    return _tile_groups(grid_df, grid, tile_cells).groupBy("tile_id").applyInPandas(
-        per_tile, schema
-    )
+    return value_tiles(grid_df, grid, tile_cells, per_tile, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -286,20 +272,14 @@ def spectral_break_tiles(
         "b_right double, sse double"
     )
 
-    def per_tile(pdf: pd.DataFrame) -> pd.DataFrame:
-        tile_id, _, _, z, x, y = dense_tile(pdf, grid, tile_cells)
+    def per_tile(win: TileWindow, dense: dict) -> dict:
+        z, x, y = tile_surface(grid, win, dense["value"])
         fwd = sk.fft_forward(z, x, y, grid.cell, grid.cell, hann=hann)
         fit = sk.piecewise_powerlaw(fwd["L"], fwd["power"], n_breaks)
-        return pd.DataFrame(
-            {
-                "tile_id": [tile_id],
-                "break_wavelength": [fit["break_wavelength"]],
-                "b_left": [fit["b_left"]],
-                "b_right": [fit["b_right"]],
-                "sse": [fit["sse"]],
-            }
-        )
+        return {
+            "tile_id": np.array([win.tile_id], dtype="int64"),
+            **{k: np.array([float(fit[k])])
+               for k in ("break_wavelength", "b_left", "b_right", "sse")},
+        }
 
-    return _tile_groups(grid_df, grid, tile_cells).groupBy("tile_id").applyInPandas(
-        per_tile, schema
-    )
+    return value_tiles(grid_df, grid, tile_cells, per_tile, schema)

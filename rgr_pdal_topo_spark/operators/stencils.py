@@ -12,13 +12,15 @@ kernels eagerly per grid (dem.py).  Here the same shape is Spark-native:
      materializes the tile's dense float64 window (NaN = missing/NoData);
      ``run_stencils`` pads it out to (T+2h) x (T+2h) and runs the
      *identical* reference kernel (functions/kernels.py);
-  3. each tile emits only its own core cells, so the union over tiles is
-     exactly the single-machine full-grid result — asserted by
-     tests/test_stencils.py against the whole-grid oracle.
+  3. each tile emits only its own core cells (``core_cells``), so the
+     union over tiles is exactly the single-machine full-grid result —
+     asserted by tests/test_stencils.py against the whole-grid oracle.
 
-Steps 1 and 2 are the engine's one tiling path: ``flow.fill_dem`` runs its
-per-tile priority flood through them too.  Tile geometry (counts, core,
-padded window) comes from ``GridSpec``.
+Steps 1 and 2 are the engine's one way to run a per-tile raster function:
+``gridding.fill_empty_cells`` is a stencil kernel, ``flow.fill_dem`` runs
+its per-tile priority flood through them, and the spectral/terrain tile
+operators run through them with halo 0 and their own output schemas.
+Tile geometry (counts, core, padded window) comes from ``GridSpec``.
 
 Global-edge boundary conditions are applied per kernel ``pad_mode``
 ("repeat" = _getBCgrid edge replication, "nan" = constant-NaN,
@@ -87,30 +89,39 @@ def replicate_halo(
     )
 
 
+def tile_anchors(spark, grid: GridSpec, tile_cells: int) -> DataFrame:
+    """One row per tile with NULL cell_row/cell_col: fed to ``run_tiles``,
+    it makes every tile run whether or not it holds input rows."""
+    ty, tx = grid.tile_counts(tile_cells)
+    return spark.range(ty * tx).selectExpr(
+        "id AS tile_id",
+        "CAST(NULL AS INT) AS cell_row",
+        "CAST(NULL AS INT) AS cell_col",
+    )
+
+
 def run_tiles(
     tiles: DataFrame,
     grid: GridSpec,
     tile_cells: int,
     halo: int,
     fn: Callable[[TileWindow, dict[str, np.ndarray]], dict[str, np.ndarray]],
-    out_cols: list[str],
+    schema: str,
 ) -> DataFrame:
-    """Per-tile runner over ``replicate_halo`` output: one ``applyInArrow``
-    group per tile.
+    """Per-tile runner over tile-keyed cell rows (``replicate_halo`` and
+    ``tile_anchors`` output): one ``applyInArrow`` group per tile.
 
     Each carried column (all but tile_id/cell_row/cell_col) is scattered
     into a dense float64 window array, NaN where no row landed.
-    ``fn(window, dense)`` returns ``{out_col: array}`` over the tile's core
-    cells; the runner emits (cell_row, cell_col, *out_cols) for every core
-    cell.  A row whose cell_row is NULL only makes its tile run.  RecordBatch
-    columns convert to/from NumPy without the pandas block-manager copy on
-    either side of the worker.
+    ``fn(window, dense)`` returns equal-length columns ``{name: array}``
+    with the names, order and types of ``schema`` (a DDL string);
+    ``window.tile_id`` is the tile's id and ``core_cells`` builds the usual
+    one row per core cell.  A row whose cell_row is NULL only makes its
+    tile run.  RecordBatch columns convert to/from NumPy without the pandas
+    block-manager copy on either side of the worker.
     """
     keys = ("tile_id", "cell_row", "cell_col")
     carried = [c for c in tiles.columns if c not in keys]
-    schema = "cell_row int, cell_col int, " + ", ".join(
-        f"{c} double" for c in out_cols
-    )
 
     def run_tile(tbl):
         import pyarrow as pa
@@ -125,25 +136,29 @@ def run_tiles(
         for c in carried:
             dense[c] = np.full((win.wr1 - win.wr0, win.wc1 - win.wc0), np.nan)
             dense[c][rr, cc] = data.column(c).to_numpy().astype("float64")
-        outs = fn(win, dense)
-        rows, cols = np.meshgrid(
-            np.arange(win.row0, win.row0 + win.nrows),
-            np.arange(win.col0, win.col0 + win.ncols),
-            indexing="ij",
-        )
-        result = {
-            "cell_row": rows.ravel().astype("int32"),
-            "cell_col": cols.ravel().astype("int32"),
-        }
-        for out in out_cols:
-            result[out] = outs[out].ravel()
-        # from_pandas=True converts NaN -> NULL: a missing output cell is
+        # from_pandas=True converts NaN -> NULL: a missing output value is
         # SQL NULL, never NaN
         return pa.table(
-            {k: pa.array(v, from_pandas=True) for k, v in result.items()}
+            {k: pa.array(v, from_pandas=True)
+             for k, v in fn(win, dense).items()}
         )
 
     return tiles.groupBy("tile_id").applyInArrow(run_tile, schema=schema)
+
+
+def core_cells(win: TileWindow, **outs: np.ndarray) -> dict[str, np.ndarray]:
+    """(cell_row int, cell_col int, *outs) for every core cell of ``win``;
+    each ``outs`` array has the core's shape."""
+    rows, cols = np.meshgrid(
+        np.arange(win.row0, win.row0 + win.nrows),
+        np.arange(win.col0, win.col0 + win.ncols),
+        indexing="ij",
+    )
+    return {
+        "cell_row": rows.ravel().astype("int32"),
+        "cell_col": cols.ravel().astype("int32"),
+        **{k: v.ravel() for k, v in outs.items()},
+    }
 
 
 def run_stencils(
@@ -180,7 +195,7 @@ def run_stencils(
             if s:
                 arr = arr[s:-s, s:-s]
             out[name] = k.fn(arr, dx, dy, **params)[: win.nrows, : win.ncols]
-        return out
+        return core_cells(win, **out)
 
     cells = replicate_halo(
         grid_df.select("cell_row", "cell_col", F.col(value_col).alias("value")),
@@ -189,16 +204,13 @@ def run_stencils(
     # anchor row per tile: tiles with zero input cells must still emit
     # their (all-NaN-in) core universe so the output row set is the full
     # dense grid regardless of data sparsity (matches the SQL oracles)
-    ty, tx = grid.tile_counts(tile_cells)
-    anchors = grid_df.sparkSession.range(ty * tx).selectExpr(
-        "id AS tile_id",
-        "CAST(NULL AS INT) AS cell_row",
-        "CAST(NULL AS INT) AS cell_col",
-        "CAST(NULL AS DOUBLE) AS value",
+    anchors = tile_anchors(grid_df.sparkSession, grid, tile_cells)
+    schema = "cell_row int, cell_col int, " + ", ".join(
+        f"{c} double" for c in specs
     )
     return run_tiles(
-        cells.unionByName(anchors), grid, tile_cells, halo, kernels,
-        list(specs),
+        cells.unionByName(anchors, allowMissingColumns=True), grid,
+        tile_cells, halo, kernels, schema,
     )
 
 

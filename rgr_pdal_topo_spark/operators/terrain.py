@@ -1,15 +1,16 @@
 """Distributed procedural terrain + roughness search (SURVEY.md §2.9,
 X7 diamond-square, X9 best-fit roughness).
 
-Spark mapping: generation is embarrassingly parallel over (tile, H,
-permutation) keys — each ``applyInPandas`` group generates its surface
-from a deterministic per-key seed, so any tile batch is reproducible and
+Spark mapping: generation is embarrassingly parallel over tiles (and
+ensemble members) — each tile runs on the stencil engine's tile runner
+(operators/stencils.py ``run_tiles``, halo 0) and generates its surface
+from a deterministic per-tile seed, so any tile batch is reproducible and
 resumable without coordination (the per-tile-seed strategy SURVEY.md §7
-Stage 5 calls for).  The X9 search is a union over candidate roughness
-values scored against the observed spectrum and reduced with one
-``min_by`` — the reference's serial 20-iteration loop
-(calcBestFittingDiamondSquareRoughness, fftGrid.py:482-539) becomes a
-single shuffle.
+Stage 5 calls for).  The X9 search scores every candidate roughness
+against the tile's observed spectrum inside that tile's task, computing
+the observed spectrum once — the reference's serial 20-iteration loop
+(calcBestFittingDiamondSquareRoughness, fftGrid.py:482-539) runs per
+tile, with tiles in parallel.
 """
 
 from __future__ import annotations
@@ -23,8 +24,13 @@ from pyspark.sql import functions as F
 
 from rgr_pdal_topo_spark.functions import spectral_kernels as sk
 from rgr_pdal_topo_spark.functions.terrain import diamond_square
-from rgr_pdal_topo_spark.grid import GridSpec
-from rgr_pdal_topo_spark.operators.spectral import dense_tile
+from rgr_pdal_topo_spark.grid import GridSpec, TileWindow
+from rgr_pdal_topo_spark.operators.spectral import tile_surface, value_tiles
+from rgr_pdal_topo_spark.operators.stencils import (
+    core_cells,
+    run_tiles,
+    tile_anchors,
+)
 
 
 def diamond_square_tiles(
@@ -36,32 +42,22 @@ def diamond_square_tiles(
     seed_base: int = 771,
 ) -> DataFrame:
     """X7: one independent fractal surface per tile, seed = f(tile_id)."""
-    ty, tx = grid.tile_counts(tile_cells)
-    ids = spark.range(ty * tx).select(
-        F.col("id").alias("tile_id")
-    )
     schema = "tile_id long, cell_row int, cell_col int, value double"
 
-    def per_tile(pdf: pd.DataFrame) -> pd.DataFrame:
-        tile_id = int(pdf["tile_id"].iloc[0])
-        win = grid.tile_window(tile_id, tile_cells)
-        r0, c0, nr, nc = win.row0, win.col0, win.nrows, win.ncols
+    def per_tile(win: TileWindow, dense: dict) -> dict:
         z = diamond_square(
-            nr, nc, roughness, starting_scale, seed_base + tile_id
+            win.nrows, win.ncols, roughness, starting_scale,
+            seed_base + win.tile_id,
         )
-        rr, cc = np.meshgrid(
-            np.arange(r0, r0 + nr), np.arange(c0, c0 + nc), indexing="ij"
-        )
-        return pd.DataFrame(
-            {
-                "tile_id": tile_id,
-                "cell_row": rr.ravel().astype("int32"),
-                "cell_col": cc.ravel().astype("int32"),
-                "value": z.ravel(),
-            }
-        )
+        return {
+            "tile_id": np.full(z.size, win.tile_id, dtype="int64"),
+            **core_cells(win, value=z),
+        }
 
-    return ids.groupBy("tile_id").applyInPandas(per_tile, schema)
+    return run_tiles(
+        tile_anchors(spark, grid, tile_cells), grid, tile_cells, 0,
+        per_tile, schema,
+    )
 
 
 def best_fit_roughness(
@@ -78,54 +74,46 @@ def best_fit_roughness(
     observed spectrum = Hann-windowed detrended FFT, binned medians;
     candidate = diamond-square at H with starting scale = std of the
     detrended tile, Hann FFT without detrending; score = L2 of
-    log10-power differences over jointly valid bins.  All (tile, H)
-    pairs run concurrently; one min_by picks the winner per tile."""
-    hs = grid_df.sparkSession.range(n_h).select(
-        F.col("id").cast("int").alias("h_idx")
-    )
-    tiles = grid_df.withColumn(
-        "tile_id", grid.tile_id(F.col("cell_row"), F.col("cell_col"), tile_cells)
-    ).crossJoin(F.broadcast(hs))
-    schema = "tile_id long, h double, l2 double"
+    log10-power differences over jointly valid bins.  Each tile computes
+    its observed spectrum once and scores every H; the first H with the
+    lowest score wins."""
+    hs = np.linspace(0.0, 1.0, num=max(n_h, 2))[:n_h]
+    schema = "tile_id long, best_h double, l2 double"
 
-    def per_pair(pdf: pd.DataFrame) -> pd.DataFrame:
-        h_idx = int(pdf["h_idx"].iloc[0])
-        h = float(np.linspace(0.0, 1.0, num=max(n_h, 2))[h_idx])
-        tile_id, _, _, z, x, y = dense_tile(pdf, grid, tile_cells)
+    def per_tile(win: TileWindow, dense: dict) -> dict:
+        z, x, y = tile_surface(grid, win, dense["value"])
         obs = sk.fft_forward(z, x, y, grid.cell, grid.cell, hann=True)
         bo = sk.binned_median_power(obs["L"], obs["power"], n_bins)
         scale = float(np.std(z - obs["plane"]))
-        gen = diamond_square(
-            z.shape[0], z.shape[1], h, scale,
-            seed_base + int(tile_id) * 1000 + h_idx,
-        )
-        gf = sk.fft_forward(
-            gen, x, y, grid.cell, grid.cell, hann=True, detrend=False
-        )
-        bg = sk.binned_median_power(gf["L"], gf["power"], n_bins)
-        good = (
-            ~np.isnan(bo["median_power"]) & ~np.isnan(bg["median_power"])
-            & (bo["median_power"] > 0) & (bg["median_power"] > 0)
-        )
-        l2 = float(
-            np.sum(
+        l2 = np.empty(len(hs))
+        for h_idx, h in enumerate(hs):
+            gen = diamond_square(
+                z.shape[0], z.shape[1], float(h), scale,
+                seed_base + win.tile_id * 1000 + h_idx,
+            )
+            gf = sk.fft_forward(
+                gen, x, y, grid.cell, grid.cell, hann=True, detrend=False
+            )
+            bg = sk.binned_median_power(gf["L"], gf["power"], n_bins)
+            good = (
+                ~np.isnan(bo["median_power"]) & ~np.isnan(bg["median_power"])
+                & (bo["median_power"] > 0) & (bg["median_power"] > 0)
+            )
+            l2[h_idx] = np.sum(
                 (
                     np.log10(bg["median_power"][good])
                     - np.log10(bo["median_power"][good])
                 )
                 ** 2
             )
-        )
-        return pd.DataFrame(
-            {"tile_id": [tile_id], "h": [h], "l2": [l2]}
-        )
+        best = int(np.argmin(l2))
+        return {
+            "tile_id": np.array([win.tile_id], dtype="int64"),
+            "best_h": hs[best:best + 1],
+            "l2": l2[best:best + 1],
+        }
 
-    scored = tiles.groupBy("tile_id", "h_idx").applyInPandas(
-        per_pair, schema
-    )
-    return scored.groupBy("tile_id").agg(
-        F.min_by("h", "l2").alias("best_h"), F.min("l2").alias("l2")
-    )
+    return value_tiles(grid_df, grid, tile_cells, per_tile, schema)
 
 
 # ---------------------------------------------------------------------------

@@ -358,9 +358,9 @@ def q_grid_idw_filled(spark: SparkSession, sf_dir: str) -> DataFrame:
     fallback — empty cells take the 1/d^2-weighted mean of filled cells
     within Chebyshev radius 6 (``window_size=6``,
     pointCloudCreation.py:311-322 at :320); cells with no filled neighbor
-    in range stay explicit NoData.  The fill is a broadcast-offset
-    equi-join + one agg (operators/gridding.py:145-209) — the oracle
-    replays the identical ring-union weighted mean."""
+    in range stay explicit NoData.  The fill is the ``idw_fill`` stencil
+    kernel on the tiled stencil engine (gridding.fill_empty_cells) — the
+    oracle replays the identical weighted mean as an offset join."""
     g = gridding.grid_points(points_df(spark, sf_dir), G, output_type="idw")
     out = gridding.fill_empty_cells(g, G, window_size=6)
     # binary 2^-13 hashed precision: IDW weights are irrational and the
@@ -4626,7 +4626,7 @@ def q_fft_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 #                 tile origins (r0, c0) are multiples of 50 so global
 #                 (cell_row + cell_col) parity equals in-tile parity.
 # Missing cells are filled with the tile's fitted plane (spectral.py
-# dense_tile) so they detrend to exactly 0 and the refit over the full
+# tile_surface) so they detrend to exactly 0 and the refit over the full
 # tile equals the present-cell LSQ fit (zero-residual points don't move
 # the argmin) — the oracle therefore sums over present gmean rows only.
 # Engine fits via lstsq, oracle via Cramer: the coefficients agree only to
@@ -5665,7 +5665,8 @@ def q_diamond_square(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_roughness_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X9: brute-force best-fit diamond-square roughness per tile
     (calcBestFittingDiamondSquareRoughness, fftGrid.py:482-539) — the
-    serial 20-candidate loop re-expressed as a parallel union + min_by."""
+    serial candidate loop runs inside each tile's task, tiles in
+    parallel."""
     g = gridding.grid_points(points_df(spark, sf_dir), G, output_type="mean")
     out = terrainops.best_fit_roughness(g, G, n_h=10, tile_cells=50)
     return out.select(

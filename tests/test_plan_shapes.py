@@ -203,6 +203,59 @@ def test_stencil_suite_two_arrow_stages(spark):
     assert "CartesianProduct" not in plan
 
 
+TILE_OPERATORS = [
+    "fill_empty_cells", "fft_power_tiles", "fft_filter_tiles",
+    "fft_binned_power_tiles", "spectral_break_tiles", "diamond_square_tiles",
+    "best_fit_roughness",
+]
+
+
+@pytest.mark.parametrize("name", TILE_OPERATORS)
+def test_tile_operator_build_runs_no_job(spark, name):
+    """Building a per-tile raster operator launches no Spark job, and the
+    operator runs on the one tile runner: applyInArrow, never
+    applyInPandas."""
+    import numpy as np
+    import pandas as pd
+
+    from rgr_pdal_topo_spark.grid import GridSpec
+    from rgr_pdal_topo_spark.operators import gridding, spectral, terrain
+
+    g = GridSpec(cell=10.0, nrows=48, ncols=48)
+    r, c = np.nonzero(np.random.default_rng(1).random((48, 48)) > 0.2)
+    dem = spark.createDataFrame(pd.DataFrame({
+        "cell_row": r.astype("int32"), "cell_col": c.astype("int32"),
+        "value": 100.0 + 0.1 * r + np.sin(c / 3.0),
+        "n": np.ones(len(r), "int64"),
+    }))
+    builders = {
+        "fill_empty_cells": lambda: gridding.fill_empty_cells(dem, g),
+        "fft_power_tiles": lambda: spectral.fft_power_tiles(dem, g, 24),
+        "fft_filter_tiles": lambda: spectral.fft_filter_tiles(
+            dem, g, [("lowpass", {"minimum_wavelength": 100.0})], 24),
+        "fft_binned_power_tiles": lambda: spectral.fft_binned_power_tiles(
+            dem, g, 24),
+        "spectral_break_tiles": lambda: spectral.spectral_break_tiles(
+            dem, g, 24),
+        "diamond_square_tiles": lambda: terrain.diamond_square_tiles(
+            spark, g, 0.7, tile_cells=24),
+        "best_fit_roughness": lambda: terrain.best_fit_roughness(
+            dem, g, n_h=3, tile_cells=24),
+    }
+    sc = spark.sparkContext
+    group = f"tile-build-{name}"
+    sc.setJobGroup(group, group)
+    try:
+        df = builders[name]()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    plan = _plan(df)
+    assert "FlatMapGroupsInArrow" in plan
+    assert "FlatMapGroupsInPandas" not in plan
+
+
 def test_pages_geocode_zero_shuffle_no_python(spark):
     """Geocoding pages into cell ids is a pure scan -> project: any
     Exchange or Python worker here would serialize 10^12 rows for
