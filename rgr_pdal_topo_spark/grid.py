@@ -18,12 +18,12 @@ Cell encoding is the relational replacement for ``getRowColFromXY``
 
 For multi-tile scale-out, cells roll up into square tiles of
 ``tile_cells`` x ``tile_cells`` cells (``tile_id`` row-major); ``GridSpec``
-owns the tile geometry (``tile_counts``, ``tile_window``).  Every per-tile
-raster operator (stencils, pit fill, empty-cell fill, FFT and terrain
-tiles) materializes one tile (+halo) per ``applyInArrow`` group through
-the one tile runner (operators/stencils.py), mirroring the reference's
-tiled requests with ``tileOverlap`` halo (pointCloudCreation.py:458-495,
-overlap at :489).
+owns the tile geometry (``tile_counts``, ``tile_window``, ``ring_tiles``).
+Every per-tile raster operator (stencils, pit fill, empty-cell fill, FFT
+and terrain tiles) materializes one tile (+halo) per ``applyInArrow``
+group through the one tile runner (operators/stencils.py), mirroring the
+reference's tiled requests with ``tileOverlap`` halo
+(pointCloudCreation.py:458-495, overlap at :489).
 """
 
 from __future__ import annotations
@@ -136,6 +136,27 @@ class GridSpec:
             F.floor(row / F.lit(tile_cells)).cast("long") * F.lit(tiles_x)
             + F.floor(col / F.lit(tile_cells)).cast("long")
         )
+
+    def ring_tiles(self, row: Column, col: Column, tile_cells: int) -> Column:
+        """Array of the ids of the tiles whose 1-cell halo ring (the
+        ``tile_window`` with halo 1, minus the core) holds the cell: the
+        neighbours toward which the cell sits on its own tile's edge."""
+        T = tile_cells
+        ty, tx = self.tile_counts(T)
+        tr, tc = F.floor(row / T), F.floor(col / T)
+        edge_r = {-1: row == tr * T, 0: F.lit(True), 1: row == tr * T + (T - 1)}
+        edge_c = {-1: col == tc * T, 0: F.lit(True), 1: col == tc * T + (T - 1)}
+        ids = [
+            F.when(
+                edge_r[a] & edge_c[b]
+                & (tr + a >= 0) & (tr + a < ty) & (tc + b >= 0) & (tc + b < tx),
+                (tr + a) * tx + (tc + b),
+            )
+            for a in (-1, 0, 1)
+            for b in (-1, 0, 1)
+            if (a, b) != (0, 0)
+        ]
+        return F.array_compact(F.array(*ids))
 
     # ---- SQL fragment encoders (DuckDB-compatible ANSI; identical math) --------
     def sql_col_of(self, x: str) -> str:

@@ -13,8 +13,9 @@ algorithm by its true data dependence:
     monotonically to the sequential whole-grid fill (block Gauss-Seidel
     on the minimax Bellman equation; starting from below instead can
     lock in mutual underestimates across tile seams).  Asserted
-    cell-exact in tests/test_flow.py.  Only tiles whose padded window
-    holds a changed cell are recomputed after round 1.
+    cell-exact in tests/test_flow.py.  A tile's flood reads only its core
+    z and its halo ring, so after round 1 only tiles whose halo ring holds
+    a changed cell are re-flooded; a one-tile grid takes one flood.
   * D8 direction (G2)   — pure 3x3 stencil (functions/kernels.d8_flow_dir)
     through the tiled stencil engine: one shuffle.
   * basin labeling (G8) — pointer doubling on the downstream-edge table:
@@ -38,7 +39,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from rgr_pdal_topo_spark.functions.flow_kernels import (
@@ -54,6 +55,7 @@ from rgr_pdal_topo_spark.operators.stencils import (
     run_stencil,
     run_tiles,
 )
+from rgr_pdal_topo_spark.session import eager_jobs
 
 #: Flow analyses run on a coarser DEM than the stencil suite so that the
 #: sf0.01 oracle grid is dense (cells mostly non-empty): 50x50 cells of
@@ -82,10 +84,15 @@ def fill_dem(
     neighbor tiles' current estimates, (b) true grid-border cells at z,
     (c) cells adjacent to NoData holes at z (the _findMaskBoundaries seed
     set, baseGrid.py:1198-1229).  Estimates decrease monotonically to the
-    sequential fill.  A tile's flood reads only its halo ring's estimates,
-    so after round 1 only tiles whose padded window holds a changed cell
-    are re-run.  Tiles go through the stencil engine's halo replication
-    and per-tile runner (operators/stencils.py).
+    sequential fill.  A tile's flood reads only its core z and its halo
+    ring's estimates, so after round 1 only tiles whose halo ring holds a
+    cell that changed in the last round are re-run, and the fixpoint is
+    reached when no halo ring changed.  A grid of one tile has no halo
+    ring: its first flood is the fill, returned lazily (no Spark job).
+    Each round of a multi-tile grid is one tagged checkpoint
+    (``session.eager_jobs``) whose ``observe`` collects the next round's
+    tiles.  Tiles go through the stencil engine's halo replication and
+    per-tile runner (operators/stencils.py).
     """
     dx = dy = float(grid.cell)
     T = tile_cells
@@ -101,9 +108,7 @@ def fill_dem(
             & grid.contains(F.col("cell_row"), F.col("cell_col"))
         )
         .withColumn("fill", F.lit(float("inf")))
-        .persist()
     )
-    est.count()
 
     def flood(win, dense: dict) -> dict:
         z, estv = dense["z"], dense["fill"]
@@ -136,17 +141,25 @@ def fill_dem(
             arr, dx, dy, agg_slope, seed_mask=seed, seed_elev=arr
         )
         # NoData core cells come out NaN -> NULL and match no est row
-        return core_cells(win, fill=out[win.core])
+        return core_cells(win, z=z[win.core], fill=out[win.core])
 
-    active: DataFrame | None = None  # None = all tiles
-    converged = False
+    schema = "cell_row int, cell_col int, z double, fill double"
+    if grid.tile_counts(T) == (1, 1):
+        # no halo ring: the first flood is the fill, and its rows with a
+        # z are est's rows
+        return run_tiles(
+            replicate_halo(est, grid, T, 1), grid, T, 1, flood, schema
+        ).filter(F.col("z").isNotNull())
+
+    spark = grid_df.sparkSession
+    est = est.persist()  # round 1 reads it twice; later rounds, checkpoints
+    ring = grid.ring_tiles(F.col("cell_row"), F.col("cell_col"), T)
+    active: list[int] | None = None  # None = all tiles
     for _ in range(max_rounds):
         tiles = replicate_halo(est, grid, T, 1)
         if active is not None:
-            tiles = tiles.join(F.broadcast(active), "tile_id", "left_semi")
-        new_fill = run_tiles(
-            tiles, grid, T, 1, flood, "cell_row int, cell_col int, fill double"
-        )
+            tiles = tiles.filter(F.col("tile_id").isin(active))
+        new_fill = run_tiles(tiles, grid, T, 1, flood, schema).drop("z")
         updated = (
             est.withColumnRenamed("fill", "fill_old")
             .join(new_fill, ["cell_row", "cell_col"], "left")
@@ -158,27 +171,24 @@ def fill_dem(
                 (F.col("fill").isNotNull() & (F.col("fill") != F.col("fill_old")))
                 .alias("changed"),
             )
-            .localCheckpoint(eager=True)
         )
-        changed = updated.filter("changed")
-        n_changed = changed.count()
-        old = est
-        est = updated.drop("changed").persist()
-        old.unpersist()
-        if n_changed == 0:
-            converged = True
-            break
-        # next round: only tiles whose padded window holds a changed cell
-        active = replicate_halo(
-            changed.select("cell_row", "cell_col"), grid, T, 1
-        ).select("tile_id").distinct()
-    if not converged:
-        raise RuntimeError(
-            f"fill_dem did not converge within {max_rounds} rounds "
-            "(rounds needed grow with the tile-graph diameter of the "
-            "deepest depression; raise max_rounds or tile_cells)"
-        )
-    return est
+        # next round: the tiles whose halo ring holds a changed cell,
+        # gathered by the checkpoint's own job
+        obs = Observation()
+        with eager_jobs(spark):
+            updated = updated.observe(
+                obs, F.collect_set(F.when(F.col("changed"), ring)).alias("ring")
+            ).localCheckpoint(eager=True)
+        est.unpersist()
+        est = updated.drop("changed")
+        active = sorted({t for ids in obs.get["ring"] for t in ids})
+        if not active:
+            return est
+    raise RuntimeError(
+        f"fill_dem did not converge within {max_rounds} rounds "
+        "(rounds needed grow with the tile-graph diameter of the "
+        "deepest depression; raise max_rounds or tile_cells)"
+    )
 
 
 # ---------------------------------------------------------------------------

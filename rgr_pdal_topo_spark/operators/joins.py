@@ -19,8 +19,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
+
+from rgr_pdal_topo_spark.session import eager_jobs
 
 # --------------------------------------------------------------------------
 # J1: point-in-polygon
@@ -371,40 +373,60 @@ def knn_join_grid(
     global argmin; at realistic densities the fallback set is empty, so the
     plan is one hash join + one agg over ~(9/ncells)·|points| candidates
     instead of |points| x |queries|.
+
+    Each query also gets one NULL candidate, which never wins the argmin,
+    so the checkpointed ring argmin holds exactly one row per query and
+    the fallback set is a filter over it (ring-best missing or farther
+    than bucket), not a join back to ``queries``; the checkpoint's own
+    job counts that set (``observe``).  The checkpoint is the builder's
+    only work, under the builder job tag (``session.eager_jobs``).
     """
     p = points.withColumn(
         "bx", F.floor(F.col("x") / F.lit(bucket)).cast("long")
     ).withColumn("by", F.floor(F.col("y") / F.lit(bucket)).cast("long"))
     spark = points.sparkSession
-    offs = spark.createDataFrame(
-        [(i, j) for i in (-1, 0, 1) for j in (-1, 0, 1)], "ox long, oy long"
-    )
+    # the 3x3 bucket offsets as a generator: no relation to broadcast
+    offs = F.inline(F.array(*[
+        F.struct(
+            F.lit(i).cast("long").alias("ox"), F.lit(j).cast("long").alias("oy")
+        )
+        for i in (-1, 0, 1) for j in (-1, 0, 1)
+    ]))
     q = (
         queries.withColumn(
             "bx0", F.floor(F.col(qx) / F.lit(bucket)).cast("long")
         )
         .withColumn("by0", F.floor(F.col(qy) / F.lit(bucket)).cast("long"))
-        .crossJoin(offs)
+        .select("*", offs)
         .withColumn("bx", F.col("bx0") + F.col("ox"))
         .withColumn("by", F.col("by0") + F.col("oy"))
         .drop("bx0", "by0", "ox", "oy")
     )
-    cand = p.join(F.broadcast(q), ["bx", "by"])
-    best = _nearest(cand, qid, qx, qy, value_col)
+    cand = p.join(F.broadcast(q), ["bx", "by"]).unionByName(
+        queries, allowMissingColumns=True
+    )
+    ring_hit = F.col("dist2") <= F.lit(bucket * bucket)
+    ring_miss = ~F.coalesce(ring_hit, F.lit(False))
     # best is one row per query (tiny): materialize it once so the
     # resolved/unresolved split and the union don't re-execute the
     # candidate join DAG (localCheckpoint frees with the DataFrame,
-    # unlike persist which would leak across calls)
-    best = best.localCheckpoint(eager=True)
-    resolved = best.filter(F.col("dist2") <= F.lit(bucket * bucket))
-    unresolved = queries.join(
-        resolved.select(qid), qid, "left_anti"
-    )
-    if unresolved.isEmpty():  # common case: ring guarantee held everywhere
+    # unlike persist which would leak across calls); the same job counts
+    # the queries the ring leaves unresolved
+    misses = Observation()
+    with eager_jobs(spark):
+        best = (
+            _nearest(cand, qid, qx, qy, value_col)
+            .observe(misses, F.count_if(ring_miss).alias("n"))
+            .localCheckpoint(eager=True)
+        )
+    resolved = best.filter(ring_hit)
+    if misses.get["n"] == 0:  # common case: ring guarantee held everywhere
         return _nn_output(resolved, max_dist, sentinel)
+    unresolved = best.filter(ring_miss)
     # rare fallback: exact global argmin for the unresolved handful
     fb = _nearest(
-        points.crossJoin(F.broadcast(unresolved)), qid, qx, qy, value_col
+        points.crossJoin(F.broadcast(unresolved.select(qid, qx, qy))),
+        qid, qx, qy, value_col,
     )
     return _nn_output(resolved.unionByName(fb), max_dist, sentinel)
 
@@ -413,7 +435,9 @@ def _nearest(
     cand: DataFrame, qid: str, qx: str, qy: str, value_col: str
 ) -> DataFrame:
     """Per-query argmin over (point, query) candidate pairs: one agg of
-    min(struct(dist2, pid, v)), so ties break by pid."""
+    min(struct(dist2, pid, v)), so ties break by pid.  A candidate with
+    NULL pid (no point) never wins; a query with no other candidate gets
+    NULL dist2/pid/_v."""
     d2 = (F.col("x") - F.col(qx)) * (F.col("x") - F.col(qx)) + (
         F.col("y") - F.col(qy)
     ) * (F.col("y") - F.col(qy))
@@ -422,8 +446,12 @@ def _nearest(
         .groupBy(qid, qx, qy)
         .agg(
             F.min(
-                F.struct(
-                    F.col("dist2"), F.col("pid"), F.col(value_col).alias("v")
+                F.when(
+                    F.col("pid").isNotNull(),
+                    F.struct(
+                        F.col("dist2"), F.col("pid"),
+                        F.col(value_col).alias("v"),
+                    ),
                 )
             ).alias("b")
         )
@@ -557,9 +585,10 @@ def pip_join_rtree(points: DataFrame, polygons: DataFrame) -> DataFrame:
     definition, so L stays small (tests/test_joins.py pins the measured
     crossover at 10^5 polygons).
     """
-    rows = polygons.select(
-        "polygon_id", "xmin", "ymin", "width", "height"
-    ).collect()
+    with eager_jobs(polygons.sparkSession):
+        rows = polygons.select(
+            "polygon_id", "xmin", "ymin", "width", "height"
+        ).collect()
     if not rows:  # empty dimension: no pairs, schema intact
         return points.sparkSession.createDataFrame(
             [], "pid long, polygon_id int"
@@ -673,12 +702,14 @@ def pip_join(points: DataFrame, polygons: DataFrame) -> DataFrame:
     plan, so the pick is a pure function of the polygon-layer
     cardinality (:func:`pick_pip_strategy`).  The pick pays one COUNT
     job on the dimension, the same cost class as the rtree's own
-    driver-side collect and negligible next to the fact-side scan.
-    Callers that want one fixed strategy call its function directly.
+    driver-side collect and negligible next to the fact-side scan; both
+    run under the builder job tag (``session.eager_jobs``).  Callers that
+    want one fixed strategy call its function directly.
 
     Returns the (pid, polygon_id) pair set — the common schema of the
     three strategies."""
-    strategy = pick_pip_strategy(polygons.count())
+    with eager_jobs(polygons.sparkSession):
+        strategy = pick_pip_strategy(polygons.count())
     if strategy == "rect":
         return pip_join_rect(points, polygons).select("pid", "polygon_id")
     if strategy == "rtree":

@@ -65,16 +65,18 @@ def replicate_halo(
     if halo > tile_cells:
         raise ValueError(f"halo {halo} must be <= tile_cells {tile_cells}")
     ty, tx = grid.tile_counts(tile_cells)
-    # halo <= tile_cells: a cell's tiles are its home tile and neighbours
-    offs = df.sparkSession.range(9).selectExpr(
-        "CAST(id DIV 3 - 1 AS INT) AS dtr", "CAST(id % 3 - 1 AS INT) AS dtc"
-    )
+    # halo <= tile_cells: a cell's tiles are its home tile and neighbours;
+    # the 3x3 offsets are a generator, so no relation is broadcast
+    offs = F.inline(F.array(*[
+        F.struct(F.lit(a).alias("dtr"), F.lit(b).alias("dtc"))
+        for a in (-1, 0, 1) for b in (-1, 0, 1)
+    ]))
     t, h = F.lit(tile_cells), F.lit(halo)
     row, col = F.col("cell_row"), F.col("cell_col")
     tr, tc = F.col("tr"), F.col("tc")
     return (
         df.filter(grid.contains(row, col))
-        .crossJoin(F.broadcast(offs))
+        .select("*", offs)
         .withColumn("tr", F.floor(row / t).cast("int") + F.col("dtr"))
         .withColumn("tc", F.floor(col / t).cast("int") + F.col("dtc"))
         .filter(

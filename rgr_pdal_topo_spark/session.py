@@ -7,8 +7,15 @@ on a real cluster the same builder is used by spark-submit with master unset.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+#: Job tag on every Spark job a builder runs before it returns (fixpoint
+#: rounds, checkpoints, driver-side collects and counts), so a caller can
+#: tell that work from its own actions: ``getJobIdsForTag`` on the JVM
+#: status tracker.  A tag, not a job group: the caller's group stays set.
+EAGER_JOB_TAG = "rgr-eager-build"
 
 
 def get_spark(
@@ -55,3 +62,19 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def eager_jobs(spark: SparkSession):
+    """Tag the jobs started inside the block with ``EAGER_JOB_TAG``.
+
+    Nests: an inner block leaves the tag to the block that added it."""
+    sc = spark.sparkContext
+    added = EAGER_JOB_TAG not in sc.getJobTags()
+    if added:
+        sc.addJobTag(EAGER_JOB_TAG)
+    try:
+        yield
+    finally:
+        if added:
+            sc.removeJobTag(EAGER_JOB_TAG)

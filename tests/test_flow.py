@@ -11,14 +11,22 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from rgr_pdal_topo_spark.functions import flow_kernels as fk
 from rgr_pdal_topo_spark.functions.kernels import KERNELS
 from rgr_pdal_topo_spark.grid import GridSpec
 from rgr_pdal_topo_spark.operators import flow
+from rgr_pdal_topo_spark.operators.stencils import replicate_halo
 
 GRID = GridSpec(x0=0.0, y0=0.0, cell=10.0, nrows=40, ncols=48)
 AGG = 1e-7
+#: jobs fill_dem launches on make_dem(with_holes=True), 3x3 tiles of 16:
+#: one tagged checkpoint per round, which also yields the next round's
+#: tiles (those whose halo ring changed), and no confirmation round.  A
+#: count per round, a semi-join on the tiles of every changed cell and a
+#: confirmation round took 42.
+MULTI_TILE_BUILD_JOBS = 17
 
 
 def make_dem(with_holes: bool = False) -> np.ndarray:
@@ -78,16 +86,11 @@ def test_priority_flood_fills_pits():
     assert interior_flat == 0
 
 
-@pytest.mark.parametrize("holes", [False, True, "tile"])
-def test_distributed_fill_matches_sequential(spark, holes):
-    z = make_dem(with_holes=holes is True)
-    if holes == "tile":
-        z[0:16, 32:48] = np.nan  # the whole of tile (0, 2) is NoData
+def assert_fill_matches_sequential(fill_df, z: np.ndarray) -> None:
+    """fill_dem output equals the whole-grid priority flood, cell for
+    cell, and holds no row for a NoData cell."""
     expected = oracle_fill(z)
-    out = (
-        flow.fill_dem(dem_df(spark, z), GRID, AGG, tile_cells=16)
-        .toPandas()
-    )
+    out = fill_df.toPandas()
     got = np.full_like(z, np.nan)
     got[out["cell_row"], out["cell_col"]] = out["fill"]
     valid = ~np.isnan(z)
@@ -95,6 +98,76 @@ def test_distributed_fill_matches_sequential(spark, holes):
         np.nanmax(np.abs(got - expected))
     )
     assert np.all(np.isnan(got[~valid]))
+
+
+def build_jobs(spark, group: str, build):
+    """Run ``build()`` under job group ``group``; return its result and
+    the ids of the Spark jobs it launched."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("holes", [False, True, "tile"])
+def test_distributed_fill_matches_sequential(spark, holes):
+    z = make_dem(with_holes=holes is True)
+    if holes == "tile":
+        z[0:16, 32:48] = np.nan  # the whole of tile (0, 2) is NoData
+    dem = dem_df(spark, z)
+    fill, jobs = build_jobs(
+        spark, f"fill-3x3-{holes}",
+        lambda: flow.fill_dem(dem, GRID, AGG, tile_cells=16),
+    )
+    if holes is True:
+        assert len(jobs) <= MULTI_TILE_BUILD_JOBS
+    assert_fill_matches_sequential(fill, z)
+
+
+@pytest.mark.parametrize("T", [16, 7])
+def test_ring_tiles_are_halo_windows_minus_home(spark, T):
+    """GridSpec.ring_tiles, the tiles fill_dem re-runs for a changed cell,
+    names exactly the tiles replicate_halo copies the cell to besides its
+    home tile (partial tiles at the south edge included)."""
+    rr, cc = np.meshgrid(
+        np.arange(GRID.nrows), np.arange(GRID.ncols), indexing="ij"
+    )
+    cells = spark.createDataFrame(pd.DataFrame({
+        "cell_row": rr.ravel().astype("int32"),
+        "cell_col": cc.ravel().astype("int32"),
+    }))
+    row, col = F.col("cell_row"), F.col("cell_col")
+    got = {
+        (r.cell_row, r.cell_col): set(r.ring)
+        for r in cells.select(
+            row, col, GRID.ring_tiles(row, col, T).alias("ring")
+        ).collect()
+    }
+    home = GRID.tile_id(row, col, T)
+    exp = {cell: set() for cell in got}
+    for r in replicate_halo(cells, GRID, T, 1).filter(
+        F.col("tile_id") != home
+    ).collect():
+        exp[(r.cell_row, r.cell_col)].add(r.tile_id)
+    assert got == exp
+
+
+def test_single_tile_fill_is_one_lazy_flood(spark):
+    """A one-tile grid has no halo ring, so its first flood is the fill:
+    the build launches no job and the output is the sequential fill."""
+    z = make_dem(with_holes=True)
+    dem = dem_df(spark, z)
+    assert GRID.tile_counts(48) == (1, 1)
+    fill, jobs = build_jobs(
+        spark, "fill-one-tile",
+        lambda: flow.fill_dem(dem, GRID, AGG, tile_cells=48),
+    )
+    assert jobs == []
+    assert_fill_matches_sequential(fill, z)
 
 
 def test_fill_drops_out_of_extent_rows(spark):

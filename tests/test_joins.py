@@ -169,6 +169,9 @@ def _knn_oracle(pts_pdf, gps_pdf, bucket, max_dist=100.0):
     rows, n_fallback = [], 0
     for g in gps_pdf.itertuples():
         d2 = (x - g.gx) * (x - g.gx) + (y - g.gy) * (y - g.gy)
+        if not len(d2):  # no point at all: no nearest neighbour, no row
+            n_fallback += 1
+            continue
         dmin = d2.min()
         i = np.flatnonzero(d2 == dmin)[np.argmin(pid[d2 == dmin])]
         dist = math.sqrt(dmin)
@@ -203,6 +206,49 @@ def test_knn_broadcast_oracle(spark, pts, pts_pdf):
             np.testing.assert_array_equal(
                 got[c].to_numpy(), exp[c].to_numpy(), f"{c} @ {bucket}"
             )
+
+
+@pytest.mark.parametrize("case", ["empty_ring", "no_points", "no_queries"])
+def test_knn_edge_inputs(spark, case):
+    """knn_join_grid against the brute-force oracle, exactly, on edge
+    inputs: queries whose 3x3 bucket ring holds no point (their only ring
+    candidate is the NULL one, so they take the global fallback; one is
+    within max_dist, one beyond it), an empty point set (no query has a
+    nearest point: no rows) and an empty query set."""
+    rng = np.random.default_rng(3)
+    n = 0 if case == "no_points" else 200
+    pts_pdf = pd.DataFrame({
+        "pid": np.arange(n, dtype="int64"),
+        "x": rng.uniform(0.0, 100.0, n),
+        "y": rng.uniform(0.0, 100.0, n),
+        "z": rng.normal(100.0, 5.0, n),
+    })
+    q = 0 if case == "no_queries" else 4
+    gps_pdf = pd.DataFrame({
+        "gps_id": np.arange(q, dtype="int64"),
+        "gx": [12.5, 55.0, 131.0, 400.0][:q],
+        "gy": [40.0, 71.5, 50.0, 400.0][:q],
+    })
+    pts = spark.createDataFrame(
+        pts_pdf, "pid long, x double, y double, z double"
+    )
+    gps = spark.createDataFrame(gps_pdf, "gps_id long, gx double, gy double")
+    got = (
+        joins.knn_join_grid(pts, gps, bucket=10.0, max_dist=100.0)
+        .select("gps_id", "pid", "nn_dist", "nn_value")
+        .toPandas()
+        .sort_values("gps_id")
+        .reset_index(drop=True)
+    )
+    exp, n_fallback = _knn_oracle(pts_pdf, gps_pdf, 10.0)
+    if case == "empty_ring":
+        assert n_fallback >= 2
+        assert (exp.nn_value == -9999.0).sum() == 1  # (400, 400) only
+    assert len(got) == len(exp) == (4 if case == "empty_ring" else 0)
+    for c in ["gps_id", "pid", "nn_dist", "nn_value"]:
+        np.testing.assert_array_equal(
+            got[c].to_numpy(), exp[c].to_numpy(), f"{c} @ {case}"
+        )
 
 
 def test_hag(spark, pts):

@@ -81,6 +81,66 @@ def test_lineage_resume_equals_single_shot(spark, tmp_path):
     assert cp.validate(pts).count() == 0
 
 
+def test_lineage_zero_output_batch_is_recorded(spark, tmp_path):
+    """A batch whose transform yields no rows gets a manifest row with
+    n_rows = 0, so a resume does not recompute it, and a partition an
+    interrupted earlier run left for it is removed."""
+    from rgr_pdal_topo_spark.plans.lineage import BatchCheckpointer
+    from rgr_pdal_topo_spark.synth import points_df
+
+    pts = points_df(spark, SF_DIR)
+    batched = pts.withColumn(
+        "batch_id", F.pmod(F.col("pid"), F.lit(4)).cast("int")
+    )
+
+    def transform(df):
+        return df.filter(F.col("batch_id") != 1).groupBy("batch_id", "cls").agg(
+            F.count(F.lit(1)).alias("n")
+        )
+
+    cp = BatchCheckpointer(str(tmp_path / "zero"), n_batches=4)
+    # batch 0's rows under batch 1's partition: what a crash between the
+    # data and manifest writes of a run with other inputs could leave
+    transform(batched.filter("batch_id = 0")).drop("batch_id").write.parquet(
+        f"{cp.out_path}/batch_id=1"
+    )
+    cp.run(pts.filter(F.pmod(F.col("pid"), F.lit(4)) < 2), transform)
+    done = {r.batch_id: r.n_rows for r in cp.completed(spark).collect()}
+    assert done[0] > 0 and done[1] == 0 and sorted(done) == [0, 1]
+
+    out = cp.run(pts, transform)
+    rows = cp.completed(spark).collect()
+    # one manifest row per batch: batch 1 was not run again
+    assert sorted(r.batch_id for r in rows) == [0, 1, 2, 3]
+    assert {r.batch_id: r.n_rows for r in rows}[1] == 0
+    key = ["batch_id", "cls"]
+    got = out.toPandas().sort_values(key).reset_index(drop=True)
+    exp = transform(batched).toPandas().sort_values(key).reset_index(drop=True)
+    assert got[key + ["n"]].values.tolist() == exp[key + ["n"]].values.tolist()
+
+
+def test_lineage_output_schema_is_written_layout(spark, tmp_path):
+    """run returns the data columns, then batch_id int: the columns,
+    types and nullability that inferring the written output's schema
+    gives, without running that inference."""
+    from rgr_pdal_topo_spark.plans.lineage import BatchCheckpointer
+    from rgr_pdal_topo_spark.synth import points_df
+
+    def transform(df):
+        return df.groupBy("batch_id", "cls").agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum("z").alias("sz"),
+            F.collect_list("pid").alias("pids"),
+            F.lit("x").alias("tag"),
+            F.struct(F.min("z").alias("lo"), F.max("z").alias("hi")).alias("zr"),
+        ).select("n", "batch_id", "cls", "sz", "pids", "tag", "zr")
+
+    cp = BatchCheckpointer(str(tmp_path / "schema"), n_batches=4)
+    out = cp.run(points_df(spark, SF_DIR), transform)
+    assert out.columns == ["n", "cls", "sz", "pids", "tag", "zr", "batch_id"]
+    assert out.schema == spark.read.parquet(cp.out_path).schema
+
+
 def test_streaming_equals_batch(spark, tmp_path):
     import shutil
 

@@ -256,6 +256,48 @@ def test_tile_operator_build_runs_no_job(spark, name):
     assert "FlatMapGroupsInPandas" not in plan
 
 
+def test_eager_builders_tag_every_build_job(spark, tmp_path):
+    """Every job the eager builders start before returning carries the
+    builder job tag, inside the caller's job group: the fill_dem rounds
+    (3x3 tiles), the kNN checkpoint and fallback test, pip_join's
+    strategy count, the rtree's polygon collect and BatchCheckpointer.run."""
+    import numpy as np
+    import pandas as pd
+
+    from rgr_pdal_topo_spark.grid import GridSpec
+    from rgr_pdal_topo_spark.operators import flow, joins
+    from rgr_pdal_topo_spark.plans.lineage import BatchCheckpointer
+    from rgr_pdal_topo_spark.session import EAGER_JOB_TAG
+    from rgr_pdal_topo_spark.synth import gps_df, points_df, polygons_df
+
+    g = GridSpec(cell=10.0, nrows=48, ncols=48)
+    r, c = np.nonzero(np.random.default_rng(1).random((48, 48)) > 0.2)
+    dem = spark.createDataFrame(pd.DataFrame({
+        "cell_row": r.astype("int32"), "cell_col": c.astype("int32"),
+        "value": 100.0 + 0.1 * r + np.sin(c / 3.0),
+    }))
+    pts, gps = points_df(spark, SF_DIR), gps_df(spark, SF_DIR)
+    polys = polygons_df(spark, SF_DIR)
+    sc = spark.sparkContext
+    group = "eager-build-tags"
+    sc.setJobGroup(group, group)
+    try:
+        flow.fill_dem(dem, g, tile_cells=16)
+        joins.knn_join_grid(pts, gps, bucket=10.0)
+        joins.pip_join(pts, polys)
+        joins.pip_join_rtree(pts, polys)
+        BatchCheckpointer(str(tmp_path / "cp"), n_batches=2).run(
+            pts, lambda df: df
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = set(sc.statusTracker().getJobIdsForGroup(group))
+    tagged = set(sc._jsc.sc().statusTracker().getJobIdsForTag(EAGER_JOB_TAG))
+    assert jobs and jobs <= tagged, sorted(jobs - tagged)
+    assert EAGER_JOB_TAG not in sc.getJobTags()
+
+
 def test_pages_geocode_zero_shuffle_no_python(spark):
     """Geocoding pages into cell ids is a pure scan -> project: any
     Exchange or Python worker here would serialize 10^12 rows for
