@@ -5,7 +5,7 @@ toolkit (point-cloud -> DEM gridding, windowed topographic-metric stencils,
 point-in-polygon / kNN / profile-projection joins, SMRF-style ground
 classification) as idiomatic Spark DataFrame plans over a Common-Crawl-style
 web-page table treated as a point payload, plus the large-scale
-training-data-pipeline operators (dedup, similarity search, text analysis)
+training-data-pipeline operators (dedup, text analysis)
 such a table needs.
 
 Design rules (see SURVEY.md):

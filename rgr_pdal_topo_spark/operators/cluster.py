@@ -79,96 +79,6 @@ def kmeans_relabel_hi(
     ).drop("cluster")
 
 
-def _assign_nd(
-    df: DataFrame, vec_col: str, centroids: list[list[float]],
-    id_col: str,
-) -> DataFrame:
-    """Nearest-centroid (squared-L2) assignment over an array column;
-    ties go to the lower centroid index.
-
-    ONE broadcast join against a k-row centroid table + a struct-min
-    agg — NOT k inlined distance expressions (k x dim literal arrays
-    make the Catalyst tree quadratic in k*dim and stall analysis/
-    codegen; measured pathological already at k=16, dim=64)."""
-    spark = df.sparkSession
-    cents = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-        "cid int, cvec array<double>",
-    )
-    dist = F.aggregate(
-        F.zip_with(
-            F.col(vec_col), F.col("cvec"), lambda a, b: (a - b) * (a - b)
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    best = (
-        df.select(id_col, vec_col)
-        .crossJoin(F.broadcast(cents))
-        .groupBy(id_col)
-        .agg(
-            F.min(F.struct(dist.alias("d"), F.col("cid")))
-            .getField("cid")
-            .alias("cluster")
-        )
-    )
-    return df.join(best, id_col)
-
-
-def kmeans_nd(
-    df: DataFrame,
-    vec_col: str,
-    k: int = 8,
-    iters: int = 4,
-    id_col: str = "vec_id",
-    checkpoint: bool = True,
-) -> tuple[DataFrame, list[list[float]]]:
-    """Deterministic multi-dimensional Lloyd over an ``array<float>``
-    column — the trainer for an IVF coarse quantizer (X11 generalized
-    from the notebook's 1-D scarp clustering to embedding space).
-
-    Init: the ``k`` vectors with the smallest ``id_col`` (deterministic,
-    no RNG).  Assign: argmin squared L2 against broadcast centroid
-    literals (pure codegen, ties to the lower index).  Update:
-    element-wise member mean via posexplode + one groupBy — only
-    k x dim doubles ever reach the driver per round; an empty cluster
-    keeps its centroid.  Same localCheckpoint caveat as kmeans_1d."""
-    if checkpoint:
-        df = df.localCheckpoint(eager=True)
-    dim = len(df.select(vec_col).first()[0])
-    seeds = (
-        df.orderBy(id_col)
-        .limit(k)
-        .select(F.transform(F.col(vec_col), lambda v: v.cast("double")))
-        .collect()
-    )
-    cents = [list(map(float, r[0])) for r in seeds]
-    if len(cents) < k:
-        raise ValueError(
-            f"kmeans_nd needs at least k={k} vectors, got {len(cents)}"
-        )
-    vecd = F.transform(F.col(vec_col), lambda v: v.cast("double"))
-    dd = df.withColumn("__v", vecd)
-    for _ in range(iters):
-        assigned = _assign_nd(dd, "__v", cents, id_col)
-        means = (
-            assigned.select("cluster", F.posexplode("__v").alias("d", "x"))
-            .groupBy("cluster", "d")
-            .agg(F.avg("x").alias("m"))
-            .collect()
-        )
-        by_cluster: dict[int, dict[int, float]] = {}
-        for r in means:
-            by_cluster.setdefault(r["cluster"], {})[r["d"]] = r["m"]
-        cents = [
-            [by_cluster[c][d] for d in range(dim)]
-            if c in by_cluster
-            else cents[c]
-            for c in range(k)
-        ]
-    return _assign_nd(dd, "__v", cents, id_col).drop("__v"), cents
-
-
 # ---------------------------------------------------------------------------
 # Grid DBSCAN: density-connected hotspot clustering on an integer lattice.
 #

@@ -942,7 +942,7 @@ AA_Q = 8192       #: 2^-13 grid for ln(deg) and the reciprocal weights
 
 #: shared integer spelling of the Adamic-Adar wedge weight: pin ln(deg)
 #: to the 2^-13 grid (integer-valued double -> bit-identical libm input,
-#: the bm25 contract), then one exact floor-division gives the
+#: the integer-argument ln contract), then one exact floor-division gives the
 #: reciprocal on the same grid: rq = floor(8192 * 8192 / wq).
 AA_WQ_SQL = (
     "CAST(FLOOR(LN(CAST(deg AS DOUBLE)) * 8192.0 + 0.5) AS BIGINT)"

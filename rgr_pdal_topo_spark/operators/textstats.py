@@ -230,7 +230,7 @@ DSIR_BUCKETS = 1024  #: hashed bigram feature space (DSIR's n-gram buckets)
 #: add-one-smoothed log-ratio ln(p_target[b] / p_raw[b]) pinned to the
 #: repo-wide 2^-13 integer grid.  ONE fragment, run verbatim by Spark
 #: (F.expr) and DuckDB: the ln argument is a single division of two
-#: integer-valued doubles (the bm25_scores contract — decimal-literal
+#: integer-valued doubles (the integer-ratio ln contract — decimal-literal
 #: arguments shift the ARGUMENT by an ulp across engines, integer-ratio
 #: arguments do not), * 8192 is an exact exponent shift, and
 #: FLOOR(+0.5) (never ROUND: engines disagree on halves) lands on the
@@ -448,7 +448,7 @@ def token_packing(
 #: per-bigram log-probability ln P(w2 | w1) under the add-one-smoothed
 #: target bigram LM, over columns (cb, cu, vv) — pinned to the 2^-13
 #: integer grid; ONE fragment run verbatim by Spark (F.expr) and DuckDB
-#: (the DSIR_W_SQL / bm25 integer-ratio ln contract).  Always negative.
+#: (the DSIR_W_SQL integer-ratio ln contract).  Always negative.
 PPL_W_SQL = (
     "CAST(FLOOR(ln(CAST(cb + 1 AS DOUBLE) / CAST(cu + vv AS DOUBLE)) "
     "* 8192 + 0.5) AS BIGINT)"

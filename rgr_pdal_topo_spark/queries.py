@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from rgr_pdal_topo_spark import synth
 from rgr_pdal_topo_spark.grid import DEFAULT_GRID as G
-from rgr_pdal_topo_spark.operators import dedup, gridding, joins, similarity, textstats
+from rgr_pdal_topo_spark.operators import dedup, gridding, joins, textstats
 from rgr_pdal_topo_spark.sources.tables import register_views
 from rgr_pdal_topo_spark.synth import (
     gps_df,
@@ -3387,340 +3387,6 @@ def q_editdist_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.editdist_pairs(all_docs)
 
 
-# ---------------------------------------------------------------------------
-# similarity search (embeddings)
-# ---------------------------------------------------------------------------
-
-_EMB_DUCK = (
-    "SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings"
-)
-_NORM_DUCK = (
-    "SELECT vec_id, v, SQRT(list_dot_product(v, v)) AS nrm FROM e"
-)
-
-
-@query(
-    "cosine_topk",
-    _with(f"e AS ({_EMB_DUCK})", f"n AS ({_NORM_DUCK})")
-    + "SELECT query_id, rank, nn_id, cosine FROM ("
-    "SELECT q.vec_id AS query_id, n.vec_id AS nn_id, "
-    "ROUND(list_dot_product(n.v, q.v) / (n.nrm * q.nrm), 5) AS cosine, "
-    "ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY "
-    "ROUND(list_dot_product(n.v, q.v) / (n.nrm * q.nrm), 5) DESC, "
-    "n.vec_id ASC) AS rank "
-    "FROM n JOIN n q ON q.vec_id < 10 AND n.vec_id <> q.vec_id) r "
-    "WHERE rank <= 5",
-)
-def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force exact cosine top-k (zip_with/aggregate dot products —
-    JVM-side, no UDF)."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.cosine_topk(emb, n_queries=10, k=5)
-
-
-@query("cosine_topk_lsh")  # oracle registered below, after the plane CTEs
-def q_cosine_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-probe hyperplane-LSH approximate top-k (the 100 TB scale
-    path); recall vs exact covered in tests/test_similarity.py."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.cosine_topk_lsh(emb, n_queries=10, k=5)
-
-
-_IVF_COS = "ROUND(list_dot_product(n.v, c.cv) / (n.nrm * c.cnrm), 5)"
-
-
-@query(
-    "cosine_topk_ivf",
-    _with(f"e AS ({_EMB_DUCK})", f"n AS ({_NORM_DUCK})").rstrip()
-    + ", c AS (SELECT vec_id AS cid, v AS cv, nrm AS cnrm FROM n "
-    "WHERE vec_id < 16), "
-    "asg AS (SELECT n.vec_id, n.v, n.nrm, c.cid, "
-    f"ROW_NUMBER() OVER (PARTITION BY n.vec_id ORDER BY {_IVF_COS} DESC, "
-    "c.cid ASC) AS crn FROM n JOIN c ON TRUE), "
-    "members AS (SELECT vec_id AS nn_id, v, nrm, cid FROM asg "
-    "WHERE crn = 1), "
-    "probes AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn, cid "
-    "FROM asg WHERE vec_id < 10 AND crn <= 4), "
-    "cand AS (SELECT p.query_id, m.nn_id, "
-    "ROUND(list_dot_product(m.v, p.qv) / (m.nrm * p.qn), 5) AS cosine "
-    "FROM probes p JOIN members m ON m.cid = p.cid "
-    "AND m.nn_id <> p.query_id) "
-    "SELECT query_id, rank, nn_id, cosine FROM ("
-    "SELECT query_id, nn_id, cosine, ROW_NUMBER() OVER ("
-    "PARTITION BY query_id ORDER BY cosine DESC, nn_id ASC) AS rank "
-    "FROM cand) r WHERE rank <= 5",
-)
-def q_cosine_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-style approximate top-k: inverted lists under a deterministic
-    seed-centroid coarse quantizer, 4-probe search (the partition-by-
-    list-id scale path, complementing the LSH sign-bucket variant);
-    recall vs exact covered in tests/test_similarity.py."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.cosine_topk_ivf(
-        emb, n_queries=10, k=5, n_centroids=16, n_probe=4
-    )
-
-
-_SQ8_COS = (
-    "ROUND(list_dot_product(n.qv, q.qv) / "
-    "SQRT(CAST(n.qn * q.qn AS DOUBLE)), 5)"
-)
-
-
-@query(
-    "cosine_topk_sq8",
-    _with(
-        f"e AS ({_EMB_DUCK})",
-        # trained quantizer scale: 127 / corpus max|component| — the
-        # engine computes the identical scalar via one distributed agg
-        "s AS (SELECT 127.0 / MAX(GREATEST(ABS(list_min(v)), "
-        "ABS(list_max(v)))) AS sc FROM e)",
-        "q8 AS (SELECT vec_id, list_transform(v, x -> CAST(GREATEST("
-        "LEAST(CAST(FLOOR(x * sc + 0.5) AS BIGINT), "
-        "127), -127) AS DOUBLE)) AS qv FROM e, s)",
-        "n AS (SELECT vec_id, qv, list_dot_product(qv, qv) AS qn FROM q8)",
-    )
-    + "SELECT query_id, rank, nn_id, cosine FROM ("
-    "SELECT q.vec_id AS query_id, n.vec_id AS nn_id, "
-    f"{_SQ8_COS} AS cosine, "
-    "ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY "
-    f"{_SQ8_COS} DESC, n.vec_id ASC) AS rank "
-    "FROM n JOIN n q ON q.vec_id < 10 AND n.vec_id <> q.vec_id) r "
-    "WHERE rank <= 5",
-)
-def q_cosine_topk_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Compressed-vector top-k: embeddings scalar-quantized to the int8
-    grid (FAISS SQ8 — 4x memory at 100 TB, where corpus bytes, not
-    FLOPs, decide whether search fits executor memory), distances in
-    exact integer arithmetic until one final sqrt+division, so the
-    oracle replays every value bit-for-bit with no agg-order float
-    drift.  Recall vs the exact float path is pinned in
-    tests/test_similarity.py."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.cosine_topk_sq8(emb, n_queries=10, k=5)
-
-
-@query(
-    "cosine_topk_ivf_sq8",
-    _with(
-        f"e AS ({_EMB_DUCK})",
-        f"n AS ({_NORM_DUCK})",
-        # trained SQ8 scale + int8 grid — the cosine_topk_sq8 CTEs
-        "s AS (SELECT 127.0 / MAX(GREATEST(ABS(list_min(v)), "
-        "ABS(list_max(v)))) AS sc FROM e)",
-        "q8 AS (SELECT vec_id, list_transform(v, x -> CAST(GREATEST("
-        "LEAST(CAST(FLOOR(x * sc + 0.5) AS BIGINT), "
-        "127), -127) AS DOUBLE)) AS qv FROM e, s)",
-        "qn AS (SELECT vec_id, qv, list_dot_product(qv, qv) AS qn FROM q8)",
-        # float coarse-quantizer assignment — the cosine_topk_ivf CTEs
-        "c AS (SELECT vec_id AS cid, v AS cv, nrm AS cnrm FROM n "
-        "WHERE vec_id < 16)",
-        "asg AS (SELECT n.vec_id, c.cid, ROW_NUMBER() OVER ("
-        f"PARTITION BY n.vec_id ORDER BY {_IVF_COS} DESC, c.cid ASC) "
-        "AS crn FROM n JOIN c ON TRUE)",
-        "members AS (SELECT a.vec_id AS nn_id, q.qv, q.qn, a.cid "
-        "FROM asg a JOIN qn q ON q.vec_id = a.vec_id WHERE a.crn = 1)",
-        "probes AS (SELECT a.vec_id AS query_id, q.qv AS qqv, "
-        "q.qn AS qqn, a.cid FROM asg a JOIN qn q ON q.vec_id = a.vec_id "
-        "WHERE a.vec_id < 10 AND a.crn <= 4)",
-        "cand AS (SELECT p.query_id, m.nn_id, "
-        "ROUND(list_dot_product(m.qv, p.qqv) / "
-        "SQRT(CAST(m.qn * p.qqn AS DOUBLE)), 5) AS cosine "
-        "FROM probes p JOIN members m ON m.cid = p.cid "
-        "AND m.nn_id <> p.query_id)",
-    )
-    + "SELECT query_id, rank, nn_id, cosine FROM ("
-    "SELECT query_id, nn_id, cosine, ROW_NUMBER() OVER ("
-    "PARTITION BY query_id ORDER BY cosine DESC, nn_id ASC) AS rank "
-    "FROM cand) r WHERE rank <= 5",
-)
-def q_cosine_topk_ivf_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full 100 TB ANN architecture end to end (FAISS ``IVF16,SQ8``):
-    IVF coarse quantizer routes each query to 4 of 16 inverted lists
-    (bounding WORK — lists are the partition key at scale), and the
-    in-list scan runs on trained-scale int8 vectors (bounding MEMORY —
-    4x smaller residents).  Assignment stays float (quantization error
-    must not misroute queries — FAISS does the same); in-list distances
-    are exact integers until one final sqrt+division, so the oracle
-    replays the composition bit-for-bit."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.cosine_topk_ivf_sq8(
-        emb, n_queries=10, k=5, n_centroids=16, n_probe=4
-    )
-
-
-# The synthetic embeddings are i.i.d. draws with no near-duplicate
-# vectors at ANY threshold (embedding_near_dups at 0.95 is row-count-0
-# on them), so a semantic-dedup pass over the raw table would be
-# structurally vacuous.  Plant deterministic near-identical pairs — two
-# members per 29-bucket share one synthetic direction, the second offset
-# by +1/2000 per component (cosine ~ 0.99999) — ids < 16 (the coarse
-# quantizer's seed centroids) left untouched.  Same planted-case
-# discipline as split_leakage's mirror pages; the two dialect spellings
-# differ only in DIV-vs-// and transform-vs-list_transform.
-_SEMDEDUP_PLANT_DUCK = (
-    "CASE WHEN vec_id >= 16 AND vec_id % 29 < 2 THEN "
-    "list_transform(generate_series(0, 63), d -> "
-    "CAST((((vec_id // 29) * 64 + d) * 48271) % 2001 - 1000 AS DOUBLE) "
-    "/ 2000.0 + CAST(vec_id % 29 AS DOUBLE) / 2000.0) "
-    "ELSE CAST(embedding AS DOUBLE[]) END"
-)
-_SEMDEDUP_PLANT_SPARK = (
-    "CASE WHEN vec_id >= 16 AND vec_id % 29 < 2 THEN "
-    "transform(sequence(0, 63), d -> "
-    "CAST((((vec_id DIV 29) * 64 + d) * 48271) % 2001 - 1000 AS DOUBLE) "
-    "/ 2000.0 + CAST(vec_id % 29 AS DOUBLE) / 2000.0) "
-    "ELSE CAST(embedding AS ARRAY<DOUBLE>) END"
-)
-
-
-@query(
-    "semdedup",
-    _with(
-        f"e AS (SELECT vec_id, {_SEMDEDUP_PLANT_DUCK} AS v "
-        "FROM embeddings)",
-        f"n AS ({_NORM_DUCK})",
-        # trained SQ8 scale + int8 grid — the cosine_topk_sq8 CTEs
-        "s AS (SELECT 127.0 / MAX(GREATEST(ABS(list_min(v)), "
-        "ABS(list_max(v)))) AS sc FROM e)",
-        "q8 AS (SELECT vec_id, list_transform(v, x -> CAST(GREATEST("
-        "LEAST(CAST(FLOOR(x * sc + 0.5) AS BIGINT), "
-        "127), -127) AS DOUBLE)) AS qv FROM e, s)",
-        "qn AS (SELECT vec_id, qv, list_dot_product(qv, qv) AS qn FROM q8)",
-        # float coarse-quantizer assignment — the cosine_topk_ivf CTEs
-        "c AS (SELECT vec_id AS cid, v AS cv, nrm AS cnrm FROM n "
-        "WHERE vec_id < 16)",
-        "asg AS (SELECT n.vec_id, c.cid, ROW_NUMBER() OVER ("
-        f"PARTITION BY n.vec_id ORDER BY {_IVF_COS} DESC, c.cid ASC) "
-        "AS crn FROM n JOIN c ON TRUE)",
-        "m AS (SELECT a.vec_id, a.cid, q.qv, q.qn FROM asg a "
-        "JOIN qn q ON q.vec_id = a.vec_id WHERE a.crn = 1)",
-        "dup AS (SELECT l.cid, l.vec_id AS id_a, r.vec_id AS id_b "
-        "FROM m l JOIN m r ON r.cid = l.cid AND l.vec_id < r.vec_id "
-        "WHERE ROUND(list_dot_product(l.qv, r.qv) / "
-        "SQRT(CAST(l.qn * r.qn AS DOUBLE)), 5) >= 0.95)",
-        "sizes AS (SELECT cid, CAST(COUNT(*) AS BIGINT) AS n_vectors "
-        "FROM m GROUP BY cid)",
-        "per AS (SELECT cid, CAST(COUNT(*) AS BIGINT) AS n_dup_pairs, "
-        "CAST(COUNT(DISTINCT id_b) AS BIGINT) AS n_dropped FROM dup "
-        "GROUP BY cid)",
-    )
-    + "SELECT sizes.cid, sizes.n_vectors, "
-    "COALESCE(per.n_dup_pairs, 0) AS n_dup_pairs, "
-    "COALESCE(per.n_dropped, 0) AS n_dropped, "
-    "sizes.n_vectors - COALESCE(per.n_dropped, 0) AS n_kept "
-    "FROM sizes LEFT JOIN per ON per.cid = sizes.cid",
-)
-def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup (similarity.semdedup, Abbas et al. 2023): coarse
-    IVF-seed clusters, within-cluster SQ8 integer-exact similarity,
-    keep-lowest-id survivors — the semantic member of the dedup family,
-    summarized per cluster.  Near-identical vector pairs are planted
-    first (two per 29-bucket, +1/2000-per-component offset) because the
-    synthetic embeddings contain no near-duplicates at any threshold."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings").selectExpr(
-        "vec_id", f"{_SEMDEDUP_PLANT_SPARK} AS embedding"
-    )
-    return similarity.semdedup(emb)
-
-
-def _planes_duck(n_planes: int, dim: int = 64) -> list[str]:
-    out = []
-    for j in range(n_planes):
-        vals = ", ".join(
-            repr(float((j * dim + d) * 48271 % 2001 - 1000)) for d in range(dim)
-        )
-        out.append(f"[{vals}]")
-    return out
-
-
-_NP = similarity.DEFAULT_PLANES
-_PLANES = _planes_duck(_NP)
-_BUCKET_DUCK = " + ".join(
-    f"(CASE WHEN list_dot_product(v, {_PLANES[j]}) > 0 THEN {1 << j} "
-    "ELSE 0 END)"
-    for j in range(_NP)
-)
-_PROBES_DUCK = "[bucket, " + ", ".join(
-    f"xor(bucket, {1 << j})" for j in range(_NP)
-) + "]"
-_NORMB_DUCK = (
-    "SELECT vec_id, v, SQRT(list_dot_product(v, v)) AS nrm, "
-    f"{_BUCKET_DUCK} AS bucket FROM e"
-)
-
-
-# the multi-probe structure is deterministic, so the approximate top-k path
-# itself is oracle-checkable: same probe keys, same rounded-cosine ordering
-ORACLES["cosine_topk_lsh"] = (
-    _with(
-        f"e AS ({_EMB_DUCK})",
-        f"n AS ({_NORMB_DUCK})",
-        "lq AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm, "
-        f"unnest({_PROBES_DUCK}) AS bucket FROM n WHERE vec_id < 10)",
-    )
-    + "SELECT query_id, rank, nn_id, cosine FROM ("
-    "SELECT lq.query_id, n.vec_id AS nn_id, "
-    "ROUND(list_dot_product(n.v, lq.qv) / (n.nrm * lq.qnrm), 5) AS cosine, "
-    "ROW_NUMBER() OVER (PARTITION BY lq.query_id ORDER BY "
-    "ROUND(list_dot_product(n.v, lq.qv) / (n.nrm * lq.qnrm), 5) DESC, "
-    "n.vec_id ASC) AS rank "
-    "FROM lq JOIN n ON n.bucket = lq.bucket AND n.vec_id <> lq.query_id) r "
-    "WHERE rank <= 5"
-)
-
-
-@query(
-    "embedding_buckets",
-    _with(f"e AS ({_EMB_DUCK})", f"n AS ({_NORMB_DUCK})")
-    + "SELECT vec_id, bucket FROM n",
-)
-def q_embedding_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hyperplane-LSH bucket assignment itself (the partition key of the
-    scale path) — oracle-checked end to end."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    base = similarity.with_norm(emb).withColumn(
-        "bucket", similarity._hyperplane_sign_bits("vec", _NP, 64)
-    )
-    return base.select("vec_id", "bucket")
-
-
-@query(
-    "embedding_near_dups",
-    _with(
-        f"e AS ({_EMB_DUCK})",
-        f"n AS ({_NORMB_DUCK})",
-        f"l AS (SELECT vec_id, v, nrm, unnest({_PROBES_DUCK}) AS bucket "
-        "FROM n)",
-    )
-    + "SELECT a.vec_id AS id_a, b.vec_id AS id_b, "
-    "ROUND(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 5) AS cosine "
-    "FROM l a JOIN n b ON a.bucket = b.bucket AND a.vec_id < b.vec_id "
-    "WHERE ROUND(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 5) >= 0.35",
-)
-def q_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding near-duplicate pairs inside the multi-probe LSH structure
-    (8 planes, Hamming <= 1, cos >= 0.35)."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.embedding_near_dups(emb, threshold=0.35)
-
-
 @query(
     "multimodal_meta",
     "SELECT doc_id, octet_length(encode(text)) AS payload_bytes, "
@@ -4235,7 +3901,7 @@ def q_twi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Slope-area OLS spellings: BOTH regression variables are ln of
-# INTEGER-VALUED doubles (the bm25 contract — arbitrary-double ln
+# INTEGER-VALUED doubles (arbitrary-double ln
 # may differ by an ulp between engines, integer-valued arguments are
 # measured bit-identical): x = ln(area in CELLS) and y = ln(slope
 # scaled to its exact 2^-13 integer).  The 8192 scaling shifts y by a
@@ -6491,8 +6157,8 @@ _ENT_H_SQL = (
 )
 
 
-# Pinned ln of one factor: ln runs ONLY on an integer-valued double (the
-# bm25 contract: bit-identical across engines) and is q13-pinned, so a
+# Pinned ln of one factor: ln runs ONLY on an integer-valued double
+# (bit-identical across engines) and is q13-pinned, so a
 # sum of count-weighted terms is an exact BIGINT and the statistic built
 # on it is one guarded division.
 _KL_LQ = "CAST(FLOOR(ln(CAST({x} AS DOUBLE)) * 8192 + 0.5) AS BIGINT)"
@@ -6661,7 +6327,7 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigram features, add-one-smoothed log-ratio between the C4-gate
     target slice and the raw corpus, per-bucket weights pinned to the
     2^-13 integer grid by the shared DSIR_W_SQL fragment (the
-    bm25_scores ln contract), document score = exact BIGINT sum of its
+    integer-ratio ln contract), document score = exact BIGINT sum of its
     occurrences' bucket weights."""
     from rgr_pdal_topo_spark.sources.tables import load_table
 
@@ -6747,7 +6413,7 @@ def q_bigram_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigram LM trained on the C4-gate clean slice scores every document
     by negative log-likelihood.  Each distinct bigram's log-probability
     is pinned to the 2^-13 integer grid by the shared PPL_W_SQL
-    fragment (the bm25/DSIR integer-ratio ln contract), so nll_q is an
+    fragment (the DSIR integer-ratio ln contract), so nll_q is an
     exact BIGINT sum."""
     from rgr_pdal_topo_spark.sources.tables import load_table
 
@@ -7300,7 +6966,7 @@ def q_host_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     return linkgraph.bfs_hops(linkgraph.extract_links(pages))
 
 
-# Planted syndication overlay for cocitation_hosts (the semdedup /
+# Planted syndication overlay for cocitation_hosts (the
 # split_leakage discipline: the organic payload lacks the case, so the
 # query plants it in BOTH engines).  Every src host carries exactly 2
 # organic out-links at the 500-doc scales, so no target pair is
@@ -8886,201 +8552,6 @@ def q_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from rgr_pdal_topo_spark.operators import retrieval  # noqa: E402
-
-_BM25_QUERIES_DUCK = "(VALUES " + ", ".join(
-    f"({qid}, '{qtext}')" for qid, qtext in retrieval.BM25_QUERIES
-) + ") q(qid, qtext)"
-
-
-# BM25 / KWIC oracle fragments — ONE definition shared by the solo
-# queries and the composed search_results page so semantics cannot drift
-_BM25_QT_CTE = (
-    "qt AS (SELECT DISTINCT qid, tok FROM (SELECT qid, "
-    f"unnest(string_split(qtext, ' ')) AS tok FROM {_BM25_QUERIES_DUCK}"
-    ") uq)"
-)
-_BM25_CORE_CTES = (
-    "toks AS (SELECT doc_id, tok FROM (SELECT doc_id, "
-    "unnest(string_split(text, ' ')) AS tok FROM documents) u "
-    "WHERE tok <> '')",
-    "postings AS (SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS tf "
-    "FROM toks GROUP BY doc_id, tok)",
-    "dls AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl FROM toks "
-    "GROUP BY doc_id)",
-    "dft AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS df FROM postings "
-    "GROUP BY tok)",
-    "st AS (SELECT CAST((SELECT COUNT(*) FROM documents) AS BIGINT) "
-    "AS n, CAST((SELECT COUNT(*) FROM toks) AS BIGINT) AS s)",
-    _BM25_QT_CTE,
-    "m AS (SELECT qt.qid, p.doc_id, p.tf, dls.dl, dft.df, st.n, st.s "
-    "FROM qt JOIN postings p ON p.tok = qt.tok JOIN dls ON "
-    "dls.doc_id = p.doc_id JOIN dft ON dft.tok = p.tok CROSS JOIN st)",
-)
-_KWIC_HITS_CTE = (
-    "hits AS (SELECT qid, doc_id, CAST(MIN(p) AS BIGINT) AS hit_pos "
-    "FROM (SELECT qt.qid, d.doc_id, list_position(d.toks, qt.tok) "
-    "AS p FROM d CROSS JOIN qt) hp WHERE p > 0 GROUP BY qid, doc_id)"
-)
-_KWIC_SNIPPET_SQL = (
-    "array_to_string("
-    "d.toks[GREATEST(h.hit_pos - 2, 1):h.hit_pos + 2], ' ')"
-)
-
-
-@query(
-    "bm25_scores",
-    _with(*_BM25_CORE_CTES)
-    + "SELECT qid, doc_id, CAST(COUNT(*) AS BIGINT) AS n_hits, "
-    f"CAST(SUM({retrieval.TERM_Q13_SQL}) AS BIGINT) AS score_q13 "
-    "FROM m GROUP BY qid, doc_id",
-)
-def q_bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Okapi BM25 ranked retrieval (operators/retrieval.py) — keyword
-    queries scored against every matching document: the search-engine
-    verb the webtext corpus was missing.  The idf log is the ONLY
-    transcendental and receives bit-identical integer-ratio inputs in
-    both engines before being pinned to the 1/256 grid; every other
-    factor is the exact integer pair 22*tf*S / (10*tf*S + 3*S + 9*dl*N)
-    (BM25 with k1=6/5, b=3/4 and all fractions cleared), so the
-    2^-13-quantized per-term scores are bit-equal and the final score
-    is an exact BIGINT sum — ranking needs no float tolerance at all.
-    Plan: broadcast query tokens into the postings scan, broadcast df +
-    corpus scalars, one partial+final (qid, doc) sum."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return retrieval.bm25_scores(docs)
-
-
-@query(
-    "doc_keywords",
-    _with(
-        *_BM25_CORE_CTES[:2],  # toks, postings
-        "dft AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS df "
-        "FROM postings GROUP BY tok)",
-        "st AS (SELECT CAST((SELECT COUNT(*) FROM documents) AS BIGINT) "
-        "AS n)",
-        "sc AS (SELECT p.doc_id, p.tok, p.tf, "
-        f"p.tf * {retrieval.IDF_Q_SQL} AS score_q "
-        "FROM postings p JOIN dft ON dft.tok = p.tok CROSS JOIN st)",
-    )
-    + "SELECT doc_id, tok, tf, score_q, rnk FROM (SELECT doc_id, tok, "
-    "tf, score_q, ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY "
-    "score_q DESC, tok ASC) AS rnk FROM sc) r WHERE rnk <= 5",
-)
-def q_doc_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document keyword extraction: top-5 terms by TF-IDF — the
-    query-independent sibling of bm25_scores (BM25 ranks documents for
-    a query; this summarizes each document by its most distinctive
-    terms — the tag/index-term generation pass of a web index).
-    Reuses BM25's Lucene-clamped idf with bit-identical integer-ratio
-    ln inputs pinned to the 1/256 grid, so score_q = tf * idf_q is an
-    exact BIGINT and the (score DESC, tok ASC) cut is engine-exact
-    with no float tolerance.
-
-    Scale shape: postings and df are both aggregated tables (never raw
-    text past the first fold), the corpus scalar broadcasts, and the
-    top-k window runs per-document over each doc's own vocabulary —
-    bounded partitions, and WindowGroupLimit pushes the k-cut below
-    the shuffle (the anchor_text plan shape)."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-    from pyspark.sql import Window
-
-    docs = load_table(spark, sf_dir, "documents")
-    toks = (
-        docs.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
-        .filter(F.col("tok") != "")
-    )
-    postings = toks.groupBy("doc_id", "tok").agg(
-        F.count(F.lit(1)).alias("tf")
-    )
-    dft = postings.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    n_row = docs.agg(F.count(F.lit(1)).alias("n"))
-    sc = (
-        postings.join(dft, "tok")
-        .crossJoin(F.broadcast(n_row))
-        .select(
-            "doc_id",
-            "tok",
-            "tf",
-            (F.col("tf") * F.expr(retrieval.IDF_Q_SQL)).alias("score_q"),
-        )
-    )
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("score_q").desc(), F.col("tok").asc()
-    )
-    return (
-        sc.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= 5)
-    )
-
-
-@query(
-    "kwic_snippets",
-    _with(
-        f"d AS ({_DOCTOKS_DUCK})",
-        _BM25_QT_CTE,
-        _KWIC_HITS_CTE,
-    )
-    + "SELECT h.qid, h.doc_id, h.hit_pos, "
-    f"{_KWIC_SNIPPET_SQL} AS snippet "
-    "FROM hits h JOIN d ON d.doc_id = h.doc_id",
-)
-def q_kwic_snippets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Keyword-in-context snippet extraction (operators/retrieval.py
-    kwic_snippets) — the search-result snippet beside bm25_scores'
-    ranking: earliest query-token hit per matching document with 2
-    tokens of context each side.  Pure array built-ins with verified
-    cross-engine semantics (1-based positions, 0-for-absent, clamped
-    slices); the value hash covers the snippet STRING byte-for-byte.
-    Broadcast query dim, zero-shuffle hit scan, doc_id join only for
-    hitting docs."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return retrieval.kwic_snippets(docs)
-
-
-@query(
-    "search_results",
-    _with(
-        *_BM25_CORE_CTES,
-        "sc AS (SELECT qid, doc_id, "
-        f"CAST(SUM({retrieval.TERM_Q13_SQL}) AS BIGINT) AS score_q13 "
-        "FROM m GROUP BY qid, doc_id)",
-        "topd AS (SELECT qid, doc_id, score_q13, CAST(ROW_NUMBER() OVER ("
-        "PARTITION BY qid ORDER BY score_q13 DESC, doc_id) AS BIGINT) "
-        "AS rnk FROM sc)",
-        f"d AS ({_DOCTOKS_DUCK})",
-        _KWIC_HITS_CTE,
-    )
-    + "SELECT t.qid, t.doc_id, t.rnk, t.score_q13, h.hit_pos, "
-    f"{_KWIC_SNIPPET_SQL} AS snippet "
-    "FROM topd t JOIN hits h ON h.qid = t.qid AND h.doc_id = t.doc_id "
-    "JOIN d ON d.doc_id = t.doc_id "
-    f"WHERE t.rnk <= {retrieval.SEARCH_TOP_K}",
-)
-def q_search_results(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The search PAGE composed end to end (operators/retrieval.py
-    search_results): BM25 scoring -> top-5 per query (score DESC,
-    doc_id tiebreak — the cut is engine-exact because scores are exact
-    BIGINTs) -> keyword-in-context snippet for each surviving result.
-    The fourth composed flagship beside terrain_pipeline,
-    corpus_pipeline and pages_pipeline: retrieval's solo stages chained
-    in ONE plan, oracle built from the SAME shared CTE fragments as the
-    solo bm25_scores / kwic_snippets oracles so composed and solo
-    semantics cannot drift.
-
-    Scale shape: the top-k window runs over the aggregated (qid, doc)
-    score table with Spark's WindowGroupLimit pushing the k-cut below
-    the shuffle; the snippet join then touches q x k rows only."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return retrieval.search_results(docs)
-
-
 @query(
     "hll_by_lang",
     _with(
@@ -9646,52 +9117,6 @@ def q_pareto_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textstats.pareto_skyline(docs)
 
 
-_PHRASE_QW_DUCK = "(VALUES " + ", ".join(
-    f"({qid}, {off}, '{tok}')"
-    for qid, qtext in retrieval.BM25_QUERIES
-    for off, tok in enumerate(qtext.split(" "))
-) + ") pq(qid, off, tok)"
-
-
-@query(
-    "phrase_search",
-    _with(
-        f"d AS ({_DOCTOKS_DUCK})",
-        "p AS (SELECT doc_id, u.pos AS pos, toks[u.pos] AS tok FROM d, "
-        "LATERAL (SELECT unnest(generate_series(1, len(toks))) AS pos) "
-        "u)",
-        f"q AS (SELECT * FROM {_PHRASE_QW_DUCK})",
-        "ql AS (SELECT qid, COUNT(*) AS qlen FROM q GROUP BY qid)",
-        "m AS (SELECT q.qid, p.doc_id, p.pos - q.off AS anchor, q.off "
-        "FROM p JOIN q ON q.tok = p.tok)",
-        "a AS (SELECT qid, doc_id, anchor, COUNT(DISTINCT off) AS k "
-        "FROM m GROUP BY 1, 2, 3)",
-        "h AS (SELECT a.qid, a.doc_id, a.anchor FROM a JOIN ql "
-        "USING (qid) WHERE a.k = ql.qlen AND a.anchor >= 1)",
-    )
-    + "SELECT qid, doc_id, CAST(COUNT(*) AS BIGINT) AS n_hits, "
-    "CAST(MIN(anchor) AS BIGINT) AS first_pos FROM h "
-    "GROUP BY qid, doc_id",
-)
-def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT positional phrase search (operators/retrieval.py
-    phrase_hits): documents matching the BM25 keyword queries read as
-    QUOTED PHRASES — tokens consecutive and in order — with per-doc
-    occurrence count and first position.  The retrieval verb BM25's
-    bag-of-words scoring cannot express, over the same shared query
-    dimension so the two rows certify the same fixture from opposite
-    semantics (every phrase hit is necessarily a bm25_scores row; the
-    planted test pins that containment).  The oracle is the
-    definitional positional-postings spelling; the engine collapses
-    the k-way adjacency self-join into ONE anchor-rebased
-    count-distinct aggregation over broadcast-filtered postings.
-    All-integer; hash-exact with no rounding policy."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return retrieval.phrase_hits(docs)
-
-
 @query(
     "trend_mk",
     _with(
@@ -9951,63 +9376,6 @@ def q_zonal_overlay(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("wmean", F.expr(_ZO_WMEAN))
 
 
-_PQ_M, _PQ_W, _PQ_CODES, _PQ_NQ, _PQ_K = 8, 8, 16, 10, 5
-
-
-@query(
-    "cosine_topk_pq",
-    _with(f"e AS ({_EMB_DUCK})", f"n AS ({_NORM_DUCK})").rstrip()
-    + f", sub AS (SELECT unnest(generate_series(0, {_PQ_M - 1})) AS j), "
-    f"cb AS (SELECT CAST(n.vec_id AS INT) AS code, s.j, "
-    f"list_slice(n.v, s.j * {_PQ_W} + 1, s.j * {_PQ_W} + {_PQ_W}) AS cv "
-    f"FROM n, sub s WHERE n.vec_id < {_PQ_CODES}), "
-    "cbb AS (SELECT code, j, cv, list_dot_product(cv, cv) AS bb "
-    "FROM cb), "
-    "sl AS (SELECT n.vec_id AS nn_id, s.j, "
-    f"list_slice(n.v, s.j * {_PQ_W} + 1, s.j * {_PQ_W} + {_PQ_W}) AS sv "
-    "FROM n, sub s), "
-    "d AS (SELECT sl.nn_id, sl.j, c.code, c.cv, "
-    "ROUND(list_dot_product(sl.sv, sl.sv) - "
-    "2.0 * list_dot_product(sl.sv, c.cv) + c.bb, 5) AS d2 "
-    "FROM sl JOIN cbb c ON c.j = sl.j), "
-    "enc AS (SELECT nn_id, j, cv FROM (SELECT *, ROW_NUMBER() OVER ("
-    "PARTITION BY nn_id, j ORDER BY d2 ASC, code ASC) AS rn FROM d) t "
-    "WHERE rn = 1), "
-    "recon AS (SELECT nn_id, flatten(list(cv ORDER BY j)) AS xhat "
-    "FROM enc GROUP BY nn_id), "
-    "rc AS (SELECT nn_id, xhat, SQRT(list_dot_product(xhat, xhat)) "
-    "AS rnorm FROM recon), "
-    f"q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn FROM n "
-    f"WHERE vec_id < {_PQ_NQ}), "
-    "sc AS (SELECT q.query_id, r.nn_id, "
-    "ROUND(list_dot_product(q.qv, r.xhat) / (q.qn * r.rnorm), 5) "
-    "AS adc_cosine FROM rc r JOIN q ON r.nn_id <> q.query_id) "
-    "SELECT query_id, rank, nn_id, adc_cosine FROM (SELECT query_id, "
-    "nn_id, adc_cosine, ROW_NUMBER() OVER (PARTITION BY query_id "
-    "ORDER BY adc_cosine DESC, nn_id ASC) AS rank FROM sc) t "
-    f"WHERE rank <= {_PQ_K}",
-)
-def q_cosine_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ADC top-k (operators/similarity.py
-    cosine_topk_pq; Jégou et al. 2011) — the third compressed-vector
-    strategy beside SQ8 and IVF: 8 orthogonal subspaces x 16-entry
-    seed codebooks, vectors stored as 8 codes (32x memory), queries
-    scored against the subspace-ordered reconstruction with
-    |x_hat| recomputed in-row (a cross-row SUM of per-subspace norms
-    would be association-order-dependent).  Encoding argmin orders on
-    (ROUND(d2,5), code) with d2 = aa - 2ab + bb from sequential
-    in-row dots, so seeds encode to themselves (d2 == 0) and both
-    engines compare bit-identical doubles.  The oracle replays
-    codebook, encoding, reconstruction and scan definitionally;
-    recall vs the exact scan is pinned in tests/test_similarity.py."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.cosine_topk_pq(
-        emb, n_queries=_PQ_NQ, k=_PQ_K, m=_PQ_M, n_codes=_PQ_CODES
-    )
-
-
 _TR_SEEDS = 8
 
 
@@ -10193,103 +9561,6 @@ def q_crawl_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "cosine_topk_ivf_pq",
-    _with(f"e AS ({_EMB_DUCK})", f"n AS ({_NORM_DUCK})").rstrip()
-    + ", c AS (SELECT vec_id AS cid, v AS cv, nrm AS cnrm FROM n "
-    "WHERE vec_id < 16), "
-    "asg AS (SELECT n.vec_id, n.v, n.nrm, c.cid, "
-    f"ROW_NUMBER() OVER (PARTITION BY n.vec_id ORDER BY {_IVF_COS} DESC, "
-    "c.cid ASC) AS crn FROM n JOIN c ON TRUE), "
-    f"sub AS (SELECT unnest(generate_series(0, {_PQ_M - 1})) AS j), "
-    f"cb AS (SELECT CAST(n.vec_id AS INT) AS code, s.j, "
-    f"list_slice(n.v, s.j * {_PQ_W} + 1, s.j * {_PQ_W} + {_PQ_W}) AS cv "
-    f"FROM n, sub s WHERE n.vec_id < {_PQ_CODES}), "
-    "cbb AS (SELECT code, j, cv, list_dot_product(cv, cv) AS bb "
-    "FROM cb), "
-    "sl AS (SELECT n.vec_id AS nn_id, s.j, "
-    f"list_slice(n.v, s.j * {_PQ_W} + 1, s.j * {_PQ_W} + {_PQ_W}) AS sv "
-    "FROM n, sub s), "
-    "d AS (SELECT sl.nn_id, sl.j, c2.code, c2.cv, "
-    "ROUND(list_dot_product(sl.sv, sl.sv) - "
-    "2.0 * list_dot_product(sl.sv, c2.cv) + c2.bb, 5) AS d2 "
-    "FROM sl JOIN cbb c2 ON c2.j = sl.j), "
-    "enc AS (SELECT nn_id, j, cv FROM (SELECT *, ROW_NUMBER() OVER ("
-    "PARTITION BY nn_id, j ORDER BY d2 ASC, code ASC) AS rn FROM d) t "
-    "WHERE rn = 1), "
-    "recon AS (SELECT nn_id, flatten(list(cv ORDER BY j)) AS xhat "
-    "FROM enc GROUP BY nn_id), "
-    "rc AS (SELECT nn_id, xhat, SQRT(list_dot_product(xhat, xhat)) "
-    "AS rnorm FROM recon), "
-    "members AS (SELECT a.vec_id AS nn_id, a.cid, r.xhat, r.rnorm "
-    "FROM asg a JOIN rc r ON r.nn_id = a.vec_id WHERE a.crn = 1), "
-    f"probes AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn, cid "
-    f"FROM asg WHERE vec_id < {_PQ_NQ} AND crn <= 4), "
-    "sc AS (SELECT p.query_id, m.nn_id, "
-    "ROUND(list_dot_product(p.qv, m.xhat) / (p.qn * m.rnorm), 5) "
-    "AS adc_cosine FROM probes p JOIN members m ON m.cid = p.cid "
-    "AND m.nn_id <> p.query_id) "
-    "SELECT query_id, rank, nn_id, adc_cosine FROM (SELECT query_id, "
-    "nn_id, adc_cosine, ROW_NUMBER() OVER (PARTITION BY query_id "
-    "ORDER BY adc_cosine DESC, nn_id ASC) AS rank FROM sc) t "
-    f"WHERE rank <= {_PQ_K}",
-)
-def q_cosine_topk_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FAISS 'IVF16,PQ8' composed (operators/similarity.py
-    cosine_topk_ivf_pq) — the canonical billion-scale ANN index: the
-    float coarse quantizer routes each query to its 4 probed lists
-    (bounding WORK; lists are the partition key) and the in-list scan
-    scores 32x-compressed PQ reconstructions (bounding MEMORY).
-    Assignment is cosine_topk_ivf's exactly; scoring is
-    cosine_topk_pq's exactly (raw-vector codes — the per-list
-    residual refinement is a documented simplification); so each half
-    is separately oracle-witnessed and this row certifies their
-    join.  Top-k <= k rows per query (a probed shard can run dry)."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.cosine_topk_ivf_pq(
-        emb, n_queries=_PQ_NQ, k=_PQ_K, n_centroids=16, n_probe=4,
-        m=_PQ_M, n_codes=_PQ_CODES,
-    )
-
-
-@query(
-    "postings_gaps",
-    _with(
-        f"toks AS ({_TOKS_DUCK})",
-        "p AS (SELECT DISTINCT doc_id, u.tok FROM toks, "
-        "LATERAL (SELECT unnest(t) AS tok) u)",
-        "g AS (SELECT doc_id - COALESCE(LAG(doc_id) OVER ("
-        "PARTITION BY tok ORDER BY doc_id), -1) AS gap FROM p)",
-        "b AS (SELECT CAST(LENGTH(bin(gap)) AS BIGINT) AS gap_bits "
-        "FROM g)",
-        "agg AS (SELECT gap_bits, CAST(COUNT(*) AS BIGINT) AS n_gaps "
-        "FROM b GROUP BY gap_bits)",
-    )
-    + "SELECT gap_bits, n_gaps, CAST(FLOOR((gap_bits + 6) / 7.0) "
-    "AS BIGINT) * n_gaps AS varint_bytes FROM agg",
-)
-def q_postings_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inverted-index delta-gap compressibility census
-    (operators/retrieval.py postings_gap_census) — the index builder's
-    storage-sizing pass: DISTINCT (token, doc_id) postings delta-coded
-    within each list (first posting = doc_id + 1, the virtual -1
-    convention, so every gap is positive and the byte total prices the
-    whole index), bucketed by gap bit-length (the degree_histogram
-    LENGTH(BIN()) idiom — simultaneously the Elias-gamma cost basis)
-    with LEB128 varint bytes per bucket.  All-integer, no rounding
-    policy.  The lag window partitions by TOKEN — the posting-list key,
-    exactly how shards store lists, never a global window; the census
-    folds onto <= 64 rows map-side."""
-    from rgr_pdal_topo_spark.operators import retrieval
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    return retrieval.postings_gap_census(
-        load_table(spark, sf_dir, "documents")
-    )
-
-
-@query(
     "link_prediction",
     _with(
         f"lp AS ({_LINKED_PAGES_DUCK})",
@@ -10327,7 +9598,7 @@ def q_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     hubs), feeding crawl-frontier discovery beside cocitation's
     related-domain signal.  Exact: symmetrized simple graph, ln(deg)
     pinned to the 2^-13 grid (integer-valued libm input, the
-    bm25 contract), reciprocal by one exact floor-division,
+    integer-argument ln contract), reciprocal by one exact floor-division,
     aa_q an exact BIGINT sum; the k-cut orders on the total
     (aa_q, host_a, host_b) so the reported set is deterministic.
     Wedge centres above deg 64 drop FIRST (the cocitation fan-out
@@ -10335,68 +9606,6 @@ def q_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     the k-cut is a TakeOrdered."""
     pages = pagesops.linked_pages_df(spark, sf_dir)
     return linkgraph.adamic_adar(linkgraph.extract_links(pages))
-
-
-_RRF_DIV = linkgraph.exact_div_sql(str(retrieval.RRF_Q), "60 + {r}")
-
-
-@query(
-    "search_rrf",
-    _with(
-        *_BM25_CORE_CTES,
-        "bs AS (SELECT qid, doc_id, "
-        f"CAST(SUM({retrieval.TERM_Q13_SQL}) AS BIGINT) AS score_q13 "
-        "FROM m GROUP BY 1, 2)",
-        "br AS (SELECT qid, doc_id, CAST(ROW_NUMBER() OVER ("
-        "PARTITION BY qid ORDER BY score_q13 DESC, doc_id ASC) "
-        "AS BIGINT) AS r_bm25 FROM bs)",
-        f"d AS ({_DOCTOKS_DUCK})",
-        "pp AS (SELECT doc_id, u.pos AS pos, toks[u.pos] AS tok FROM "
-        "d, LATERAL (SELECT unnest(generate_series(1, len(toks))) "
-        "AS pos) u)",
-        f"pq2 AS (SELECT * FROM {_PHRASE_QW_DUCK})",
-        "pql AS (SELECT qid, COUNT(*) AS qlen FROM pq2 GROUP BY qid)",
-        "pm AS (SELECT pq2.qid, pp.doc_id, pp.pos - pq2.off AS anchor, "
-        "pq2.off FROM pp JOIN pq2 ON pq2.tok = pp.tok)",
-        "pa AS (SELECT qid, doc_id, anchor, COUNT(DISTINCT off) AS k "
-        "FROM pm GROUP BY 1, 2, 3)",
-        "ph AS (SELECT pa.qid, pa.doc_id, pa.anchor FROM pa JOIN pql "
-        "USING (qid) WHERE pa.k = pql.qlen AND pa.anchor >= 1)",
-        "ps AS (SELECT qid, doc_id, CAST(COUNT(*) AS BIGINT) AS "
-        "n_hits, CAST(MIN(anchor) AS BIGINT) AS first_pos FROM ph "
-        "GROUP BY 1, 2)",
-        "prr AS (SELECT qid, doc_id, CAST(ROW_NUMBER() OVER ("
-        "PARTITION BY qid ORDER BY n_hits DESC, first_pos ASC, "
-        "doc_id ASC) AS BIGINT) AS r_phrase FROM ps)",
-        "uf AS (SELECT COALESCE(b.qid, p.qid) AS qid, "
-        "COALESCE(b.doc_id, p.doc_id) AS doc_id, b.r_bm25, p.r_phrase "
-        "FROM br b FULL JOIN prr p ON p.qid = b.qid "
-        "AND p.doc_id = b.doc_id)",
-        "fs AS (SELECT qid, doc_id, r_bm25, r_phrase, "
-        f"COALESCE({_RRF_DIV.format(r='r_bm25')}, 0) + "
-        f"COALESCE({_RRF_DIV.format(r='r_phrase')}, 0) AS rrf_q "
-        "FROM uf)",
-    )
-    + "SELECT qid, doc_id, r_bm25, r_phrase, rrf_q FROM (SELECT *, "
-    "ROW_NUMBER() OVER (PARTITION BY qid ORDER BY rrf_q DESC, "
-    "doc_id ASC) AS rk FROM fs) t WHERE rk <= 5",
-)
-def q_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reciprocal-rank fusion of the BM25 and quoted-phrase rankings
-    (operators/retrieval.py search_fused; Cormack et al. 2009) — THE
-    standard hybrid-search combiner (keyword + positional here,
-    keyword + vector in production): per query the top-5 docs by
-    rrf(d) = sum over lists of 1/(60 + rank), consuming only RANKS so
-    heterogeneous scorers fuse without calibration.  Exact end to
-    end: both rankings are integer-exact with total tie-break orders,
-    each reciprocal is one exact floor-division onto the 2^-20 grid,
-    rrf_q an exact BIGINT sum; the oracle restates both rankings from
-    the SAME shared CTE fragments as the solo bm25_scores /
-    phrase_search rows plus the fusion, so solo/fused drift fails
-    parity."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    return retrieval.search_fused(load_table(spark, sf_dir, "documents"))
 
 
 #: planted space-time ramps (the hotspot_cells planting discipline —
@@ -10689,109 +9898,6 @@ def q_good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.col("n_r").cast("double"),
             6,
         ).alias("r_star"),
-    )
-
-
-#: nDCG per-position q13 term, ONE spelling: integer gain (2^rel - 1
-#: spelled as a CASE so no POW float detour) over the position
-#: discount — LOG2 runs on the INTEGER-valued double rk + 1 (the bm25
-#: ln contract applied to log2) and the quotient pins to the 2^-13
-#: grid BEFORE the per-query sum, so dcg_q / idcg_q are exact BIGINTs:
-_NDCG_TERM = (
-    "CAST(FLOOR(CAST(CASE WHEN rel >= 3 THEN 7 WHEN rel = 2 THEN 3 "
-    "ELSE 1 END AS DOUBLE) / LOG2(CAST(rk + 1 AS DOUBLE)) * 8192 + 0.5) "
-    "AS BIGINT)"
-)
-
-
-@query(
-    "search_ndcg",
-    _with(
-        *_BM25_CORE_CTES,
-        "bs AS (SELECT qid, doc_id, CAST(COUNT(*) AS BIGINT) AS n_hits, "
-        f"CAST(SUM({retrieval.TERM_Q13_SQL}) AS BIGINT) AS score_q13 "
-        "FROM m GROUP BY qid, doc_id)",
-        "rl AS (SELECT qid, doc_id, CAST(LEAST(n_hits, 3) AS BIGINT) "
-        "AS rel, score_q13 FROM bs)",
-        "sysr AS (SELECT qid, rel, ROW_NUMBER() OVER (PARTITION BY qid "
-        "ORDER BY score_q13 DESC, doc_id) AS rk FROM rl)",
-        "idl AS (SELECT qid, rel, ROW_NUMBER() OVER (PARTITION BY qid "
-        "ORDER BY rel DESC, doc_id) AS rk FROM rl)",
-        f"dc AS (SELECT qid, CAST(SUM({_NDCG_TERM}) AS BIGINT) AS dcg_q "
-        "FROM sysr WHERE rk <= 10 GROUP BY qid)",
-        f"ic AS (SELECT qid, CAST(SUM({_NDCG_TERM}) AS BIGINT) AS idcg_q "
-        "FROM idl WHERE rk <= 10 GROUP BY qid)",
-        "nc AS (SELECT qid, CAST(COUNT(*) AS BIGINT) AS n_cand FROM rl "
-        "GROUP BY qid)",
-    )
-    + "SELECT nc.qid, nc.n_cand, dc.dcg_q, ic.idcg_q, "
-    "ROUND(CAST(dc.dcg_q AS DOUBLE) / CAST(ic.idcg_q AS DOUBLE), 6) "
-    "AS ndcg FROM nc JOIN dc ON dc.qid = nc.qid "
-    "JOIN ic ON ic.qid = nc.qid",
-)
-def q_search_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """nDCG@10 evaluation of the BM25 ranking against a deterministic
-    pseudo-qrel — the ranking-quality metric that closes the retrieval
-    family (scores: bm25_scores; fusion: search_rrf; page:
-    search_results; THIS: is the ranking any good?).  Relevance grade =
-    number of distinct query terms the document matches, capped at 3
-    (graded term coverage — a standard cheap qrel when no human labels
-    exist); ideal ranking = the same candidates re-sorted by grade.
-
-    Exactness: gain 2^rel - 1 is an integer CASE (no POW float
-    detour); the only transcendental is LOG2 on the integer-valued
-    double rk + 1 (positions 2..11 — the bm25 ln contract), and each
-    gain/discount quotient pins to the 2^-13 grid BEFORE the <=10-term
-    per-query sum, so dcg_q and idcg_q are exact BIGINTs and nDCG is
-    ONE division, ROUND(,6).  Ranks are total orders (score DESC then
-    doc_id; grade DESC then doc_id) — no nondeterministic ties.
-
-    Scale shape: candidates per query come off the bm25 postings join
-    (broadcast query terms); both windows partition BY QUERY over
-    candidate sets, the classic top-k-per-key pattern, then every
-    aggregate runs on <= 10 rows per query."""
-    from pyspark.sql import Window
-
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    bs = retrieval.bm25_scores(docs)
-    rl = bs.select(
-        "qid",
-        "doc_id",
-        F.least(F.col("n_hits"), F.lit(3)).cast("long").alias("rel"),
-        "score_q13",
-    )
-    sys_w = Window.partitionBy("qid").orderBy(
-        F.col("score_q13").desc(), F.col("doc_id")
-    )
-    idl_w = Window.partitionBy("qid").orderBy(
-        F.col("rel").desc(), F.col("doc_id")
-    )
-    dc = (
-        rl.withColumn("rk", F.row_number().over(sys_w))
-        .filter(F.col("rk") <= 10)
-        .groupBy("qid")
-        .agg(F.sum(F.expr(_NDCG_TERM)).cast("long").alias("dcg_q"))
-    )
-    ic = (
-        rl.withColumn("rk", F.row_number().over(idl_w))
-        .filter(F.col("rk") <= 10)
-        .groupBy("qid")
-        .agg(F.sum(F.expr(_NDCG_TERM)).cast("long").alias("idcg_q"))
-    )
-    nc = rl.groupBy("qid").agg(F.count(F.lit(1)).alias("n_cand"))
-    return (
-        nc.join(dc, "qid")
-        .join(ic, "qid")
-        .selectExpr(
-            "qid",
-            "n_cand",
-            "dcg_q",
-            "idcg_q",
-            "ROUND(CAST(dcg_q AS DOUBLE) / CAST(idcg_q AS DOUBLE), 6) "
-            "AS ndcg",
-        )
     )
 
 
@@ -11514,103 +10620,6 @@ def _aniso_core(zt: DataFrame) -> DataFrame:
 
 
 @query(
-    "ann_recall_eval",
-    _with(f"e AS ({_EMB_DUCK})", f"n AS ({_NORM_DUCK})").rstrip()
-    + ", bt AS (SELECT query_id, nn_id FROM ("
-    "SELECT q.vec_id AS query_id, n.vec_id AS nn_id, "
-    "ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY "
-    "ROUND(list_dot_product(n.v, q.v) / (n.nrm * q.nrm), 5) DESC, "
-    "n.vec_id ASC) AS rank "
-    "FROM n JOIN n q ON q.vec_id < 10 AND n.vec_id <> q.vec_id) r "
-    "WHERE rank <= 5), "
-    "c AS (SELECT vec_id AS cid, v AS cv, nrm AS cnrm FROM n "
-    "WHERE vec_id < 16), "
-    "asg AS (SELECT n.vec_id, n.v, n.nrm, c.cid, "
-    f"ROW_NUMBER() OVER (PARTITION BY n.vec_id ORDER BY {_IVF_COS} DESC, "
-    "c.cid ASC) AS crn FROM n JOIN c ON TRUE), "
-    "members AS (SELECT vec_id AS nn_id, v, nrm, cid FROM asg "
-    "WHERE crn = 1), "
-    "probes AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn, cid "
-    "FROM asg WHERE vec_id < 10 AND crn <= 4), "
-    "cand AS (SELECT p.query_id, m.nn_id, "
-    "ROUND(list_dot_product(m.v, p.qv) / (m.nrm * p.qn), 5) AS cosine "
-    "FROM probes p JOIN members m ON m.cid = p.cid "
-    "AND m.nn_id <> p.query_id), "
-    "iv AS (SELECT query_id, nn_id FROM ("
-    "SELECT query_id, nn_id, ROW_NUMBER() OVER ("
-    "PARTITION BY query_id ORDER BY cosine DESC, nn_id ASC) AS rank "
-    "FROM cand) r WHERE rank <= 5), "
-    "qs AS (SELECT DISTINCT query_id FROM bt), "
-    "hits AS (SELECT qs.query_id, CAST(COALESCE(h.n_hit, 0) AS BIGINT) "
-    "AS n_hit FROM qs LEFT JOIN (SELECT bt.query_id, "
-    "CAST(COUNT(*) AS BIGINT) AS n_hit FROM bt "
-    "JOIN iv ON iv.query_id = bt.query_id AND iv.nn_id = bt.nn_id "
-    "GROUP BY bt.query_id) h ON h.query_id = qs.query_id) "
-    "SELECT query_id, n_hit, "
-    "ROUND(CAST(n_hit AS DOUBLE) / 5.0, 6) AS recall_at_5, "
-    "ROUND(CAST(SUM(n_hit) OVER () AS DOUBLE) / "
-    "CAST(5 * COUNT(*) OVER () AS DOUBLE), 6) AS mean_recall "
-    "FROM hits",
-)
-def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@5 of the IVF approximate nearest-neighbour path against
-    the brute-force exact top-5, per query and averaged — the ANN
-    analogue of neardup_eval (an approximate index's recall is a
-    MEASURED property, not a promise: 4-probe IVF misses neighbours
-    whose true list was not probed).  Composes two independently
-    oracle-verified subsystems (cosine_topk brute truth;
-    cosine_topk_ivf's exact CTE chain) into the evaluation row; the
-    pytest recall tests pin a floor, THIS reports the number.
-
-    Exactness: both top-5 sets come from total orders (rounded cosine
-    DESC, vec_id ASC — the cosine_topk contract), overlap counts are
-    integers, recall is ONE division, the mean ONE more over the
-    10-query census; zero-overlap queries survive via the qs LEFT
-    JOIN (an inner join would drop them and inflate the mean).
-
-    Scale shape: truth is the quadratic baseline on the SAME bounded
-    query set the brute query already runs (10 queries — the eval
-    never needs all-pairs); the IVF side is the bucketed scale path;
-    the join is on (query, neighbour) keys."""
-    from pyspark.sql import Window
-
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    bt = similarity.cosine_topk(emb, n_queries=10, k=5).select(
-        "query_id", "nn_id"
-    )
-    iv = similarity.cosine_topk_ivf(
-        emb, n_queries=10, k=5, n_centroids=16, n_probe=4
-    ).select("query_id", "nn_id")
-    qs = bt.select("query_id").distinct()
-    h = bt.join(iv, ["query_id", "nn_id"]).groupBy("query_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_hit")
-    )
-    hits = qs.join(h, "query_id", "left").select(
-        "query_id",
-        F.coalesce("n_hit", F.lit(0)).cast("long").alias("n_hit"),
-    )
-    full = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    return hits.select(
-        "query_id",
-        "n_hit",
-        F.expr("ROUND(CAST(n_hit AS DOUBLE) / 5.0, 6)").alias(
-            "recall_at_5"
-        ),
-        (
-            F.round(
-                F.sum("n_hit").over(full).cast("double")
-                / (5 * F.count(F.lit(1)).over(full)).cast("double"),
-                6,
-            )
-        ).alias("mean_recall"),
-    )
-
-
-@query(
     "funnel_latency",
     _with(
         *_FUNNEL_CTE_LIST,
@@ -12142,12 +11151,12 @@ DRIVER_WINDOW: list[str] = [
     "pages_geocode",
     "dedup_clusters",
     "crawl_latest", "views_asof", "cms_heavy_hitters",
-    "hll_overlap", "search_results",
+    "hll_overlap", "pip_pairs",
     "manifest_delete_scan", "manifest_bloom_scan", "pip_rtree",
     "hex_ring_density", "decontaminate", "repetition_stats",
     "url_canonicalize",
     "grid_extent", "grid_stats", "detrend_grid",
-    "neardup_incremental", "cosine_topk_ivf_sq8", "events_hourly",
+    "neardup_incremental", "profile_extract", "events_hourly",
     "fft_parseval",
 ]
 

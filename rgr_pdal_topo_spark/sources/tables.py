@@ -24,7 +24,6 @@ TABLES = [
     "lineitem",
     "events",
     "documents",
-    "embeddings",
 ]
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -38,3 +38,14 @@ def test_driver_window_is_fully_oracle_backed():
     assert first50 == DRIVER_WINDOW
     missing = [n for n in first50 if n not in ORACLES]
     assert not missing, f"window queries without oracles: {missing}"
+
+
+def test_bench_headline_names_registered_queries():
+    """bench.py looks every HEADLINE name up in QUERIES; a stale name
+    would only fail at bench time with a KeyError."""
+    import bench
+    from rgr_pdal_topo_spark.queries import QUERIES
+
+    unknown = [n for n in bench.HEADLINE if n not in QUERIES]
+    assert not unknown, f"HEADLINE names not registered: {unknown}"
+    assert len(set(bench.HEADLINE)) == len(bench.HEADLINE)

@@ -1047,76 +1047,6 @@ def test_robust_outliers_planted(spark, tmp_path):
     }
 
 
-def test_search_ndcg_equal_grades_exact_one(spark):
-    """When every candidate has the same grade, DCG == IDCG for ANY
-    ranking (equal gains, identical discounts), so nDCG is EXACTLY
-    1.0 — the analytic endpoint that needs no BM25 hand-computation."""
-    import os
-    import tempfile
-
-    import pandas as pd
-
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    df = pd.DataFrame(
-        {
-            "doc_id": range(4),
-            # each doc matches exactly ONE term of qid 2 "big data merge"
-            "text": ["big x", "big y y", "data z", "merge w w w"],
-            "lang": ["en"] * 4,
-            "source": ["s"] * 4,
-            "n_chars": [5] * 4,
-        }
-    )
-    with tempfile.TemporaryDirectory() as d:
-        df.to_parquet(os.path.join(d, "documents.parquet"))
-        rows = QUERIES["search_ndcg"](spark, d).collect()
-    assert rows, "expected at least one query with candidates"
-    for r in rows:
-        assert r["ndcg"] == 1.0 and r["dcg_q"] == r["idcg_q"]
-
-
-def test_search_ndcg_matches_numpy_recomputation(spark):
-    """Independent recomputation: rebuild nDCG@10 in numpy from the
-    (oracle-verified) bm25_scores candidates at sf0.001 with the same
-    q13 pinning and tie-breaks; must match the query bit-for-bit."""
-    import math
-
-    from rgr_pdal_topo_spark.operators import retrieval
-    from rgr_pdal_topo_spark.queries import QUERIES
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    sf = "/root/testdata/sf0.001"
-    bs = retrieval.bm25_scores(load_table(spark, sf, "documents")).toPandas()
-    got = {
-        r["qid"]: r for r in QUERIES["search_ndcg"](spark, sf).collect()
-    }
-
-    def term(rel, rk):
-        gain = 7 if rel >= 3 else (3 if rel == 2 else 1)
-        return math.floor(gain / math.log2(rk + 1) * 8192 + 0.5)
-
-    for qid, grp in bs.groupby("qid"):
-        grp = grp.assign(rel=grp.n_hits.clip(upper=3))
-        sys = grp.sort_values(
-            ["score_q13", "doc_id"], ascending=[False, True]
-        ).head(10)
-        idl = grp.sort_values(
-            ["rel", "doc_id"], ascending=[False, True]
-        ).head(10)
-        dcg = sum(
-            term(r, i + 1) for i, r in enumerate(sys.rel.tolist())
-        )
-        idcg = sum(
-            term(r, i + 1) for i, r in enumerate(idl.rel.tolist())
-        )
-        g = got[qid]
-        assert (g["dcg_q"], g["idcg_q"], g["n_cand"]) == (
-            dcg, idcg, len(grp)
-        )
-        assert g["ndcg"] == round(dcg / idcg, 6)
-
-
 def test_vrm_plane_exactly_zero_and_numpy_parity(spark):
     """A planar DEM of ANY tilt has identical unit normals everywhere,
     so interior VRM is EXACTLY 0.0 with m == 9 (the property that

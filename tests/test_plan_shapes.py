@@ -389,16 +389,6 @@ def test_hex_ring_is_joinless_scatter_gather(spark):
     assert max(plan.count("Scan parquet"), plan.count("FileScan")) <= 1
 
 
-def test_sq8_broadcasts_query_side(spark):
-    """Compressed-vector top-k broadcasts the (tiny) query set; the
-    corpus side never shuffles before the ranking window."""
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    plan = _plan(QUERIES["cosine_topk_sq8"](spark, SF_DIR))
-    assert "BroadcastExchange" in plan
-    assert "EvalPython" not in plan
-
-
 def test_manifest_delete_scan_broadcasts_delete_keys(spark):
     """Merge-on-read applies bounded delete sets as a broadcast
     anti-join — a shuffled anti-join on every read would tax all scans
@@ -408,21 +398,6 @@ def test_manifest_delete_scan_broadcasts_delete_keys(spark):
     plan = _plan(QUERIES["manifest_delete_scan"](spark, SF_DIR))
     assert "BroadcastExchange" in plan
     assert "LeftAnti" in plan
-
-
-def test_ivf_sq8_broadcasts_probes_and_centroids(spark):
-    """The composed ANN plan must broadcast BOTH small sides (centroids
-    into the assignment, probes into the in-list scan) and never
-    sort-merge the corpus."""
-    from rgr_pdal_topo_spark.operators.similarity import cosine_topk_ivf_sq8
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    plan = _plan(cosine_topk_ivf_sq8(emb, n_queries=10, k=5))
-    assert plan.count("BroadcastNestedLoopJoin") + plan.count(
-        "BroadcastHashJoin"
-    ) >= 2
-    assert "SortMergeJoin" not in plan
 
 
 def test_pii_scrub_zero_shuffle_no_python(spark):
@@ -509,21 +484,6 @@ def test_asof_join_single_shuffle_no_join(spark):
     assert len(hashparts) == 1
 
 
-def test_bm25_broadcasts_every_dimension(spark):
-    from rgr_pdal_topo_spark.operators import retrieval
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF_DIR, "documents")
-    plan = _plan(retrieval.bm25_scores(docs))
-    # query tokens, df, and the corpus scalars all broadcast; the only
-    # sort-merge joins allowed are fact-side (postings x doc lengths)
-    assert plan.count("BroadcastHashJoin") >= 2
-    # the 1-row corpus-scalar cross join broadcasts; never a cartesian
-    assert "CartesianProduct" not in plan
-    # final score agg is partial+final
-    assert "partial_count" in plan and "partial_sum" in plan
-
-
 def test_quantile_sketch_windows_over_buckets_only(spark):
     from rgr_pdal_topo_spark.operators import sketches
     from rgr_pdal_topo_spark.sources.tables import load_table
@@ -552,20 +512,6 @@ def test_anchor_topk_uses_window_group_limit(spark):
     plan = _plan(linkgraph.top_anchors(linkgraph.extract_anchor_pairs(lp)))
     assert plan.count("WindowGroupLimit") == 2      # Partial + Final
     assert "partial_count" in plan
-
-
-def test_search_results_pushes_topk_below_shuffle(spark):
-    from rgr_pdal_topo_spark.operators import retrieval
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF_DIR, "documents")
-    plan = _plan(retrieval.search_results(docs))
-    # top-k via WindowGroupLimit (Partial + Final): <= k score rows per
-    # qid per partition reach the ranking shuffle
-    assert plan.count("WindowGroupLimit") == 2
-    # query tokens / df / corpus scalars broadcast, like solo bm25
-    assert plan.count("BroadcastHashJoin") >= 2
-    assert "CartesianProduct" not in plan
 
 
 def test_dup_spans_windows_partition_by_doc(spark):
@@ -611,27 +557,6 @@ def test_source_quality_rollup_is_partial_final(spark):
     plan = _plan(textstats.source_quality(docs))
     assert "partial_count" in plan and "partial_sum" in plan
     assert "CartesianProduct" not in plan
-
-
-def test_semdedup_broadcasts_centroids_partitions_by_cluster(spark):
-    """Centroids broadcast into the assignment; the within-cluster
-    self-join is an equi-join on cid (never a cartesian product); the
-    per-cluster rollups combine map-side."""
-    from rgr_pdal_topo_spark.operators import similarity
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    plan = _plan(similarity.semdedup(emb))
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
-    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan \
-        or plan.count("BroadcastHashJoin") >= 2
-    assert "partial_count" in plan
-    # the centroid argmax is a max-struct AGGREGATE (partials combine
-    # map-side), never a per-vector row_number window that would
-    # sort-exchange all n_centroids candidate rows per vector
-    assert "Window" not in plan
-    assert "partial_max" in plan
 
 
 def test_token_packing_windows_partition_by_shard(spark):
@@ -785,18 +710,6 @@ def test_tile_pyramid_single_scan_all_zooms(spark):
     assert "EvalPython" not in plan
     assert max(plan.count("Scan parquet"), plan.count("FileScan")) == 1
     assert "Generate" in plan  # the explode
-
-
-def test_doc_keywords_topk_below_shuffle(spark):
-    """The per-doc top-5 cut pushes below the shuffle
-    (WindowGroupLimit) and the corpus scalar broadcasts — the
-    anchor_text plan shape on the postings table."""
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    plan = _plan(QUERIES["doc_keywords"](spark, SF_DIR))
-    assert "WindowGroupLimit" in plan
-    assert "BroadcastExchange" in plan
-    assert "EvalPython" not in plan
 
 
 def test_session_peaks_global_window_only_on_hour_rollup(spark):
