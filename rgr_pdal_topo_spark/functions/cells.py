@@ -128,33 +128,36 @@ def quad_k_ring(cell: Column, res: int) -> Column:
     ids, clamped at grid edges may include the cell itself twice —
     callers use it as a join prefilter, duplicates are harmless after
     array_distinct)."""
-    # de-interleave via the inverse Morton on the fly
-    ix = reduce(
-        lambda a, b: a + b,
-        [
-            F.shiftleft(
-                F.shiftright(cell, 2 * b + 1).bitwiseAND(F.lit(1)), b
-            )
-            for b in range(res)
-        ],
-    )
-    iy = reduce(
-        lambda a, b: a + b,
-        [
-            F.shiftleft(F.shiftright(cell, 2 * b).bitwiseAND(F.lit(1)), b)
-            for b in range(res)
-        ],
-    )
     n = 1 << res
-    cells = []
-    for dr in (-1, 0, 1):
-        for dc in (-1, 0, 1):
-            jx = F.greatest(F.least(ix + dc, F.lit(n - 1)), F.lit(0))
-            jy = F.greatest(F.least(iy + dr, F.lit(n - 1)), F.lit(0))
-            cells.append(
-                F.lit(1 << (2 * res)).cast("long") + _morton(jx, jy, res)
-            )
-    return F.array_distinct(F.array(*cells))
+
+    def deinterleave(c: Column) -> Column:
+        # the inverse Morton on the fly
+        def bits(shift: int) -> Column:
+            return reduce(lambda a, b: a + b, [
+                F.shiftleft(F.shiftright(c, 2 * b + shift).bitwiseAND(1), b)
+                for b in range(res)
+            ])
+        return F.struct(bits(1).alias("ix"), bits(0).alias("iy"))
+
+    def clamp(v: Column) -> Column:
+        return F.greatest(F.least(v, F.lit(n - 1)), F.lit(0))
+
+    def ring(xy: Column) -> Column:
+        nbrs = F.array(*[
+            F.struct(clamp(xy["ix"] + dc).alias("jx"),
+                     clamp(xy["iy"] + dr).alias("jy"))
+            for dr in (-1, 0, 1) for dc in (-1, 0, 1)
+        ])
+        return F.array_distinct(F.transform(
+            nbrs,
+            lambda j: F.lit(1 << (2 * res)).cast("long")
+            + _morton(j["jx"], j["jy"], res),
+        ))
+
+    # lambda variables bind `cell`, (ix, iy) and each neighbour once:
+    # inlined, every neighbour id would repeat the de-interleave, and each
+    # of those the whole `cell` expression (~10^6 characters at res 6)
+    return F.transform(F.transform(F.array(cell), deinterleave), ring)[0]
 
 
 # ---------------------------------------------------------------------------

@@ -12,8 +12,9 @@ Reference semantics (pointCloudCreation.py:301-324, :311-322):
 
 Spark shape: one hash aggregation (map-side partial + final) on the cell id —
 the canonical scalable groupBy.  The fallback is a stencil kernel
-(``idw_fill``, halo = window radius) on the tiled stencil engine
-(operators/stencils.py), plus one join back to the input for ``n``.
+(``idw_fill``, halo = window radius) on the tile runner
+(operators/stencils.py), which carries each cell's ``n`` through the tile
+beside its value.
 
 Skew (north_rule): a web-scale payload can hash astronomically many records
 to one cell.  ``grid_points(..., salt=N)`` runs the same aggregate as an
@@ -28,9 +29,10 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from rgr_pdal_topo_spark.functions.kernels import KERNELS, Kernel
-from rgr_pdal_topo_spark.grid import GridSpec
-from rgr_pdal_topo_spark.operators.stencils import run_stencil
+from rgr_pdal_topo_spark.grid import GridSpec, TileWindow
+from rgr_pdal_topo_spark.operators.stencils import (
+    core_cells, replicate_halo, run_tiles, tile_anchors,
+)
 
 #: guards 1/d^2 when a point lies exactly on a cell center; value chosen so
 #: it never affects the 6-decimal rounded outputs for off-center points.
@@ -128,8 +130,9 @@ def all_cells(spark, grid: GridSpec) -> DataFrame:
 def idw_fill(
     p: np.ndarray, dx: float, dy: float, window_size: int = 6
 ) -> np.ndarray:
-    """points2grid window fallback as a stencil kernel: each NaN cell takes
-    the 1/center-distance^2 weighted mean of the non-NaN cells within
+    """points2grid window fallback as a stencil kernel over a window padded
+    by ``window_size`` on every side: each NaN cell takes the
+    1/center-distance^2 weighted mean of the non-NaN cells within
     Chebyshev radius ``window_size`` (centre excluded); other cells keep
     their value.  NaN where no neighbor is in range."""
     w = window_size
@@ -150,11 +153,6 @@ def idw_fill(
         return np.where(np.isnan(core), swv / sw, core)
 
 
-KERNELS["idw_fill"] = Kernel(
-    idw_fill, "nan", lambda p: int(p.get("window_size", 6))
-)
-
-
 def fill_empty_cells(
     grid_df: DataFrame, grid: GridSpec, window_size: int = 6,
 ) -> DataFrame:
@@ -167,22 +165,33 @@ def fill_empty_cells(
     filled int) where filled=1 marks fallback-filled cells; cells with no
     value in range stay as NULL rows with n=0, filled=0.
     """
-    # the halo (window_size) must fit inside one tile
-    filled = run_stencil(
-        grid_df, grid, "idw_fill", {"window_size": window_size},
-        tile_cells=max(64, window_size), out_col="value",
+    tile_cells = max(64, window_size)  # the halo must fit inside one tile
+
+    def fill(win: TileWindow, dense: dict) -> dict:
+        # out-of-grid margins are NoData
+        padded = np.pad(dense["value"], win.pads, constant_values=np.nan)
+        d = float(grid.cell)
+        value = idw_fill(padded, d, d, window_size)[: win.nrows, : win.ncols]
+        r, c = win.row0 - win.wr0, win.col0 - win.wc0
+        core = np.s_[r:r + win.nrows, c:c + win.ncols]
+        had = ~np.isnan(dense["value"][core])
+        return core_cells(
+            win, value=value, n=np.where(had, dense["n"][core], 0.0),
+            filled=(~had & ~np.isnan(value)).astype("int32"),
+        )
+
+    cells = replicate_halo(
+        grid_df.select("cell_row", "cell_col", "value", "n"),
+        grid, tile_cells, window_size,
     )
-    src = grid_df.select("cell_row", "cell_col",
-                         F.col("value").alias("src"), "n")
-    # isnan(NULL) is false, so `had` is never NULL
-    had = F.col("src").isNotNull() & ~F.isnan("src")
-    return filled.join(src, ["cell_row", "cell_col"], "left").select(
-        "cell_row",
-        "cell_col",
-        "value",
-        F.when(had, F.col("n")).otherwise(F.lit(0)).alias("n"),
-        (~had & F.col("value").isNotNull()).cast("int").alias("filled"),
+    anchors = tile_anchors(grid_df.sparkSession, grid, tile_cells)
+    out = run_tiles(
+        cells.unionByName(anchors, allowMissingColumns=True), grid,
+        tile_cells, window_size, fill,
+        "cell_row int, cell_col int, value double, n double, filled int",
     )
+    # n rides the tile as a double (NaN = no row); back to the input type
+    return out.withColumn("n", F.col("n").cast(grid_df.schema["n"].dataType))
 
 
 def detect_max_cell_count(

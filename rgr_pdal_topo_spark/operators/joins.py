@@ -3,11 +3,12 @@ kNN, grid-grid, height-above-ground.
 
 Everything is a composition of built-in DataFrame ops; Python appears only
 in the exact-geometry test of the generic-polygon path (Arrow-vectorized
-ray casting), and only on cell-prefiltered candidate pairs.
+ray casting), and only on cell-prefiltered candidate pairs.  The R-tree
+path packs its tree on the driver and probes it with JVM joins.
 
 Scale shapes:
-  * dimension tables (polygons, profiles, gps queries) are broadcast — the
-    fact side streams, no shuffle;
+  * dimension tables (polygons, profiles, gps queries, the R-tree's two
+    levels) are broadcast — the fact side streams, no shuffle;
   * the generic-polygon path prefilters candidates by coarse cell cover
     before the exact test (the reference's buffer-prefilter idea,
     baseGrid.py:776-781, made explicit);
@@ -19,7 +20,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from rgr_pdal_topo_spark.session import eager_jobs
@@ -527,8 +528,8 @@ def _str_pack(
     """Sort-Tile-Recursive packing of (n, 4) half-open bboxes
     [xmin, ymin, xmax, ymax] into leaves of <= leaf_cap entries.
     Returns (leaf_bounds (L, 4), member-index arrays per leaf).  One
-    internal level is enough for a broadcast dimension: the probe scans
-    L leaf bounds vectorized, then only the members of hit leaves."""
+    internal level is enough for a broadcast dimension: the probe tests
+    the L leaf bounds, then only the members of hit leaves."""
     n = len(boxes)
     cx = (boxes[:, 0] + boxes[:, 2]) / 2.0
     cy = (boxes[:, 1] + boxes[:, 3]) / 2.0
@@ -561,120 +562,83 @@ def _str_pack(
 def pip_join_rtree(points: DataFrame, polygons: DataFrame) -> DataFrame:
     """The north-star phrase implemented literally: a *broadcast R-tree
     per partition*.  Polygon bboxes are STR-packed driver-side (the
-    dimension is driver-sized by definition — it broadcasts), shipped
-    via ``sc.broadcast``, and every partition probes the tree inside
-    ONE Arrow stage: leaf bounds first (L vectorized comparisons),
-    member boxes only for points that hit a leaf.
+    dimension is driver-sized by definition — it broadcasts) and the two
+    levels of the tree ship as two small broadcast relations: the leaf
+    bounds, and the members with their leaf id.  Every partition probes
+    them map-side in the JVM: points join the leaf bounds on the
+    half-open range (a BroadcastNestedLoopJoin over L leaves), then the
+    members of each hit leaf on leaf id (a BroadcastHashJoin), then the
+    exact member test.
 
     Same half-open containment as :func:`pip_join_rect`
-    (``xmin <= x < xmin+width``), so the two strategies are
-    output-identical (pinned by test + the shared pip oracle).  Why it
-    exists next to the range join: ``pip_join_rect`` is a
-    BroadcastNestedLoopJoin — O(P) row-at-a-time polygon tests per
-    point in the JVM.  Fine at 25 polygons; at 10^5+ fault-scarp/
-    alluvial-fan units this strategy wins with O(L) = O(P/leaf_cap)
-    BATCH-vectorized leaf-bound tests (one numpy compare over the whole
-    Arrow batch per leaf, after a single vectorized batch-bbox pass
-    drops leaves the partition cannot touch) plus member tests only for
-    points inside hit leaves — a ~leaf_cap-fold cut in comparisons on
-    top of the scalar->SIMD win, while staying a zero-shuffle map-side
-    stage.  It is NOT O(log P) per point: log-depth descent pays off
-    when queries are single points against a driver-resident tree;
-    against Arrow BATCHES the flat packed level vectorizes better than
-    pointer-chasing, and the dimension side is broadcast-sized by
-    definition, so L stays small (tests/test_joins.py pins the measured
+    (``xmin <= x < xmin+width``; a NaN coordinate fails every ``<``), so
+    the two strategies are output-identical (pinned by test + the shared
+    pip oracle).  Why it exists next to the range join:
+    ``pip_join_rect`` tests every polygon for every point, O(P).  Fine
+    at 25 polygons; at 10^5+ fault-scarp/alluvial-fan units this
+    strategy tests O(L) = O(P/leaf_cap) leaf bounds plus the <= leaf_cap
+    members of each hit leaf — a ~leaf_cap-fold cut in comparisons,
+    while staying a zero-shuffle map-side stage with no Python worker.
+    It is NOT O(log P) per point: one flat packed level is enough for a
+    broadcast-sized dimension (tests/test_joins.py pins the measured
     crossover at 10^5 polygons).
     """
-    with eager_jobs(polygons.sparkSession):
-        rows = polygons.select(
+    spark = points.sparkSession
+    with eager_jobs(spark):
+        polys = polygons.select(
             "polygon_id", "xmin", "ymin", "width", "height"
-        ).collect()
-    if not rows:  # empty dimension: no pairs, schema intact
-        return points.sparkSession.createDataFrame(
-            [], "pid long, polygon_id int"
-        )
-    pids = np.array([r["polygon_id"] for r in rows], dtype=np.int64)
-    boxes = np.array(
-        [
-            [r["xmin"], r["ymin"], r["xmin"] + r["width"],
-             r["ymin"] + r["height"]]
-            for r in rows
-        ],
-        dtype=np.float64,
+        ).toPandas()
+    if polys.empty:  # empty dimension: no pairs, schema intact
+        return spark.createDataFrame([], "pid long, polygon_id int")
+    x0 = polys["xmin"].to_numpy(np.float64)
+    y0 = polys["ymin"].to_numpy(np.float64)
+    boxes = np.stack(
+        [x0, y0, x0 + polys["width"].to_numpy(np.float64),
+         y0 + polys["height"].to_numpy(np.float64)],
+        axis=1,
     )
     bounds, leaves = _str_pack(boxes)
-    spark = points.sparkSession
-    bc = spark.sparkContext.broadcast(
-        (bounds, [l.copy() for l in leaves], boxes, pids)
-    )
+    member = np.concatenate(leaves)
+    leaf_ids = np.arange(len(leaves), dtype=np.int32)
+    # pandas frames become local relations: broadcasting them runs no job
+    leaf_bounds = spark.createDataFrame(pd.DataFrame({
+        "__leaf": leaf_ids,
+        "lx0": bounds[:, 0], "ly0": bounds[:, 1],
+        "lx1": bounds[:, 2], "ly1": bounds[:, 3],
+    }))
+    members = spark.createDataFrame(pd.DataFrame({
+        "__leaf": np.repeat(leaf_ids, [len(m) for m in leaves]),
+        "polygon_id": polys["polygon_id"].to_numpy(np.int32)[member],
+        "x0": boxes[member, 0], "y0": boxes[member, 1],
+        "x1": boxes[member, 2], "y1": boxes[member, 3],
+    }))
+    x, y = F.col("x"), F.col("y")
 
-    def probe(batches):
-        lb, lv, bx, ids = bc.value
-        for pdf in batches:
-            x = pdf["x"].to_numpy(dtype=np.float64)
-            y = pdf["y"].to_numpy(dtype=np.float64)
-            pid = pdf["pid"].to_numpy()
-            if len(x) == 0:
-                continue
-            # batch-bbox prefilter: one vectorized pass drops every
-            # leaf this partition's points cannot touch (a big cut when
-            # the input is spatially clustered, e.g. Z-order/manifest
-            # pruned scans; a no-op cost otherwise).  The bbox is taken
-            # over FINITE coords only — one NaN point must not poison
-            # min/max and silently drop the whole batch's pairs (NaN
-            # points themselves fail every box test, as before)
-            finite = np.isfinite(x) & np.isfinite(y)
-            if not finite.any():
-                continue
-            bxmin, bxmax = x[finite].min(), x[finite].max()
-            bymin, bymax = y[finite].min(), y[finite].max()
-            live = np.nonzero(
-                (lb[:, 0] <= bxmax) & (lb[:, 2] > bxmin)
-                & (lb[:, 1] <= bymax) & (lb[:, 3] > bymin)
-            )[0]
-            out_p, out_g = [], []
-            for li in live:
-                hit = (
-                    (x >= lb[li, 0]) & (x < lb[li, 2])
-                    & (y >= lb[li, 1]) & (y < lb[li, 3])
-                )
-                if not hit.any():
-                    continue
-                qx, qy, qp = x[hit], y[hit], pid[hit]
-                for mi in lv[li]:
-                    inside = (
-                        (qx >= bx[mi, 0]) & (qx < bx[mi, 2])
-                        & (qy >= bx[mi, 1]) & (qy < bx[mi, 3])
-                    )
-                    if inside.any():
-                        out_p.append(qp[inside])
-                        out_g.append(
-                            np.full(int(inside.sum()), ids[mi])
-                        )
-            if out_p:
-                yield pd.DataFrame(
-                    {
-                        "pid": np.concatenate(out_p),
-                        "polygon_id": np.concatenate(out_g).astype(
-                            np.int32
-                        ),
-                    }
-                )
+    def inside(x0: str, y0: str, x1: str, y1: str) -> Column:
+        return (
+            (x >= F.col(x0)) & (x < F.col(x1))
+            & (y >= F.col(y0)) & (y < F.col(y1))
+        )
 
-    return points.select("pid", "x", "y").mapInPandas(
-        probe, "pid long, polygon_id int"
+    return (
+        points.select(F.col("pid").cast("long").alias("pid"), x, y)
+        .join(F.broadcast(leaf_bounds), inside("lx0", "ly0", "lx1", "ly1"))
+        .join(F.broadcast(members), "__leaf")
+        .filter(inside("x0", "y0", "x1", "y1"))
+        .select("pid", "polygon_id")
     )
 
 
 # Dispatcher thresholds (tunable per cluster; defaults sized for the
 # strategies' measured regimes):
 #  * <= PIP_RECT_MAX polygons, a BroadcastNestedLoopJoin's O(P)
-#    row-at-a-time predicate is cheaper than standing up an Arrow stage
-#    (the measured rtree crossover in tests/test_joins.py sits near
-#    10^4-10^5; 4096 is safely below it);
-#  * <= PIP_BROADCAST_MAX polygons, the STR-packed bbox arrays broadcast
-#    at ~40 bytes/polygon (~40 MB at the cap) and the zero-shuffle
-#    R-tree probe wins;
+#    predicate per point is cheaper than the R-tree's driver-side
+#    collect and packing plus its second broadcast (the measured rtree
+#    crossover in tests/test_joins.py sits near 10^4-10^5; 4096 is
+#    safely below it);
+#  * <= PIP_BROADCAST_MAX polygons, the two STR-packed tree levels
+#    broadcast at ~40 bytes/polygon (~40 MB at the cap) and the
+#    zero-shuffle R-tree probe wins;
 #  * above that the dimension no longer belongs on every executor and
 #    the shuffle cover-cell equi-join is the only scale-safe shape.
 PIP_RECT_MAX = 4096

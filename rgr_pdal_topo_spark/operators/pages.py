@@ -4,24 +4,22 @@ FIXTURES.md §1).
 The input_hint table is (url, warc_ts, html binary, text, lang) with the
 per-row invariant "byte-identical extracted text per url".  The driver
 tables carry `documents(doc_id, text, lang, ...)`; the page layer wraps
-each document into a deterministic html payload and `extract_text` is the
-pure Arrow-batched inverse — so `extract(html) == text` holds
+each document into a deterministic html payload and `extract_text` is its
+inverse, a built-in expression — so `extract(html) == text` holds
 byte-for-byte for every url, which tests/test_pages.py and the
 extract_pages oracle assert literally.
 
-All construction is shared SQL-dialect string arithmetic; extraction is a
-vectorized pandas UDF (regex over decoded bytes — the Arrow replacement
-for the reference's out-of-process text handling), with the identical
-regex running in DuckDB for the oracle.
+Construction and extraction are both shared SQL-dialect string
+arithmetic: extraction is a regex over the decoded bytes (the JVM
+replacement for the reference's out-of-process text handling), and the
+same regex and unescape run in DuckDB for the oracle.  Nothing in this
+module starts a Python worker.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
 
 #: html template (SQL fragment shared with the DuckDB oracle): no
 #: whitespace outside tags, and the text is entity-escaped (& then <) so
@@ -263,20 +261,16 @@ def geo_lonlat(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@pandas_udf(StringType())
-def _extract(html: pd.Series) -> pd.Series:
-    decoded = html.apply(lambda b: b.decode("utf-8"))
-    cap = decoded.str.extract(EXTRACT_RE, expand=False)
-    return cap.str.replace("&lt;", "<", regex=False).str.replace(
-        "&amp;", "&", regex=False
-    )
-
-
 def extract_text(pages: DataFrame) -> DataFrame:
     """The extraction invariant: adds `extracted` (byte-identical to the
-    original text per url) — pure deterministic Arrow UDF over the binary
-    html payload."""
-    return pages.withColumn("extracted", _extract(F.col("html")))
+    original text per url) — decode the binary html as UTF-8 (malformed
+    bytes raise), take the first ``EXTRACT_RE`` capture (NULL when no
+    paragraph matches; ``regexp_extract`` would give ''), unescape.  A
+    JVM projection: no Python worker."""
+    first = (
+        f"get(regexp_extract_all(decode(html, 'UTF-8'), '{EXTRACT_RE}', 1), 0)"
+    )
+    return pages.withColumn("extracted", F.expr(unescape_sql(first)))
 
 
 # ---------------------------------------------------------------------------

@@ -17,9 +17,10 @@ kernels eagerly per grid (dem.py).  Here the same shape is Spark-native:
      asserted by tests/test_stencils.py against the whole-grid oracle.
 
 Steps 1 and 2 are the engine's one way to run a per-tile raster function:
-``gridding.fill_empty_cells`` is a stencil kernel, ``flow.fill_dem`` runs
-its per-tile priority flood through them, and the spectral/terrain tile
-operators run through them with halo 0 and their own output schemas.
+``gridding.fill_empty_cells`` runs its ``idw_fill`` kernel through them
+(carrying ``n`` beside the value), ``flow.fill_dem`` its per-tile priority
+flood, and the spectral/terrain tile operators run through them with
+halo 0 and their own output schemas.
 Tile geometry (counts, core, padded window) comes from ``GridSpec``.
 
 Global-edge boundary conditions are applied per kernel ``pad_mode``

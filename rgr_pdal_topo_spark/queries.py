@@ -359,8 +359,9 @@ def q_grid_idw_filled(spark: SparkSession, sf_dir: str) -> DataFrame:
     within Chebyshev radius 6 (``window_size=6``,
     pointCloudCreation.py:311-322 at :320); cells with no filled neighbor
     in range stay explicit NoData.  The fill is the ``idw_fill`` stencil
-    kernel on the tiled stencil engine (gridding.fill_empty_cells) — the
-    oracle replays the identical weighted mean as an offset join."""
+    kernel on the tile runner, which carries ``n`` beside the value
+    (gridding.fill_empty_cells) — the oracle replays the identical
+    weighted mean as an offset join."""
     g = gridding.grid_points(points_df(spark, sf_dir), G, output_type="idw")
     out = gridding.fill_empty_cells(g, G, window_size=6)
     # binary 2^-13 hashed precision: IDW weights are irrational and the
@@ -460,12 +461,13 @@ def q_pip_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_pip_rtree(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1 via the broadcast STR-packed R-tree probed per partition
     (joins.pip_join_rtree) — output-identical to pip_pairs (same oracle
-    text), but a ZERO-SHUFFLE map-side Arrow stage instead of a
-    BroadcastNestedLoopJoin: O(P/leaf_cap) batch-vectorized leaf scans
-    plus member tests for hit leaves instead of O(P) row-at-a-time
-    predicate evaluations — the difference that matters when the
-    polygon layer is 10^5 fault-scarp units rather than 25 test
-    rectangles (measured crossover pinned in tests/test_joins.py)."""
+    text), but a ZERO-SHUFFLE map-side probe of two broadcast tree
+    levels in the JVM instead of one BroadcastNestedLoopJoin over every
+    polygon: O(P/leaf_cap) leaf-bound tests plus member tests for hit
+    leaves instead of O(P) predicate evaluations per point — the
+    difference that matters when the polygon layer is 10^5 fault-scarp
+    units rather than 25 test rectangles (measured crossover pinned in
+    tests/test_joins.py)."""
     return joins.pip_join_rtree(
         points_df(spark, sf_dir), polygons_df(spark, sf_dir)
     )
@@ -5366,9 +5368,10 @@ from rgr_pdal_topo_spark.operators import smrf as smrfops  # noqa: E402
 )
 def q_extract_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """input_hint invariant: pages (url, warc_ts, html, text, lang) with
-    extract(html) byte-identical to text per url — extraction is a
-    vectorized Arrow UDF over the binary payload; the oracle replays the
-    identical construction + regex in SQL."""
+    extract(html) byte-identical to text per url — extraction is the
+    oracle's own SQL spelling (decode, first regex capture, unescape) run
+    as a JVM projection over the binary payload; the oracle replays the
+    identical construction + regex in DuckDB."""
     p = pagesops.extract_text(pagesops.pages_df(spark, sf_dir))
     return p.select(
         "url", "warc_epoch", "lang", "extracted",

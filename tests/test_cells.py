@@ -69,6 +69,32 @@ def test_k_ring_clamped_at_edges(spark):
     assert 4 <= len(row.ring) <= 9  # corner: clamped, deduped
 
 
+def test_k_ring_res12_compact_and_matches_numpy(spark):
+    """At res 12 the k-ring column stays small (each neighbour binds the
+    de-interleaved cell once instead of re-inlining it: the inlined
+    spelling was ~10^6 characters at res 6 and took seconds to analyse),
+    and its rings equal a NumPy enumeration of the clamped 3x3
+    neighbourhood at interior, edge and corner cells."""
+    from rgr_pdal_topo_spark.functions.cells import _morton_np
+
+    res, n = 12, 1 << 12
+    col = cells.quad_k_ring(cells.quad_cell(F.col("lon"), F.col("lat"), res), res)
+    assert len(str(col)) < 20_000
+    ixy = [(1234, 2345), (0, 0), (n - 1, n - 1), (0, n - 1), (n - 1, 0),
+           (0, 77), (77, n - 1)]
+    ids = [int((1 << 2 * res) + _morton_np(np.array([x]), np.array([y]), res)[0])
+           for x, y in ixy]
+    df = spark.createDataFrame([(c,) for c in ids], "cell long")
+    got = {r.cell: sorted(r.ring) for r in df.select(
+        "cell", cells.quad_k_ring(F.col("cell"), res).alias("ring")).collect()}
+    for (x, y), c in zip(ixy, ids):
+        jx = np.clip(x + np.array([-1, 0, 1] * 3), 0, n - 1)
+        jy = np.clip(y + np.repeat([-1, 0, 1], 3), 0, n - 1)
+        want = sorted(set(((1 << 2 * res) + _morton_np(jx, jy, res)).tolist()))
+        assert got[c] == want, (x, y)
+    assert [len(got[c]) for c in ids] == [9, 4, 4, 4, 4, 6, 6]
+
+
 def test_s2_udf_equals_column(spark):
     rng = np.random.RandomState(2)
     pts = [

@@ -40,6 +40,33 @@ def test_extract_handles_markup_and_newlines(spark):
     assert out.filter("extracted IS NULL OR extracted <> text").count() == 0
 
 
+def test_extract_text_edge_cases(spark):
+    """extract_text on raw html bytes: multi-byte UTF-8 survives, a page
+    with no paragraph gives NULL (not ''), the first paragraph wins, the
+    capture spans lines, &lt; unescapes before &amp;, and malformed UTF-8
+    raises instead of extracting garbage."""
+    import pytest
+
+    cases = {
+        0: ("<p>caf\u00e9 \u20ac \U0001F600</p>".encode(),
+            "caf\u00e9 \u20ac \U0001F600"),
+        1: (b"<html><body>no paragraph</body></html>", None),
+        2: (b"<p>first</p><p>second</p>", "first"),
+        3: (b"<p>a\nb\r\nc</p>", "a\nb\r\nc"),
+        4: (b"<p>&amp;lt; &lt;b&gt;</p>", "&lt; <b&gt;"),
+    }
+    df = spark.createDataFrame(
+        [(k, bytearray(h)) for k, (h, _) in cases.items()], "id int, html binary"
+    )
+    got = {r.id: r.extracted for r in pages.extract_text(df).collect()}
+    assert got == {k: want for k, (_, want) in cases.items()}
+    bad = spark.createDataFrame(
+        [(9, bytearray(b"<p>\xff\xfe</p>"))], "id int, html binary"
+    )
+    with pytest.raises(Exception, match="MALFORMED_CHARACTER_CODING"):
+        pages.extract_text(bad).collect()
+
+
 def test_geo_capture_first_match_wins_over_body_lookalikes(spark):
     """The ICBM capture must read the HEAD meta tag even when the body
     text contains a look-alike content=\"a;b\" substring — both engines

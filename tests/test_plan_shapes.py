@@ -254,6 +254,8 @@ def test_tile_operator_build_runs_no_job(spark, name):
     plan = _plan(df)
     assert "FlatMapGroupsInArrow" in plan
     assert "FlatMapGroupsInPandas" not in plan
+    if name == "fill_empty_cells":  # n rides the tile: no join back
+        assert "Join" not in plan
 
 
 def test_eager_builders_tag_every_build_job(spark, tmp_path):
@@ -305,6 +307,17 @@ def test_pages_geocode_zero_shuffle_no_python(spark):
     from rgr_pdal_topo_spark.queries import QUERIES
 
     plan = _plan(QUERIES["pages_geocode"](spark, SF_DIR))
+    assert "Exchange" not in plan
+    assert "EvalPython" not in plan
+
+
+def test_extract_pages_zero_shuffle_no_python(spark):
+    """Text extraction is a pure scan -> project in the JVM: decode,
+    regex and unescape are built-in expressions, so no Python worker
+    sees the html payload."""
+    from rgr_pdal_topo_spark.queries import QUERIES
+
+    plan = _plan(QUERIES["extract_pages"](spark, SF_DIR))
     assert "Exchange" not in plan
     assert "EvalPython" not in plan
 
