@@ -26,7 +26,7 @@ if REPO not in sys.path:
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # The headline subset: one per operator family (scan/derive, gridding agg,
-# stencil engine, spatial joins, dedup, text, link graph, relational,
+# stencil engine, spatial joins, dedup, text, relational,
 # windows).  The first 19 entries are the "comparable-20 subtotal" of
 # BENCH/BASELINE.md less its cosine_topk, which is no longer registered.
 # A query whose builder does its work eagerly (localCheckpoint or collect
@@ -56,8 +56,8 @@ HEADLINE = [
     "terrain_pipeline",
     "corpus_pipeline",
     "hex_pages",
-    # (neardup_incremental and pagerank_hosts are absent: the LSH store
-    # protocol and the localCheckpoint-pinned supersteps run eagerly)
+    # (neardup_incremental is absent: the LSH store protocol runs
+    # eagerly)
     "pip_rtree",
     "hex_ring_density",
     "pages_pipeline",
@@ -71,7 +71,6 @@ HEADLINE = [
     # winnow_fingerprints are absent: connected components, the sketch
     # register folds, and the positional-shingle / bigram streams
     # localCheckpoint inside the builder)
-    "anchor_text",
     "hll_by_lang",
     "source_quality",
     "token_packing",
@@ -82,40 +81,24 @@ HEADLINE = [
     "contour_cells",
     "aspect_rose",
     "hypsometry",
-    # (hits_hosts, host_distance and lpa_communities are absent: their
-    # edge lists localCheckpoint inside the builder.  twi and
-    # grid_mean_salted share upstream passes with flow_chi / grid_idw
-    # but time their OWN marginal plans)
+    # (twi and grid_mean_salted share upstream passes with flow_chi /
+    # grid_idw but time their OWN marginal plans)
     "viewshed",
     "grid_mean_salted",
     "twi",
-    "cocitation_hosts",
-    "link_geo_bands",
     "funnel_steps",
-    # (host_triangles is absent: its oriented edge list localCheckpoints
-    # inside triangle_counts)
-    "degree_histogram",
     "curvature_classes",
     "tile_pyramid",
-    "link_reciprocity",
     "langid_confusion",
     "hotspot_cells",
     "slope_area_fit",
     "crawl_segment_diff",
     "morans_i",
-    # (bowtie_components is absent: its BFS supersteps localCheckpoint
-    # inside bowtie)
-    "degree_assortativity",
-    "indegree_gini",
     "session_peaks",
     "semivariogram",
     "ripley_k",
-    "rich_club",
     "trade_volumes",
     "adaptive_grid",
-    # (kcore_hosts, canonical_chains and clustering_coeff are absent: the
-    # peel rounds, the pointer-doubling rounds, and triangle_counts'
-    # oriented edge list all localCheckpoint inside their builders)
     "geary_c",
     "editdist_pairs",
     "session_overlaps",
@@ -131,12 +114,10 @@ HEADLINE = [
     "traffic_autocorr",
     "seasonal_anomalies",
     "bag_jaccard",
-    "rendezvous_shards",
     "trend_mk",
     "dbscan_grid",
-    # (trustrank_hosts and crawl_schedule are absent: the trust
-    # supersteps localCheckpoint inside trustrank_int.  hand times its
-    # OWN marginal plan over the shared memoized flow pass)
+    # (hand times its OWN marginal plan over the shared memoized flow
+    # pass)
     "hand",
     "geomorphons",
     "zonal_overlay",
@@ -144,22 +125,19 @@ HEADLINE = [
     "emerging_hotspots",
     "geo_language_map",
     "good_turing",
-    # (link_prediction and cost_distance are absent: the symmetrized
-    # edge list localCheckpoints inside adamic_adar; the relaxation
-    # rounds checkpoint per step.  neardup_eval is absent: its shingle-id
-    # input localCheckpoints inside the builder.  basin_drainage times
-    # its OWN marginal plan over the shared memoized flow pass)
+    # (cost_distance is absent: the relaxation rounds checkpoint per
+    # step.  neardup_eval is absent: its shingle-id input
+    # localCheckpoints inside the builder.  basin_drainage times its OWN
+    # marginal plan over the shared memoized flow pass)
     "vrm",
     "langid_kappa",
     "basin_drainage",
     "tile_skew",
-    "lang_homophily",
     "openness",
     "semivariogram_aniso",
     # (dedup_cluster_sizes is absent: its shingle-id input
     # localCheckpoints inside the builder)
     "funnel_latency",
-    "hill_tail",
     "langid_margin",
     "resample_error",
     # (order_census times its OWN marginal plan over the shared memoized

@@ -80,12 +80,23 @@ def _morton(ix: Column, iy: Column, res: int) -> Column:
     return reduce(lambda a, b: a + b, parts)
 
 
+def _null_guard(lon: Column, lat: Column) -> Column:
+    """0, or NULL when either coordinate is NULL: added to a cell id so a
+    NULL coordinate gives a NULL id (the clamps' LEAST/GREATEST skip
+    NULL, so the id alone would be a real cell).  Added rather than
+    wrapping the id in a CASE: inside a conditional branch the id's
+    repeated subexpressions are not eliminated (s2_cell ran 15x
+    slower)."""
+    return F.when(lon.isNotNull() & lat.isNotNull(), F.lit(0))
+
+
 def quad_cell(lon: Column, lat: Column, res: int) -> Column:
     """Self-describing hierarchical cell id at ``res``: marker bit at
-    2*res, Morton-interleaved (ix, iy) below it."""
+    2*res, Morton-interleaved (ix, iy) below it; NULL when either
+    coordinate is NULL."""
     return F.lit(1 << (2 * res)).cast("long") + _morton(
         *_quad_ixy(lon, lat, res), res
-    )
+    ) + _null_guard(lon, lat)
 
 
 def quad_parent(cell: Column) -> Column:
@@ -118,9 +129,10 @@ def morton_sql(ix: str, iy: str, res: int) -> str:
 
 def quad_cell_sql(lon: str, lat: str, res: int) -> str:
     """DuckDB twin of quad_cell (same integer arithmetic, DuckDB bit
-    operators)."""
+    operators, same trailing _null_guard term)."""
     m = morton_sql(quad_ix_sql(lon, res), quad_iy_sql(lat, res), res)
-    return f"(CAST({1 << (2 * res)} AS BIGINT) + {m})"
+    return (f"(CAST({1 << (2 * res)} AS BIGINT) + {m} + CASE WHEN "
+            f"({lon}) IS NOT NULL AND ({lat}) IS NOT NULL THEN 0 END)")
 
 
 def quad_k_ring(cell: Column, res: int) -> Column:
@@ -274,7 +286,7 @@ def s2_cell_udf(lon: pd.Series, lat: pd.Series) -> pd.Series:
 
 def s2_cell(lon: Column, lat: Column, level: int = S2_LEVEL) -> Column:
     """Pure-Column S2-style cell id (identical arithmetic to s2_cell_np,
-    kept in whole-stage codegen)."""
+    kept in whole-stage codegen); NULL when either coordinate is NULL."""
     phi = F.radians(lat)
     lam = F.radians(lon)
     x = F.cos(phi) * F.cos(lam)
@@ -307,7 +319,8 @@ def s2_cell(lon: Column, lat: Column, level: int = S2_LEVEL) -> Column:
     j = F.greatest(
         F.least(F.floor(st(v) * n).cast("long"), F.lit(n - 1)), F.lit(0)
     )
-    return face * F.lit(1 << (2 * level)).cast("long") + _morton(i, j, level)
+    return (face * F.lit(1 << (2 * level)).cast("long") + _morton(i, j, level)
+            + _null_guard(lon, lat))
 
 
 def s2_cell_sql_query(
@@ -317,18 +330,21 @@ def s2_cell_sql_query(
     """DuckDB twin of s2_cell as a nested subquery over ``inner_sql``
     (which must expose ``id_cols`` plus ``lon``/``lat``): each derivation
     step is materialized as a column so no subexpression is textually
-    duplicated.  Emits ``id_cols..., s2_cell``."""
+    duplicated.  Emits ``id_cols..., s2_cell``, NULL when either
+    coordinate is NULL (flag ``ok``, carried to the last step)."""
     n = 1 << level
     xyz = (f"SELECT {id_cols}, COS(RADIANS({lat})) * COS(RADIANS({lon})) "
            f"AS x, COS(RADIANS({lat})) * SIN(RADIANS({lon})) AS y, "
-           f"SIN(RADIANS({lat})) AS z FROM ({inner_sql}) q0")
-    face = (f"SELECT {id_cols}, x, y, z, "
+           f"SIN(RADIANS({lat})) AS z, "
+           f"({lon}) IS NOT NULL AND ({lat}) IS NOT NULL AS ok "
+           f"FROM ({inner_sql}) q0")
+    face = (f"SELECT {id_cols}, ok, x, y, z, "
             "CASE WHEN ABS(x) >= ABS(y) AND ABS(x) >= ABS(z) THEN "
             "(CASE WHEN x >= 0 THEN 0 ELSE 3 END) "
             "WHEN ABS(y) >= ABS(z) THEN (CASE WHEN y >= 0 THEN 1 ELSE 4 "
             "END) ELSE (CASE WHEN z >= 0 THEN 2 ELSE 5 END) END AS face "
             f"FROM ({xyz}) q1")
-    uv = (f"SELECT {id_cols}, face, "
+    uv = (f"SELECT {id_cols}, ok, face, "
           "(CASE WHEN face % 3 = 0 THEN y WHEN face % 3 = 1 THEN z ELSE x "
           "END) / (CASE WHEN face % 3 = 0 THEN x WHEN face % 3 = 1 THEN y "
           "ELSE z END) AS u, "
@@ -336,13 +352,13 @@ def s2_cell_sql_query(
           "END) / (CASE WHEN face % 3 = 0 THEN x WHEN face % 3 = 1 THEN y "
           "ELSE z END) AS v "
           f"FROM ({face}) q2")
-    st = (f"SELECT {id_cols}, face, "
+    st = (f"SELECT {id_cols}, ok, face, "
           "CASE WHEN u >= 0 THEN 0.5 * SQRT(1.0 + 3.0 * u) "
           "ELSE 1.0 - 0.5 * SQRT(1.0 - 3.0 * u) END AS su, "
           "CASE WHEN v >= 0 THEN 0.5 * SQRT(1.0 + 3.0 * v) "
           "ELSE 1.0 - 0.5 * SQRT(1.0 - 3.0 * v) END AS sv "
           f"FROM ({uv}) q3")
-    ij = (f"SELECT {id_cols}, face, "
+    ij = (f"SELECT {id_cols}, ok, face, "
           f"GREATEST(LEAST(CAST(FLOOR(su * {n}) AS BIGINT), {n - 1}), 0) "
           "AS i, "
           f"GREATEST(LEAST(CAST(FLOOR(sv * {n}) AS BIGINT), {n - 1}), 0) "
@@ -351,9 +367,9 @@ def s2_cell_sql_query(
     for b in range(level):
         parts.append(f"(((i >> {b}) & 1) << {2 * b + 1})")
         parts.append(f"(((j >> {b}) & 1) << {2 * b})")
-    return (f"SELECT {id_cols}, CAST(face AS BIGINT) * "
+    return (f"SELECT {id_cols}, CASE WHEN ok THEN CAST(face AS BIGINT) * "
             f"CAST({1 << (2 * level)} AS BIGINT) + "
-            + " + ".join(parts) + f" AS s2_cell FROM ({ij}) q5")
+            + " + ".join(parts) + f" END AS s2_cell FROM ({ij}) q5")
 
 
 # ---------------------------------------------------------------------------
@@ -399,9 +415,9 @@ def hilbert_cell_col(ix: Column, iy: Column, level: int) -> Column:
 
 
 def hilbert_ctes(src: str, level: int, carry: str = "ix, iy") -> list:
-    """DuckDB twin of hilbert_cell_col as an unrolled CTE chain (the
-    _kcore_ctes discipline: one CTE per walk step, so the SQL engine
-    carries (hx, hy, hd) state instead of a geometric expression tree).
+    """DuckDB twin of hilbert_cell_col as an unrolled CTE chain (one
+    CTE per walk step, so the SQL engine carries (hx, hy, hd) state
+    instead of a geometric expression tree).
     ``src`` must expose BIGINT ``ix``/``iy`` plus the ``carry`` columns;
     the final CTE ``hb0`` carries ``hd``."""
     ctes = [f"hb{level} AS (SELECT {carry}, ix AS hx, iy AS hy, "

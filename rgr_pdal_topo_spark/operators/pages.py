@@ -97,59 +97,9 @@ def geo_pages_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# hyperlinked page variant (web link graph).  Each page carries two
-# deterministic outbound anchors; destination hosts are taken mod 500 so
-# every link target is a crawled host at EVERY test scale (doc_ids are
-# contiguous from 0 and the corpus never has fewer than 500 documents),
-# keeping the host graph free of dangling nodes without any induced-
-# subgraph filtering.  Integer -> string keeps the page bytes
-# engine-identical; the href patterns below avoid backslashes entirely
-# ([0-9], [.]) so ONE regex text runs unchanged in Spark and DuckDB.
-# ---------------------------------------------------------------------------
-# dst1 is QUADRATIC in doc_id so link targets concentrate on quadratic
-# residues — a genuinely skewed in-degree distribution (hub hosts), not
-# a regular graph; a linear map with a multiplier coprime to 500 would
-# give every host in-degree exactly 1 per anchor and make PageRank
-# uniform (vacuous).  dst2 stays linear-bijective so every host keeps
-# at least one inbound link class.
-DST1_SQL = "CAST((doc_id * doc_id + 7) % 500 AS BIGINT)"
-DST2_SQL = "CAST((doc_id * 17 + 3) % 500 AS BIGINT)"
-# anchor TEXT varies per linking page so anchor-text aggregation (the
-# "anchors" field of a web index) is non-vacuous: anchor 1 draws from the
-# quadratic-residue-skewed 7-token vocab (doc_id^2 % 7 hits only {0,1,2,4}
-# — some tokens are structurally 2x more common), anchor 2 cycles a 5-token
-# vocab uniformly.  Integer -> string keeps page bytes engine-identical.
-ANCHOR1_SQL = "'w' || CAST((doc_id * doc_id + 1) % 7 AS STRING)"
-ANCHOR2_SQL = "'w' || CAST((doc_id * 3 + 1) % 5 AS STRING)"
-LINKED_HTML_SQL = (
-    "'<html><head><title>doc-' || CAST(doc_id AS STRING) || "
-    "'</title></head><body><p>' || "
-    f"{_ESCAPED_TEXT_SQL} || '</p>"
-    '<a href="https://site\' || '
-    f"CAST({DST1_SQL} AS STRING) || '.example/\">' || {ANCHOR1_SQL} || "
-    "'</a>"
-    '<a href="https://site\' || '
-    f"CAST({DST2_SQL} AS STRING) || '.example/\">' || {ANCHOR2_SQL} || "
-    "'</a></body></html>'"
-)
-#: host captures — no backslash escapes, portable across regex dialects
+#: host capture of a page url — no backslash escapes, portable across
+#: regex dialects
 HOST_RE = "site([0-9]+)[.]example"
-LINK_RE = 'href="https://site([0-9]+)[.]example'
-#: full-anchor capture: group 1 = destination host, group 2 = anchor text
-ANCHOR_RE = 'href="https://site([0-9]+)[.]example/">(w[0-9]+)</a>'
-
-
-def linked_pages_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents -> hyperlinked pages (url, html binary, doc_id): the
-    body carries two deterministic outbound anchors; input to the link
-    graph / PageRank pipeline (operators/linkgraph.py)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return docs.selectExpr(
-        f"{URL_SQL} AS url",
-        f"encode({LINKED_HTML_SQL}, 'UTF-8') AS html",
-        "doc_id",
-    )
 
 
 # ---------------------------------------------------------------------------

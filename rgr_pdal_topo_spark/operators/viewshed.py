@@ -10,8 +10,7 @@ distance ``d`` from the observer, the sight line is sampled at the
 its nearest grid cell, and the target is visible iff no sample's
 elevation angle reaches the target's.  Two exactness tricks make the
 whole operator BIGINT arithmetic end to end (no trig, no division, no
-rounding policy — the same doctrine as the integer PageRank in
-operators/linkgraph.py):
+rounding policy):
 
 * the nearest cell of the fractional position ``o + delta * k / d`` is
   ``(2 * (o * d + delta * k) + d) DIV (2 * d)`` — integer half-up

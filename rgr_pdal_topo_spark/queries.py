@@ -2277,7 +2277,7 @@ def q_hotspot_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity.  The synthetic point field is uniform at sf0.01+ (zero
     organic hotspots once dense), so a 1%-of-points cluster is PLANTED
     at cell (50, 50) in both engines — the concentration structure the
-    detector exists to find (the cocitation/webring discipline);
+    detector exists to find;
     sparse sf0.001 adds ~150 organic hotspot cells around it.
 
     Scale shape: the count grid aggregates the point cloud first
@@ -3321,8 +3321,8 @@ def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.line_dedup(docs)
 
 
-# Planted single-typo mirrors for editdist_pairs (the pii_scrub /
-# cocitation discipline: the word-salad corpus has no char-level
+# Planted single-typo mirrors for editdist_pairs (the pii_scrub
+# discipline: the word-salad corpus has no char-level
 # near-dups, and edit-distance detection exists to find exactly the
 # one-character mirror a shingle smears out — so both engines plant
 # one per doc_id = 0 mod 20, substituting char 11 with 'x', a letter
@@ -5482,8 +5482,7 @@ def q_hilbert_locality(spark: SparkSession, sf_dir: str) -> DataFrame:
     over MSB-first bit-pairs, because the naive rotate-unroll grows a
     GEOMETRIC expression tree (functions/cells.py:hilbert_cell_col) —
     and the oracle's unrolled CTE chain which carries (hx, hy, hd)
-    state per step (functions/cells.py:hilbert_ctes, the _kcore_ctes
-    discipline).  All-integer end to end; the two means are one
+    state per step (functions/cells.py:hilbert_ctes).  All-integer end to end; the two means are one
     correctly-rounded division each, ROUND(,6)-guarded.
 
     Scale shape: cells aggregate once (map-side combinable distinct on
@@ -6082,7 +6081,7 @@ from rgr_pdal_topo_spark.operators import viewshed as vsops  # noqa: E402
 # verbatim — Q20-integer DEM, integer half-up nearest-cell snap
 # ((2a + d) // (2d); numerator >= 0 on the grid so floor == truncate),
 # cross-multiplied angle comparison — so parity is bit-exact with no
-# rounding policy anywhere (the pagerank_hosts doctrine).
+# rounding policy anywhere.
 _VS_CTES = [
     f"g AS ({GRID_MEAN_CTE})",
     "demq AS (SELECT cell_row, cell_col, "
@@ -6158,13 +6157,6 @@ _ENT_H_SQL = (
     "ROUND(CAST(ln_n_q * n_tokens - s_clnc AS DOUBLE) / "
     "(8192.0 * CAST(n_tokens AS DOUBLE)), 6)"
 )
-
-
-# Pinned ln of one factor: ln runs ONLY on an integer-valued double
-# (bit-identical across engines) and is q13-pinned, so a
-# sum of count-weighted terms is an exact BIGINT and the statistic built
-# on it is one guarded division.
-_KL_LQ = "CAST(FLOOR(ln(CAST({x} AS DOUBLE)) * 8192 + 0.5) AS BIGINT)"
 
 
 @query(
@@ -6788,1228 +6780,6 @@ def q_pages_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.regexp_extract("url", "https://([^/]+)/", 1)
         ).alias("n_sites"),
         F.min("url").alias("first_url"),
-    )
-
-
-from rgr_pdal_topo_spark.operators import linkgraph  # noqa: E402
-
-# Link-graph oracle fragments: the iteration CTE chain replays the
-# integer PageRank update exactly (subtract-modulus-then-divide, all
-# BIGINT), so the chain of 4 supersteps is bit-equal by construction —
-# no rounding policy anywhere in the query.
-_LINKED_PAGES_DUCK = (
-    f"SELECT {pagesops.URL_SQL} AS url, "
-    f"{pagesops.LINKED_HTML_SQL} AS page FROM documents"
-)
-_PR_BASE = linkgraph.exact_div_sql(
-    str((linkgraph.PR_D_DEN - linkgraph.PR_D_NUM) * linkgraph.PR_SCALE),
-    f"{linkgraph.PR_D_DEN} * nn.n",
-)
-
-
-_LK_CTE = (
-    "lk AS (SELECT DISTINCT "
-    f"CAST(regexp_extract(url, '{pagesops.HOST_RE}', 1) AS BIGINT) "
-    "AS src, CAST(u.d AS BIGINT) AS dst FROM (SELECT url, "
-    f"regexp_extract_all(page, '{pagesops.LINK_RE}', 1) AS ds "
-    "FROM lp) t, LATERAL (SELECT unnest(t.ds) AS d) u)"
-)
-
-
-def _pagerank_ctes(iters: int) -> list[str]:
-    ctes = [
-        f"lp AS ({_LINKED_PAGES_DUCK})",
-        _LK_CTE,
-        "nodes AS (SELECT DISTINCT src AS host FROM lk)",
-        "nn AS (SELECT COUNT(*) AS n FROM nodes)",
-        "o AS (SELECT src, COUNT(*) AS odeg FROM lk GROUP BY src)",
-        "e AS (SELECT lk.src, lk.dst, o.odeg FROM lk "
-        "JOIN o ON lk.src = o.src)",
-        "r0 AS (SELECT nodes.host, "
-        + linkgraph.exact_div_sql(str(linkgraph.PR_SCALE), "nn.n")
-        + " AS q FROM nodes CROSS JOIN nn)",
-    ]
-    for i in range(1, iters + 1):
-        step = linkgraph.exact_div_sql(
-            f"{linkgraph.PR_D_NUM} * r{i - 1}.q",
-            f"{linkgraph.PR_D_DEN} * e.odeg",
-        )
-        ctes.append(
-            f"c{i} AS (SELECT e.dst AS host, CAST(SUM({step}) AS BIGINT) "
-            f"AS m FROM e JOIN r{i - 1} ON r{i - 1}.host = e.src "
-            "GROUP BY e.dst)"
-        )
-        ctes.append(
-            f"r{i} AS (SELECT nodes.host, {_PR_BASE} + "
-            f"COALESCE(c{i}.m, 0) AS q FROM nodes CROSS JOIN nn "
-            f"LEFT JOIN c{i} ON c{i}.host = nodes.host)"
-        )
-    return ctes
-
-
-@query(
-    "pagerank_hosts",
-    _with(*_pagerank_ctes(linkgraph.PR_ITERS))
-    + f"SELECT host, q AS rank_q FROM r{linkgraph.PR_ITERS}",
-)
-def q_pagerank_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Web link graph + integer-exact PageRank
-    (operators/linkgraph.py): hrefs extracted from each page build the
-    DISTINCT host-level edge list, and link equity power-iterates for 4
-    damped supersteps with ALL-INTEGER arithmetic on the 2^-30 grid —
-    the whole-crawl host-ranking job (crawl scheduling / quality
-    priors), and the webtext twin of the flow-routing accumulation
-    sweeps (reference flowRoutingGrids.py drainage area: mass moving
-    down a graph in rounds).  The oracle unrolls the identical update
-    as a CTE chain, so parity is bit-exact with no rounding policy.
-
-    Scale shape: one page scan -> regexp_extract_all -> explode ->
-    distinct collapses the crawl to the host graph BEFORE any
-    iteration; each superstep then shuffles only (int64, int64, int64)
-    rows into a join + partial/final sum (the Pregel shape), with the
-    edge list localCheckpoint-pinned like the dedup
-    connected-components loop."""
-    pages = pagesops.linked_pages_df(spark, sf_dir)
-    return linkgraph.pagerank_int(linkgraph.extract_links(pages))
-
-
-def _hits_ctes(iters: int) -> list[str]:
-    """Unrolled HITS supersteps, bit-equal to linkgraph.hits_int by
-    construction: every half-step is one join + CAST(SUM AS BIGINT)
-    (DuckDB SUM(BIGINT) is HUGEINT — the recurring gotcha), a scalar
-    MAX, and the exact integer L-inf normalize."""
-    sc = linkgraph.HITS_SCALE
-    ctes = [
-        f"lp AS ({_LINKED_PAGES_DUCK})",
-        _LK_CTE,
-        "hnodes AS (SELECT src AS host FROM lk "
-        "UNION SELECT dst FROM lk)",
-        f"h0 AS (SELECT host, CAST({sc} AS BIGINT) AS hq FROM hnodes)",
-    ]
-    norm = linkgraph.exact_div_sql(f"raw * {sc}", "mx")
-    for i in range(1, iters + 1):
-        ctes += [
-            f"ar{i} AS (SELECT n.host, COALESCE(s.raw, 0) AS raw "
-            "FROM hnodes n LEFT JOIN (SELECT lk.dst AS host, "
-            f"CAST(SUM(p.hq) AS BIGINT) AS raw FROM lk JOIN h{i - 1} p "
-            "ON p.host = lk.src GROUP BY lk.dst) s ON s.host = n.host)",
-            f"am{i} AS (SELECT MAX(raw) AS mx FROM ar{i})",
-            f"a{i} AS (SELECT host, {norm} AS aq "
-            f"FROM ar{i} CROSS JOIN am{i})",
-            f"hr{i} AS (SELECT n.host, COALESCE(s.raw, 0) AS raw "
-            "FROM hnodes n LEFT JOIN (SELECT lk.src AS host, "
-            f"CAST(SUM(p.aq) AS BIGINT) AS raw FROM lk JOIN a{i} p "
-            "ON p.host = lk.dst GROUP BY lk.src) s ON s.host = n.host)",
-            f"hm{i} AS (SELECT MAX(raw) AS mx FROM hr{i})",
-            f"h{i} AS (SELECT host, {norm} AS hq "
-            f"FROM hr{i} CROSS JOIN hm{i})",
-        ]
-    return ctes
-
-
-@query(
-    "hits_hosts",
-    _with(*_hits_ctes(linkgraph.HITS_ITERS))
-    + f"SELECT a{linkgraph.HITS_ITERS}.host, "
-    f"a{linkgraph.HITS_ITERS}.aq AS auth_q, "
-    f"h{linkgraph.HITS_ITERS}.hq AS hub_q "
-    f"FROM a{linkgraph.HITS_ITERS} JOIN h{linkgraph.HITS_ITERS} "
-    f"ON h{linkgraph.HITS_ITERS}.host = a{linkgraph.HITS_ITERS}.host",
-)
-def q_hits_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kleinberg HITS hubs & authorities over the host link graph —
-    the second iterative graph algorithm next to pagerank_hosts (link
-    equity measures popularity; HITS separates "links to good pages"
-    from "is linked by good hubs", the classic crawl-frontier /
-    seed-selection signal).  All-integer on the 2^-20 grid with exact
-    L-inf normalization, so the unrolled-CTE oracle is bit-equal with
-    no rounding policy (operators/linkgraph.py:hits_int).
-
-    Scale shape: node set = src UNION dst hosts, then per half-step
-    one narrow (int64, int64) equi-join + map-side-combinable sum over
-    the host graph and a one-row max broadcast back — the Pregel shape
-    on the aggregated graph, never the raw crawl."""
-    pages = pagesops.linked_pages_df(spark, sf_dir)
-    return linkgraph.hits_int(linkgraph.extract_links(pages))
-
-
-@query(
-    "host_distance",
-    "WITH RECURSIVE "
-    + ", ".join(
-        [
-            f"lp AS ({_LINKED_PAGES_DUCK})",
-            _LK_CTE,
-            "seeds AS (SELECT DISTINCT src AS host FROM lk "
-            f"WHERE src % {linkgraph.BFS_SEED_MOD} = 0)",
-            "bfs AS (SELECT host, CAST(0 AS BIGINT) AS dist FROM seeds "
-            "UNION SELECT lk.dst, bfs.dist + 1 FROM bfs "
-            f"JOIN lk ON lk.src = bfs.host WHERE bfs.dist < "
-            f"{linkgraph.BFS_ITERS})",
-        ]
-    )
-    + " SELECT host, MIN(dist) AS dist FROM bfs GROUP BY host",
-)
-def q_host_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BFS hop distance from the seed hosts over the link graph
-    (operators/linkgraph.py:bfs_hops) — crawl-frontier depth, the third
-    iterative graph job beside PageRank and HITS and the webtext twin
-    of the reference's along-network distance walks (networkNode.L
-    accumulates metric length down flow edges; here length is hops down
-    hyperlink edges).  Each superstep relaxes every edge and folds with
-    MIN, so after 4 rounds the table is min(dist over paths <= 4) —
-    cycle-safe, all-integer, bit-exact against the recursive-CTE oracle
-    (UNION-deduped (host, dist) frontier, then MIN per host).
-
-    Scale shape: iterates the aggregated host graph, one narrow
-    (int64, int64) join + map-side MIN per round — the Pregel shape
-    with a static round bound (a production delta iteration would ship
-    only improved rows)."""
-    pages = pagesops.linked_pages_df(spark, sf_dir)
-    return linkgraph.bfs_hops(linkgraph.extract_links(pages))
-
-
-# Planted syndication overlay for cocitation_hosts (the
-# split_leakage discipline: the organic payload lacks the case, so the
-# query plants it in BOTH engines).  Every src host carries exactly 2
-# organic out-links at the 500-doc scales, so no target pair is
-# organically co-cited by two sources there; the overlay adds tiered
-# boilerplate citations (the footer/social-widget pattern co-citation
-# exists to surface): docs = 0 mod 4 cite hosts 7 and 13, = 0 mod 8
-# add host 21, = 0 mod 16 add host 33 — giving pair counts at three
-# distinct magnitudes at every scale.
-_COCITE_TIERS: tuple[tuple[int, int], ...] = (
-    (4, 7), (4, 13), (8, 21), (16, 33)
-)
-_COCITE_PLANT_DUCK = " UNION ".join(
-    f"SELECT DISTINCT CAST(doc_id % 1000 AS BIGINT) AS src, "
-    f"CAST({h} AS BIGINT) AS dst FROM documents WHERE doc_id % {m} = 0"
-    for m, h in _COCITE_TIERS
-)
-
-
-@query(
-    "cocitation_hosts",
-    _with(
-        f"lp AS ({_LINKED_PAGES_DUCK})",
-        _LK_CTE,
-        f"pe AS ({_COCITE_PLANT_DUCK})",
-        "lk2 AS (SELECT src, dst FROM lk UNION "
-        "SELECT src, dst FROM pe)",
-        "o AS (SELECT src, COUNT(*) AS odeg FROM lk2 GROUP BY src)",
-        "e AS (SELECT lk2.src, lk2.dst FROM lk2 JOIN o ON o.src = lk2.src "
-        f"AND o.odeg <= {linkgraph.COCITE_MAX_ODEG})",
-    )
-    + "SELECT a.dst AS host_a, b.dst AS host_b, "
-    "CAST(COUNT(*) AS BIGINT) AS n_common "
-    "FROM e a JOIN e b ON a.src = b.src AND a.dst < b.dst "
-    "GROUP BY a.dst, b.dst HAVING COUNT(*) >= 2",
-)
-def q_cocitation_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Co-citation similarity over the host graph
-    (operators/linkgraph.py:cocitation): host pairs linked by >= 2
-    common sources — the classic related-domain signal (two
-    authorities are related when many hubs cite both; the
-    query-independent companion of HITS).  All-integer counts, so
-    parity is exact with no rounding policy.  The organic layer gives
-    every source exactly 2 out-links at the 500-doc scales (no pair
-    repeats across sources), so a deterministic syndication overlay is
-    planted in BOTH engines (_COCITE_TIERS — the footer-boilerplate
-    citations this signal exists to surface), yielding pair counts at
-    three magnitudes at every scale; at sf0.1 organic pairs join in
-    (sources s and s+500 share whole page-level link sets).
-
-    Scale shape: the pair join runs on the DISTINCT host graph with
-    sources above COCITE_MAX_ODEG dropped FIRST (the LSH MAX_BUCKET
-    discipline — a directory hub would contribute O(odeg^2) pairs, and
-    because the cut is per-source the surviving counts stay exact);
-    the dst_a < dst_b triangle keeps each pair once."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    pages = pagesops.linked_pages_df(spark, sf_dir)
-    docs = load_table(spark, sf_dir, "documents")
-    planted = None
-    for m, h in _COCITE_TIERS:
-        tier = docs.filter(F.col("doc_id") % m == 0).select(
-            (F.col("doc_id") % 1000).cast("long").alias("src"),
-            F.lit(h).cast("long").alias("dst"),
-        )
-        planted = tier if planted is None else planted.union(tier)
-    edges = (
-        linkgraph.extract_links(pages).union(planted.distinct()).distinct()
-    )
-    return linkgraph.cocitation(edges)
-
-
-# Planted webring overlay for host_triangles (the cocitation_hosts
-# discipline): the organic crawl's 2-out-link sources never close a
-# 3-cycle at the 500-doc scales, and triangle counting exists to find
-# exactly this structure (link rings / farms) — so the query plants it
-# in BOTH engines: every doc = 0 mod 50 cites hub hosts 41 and 43, and
-# host 41's own page cites 43, closing one triangle per ring member.
-_TRI_RING_DUCK = (
-    "SELECT DISTINCT CAST(doc_id % 1000 AS BIGINT) AS src, "
-    "CAST(41 AS BIGINT) AS dst FROM documents WHERE doc_id % 50 = 0 "
-    "UNION SELECT DISTINCT CAST(doc_id % 1000 AS BIGINT), "
-    "CAST(43 AS BIGINT) FROM documents WHERE doc_id % 50 = 0 "
-    "UNION SELECT DISTINCT CAST(doc_id % 1000 AS BIGINT), "
-    "CAST(43 AS BIGINT) FROM documents WHERE doc_id % 1000 = 41"
-)
-
-
-# The undirected-orientation triangle census, shared verbatim by
-# host_triangles and clustering_coeff (single-spelling discipline —
-# solo and derived oracles can't drift).  Expects lk + pt CTEs.
-_TRI_UND_CTES = (
-    "lk2 AS (SELECT src, dst FROM lk UNION SELECT src, dst FROM pt)",
-    "und AS (SELECT src, dst FROM lk2 WHERE src <> dst "
-    "UNION SELECT dst, src FROM lk2 WHERE src <> dst)",
-    "lo AS (SELECT src, dst FROM und WHERE src < dst)",
-    "tri AS (SELECT w1.src AS a, w1.dst AS b, w2.dst AS c "
-    "FROM lo w1 JOIN lo w2 ON w2.src = w1.src AND w1.dst < w2.dst "
-    "JOIN lo e ON e.src = w1.dst AND e.dst = w2.dst)",
-    "corners AS (SELECT a AS host FROM tri UNION ALL "
-    "SELECT b FROM tri UNION ALL SELECT c FROM tri)",
-)
-
-
-def _webring_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The distinct host graph with the _TRI_RING_DUCK webring overlay
-    planted (shared by host_triangles and clustering_coeff)."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    pages = pagesops.linked_pages_df(spark, sf_dir)
-    docs = load_table(spark, sf_dir, "documents")
-    ring = docs.filter(F.col("doc_id") % 50 == 0).select(
-        (F.col("doc_id") % 1000).cast("long").alias("src")
-    )
-    planted = (
-        ring.select("src", F.lit(41).cast("long").alias("dst"))
-        .union(ring.select("src", F.lit(43).cast("long").alias("dst")))
-        .union(
-            docs.filter(F.col("doc_id") % 1000 == 41).select(
-                (F.col("doc_id") % 1000).cast("long").alias("src"),
-                F.lit(43).cast("long").alias("dst"),
-            )
-        )
-        .distinct()
-    )
-    return linkgraph.extract_links(pages).union(planted).distinct()
-
-
-@query(
-    "host_triangles",
-    _with(
-        f"lp AS ({_LINKED_PAGES_DUCK})",
-        _LK_CTE,
-        f"pt AS ({_TRI_RING_DUCK})",
-        *_TRI_UND_CTES,
-    )
-    + "SELECT host, CAST(COUNT(*) AS BIGINT) AS n_triangles "
-    "FROM corners GROUP BY host",
-)
-def q_host_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-host triangle counts over the undirected host graph
-    (operators/linkgraph.py:triangle_counts) — the local-clustering
-    census behind link-farm detection (farms are near-cliques) and the
-    canonical distributed-graph benchmark.  Low->high edge orientation
-    materializes every triangle exactly once (a < b < c: per-source
-    wedges joined against the oriented closing edge), so counts are
-    exact integers with no dedup step and no rounding policy.  The
-    organic 2-out-link sources close no 3-cycles at the 500-doc
-    scales, so a webring overlay is planted in BOTH engines
-    (_TRI_RING_DUCK — the ring structure this census exists to
-    surface): ring members carry 1 triangle each, the two hub hosts
-    carry one per member.
-
-    Scale shape: wedge fan-out is bounded by ORIENTED out-degree (the
-    degeneracy trick that caps hub blowup — a hub's edges orient
-    mostly inward), the closing probe is one (b, c) equi-join, and the
-    corner credit folds map-side."""
-    return linkgraph.triangle_counts(_webring_edges(spark, sf_dir))
-
-
-@query(
-    "clustering_coeff",
-    _with(
-        f"lp AS ({_LINKED_PAGES_DUCK})",
-        _LK_CTE,
-        f"pt AS ({_TRI_RING_DUCK})",
-        *_TRI_UND_CTES,
-        "tc AS (SELECT host, CAST(COUNT(*) AS BIGINT) AS n_tri "
-        "FROM corners GROUP BY host)",
-        "dg AS (SELECT src AS host, CAST(COUNT(*) AS BIGINT) AS deg "
-        "FROM und GROUP BY src)",
-        "j AS (SELECT dg.host AS host, deg, "
-        "CAST(COALESCE(n_tri, 0) AS BIGINT) AS n_tri "
-        "FROM dg LEFT JOIN tc ON tc.host = dg.host WHERE deg >= 2)",
-    )
-    + f"SELECT host, deg, n_tri, {linkgraph.LCC_SQL} AS lcc FROM j",
-)
-def q_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Local clustering coefficient per host
-    (operators/linkgraph.py:clustering_coefficient) — host_triangles
-    normalized by the wedge count deg*(deg-1)/2, the cohesion score
-    that separates link-farm cores (near 1.0: neighbours interlink)
-    from organic directory hubs (near 0: neighbours are strangers).
-    Shares the triangle census CTEs verbatim with host_triangles
-    (_TRI_UND_CTES) and the same planted webring overlay, so the two
-    oracles cannot drift.  Hosts with deg < 2 close no wedge and are
-    dropped; wedges-but-no-triangle hosts report exactly 0.0.
-
-    Exactness: deg (distinct undirected neighbours) and n_tri
-    (exactly-once oriented triangles) are exact integers; lcc is ONE
-    division of two integer-valued doubles (linkgraph.LCC_SQL) —
-    correctly rounded hence bit-identical, ROUND(,6)-guarded.
-
-    Scale shape: the undirected edge list materializes once and feeds
-    both the degree agg and the oriented wedge join; the closing fold
-    is host-sized."""
-    return linkgraph.clustering_coefficient(_webring_edges(spark, sf_dir))
-
-
-# k-core plant: a four-hub webring (members <-> hubs 41/43/47/53, hubs
-# pairwise linked) is ITSELF a 4-core — member degree 4, hub degree
-# #members + 3 — so a nonempty, structurally interesting core survives
-# the peel at every scale regardless of how much organic periphery
-# peels away.  Same derive-from-documents discipline as _TRI_RING_DUCK.
-_KCORE_RING_DUCK = (
-    "SELECT DISTINCT CAST(doc_id % 1000 AS BIGINT) AS src, "
-    "CAST(h.dst AS BIGINT) AS dst FROM documents CROSS JOIN "
-    "(VALUES (41), (43), (47), (53)) h(dst) WHERE doc_id % 50 = 0 "
-    "UNION SELECT DISTINCT CAST(doc_id % 1000 AS BIGINT), "
-    "CAST(p.dst AS BIGINT) FROM documents CROSS JOIN "
-    "(VALUES (43), (47), (53)) p(dst) WHERE doc_id % 1000 = 41 "
-    "UNION SELECT DISTINCT CAST(doc_id % 1000 AS BIGINT), "
-    "CAST(q.dst AS BIGINT) FROM documents CROSS JOIN "
-    "(VALUES (47), (53)) q(dst) WHERE doc_id % 1000 = 43 "
-    "UNION SELECT DISTINCT CAST(doc_id % 1000 AS BIGINT), "
-    "CAST(53 AS BIGINT) FROM documents WHERE doc_id % 1000 = 47"
-)
-
-
-def _kcore_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The distinct host graph with the _KCORE_RING_DUCK four-hub
-    webring overlay planted (the guaranteed-surviving 4-core)."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    pages = pagesops.linked_pages_df(spark, sf_dir)
-    docs = load_table(spark, sf_dir, "documents")
-    ring = docs.filter(F.col("doc_id") % 50 == 0).select(
-        (F.col("doc_id") % 1000).cast("long").alias("src")
-    )
-    planted = ring.select(
-        "src", F.lit(41).cast("long").alias("dst")
-    )
-    for h in (43, 47, 53):
-        planted = planted.union(
-            ring.select("src", F.lit(h).cast("long").alias("dst"))
-        )
-    for a, b in (
-        (41, 43), (41, 47), (41, 53), (43, 47), (43, 53), (47, 53)
-    ):
-        planted = planted.union(
-            docs.filter(F.col("doc_id") % 1000 == a).select(
-                (F.col("doc_id") % 1000).cast("long").alias("src"),
-                F.lit(b).cast("long").alias("dst"),
-            )
-        )
-    return linkgraph.extract_links(pages).union(
-        planted.distinct()
-    ).distinct()
-
-
-def _kcore_ctes(k: int, rounds: int) -> list[str]:
-    """Unrolled k-core peel: round i recomputes induced degrees over the
-    round-(i-1) survivor set (the same two-sided membership join the
-    engine runs), then cuts at k.  Expects the lk + pt CTEs."""
-    ctes = [
-        "lk2 AS (SELECT src, dst FROM lk UNION SELECT src, dst FROM pt)",
-        "und AS (SELECT src, dst FROM lk2 WHERE src <> dst "
-        "UNION SELECT dst, src FROM lk2 WHERE src <> dst)",
-        "a0 AS (SELECT DISTINCT src AS host FROM und)",
-    ]
-    for i in range(1, rounds + 1):
-        ctes += [
-            f"d{i} AS (SELECT u.src AS host, COUNT(*) AS deg FROM und u "
-            f"JOIN a{i - 1} x ON x.host = u.src "
-            f"JOIN a{i - 1} y ON y.host = u.dst GROUP BY u.src)",
-            f"a{i} AS (SELECT host FROM d{i} WHERE deg >= {k})",
-        ]
-    ctes.append(
-        f"fin AS (SELECT u.src AS host, COUNT(*) AS deg FROM und u "
-        f"JOIN a{rounds} x ON x.host = u.src "
-        f"JOIN a{rounds} y ON y.host = u.dst GROUP BY u.src)"
-    )
-    return ctes
-
-
-@query(
-    "kcore_hosts",
-    _with(
-        f"lp AS ({_LINKED_PAGES_DUCK})",
-        _LK_CTE,
-        f"pt AS ({_KCORE_RING_DUCK})",
-        *_kcore_ctes(linkgraph.KCORE_K, linkgraph.KCORE_ROUNDS),
-    )
-    + f"SELECT a.host, CAST(COALESCE(fin.deg, 0) AS BIGINT) AS core_deg "
-    f"FROM a{linkgraph.KCORE_ROUNDS} a "
-    "LEFT JOIN fin ON fin.host = a.host",
-)
-def q_kcore_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-core decomposition of the host graph
-    (operators/linkgraph.py:k_core): survivors of 5 synchronous peel
-    rounds at k = 4, with their degree inside the final induced
-    subgraph — the dense-seed extractor behind link-farm detection
-    (farms are near-cliques that survive any peel; organic tree-like
-    periphery unravels layer by layer) and the fourth iterative graph
-    idiom beside BFS, label propagation, and pointer doubling.
-    Peeling is the part a single-pass degree filter gets wrong: each
-    removal lowers neighbors' degrees, so degrees must be recomputed
-    over the survivors every round — exactly what the unrolled oracle
-    CTEs replay.  A four-hub webring overlay (itself a 4-core) is
-    planted in BOTH engines so a nonempty core exists at every scale,
-    and the organic periphery cascades for real (500 -> 118 -> 14
-    nodes over the first two rounds at the oracle scale).
-
-    Exactness: all-integer (distinct-neighbor degrees, set shrinkage);
-    the R-round truncation is a stated horizon both engines share.
-
-    Scale shape: the undirected host graph materializes once; each
-    round is two narrow membership equi-joins against the SHRINKING
-    alive set plus one map-side count — monotonically cheaper per
-    round, never touching the raw crawl."""
-    return linkgraph.k_core(_kcore_edges(spark, sf_dir))
-
-
-@query(
-    "canonical_chains",
-    "WITH RECURSIVE "
-    + ", ".join(
-        [
-            f"lp AS ({_LINKED_PAGES_DUCK})",
-            _LK_CTE,
-            "hosts AS (SELECT DISTINCT src AS h FROM lk "
-            "UNION SELECT DISTINCT dst FROM lk)",
-            "m AS (SELECT src, MIN(dst) AS p FROM lk WHERE dst < src "
-            "GROUP BY src)",
-            "ptr AS (SELECT h, COALESCE(m.p, h) AS p FROM hosts "
-            "LEFT JOIN m ON m.src = hosts.h)",
-            "walk AS (SELECT h, p AS cur, CAST(CASE WHEN p = h THEN 0 "
-            "ELSE 1 END AS BIGINT) AS hops FROM ptr "
-            "UNION ALL SELECT w.h, t.p, w.hops + 1 FROM walk w "
-            "JOIN ptr t ON t.h = w.cur WHERE t.p <> w.cur)",
-        ]
-    )
-    + " SELECT h AS host, MAX_BY(cur, hops) AS root, "
-    "MAX(hops) AS hops FROM walk GROUP BY h",
-)
-def q_canonical_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Canonical-chain resolution over the host graph
-    (operators/linkgraph.py:resolve_pointers) — every host designates
-    one canonical predecessor (its smallest smaller out-neighbour;
-    hosts with none are terminal authorities), and the chains resolve
-    to the terminal root with the exact path length.  This is the
-    redirect / rel=canonical consolidation stage of a crawl pipeline
-    as a FUNCTIONAL-graph primitive, and the missing iterative idiom
-    beside bfs_hops (frontier), pagerank (power iteration) and
-    dedup_clusters (label propagation): POINTER DOUBLING, where each
-    round squares the reach so a depth-D chain resolves in
-    ceil(log2 D) self-joins of the node-sized mapping (the synthetic
-    graph's chains reach depth 7 — resolved in 3 of the 5 contracted
-    rounds, horizon 2^5).
-
-    The oracle replays the chains as the textbook recursive CTE
-    (one step per round), so the parity row proves the doubling's
-    hop-count bookkeeping, not just the final roots.  All-integer.
-
-    Scale shape: O(log depth) narrow self-equi-joins on the HOST
-    table (never the raw crawl), each round localCheckpointed so the
-    shuffle DAG stays flat."""
-    pages = pagesops.linked_pages_df(spark, sf_dir)
-    lk = linkgraph.extract_links(pages).localCheckpoint(eager=True)
-    hosts = (
-        lk.select(F.col("src").alias("h"))
-        .union(lk.select(F.col("dst").alias("h")))
-        .distinct()
-    )
-    m = (
-        lk.filter(F.col("dst") < F.col("src"))
-        .groupBy("src")
-        .agg(F.min("dst").alias("p"))
-    )
-    ptr = hosts.join(m, hosts.h == m.src, "left").select(
-        "h", F.coalesce(F.col("p"), F.col("h")).alias("p")
-    )
-    out = linkgraph.resolve_pointers(ptr, iters=5)
-    return out.select(F.col("h").alias("host"), "root", "hops")
-
-
-@query(
-    "degree_histogram",
-    _with(
-        f"lp AS ({_LINKED_PAGES_DUCK})",
-        _LK_CTE,
-        "o AS (SELECT src AS host, COUNT(*) AS deg FROM lk "
-        "GROUP BY src)",
-        "i AS (SELECT dst AS host, COUNT(*) AS deg FROM lk "
-        "GROUP BY dst)",
-        "b AS (SELECT 'out' AS side, deg FROM o "
-        "UNION ALL SELECT 'in' AS side, deg FROM i)",
-    )
-    + "SELECT side, LENGTH(bin(deg)) AS bucket, "
-    "CAST(COUNT(*) AS BIGINT) AS n_hosts FROM b GROUP BY side, "
-    "LENGTH(bin(deg))",
-)
-def q_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Log2-bucketed in/out-degree histogram of the host graph
-    (operators/linkgraph.py:degree_histogram) — the power-law
-    fingerprint every crawl report publishes, and the measured skew
-    evidence that sizes joins and salting over the graph (the
-    quadratic dst map makes in-degree genuinely heavy-tailed where
-    out-degree is near-uniform).  bucket = bit-length of the degree
-    via LENGTH(BIN()) — the hll_distinct rho spelling, exact in both
-    engines.
-
-    Scale shape: two map-side-combinable degree aggs on the distinct
-    host graph, then a tiny bucket fold — nothing beyond host-sized
-    tables ever shuffles."""
-    pages = pagesops.linked_pages_df(spark, sf_dir)
-    return linkgraph.degree_histogram(linkgraph.extract_links(pages))
-
-
-@query(
-    "neighborhood_reach",
-    _with(
-        f"lp AS ({_LINKED_PAGES_DUCK})",
-        _LK_CTE,
-        "und AS (SELECT DISTINCT src, dst FROM (SELECT src, dst FROM lk "
-        "UNION ALL SELECT dst, src FROM lk) u WHERE src <> dst)",
-        "h2 AS (SELECT a.src AS v, b.dst AS r FROM und a "
-        "JOIN und b ON b.src = a.dst)",
-        "rc AS (SELECT v, CAST(COUNT(*) AS BIGINT) AS n_reach FROM ("
-        "SELECT src AS v, dst AS r FROM und "
-        "UNION SELECT src, src FROM und "
-        "UNION SELECT v, r FROM h2) x GROUP BY v)",
-    )
-    + "SELECT CAST(LENGTH(bin(n_reach)) AS BIGINT) AS bucket, "
-    "CAST(COUNT(*) AS BIGINT) AS n_hosts FROM rc GROUP BY 1",
-)
-def q_neighborhood_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Radius-2 neighborhood function over the undirected host graph
-    (operators/linkgraph.py:neighborhood_reach): the log2 histogram of
-    how many hosts each host reaches in <= 2 hops, self included — the
-    ANF / HyperBall statistic at the radius where it is still exactly
-    join-computable, and the measured small-world evidence a crawl
-    scheduler plans around.  Exact distinct-union of {v}, the 1-hop
-    endpoints, and the wedge join's 2-hop endpoints; bucket =
-    bit_length (the degree_histogram / hll rho spelling).  All-integer.
-
-    Scale shape: one wedge self-equi-join plus a distinct fold —
-    honestly quadratic in hub degree, which is WHY beyond radius 2 the
-    sketched path (per-node HLL registers folded by max, the
-    primitives sketches.py already carries) replaces exactness; the
-    docstring records that trade explicitly."""
-    pages = pagesops.linked_pages_df(spark, sf_dir)
-    return linkgraph.neighborhood_reach(linkgraph.extract_links(pages))
-
-
-# Planted mutual-blogroll overlay for link_reciprocity: the organic
-# graph has exactly 2 reciprocal pairs at the 500-doc scales (the
-# quadratic/linear dst maps almost never invert), and reciprocity is
-# only a useful signal when SOME edges reciprocate and some don't — so
-# the overlay adds hub 61: every doc = 0 mod 25 links to it, and the
-# hub links BACK to the hosts of docs = 0 mod 50 (half the forward
-# edges reciprocate, the other half stay one-way).
-_RECIP_PLANT_DUCK = (
-    "SELECT DISTINCT CAST(doc_id % 1000 AS BIGINT) AS src, "
-    "CAST(61 AS BIGINT) AS dst FROM documents WHERE doc_id % 25 = 0 "
-    "UNION SELECT DISTINCT CAST(61 AS BIGINT), "
-    "CAST(doc_id % 1000 AS BIGINT) FROM documents WHERE doc_id % 50 = 0"
-)
-
-
-@query(
-    "link_reciprocity",
-    _with(
-        f"lp AS ({_LINKED_PAGES_DUCK})",
-        _LK_CTE,
-        f"pr AS ({_RECIP_PLANT_DUCK})",
-        "lk2 AS (SELECT src, dst FROM lk WHERE src <> dst "
-        "UNION SELECT src, dst FROM pr WHERE src <> dst)",
-        "r AS (SELECT a.src, a.dst, CASE WHEN b.src IS NOT NULL "
-        "THEN 1 ELSE 0 END AS recip FROM lk2 a LEFT JOIN lk2 b "
-        "ON b.src = a.dst AND b.dst = a.src)",
-    )
-    + "SELECT src AS host, CAST(COUNT(*) AS BIGINT) AS n_out, "
-    "CAST(SUM(recip) AS BIGINT) AS n_recip "
-    "FROM r GROUP BY src HAVING SUM(recip) > 0",
-)
-def q_link_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Link reciprocity per host: out-degree and how many of those
-    edges are reciprocated (the reverse edge exists) — the
-    mutual-linking signal behind blogroll/partner-network detection
-    and a standard web-graph statistic (the web's global reciprocity
-    is famously low; spikes flag coordinated structures).  Hosts with
-    zero reciprocated edges are dropped (the one-way crawl majority —
-    the HAVING keeps the output signal-sized).  All-integer, and the
-    organic graph's 2 reciprocal pairs are joined by a PLANTED
-    half-reciprocated hub overlay (_RECIP_PLANT_DUCK, the
-    cocitation_hosts discipline) so reciprocated and one-way edges
-    coexist at every scale.
-
-    Scale shape: one self-equi-join of the distinct host graph on the
-    reversed key (narrow int64 pairs), then a map-side-combinable
-    fold — never the raw crawl."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    pages = pagesops.linked_pages_df(spark, sf_dir)
-    docs = load_table(spark, sf_dir, "documents")
-    fwd = docs.filter(F.col("doc_id") % 25 == 0).select(
-        (F.col("doc_id") % 1000).cast("long").alias("src"),
-        F.lit(61).cast("long").alias("dst"),
-    )
-    back = docs.filter(F.col("doc_id") % 50 == 0).select(
-        F.lit(61).cast("long").alias("src"),
-        (F.col("doc_id") % 1000).cast("long").alias("dst"),
-    )
-    lk2 = (
-        linkgraph.extract_links(pages)
-        .union(fwd)
-        .union(back)
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    rev = lk2.select(
-        F.col("dst").alias("src"),
-        F.col("src").alias("dst"),
-        F.lit(1).alias("has_rev"),
-    )
-    r = lk2.join(rev, ["src", "dst"], "left").select(
-        "src", F.coalesce("has_rev", F.lit(0)).alias("recip")
-    )
-    return (
-        r.groupBy(F.col("src").alias("host"))
-        .agg(
-            F.count(F.lit(1)).alias("n_out"),
-            F.sum("recip").alias("n_recip"),
-        )
-        .filter(F.col("n_recip") > 0)
-    )
-
-
-#: bow-tie reachability horizon (hops).  6 covers the synthetic host
-#: graph's effective diameter; the CLASSIFICATION CONTRACT is stated
-#: as "within BOWTIE_K hops" so bounded rounds stay exact, not
-#: approximate (a production run raises K until the frontier dries).
-BOWTIE_K = 6
-
-
-def _bowtie_bfs_cte(name: str, edges_cte: str, src: str,
-                    dst: str) -> str:
-    return (
-        f"{name} AS (SELECT CAST(0 AS BIGINT) AS host, "
-        "CAST(0 AS BIGINT) AS dist "
-        f"UNION SELECT e.{dst}, t.dist + 1 FROM {name} t "
-        f"JOIN {edges_cte} e ON e.{src} = t.host "
-        f"WHERE t.dist < {BOWTIE_K})"
-    )
-
-
-@query(
-    "bowtie_components",
-    "WITH RECURSIVE "
-    + ", ".join(
-        [
-            f"lp AS ({_LINKED_PAGES_DUCK})",
-            _LK_CTE,
-            # explicit DISTINCT: inside WITH RECURSIVE, DuckDB 1.0
-            # treats a non-self-referencing CTE's bare UNION as the
-            # base/recursive splitter and SKIPS the dedup (measured:
-            # SELECT 1 UNION SELECT 1 yields 2 rows there, 1 outside)
-            "hosts AS (SELECT DISTINCT host FROM (SELECT src AS host "
-            "FROM lk UNION ALL SELECT dst FROM lk) u)",
-            _bowtie_bfs_cte("fwd", "lk", "src", "dst"),
-            _bowtie_bfs_cte("bwd", "lk", "dst", "src"),
-            "f AS (SELECT DISTINCT host FROM fwd)",
-            "b AS (SELECT DISTINCT host FROM bwd)",
-            "cls AS (SELECT h.host, CASE "
-            "WHEN f.host IS NOT NULL AND b.host IS NOT NULL THEN 'CORE' "
-            "WHEN b.host IS NOT NULL THEN 'IN' "
-            "WHEN f.host IS NOT NULL THEN 'OUT' "
-            "ELSE 'DISCONNECTED' END AS component "
-            "FROM hosts h LEFT JOIN f ON f.host = h.host "
-            "LEFT JOIN b ON b.host = h.host)",
-        ]
-    )
-    + " SELECT component, CAST(COUNT(*) AS BIGINT) AS n_hosts, "
-    "MIN(host) AS example_host FROM cls GROUP BY component",
-)
-def q_bowtie_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The web's bow-tie decomposition (Broder et al. 2000) relative
-    to pivot host 0: CORE = hosts that both reach and are reached by
-    the pivot within BOWTIE_K hops (the pivot's strongly-connected
-    neighbourhood), IN = reach it only, OUT = reached only,
-    DISCONNECTED = neither — THE structural census of web-graph
-    analysis, built from two bounded BFS sweeps (forward along edges,
-    backward along reversed edges) over the aggregated host graph.
-    The k-hop horizon is part of the stated contract, so bounded
-    rounds are exact, and everything is integer set membership — the
-    recursive-CTE oracle replays it with no tolerance.
-
-    Scale shape: two bfs_hops-shaped Pregel sweeps (narrow int64
-    joins + MIN folds, checkpoint-pinned edges) + one membership
-    census over the host universe."""
-    pages = pagesops.linked_pages_df(spark, sf_dir)
-    edges = linkgraph.extract_links(pages)
-    # host % 1e6 == 0 -> exactly host 0 at any test scale
-    return linkgraph.bowtie(edges, seed_mod=1_000_000, iters=BOWTIE_K)
-
-
-# Degree assortativity (Newman 2003's directed in-in variant): Pearson
-# correlation of the endpoint IN-degrees across directed edges.  The
-# in-in variant is deliberate: the synthetic crawl's out-degree is
-# constant by construction (every page embeds the same number of
-# anchors), so the out-in variant has zero x-variance and r is
-# undefined — and under the driver's ANSI-ON session an unguarded
-# Pearson would THROW DIVIDE_BY_ZERO, not return NULL (the
-# test_ansi_sweep lesson).  Both variance factors are therefore
-# CASE-guarded on the exact integer accumulators before any float math.
-_ASSORT_R_SQL = (
-    "CASE WHEN m * sxx - sx * sx > 0 AND m * syy - sy * sy > 0 THEN "
-    "ROUND(CAST(m * sxy - sx * sy AS DOUBLE) / "
-    "(SQRT(CAST(m * sxx - sx * sx AS DOUBLE)) * "
-    "SQRT(CAST(m * syy - sy * sy AS DOUBLE))), 6) "
-    "ELSE NULL END"
-)
-
-
-@query(
-    "degree_assortativity",
-    _with(
-        f"lp AS ({_LINKED_PAGES_DUCK})",
-        _LK_CTE,
-        "i AS (SELECT dst AS host, CAST(COUNT(*) AS BIGINT) AS ideg "
-        "FROM lk GROUP BY dst)",
-        "ep AS (SELECT COALESCE(si.ideg, CAST(0 AS BIGINT)) AS x, "
-        "di.ideg AS y FROM lk "
-        "LEFT JOIN i si ON si.host = lk.src "
-        "JOIN i di ON di.host = lk.dst)",
-        "s AS (SELECT CAST(COUNT(*) AS BIGINT) AS m, "
-        "CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy, "
-        "CAST(SUM(x * y) AS BIGINT) AS sxy, "
-        "CAST(SUM(x * x) AS BIGINT) AS sxx, "
-        "CAST(SUM(y * y) AS BIGINT) AS syy FROM ep)",
-    )
-    + f"SELECT m, sx, sy, sxy, sxx, syy, {_ASSORT_R_SQL} AS r FROM s",
-)
-def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Degree assortativity of the host graph (Newman 2003, directed
-    in-in variant): the Pearson correlation between the in-degrees of
-    the two endpoints of every edge — THE one-number mixing statistic
-    of web-graph reports (the web is famously DISassortative: hubs
-    link to low-degree pages, r < 0).  Degrees are exact integers, the
-    six accumulators are exact BIGINT sums (the hashed surface), and r
-    is one shared float chain over them, CASE-guarded on both integer
-    variance factors (zero variance => NULL, never an ANSI throw) and
-    ROUND(,6)-pinned.  Sources never linked to take in-degree 0 via
-    the LEFT JOIN, mirroring NetworkX's in-in convention.
-
-    Scale shape: one degree agg on the distinct host graph, two narrow
-    host-sized joins back onto the edge list (broadcastable at any
-    realistic host count), accumulators combine map-side onto ONE
-    row."""
-    pages = pagesops.linked_pages_df(spark, sf_dir)
-    lk = linkgraph.extract_links(pages)
-    i = lk.groupBy(F.col("dst").alias("host")).agg(
-        F.count(F.lit(1)).alias("ideg")
-    )
-    ep = (
-        lk.join(
-            i.select(F.col("host").alias("src"), F.col("ideg").alias("xi")),
-            "src",
-            "left",
-        )
-        .join(
-            i.select(F.col("host").alias("dst"), F.col("ideg").alias("y")),
-            "dst",
-        )
-        .select(
-            F.coalesce(F.col("xi"), F.lit(0).cast("long")).alias("x"), "y"
-        )
-    )
-    s = ep.agg(
-        F.count(F.lit(1)).alias("m"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"),
-    )
-    return s.select(
-        "m", "sx", "sy", "sxy", "sxx", "syy",
-        F.expr(_ASSORT_R_SQL).alias("r"),
-    )
-
-
-# Gini coefficient over sorted in-degrees: with x_(1) <= ... <= x_(n)
-# ranked ascending, G = (2 * SUM(i * x_i) - (n + 1) * SUM(x_i)) /
-# (n * SUM(x_i)) — every accumulator an exact BIGINT, ties broken by
-# host id so the rank (and therefore SUM(i * x_i)) is deterministic
-# even though G itself is tie-order-invariant within equal values.
-_GINI_SQL = (
-    "CASE WHEN n * sx > 0 THEN "
-    "ROUND(CAST(2 * swx - (n + 1) * sx AS DOUBLE) / "
-    "CAST(n * sx AS DOUBLE), 6) ELSE NULL END"
-)
-
-
-@query(
-    "indegree_gini",
-    _with(
-        f"lp AS ({_LINKED_PAGES_DUCK})",
-        _LK_CTE,
-        "i AS (SELECT dst AS host, CAST(COUNT(*) AS BIGINT) AS deg "
-        "FROM lk GROUP BY dst)",
-        "r AS (SELECT deg, CAST(ROW_NUMBER() OVER (ORDER BY deg ASC, "
-        "host ASC) AS BIGINT) AS rk FROM i)",
-        "s AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, "
-        "CAST(SUM(deg) AS BIGINT) AS sx, "
-        "CAST(SUM(rk * deg) AS BIGINT) AS swx FROM r)",
-    )
-    + f"SELECT n, sx, swx, {_GINI_SQL} AS gini FROM s",
-)
-def q_indegree_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gini coefficient of host in-degree — the crawl-concentration
-    inequality statistic every web census publishes (0 = links spread
-    evenly, 1 = one host takes everything; pairs with
-    degree_histogram's shape and pagerank's ranking).  The sorted-rank
-    identity G = (2*SUM(rk*x) - (n+1)*SUM(x)) / (n*SUM(x)) makes every
-    accumulator an exact BIGINT and G one guarded division.
-
-    Scale shape: the rank window runs over the host-sized degree
-    table (never the crawl) — the global sort a Gini needs is
-    inherent to the statistic; at 10^8 hosts it is one narrow
-    (int64, int64) range-partitioned sort."""
-    pages = pagesops.linked_pages_df(spark, sf_dir)
-    lk = linkgraph.extract_links(pages)
-    from pyspark.sql import Window
-
-    i = lk.groupBy(F.col("dst").alias("host")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
-    w = Window.orderBy(F.col("deg").asc(), F.col("host").asc())
-    r = i.select(
-        "deg", F.row_number().over(w).cast("long").alias("rk")
-    )
-    s = r.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("deg").alias("sx"),
-        F.sum(F.col("rk") * F.col("deg")).alias("swx"),
-    )
-    return s.select("n", "sx", "swx", F.expr(_GINI_SQL).alias("gini"))
-
-
-# Rich-club coefficient, one pass: an undirected edge belongs to club k
-# iff min(endpoint degrees) > k, so every k in the ladder is a
-# conditional sum over ONE degree-joined edge list — no per-k subgraph
-# materialization.  phi = 2E_k / (n_k * (n_k - 1)) is CASE-guarded on
-# the integer count (clubs of < 2 hosts have no defined density).
-_RICH_KS = (4, 6, 10)
-
-
-def _rich_phi_sql(e: str, n: str) -> str:
-    return (
-        f"CASE WHEN {n} >= 2 THEN ROUND(CAST(2 * {e} AS DOUBLE) / "
-        f"CAST({n} * ({n} - 1) AS DOUBLE), 6) ELSE NULL END"
-    )
-
-
-@query(
-    "rich_club",
-    _with(
-        f"lp AS ({_LINKED_PAGES_DUCK})",
-        _LK_CTE,
-        "und AS (SELECT src, dst FROM lk UNION SELECT dst, src FROM lk)",
-        "deg AS (SELECT src AS host, CAST(COUNT(*) AS BIGINT) AS d "
-        "FROM und GROUP BY src)",
-        "ed AS (SELECT LEAST(da.d, db.d) AS mind FROM und u "
-        "JOIN deg da ON da.host = u.src JOIN deg db ON db.host = u.dst "
-        "WHERE u.src < u.dst)",
-        "ec AS (SELECT "
-        + ", ".join(
-            f"CAST(SUM(CASE WHEN mind > {k} THEN 1 ELSE 0 END) "
-            f"AS BIGINT) AS e{k}"
-            for k in _RICH_KS
-        )
-        + " FROM ed)",
-        "nc AS (SELECT "
-        + ", ".join(
-            f"CAST(SUM(CASE WHEN d > {k} THEN 1 ELSE 0 END) "
-            f"AS BIGINT) AS n{k}"
-            for k in _RICH_KS
-        )
-        + " FROM deg)",
-    )
-    + " UNION ALL ".join(
-        f"SELECT CAST({k} AS BIGINT) AS k, n{k} AS n_rich, "
-        f"e{k} AS e_rich, {_rich_phi_sql(f'e{k}', f'n{k}')} AS phi "
-        "FROM ec CROSS JOIN nc"
-        for k in _RICH_KS
-    ),
-)
-def q_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rich-club coefficient of the host graph (Zhou & Mondragon
-    2004): among hosts of degree > k, what fraction of their possible
-    mutual edges exists?  The structural echo of
-    degree_assortativity's r < 0 — on this crawl the mid-degree core
-    interlinks sparsely and the top hubs not at all, the
-    disassortative signature of real webs.
-
-    One pass: an undirected edge is in club k iff min(endpoint
-    degrees) > k, so the whole ladder is conditional sums over ONE
-    degree-joined edge list (the assortativity join reused) plus one
-    degree census — exact BIGINTs, with the density CASE-guarded on
-    the integer count (a club of < 2 hosts has no defined phi).
-
-    Scale shape: one host-sized degree agg, two narrow joins onto the
-    edge list, both ladders combine map-side onto one row each; the
-    per-k output rows come from stack(), not per-k subgraph scans."""
-    pages = pagesops.linked_pages_df(spark, sf_dir)
-    lk = linkgraph.extract_links(pages)
-    und = lk.select("src", "dst").union(
-        lk.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
-    deg = und.groupBy(F.col("src").alias("host")).agg(
-        F.count(F.lit(1)).alias("d")
-    )
-    ed = (
-        und.filter(F.col("src") < F.col("dst"))
-        .join(deg.select(F.col("host").alias("src"), F.col("d").alias("da")), "src")
-        .join(deg.select(F.col("host").alias("dst"), F.col("d").alias("db")), "dst")
-        .select(F.least("da", "db").alias("mind"))
-    )
-    ec = ed.agg(
-        *[
-            F.sum((F.col("mind") > k).cast("long")).alias(f"e{k}")
-            for k in _RICH_KS
-        ]
-    )
-    nc = deg.agg(
-        *[
-            F.sum((F.col("d") > k).cast("long")).alias(f"n{k}")
-            for k in _RICH_KS
-        ]
-    )
-    one = ec.crossJoin(F.broadcast(nc))
-    stacked = one.selectExpr(
-        f"stack({len(_RICH_KS)}, "
-        + ", ".join(f"CAST({k} AS BIGINT), n{k}, e{k}" for k in _RICH_KS)
-        + ") AS (k, n_rich, e_rich)"
-    )
-    return stacked.select(
-        "k", "n_rich", "e_rich",
-        F.expr(_rich_phi_sql("e_rich", "n_rich")).alias("phi"),
-    )
-
-
-def _lpa_ctes(iters: int) -> list[str]:
-    """Unrolled synchronous LPA rounds, bit-equal to
-    linkgraph.lpa_communities: vote counts are exact integers and the
-    argmax is the (cnt DESC, community ASC) row — the same total order
-    as the engine's MIN over (-cnt, community) structs."""
-    ctes = [
-        f"lp AS ({_LINKED_PAGES_DUCK})",
-        _LK_CTE,
-        "und AS (SELECT src, dst FROM lk UNION SELECT dst, src FROM lk)",
-        "l0 AS (SELECT DISTINCT src AS host, src AS community FROM und)",
-    ]
-    for i in range(1, iters + 1):
-        ctes += [
-            f"v{i} AS (SELECT u.src AS host, l.community, "
-            f"COUNT(*) AS cnt FROM und u JOIN l{i - 1} l "
-            "ON l.host = u.dst GROUP BY u.src, l.community)",
-            f"l{i} AS (SELECT host, community FROM (SELECT host, "
-            "community, ROW_NUMBER() OVER (PARTITION BY host "
-            f"ORDER BY cnt DESC, community ASC) AS rn FROM v{i}) t "
-            "WHERE rn = 1)",
-        ]
-    return ctes
-
-
-@query(
-    "lpa_communities",
-    _with(*_lpa_ctes(linkgraph.LPA_ITERS))
-    + f"SELECT host, community FROM l{linkgraph.LPA_ITERS}",
-)
-def q_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Label-propagation community detection over the undirected host
-    graph (operators/linkgraph.py:lpa_communities) — related-site
-    grouping / crawl sharding, the partitioning companion of
-    cocitation_hosts (pair scores) and the fourth iterative graph job.
-    The deterministic synchronous variant: adopt the most frequent
-    neighbour label, ties to the smallest — an exact integer argmax,
-    so the unrolled-CTE oracle replays every round bit-for-bit with no
-    randomness or rounding anywhere.
-
-    Scale shape: symmetrized edge list checkpoint-pinned once, then
-    per round one narrow (int64, int64) join + two map-side-combinable
-    aggs on the aggregated host graph — the Pregel shape with a static
-    round bound."""
-    pages = pagesops.linked_pages_df(spark, sf_dir)
-    return linkgraph.lpa_communities(linkgraph.extract_links(pages))
-
-
-@query(
-    "lpa_modularity",
-    _with(
-        *_lpa_ctes(linkgraph.LPA_ITERS),
-        f"fin AS (SELECT host, community FROM l{linkgraph.LPA_ITERS})",
-        "undm AS (SELECT DISTINCT src, dst FROM und WHERE src < dst)",
-        "mm AS (SELECT CAST(COUNT(*) AS BIGINT) AS m FROM undm)",
-        "dg AS (SELECT src AS host, COUNT(*) AS d FROM "
-        "(SELECT src, dst FROM und WHERE src <> dst) u GROUP BY src)",
-        "dc AS (SELECT community, SUM(d) AS dsum FROM dg "
-        "JOIN fin USING (host) GROUP BY community)",
-        "ein AS (SELECT la.community, COUNT(*) AS e FROM undm "
-        "JOIN fin la ON la.host = undm.src "
-        "JOIN fin lb ON lb.host = undm.dst "
-        "AND lb.community = la.community GROUP BY la.community)",
-        "q AS (SELECT dsum, COALESCE(e, 0) AS e, (SELECT m FROM mm) AS m "
-        "FROM dc LEFT JOIN ein USING (community))",
-        "qq AS (SELECT CAST(SUM(4 * m * e - dsum * dsum) AS BIGINT) "
-        "AS q_num FROM q)",
-    )
-    + "SELECT CAST((SELECT COUNT(DISTINCT community) FROM fin) AS BIGINT) "
-    "AS n_communities, mm.m, qq.q_num, "
-    "ROUND(CAST(qq.q_num AS DOUBLE) / CAST(4 * mm.m * mm.m AS DOUBLE), 6) "
-    "AS modularity FROM mm, qq",
-)
-def q_lpa_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Newman modularity of the LPA partition over the simple
-    undirected host graph (operators/linkgraph.py:modularity) — the
-    score that turns lpa_communities from "a labeling" into "a
-    measured clustering", and the quantity community pipelines
-    optimize.  Everything stays integer by scoring the exact BIGINT
-    numerator of Q * 4m^2 = sum_c (4m*e_c - D_c^2); the reported
-    modularity is one correctly-rounded division, ROUND(,6)-guarded
-    (the docstring records the int64 ceiling at m ~ 1.5e9 and the
-    per-community double fallback past it).  The oracle replays the
-    LPA rounds through the shared unrolled CTEs and then states the
-    definition, so the row certifies labeling AND scoring together.
-
-    Scale shape: beyond LPA itself, one symmetrized fold, two label
-    equi-joins on the once-per-edge list, community-keyed aggs; the
-    scalars broadcast as 1-row frames — no collect anywhere."""
-    pages = pagesops.linked_pages_df(spark, sf_dir)
-    edges = linkgraph.extract_links(pages)
-    labels = linkgraph.lpa_communities(edges)
-    return linkgraph.modularity(edges, labels)
-
-
-# Link-geography bands: band edges on the ROUNDED km (bit-identical in
-# both engines), so the CASE comparisons and counts are exact; min/max
-# are order-independent selections of identical doubles (sums/means of
-# decimal-rounded values would NOT be — they stay out of the output).
-_GEOBAND_SQL = (
-    "CASE WHEN dist_km < 100.0 THEN 0 WHEN dist_km < 1000.0 THEN 1 "
-    "WHEN dist_km < 5000.0 THEN 2 ELSE 3 END"
-)
-
-
-@query(
-    "link_geo_bands",
-    _with(
-        f"lp AS ({_LINKED_PAGES_DUCK})",
-        _LK_CTE,
-        *_GEO_CTES,
-        "hostgeo AS (SELECT "
-        f"CAST(regexp_extract(url, '{pagesops.HOST_RE}', 1) AS BIGINT) "
-        "AS host, CAST(SUM(lat_milli) AS BIGINT) AS slat, "
-        "CAST(SUM(lon_milli) AS BIGINT) AS slon, "
-        "CAST(COUNT(*) AS BIGINT) AS n FROM coords GROUP BY 1)",
-        "cent AS (SELECT host, CAST(slat AS DOUBLE) / (1000.0 * n) "
-        "AS lat, CAST(slon AS DOUBLE) / (1000.0 * n) AS lon "
-        "FROM hostgeo)",
-        "d AS (SELECT "
-        + _hav_km_sql("s.lat", "s.lon", "t.lat", "t.lon")
-        + " AS dist_km FROM lk JOIN cent s ON s.host = lk.src "
-        "JOIN cent t ON t.host = lk.dst)",
-    )
-    + f"SELECT {_GEOBAND_SQL} AS band, CAST(COUNT(*) AS BIGINT) AS "
-    "n_links, MIN(dist_km) AS min_km, MAX(dist_km) AS max_km "
-    "FROM d GROUP BY 1",
-)
-def q_link_geo_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Does the web link locally?  The distance distribution of
-    hyperlinks: every page's coordinates are extracted from its own
-    markup (the north_star geocoding stage), host centroids are exact
-    integer milli-degree sums divided once, and each host-graph edge
-    gets the great-circle km between its endpoints' centroids, folded
-    into 4 distance bands — the geospatial x webtext graft question
-    stated as one query (link-locality drives crawl sharding and
-    geo-replica placement at 100 TB).
-
-    Exactness: centroid lat/lon are ONE correctly-rounded division of
-    exact integers per axis; the haversine spelling is shared verbatim
-    and ROUND(,4)-guarded (knn_haversine doctrine); bands compare the
-    bit-identical ROUNDED km, so counts are exact; min/max select
-    identical doubles (means of decimal-rounded values would be
-    aggregation-order-dependent and stay out of the output).
-
-    Scale shape: the centroid table is host-sized (built by one
-    map-side-combinable agg over the geo scan) and joins the edge list
-    twice by host id — both sides aggregated, never the raw crawl; the
-    band fold is a 4-row combine."""
-    pages = pagesops.linked_pages_df(spark, sf_dir)
-    edges = linkgraph.extract_links(pages)
-    geo = pagesops.geo_coords(spark, sf_dir).select(
-        F.regexp_extract("url", pagesops.HOST_RE, 1)
-        .cast("long")
-        .alias("host"),
-        "lat_milli",
-        "lon_milli",
-    )
-    cent = (
-        geo.groupBy("host")
-        .agg(
-            F.sum("lat_milli").alias("slat"),
-            F.sum("lon_milli").alias("slon"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .select(
-            "host",
-            (F.col("slat").cast("double")
-             / (F.lit(1000.0) * F.col("n"))).alias("lat"),
-            (F.col("slon").cast("double")
-             / (F.lit(1000.0) * F.col("n"))).alias("lon"),
-        )
-    )
-    s = cent.select(
-        F.col("host").alias("src"),
-        F.col("lat").alias("slat_d"),
-        F.col("lon").alias("slon_d"),
-    )
-    t = cent.select(
-        F.col("host").alias("dst"),
-        F.col("lat").alias("tlat_d"),
-        F.col("lon").alias("tlon_d"),
-    )
-    d = (
-        edges.join(s, "src")
-        .join(t, "dst")
-        .selectExpr(
-            _hav_km_sql("slat_d", "slon_d", "tlat_d", "tlon_d")
-            + " AS dist_km"
-        )
-    )
-    return (
-        d.groupBy(F.expr(_GEOBAND_SQL).alias("band"))
-        .agg(
-            F.count(F.lit(1)).alias("n_links"),
-            F.min("dist_km").alias("min_km"),
-            F.max("dist_km").alias("max_km"),
-        )
     )
 
 
@@ -8655,41 +7425,6 @@ def q_manifest_ndv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "anchor_text",
-    _with(
-        f"lp AS ({_LINKED_PAGES_DUCK})",
-        "am AS (SELECT u.mt FROM (SELECT regexp_extract_all(page, "
-        f"'{pagesops.ANCHOR_RE}', 0) AS ms FROM lp) t, "
-        "LATERAL (SELECT unnest(t.ms) AS mt) u)",
-        "pr AS (SELECT CAST(regexp_extract(mt, "
-        f"'{pagesops.ANCHOR_RE}', 1) AS BIGINT) AS host, "
-        f"regexp_extract(mt, '{pagesops.ANCHOR_RE}', 2) AS anchor FROM am)",
-        "agg AS (SELECT host, anchor, CAST(COUNT(*) AS BIGINT) AS n "
-        "FROM pr GROUP BY host, anchor)",
-        "rk AS (SELECT host, anchor, n, CAST(ROW_NUMBER() OVER ("
-        "PARTITION BY host ORDER BY n DESC, anchor) AS BIGINT) AS rnk "
-        "FROM agg)",
-    )
-    + "SELECT host, anchor, n, rnk FROM rk WHERE rnk <= 3",
-)
-def q_anchor_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Anchor-text aggregation (operators/linkgraph.py
-    extract_anchor_pairs/top_anchors): every hyperlink's anchor TEXT
-    grouped by DESTINATION host, top-3 per host — the "anchors" field a
-    web-scale index stores beside the page (anchor text describes the
-    target better than the target does; it is also a classic
-    query-document training signal).  The webtext twin of the
-    reference's upstream attribute gather (networkGraph.py:
-    attributes flowing along edges to the node they describe).
-
-    All counts integer, the tie broken by anchor string — exact in both
-    engines; the ranking window runs over the bounded (host, anchor)
-    rollup, never the raw link stream."""
-    pages = pagesops.linked_pages_df(spark, sf_dir)
-    return linkgraph.top_anchors(linkgraph.extract_anchor_pairs(pages))
-
-
-@query(
     "dedup_keep",
     "WITH RECURSIVE "
     + _MINHASH_CTES[len("WITH "):].rstrip()
@@ -8955,52 +7690,6 @@ def q_setsim_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     return dedup.allpairs_jaccard(dedup.shingle_ids(docs))
-
-
-_HRW_H = "md5(CAST(doc_id AS STRING) || ':' || CAST(u.s AS STRING))"
-
-
-@query(
-    "rendezvous_shards",
-    _with(
-        f"sh AS (SELECT doc_id, u.s AS s, {_HRW_H} AS h "
-        "FROM documents, LATERAL (SELECT "
-        "unnest(generate_series(0, 16)) AS s) u)",
-        f"ss AS (SELECT doc_id, s, {dedup.horner_hash_sql('h')} AS w "
-        "FROM sh)",
-        "r16 AS (SELECT doc_id, s AS shard FROM (SELECT doc_id, s, "
-        "ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY w DESC, s ASC) "
-        "AS rn FROM ss WHERE s < 16) t WHERE rn = 1)",
-        "r17 AS (SELECT doc_id, s AS shard_plus FROM (SELECT doc_id, s, "
-        "ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY w DESC, s ASC) "
-        "AS rn FROM ss) t WHERE rn = 1)",
-        "j AS (SELECT shard, shard_plus FROM r16 JOIN r17 "
-        "USING (doc_id))",
-    )
-    + "SELECT shard, CAST(COUNT(*) AS BIGINT) AS n_docs, "
-    "CAST(SUM(CASE WHEN shard_plus <> shard THEN 1 ELSE 0 END) "
-    "AS BIGINT) AS n_moved, "
-    "ROUND(CAST(SUM(CASE WHEN shard_plus <> shard THEN 1 ELSE 0 END) "
-    "AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6) AS moved_frac "
-    "FROM j GROUP BY shard",
-)
-def q_rendezvous_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rendezvous (highest-random-weight) sharding elasticity report
-    (operators/sharding.py:rendezvous_report): per 16-shard bucket,
-    how many docs a 17th shard would steal — the HRW guarantee that
-    elastically growing a 10^12-doc crawl store moves ~1/17 of the
-    corpus and nothing else (hash-mod would reshuffle 16/17), measured
-    instead of asserted (the planted test also pins that every moved
-    doc lands on the NEW shard).  Weights are the portable md5+Horner
-    ids, so the oracle replays every weight bit-for-bit; both argmaxes
-    come out of ONE doc-keyed aggregation over one bounded (N+1)
-    explode; ties break to the smallest shard by a total struct order.
-    All counts exact; moved_frac is one guarded division."""
-    from rgr_pdal_topo_spark.operators import sharding
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return sharding.rendezvous_report(docs)
 
 
 @query(
@@ -9379,80 +8068,6 @@ def q_zonal_overlay(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("wmean", F.expr(_ZO_WMEAN))
 
 
-_TR_SEEDS = 8
-
-
-def _trustrank_ctes(iters: int) -> list[str]:
-    """Unrolled TrustRank supersteps, bit-equal to
-    linkgraph.trustrank_int by construction: the pagerank CTE chain
-    with teleport mass restricted to the top-in-degree seed set."""
-    sc = linkgraph.PR_SCALE
-    ctes = [
-        f"lp AS ({_LINKED_PAGES_DUCK})",
-        _LK_CTE,
-        "nodes AS (SELECT DISTINCT src AS host FROM lk)",
-        "ind AS (SELECT dst AS host, COUNT(*) AS ind FROM lk "
-        "GROUP BY dst)",
-        "sr AS (SELECT nodes.host, ROW_NUMBER() OVER (ORDER BY "
-        "COALESCE(ind.ind, 0) DESC, nodes.host ASC) AS rn "
-        "FROM nodes LEFT JOIN ind ON ind.host = nodes.host)",
-        f"sd AS (SELECT host, rn <= {_TR_SEEDS} AS is_seed FROM sr)",
-        "nt AS (SELECT COUNT(*) AS n FROM sd WHERE is_seed)",
-        "o AS (SELECT src, COUNT(*) AS odeg FROM lk GROUP BY src)",
-        "e AS (SELECT lk.src, lk.dst, o.odeg FROM lk "
-        "JOIN o ON lk.src = o.src)",
-        "r0 AS (SELECT sd.host, sd.is_seed, CASE WHEN sd.is_seed THEN "
-        + linkgraph.exact_div_sql(str(sc), "nt.n")
-        + " ELSE 0 END AS q FROM sd CROSS JOIN nt)",
-    ]
-    tbase = linkgraph.exact_div_sql(
-        str((linkgraph.PR_D_DEN - linkgraph.PR_D_NUM) * sc),
-        f"{linkgraph.PR_D_DEN} * nt.n",
-    )
-    for i in range(1, iters + 1):
-        step = linkgraph.exact_div_sql(
-            f"{linkgraph.PR_D_NUM} * r{i - 1}.q",
-            f"{linkgraph.PR_D_DEN} * e.odeg",
-        )
-        ctes.append(
-            f"c{i} AS (SELECT e.dst AS host, CAST(SUM({step}) AS BIGINT) "
-            f"AS m FROM e JOIN r{i - 1} ON r{i - 1}.host = e.src "
-            "GROUP BY e.dst)"
-        )
-        ctes.append(
-            f"r{i} AS (SELECT sd.host, sd.is_seed, "
-            f"(CASE WHEN sd.is_seed THEN {tbase} ELSE 0 END) + "
-            f"COALESCE(c{i}.m, 0) AS q FROM sd CROSS JOIN nt "
-            f"LEFT JOIN c{i} ON c{i}.host = sd.host)"
-        )
-    return ctes
-
-
-@query(
-    "trustrank_hosts",
-    _with(*_trustrank_ctes(linkgraph.PR_ITERS))
-    + f"SELECT host, q AS trust_q, is_seed FROM r{linkgraph.PR_ITERS}",
-)
-def q_trustrank_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TrustRank link-spam demotion (operators/linkgraph.py
-    trustrank_int; Gyongyi, Garcia-Molina & Pedersen 2004): PageRank
-    with teleport restricted to a trusted seed set, so trust flows out
-    of the seeds and decays by d per hop — hosts unreachable from any
-    seed score EXACTLY 0 (integer arithmetic, not epsilon) however
-    much in-link mass they farm; the quality prior a crawl scheduler
-    runs beside pagerank_hosts.  Seeds are the top-8 in-degree nodes
-    (ties to smallest id — the paper's inverse-PageRank selection
-    reduced to its deterministic core; a curated whitelist slots in
-    unchanged).  Same 2^-30 all-integer grid, exact-div spelling and
-    4 damped supersteps as pagerank_hosts; the oracle unrolls the
-    identical update, so parity is bit-exact with no rounding
-    policy."""
-    pages = pagesops.linked_pages_df(spark, sf_dir)
-    return linkgraph.trustrank_int(
-        linkgraph.extract_links(pages), n_seeds=_TR_SEEDS
-    )
-
-
 @query(
     "decayed_activity",
     _with(
@@ -9489,126 +8104,6 @@ def q_decayed_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rgr_pdal_topo_spark.sources.tables import load_table
 
     return temporal.decayed_counts(load_table(spark, sf_dir, "events"))
-
-
-#: crawl priority = (trust / 2^30) * (freshness / 2^40), one shared
-#: spelling over the two exact integers, ROUND(,6)-guarded.
-_CS_PRIORITY = (
-    f"ROUND(CAST(trust_q AS DOUBLE) / {float(1 << 30)!r} * "
-    f"(CAST(score_q AS DOUBLE) / {float(1 << 40)!r}), 6)"
-)
-
-
-@query(
-    "crawl_schedule",
-    _with(
-        *_trustrank_ctes(linkgraph.PR_ITERS),
-        f"fetches AS ({_FETCHES_DUCK})",
-        "fh AS (SELECT CAST(regexp_extract(url, "
-        f"'{pagesops.HOST_RE}', 1) AS BIGINT) AS host, "
-        "warc_epoch // 86400 AS day FROM fetches)",
-        "fref AS (SELECT MAX(day) AS ref_day FROM fh)",
-        "fw AS (SELECT host, CASE WHEN ref_day - day <= 40 THEN "
-        "CAST(1 AS BIGINT) << CAST(40 - (ref_day - day) AS INT) "
-        "ELSE CAST(0 AS BIGINT) END AS w FROM fh CROSS JOIN fref)",
-        "fr AS (SELECT host, CAST(COUNT(*) AS BIGINT) AS n_fetches, "
-        "CAST(SUM(w) AS BIGINT) AS score_q FROM fw GROUP BY host)",
-    )
-    + f"SELECT r.host, r.q AS trust_q, r.is_seed, fr.n_fetches, "
-    f"fr.score_q, {_CS_PRIORITY} AS priority "
-    f"FROM (SELECT host, q, is_seed FROM r{linkgraph.PR_ITERS}) r "
-    "JOIN fr ON fr.host = r.host",
-)
-def q_crawl_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The crawl scheduler — the SIXTH composed flagship: per host,
-    TrustRank trust (spam-resistant link equity) x exponentially
-    recency-decayed capture activity (the decayed_activity fold over
-    the CDX fetch log's epoch-days) = the re-crawl priority a frontier
-    actually ranks by — trusted-and-fresh first, link farms exactly 0
-    whatever their churn.  Both stages are the verified solo
-    operators (trustrank_int; decayed_counts with day_col, same
-    2^(40-age) bit-shift weights), joined on the shared host id
-    (regexp host capture on both sides), priority ONE shared
-    two-factor spelling over the exact integers.  Solo/composed drift
-    fails parity because the oracle reuses the same CTE chains."""
-    from rgr_pdal_topo_spark.operators import temporal
-
-    pages = pagesops.linked_pages_df(spark, sf_dir)
-    tr = linkgraph.trustrank_int(
-        linkgraph.extract_links(pages), n_seeds=_TR_SEEDS
-    )
-    fetches = pagesops.fetch_log_df(spark, sf_dir).select(
-        F.regexp_extract("url", pagesops.HOST_RE, 1)
-        .cast("long")
-        .alias("host"),
-        (F.col("warc_epoch") / F.lit(86400)).cast("long").alias("day"),
-    )
-    fresh = temporal.decayed_counts(
-        fetches, group="host", day_col="day"
-    ).select(
-        "host",
-        F.col("n_events").alias("n_fetches"),
-        "score_q",
-    )
-    return (
-        tr.join(fresh, "host")
-        .select(
-            "host",
-            "trust_q",
-            "is_seed",
-            "n_fetches",
-            "score_q",
-        )
-        .withColumn("priority", F.expr(_CS_PRIORITY))
-    )
-
-
-@query(
-    "link_prediction",
-    _with(
-        f"lp AS ({_LINKED_PAGES_DUCK})",
-        _LK_CTE,
-        "und AS (SELECT DISTINCT src, dst FROM (SELECT src, dst FROM lk "
-        "UNION ALL SELECT dst AS src, src AS dst FROM lk) t "
-        "WHERE src <> dst)",
-        "dg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS deg FROM und "
-        "GROUP BY src)",
-        f"ctr AS (SELECT src, "
-        + linkgraph.exact_div_sql(
-            str(linkgraph.AA_Q * linkgraph.AA_Q), linkgraph.AA_WQ_SQL
-        )
-        + " AS rq FROM dg WHERE deg >= 2 AND deg <= "
-        f"{linkgraph.AA_MAX_DEG})",
-        "e AS (SELECT und.src, und.dst, ctr.rq FROM und "
-        "JOIN ctr ON ctr.src = und.src)",
-        "pr AS (SELECT a.dst AS host_a, b.dst AS host_b, "
-        "CAST(COUNT(*) AS BIGINT) AS n_common, CAST(SUM(a.rq) AS "
-        "BIGINT) AS aa_q FROM e a JOIN e b ON a.src = b.src "
-        "AND a.dst < b.dst GROUP BY 1, 2)",
-        "nw AS (SELECT pr.* FROM pr WHERE NOT EXISTS (SELECT 1 FROM "
-        "und WHERE und.src = pr.host_a AND und.dst = pr.host_b))",
-    )
-    + "SELECT host_a, host_b, n_common, aa_q, "
-    "CAST(aa_q AS DOUBLE) / 8192.0 AS aa FROM nw "
-    f"ORDER BY aa_q DESC, host_a ASC, host_b ASC LIMIT "
-    f"{linkgraph.AA_TOP_K}",
-)
-def q_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Adamic-Adar link prediction (operators/linkgraph.py
-    adamic_adar): the top-20 NOT-yet-linked host pairs by
-    AA(u, v) = sum over common neighbours w of 1/ln(deg(w)) — the
-    classic link-prediction scorer (rare shared neighbours outweigh
-    hubs), feeding crawl-frontier discovery beside cocitation's
-    related-domain signal.  Exact: symmetrized simple graph, ln(deg)
-    pinned to the 2^-13 grid (integer-valued libm input, the
-    integer-argument ln contract), reciprocal by one exact floor-division,
-    aa_q an exact BIGINT sum; the k-cut orders on the total
-    (aa_q, host_a, host_b) so the reported set is deterministic.
-    Wedge centres above deg 64 drop FIRST (the cocitation fan-out
-    discipline); the anti-join runs on the aggregated pair table;
-    the k-cut is a TakeOrdered."""
-    pages = pagesops.linked_pages_df(spark, sf_dir)
-    return linkgraph.adamic_adar(linkgraph.extract_links(pages))
 
 
 #: planted space-time ramps (the hotspot_cells planting discipline —
@@ -10128,6 +8623,18 @@ def q_langid_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Gini coefficient over sorted per-tile counts: with x_(1) <= ... <=
+# x_(n) ranked ascending, G = (2 * SUM(i * x_i) - (n + 1) * SUM(x_i)) /
+# (n * SUM(x_i)) — every accumulator an exact BIGINT, ties broken by
+# tile id so the rank (and therefore SUM(i * x_i)) is deterministic
+# even though G itself is tie-order-invariant within equal values.
+_GINI_SQL = (
+    "CASE WHEN n * sx > 0 THEN "
+    "ROUND(CAST(2 * swx - (n + 1) * sx AS DOUBLE) / "
+    "CAST(n * sx AS DOUBLE), 6) ELSE NULL END"
+)
+
+
 @query(
     "tile_skew",
     _BASE.rstrip()
@@ -10272,129 +8779,6 @@ def q_neardup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CASE WHEN n_cand > 0 THEN ROUND(CAST(n_hit AS DOUBLE) / "
             "CAST(n_cand AS DOUBLE), 6) END AS precision",
         )
-    )
-
-
-@query(
-    "lang_homophily",
-    _with(
-        f"lp AS ({_LINKED_PAGES_DUCK})",
-        _LK_CTE,
-        "hlang AS (SELECT CAST(regexp_extract(url, "
-        f"'{pagesops.HOST_RE}', 1) AS BIGINT) AS host, MIN(lang) AS "
-        f"lang FROM (SELECT {pagesops.URL_SQL} AS url, lang FROM "
-        "documents) u GROUP BY 1)",
-        "ed AS (SELECT ls.lang AS lang_s, ld.lang AS lang_d FROM lk "
-        "JOIN hlang ls ON ls.host = lk.src "
-        "JOIN hlang ld ON ld.host = lk.dst)",
-        "tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS e FROM ed)",
-        "ol AS (SELECT lang_s AS lang, CAST(COUNT(*) AS BIGINT) AS "
-        "outd FROM ed GROUP BY 1)",
-        "il AS (SELECT lang_d AS lang, CAST(COUNT(*) AS BIGINT) AS "
-        "ind FROM ed GROUP BY 1)",
-        "sl AS (SELECT lang_s AS lang, CAST(COUNT(*) AS BIGINT) AS "
-        "same FROM ed WHERE lang_s = lang_d GROUP BY 1)",
-        "m AS (SELECT ol.lang, ol.outd, COALESCE(il.ind, 0) AS ind, "
-        "COALESCE(sl.same, 0) AS same FROM ol "
-        "LEFT JOIN il ON il.lang = ol.lang "
-        "LEFT JOIN sl ON sl.lang = ol.lang)",
-        "acc AS (SELECT CAST(SUM(same * e - outd * ind) AS BIGINT) AS "
-        "qnum, CAST(SUM(same) AS BIGINT) AS n_same FROM m "
-        "CROSS JOIN tot)",
-    )
-    + "SELECT tot.e AS n_edges, acc.n_same, "
-    "ROUND(CAST(acc.n_same AS DOUBLE) / CAST(tot.e AS DOUBLE), 6) AS "
-    "same_share, acc.qnum, "
-    "ROUND(CAST(acc.qnum AS DOUBLE) / (CAST(tot.e AS DOUBLE) * "
-    "CAST(tot.e AS DOUBLE)), 6) AS homophily_q "
-    "FROM tot CROSS JOIN acc",
-)
-def q_lang_homophily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Language homophily of the host link graph — directed categorical
-    assortativity Q = sum_l (e_ll/E - (out_l/E)(in_l/E)): does a host
-    link within its own language more than a degree-preserving null
-    predicts?  The cross-subsystem row joining the link graph
-    (pagerank/hits family) to the text attributes (langid family) —
-    raw same-language share overstates homophily when one language
-    dominates; Q subtracts exactly that (the langid_kappa argument
-    applied to edges).  Host language = MIN(lang) over the host's
-    documents (deterministic label; majority voting would need a
-    tie-break anyway).
-
-    Exactness: multiplied through by E^2, Q's accumulator
-    sum(same_l * E - out_l * in_l) is an exact BIGINT (langs with no
-    outbound edges contribute exactly 0 — e_ll <= min(out, in) —
-    so the out-lang universe is complete); same_share and Q are ONE
-    division each, ROUND(,6).  At 10^12-edge scale the accumulator
-    needs the NMI double-product treatment (documented, not silent).
-
-    Scale shape: edges shuffle once onto the host-lang map (hosts-
-    sized, broadcastable), then everything folds to the langs-sized
-    census."""
-    from rgr_pdal_topo_spark.operators import linkgraph
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    pages = pagesops.linked_pages_df(spark, sf_dir)
-    lk = linkgraph.extract_links(pages)
-    docs = load_table(spark, sf_dir, "documents")
-    hlang = (
-        docs.selectExpr(f"{pagesops.URL_SQL} AS url", "lang")
-        .select(
-            F.regexp_extract(F.col("url"), pagesops.HOST_RE, 1)
-            .cast("long")
-            .alias("host"),
-            "lang",
-        )
-        .groupBy("host")
-        .agg(F.min("lang").alias("lang"))
-    )
-    ed = (
-        lk.join(
-            F.broadcast(hlang.withColumnRenamed("lang", "lang_s")),
-            F.col("host") == F.col("src"),
-        )
-        .drop("host")
-        .join(
-            F.broadcast(hlang.withColumnRenamed("lang", "lang_d")),
-            F.col("host") == F.col("dst"),
-        )
-        .select("lang_s", "lang_d")
-    )
-    tot = ed.agg(F.count(F.lit(1)).cast("long").alias("e"))
-    ol = ed.groupBy(F.col("lang_s").alias("lang")).agg(
-        F.count(F.lit(1)).cast("long").alias("outd")
-    )
-    il = ed.groupBy(F.col("lang_d").alias("lang")).agg(
-        F.count(F.lit(1)).cast("long").alias("ind")
-    )
-    sl = (
-        ed.filter(F.col("lang_s") == F.col("lang_d"))
-        .groupBy(F.col("lang_s").alias("lang"))
-        .agg(F.count(F.lit(1)).cast("long").alias("same"))
-    )
-    m = (
-        ol.join(il, "lang", "left")
-        .join(sl, "lang", "left")
-        .select(
-            "outd",
-            F.coalesce("ind", F.lit(0)).alias("ind"),
-            F.coalesce("same", F.lit(0)).alias("same"),
-        )
-    )
-    acc = m.crossJoin(F.broadcast(tot)).agg(
-        F.sum(
-            F.col("same") * F.col("e") - F.col("outd") * F.col("ind")
-        ).cast("long").alias("qnum"),
-        F.sum("same").cast("long").alias("n_same"),
-    )
-    return tot.crossJoin(F.broadcast(acc)).selectExpr(
-        "e AS n_edges",
-        "n_same",
-        "ROUND(CAST(n_same AS DOUBLE) / CAST(e AS DOUBLE), 6) AS "
-        "same_share",
-        "qnum",
-        "ROUND(CAST(qnum AS DOUBLE) / (CAST(e AS DOUBLE) * "
-        "CAST(e AS DOUBLE)), 6) AS homophily_q",
     )
 
 
@@ -10789,102 +9173,6 @@ def q_dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_removable",
             "ROUND(CAST(n_removable AS DOUBLE) / CAST(n_docs AS DOUBLE), "
             "6) AS dedup_rate",
-        )
-    )
-
-
-_HILL_K = 50  #: top-k order statistics in the Hill estimator
-
-
-@query(
-    "hill_tail",
-    _with(
-        f"lp AS ({_LINKED_PAGES_DUCK})",
-        _LK_CTE,
-        "i AS (SELECT dst AS host, CAST(COUNT(*) AS BIGINT) AS deg "
-        "FROM lk GROUP BY dst)",
-        "r AS (SELECT deg, CAST(ROW_NUMBER() OVER (ORDER BY deg DESC, "
-        "host ASC) AS BIGINT) AS rk FROM i)",
-        f"kk AS (SELECT CAST(LEAST({_HILL_K}, COUNT(*) - 1) AS BIGINT) "
-        "AS k FROM r)",
-        "xk AS (SELECT r.deg AS degk FROM r CROSS JOIN kk "
-        "WHERE r.rk = kk.k + 1)",
-        "acc AS (SELECT CAST(SUM("
-        + _KL_LQ.format(x="r.deg")
-        + " - " + _KL_LQ.format(x="xk.degk")
-        + ") AS BIGINT) AS a FROM r CROSS JOIN kk CROSS JOIN xk "
-        "WHERE r.rk <= kk.k)",
-    )
-    + "SELECT kk.k, xk.degk, acc.a AS acc, "
-    "ROUND(CAST(acc.a AS DOUBLE) / (CAST(kk.k AS DOUBLE) * 8192.0), 6) "
-    "AS hill_h, "
-    "CASE WHEN acc.a > 0 THEN ROUND(CAST(kk.k AS DOUBLE) * 8192.0 / "
-    "CAST(acc.a AS DOUBLE), 6) END AS tail_alpha "
-    "FROM kk CROSS JOIN xk CROSS JOIN acc",
-)
-def q_hill_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hill estimator of the power-law tail index of host in-degrees:
-    H_k = (1/k) sum over the top-k order statistics of ln(x_i /
-    x_{k+1}), alpha = 1/H_k — the order-statistics MLE, preferred over
-    an OLS fit of the rank-frequency plot (OLS over-weights the noisy deep
-    tail; Hill reads only the extreme order statistics, which is what
-    "is this crawl scale-free" actually asks) and indegree_gini's
-    single-number concentration.
-
-    Exactness: degrees are integers, each ln q13-pinned (the
-    pinned-ln doctrine), so the accumulator sum(lq(x_i) - lq(x_k1))
-    over the top-k is an exact BIGINT; H and alpha are ONE guarded
-    division each, ROUND(,6).  k = min(50, n-1) so the estimator is
-    defined on small graphs; ties rank deterministically (deg DESC,
-    host ASC).
-
-    Scale shape: the degree fold and the rank window run over the
-    HOSTS-sized table (the indegree_gini shape); everything after is
-    scalars."""
-    from pyspark.sql import Window
-
-    from rgr_pdal_topo_spark.operators import linkgraph
-
-    pages = pagesops.linked_pages_df(spark, sf_dir)
-    lk = linkgraph.extract_links(pages)
-    i = lk.groupBy(F.col("dst").alias("host")).agg(
-        F.count(F.lit(1)).cast("long").alias("deg")
-    )
-    r = i.select(
-        "deg",
-        F.row_number().over(
-            Window.orderBy(F.col("deg").desc(), F.col("host").asc())
-        ).cast("long").alias("rk"),
-    )
-    kk = r.agg(
-        F.least(F.lit(_HILL_K), F.count(F.lit(1)) - 1)
-        .cast("long").alias("k")
-    )
-    xk = r.crossJoin(F.broadcast(kk)).filter(
-        F.col("rk") == F.col("k") + 1
-    ).select(F.col("deg").alias("degk"))
-    acc = (
-        r.crossJoin(F.broadcast(kk))
-        .crossJoin(F.broadcast(xk))
-        .filter(F.col("rk") <= F.col("k"))
-        .agg(
-            F.sum(
-                F.expr(_KL_LQ.format(x="deg"))
-                - F.expr(_KL_LQ.format(x="degk"))
-            ).cast("long").alias("a")
-        )
-    )
-    return (
-        kk.crossJoin(F.broadcast(xk))
-        .crossJoin(F.broadcast(acc))
-        .selectExpr(
-            "k",
-            "degk",
-            "a AS acc",
-            "ROUND(CAST(a AS DOUBLE) / (CAST(k AS DOUBLE) * 8192.0), 6) "
-            "AS hill_h",
-            "CASE WHEN a > 0 THEN ROUND(CAST(k AS DOUBLE) * 8192.0 / "
-            "CAST(a AS DOUBLE), 6) END AS tail_alpha",
         )
     )
 

@@ -14,18 +14,40 @@ def _df(spark, pts):
     return spark.createDataFrame(pts, "pid long, lon double, lat double")
 
 
-def test_parent_is_two_bit_shift(spark):
-    df = _df(spark, [(1, -3.2, 41.7), (2, 179.9, -88.0), (3, 0.0, 0.0)])
+def test_parent_is_two_bit_shift(spark, ddb):
+    """Parent containment, and a NULL coordinate gives a NULL id (not a
+    clamped edge cell) in the Column and the DuckDB spellings alike."""
+    pts = [(1, -3.2, 41.7), (2, 179.9, -88.0), (3, 0.0, 0.0),
+           (4, None, None), (5, 10.0, None), (6, None, 10.0)]
+    df = _df(spark, pts)
     out = df.select(
+        "pid",
         cells.quad_cell(F.col("lon"), F.col("lat"), 8).alias("c8"),
         cells.quad_cell(F.col("lon"), F.col("lat"), 7).alias("c7"),
         cells.quad_parent(
             cells.quad_cell(F.col("lon"), F.col("lat"), 8)
         ).alias("p8"),
+        cells.s2_cell(F.col("lon"), F.col("lat")).alias("s2"),
     ).collect()
     for r in out:
+        if r.pid >= 4:
+            assert (r.c8, r.c7, r.p8, r.s2) == (None, None, None, None)
+            continue
         assert r.p8 == r.c7  # containment: parent id == coarser encoding
         assert r.c8 >> 2 == r.c7
+
+    values = ", ".join(
+        f"({pid}, {'NULL' if lon is None else lon}, "
+        f"{'NULL' if lat is None else lat})" for pid, lon, lat in pts
+    )
+    src = ("SELECT pid, CAST(lon AS DOUBLE) AS lon, CAST(lat AS DOUBLE) AS "
+           f"lat FROM (VALUES {values}) v(pid, lon, lat)")
+    quad = dict(ddb.execute(
+        f"SELECT pid, {cells.quad_cell_sql('lon', 'lat', 8)} FROM ({src}) p"
+    ).fetchall())
+    s2 = dict(ddb.execute(cells.s2_cell_sql_query(src, "pid")).fetchall())
+    assert quad == {r.pid: r.c8 for r in out}
+    assert s2 == {r.pid: r.s2 for r in out}
 
 
 def test_marker_bit_makes_ids_resolution_unique(spark):

@@ -809,39 +809,6 @@ def test_bag_jaccard_separates_repetition_from_identity(spark):
     assert got[(0, 2)] == (4, 4, 1.0)
 
 
-def test_rendezvous_hrw_guarantees(spark):
-    """The two HRW contracts on a real id range: (1) growing 16 -> 17
-    moves ONLY docs whose new assignment is the new shard — no doc
-    moves between old shards; (2) assignment under 16 shards equals
-    rendezvous_assign, so the report's 'stay' set is consistent; plus
-    the moved fraction lands near the theoretical 1/17."""
-    from rgr_pdal_topo_spark.operators import sharding
-
-    docs = spark.range(0, 3000).withColumnRenamed("id", "doc_id")
-    a16 = {
-        r.doc_id: r.shard
-        for r in sharding.rendezvous_assign(docs, 16).collect()
-    }
-    a17 = {
-        r.doc_id: r.shard
-        for r in sharding.rendezvous_assign(docs, 17).collect()
-    }
-    moved = {d for d in a16 if a16[d] != a17[d]}
-    assert all(a17[d] == 16 for d in moved)  # movers go ONLY to the new shard
-    frac = len(moved) / len(a16)
-    assert 0.03 < frac < 0.09  # ~1/17 = 0.059
-    # the report aggregates exactly this
-    rep = {
-        r.shard: (r.n_docs, r.n_moved)
-        for r in sharding.rendezvous_report(docs, 16).collect()
-    }
-    assert sum(n for n, _ in rep.values()) == 3000
-    assert sum(m for _, m in rep.values()) == len(moved)
-    # balance: no shard is pathologically hot (uniform-ish weights)
-    sizes = [n for n, _ in rep.values()]
-    assert max(sizes) < 2.2 * min(sizes)
-
-
 def test_good_turing_hand_computed(spark):
     """Four docs with engineered shingle document-frequencies:
     'a b c d' appears verbatim in docs 0 and 1 (its 2 shingles have

@@ -624,26 +624,6 @@ def test_ccnet_buckets_matches_ntile_replay(spark):
     assert {b for (_, b) in got} == {1, 2, 3}
 
 
-def test_link_geo_bands_partitions_edges(spark):
-    """The band histogram partitions the host-graph edge set exactly:
-    SUM(n_links) == |distinct edges|, bands are within 0..3, and
-    min <= max within every band with band edges respected."""
-    from rgr_pdal_topo_spark.operators import linkgraph, pages
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    sf = "/root/testdata/sf0.001"
-    n_edges = (
-        linkgraph.extract_links(pages.linked_pages_df(spark, sf)).count()
-    )
-    rows = QUERIES["link_geo_bands"](spark, sf).collect()
-    assert sum(r.n_links for r in rows) == n_edges
-    lo = {0: 0.0, 1: 100.0, 2: 1000.0, 3: 5000.0}
-    hi = {0: 100.0, 1: 1000.0, 2: 5000.0, 3: float("inf")}
-    for r in rows:
-        assert 0 <= r.band <= 3
-        assert lo[r.band] <= r.min_km <= r.max_km < hi[r.band]
-
-
 def _write_events(spark, rows, d=None):
     import os
     import tempfile

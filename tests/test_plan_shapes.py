@@ -515,18 +515,6 @@ def test_quantile_sketch_windows_over_buckets_only(spark):
     assert plan.count("HashAggregate") >= 4  # two folds, partial+final
 
 
-def test_anchor_topk_uses_window_group_limit(spark):
-    """The per-host top-k must push the k-cut below the shuffle (Spark's
-    WindowGroupLimit: <= k rows per host per partition move), and the
-    link-count agg must combine map-side."""
-    from rgr_pdal_topo_spark.operators import linkgraph, pages
-
-    lp = pages.linked_pages_df(spark, SF_DIR)
-    plan = _plan(linkgraph.top_anchors(linkgraph.extract_anchor_pairs(lp)))
-    assert plan.count("WindowGroupLimit") == 2      # Partial + Final
-    assert "partial_count" in plan
-
-
 def test_dup_spans_windows_partition_by_doc(spark):
     """The island merge must never use a global (single-partition)
     window: every Window node partitions by doc_id."""
@@ -663,54 +651,6 @@ def test_grid_mean_salted_two_phase_agg(spark):
     agg_lines = [l for l in plan.splitlines() if "HashAggregate" in l]
     assert any("_salt" in l for l in agg_lines)
     assert any("_salt" not in l and "cell_row" in l for l in agg_lines)
-
-
-def test_host_distance_scans_parquet_once_total(spark):
-    """BFS pays the page scan ONCE: the edge list is checkpoint-pinned
-    before iteration, so the 4-round plan contains zero parquet
-    rescans (an unpinned edge list would re-extract the crawl every
-    superstep) and no Python anywhere."""
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    plan = _plan(QUERIES["host_distance"](spark, SF_DIR))
-    assert "EvalPython" not in plan
-    assert max(plan.count("Scan parquet"), plan.count("FileScan")) == 0
-
-
-def test_cocitation_pair_join_is_equi_join(spark):
-    """The co-citation self-join must be a hash/merge EQUI-join on src
-    (the a.dst < b.dst triangle as a post-filter) — never a nested-loop
-    or cartesian pairing, which would be quadratic in the edge count
-    rather than in per-source fan-out."""
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    plan = _plan(QUERIES["cocitation_hosts"](spark, SF_DIR))
-    assert "CartesianProduct" not in plan
-    assert "NestedLoop" not in plan
-    assert "EvalPython" not in plan
-
-
-def test_lpa_scans_parquet_once_total(spark):
-    """LPA's symmetrized edge list is checkpoint-pinned before the
-    rounds: zero parquet rescans across 3 supersteps, no Python."""
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    plan = _plan(QUERIES["lpa_communities"](spark, SF_DIR))
-    assert "EvalPython" not in plan
-    assert max(plan.count("Scan parquet"), plan.count("FileScan")) == 0
-
-
-def test_link_geo_bands_joins_centroids_not_crawl(spark):
-    """The distance join pairs the EDGE list with the host-sized
-    centroid table (equi-joins only, no cartesian/nested-loop, no
-    Python) and the band fold ends in one partial+final agg."""
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    plan = _plan(QUERIES["link_geo_bands"](spark, SF_DIR))
-    assert "CartesianProduct" not in plan
-    assert "NestedLoop" not in plan
-    assert "EvalPython" not in plan
-    assert "partial_count" in plan or "partial" in plan.lower()
 
 
 def test_tile_pyramid_single_scan_all_zooms(spark):

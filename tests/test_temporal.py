@@ -382,46 +382,6 @@ def test_decayed_counts_hand_computed(spark):
     )
 
 
-def test_crawl_schedule_composes_solo_stages(spark):
-    """The composed scheduler must equal its two verified solo stages
-    joined: trust_q from trustrank_int, score_q from decayed_counts
-    over the fetch log, priority the recomputed shared spelling."""
-    from rgr_pdal_topo_spark.operators import linkgraph as lg
-    from rgr_pdal_topo_spark.queries import QUERIES, _TR_SEEDS
-
-    sf = SF_DIR
-    got = QUERIES["crawl_schedule"](spark, sf).toPandas().set_index(
-        "host"
-    )
-    tr = (
-        lg.trustrank_int(
-            lg.extract_links(pages.linked_pages_df(spark, sf)),
-            n_seeds=_TR_SEEDS,
-        )
-        .toPandas()
-        .set_index("host")
-    )
-    fetches = pages.fetch_log_df(spark, sf).select(
-        F.regexp_extract("url", pages.HOST_RE, 1)
-        .cast("long")
-        .alias("host"),
-        (F.col("warc_epoch") / F.lit(86400)).cast("long").alias("day"),
-    )
-    fresh = (
-        temporal.decayed_counts(fetches, group="host", day_col="day")
-        .toPandas()
-        .set_index("host")
-    )
-    assert len(got) > 0
-    for host, row in got.iterrows():
-        assert row["trust_q"] == tr.loc[host, "trust_q"]
-        assert row["score_q"] == fresh.loc[host, "score_q"]
-        exp = round(
-            row["trust_q"] / (1 << 30) * (row["score_q"] / (1 << 40)), 6
-        )
-        assert row["priority"] == exp
-
-
 def test_emerging_hotspots_planted_classes(spark):
     """The two planted ramps classify as their classes (pure up-ramp
     S = 21, var18 = 798 -> z ~ 3.15 emerging; down-ramp diminishing),
