@@ -62,16 +62,11 @@ HEADLINE = [
     "hex_ring_density",
     "pages_pipeline",
     "line_dedup",
-    # (cms_heavy_hitters is absent: its shared shingle-id input is
-    # localCheckpoint-pinned at build time)
     "crawl_latest",
-    "hll_distinct",
-    "views_asof",
-    # (dedup_keep, hll_overlap, dup_spans, dsir_weights, bigram_ppl and
-    # winnow_fingerprints are absent: connected components, the sketch
-    # register folds, and the positional-shingle / bigram streams
-    # localCheckpoint inside the builder)
-    "hll_by_lang",
+    # (dedup_keep, dup_spans, dsir_weights, bigram_ppl and
+    # winnow_fingerprints are absent: connected components and the
+    # positional-shingle / bigram streams localCheckpoint inside the
+    # builder)
     "source_quality",
     "token_packing",
     "release_pipeline",
@@ -94,35 +89,26 @@ HEADLINE = [
     "slope_area_fit",
     "crawl_segment_diff",
     "morans_i",
-    "session_peaks",
     "semivariogram",
     "ripley_k",
     "trade_volumes",
     "adaptive_grid",
     "geary_c",
     "editdist_pairs",
-    "session_overlaps",
     "market_share",
-    "kmv_distinct",
-    "shingle_novelty",
     "pareto_skyline",
     "setsim_pairs",
-    "session_coverage",
     "hilbert_locality",
     "robust_outliers",
     "containment_pairs",
-    "traffic_autocorr",
     "seasonal_anomalies",
     "bag_jaccard",
-    "trend_mk",
     "dbscan_grid",
     # (hand times its OWN marginal plan over the shared memoized flow
     # pass)
     "hand",
     "geomorphons",
     "zonal_overlay",
-    "decayed_activity",
-    "emerging_hotspots",
     "geo_language_map",
     "good_turing",
     # (cost_distance is absent: the relaxation rounds checkpoint per

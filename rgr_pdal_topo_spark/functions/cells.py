@@ -263,25 +263,27 @@ def s2_cell_np(lon: np.ndarray, lat: np.ndarray,
     return face * (1 << (2 * level)) + pos
 
 
+def _s2_series(lon: pd.Series, lat: pd.Series, interleave: str) -> pd.Series:
+    """s2_cell_np over one Arrow batch; NULL where either coordinate is
+    NULL or NaN, as in s2_cell (a NULL double arrives here as NaN)."""
+    x = lon.to_numpy(dtype="float64")
+    y = lat.to_numpy(dtype="float64")
+    ok = ~(np.isnan(x) | np.isnan(y))
+    out = pd.Series(pd.NA, index=lon.index, dtype="Int64")
+    out[ok] = s2_cell_np(x[ok], y[ok], interleave=interleave)
+    return out
+
+
 @pandas_udf(LongType())
 def s2_cell_hilbert_udf(lon: pd.Series, lat: pd.Series) -> pd.Series:
     """Arrow-batched S2-style encoder with Hilbert position-on-curve."""
-    return pd.Series(
-        s2_cell_np(
-            lon.to_numpy(dtype="float64"), lat.to_numpy(dtype="float64"),
-            interleave="hilbert",
-        )
-    )
+    return _s2_series(lon, lat, "hilbert")
 
 
 @pandas_udf(LongType())
 def s2_cell_udf(lon: pd.Series, lat: pd.Series) -> pd.Series:
     """Arrow-batched S2-style encoder (the north-star's pandas-UDF shape)."""
-    return pd.Series(
-        s2_cell_np(
-            lon.to_numpy(dtype="float64"), lat.to_numpy(dtype="float64")
-        )
-    )
+    return _s2_series(lon, lat, "morton")
 
 
 def s2_cell(lon: Column, lat: Column, level: int = S2_LEVEL) -> Column:

@@ -595,9 +595,9 @@ def ccnet_buckets(documents: DataFrame) -> DataFrame:
     Scale shape — NO per-language global window: a textbook
     ``NTILE(3) OVER (PARTITION BY lang ORDER BY ...)`` funnels each
     language's every row through one task, a wall at 10^9+ docs/lang.
-    Instead the global rank is assembled two-level, the views_asof
-    bucket trick: (a) per-(lang, key) counts -> cumulative offsets via
-    a window over the TINY aggregated key table, (b) row_number
+    Instead the global rank is assembled two-level, so no window ever
+    orders a whole language: (a) per-(lang, key) counts -> cumulative
+    offsets via a window over the TINY aggregated key table, (b) row_number
     partitioned by (lang, key) — bounded partitions (docs sharing one
     quantized per-token nll; heavy only if the corpus is itself
     degenerate), (c) rank = offset + within-rank, and bucket =

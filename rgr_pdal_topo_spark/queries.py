@@ -1099,175 +1099,23 @@ def _funnel_frames(spark: SparkSession, sf_dir: str) -> list:
     return frames
 
 
-#: sessionize's gap threshold, reused so session_peaks' intervals are
-#: exactly the sessions the sessionize query counts
-_SESSION_GAP = "INTERVAL 30 MINUTE"
-
-
-# The gap-30min session intervals, shared verbatim by session_peaks
-# and session_overlaps (single-spelling discipline).
-_SESS_IV_CTES = (
-    "g AS (SELECT user_id, ts, event_id, "
-    "CASE WHEN LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, "
-    "event_id) IS NULL THEN 0 WHEN ts > LAG(ts) OVER (PARTITION BY "
-    f"user_id ORDER BY ts, event_id) + {_SESSION_GAP} THEN 1 "
-    "ELSE 0 END AS is_new FROM events)",
-    "s AS (SELECT user_id, ts, SUM(is_new) OVER (PARTITION BY "
-    "user_id ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED "
-    "PRECEDING AND CURRENT ROW) AS session_id FROM g)",
-    "iv AS (SELECT user_id, CAST(session_id AS BIGINT) AS session_id, "
-    "MIN(ts) AS s_start, MAX(ts) AS s_end FROM s "
-    "GROUP BY user_id, session_id)",
-)
-
-
-@query(
-    "session_peaks",
-    _with(
-        *_SESS_IV_CTES,
-        "del AS (SELECT s_start AS t, 1 AS d FROM iv UNION ALL "
-        "SELECT s_end + INTERVAL 1 MICROSECOND, -1 FROM iv)",
-        "dd AS (SELECT t, CAST(SUM(d) AS BIGINT) AS d, "
-        "CAST(COUNT(*) AS BIGINT) AS nc FROM del GROUP BY t)",
-        "r AS (SELECT t, nc, d, CAST(SUM(d) OVER (ORDER BY t ROWS "
-        "BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) "
-        "AS run FROM dd)",
-    )
-    + "SELECT DATE_TRUNC('hour', t) AS bucket_ts, "
-    "CAST(SUM(nc) AS BIGINT) AS n_changes, "
-    "CAST(MAX(run) AS BIGINT) AS peak, "
-    "CAST(MAX_BY(run, t) AS BIGINT) AS end_level "
-    "FROM r GROUP BY DATE_TRUNC('hour', t)",
-)
-def q_session_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Peak concurrent sessions per hour — the sweep-line interval
-    statistic ("how many sessions are open right now") every web
-    operations dashboard carries, over exactly the gap-30min sessions
-    the sessionize query counts.  An interval is open on the CLOSED
-    range [first event, last event]; boundary deltas are +-1 integers,
-    so every level is an exact BIGINT and there is no rounding policy
-    anywhere.
-
-    The engine runs operators/temporal.py sweep_concurrency — the
-    two-level segmented prefix scan (within-hour running sums over
-    hour-partitioned windows + a cross-hour carry cumulated over the
-    HOUR ROLLUP, Blelloch's two-phase scan in DataFrame algebra) — the
-    scale spelling of the global running sum Spark cannot otherwise
-    distribute; the oracle replays it as the naive single global
-    window (ORDER BY t) and MAX/MAX_BY per hour, so the parity row
-    proves the decomposition's carry logic, not just the arithmetic.
-
-    Scale shape: deltas aggregate per distinct instant map-side; the
-    only unbounded window runs over the hour rollup (cardinality =
-    hours, not boundaries); within-hour partitions are bounded by the
-    bucket width.  Ties are impossible by construction (deltas are
-    pre-aggregated per instant)."""
-    from rgr_pdal_topo_spark.operators import temporal
-
-    iv = _session_intervals(spark, sf_dir)
-    return temporal.sweep_concurrency(iv, "s_start", "s_end", bucket="hour")
-
-
-def _session_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The gap-30min session intervals (user_id, session_id, s_start,
-    s_end) — the engine twin of _SESS_IV_CTES, shared by session_peaks
-    and session_overlaps."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-    from pyspark.sql import Window
-
-    ev = load_table(spark, sf_dir, "events")
-    wuo = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    lag = F.lag("ts").over(wuo)
-    g = ev.select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.when(lag.isNull(), 0)
-        .when(F.col("ts") > lag + F.expr(_SESSION_GAP), 1)
-        .otherwise(0)
-        .alias("is_new"),
-    )
-    s = g.withColumn(
-        "session_id",
-        F.sum("is_new").over(wuo.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    return s.groupBy("user_id", "session_id").agg(
-        F.min("ts").alias("s_start"), F.max("ts").alias("s_end")
-    )
-
-
-@query(
-    "session_overlaps",
-    _with(
-        *_SESS_IV_CTES,
-        "ii AS (SELECT user_id, session_id, epoch_us(s_start) AS t0, "
-        "epoch_us(s_end) AS t1 FROM iv)",
-    )
-    + "SELECT a.user_id AS user_id_a, a.session_id AS session_id_a, "
-    "b.user_id AS user_id_b, b.session_id AS session_id_b, "
-    "CAST(LEAST(a.t1, b.t1) - GREATEST(a.t0, b.t0) AS BIGINT) AS ov_us "
-    "FROM ii a JOIN ii b ON a.t0 <= b.t1 AND b.t0 <= a.t1 "
-    "AND (a.user_id < b.user_id OR (a.user_id = b.user_id "
-    "AND a.session_id < b.session_id))",
-)
-def q_session_overlaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Every pair of concurrently-open sessions with the exact overlap
-    duration — the INTERVAL RANGE JOIN (operators/temporal.py:
-    interval_self_join), the missing member of the temporal-join family
-    next to views_asof (as-of) and session_peaks (sweep concurrency):
-    co-presence / co-browsing analysis needs the PAIRS, not just the
-    concurrency level.  Over exactly the gap-30min sessions the
-    sessionize query counts (shared _SESS_IV_CTES).
-
-    The engine replicates each interval to the hour buckets it spans
-    and keeps a pair only in the bucket of the LATER start, so every
-    overlapping pair meets EXACTLY once on a hash equi-join — the
-    pip_partitioned cover-cell trick in time.  The oracle spells the
-    textbook range join (the plan Spark would execute as a nested-loop
-    product), so the parity row proves the bucket decomposition, not
-    just the arithmetic.
-
-    Exactness: all-integer microsecond arithmetic (epoch_us /
-    unix_micros, the views_asof spelling); closed intervals, touching
-    endpoints overlap with ov_us = 0.
-
-    Scale shape: one bounded explode (sessions are gap-bounded, ≤ 3
-    hour-buckets each), one hash equi-join on the bucket key
-    (plan-pinned: no cartesian/BNLJ), map-side pair projection — and
-    a flash-crowd bucket salts like any hot join key."""
-    from rgr_pdal_topo_spark.operators import temporal
-
-    iv = _session_intervals(spark, sf_dir)
-    return temporal.interval_self_join(
-        iv, ["user_id", "session_id"], "s_start", "s_end", bucket_s=3600
-    )
-
-
-_DAY_US = 86_400_000_000
-
-# Planted diurnal overlay for traffic_autocorr: the synthetic event
-# stream is time-uniform (every lag's r ~ 0), and a periodicity
-# detector is only evidenced when SOME period is real and its
-# neighbours are not — so both engines add a deterministic NARROW
-# pulse (+30 counts at UTC hour 0 of every day) to the DENSE hourly
-# series before correlating.  Narrow matters: a wide square wave has a
-# triangular ACF (lags 23/25 score almost as high as 24), while a
-# 1-hour pulse overlaps itself only at multiples of 24 — the sharp
-# fingerprint the neighbour-lag test pins.  Same spelling both sides.
-_ACF_LAGS = (1, 2, 6, 12, 23, 24, 25, 168)
-def _acf_boost_sql(t: str) -> str:
+# Planted diurnal overlay: the synthetic event stream is time-uniform,
+# so both engines add a deterministic NARROW pulse (+30 counts at UTC
+# hour 0 of every day) to the DENSE hourly series.  A 1-hour pulse
+# repeats only at multiples of 24, so seasonal differencing at lag 24
+# cancels it exactly.  Same spelling both sides.
+def _diurnal_pulse_sql(t: str) -> str:
     return f"CASE WHEN (({t}) % 24) = 0 THEN 30 ELSE 0 END"
 
 
-# The dense pulsed hourly series — ONE spelling shared by
-# traffic_autocorr (which detects the pulse's period) and
-# seasonal_anomalies (which removes it by seasonal differencing).
+# The dense pulsed hourly series seasonal_anomalies differences — ONE
+# spelling for both engines.
 _DENSE_HOURLY_CTES = (
     "hc AS (SELECT epoch_us(ts) // 3600000000 AS t, "
     "CAST(COUNT(*) AS BIGINT) AS c FROM events GROUP BY 1)",
     "bounds AS (SELECT MIN(t) AS h0, MAX(t) AS h1 FROM hc)",
     "dense AS (SELECT u.t AS t, COALESCE(hc.c, 0) + "
-    f"{_acf_boost_sql('u.t')} AS c FROM bounds, "
+    f"{_diurnal_pulse_sql('u.t')} AS c FROM bounds, "
     "LATERAL (SELECT unnest(generate_series(h0, h1)) AS t) u "
     "LEFT JOIN hc ON hc.t = u.t)",
 )
@@ -1292,55 +1140,9 @@ def _dense_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
             "t",
             (
                 F.coalesce(F.col("c"), F.lit(0))
-                + F.expr(_acf_boost_sql("t"))
+                + F.expr(_diurnal_pulse_sql("t"))
             ).alias("c"),
         )
-    )
-
-
-@query(
-    "traffic_autocorr",
-    _with(
-        *_DENSE_HOURLY_CTES,
-        "lg AS (SELECT unnest(["
-        + ", ".join(str(x) for x in _ACF_LAGS)
-        + "]) AS lag)",
-        "p AS (SELECT lag, a.c AS x, b.c AS y FROM dense a "
-        "CROSS JOIN lg JOIN dense b ON b.t = a.t + lag)",
-        "m AS (SELECT lag, CAST(COUNT(*) AS BIGINT) AS n, "
-        "CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy, "
-        "CAST(SUM(x * y) AS BIGINT) AS sxy, "
-        "CAST(SUM(x * x) AS BIGINT) AS sxx, "
-        "CAST(SUM(y * y) AS BIGINT) AS syy FROM p GROUP BY lag)",
-    )
-    + "SELECT CAST(lag AS BIGINT) AS lag, n, "
-    "ROUND(CAST(n * sxy - sx * sy AS DOUBLE) / "
-    "sqrt(CAST((n * sxx - sx * sx) * (n * syy - sy * sy) AS DOUBLE)), 6) "
-    "AS r FROM m",
-)
-def q_traffic_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Traffic periodicity detection: Pearson autocorrelation of the
-    DENSE hourly event-count series at integer lags
-    (operators/temporal.py:series_autocorr) — the daily/weekly-rhythm
-    detector behind capacity planning and anomaly baselines.  The lag
-    menu brackets the planted period (23/24/25) so a green row shows
-    PERIOD detection, not smoothness: r spikes at lag 24 and stays
-    near 0 at 23 and 25 (pinned in tests).  Zero-filling matters and
-    is pinned too — on a sparse series the lag join skips gaps and the
-    statistic silently stops being an autocorrelation.
-
-    Exactness: all five accumulators and the three moment combinations
-    are exact BIGINTs; sqrt is correctly rounded under IEEE-754
-    (unlike ln/exp) so both engines build bit-identical doubles from
-    identical integers; one guarded division.
-
-    Scale shape: the series is an hour-grain rollup (10^4 rows/year);
-    lag replication and the shifted equi-joins run on that bounded
-    aggregate, never raw events."""
-    from rgr_pdal_topo_spark.operators import temporal
-
-    return temporal.series_autocorr(
-        _dense_hourly(spark, sf_dir), list(_ACF_LAGS)
     )
 
 
@@ -1368,13 +1170,11 @@ _ANOM_RELS = (100, 400)
 def q_seasonal_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seasonal-naive anomaly detection over the pulsed hourly series:
     residual r_t = c_t - c_(t-24) removes EXACTLY the daily pattern
-    traffic_autocorr detects (the planted period-24 pulse cancels —
-    the two queries are one narrative: detect the period, then
-    difference it away), and alarms fire where |r - med(r)| exceeds 5
-    robust MADs.  Two anomalies are planted (+40 at hours 100 and 400
-    after start); seasonal differencing honestly ECHOES each one 24
-    hours later with opposite sign (the classic artifact — pinned in
-    tests, not hidden).
+    (the planted period-24 pulse cancels), and alarms fire where
+    |r - med(r)| exceeds 5 robust MADs.  Two anomalies are planted
+    (+40 at hours 100 and 400 after start); seasonal differencing
+    honestly ECHOES each one 24 hours later with opposite sign (the
+    classic artifact — pinned in tests, not hidden).
 
     Exactness: residuals are integers; the median/MAD fence reuses the
     counting-sort selection (textstats.grouped_median2) so nothing
@@ -1421,60 +1221,6 @@ def q_seasonal_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("t", "c", "r")
     )
-
-
-@query(
-    "session_coverage",
-    _with(
-        *_SESS_IV_CTES,
-        "ii AS (SELECT epoch_us(s_start) AS t0, epoch_us(s_end) AS t1 "
-        "FROM iv WHERE epoch_us(s_end) > epoch_us(s_start))",
-        "ev AS (SELECT t, SUM(d) AS dd FROM (SELECT t0 AS t, 1 AS d "
-        "FROM ii UNION ALL SELECT t1, -1 FROM ii) u GROUP BY t)",
-        "sc AS (SELECT t, SUM(dd) OVER (ORDER BY t) AS lvl, "
-        "LEAD(t) OVER (ORDER BY t) AS nt FROM ev)",
-        "seg AS (SELECT t, nt FROM sc WHERE lvl > 0 AND nt IS NOT NULL)",
-        f"sp AS (SELECT u.day, GREATEST(t, u.day * {_DAY_US}) AS a, "
-        f"LEAST(nt, (u.day + 1) * {_DAY_US}) AS b FROM seg, LATERAL ("
-        f"SELECT unnest(generate_series(t // {_DAY_US}, "
-        f"(nt - 1) // {_DAY_US})) AS day) u)",
-        "cov AS (SELECT day, CAST(SUM(b - a) AS BIGINT) AS covered_us "
-        "FROM sp GROUP BY day)",
-        f"st AS (SELECT epoch_us(s_start) // {_DAY_US} AS day, "
-        "CAST(COUNT(*) AS BIGINT) AS n_started FROM iv GROUP BY 1)",
-    )
-    + "SELECT COALESCE(cov.day, st.day) AS day, "
-    "CAST(COALESCE(n_started, 0) AS BIGINT) AS n_started, "
-    "CAST(COALESCE(covered_us, 0) AS BIGINT) AS covered_us, "
-    f"ROUND(CAST(COALESCE(covered_us, 0) AS DOUBLE) / {_DAY_US}.0, 6) "
-    "AS cov_ratio FROM cov FULL OUTER JOIN st ON st.day = cov.day",
-)
-def q_session_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-day covered wall-clock of the UNION of all users' gap-30min
-    sessions (operators/temporal.py:union_coverage) — the
-    Lebesgue-measure / service-utilization statistic: the INTEGRAL of
-    (concurrency > 0), completing the sweep family next to
-    session_peaks (the level's peak) and session_overlaps (the pairs).
-    Overlapping and touching sessions merge for free under the
-    net-delta-per-instant spelling; zero-length sessions contribute 0
-    coverage but still count as started.
-
-    The oracle is the textbook GLOBAL sweep (one window over all
-    boundaries, segments split at midnights); the engine never orders
-    globally — intervals clip to hour buckets (bounded fan-out), each
-    bucket sweeps independently because the clipped level provably
-    returns to 0 at the bucket edge, and days roll up from hours.  The
-    parity row therefore certifies the bucket decomposition of the
-    measure, not just the arithmetic.
-
-    Exactness: all-integer microsecond arithmetic end to end; the one
-    float is covered_us / day_length — a correctly-rounded division of
-    exact integers, ROUND(,6)-guarded.  A day covered only by a
-    session that STARTED the previous day keeps n_started = 0 via the
-    full outer join (and vice versa for zero-length-only days)."""
-    from rgr_pdal_topo_spark.operators import temporal
-
-    return temporal.daily_coverage(_session_intervals(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -6951,8 +6697,6 @@ def q_flow_main_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from rgr_pdal_topo_spark.operators import sketches  # noqa: E402
-
 # CDX fetch-log oracle: the capture fan-out replays the engine's
 # explode(sequence) with a bounded VALUES cross join; content/epoch
 # expressions are the SHARED pagesops fragments so the two spellings
@@ -6995,9 +6739,8 @@ _FETCHES_F_DUCK = _FETCHES_DUCK.replace(
 def q_crawl_segment_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cross-crawl content diff by set operators: the capture
     log split into even/odd fetch segments, each segment's DISTINCT
-    content digests compared with INTERSECT / EXCEPT — the exact twin
-    of hll_overlap's sketch ESTIMATE of the same question ("how much
-    of the new crawl is already in the old one"), and the U-family's
+    content digests compared with INTERSECT / EXCEPT — "how much of
+    the new crawl is already in the old one", and the U-family's
     set-operator surface (Spark intersect/subtract plan as left-semi /
     left-anti joins on the digest key).  All counts exact BIGINTs;
     bodies never travel — only md5 digests.
@@ -7054,376 +6797,6 @@ def q_crawl_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pagesops.consolidate_crawl(pagesops.fetch_log_df(spark, sf_dir))
 
 
-from rgr_pdal_topo_spark.operators import temporal  # noqa: E402
-
-_VIEWS_DUCK = (
-    f"SELECT {pagesops.URL_SQL} AS url, "
-    f"{pagesops.view_epoch_sql('o.off')} AS view_epoch FROM documents "
-    "CROSS JOIN (VALUES "
-    + ", ".join(f"({o})" for o in pagesops.VIEW_OFFSETS)
-    + ") o(off)"
-)
-
-
-@query(
-    "views_asof",
-    _with(f"fetches AS ({_FETCHES_DUCK})", f"views AS ({_VIEWS_DUCK})")
-    + "SELECT v.url, v.view_epoch, f.warc_epoch AS capture_epoch, "
-    "md5(f.text) AS live_digest FROM views v ASOF LEFT JOIN fetches f "
-    "ON v.url = f.url AND v.view_epoch >= f.warc_epoch",
-)
-def q_views_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-series as-of join (operators/temporal.py asof_join): each
-    page view picks up the capture that was live at view time —
-    "which content version did this reader see", the canonical
-    backward-inclusive as-of (same semantics as pandas merge_asof /
-    DuckDB ASOF JOIN, which IS the oracle's spelling).  Views before a
-    url's first capture stay NULL (left semantics).
-
-    Plan: zero join nodes — both sides union tagged, ONE shuffle on
-    url, a running last-non-null carry over (ts, tag) order; the
-    bucketed two-level variant (bucket_width) bounds partition size
-    under timeline skew and is pinned output-identical in pytest.
-    SURVEY §2 listed as-of joins as a gap until this operator."""
-    views = pagesops.view_log_df(spark, sf_dir)
-    fetches = pagesops.fetch_log_df(spark, sf_dir).select(
-        "url", "warc_epoch", F.md5("text").alias("live_digest")
-    )
-    out = temporal.asof_join(
-        views, fetches, key="url", left_ts="view_epoch",
-        right_ts="warc_epoch", payload=["live_digest"],
-    )
-    return out.select(
-        "url", "view_epoch",
-        F.col("matched_ts").alias("capture_epoch"), "live_digest",
-    )
-
-
-# HLL oracle: registers replayed over the same portable 60-bit shingle
-# ids the dedup family uses; bin() prints minimal binary digits in both
-# engines, and the estimate is one division of an exact BIGINT into one
-# shared double literal (see operators/sketches.py for the margins).
-_HLL_REGS_DUCK = (
-    f"SELECT tid % {sketches.HLL_M} AS reg, "
-    f"MAX(CASE WHEN tid // {sketches.HLL_M} = 0 THEN {sketches.HLL_K} "
-    f"ELSE {sketches.HLL_K} - LENGTH(bin(tid // {sketches.HLL_M})) END) "
-    f"AS rho FROM dt GROUP BY tid % {sketches.HLL_M}"
-)
-
-
-@query(
-    "hll_distinct",
-    _with(
-        f"d AS ({_DOCTOKS_DUCK})",
-        f"sh AS ({_SHINGLES_DUCK})",
-        f"dt AS MATERIALIZED ({_SHID_DUCK})",
-        f"regs AS ({_HLL_REGS_DUCK})",
-    )
-    + "SELECT (SELECT CAST(COUNT(DISTINCT tid) AS BIGINT) FROM dt) AS "
-    "n_exact, CAST(COUNT(*) AS BIGINT) AS n_regs_set, "
-    f"CAST(SUM((1::BIGINT << ({sketches.HLL_K} - rho))) + "
-    f"({sketches.HLL_M} - COUNT(*)) * (1::BIGINT << {sketches.HLL_K}) "
-    "AS BIGINT) AS harmonic_q, "
-    f"ROUND({sketches.HLL_EST_NUM!r} / CAST("
-    f"SUM((1::BIGINT << ({sketches.HLL_K} - rho))) + "
-    f"({sketches.HLL_M} - COUNT(*)) * (1::BIGINT << {sketches.HLL_K}) "
-    "AS DOUBLE), 4) AS est FROM regs",
-)
-def q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HyperLogLog-256 distinct-shingle cardinality
-    (operators/sketches.py): the job-sizing sketch for the dedup/ANN
-    family, folded from the RAW shingle stream with no distinct — maxima
-    are multiplicity-blind, so the only shuffle is <= 256 (reg, rho) int
-    rows per partition (vs the full-universe shuffle the n_exact
-    verification column pays).  Sketch state is integer-exact (BIGINT
-    harmonic mass on the 2^53 grid); the estimate is one
-    correctly-rounded division, identical in both engines.  Registers
-    merge by elementwise max (sketches.hll_merge) — the property that
-    makes this a per-snapshot manifest statistic at 100 TB.  Estimate
-    lands within the published 1.04/sqrt(256) ~ 6.5% stderr at every
-    test scale (-5.9% at sf0.01, -6.6% at sf0.1)."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return sketches.hll_summary(sketches.shingle_tid_stream(docs))
-
-
-# KMV oracle: bottom-k over the SAME distinct 60-bit shingle-id stream
-# the HLL row folds; the estimate is one division of the exact BIGINT
-# k-th minimum into one shared double literal ((k-1) * 2^60, exactly
-# representable), with the small-set escape spelled as the same CASE.
-@query(
-    "kmv_distinct",
-    _with(
-        f"d AS ({_DOCTOKS_DUCK})",
-        f"sh AS ({_SHINGLES_DUCK})",
-        f"dt AS MATERIALIZED ({_SHID_DUCK})",
-        f"bot AS (SELECT DISTINCT tid FROM dt ORDER BY tid "
-        f"LIMIT {sketches.KMV_K})",
-    )
-    + "SELECT (SELECT CAST(COUNT(DISTINCT tid) AS BIGINT) FROM dt) AS "
-    "n_exact, CAST(COUNT(*) AS BIGINT) AS k_used, "
-    "CAST(MAX(tid) AS BIGINT) AS kth_q, "
-    f"CASE WHEN COUNT(*) < {sketches.KMV_K} "
-    "THEN CAST(COUNT(*) AS DOUBLE) "
-    f"ELSE ROUND({sketches.KMV_EST_NUM!r} / CAST(MAX(tid) AS DOUBLE), 4) "
-    "END AS est FROM bot",
-)
-def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KMV / bottom-k distinct-shingle cardinality
-    (operators/sketches.py kmv_fold/kmv_summary): the k = 64 smallest
-    distinct portable shingle ids estimate the universe as
-    (k-1) * 2^60 / kth_min — the third cardinality sketch beside
-    HLL-256 (hll_distinct) and the one whose state doubles as a uniform
-    SAMPLE of the distinct keys (the survivors join back to payloads;
-    registers can't) and supports set intersection (theta-sketch
-    algebra), which is why real manifest layers persist both.
-
-    Exactness: everything up to the single guarded division is BIGINT
-    (60-bit ids, exact k-th minimum); the estimator numerator is ONE
-    shared double literal and the small-set escape (fewer than k
-    distinct -> exact count) is the same CASE in both engines.
-
-    Scale shape: the per-partition fold holds a bounded (<= 64)
-    sorted-unique int64 array across Arrow batches, so at most k rows
-    per partition ever shuffle — the full-universe distinct exists only
-    as the n_exact verification column.  Estimate lands within the
-    ~1/sqrt(k-2) = 12.7% stderr at every test scale."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return sketches.kmv_summary(sketches.shingle_tid_stream(docs))
-
-
-# Count-min oracle: counters replayed with the same split-half
-# permutations the minhash family uses (j < CMS_D rows, % CMS_W fold);
-# the top-20 cut is made deterministic by the (exact_n DESC, shingle)
-# tiebreak in BOTH engines.
-_CMS_PERMS_DUCK = "SELECT * FROM (VALUES " + ", ".join(
-    f"({j}, {dedup.MINHASH_A[j]}, {dedup.MINHASH_C[j]}, "
-    f"{dedup.MINHASH_B[j]})"
-    for j in range(sketches.CMS_D)
-) + ") AS p(j, a, c, b)"
-_CMS_HASH_DUCK = (
-    "((a * (tid % 2147483648) + c * (tid // 2147483648) + b) % "
-    f"{dedup.MINHASH_P}) % {sketches.CMS_W}"
-)
-
-
-@query(
-    "cms_heavy_hitters",
-    _with(
-        f"d AS ({_DOCTOKS_DUCK})",
-        f"shr AS ({_SHINGLES_RAW_DUCK})",
-        "tids AS MATERIALIZED (SELECT shingle, "
-        f"{dedup.horner_hash_sql('h')} AS tid FROM "
-        "(SELECT shingle, md5(shingle) AS h FROM shr) hh)",
-        f"perms AS ({_CMS_PERMS_DUCK})",
-        f"cms AS MATERIALIZED (SELECT j, {_CMS_HASH_DUCK} AS h, "
-        "CAST(COUNT(*) AS BIGINT) AS n FROM tids CROSS JOIN perms "
-        "GROUP BY 1, 2)",
-        "top AS (SELECT shingle, MIN(tid) AS tid, "
-        "CAST(COUNT(*) AS BIGINT) AS exact_n FROM tids GROUP BY shingle "
-        "ORDER BY exact_n DESC, shingle LIMIT 20)",
-    )
-    + "SELECT t.shingle, t.exact_n, CAST(MIN(c.n) AS BIGINT) AS est_n "
-    "FROM top t CROSS JOIN perms p JOIN cms c ON c.j = p.j AND c.h = "
-    "((p.a * (t.tid % 2147483648) + p.c * (t.tid // 2147483648) + p.b) "
-    f"% {dedup.MINHASH_P}) % {sketches.CMS_W} "
-    "GROUP BY t.shingle, t.exact_n",
-)
-def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-min frequency sketch + heavy hitters
-    (operators/sketches.py cms_fold/cms_lookup): the top-20 corpus
-    shingles' exact counts next to their CMS estimates from 4 x 4096
-    integer counters — deliberately far smaller than the ~16k-shingle
-    universe, so the overestimates are real (est_n >= exact_n always;
-    +0..9 here) and the sketch's additive-error contract is what the
-    oracle verifies, not a vacuous identity.  Counters fold map-side
-    from the RAW occurrence stream (no distinct, like hll_fold) and the
-    bounded counter table BROADCASTS for the probe — the exact top-20
-    side (a full groupBy) exists only as the verification column, the
-    sketch is the 100 TB path."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    d = docs.select(dedup._tok_array().alias("toks"))
-    raw = d.select(
-        F.explode(
-            dedup._shingle_array(F.col("toks"), dedup.SHINGLE_K,
-                                 distinct=False)
-        ).alias("shingle")
-    )
-    # feeds the counter fold AND the exact side: materialize once (the
-    # oracle marks the same CTE MATERIALIZED)
-    withids = raw.select(
-        "shingle", dedup._portable_id(F.md5("shingle")).alias("tid")
-    ).localCheckpoint(eager=True)
-    cms = sketches.cms_fold(withids)
-    top = (
-        withids.groupBy("shingle")
-        .agg(F.min("tid").alias("tid"), F.count(F.lit(1)).alias("exact_n"))
-        .orderBy(F.desc("exact_n"), "shingle")
-        .limit(20)
-    )
-    return sketches.cms_lookup(cms, top).select(
-        "shingle", "exact_n", "est_n"
-    )
-
-
-# Histogram-quantile oracle: one fold spelling at two granularities
-# (bucket = n_chars // 2^QSK_SHIFT for the sketch, the value itself for
-# the truth); k is the integer type-1 order statistic ceil(q * N).
-_QSK_W = 1 << sketches.QSK_SHIFT
-_QSK_QS = (250, 500, 750, 900, 990)
-
-
-@query(
-    "quantile_sketch",
-    _with(
-        "nn AS (SELECT COUNT(*) AS n FROM documents)",
-        "qs AS (SELECT q_milli, (CAST(q_milli AS BIGINT) * nn.n + 999) "
-        "// 1000 AS k FROM (VALUES "
-        + ", ".join(f"({q})" for q in _QSK_QS)
-        + ") q(q_milli) CROSS JOIN nn)",
-        f"hb AS (SELECT n_chars // {_QSK_W} AS bucket, COUNT(*) AS n "
-        "FROM documents GROUP BY 1)",
-        "hc AS (SELECT bucket, SUM(n) OVER (ORDER BY bucket) AS cum "
-        "FROM hb)",
-        "eb AS (SELECT n_chars AS bucket, COUNT(*) AS n FROM documents "
-        "GROUP BY 1)",
-        "ec AS (SELECT bucket, SUM(n) OVER (ORDER BY bucket) AS cum "
-        "FROM eb)",
-        "est AS (SELECT q_milli, k, MIN(bucket) AS b FROM qs JOIN hc "
-        "ON hc.cum >= qs.k GROUP BY q_milli, k)",
-        "ex AS (SELECT q_milli, MIN(bucket) AS exact FROM qs JOIN ec "
-        "ON ec.cum >= qs.k GROUP BY q_milli)",
-    )
-    + "SELECT est.q_milli, CAST(est.k AS BIGINT) AS k, "
-    f"CAST(b * {_QSK_W} AS BIGINT) AS est_lo, "
-    f"CAST(b * {_QSK_W} + {_QSK_W - 1} AS BIGINT) AS est_hi, "
-    "CAST(exact AS BIGINT) AS exact FROM est "
-    "JOIN ex ON ex.q_milli = est.q_milli",
-)
-def q_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Histogram quantile sketch (operators/sketches.py hist_fold /
-    quantile_sketch_summary): p25/p50/p75/p90/p99 of document length
-    from a bounded equi-width histogram — the third classic sketch
-    beside HLL (distinct) and CMS (frequency), and the one that replaces
-    a global sort at 100 TB.  The fold is one partial+final groupBy
-    whose output is <= domain/2^QSK_SHIFT rows; the quantile read's
-    window runs over THAT bucket table, never the data.  The exact
-    order statistics (the verification columns) use the SAME fold at
-    shift 0, so sketch and truth cannot drift; the sketch brackets every
-    exact value within one bucket width (est_lo <= exact <= est_hi,
-    asserted in pytest).  All integer arithmetic end to end."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return sketches.quantile_sketch_summary(
-        docs.select("n_chars"), "n_chars", list(_QSK_QS)
-    )
-
-
-@query(
-    "hll_by_lang",
-    _with(
-        "dl AS (SELECT doc_id, lang, list_filter(string_split(text, ' '), "
-        "t -> t <> '') AS toks FROM documents)",
-        "shl AS (SELECT DISTINCT doc_id, lang, toks[u.pos] || ' ' || "
-        "toks[u.pos+1] || ' ' || toks[u.pos+2] AS shingle FROM dl, "
-        "LATERAL (SELECT unnest(generate_series(1, "
-        "greatest(len(toks) - 2, 0))) AS pos) u)",
-        "dtl AS MATERIALIZED (SELECT DISTINCT doc_id, lang, "
-        f"{dedup.horner_hash_sql('h')} AS tid FROM "
-        "(SELECT doc_id, lang, md5(shingle) AS h FROM shl) hh)",
-        f"regsl AS (SELECT lang, tid % {sketches.HLL_M} AS reg, "
-        f"MAX(CASE WHEN tid // {sketches.HLL_M} = 0 THEN {sketches.HLL_K} "
-        f"ELSE {sketches.HLL_K} - LENGTH(bin(tid // {sketches.HLL_M})) END) "
-        f"AS rho FROM dtl GROUP BY lang, tid % {sketches.HLL_M})",
-        "ex AS (SELECT lang, CAST(COUNT(DISTINCT tid) AS BIGINT) "
-        "AS n_exact FROM dtl GROUP BY lang)",
-        "fl AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_regs_set, "
-        f"CAST(SUM((1::BIGINT << ({sketches.HLL_K} - rho))) + "
-        f"({sketches.HLL_M} - COUNT(*)) * (1::BIGINT << {sketches.HLL_K}) "
-        "AS BIGINT) AS harmonic_q FROM regsl GROUP BY lang)",
-    )
-    + "SELECT ex.lang, ex.n_exact, fl.n_regs_set, fl.harmonic_q, "
-    f"ROUND({sketches.HLL_EST_NUM!r} / CAST(fl.harmonic_q AS DOUBLE), 4) "
-    "AS est FROM ex JOIN fl USING (lang)",
-)
-def q_hll_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped HLL — distinct shingles PER LANGUAGE in one register fold
-    (operators/sketches.py hll_fold_grouped / hll_summary_grouped):
-    ``groupBy(lang, reg).max(rho)``, <= 256 int rows per group crossing
-    the wire — the GROUP BY approx_count_distinct shape, and exactly how
-    per-partition NDV columns decompose (the manifest tier's per-file
-    sketches are this fold keyed by file).  The verification column pays
-    the per-group distinct the sketch avoids; masses are exact BIGINTs,
-    the estimate one correctly-rounded division per group."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return sketches.hll_summary_grouped(
-        sketches.shingle_tid_stream_by(docs, "lang")
-    )
-
-
-# Manifest-NDV oracle: the merged per-file registers must equal a global
-# HLL fold over the source column — replayed here over DISTINCT doc_id
-# values hashed exactly as the engine hashes them (md5 of the integer's
-# string rendering).
-_NDV_TIDS_DUCK = (
-    f"SELECT {dedup.horner_hash_sql('h')} AS tid FROM (SELECT "
-    "md5(CAST(doc_id AS STRING)) AS h FROM (SELECT DISTINCT doc_id "
-    "FROM documents) d) hh"
-)
-
-
-@query(
-    "manifest_ndv",
-    _with(f"dt AS ({_NDV_TIDS_DUCK})", f"regs AS ({_HLL_REGS_DUCK})")
-    + "SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM dt) AS n_exact, "
-    "CAST(COUNT(*) AS BIGINT) AS n_regs_set, "
-    f"CAST(SUM((1::BIGINT << ({sketches.HLL_K} - rho))) + "
-    f"({sketches.HLL_M} - COUNT(*)) * (1::BIGINT << {sketches.HLL_K}) "
-    "AS BIGINT) AS harmonic_q, "
-    f"ROUND({sketches.HLL_EST_NUM!r} / CAST("
-    f"SUM((1::BIGINT << ({sketches.HLL_K} - rho))) + "
-    f"({sketches.HLL_M} - COUNT(*)) * (1::BIGINT << {sketches.HLL_K}) "
-    "AS DOUBLE), 4) AS est FROM regs",
-)
-def q_manifest_ndv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Puffin-style NDV table statistics (sources/manifest.py
-    _build_ndv_sketches / ndv_estimate; Iceberg stores per-file theta
-    sketches in Puffin files for exactly this): documents are committed
-    across 8 files with an HLL-256 sketch of doc_id per file, and the
-    table's distinct count is then answered from the MANIFEST alone —
-    per-file registers merge by elementwise max (no data scan, no
-    double counting across files), the join-sizing statistic a
-    10^6-file catalog cannot afford to compute by scanning.  The oracle
-    replays a global HLL fold over the source column; merge-equals-fold
-    is the law that makes the per-file decomposition exact, so the
-    manifest-derived registers hash identically."""
-    from rgr_pdal_topo_spark.sources import manifest as man
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    root = _manifest_scratch("spark_graft_manifest_ndv")
-    docs = load_table(spark, sf_dir, "documents")
-    man.commit(docs, root, ["n_chars"], n_files=8, ndv_cols=["doc_id"])
-    est, merged = man.ndv_estimate(root, "doc_id")
-    mass = sum(
-        1 << (sketches.HLL_K - rho) for rho in merged.values()
-    ) + (sketches.HLL_M - len(merged)) * (1 << sketches.HLL_K)
-    n_exact = docs.agg(
-        F.count_distinct("doc_id").alias("n")
-    ).collect()[0]["n"]
-    return spark.createDataFrame(
-        [(int(n_exact), len(merged), int(mass), float(est))],
-        "n_exact long, n_regs_set long, harmonic_q long, est double",
-    )
-
-
 @query(
     "dedup_keep",
     "WITH RECURSIVE "
@@ -7470,151 +6843,6 @@ def q_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified = jc.filter(F.col("jaccard") >= 0.5).select("doc_a", "doc_b")
     comp = dedup.duplicate_components(verified)
     return dedup.survivor_stats(docs, comp, "lang")
-
-
-def _hll_regs_over(src: str) -> str:
-    """HLL register fold replay over any (tid) CTE — the parametric twin
-    of _HLL_REGS_DUCK (which reads the fixed ``dt``)."""
-    return (
-        f"SELECT tid % {sketches.HLL_M} AS reg, "
-        f"MAX(CASE WHEN tid // {sketches.HLL_M} = 0 THEN {sketches.HLL_K} "
-        f"ELSE {sketches.HLL_K} - LENGTH(bin(tid // {sketches.HLL_M})) END) "
-        f"AS rho FROM {src} GROUP BY tid % {sketches.HLL_M}"
-    )
-
-
-def _hll_harmonic_duck(src: str) -> str:
-    """Exact-BIGINT harmonic mass of a register CTE (empty registers
-    contribute 2^53 arithmetically)."""
-    return (
-        f"SELECT CAST(SUM((1::BIGINT << ({sketches.HLL_K} - rho))) + "
-        f"({sketches.HLL_M} - COUNT(*)) * (1::BIGINT << {sketches.HLL_K}) "
-        f"AS BIGINT) AS h FROM {src}"
-    )
-
-
-@query(
-    "hll_overlap",
-    _with(
-        f"d AS ({_DOCTOKS_DUCK})",
-        f"sh AS ({_SHINGLES_DUCK})",
-        f"dt AS MATERIALIZED ({_SHID_DUCK})",
-        "ta AS MATERIALIZED (SELECT DISTINCT tid FROM dt "
-        "WHERE doc_id % 2 = 0)",
-        "tb AS MATERIALIZED (SELECT DISTINCT tid FROM dt "
-        "WHERE doc_id % 2 = 1)",
-        f"ra AS ({_hll_regs_over('ta')})",
-        f"rb AS ({_hll_regs_over('tb')})",
-        "ru AS (SELECT reg, MAX(rho) AS rho FROM (SELECT * FROM ra "
-        "UNION ALL SELECT * FROM rb) u GROUP BY reg)",
-        f"ma AS ({_hll_harmonic_duck('ra')})",
-        f"mb AS ({_hll_harmonic_duck('rb')})",
-        f"mu AS ({_hll_harmonic_duck('ru')})",
-    )
-    + "SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM ta) AS n_exact_a, "
-    "(SELECT CAST(COUNT(*) AS BIGINT) FROM tb) AS n_exact_b, "
-    "(SELECT CAST(COUNT(*) AS BIGINT) FROM ta JOIN tb USING (tid)) "
-    "AS n_exact_inter, "
-    "ma.h AS harmonic_a, mb.h AS harmonic_b, mu.h AS harmonic_u, "
-    f"ROUND({sketches.HLL_EST_NUM!r} / CAST(ma.h AS DOUBLE) + "
-    f"{sketches.HLL_EST_NUM!r} / CAST(mb.h AS DOUBLE) - "
-    f"{sketches.HLL_EST_NUM!r} / CAST(mu.h AS DOUBLE), 4) AS est_inter "
-    "FROM ma, mb, mu",
-)
-def q_hll_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-crawl overlap estimation by HLL inclusion-exclusion
-    (operators/sketches.py hll_overlap_summary): the corpus split into
-    two "crawl segments" (even / odd doc_id), each segment's distinct
-    shingle set sketched independently, the union sketch formed by the
-    MERGE LAW (elementwise register max — no rescan), and
-    |A ∩ B| estimated as est(A) + est(B) - est(A ∪ B).  This is the
-    pre-dedup planning pass at 100 TB: "how much of the new crawl is
-    already in the old one" from two manifest-resident sketches, before
-    committing to the cross-crawl near-dup join.  The three harmonic
-    masses are exact BIGINTs (the hashed verification surface); the
-    single float is three identical correctly-rounded divisions summed
-    in one spelled order, ROUND(,4)-guarded."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return sketches.hll_overlap_summary(
-        sketches.shingle_tid_stream(docs.filter("doc_id % 2 = 0")),
-        sketches.shingle_tid_stream(docs.filter("doc_id % 2 = 1")),
-    )
-
-
-@query(
-    "shingle_novelty",
-    _with(
-        f"d AS ({_DOCTOKS_DUCK})",
-        f"sh AS ({_SHINGLES_DUCK})",
-        f"dt AS MATERIALIZED ({_SHID_DUCK})",
-        "fo AS (SELECT tid, MIN(doc_id) AS first_doc FROM dt "
-        "GROUP BY tid)",
-        "nb AS (SELECT first_doc // 10 AS batch, "
-        "CAST(COUNT(*) AS BIGINT) AS n_new FROM fo "
-        "GROUP BY first_doc // 10)",
-        "tb AS (SELECT doc_id // 10 AS batch, "
-        "CAST(COUNT(*) AS BIGINT) AS n_occ FROM dt "
-        "GROUP BY doc_id // 10)",
-        "j AS (SELECT tb.batch AS batch, n_occ, "
-        "CAST(COALESCE(n_new, 0) AS BIGINT) AS n_new "
-        "FROM tb LEFT JOIN nb ON nb.batch = tb.batch)",
-    )
-    + "SELECT batch, n_occ, n_new, "
-    "CAST(SUM(n_new) OVER (ORDER BY batch ROWS BETWEEN UNBOUNDED "
-    "PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_vocab, "
-    "ROUND(CAST(n_new AS DOUBLE) / CAST(n_occ AS DOUBLE), 6) "
-    "AS novelty_rate FROM j",
-)
-def q_shingle_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shingle novelty per 10-doc ingest batch: how many of the
-    batch's distinct 3-gram shingles were never seen in ANY earlier
-    batch (first-occurrence credit), the cumulative vocabulary curve
-    (Heaps' law empirically), and the per-batch novelty rate — the
-    EXACT twin of hll_overlap's sketched "how much of the new crawl is
-    new" planning question, and the saturation signal that tells a
-    100 TB ingest when additional crawling stops paying.
-
-    Exactness: all-integer (per-doc-distinct portable shingle ids;
-    first occurrence = MIN(doc_id); batch = integer division — Spark
-    DIV, DuckDB //, identical because doc_id is never negative, where
-    truncation and floor agree); the rate is one division of two
-    integer-valued doubles.
-
-    Scale shape: one groupBy(tid) with map-side combine assigns first
-    occurrences (ids only — bodies never shuffle), two batch-grain
-    rollups, and the cumulative window runs over the BATCH-sized
-    table (cardinality = ingest batches — at production grain these
-    are crawl segments, hundreds; if batches outgrow one partition
-    the sweep-concurrency carry decomposition applies)."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-    from pyspark.sql import Window
-
-    docs = load_table(spark, sf_dir, "documents")
-    dt = sketches.shingle_tid_stream_by(docs, key="doc_id")
-    fo = dt.groupBy("tid").agg(F.min("doc_id").alias("first_doc"))
-    nb = fo.groupBy(F.expr("first_doc DIV 10").alias("batch")).agg(
-        F.count(F.lit(1)).alias("n_new")
-    )
-    tb = dt.groupBy(F.expr("doc_id DIV 10").alias("batch")).agg(
-        F.count(F.lit(1)).alias("n_occ")
-    )
-    j = tb.join(nb, "batch", "left").select(
-        "batch",
-        "n_occ",
-        F.coalesce(F.col("n_new"), F.lit(0)).cast("long").alias("n_new"),
-    )
-    w = Window.orderBy("batch").rowsBetween(Window.unboundedPreceding, 0)
-    return j.select(
-        "batch",
-        "n_occ",
-        "n_new",
-        F.sum("n_new").over(w).cast("long").alias("cum_vocab"),
-        F.expr(
-            "ROUND(CAST(n_new AS DOUBLE) / CAST(n_occ AS DOUBLE), 6)"
-        ).alias("novelty_rate"),
-    )
 
 
 @query(
@@ -7807,52 +7035,6 @@ def q_pareto_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     return textstats.pareto_skyline(docs)
-
-
-@query(
-    "trend_mk",
-    _with(
-        "daily AS (SELECT event_type, CAST(CAST(ts AS DATE) - "
-        "DATE '1970-01-01' AS BIGINT) AS d, CAST(COUNT(*) AS BIGINT) "
-        "AS c FROM events GROUP BY 1, 2)",
-        "nd AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n "
-        "FROM daily GROUP BY 1)",
-        "pr AS (SELECT a.event_type, CASE WHEN b.c > a.c THEN 1 "
-        "WHEN b.c < a.c THEN -1 ELSE 0 END AS sgn, "
-        "CAST(FLOOR(CAST(b.c - a.c AS DOUBLE) / "
-        "CAST(b.d - a.d AS DOUBLE) * 8192 + 0.5) AS BIGINT) AS sq "
-        "FROM daily a JOIN daily b ON a.event_type = b.event_type "
-        "AND a.d < b.d)",
-        "tg AS (SELECT event_type, CAST(SUM(t * (t - 1) * (2 * t + 5)) "
-        "AS BIGINT) AS tie_term FROM (SELECT event_type, c, "
-        "CAST(COUNT(*) AS BIGINT) AS t FROM daily GROUP BY 1, 2) u "
-        "GROUP BY 1)",
-        "st AS (SELECT event_type, CAST(SUM(sgn) AS BIGINT) AS s_stat, "
-        "median(sq) / 8192.0 AS slope_ts FROM pr GROUP BY 1)",
-    )
-    + "SELECT nd.event_type, nd.n AS n_days, st.s_stat, "
-    "CAST(nd.n * (nd.n - 1) * (2 * nd.n + 5) - "
-    "COALESCE(tg.tie_term, 0) AS BIGINT) AS var18, st.slope_ts "
-    "FROM nd JOIN st USING (event_type) LEFT JOIN tg USING (event_type)",
-)
-def q_trend_mk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mann-Kendall trend test + Theil-Sen robust slope per event_type
-    over the daily count series (operators/temporal.py mann_kendall):
-    the nonparametric is-this-metric-drifting pair, robust where
-    slope_area_fit's OLS is not.  S and the tie-corrected 18xVar[S]
-    are pure integers; each pairwise slope is one correctly-rounded
-    division of integer-valued doubles pinned to the 2^-13 grid BEFORE
-    the median, so the median — (lo + hi) / 2 over the two middle
-    order statistics in the engine, DuckDB's native interpolating
-    median() in the oracle — is exact dyadic in both and the parity
-    row certifies the equivalence of the two median spellings on
-    integers.  Pairs are quadratic in distinct DAYS, not rows (a
-    10-year series is ~3.7k buckets); the heavy lift is the first
-    partial+final fold of the event stream into (type, day) counts."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    return temporal.mann_kendall(ev)
 
 
 @query(
@@ -8068,145 +7250,6 @@ def q_zonal_overlay(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("wmean", F.expr(_ZO_WMEAN))
 
 
-@query(
-    "decayed_activity",
-    _with(
-        "d AS (SELECT event_type, CAST(FLOOR(epoch(ts)) AS BIGINT) "
-        "// 86400 AS day FROM events)",
-        "ref AS (SELECT MAX(day) AS ref_day FROM d)",
-        "aged AS (SELECT event_type, ref_day - day AS age "
-        "FROM d CROSS JOIN ref)",
-        "wtd AS (SELECT event_type, CASE WHEN age <= 40 THEN "
-        "CAST(1 AS BIGINT) << CAST(40 - age AS INT) ELSE "
-        "CAST(0 AS BIGINT) END AS w FROM aged)",
-        "agg AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS "
-        "n_events, CAST(SUM(CASE WHEN w > 0 THEN 1 ELSE 0 END) "
-        "AS BIGINT) AS n_live, CAST(SUM(w) AS BIGINT) AS score_q "
-        "FROM wtd GROUP BY event_type)",
-    )
-    + "SELECT event_type, n_events, n_live, score_q, "
-    f"CAST(score_q AS DOUBLE) / {float(1 << 40)!r} AS score FROM agg",
-)
-def q_decayed_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exponentially recency-decayed activity per event type
-    (operators/temporal.py decayed_counts) — the freshness ranking
-    behind re-crawl scheduling and trending detection, where a plain
-    COUNT weighs a year-old event like yesterday's.  One-day
-    half-life on a dyadic grid: each event weighs the exact BIGINT
-    2^(40 - age_days) (bit shift, no POWER()), ages measured back
-    from the data-derived newest day, >40-day tails weigh exactly 0
-    (n_live surfaces them).  The day-bucketing is what turns the
-    non-associative exponential decay into an exact associative SUM;
-    score is the one shared CAST / 2^40 spelling over the exact
-    integer.  One scalar broadcast + one projection + one
-    partial+final fold."""
-    from rgr_pdal_topo_spark.operators import temporal
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    return temporal.decayed_counts(load_table(spark, sf_dir, "events"))
-
-
-#: planted space-time ramps (the hotspot_cells planting discipline —
-#: the uniform synthetic fetch log has no organic trend, so the two
-#: structures the detector exists to find are planted in BOTH engines):
-#: 7 days of counts 1..7 (emerging) and 7..1 (diminishing), anchored at
-#: the fetch log's first epoch-day.
-_EH_D0 = pagesops.EPOCH0 // 86400
-_EH_PLANT = [
-    (sgn, k, j) for sgn in (1, -1) for k in range(7)
-    for j in range(k + 1 if sgn == 1 else 7 - k)
-]
-_EH_PLANT_DUCK = "(VALUES " + ", ".join(
-    f"({sgn}, {_EH_D0 + k})" for sgn, k, _ in _EH_PLANT
-) + ") pl(sgn, d)"
-#: z >= 2 significance, cross-multiplied all-integer:
-#: z^2 = 18 S^2 / var18 >= 4  <=>  9 S^2 >= 2 var18
-_EH_TREND_SQL = (
-    "CASE WHEN s_stat > 0 AND 9 * s_stat * s_stat >= 2 * var18 "
-    "THEN 'emerging' WHEN s_stat < 0 AND 9 * s_stat * s_stat >= "
-    "2 * var18 THEN 'diminishing' ELSE 'stable' END"
-)
-
-
-@query(
-    "emerging_hotspots",
-    _with(
-        *_GEO_CTES,
-        f"fetches AS ({_FETCHES_DUCK})",
-        f"gc AS (SELECT url, {cellfn.quad_cell_sql('lon', 'lat', 5)} "
-        "AS cell FROM geo)",
-        "ev AS (SELECT gc.cell, f.warc_epoch // 86400 AS d "
-        "FROM fetches f JOIN gc ON gc.url = f.url "
-        "UNION ALL SELECT CASE WHEN pl.sgn = 1 THEN "
-        + cellfn.quad_cell_sql("0.5", "0.5", 5)
-        + " ELSE "
-        + cellfn.quad_cell_sql("-0.5", "-0.5", 5)
-        + f" END AS cell, CAST(pl.d AS BIGINT) AS d FROM "
-        f"{_EH_PLANT_DUCK})",
-        "daily AS (SELECT cell, d, CAST(COUNT(*) AS BIGINT) AS c "
-        "FROM ev GROUP BY 1, 2)",
-        "nd AS (SELECT cell, CAST(COUNT(*) AS BIGINT) AS n FROM daily "
-        "GROUP BY 1)",
-        "pr AS (SELECT a.cell, CASE WHEN b.c > a.c THEN 1 "
-        "WHEN b.c < a.c THEN -1 ELSE 0 END AS sgn, "
-        "CAST(FLOOR(CAST(b.c - a.c AS DOUBLE) / "
-        "CAST(b.d - a.d AS DOUBLE) * 8192 + 0.5) AS BIGINT) AS sq "
-        "FROM daily a JOIN daily b ON a.cell = b.cell AND a.d < b.d)",
-        "tg AS (SELECT cell, CAST(SUM(t * (t - 1) * (2 * t + 5)) "
-        "AS BIGINT) AS tie_term FROM (SELECT cell, c, "
-        "CAST(COUNT(*) AS BIGINT) AS t FROM daily GROUP BY 1, 2) u "
-        "GROUP BY 1)",
-        "st AS (SELECT cell, CAST(SUM(sgn) AS BIGINT) AS s_stat, "
-        "median(sq) / 8192.0 AS slope_ts FROM pr GROUP BY 1)",
-        "mk AS (SELECT nd.cell, nd.n AS n_days, st.s_stat, "
-        "CAST(nd.n * (nd.n - 1) * (2 * nd.n + 5) - "
-        "COALESCE(tg.tie_term, 0) AS BIGINT) AS var18, st.slope_ts "
-        "FROM nd JOIN st USING (cell) LEFT JOIN tg USING (cell))",
-    )
-    + f"SELECT cell, n_days, s_stat, var18, slope_ts, {_EH_TREND_SQL} "
-    "AS trend FROM mk",
-)
-def q_emerging_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Emerging hot-spot analysis — the space-time composite GIS
-    suites ship as a headline tool: per res-5 quadkey cell, the
-    Mann-Kendall trend of the DAILY capture-count series from the CDX
-    fetch log joined to the geocoded pages, classified
-    emerging / diminishing / stable at the z >= 2 gate spelled
-    all-integer (9 S^2 >= 2 var18 — no sqrt, no float variance).
-    Composes three verified stages (geo extraction, fetch log,
-    mann_kendall with day_col) through the SAME shared CTE fragments;
-    two planted ramps (counts 1..7 up, 7..1 down — the hotspot_cells
-    planting discipline, since the uniform synthetic log has no
-    organic trend) guarantee both alarm classes fire.  Pairs are
-    quadratic in distinct DAYS per cell, never rows; the heavy lift
-    is the (cell, day) fold."""
-    from rgr_pdal_topo_spark.operators import temporal
-
-    geo = pagesops.geo_lonlat(spark, sf_dir).select(
-        "url",
-        cellfn.quad_cell(F.col("lon"), F.col("lat"), 5).alias("cell"),
-    )
-    fl = pagesops.fetch_log_df(spark, sf_dir).select(
-        "url", (F.col("warc_epoch") / 86400).cast("long").alias("day")
-    )
-    real = fl.join(geo, "url").select("cell", "day")
-    spark_plant = spark.createDataFrame(
-        [(sgn, _EH_D0 + k) for sgn, k, _ in _EH_PLANT],
-        "sgn int, day long",
-    ).select(
-        F.when(
-            F.col("sgn") == 1,
-            cellfn.quad_cell(F.lit(0.5), F.lit(0.5), 5),
-        )
-        .otherwise(cellfn.quad_cell(F.lit(-0.5), F.lit(-0.5), 5))
-        .alias("cell"),
-        "day",
-    )
-    ev = real.unionByName(spark_plant)
-    mk = temporal.mann_kendall(ev, group="cell", day_col="day")
-    return mk.withColumn("trend", F.expr(_EH_TREND_SQL))
-
-
 def _cost_rounds_ctes(rounds: int) -> list[str]:
     """Unrolled Bellman-Ford relaxations, bit-equal to
     flow.cost_distance by construction (all-integer MIN folds)."""
@@ -8366,8 +7409,7 @@ def q_good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
     count r* = (r+1) N_{r+1} / N_r — the smoothing estimator behind
     n-gram language models, and the principled answer to "how much of
     the NEXT document's shingle mass have we never seen" (the unseen
-    mass is N_1 / N — shingle_novelty's measured Heaps curve is the
-    empirical twin).  All counts exact BIGINTs (two partial+final
+    mass is N_1 / N).  All counts exact BIGINTs (two partial+final
     folds: type counts, then count-of-counts onto an r-domain-sized
     table); r* is ONE shared guarded division, NULL where N_{r+1} is
     empty (the raw estimator's gap — Gale-Sampson smooth over it;
@@ -9441,8 +8483,8 @@ DRIVER_WINDOW: list[str] = [
     "manifest_bbox_scan", "manifest_incremental",
     "pages_geocode",
     "dedup_clusters",
-    "crawl_latest", "views_asof", "cms_heavy_hitters",
-    "hll_overlap", "pip_pairs",
+    "crawl_latest", "grid_mean_salted", "pip_stats",
+    "pages_pip", "pip_pairs",
     "manifest_delete_scan", "manifest_bloom_scan", "pip_rtree",
     "hex_ring_density", "decontaminate", "repetition_stats",
     "url_canonicalize",

@@ -18,6 +18,13 @@ from pyspark.sql import SparkSession
 EAGER_JOB_TAG = "rgr-eager-build"
 
 
+def _default_driver_memory() -> str:
+    """16g, or half of physical memory where that is less: a heap the
+    host cannot back lets the JVM grow until the kernel kills it."""
+    phys_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 20
+    return f"{min(16 << 10, phys_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "rgr_pdal_topo_spark",
     master: str | None = None,
@@ -47,7 +54,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()),
+        )
         # Keep ANSI off to match Spark's historical arithmetic defaults,
         # but the engine must NOT depend on it either way: the driver's
         # verification session runs ANSI-on, so every query has to be

@@ -140,7 +140,6 @@ def commit(
     stat_cols: Sequence[str],
     n_files: int = 8,
     bloom_cols: Sequence[str] = (),
-    ndv_cols: Sequence[str] = (),
 ) -> int:
     """Append ``df`` to the table at ``root`` as a new snapshot.
 
@@ -166,7 +165,7 @@ def commit(
     """
     return _write_snapshot(
         df, root, stat_cols, n_files, [], "append",
-        bloom_cols=bloom_cols, ndv_cols=ndv_cols,
+        bloom_cols=bloom_cols,
     )
 
 
@@ -520,102 +519,6 @@ def _read_manifest(
     return m
 
 
-def _build_ndv_sketches(
-    spark: SparkSession,
-    schema: Any,
-    fields: Mapping[str, Any],
-    ddir: str,
-    ndv_cols: list[str],
-) -> dict[str, dict[str, Any]]:
-    """Per-file HyperLogLog-256 registers — Iceberg's Puffin NDV
-    statistics (theta sketches per file), re-expressed with the engine's
-    portable HLL (operators/sketches.py).  Registers merge by
-    elementwise max, so the table's (or any file subset's) distinct
-    count comes from the MANIFEST alone — no data scan, no double
-    counting across files, the statistic the optimizer wants for join
-    sizing at 10^6-file scale.
-
-    Built distributed like the blooms: one groupBy(file, reg) max(rho)
-    pass, at most 256 rows per (file, column) reach the driver; stored
-    sparse in the JSON entry (~KB).  Restricted to int/string columns
-    for the same reason as blooms: CAST AS STRING must render values
-    identically everywhere."""
-    from pyspark.sql import types as T
-
-    from rgr_pdal_topo_spark.operators import dedup, sketches
-
-    for c in ndv_cols:
-        if not isinstance(
-            fields[c],
-            (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-             T.StringType),
-        ):
-            raise ValueError(
-                f"ndv column {c!r} must be int or string (stable CAST "
-                "AS STRING rendering)"
-            )
-    back = spark.read.schema(schema).parquet(ddir)
-    out: dict[str, dict[str, Any]] = {}
-    for c in ndv_cols:
-        tid = dedup._portable_id(F.md5(F.col(c).cast("string")))
-        regs = (
-            back.filter(F.col(c).isNotNull())
-            .select(
-                F.input_file_name().alias("file"),
-                (tid % F.lit(sketches.HLL_M)).alias("reg"),
-                sketches._rho(
-                    F.shiftright(tid, sketches.HLL_P)
-                ).alias("rho"),
-            )
-            .groupBy("file", "reg")
-            .agg(F.max("rho").alias("rho"))
-            .collect()
-        )
-        for r in regs:
-            f = _normalize_file(r["file"])
-            out.setdefault(f, {}).setdefault(c, {})
-            out[f][c][str(r["reg"])] = int(r["rho"])
-    return out
-
-
-def ndv_registers(
-    root: str, col: str, snapshot: int | None = None
-) -> dict[int, int]:
-    """Merged HLL registers for ``col`` across every file visible in the
-    snapshot — elementwise max over the per-file sketches, driver-side
-    over manifest-sized dicts (no data scan)."""
-    merged: dict[int, int] = {}
-    missing = []
-    for e in manifest_entries(root, snapshot=snapshot):
-        sk = e.get("ndv", {}).get(col)
-        if sk is None:
-            missing.append(e["file"])
-            continue
-        for reg, rho in sk.items():
-            r = int(reg)
-            merged[r] = max(merged.get(r, 0), int(rho))
-    if missing:
-        raise ValueError(
-            f"{len(missing)} files carry no ndv sketch for {col!r} "
-            f"(e.g. {missing[0]}): commit with ndv_cols=[{col!r}]"
-        )
-    return merged
-
-
-def ndv_estimate(
-    root: str, col: str, snapshot: int | None = None
-) -> tuple[float, dict[int, int]]:
-    """(estimate, merged registers) for the distinct count of ``col``
-    across the table, from manifest statistics alone."""
-    from rgr_pdal_topo_spark.operators import sketches
-
-    merged = ndv_registers(root, col, snapshot=snapshot)
-    mass = sum(
-        1 << (sketches.HLL_K - rho) for rho in merged.values()
-    ) + (sketches.HLL_M - len(merged)) * (1 << sketches.HLL_K)
-    return round(sketches.HLL_EST_NUM / float(mass), 4), merged
-
-
 def _write_snapshot(
     df: DataFrame,
     root: str,
@@ -625,7 +528,6 @@ def _write_snapshot(
     operation: str,
     extra_log: Mapping[str, Any] | None = None,
     bloom_cols: Sequence[str] = (),
-    ndv_cols: Sequence[str] = (),
 ) -> int:
     """Single-writer commit: snapshot-id allocation is a read-modify-
     write of the log, and the atomic ``os.replace`` protects READERS
@@ -718,13 +620,6 @@ def _write_snapshot(
         for e in entries:
             if e["file"] in blooms:
                 e["bloom"] = blooms[e["file"]]
-    if ndv_cols and entries:
-        sketches = _build_ndv_sketches(
-            spark, df.schema, fields, ddir, list(ndv_cols)
-        )
-        for e in entries:
-            if e["file"] in sketches:
-                e["ndv"] = sketches[e["file"]]
 
     os.makedirs(os.path.dirname(_manifest_path(root, snap_id)), exist_ok=True)
     with open(_manifest_path(root, snap_id), "w") as fh:

@@ -122,12 +122,14 @@ def test_s2_udf_equals_column(spark):
     pts = [
         (i, float(rng.uniform(-180, 180)), float(rng.uniform(-89, 89)))
         for i in range(300)
-    ]
+    ] + [(300, None, 10.0), (301, 10.0, None), (302, None, None)]
     df = _df(spark, pts)
     out = df.select(
         cells.s2_cell(F.col("lon"), F.col("lat")).alias("col_id"),
         cells.s2_cell_udf(F.col("lon"), F.col("lat")).alias("udf_id"),
     ).collect()
+    # a NULL coordinate gives a NULL id in both spellings (None == None)
+    assert sum(r.col_id is None for r in out) == 3
     assert all(r.col_id == r.udf_id for r in out)
 
 
@@ -194,20 +196,16 @@ def test_s2_hilbert_same_face_and_leaf(spark):
     assert (m // lvl == h // lvl).all()  # same cube face
     assert (m != h).mean() > 0.9  # orderings genuinely differ
 
+    nulls = [(None, 10.0), (10.0, None), (None, None)]
     df = spark.createDataFrame(
-        [(float(a), float(b)) for a, b in zip(lon, lat)],
+        [(float(a), float(b)) for a, b in zip(lon, lat)] + nulls,
         "lon double, lat double",
     )
-    got = np.array(
-        [r.c for r in df.select(
-            cellfn.s2_cell_hilbert_udf("lon", "lat").alias("c")
-        ).collect()]
-    )
-    df2 = df.toPandas()
-    exp = cellfn.s2_cell_np(
-        df2.lon.to_numpy(), df2.lat.to_numpy(), interleave="hilbert"
-    )
-    assert sorted(got.tolist()) == sorted(exp.tolist())
+    got = [r.c for r in df.select(
+        cellfn.s2_cell_hilbert_udf("lon", "lat").alias("c")
+    ).collect()]
+    assert got.count(None) == len(nulls)  # NULL in, NULL out
+    assert sorted(c for c in got if c is not None) == sorted(h.tolist())
 
 
 def test_hilbert_column_dfa_bit_equals_numpy(spark):

@@ -49,3 +49,18 @@ def test_bench_headline_names_registered_queries():
     unknown = [n for n in bench.HEADLINE if n not in QUERIES]
     assert not unknown, f"HEADLINE names not registered: {unknown}"
     assert len(set(bench.HEADLINE)) == len(bench.HEADLINE)
+
+
+def test_default_driver_heap_fits_in_physical_memory(spark):
+    """Without SPARK_GRAFT_DRIVER_MEM the driver heap is sized below the
+    host's RAM, so the JVM cannot grow until the kernel kills it."""
+    import os
+
+    import pytest
+
+    if "SPARK_GRAFT_DRIVER_MEM" in os.environ:
+        pytest.skip("SPARK_GRAFT_DRIVER_MEM overrides the default")
+    heap = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils \
+        .byteStringAsBytes(spark.conf.get("spark.driver.memory"))
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    assert 0 < heap < phys

@@ -773,61 +773,3 @@ def test_metadata_tier_prunes_10k_files_without_json_or_driver_fold(
     ks = sorted(r["k"] for r in got.collect())
     assert ks == list(range(0, 500))
 
-
-def test_ndv_sketch_merge_equals_global_fold(spark, tmp_path):
-    from rgr_pdal_topo_spark.operators import sketches
-    from rgr_pdal_topo_spark.sources import manifest as man
-
-    root = str(tmp_path / "ndv_tbl")
-    a = spark.range(0, 400).selectExpr(
-        "id AS k", "CAST(id % 37 AS LONG) AS v"
-    )
-    b = spark.range(300, 700).selectExpr(
-        "id AS k", "CAST(id % 37 AS LONG) AS v"
-    )
-    man.commit(a, root, ["k"], n_files=4, ndv_cols=["k", "v"])
-    man.commit(b, root, ["k"], n_files=3, ndv_cols=["k", "v"])
-    for col in ("k", "v"):
-        merged = man.ndv_registers(root, col)
-        # the law: per-file max-merge == one global fold over the union
-        from pyspark.sql import functions as F
-        from rgr_pdal_topo_spark.operators import dedup
-
-        union = a.unionByName(b).select(
-            dedup._portable_id(
-                F.md5(F.col(col).cast("string"))
-            ).alias("tid")
-        )
-        direct = {
-            r["reg"]: r["rho"] for r in sketches.hll_fold(union).collect()
-        }
-        assert merged == direct, col
-    # snapshot pinning: registers as of snapshot 0 cover only batch a
-    first = man.snapshots(root)[0]["id"]
-    est_a, regs_a = man.ndv_estimate(root, "k", snapshot=first)
-    est_all, regs_all = man.ndv_estimate(root, "k")
-    assert all(regs_all.get(r, 0) >= rho for r, rho in regs_a.items())
-    assert est_all > est_a  # 700 distinct keys vs 400
-
-
-def test_ndv_missing_sketch_raises(spark, tmp_path):
-    import pytest as _pytest
-
-    from rgr_pdal_topo_spark.sources import manifest as man
-
-    root = str(tmp_path / "ndv_missing")
-    df = spark.range(0, 50).selectExpr("id AS k")
-    man.commit(df, root, ["k"], n_files=2)  # no ndv_cols
-    with _pytest.raises(ValueError, match="no ndv sketch"):
-        man.ndv_registers(root, "k")
-
-
-def test_ndv_rejects_float_columns(spark, tmp_path):
-    import pytest as _pytest
-
-    from rgr_pdal_topo_spark.sources import manifest as man
-
-    root = str(tmp_path / "ndv_float")
-    df = spark.range(0, 50).selectExpr("id AS k", "id * 0.5 AS x")
-    with _pytest.raises(ValueError, match="int or string"):
-        man.commit(df, root, ["k"], n_files=2, ndv_cols=["x"])

@@ -910,31 +910,6 @@ def test_geary_c_checkerboard_vs_plane(spark):
     assert geary(plane) < 0.2
 
 
-def test_shingle_novelty_first_occurrence_credit(spark, tmp_path):
-    """Hand corpus across two 10-doc batches: within-batch repeats are
-    NOT novel twice (first-occurrence credit), cross-batch repeats are
-    not novel at all, and n_occ counts per-doc-distinct shingles."""
-    rows = [
-        (0, "a b c d"),      # shingles: "a b c", "b c d"  (both new)
-        (1, "a b c x"),      # "a b c" (dup of doc 0), "b c x" (new)
-        (10, "a b c d e"),   # "a b c", "b c d" old; "c d e" new
-    ]
-    spark.createDataFrame(rows, "doc_id long, text string").coalesce(
-        1
-    ).write.parquet(str(tmp_path / "documents.parquet"))
-
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    got = {
-        r.batch: (r.n_occ, r.n_new, r.cum_vocab, r.novelty_rate)
-        for r in QUERIES["shingle_novelty"](spark, str(tmp_path)).collect()
-    }
-    assert got == {
-        0: (4, 3, 3, 0.75),
-        1: (3, 1, 4, round(1 / 3, 6)),
-    }
-
-
 def test_pareto_skyline_planted(spark, tmp_path):
     """Hand corpus with every skyline edge case: strict dominance on
     one axis, dominance with one tie, and a full two-coordinate tie

@@ -436,30 +436,6 @@ def test_lang_mix_sample_broadcasts_rates(spark):
     assert plan.count("HashAggregate") >= 2
 
 
-def test_hll_fold_is_partial_final_no_distinct(spark):
-    from rgr_pdal_topo_spark.operators import sketches
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF_DIR, "documents")
-    plan = _plan(sketches.hll_fold(sketches.shingle_tid_stream(docs)))
-    # register fold: partial + final hash agg, and NO Expand/distinct
-    # anywhere — the fold runs on the raw stream
-    assert plan.count("HashAggregate") >= 2
-    assert "Expand" not in plan
-
-
-def test_cms_lookup_broadcasts_counters(spark):
-    from rgr_pdal_topo_spark.operators import sketches
-
-    ids = spark.createDataFrame([(i % 7,) for i in range(100)], "tid long")
-    keys = spark.createDataFrame([(3,), (42,)], "tid long")
-    plan = _plan(sketches.cms_lookup(sketches.cms_fold(ids), keys))
-    # the bounded counter table broadcasts; the key side never shuffles
-    # into a SortMergeJoin
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-
-
 def test_crawl_consolidation_single_partial_agg(spark):
     from rgr_pdal_topo_spark.operators import pages
 
@@ -475,44 +451,6 @@ def test_crawl_consolidation_single_partial_agg(spark):
     assert "Window" not in plan
     assert "Join" not in plan
     assert plan.count("Exchange") == 2
-
-
-def test_asof_join_single_shuffle_no_join(spark):
-    from rgr_pdal_topo_spark.operators import pages, temporal
-
-    views = pages.view_log_df(spark, SF_DIR)
-    fetches = pages.fetch_log_df(spark, SF_DIR).select(
-        "url", "warc_epoch", F.md5("text").alias("digest")
-    )
-    plan = _plan(
-        temporal.asof_join(
-            views, fetches, "url", "view_epoch", "warc_epoch", ["digest"]
-        )
-    )
-    assert "Join" not in plan  # zero join nodes — union + carry only
-    # exactly one exchange hashpartitions the union on the key
-    import re
-
-    hashparts = re.findall(r"Exchange hashpartitioning\(url", plan)
-    assert len(hashparts) == 1
-
-
-def test_quantile_sketch_windows_over_buckets_only(spark):
-    from rgr_pdal_topo_spark.operators import sketches
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF_DIR, "documents").select("n_chars")
-    plan = _plan(
-        sketches.quantile_sketch_summary(docs, "n_chars", [500, 990])
-    )
-    # every Window sits downstream of a HashAggregate (the bucket fold):
-    # the cumulative sum never sees raw rows
-    import re
-
-    first_win = plan.find("Window")
-    first_agg = plan.find("HashAggregate")
-    assert first_win != -1 and first_agg != -1
-    assert plan.count("HashAggregate") >= 4  # two folds, partial+final
 
 
 def test_dup_spans_windows_partition_by_doc(spark):
@@ -665,31 +603,6 @@ def test_tile_pyramid_single_scan_all_zooms(spark):
     assert "Generate" in plan  # the explode
 
 
-def test_session_peaks_global_window_only_on_hour_rollup(spark):
-    """sweep_concurrency's scale contract, pinned in the physical plan:
-    (1) exactly one SinglePartition exchange, and it feeds the carry
-    window FROM THE HOUR ROLLUP (its child is the bucket_ts
-    HashAggregate — cardinality = hours, never raw boundaries); (2) the
-    boundary-stream window partitions by bucket_ts; (3) the interval
-    subtree runs ONCE (the +-1 boundaries leave one row via explode —
-    a two-branch union would replay the sessionize shuffle twice)."""
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    plan = _plan(QUERIES["session_peaks"](spark, SF_DIR))
-    assert plan.count("Exchange SinglePartition") == 1
-    lines = plan.splitlines()
-    gi = next(i for i, l in enumerate(lines) if "Exchange SinglePartition" in l)
-    assert "HashAggregate(keys=[bucket_ts" in lines[gi + 1]
-    # every Window over the boundary stream (ordering on t) is
-    # bucket-partitioned; the only unpartitioned window orders buckets
-    for line in lines:
-        if "Window [" in line and "windowspecdefinition(bucket_ts" not in line:
-            assert "windowspecdefinition(user_id" in line or (
-                "bucket_ts" in line
-            ), line
-    assert plan.count("Exchange hashpartitioning(user_id") == 1
-
-
 def test_pair_statistics_never_cartesian(spark):
     """semivariogram and ripley_k candidate pairs must be EQUI-joins on
     the lag-target / cell key — never a cartesian or broadcast-nested-
@@ -720,19 +633,6 @@ def test_editdist_pairs_blocked_join_no_cartesian(spark):
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan \
         or "BroadcastHashJoin" in plan
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-
-
-def test_session_overlaps_bucketed_equi_join(spark):
-    """The interval range join must plan as a hash/sort-merge EQUI-join
-    on the bucket key — never the cartesian/nested-loop product the
-    oracle's textbook range predicate would produce."""
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    plan = _plan(QUERIES["session_overlaps"](spark, SF_DIR))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan \
-        or "BroadcastHashJoin" in plan
 
 
 def test_market_share_broadcast_chain(spark):

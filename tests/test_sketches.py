@@ -1,5 +1,5 @@
-"""HLL sketch (operators/sketches.py) + CDX crawl consolidation
-(operators/pages.py): planted-value cases and the sketch laws."""
+"""CDX crawl consolidation and fetch log (operators/pages.py):
+planted-value cases."""
 
 from __future__ import annotations
 
@@ -7,129 +7,7 @@ from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
 
-from rgr_pdal_topo_spark.operators import pages, sketches
-from rgr_pdal_topo_spark.sources.tables import load_table
-
-
-def _ids(spark, vals):
-    return spark.createDataFrame([(int(v),) for v in vals], "tid long")
-
-
-def test_hll_fold_planted_registers(spark):
-    # hand-computed: reg = tid % 256, w = tid >> 8, rho = 53 - bitlen(w)
-    # (53 when w == 0)
-    got = {
-        (r["reg"], r["rho"])
-        for r in sketches.hll_fold(
-            _ids(spark, [0, 256, 257, 3 + (1 << 30)])
-        ).collect()
-    }
-    # tid=0:   reg 0, w=0        -> rho 53   (overridden by tid=256? no:
-    # tid=256: reg 0, w=1        -> rho 52;  max(53, 52) = 53)
-    # tid=257: reg 1, w=1        -> rho 52
-    # tid=3+2^30: reg 3, w=2^22  -> bitlen 23 -> rho 30
-    assert got == {(0, 53), (1, 52), (3, 30)}
-
-
-def test_hll_fold_is_multiplicity_blind(spark):
-    a = [7, 7, 7, 999, 999, 123456789, 7]
-    dup = sketches.hll_fold(_ids(spark, a))
-    dis = sketches.hll_fold(_ids(spark, set(a)))
-    assert {tuple(r) for r in dup.collect()} == {
-        tuple(r) for r in dis.collect()
-    }
-
-
-def test_hll_merge_law(spark):
-    xs = list(range(1000, 1300))
-    ys = list(range(1200, 1700))
-    merged = sketches.hll_merge(
-        sketches.hll_fold(_ids(spark, xs)),
-        sketches.hll_fold(_ids(spark, ys)),
-    )
-    union = sketches.hll_fold(_ids(spark, xs + ys))
-    assert {tuple(r) for r in merged.collect()} == {
-        tuple(r) for r in union.collect()
-    }
-
-
-def test_hll_summary_accuracy_on_corpus(spark):
-    docs = load_table(spark, SF_DIR, "documents")
-    row = sketches.hll_summary(sketches.shingle_tid_stream(docs)).collect()[0]
-    assert row["n_regs_set"] == sketches.HLL_M  # far past small-range
-    # published stderr is 1.04/sqrt(256) ~ 6.5%; the corpus lands at -5.9%
-    rel = (row["est"] - row["n_exact"]) / row["n_exact"]
-    assert abs(rel) < 0.10
-    # harmonic mass is the exact BIGINT the estimate divides into
-    assert row["harmonic_q"] > 0
-    est = round(sketches.HLL_EST_NUM / float(row["harmonic_q"]), 4)
-    assert est == row["est"]
-
-
-def _py_cms(vals):
-    """Pure-Python replay of the CMS fold (the portable-arithmetic
-    ground truth, independent of any SQL engine)."""
-    from rgr_pdal_topo_spark.operators import dedup
-
-    counters = {}
-    for v in vals:
-        lo, hi = v % (1 << 31), v >> 31
-        for j in range(sketches.CMS_D):
-            h = (
-                (dedup.MINHASH_A[j] * lo + dedup.MINHASH_C[j] * hi
-                 + dedup.MINHASH_B[j]) % dedup.MINHASH_P
-            ) % sketches.CMS_W
-            counters[(j, h)] = counters.get((j, h), 0) + 1
-    return counters
-
-
-def test_cms_fold_matches_python_replay(spark):
-    vals = [7, 7, 7, 999, 123456789, 999, (1 << 59) + 5, 7]
-    got = {
-        (r["j"], r["h"]): r["n"]
-        for r in sketches.cms_fold(_ids(spark, vals)).collect()
-    }
-    assert got == _py_cms(vals)
-
-
-def test_cms_lookup_bounds_and_absent_key(spark):
-    vals = [7] * 5 + [999] * 2 + [123456789]
-    cms = sketches.cms_fold(_ids(spark, vals))
-    keys = _ids(spark, [7, 999, 123456789, 42])  # 42 never folded
-    est = {
-        r["tid"]: r["est_n"]
-        for r in sketches.cms_lookup(cms, keys).collect()
-    }
-    exact = {7: 5, 999: 2, 123456789: 1, 42: 0}
-    for k, n in exact.items():
-        assert est[k] >= n  # never underestimates
-    # with 3 distinct keys in 4x4096 counters, collisions are absent for
-    # these fixed ids: estimates are exact (pinned by the Python replay)
-    counters = _py_cms(vals)
-    for k, n in exact.items():
-        lo, hi = k % (1 << 31), k >> 31
-        from rgr_pdal_topo_spark.operators import dedup
-        expect = min(
-            counters.get(
-                (j, ((dedup.MINHASH_A[j] * lo + dedup.MINHASH_C[j] * hi
-                      + dedup.MINHASH_B[j]) % dedup.MINHASH_P)
-                 % sketches.CMS_W), 0)
-            for j in range(sketches.CMS_D)
-        )
-        assert est[k] == expect
-
-
-def test_cms_merge_law(spark):
-    xs = [1, 2, 2, 3] * 10
-    ys = [2, 3, 3, 4] * 7
-    merged = sketches.cms_merge(
-        sketches.cms_fold(_ids(spark, xs)),
-        sketches.cms_fold(_ids(spark, ys)),
-    )
-    union = sketches.cms_fold(_ids(spark, xs + ys))
-    assert {tuple(r) for r in merged.collect()} == {
-        tuple(r) for r in union.collect()
-    }
+from rgr_pdal_topo_spark.operators import pages
 
 
 def test_crawl_consolidation_planted(spark):
@@ -172,159 +50,3 @@ def test_fetch_log_shape(spark):
     spread = per_url.select(F.count_distinct("n").alias("k")).collect()[0]
     assert spread["k"] == pages.FETCH_MAX  # all capture counts occur
 
-
-def test_quantile_sketch_brackets_exact(spark):
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF_DIR, "documents")
-    rows = sketches.quantile_sketch_summary(
-        docs.select("n_chars"), "n_chars", [250, 500, 750, 900, 990]
-    ).collect()
-    assert len(rows) == 5
-    for r in rows:
-        # the sketch contract: one-bucket bracket around the truth
-        assert r["est_lo"] <= r["exact"] <= r["est_hi"]
-        assert r["est_hi"] - r["est_lo"] == (1 << sketches.QSK_SHIFT) - 1
-
-
-def test_quantile_sketch_planted_order_statistics(spark):
-    # values 0..99: k = ceil(q * 100 / 1000ths); type-1 quantile of the
-    # uniform ramp is k - 1 (1-indexed k-th smallest of 0..99)
-    vals = spark.createDataFrame([(i,) for i in range(100)], "v long")
-    got = {
-        r["q_milli"]: r
-        for r in sketches.quantile_sketch_summary(
-            vals, "v", [10, 500, 990, 1000]
-        ).collect()
-    }
-    for q in (10, 500, 990, 1000):
-        k = -(-q * 100 // 1000)
-        assert got[q]["k"] == k
-        assert got[q]["exact"] == k - 1
-        assert got[q]["est_lo"] <= k - 1 <= got[q]["est_hi"]
-
-
-def test_hist_fold_merges_by_add(spark):
-    xs = spark.createDataFrame([(i % 37,) for i in range(200)], "v long")
-    ys = spark.createDataFrame([(i % 53,) for i in range(150)], "v long")
-    both = xs.unionByName(ys)
-    merged = (
-        sketches.hist_fold(xs, "v")
-        .unionByName(sketches.hist_fold(ys, "v"))
-        .groupBy("bucket")
-        .agg(F.sum("n").alias("n"))
-    )
-    direct = sketches.hist_fold(both, "v")
-    assert {tuple(r) for r in merged.collect()} == {
-        tuple(r) for r in direct.collect()
-    }
-
-
-def test_hll_overlap_planted_inclusion_exclusion(spark):
-    """Exact columns pin set sizes; harmonic_u obeys the merge law
-    (registers of the union stream) and est_inter is exactly
-    NUM/ha + NUM/hb - NUM/hu rounded to 4 — replayed in python."""
-    # HLL needs hash-distributed ids (sequential ints pile all mass into
-    # the low registers) — plant through the same portable md5 path the
-    # corpus uses
-    from rgr_pdal_topo_spark.operators import dedup
-
-    def hids(lo, hi):
-        return spark.range(lo, hi).select(
-            dedup._portable_id(
-                F.md5(F.col("id").cast("string"))
-            ).alias("tid")
-        )
-
-    a = hids(0, 600)                        # A = [0, 600)
-    b = hids(400, 1000)                     # B = [400, 1000), inter = 200
-    row = sketches.hll_overlap_summary(a, b).collect()[0]
-    assert (row["n_exact_a"], row["n_exact_b"], row["n_exact_inter"]) == (
-        600, 600, 200,
-    )
-    # merge law: union harmonic == harmonic of the concatenated stream
-    u = hids(0, 600).unionAll(hids(400, 1000))
-    su = sketches.hll_summary(u).collect()[0]
-    assert row["harmonic_u"] == su["harmonic_q"]
-    est = round(
-        sketches.HLL_EST_NUM / row["harmonic_a"]
-        + sketches.HLL_EST_NUM / row["harmonic_b"]
-        - sketches.HLL_EST_NUM / row["harmonic_u"],
-        4,
-    )
-    assert row["est_inter"] == est
-    # the estimate is within the inclusion-exclusion error envelope:
-    # 3 sketches x 6.5% stderr on ~600-1000 cardinalities
-    assert abs(row["est_inter"] - 200) < 200
-
-
-def test_hll_grouped_equals_per_group_global_summary(spark):
-    """Decomposition law: the grouped fold restricted to one group is
-    exactly the global fold of that group's stream — summaries match
-    column for column."""
-    from rgr_pdal_topo_spark.operators import dedup
-
-    base = spark.range(0, 900).select(
-        F.when(F.col("id") % 3 == 0, "a").otherwise("b").alias("g"),
-        dedup._portable_id(F.md5(F.col("id").cast("string"))).alias("tid"),
-    )
-    grouped = {
-        r["g"]: (r["n_exact"], r["n_regs_set"], r["harmonic_q"], r["est"])
-        for r in sketches.hll_summary_grouped(base, ("g",)).collect()
-    }
-    for g in ("a", "b"):
-        solo = sketches.hll_summary(
-            base.filter(F.col("g") == g).select("tid")
-        ).collect()[0]
-        assert grouped[g] == (
-            solo["n_exact"], solo["n_regs_set"],
-            solo["harmonic_q"], solo["est"],
-        ), g
-    assert grouped["a"][0] == 300 and grouped["b"][0] == 600
-
-
-def test_kmv_fold_keeps_k_smallest_distinct(spark):
-    # 200 distinct ids with duplicates; the sketch must hold exactly the
-    # 64 smallest distinct values regardless of multiplicity or order
-    vals = [v for v in range(5000, 5200) for _ in (0, 1)][::-1]
-    got = [r["tid"] for r in sketches.kmv_fold(_ids(spark, vals)).collect()]
-    assert sorted(got) == list(range(5000, 5064))
-
-
-def test_kmv_fold_partition_invariant(spark):
-    vals = [(v * 2654435761) % (1 << 60) for v in range(3000)]
-    one = sketches.kmv_fold(_ids(spark, vals).coalesce(1))
-    many = sketches.kmv_fold(_ids(spark, vals).repartition(13))
-    assert sorted(r["tid"] for r in one.collect()) == sorted(
-        r["tid"] for r in many.collect()
-    )
-
-
-def test_kmv_merge_law(spark):
-    xs = [(v * 6364136223846793005) % (1 << 60) for v in range(1, 800)]
-    ys = [(v * 1442695040888963407) % (1 << 60) for v in range(1, 900)]
-    merged = sketches.kmv_merge(
-        sketches.kmv_fold(_ids(spark, xs)),
-        sketches.kmv_fold(_ids(spark, ys)),
-    )
-    union = sketches.kmv_fold(_ids(spark, xs + ys))
-    assert sorted(r["tid"] for r in merged.collect()) == sorted(
-        r["tid"] for r in union.collect()
-    )
-
-
-def test_kmv_summary_small_set_escape(spark):
-    # fewer than k distinct: the sketch holds the whole set and the
-    # estimate IS the exact count (as a double)
-    row = sketches.kmv_summary(_ids(spark, [3, 1, 4, 1, 5, 9, 2, 6])).collect()[0]
-    assert (row["n_exact"], row["k_used"], row["est"]) == (7, 7, 7.0)
-    assert row["kth_q"] == 9
-
-
-def test_kmv_summary_estimator_on_corpus(spark):
-    docs = load_table(spark, SF_DIR, "documents")
-    row = sketches.kmv_summary(sketches.shingle_tid_stream(docs)).collect()[0]
-    assert row["k_used"] == sketches.KMV_K
-    # (k-1) * 2^60 / kth within 4 stderr of truth (stderr ~ 1/sqrt(k-2))
-    rel = abs(row["est"] - row["n_exact"]) / row["n_exact"]
-    assert rel < 4.0 / (sketches.KMV_K - 2) ** 0.5, (row["est"], row["n_exact"])
