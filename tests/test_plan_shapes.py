@@ -453,6 +453,26 @@ def test_crawl_consolidation_single_partial_agg(spark):
     assert plan.count("Exchange") == 2
 
 
+def test_asof_join_single_shuffle_no_join(spark):
+    from rgr_pdal_topo_spark.operators import joins, pages
+
+    views = pages.view_log_df(spark, SF_DIR)
+    fetches = pages.fetch_log_df(spark, SF_DIR).select(
+        "url", "warc_epoch", F.md5("text").alias("digest")
+    )
+    plan = _plan(
+        joins.asof_join(
+            views, fetches, "url", "view_epoch", "warc_epoch", ["digest"]
+        )
+    )
+    assert "Join" not in plan  # zero join nodes — union + carry only
+    # exactly one exchange hashpartitions the union on the key
+    import re
+
+    hashparts = re.findall(r"Exchange hashpartitioning\(url", plan)
+    assert len(hashparts) == 1
+
+
 def test_dup_spans_windows_partition_by_doc(spark):
     """The island merge must never use a global (single-partition)
     window: every Window node partitions by doc_id."""
