@@ -26,9 +26,9 @@ if REPO not in sys.path:
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # The headline subset: one per operator family (scan/derive, gridding agg,
-# stencil engine, spatial joins, dedup, text, relational,
-# windows).  The first 19 entries are the "comparable-20 subtotal" of
-# BENCH/BASELINE.md less its cosine_topk, which is no longer registered.
+# stencil engine, spatial joins, dedup, relational, windows).  The
+# first 18 entries are the "comparable-20 subtotal" of BENCH/BASELINE.md
+# less its cosine_topk and text_stats, which are no longer registered.
 # A query whose builder does its work eagerly (localCheckpoint or collect
 # at build time) is left out, because the noop-sink timing would measure
 # a checkpoint re-read, not the work; each such absence is noted where it
@@ -43,7 +43,6 @@ HEADLINE = [
     "profile_extract",
     "hag",
     "minhash_buckets",
-    "text_stats",
     "tpch_pricing",
     "sessionize",
     "flow_chi",
@@ -54,7 +53,6 @@ HEADLINE = [
     "perm_ensemble",
     "network_dissolve",
     "terrain_pipeline",
-    "corpus_pipeline",
     "hex_pages",
     # (neardup_incremental is absent: the LSH store protocol runs
     # eagerly)
@@ -63,16 +61,9 @@ HEADLINE = [
     "pages_pipeline",
     "line_dedup",
     "crawl_latest",
-    # (dedup_keep, dup_spans, dsir_weights, bigram_ppl and
-    # winnow_fingerprints are absent: connected components and the
-    # positional-shingle / bigram streams localCheckpoint inside the
-    # builder)
-    "source_quality",
-    "token_packing",
-    "release_pipeline",
-    # (ccnet_buckets is absent: it builds on bigram_ppl's checkpointed
-    # occurrence stream)
-    "bpe_pairs",
+    # (dedup_keep, dup_spans and winnow_fingerprints are absent:
+    # connected components and the positional-shingle stream
+    # localCheckpoint inside the builder)
     "contour_cells",
     "aspect_rose",
     "hypsometry",
@@ -84,7 +75,6 @@ HEADLINE = [
     "funnel_steps",
     "curvature_classes",
     "tile_pyramid",
-    "langid_confusion",
     "hotspot_cells",
     "slope_area_fit",
     "crawl_segment_diff",
@@ -96,12 +86,9 @@ HEADLINE = [
     "geary_c",
     "editdist_pairs",
     "market_share",
-    "pareto_skyline",
     "setsim_pairs",
     "hilbert_locality",
-    "robust_outliers",
     "containment_pairs",
-    "seasonal_anomalies",
     "bag_jaccard",
     "dbscan_grid",
     # (hand times its OWN marginal plan over the shared memoized flow
@@ -116,15 +103,12 @@ HEADLINE = [
     # localCheckpoints inside the builder.  basin_drainage times its OWN
     # marginal plan over the shared memoized flow pass)
     "vrm",
-    "langid_kappa",
     "basin_drainage",
     "tile_skew",
     "openness",
     "semivariogram_aniso",
     # (dedup_cluster_sizes is absent: its shingle-id input
     # localCheckpoints inside the builder)
-    "funnel_latency",
-    "langid_margin",
     "resample_error",
     # (order_census times its OWN marginal plan over the shared memoized
     # flow pass)

@@ -200,11 +200,8 @@ def _s2_face_uv_np(lon: np.ndarray, lat: np.ndarray):
 
 def _s2_st_np(u: np.ndarray) -> np.ndarray:
     """The S2 quadratic projection u -> s in [0, 1] (published formula)."""
-    return np.where(
-        u >= 0.0,
-        0.5 * np.sqrt(1.0 + 3.0 * u),
-        1.0 - 0.5 * np.sqrt(1.0 - 3.0 * u),
-    )
+    s = 0.5 * np.sqrt(1.0 + 3.0 * np.abs(u))
+    return np.where(u >= 0.0, s, 1.0 - s)
 
 
 def _morton_np(ix: np.ndarray, iy: np.ndarray, level: int) -> np.ndarray:

@@ -1,5 +1,5 @@
 """Spatial joins (SURVEY.md §2.3): point-in-polygon, profile projection,
-kNN, grid-grid, height-above-ground — and the time-series as-of join.
+kNN, grid-grid, height-above-ground.
 
 Everything is a composition of built-in DataFrame ops; Python appears only
 in the exact-geometry test of the generic-polygon path (Arrow-vectorized
@@ -787,160 +787,4 @@ def zonal_overlay(grid, polygons, gspec) -> DataFrame:
         F.count(F.lit(1)).alias("n_cells"),
         F.sum("area").alias("area_sum"),
         F.sum(F.col("area") * F.col("zq")).alias("wsum"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Time-series as-of join
-# --------------------------------------------------------------------------
-# Spark has no ASOF JOIN (SPARK-22947 is open); the classic workaround — a
-# range join + argmax per left row — explodes to O(left x captures-per-key)
-# pairs before the argmax prunes them.  The linear-work spelling instead:
-#
-#   union both sides tagged -> ONE shuffle on the key -> running
-#   last-non-null carry of the right payload over (ts, tag) order ->
-#   keep left rows.
-#
-# No join node at all: each left row picks up the latest right row with
-# ``right_ts <= left_ts`` (backward; ``>=`` forward) from the carry.  At
-# equal timestamps the right row sorts first (tag 0 < 1), so a same-instant
-# observation IS visible — the inclusive semantics of pandas ``merge_asof``
-# and DuckDB ``ASOF JOIN``.
-#
-# The one window per key is sequential per key, so a key with a 10^9-row
-# timeline serializes.  ``bucket_width`` bounds that: rows window within
-# (key, time-bucket) partitions instead, and the cross-bucket carry travels
-# through a bucket-level window over per-bucket summary rows (cardinality
-# = buckets, not rows) that is seeded into each bucket as a synthetic
-# pre-first row.  Identical output (tests pin simple == bucketed).
-#
-# Reference anchor: J4's closest-value assignment (networkGraph.py:688-741)
-# is the as-of-in-space twin of this as-of-in-time operator.
-
-_TS = "__asof_ts"
-_TAG = "__asof_tag"
-_PAY = "__asof_pay"
-_BKT = "__asof_bkt"
-
-
-def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str,
-    right_ts: str,
-    payload: list[str],
-    direction: str = "backward",
-    tolerance: int | None = None,
-    bucket_width: int | None = None,
-) -> DataFrame:
-    """Attach to each left row the latest right row at-or-before its
-    timestamp (``backward``; ``forward`` = earliest at-or-after).
-
-    Output: every left column, then ``matched_ts`` (the matched right
-    timestamp, NULL when nothing qualifies) and the right ``payload``
-    columns (NULL likewise).  ``tolerance`` (same units as the
-    timestamps) drops matches staler than ``|left_ts - matched_ts|``.
-    ``bucket_width`` switches to the skew-bounded two-level plan."""
-    if direction not in ("backward", "forward"):
-        raise ValueError(f"unknown direction: {direction}")
-    sign = 1 if direction == "backward" else -1
-    lcols = left.columns
-    r_pay = F.struct(
-        F.col(right_ts).cast("long").alias("matched_ts"),
-        *[F.col(c) for c in payload],
-    )
-    r = right.select(
-        F.col(key).alias(key),
-        (F.lit(sign) * F.col(right_ts).cast("long")).alias(_TS),
-        F.lit(0).alias(_TAG),
-        r_pay.alias(_PAY),
-        *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in lcols
-          if c != key],
-    )
-    l = left.select(
-        F.col(key).alias(key),
-        (F.lit(sign) * F.col(left_ts).cast("long")).alias(_TS),
-        F.lit(1).alias(_TAG),
-        F.lit(None).cast(r.schema[_PAY].dataType).alias(_PAY),
-        *[F.col(c) for c in lcols if c != key],
-    )
-    u = r.unionByName(l)
-
-    if bucket_width is None:
-        w = (
-            Window.partitionBy(key)
-            .orderBy(_TS, _TAG)
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        carried = u.withColumn(_PAY, F.last(_PAY, ignorenulls=True).over(w))
-    else:
-        carried = _bucketed_carry(u, key, int(bucket_width))
-
-    out = carried.filter(F.col(_TAG) == 1)
-    matched = F.col(_PAY)["matched_ts"]
-    if tolerance is not None:
-        # staleness in real time regardless of direction: _TS is the
-        # signed left ts, so staleness = _TS - sign * matched_ts
-        # (backward: left - matched; forward: matched - left)
-        ok = (F.col(_TS) - F.lit(sign) * matched) <= F.lit(int(tolerance))
-        out = out.withColumn(
-            _PAY, F.when(ok, F.col(_PAY)).otherwise(F.lit(None))
-        )
-    return out.select(
-        key,
-        *[c for c in lcols if c != key],
-        F.col(_PAY)["matched_ts"].alias("matched_ts"),
-        *[F.col(_PAY)[c].alias(c) for c in payload],
-    )
-
-
-def _bucketed_carry(u: DataFrame, key: str, width: int) -> DataFrame:
-    """Two-level carry: window within (key, bucket), with the latest
-    right payload from ALL earlier buckets seeded in as a synthetic
-    pre-first row per bucket.
-
-    The cross-bucket state rides a window over per-(key, bucket) summary
-    rows — cardinality is the number of occupied buckets, not the number
-    of input rows, so no partition anywhere exceeds one bucket's rows +
-    one seed."""
-    b = u.withColumn(_BKT, F.floor(F.col(_TS) / F.lit(width)))
-    # latest right payload inside each (key, bucket): argmax on (ts, tag)
-    per_bkt = (
-        b.filter(F.col(_TAG) == 0)
-        .groupBy(key, _BKT)
-        .agg(F.max_by(_PAY, F.struct(_TS, _TAG)).alias("__last_r"))
-    )
-    # bucket universe = every occupied bucket (left or right rows)
-    universe = b.select(key, _BKT).distinct()
-    wb = (
-        Window.partitionBy(key)
-        .orderBy(_BKT)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    seeds = (
-        universe.join(per_bkt, [key, _BKT], "left")
-        .withColumn("__seed", F.last("__last_r", ignorenulls=True).over(wb))
-        .filter(F.col("__seed").isNotNull())
-        .select(
-            key,
-            _BKT,
-            # sorts before every real row of its bucket: ts below the
-            # bucket's floor, tag -1 below right rows
-            (F.col(_BKT) * F.lit(width) - F.lit(1)).alias(_TS),
-            F.lit(-1).alias(_TAG),
-            F.col("__seed").alias(_PAY),
-        )
-    )
-    other = [c for c in u.columns if c not in (key, _TS, _TAG, _PAY)]
-    for c in other:
-        seeds = seeds.withColumn(c, F.lit(None).cast(u.schema[c].dataType))
-    w = (
-        Window.partitionBy(key, _BKT)
-        .orderBy(_TS, _TAG)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return (
-        b.unionByName(seeds.select(*b.columns))
-        .withColumn(_PAY, F.last(_PAY, ignorenulls=True).over(w))
     )

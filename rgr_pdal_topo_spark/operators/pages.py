@@ -144,21 +144,6 @@ def fetch_log_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def view_log_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents -> the page-view log (url, view_epoch): the LEFT side of
-    the as-of join asking "which content version was live at view time".
-    Three views per url: one BEFORE the first capture (the honest
-    no-match case), two between/after recrawls (half-day offsets land
-    strictly between the one-day capture cadence)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return docs.selectExpr(
-        "doc_id", "explode(array(-3600, 43200, 129600)) AS off"
-    ).selectExpr(
-        f"{URL_SQL} AS url",
-        f"CAST({EPOCH0} + doc_id * 37 + off AS BIGINT) AS view_epoch",
-    )
-
-
 def consolidate_crawl(fetches: DataFrame) -> DataFrame:
     """CDX consolidation: one row per url — capture count, distinct
     content versions, latest capture epoch, latest content digest.

@@ -22,6 +22,8 @@ No scipy: grey erosion/dilation are built from numpy sliding windows.
 
 from __future__ import annotations
 
+import warnings
+
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -33,11 +35,16 @@ from rgr_pdal_topo_spark.grid import GridSpec
 
 def _grey_op(arr: np.ndarray, radius: int, op) -> np.ndarray:
     """Grey erosion (op=np.nanmin) / dilation (op=np.nanmax) with a square
-    (2r+1)^2 structuring element; NaN treated as missing (ignored)."""
+    (2r+1)^2 structuring element; NaN treated as missing (ignored).  An
+    all-NaN window gives NaN; nanmin/nanmax report that with a
+    warnings.warn, which errstate does not cover."""
     w = 2 * radius + 1
     p = np.pad(arr, radius, mode="edge")
     win = sliding_window_view(p, (w, w))
-    with np.errstate(all="ignore"):
+    with np.errstate(all="ignore"), warnings.catch_warnings():
+        warnings.filterwarnings(
+            "ignore", "All-NaN slice encountered", RuntimeWarning
+        )
         return op(win, axis=(-2, -1))
 
 

@@ -86,8 +86,8 @@ def viewshed(demq: DataFrame, observer: DataFrame | None = None
         .withColumn("dc", F.col("cell_col") - F.col("ocol"))
         .withColumn("dist", F.greatest(F.abs("dr"), F.abs("dc")))
     )
-    # Spark sequence(1, 0) is a DESCENDING range, not empty (the
-    # bpe_pairs lesson) — dist >= 2 must gate the explode explicitly.
+    # Spark sequence(1, 0) is a DESCENDING range, not empty — dist >= 2
+    # must gate the explode explicitly.
     samples = (
         targets.filter(F.col("dist") >= 2)
         .withColumn(

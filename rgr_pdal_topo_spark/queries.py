@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from rgr_pdal_topo_spark import synth
 from rgr_pdal_topo_spark.grid import DEFAULT_GRID as G
-from rgr_pdal_topo_spark.operators import dedup, gridding, joins, textstats
+from rgr_pdal_topo_spark.operators import dedup, gridding, joins
 from rgr_pdal_topo_spark.sources.tables import register_views
 from rgr_pdal_topo_spark.synth import (
     gps_df,
@@ -997,8 +997,7 @@ _FUNNEL_STAGES = ("signup", "view", "click", "purchase")
 _FUNNEL_WINDOW = "INTERVAL 48 HOUR"  # sessionize-proven portable syntax
 
 
-# the funnel CTE chain + counts union — ONE spelling shared by
-# funnel_steps and funnel_latency
+# the funnel CTE chain + counts union (funnel_steps' oracle)
 _FUNNEL_CTE_LIST = [
     (
         f"s{i} AS (SELECT user_id, ts, event_id FROM "
@@ -1059,9 +1058,8 @@ def q_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _funnel_frames(spark: SparkSession, sf_dir: str) -> list:
-    """Per-stage (user_id, ts, event_id) first-touch frames — the
-    funnel chain factored out so funnel_latency can reuse the exact
-    stage semantics funnel_steps counts."""
+    """Per-stage (user_id, ts, event_id) first-touch frames of the
+    funnel chain funnel_steps counts."""
     from rgr_pdal_topo_spark.sources.tables import load_table
 
     ev = load_table(spark, sf_dir, "events")
@@ -1097,130 +1095,6 @@ def _funnel_frames(spark: SparkSession, sf_dir: str) -> list:
         frames.append(cur)
         prev = cur
     return frames
-
-
-# Planted diurnal overlay: the synthetic event stream is time-uniform,
-# so both engines add a deterministic NARROW pulse (+30 counts at UTC
-# hour 0 of every day) to the DENSE hourly series.  A 1-hour pulse
-# repeats only at multiples of 24, so seasonal differencing at lag 24
-# cancels it exactly.  Same spelling both sides.
-def _diurnal_pulse_sql(t: str) -> str:
-    return f"CASE WHEN (({t}) % 24) = 0 THEN 30 ELSE 0 END"
-
-
-# The dense pulsed hourly series seasonal_anomalies differences — ONE
-# spelling for both engines.
-_DENSE_HOURLY_CTES = (
-    "hc AS (SELECT epoch_us(ts) // 3600000000 AS t, "
-    "CAST(COUNT(*) AS BIGINT) AS c FROM events GROUP BY 1)",
-    "bounds AS (SELECT MIN(t) AS h0, MAX(t) AS h1 FROM hc)",
-    "dense AS (SELECT u.t AS t, COALESCE(hc.c, 0) + "
-    f"{_diurnal_pulse_sql('u.t')} AS c FROM bounds, "
-    "LATERAL (SELECT unnest(generate_series(h0, h1)) AS t) u "
-    "LEFT JOIN hc ON hc.t = u.t)",
-)
-
-
-def _dense_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Engine twin of _DENSE_HOURLY_CTES: the zero-filled hourly event
-    count series with the deterministic diurnal pulse."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    hc = ev.groupBy(
-        F.expr("unix_micros(CAST(ts AS TIMESTAMP)) DIV 3600000000").alias(
-            "t"
-        )
-    ).agg(F.count(F.lit(1)).alias("c"))
-    bounds = hc.agg(F.min("t").alias("h0"), F.max("t").alias("h1"))
-    return (
-        bounds.select(F.explode(F.expr("sequence(h0, h1)")).alias("t"))
-        .join(hc, "t", "left")
-        .select(
-            "t",
-            (
-                F.coalesce(F.col("c"), F.lit(0))
-                + F.expr(_diurnal_pulse_sql("t"))
-            ).alias("c"),
-        )
-    )
-
-
-# Planted anomalies for seasonal_anomalies: +40 at hours 100 and 400
-# after series start — deterministic, same spelling both engines.
-_ANOM_RELS = (100, 400)
-
-
-@query(
-    "seasonal_anomalies",
-    _with(
-        *_DENSE_HOURLY_CTES,
-        "d2 AS (SELECT t, c + CASE WHEN t - (SELECT h0 FROM bounds) IN ("
-        + ", ".join(str(x) for x in _ANOM_RELS)
-        + ") THEN 40 ELSE 0 END AS c FROM dense)",
-        "rr AS (SELECT b.t AS t, b.c AS c, b.c - a.c AS r "
-        "FROM d2 a JOIN d2 b ON b.t = a.t + 24)",
-        "mm AS (SELECT median(r) AS med FROM rr)",
-        "dd AS (SELECT t, c, r, abs(r - (SELECT med FROM mm)) AS dev "
-        "FROM rr)",
-        "md AS (SELECT median(dev) AS mad FROM dd)",
-    )
-    + "SELECT t, c, r FROM dd WHERE dev > 5 * (SELECT mad FROM md)",
-)
-def q_seasonal_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Seasonal-naive anomaly detection over the pulsed hourly series:
-    residual r_t = c_t - c_(t-24) removes EXACTLY the daily pattern
-    (the planted period-24 pulse cancels), and alarms fire where
-    |r - med(r)| exceeds 5 robust MADs.  Two anomalies are planted
-    (+40 at hours 100 and 400 after start); seasonal differencing
-    honestly ECHOES each one 24 hours later with opposite sign (the
-    classic artifact — pinned in tests, not hidden).
-
-    Exactness: residuals are integers; the median/MAD fence reuses the
-    counting-sort selection (textstats.grouped_median2) so nothing
-    leaves integer arithmetic — the fence is 2*|2r - med2| > 5*mad4 —
-    while the oracle states the DEFINITION via DuckDB's native
-    median() twice and the float fence on exact dyadics.
-
-    Scale shape: everything runs on the hour-grain rollup; the only
-    windows are grouped_median2's domain-bounded cumulative scans; the
-    scalar medians broadcast as 1-row frames."""
-    dense = _dense_hourly(spark, sf_dir)
-    h0 = dense.agg(F.min("t").alias("h0"))
-    d2 = dense.crossJoin(F.broadcast(h0)).select(
-        "t",
-        (
-            F.col("c")
-            + F.when(
-                (F.col("t") - F.col("h0")).isin(*_ANOM_RELS), 40
-            ).otherwise(0)
-        ).alias("c"),
-    )
-    a = d2.select((F.col("t") + 24).alias("t"), F.col("c").alias("__ca"))
-    rdf = d2.join(a, "t").select(
-        "t", "c", (F.col("c") - F.col("__ca")).alias("r")
-    )
-    med = (
-        textstats.grouped_median2(
-            rdf.select(F.lit(1).alias("__g"), "r"), ["__g"], "r"
-        )
-        .select(F.col("m2").alias("med2"))
-    )
-    dev = rdf.crossJoin(F.broadcast(med)).select(
-        F.lit(1).alias("__g"),
-        F.abs(2 * F.col("r") - F.col("med2")).alias("d2"),
-    )
-    mad = textstats.grouped_median2(dev, ["__g"], "d2").select(
-        F.col("m2").alias("mad4")
-    )
-    return (
-        rdf.crossJoin(F.broadcast(med))
-        .crossJoin(F.broadcast(mad))
-        .filter(
-            2 * F.abs(2 * F.col("r") - F.col("med2")) > 5 * F.col("mad4")
-        )
-        .select("t", "c", "r")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2210,15 +2084,15 @@ def q_curvature_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_terrain_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's full geomorphology pipeline composed END TO END in
-    one oracle-backed plan (the geospatial twin of corpus_pipeline):
+    one oracle-backed plan:
     noise filter -> ground-return mean DEM (points2grid) -> tiled
     slope-magnitude + TPI stencils -> point->cell enrichment ->
     point-in-polygon join -> per-map-unit statistics (the ClusterScarp /
     FanRoughness pattern, clusterScarps.py + pointCloudCreation.py end to
     end).  Every stage is driver-verified solo (filter_noise, grid_mean,
     slope_hillshade, stencil_suite, pip_stats); this query pins that they
-    COMPOSE, via the same shared-fragment oracle spelling corpus_pipeline
-    uses (_SMAG_RAW_DUCK / _TPI5_RAW_DUCK / _GQUANT_CTE / _TPIW_DUCK).
+    COMPOSE, via shared oracle fragments (_SMAG_RAW_DUCK /
+    _TPI5_RAW_DUCK / _GQUANT_CTE / _TPIW_DUCK).
 
     Bit-stability (the full r3 doctrine in one query): z is Q20-quantized
     before the DEM mean (exact per-cell sums), the DEM is re-quantized to
@@ -2286,173 +2160,8 @@ def q_terrain_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# text analysis (documents)
+# corpus census (documents)
 # ---------------------------------------------------------------------------
-
-_STOP_IN = ", ".join(f"'{w}'" for w in textstats.STOPWORDS_FLAT)
-_TOKS_DUCK = (
-    "SELECT doc_id, lang, length(text) AS n_chars, "
-    "list_filter(string_split(text, ' '), x -> x <> '') AS t FROM documents"
-)
-
-
-@query(
-    "text_stats",
-    _with(f"toks AS ({_TOKS_DUCK})")
-    + "SELECT doc_id, lang, n_chars, len(t) AS n_tokens, "
-    "len(list_distinct(t)) AS n_distinct_tokens, "
-    "ROUND(CAST(list_sum(list_transform(t, x -> length(x))) AS DOUBLE) / "
-    "CAST(len(t) AS DOUBLE), 6) AS avg_token_len, "
-    f"ROUND(CAST(len(list_filter(t, x -> x IN ({_STOP_IN}))) AS DOUBLE) / "
-    "CAST(len(t) AS DOUBLE), 6) AS stopword_ratio, "
-    "CAST(list_sum(list_transform(t, x -> CAST(ceil(length(x) / 4.0) "
-    "AS BIGINT))) AS BIGINT) AS bpe_tokens_est FROM toks",
-)
-def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token counting / quality metrics / BPE-ish token estimate —
-    all higher-order-function columnar, no UDF."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    s = textstats.text_stats(docs)
-    return s.select(
-        "doc_id", "lang", "n_chars", "n_tokens", "n_distinct_tokens",
-        F.round("avg_token_len", 6).alias("avg_token_len"),
-        F.round("stopword_ratio", 6).alias("stopword_ratio"),
-        "bpe_tokens_est",
-    )
-
-
-# C4-style keep decision over a token list `t` — ONE spelling shared by
-# quality_filter and corpus_pipeline (oracle drift between the solo and
-# composed queries would be invisible otherwise)
-_KEEP_CASE_DUCK = (
-    "CASE WHEN len(t) >= 20 AND "
-    "CAST(list_sum(list_transform(t, x -> length(x))) AS DOUBLE) / "
-    "CAST(len(t) AS DOUBLE) <= 12.0 AND "
-    "CAST(len(list_distinct(t)) AS DOUBLE) / CAST(len(t) AS DOUBLE) >= 0.1 "
-    "THEN 1 ELSE 0 END"
-)
-
-
-@query(
-    "quality_filter",
-    _with(f"toks AS ({_TOKS_DUCK})")
-    + f"SELECT doc_id, {_KEEP_CASE_DUCK} AS keep FROM toks",
-)
-def q_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4-style quality gating decision per document."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return textstats.quality_filter(docs).select("doc_id", "keep")
-
-
-def _lang_scores_duck() -> str:
-    cols = []
-    for code, words in textstats.LANG_STOPWORDS.items():
-        inl = ", ".join(f"'{w}'" for w in words)
-        cols.append(
-            f"len(list_filter(t, x -> x IN ({inl}))) AS score_{code}"
-        )
-    return ", ".join(cols)
-
-
-# deterministic-argmax language pick over a token list `t` — shared by
-# langid and corpus_pipeline (same single-spelling rationale as above)
-_PRED_LANG_CASE_DUCK = (
-    "CASE WHEN len(list_filter(t, x -> x IN ('le','la','de','et','les'))) > "
-    "GREATEST(len(list_filter(t, x -> x IN ('the','a','and','of','to'))), "
-    "len(list_filter(t, x -> x IN ('el','la','de','que','y'))), "
-    "len(list_filter(t, x -> x IN ('der','die','das','und','ist')))) THEN 'fr' "
-    "WHEN len(list_filter(t, x -> x IN ('der','die','das','und','ist'))) > "
-    "GREATEST(len(list_filter(t, x -> x IN ('the','a','and','of','to'))), "
-    "len(list_filter(t, x -> x IN ('el','la','de','que','y')))) THEN 'de' "
-    "WHEN len(list_filter(t, x -> x IN ('el','la','de','que','y'))) > "
-    "len(list_filter(t, x -> x IN ('the','a','and','of','to'))) THEN 'es' "
-    "ELSE 'en' END"
-)
-
-
-@query(
-    "langid",
-    _with(f"toks AS ({_TOKS_DUCK})")
-    + f"SELECT doc_id, lang, {_lang_scores_duck()}, "
-    f"{_PRED_LANG_CASE_DUCK} AS pred_lang FROM toks",
-)
-def q_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """n-gram/stopword language-ID heuristic with deterministic argmax."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return textstats.langid_scores(docs)
-
-
-# Planted language markers for langid_confusion (the pii_scrub
-# discipline: the synthetic corpus draws every language's text from
-# ONE shared English-ish vocab, so the stopword heuristic predicts
-# 'en' for every document — a single-column confusion matrix).  Half
-# of each non-en language's docs get their stopword profile appended
-# x4 (score 20 > the measured max organic score_en of 14), so the
-# matrix carries diagonal hits AND the en-default misses at every
-# scale.  ONE spelling runs in both engines.
-_LANGMARK_SQL = "CASE " + " ".join(
-    f"WHEN doc_id % 2 = 0 AND lang = '{code}' THEN text || ' ' || "
-    f"'{' '.join([' '.join(words)] * 4)}'"
-    for code, words in (
-        ("de", ("der", "die", "das", "und", "ist")),
-        ("es", ("el", "la", "de", "que", "y")),
-        ("fr", ("le", "la", "de", "et", "les")),
-    )
-) + " ELSE text END"
-
-
-@query(
-    "langid_confusion",
-    _with(
-        f"d AS (SELECT doc_id, lang, {_LANGMARK_SQL} AS text "
-        "FROM documents)",
-        "toks AS (SELECT doc_id, lang, "
-        "list_filter(string_split(text, ' '), x -> x <> '') AS t FROM d)",
-        f"p AS (SELECT lang, {_PRED_LANG_CASE_DUCK} AS pred_lang "
-        "FROM toks)",
-    )
-    + "SELECT lang, pred_lang, "
-    "CASE WHEN lang = pred_lang THEN 1 ELSE 0 END AS is_correct, "
-    "CAST(COUNT(*) AS BIGINT) AS n_docs "
-    "FROM p GROUP BY lang, pred_lang",
-)
-def q_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Language-ID confusion matrix: declared vs predicted language
-    with per-cell counts — the quality-evaluation census every corpus
-    pipeline publishes for its classifiers (precision/recall per
-    language read straight off it).  The synthetic corpus shares one
-    vocabulary across languages (the heuristic predicts 'en'
-    everywhere), so half of each non-en language's docs carry a
-    PLANTED x4 stopword marker (_LANGMARK_SQL, one spelling in both
-    engines) — the matrix then has diagonal hits and en-default misses
-    at every scale.  All-integer counts, exact parity.
-
-    Scale shape: one scan -> per-doc scores -> a languages^2-bounded
-    census fold; nothing wider than the matrix ever shuffles."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").selectExpr(
-        "doc_id", "lang", f"{_LANGMARK_SQL} AS text"
-    )
-    p = textstats.langid_scores(docs)
-    return (
-        p.groupBy("lang", "pred_lang")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .select(
-            "lang",
-            "pred_lang",
-            (F.col("lang") == F.col("pred_lang")).cast("int")
-            .alias("is_correct"),
-            "n_docs",
-        )
-    )
-
 
 _shared_sql(
     "lang_dist",
@@ -2479,111 +2188,6 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rgr_pdal_topo_spark.sources.tables import load_table
 
     return dedup.exact_duplicates(load_table(spark, sf_dir, "documents"))
-
-
-@query(
-    "corpus_pipeline",
-    _with(
-        f"toks AS ({_TOKS_DUCK})",
-        "winners AS (SELECT MIN(doc_id) AS doc_id FROM documents "
-        "GROUP BY md5(text))",
-        "kept AS (SELECT toks.* FROM toks JOIN winners USING (doc_id))",
-        "scored AS (SELECT doc_id, len(t) AS n_tokens, "
-        "CAST(list_sum(list_transform(t, x -> CAST(ceil(length(x) / 4.0) "
-        "AS BIGINT))) AS BIGINT) AS bpe, "
-        f"{_KEEP_CASE_DUCK} AS keep, "
-        f"{_PRED_LANG_CASE_DUCK} AS pred_lang FROM kept)",
-    )
-    + "SELECT pred_lang, COUNT(*) AS n_docs, "
-    "CAST(SUM(n_tokens) AS BIGINT) AS total_tokens, "
-    "CAST(SUM(bpe) AS BIGINT) AS total_bpe_tokens "
-    "FROM scored WHERE keep = 1 GROUP BY pred_lang",
-)
-def q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The training-data pipeline composed END TO END in one plan:
-    exact dedup (keep the min-doc_id copy per content digest) ->
-    C4-style quality gate -> language-ID -> per-predicted-language
-    document and token totals.  Each stage is verified solo elsewhere
-    (dedup_exact, quality_filter, langid, text_stats); this query pins
-    that they COMPOSE — same single-spelling oracle fragments, so any
-    drift between solo and composed semantics fails parity.
-
-    Scale shape: the digest groupBy shuffles 32-char digests (never
-    bodies), the winner semi-join co-partitions on doc_id, and the
-    quality+langid stage is textstats.quality_langid — ONE projection
-    over ONE scan (codegen CSE computes the token split once per row;
-    joining the solo operators would rescan + retokenize every document
-    and add a doc_id shuffle), ending in a tiny partial+final agg."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    winners = docs.groupBy(F.md5("text").alias("digest")).agg(
-        F.min("doc_id").alias("doc_id")
-    )
-    kept = docs.join(winners.select("doc_id"), "doc_id", "left_semi")
-    scored = textstats.quality_langid(kept).filter(F.col("keep") == 1)
-    return scored.groupBy("pred_lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tokens").alias("total_tokens"),
-        F.sum("bpe_tokens_est").alias("total_bpe_tokens"),
-    )
-
-
-@query(
-    "release_pipeline",
-    _with(
-        f"toks AS ({_TOKS_DUCK})",
-        "winners AS (SELECT MIN(doc_id) AS doc_id FROM documents "
-        "GROUP BY md5(text))",
-        "kept AS (SELECT toks.* FROM toks JOIN winners USING (doc_id))",
-        "scored AS (SELECT doc_id, len(t) AS n_tokens, "
-        "CAST(list_sum(list_transform(t, x -> CAST(ceil(length(x) / 4.0) "
-        "AS BIGINT))) AS BIGINT) AS bpe, "
-        f"{_KEEP_CASE_DUCK} AS keep, "
-        f"{_PRED_LANG_CASE_DUCK} AS pred_lang FROM kept)",
-        "sp AS (SELECT doc_id, CASE WHEN "
-        f"({dedup.horner_hash_sql('h')}) % {dedup.N_SPLIT_BUCKETS} = "
-        f"{dedup.VAL_BUCKET} THEN 'val' WHEN "
-        f"({dedup.horner_hash_sql('h')}) % {dedup.N_SPLIT_BUCKETS} = "
-        f"{dedup.TEST_BUCKET} THEN 'test' ELSE 'train' END AS split "
-        "FROM (SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS h "
-        "FROM documents) hh)",
-    )
-    + "SELECT sp.split, s.pred_lang, COUNT(*) AS n_docs, "
-    "CAST(SUM(s.n_tokens) AS BIGINT) AS total_tokens, "
-    "CAST(SUM(s.bpe) AS BIGINT) AS total_bpe_tokens "
-    "FROM scored s JOIN sp ON sp.doc_id = s.doc_id WHERE s.keep = 1 "
-    "GROUP BY sp.split, s.pred_lang",
-)
-def q_release_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The corpus RELEASE composed end to end — the fifth composed
-    flagship: exact dedup (min-doc_id winner per content digest) ->
-    C4 quality gate -> language-ID -> deterministic train/val/test
-    split -> per-(split, language) datasheet totals, all in ONE plan.
-    Every stage is verified solo elsewhere (dedup_exact,
-    quality_filter, langid, split_leakage, text_stats); this query pins
-    that they COMPOSE, with the same single-spelling oracle fragments
-    so solo/composed drift fails parity.
-
-    Scale shape: digest groupBy shuffles digests (never bodies), the
-    winner semi-join co-partitions on doc_id, quality+langid is ONE
-    projection over ONE scan, the split label is a pure function of
-    doc_id (no join needed on the engine side), and the rollup is a
-    tiny partial+final agg."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    winners = docs.groupBy(F.md5("text").alias("digest")).agg(
-        F.min("doc_id").alias("doc_id")
-    )
-    kept = docs.join(winners.select("doc_id"), "doc_id", "left_semi")
-    scored = textstats.quality_langid(kept).filter(F.col("keep") == 1)
-    out = scored.withColumn("split", dedup.split_col(F.col("doc_id")))
-    return out.groupBy("split", "pred_lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tokens").alias("total_tokens"),
-        F.sum("bpe_tokens_est").alias("total_bpe_tokens"),
-    )
 
 
 # Shingle/token ids are md5 -> base-16 Horner fold of the first 15 hex
@@ -2907,28 +2511,6 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.simhash_pairs(
         sigs, n_bands=_SIMHASH_PAIRS_BANDS, bits=_SIMHASH_PAIRS_BITS
     )
-
-
-@query(
-    "doc_fingerprint",
-    # DuckDB 1.0 lacks WITH ORDINALITY; positions come from a LATERAL
-    # generate_series over the token list instead (posexplode equivalent).
-    "WITH d AS (SELECT doc_id, list_filter(string_split(text, ' '), "
-    "t -> t <> '') AS toks FROM documents), "
-    "ex AS (SELECT doc_id, u.pos - 1 AS pos, toks[u.pos] AS tok FROM d, "
-    "LATERAL (SELECT unnest(generate_series(1, len(toks))) AS pos) u) "
-    "SELECT doc_id, CAST(SUM((pos + 1) * (length(tok) * 1000003 + "
-    "ascii(tok) * 257 + ascii(substring(tok, -1, 1)))) % 2305843009213693951 "
-    "AS BIGINT) AS fingerprint, COUNT(*) AS n_tokens "
-    "FROM ex GROUP BY doc_id",
-)
-def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Order-sensitive rolling document fingerprint (position-weighted
-    token hash mod 2^61-1; exact integer arithmetic on both sides)."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return textstats.doc_fingerprint(docs)
 
 
 @query(
@@ -5979,104 +5561,6 @@ def q_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "source_quality",
-    _with(
-        f"toks AS ({_TOKS_DUCK})",
-        f"q AS (SELECT doc_id, len(t) AS n_tokens, {_KEEP_CASE_DUCK} "
-        "AS keep FROM toks)",
-        "d AS (SELECT doc_id, list_filter(string_split(text, ' '), "
-        "t -> t <> '') AS toks FROM documents)",
-        f"sh AS ({_SHINGLES_DUCK})",
-        f"dt AS MATERIALIZED ({_SHID_DUCK})",
-        "dfreq AS (SELECT tid, COUNT(*) AS df FROM dt GROUP BY tid)",
-        "dup AS (SELECT dt.doc_id, COUNT(*) AS n_shingles, "
-        "SUM(CASE WHEN dfreq.df >= 2 THEN 1 ELSE 0 END) AS n_dup "
-        "FROM dt JOIN dfreq ON dfreq.tid = dt.tid GROUP BY dt.doc_id)",
-    )
-    + "SELECT doc.source, CAST(COUNT(*) AS BIGINT) AS n_docs, "
-    "CAST(SUM(q.keep) AS BIGINT) AS n_kept, "
-    "CAST(SUM(q.n_tokens) AS BIGINT) AS total_tokens, "
-    "CAST(SUM(COALESCE(dup.n_shingles, 0)) AS BIGINT) AS total_shingles, "
-    "CAST(SUM(COALESCE(dup.n_dup, 0)) AS BIGINT) AS total_dup_shingles "
-    "FROM documents doc JOIN q ON q.doc_id = doc.doc_id "
-    "LEFT JOIN dup ON dup.doc_id = doc.doc_id GROUP BY doc.source",
-)
-def q_source_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-domain datasheet rollup (textstats.source_quality): volume,
-    C4-gate pass count, and duplicated-content burden per `source` —
-    the blocklist/allowlist derivation pass, composed from the verified
-    quality_filter and shingle_dup_stats stages with their shared
-    oracle fragments.  All exact BIGINTs."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return textstats.source_quality(docs)
-
-
-@query(
-    "token_packing",
-    _with(
-        "t AS (SELECT source, doc_id, len(list_filter(string_split("
-        "text, ' '), x -> x <> '')) AS n_tokens FROM documents)",
-        "x AS (SELECT source, n_tokens, SUM(n_tokens) OVER ("
-        "PARTITION BY source ORDER BY doc_id ROWS BETWEEN UNBOUNDED "
-        "PRECEDING AND CURRENT ROW) AS cum FROM t WHERE n_tokens > 0)",
-        f"b AS (SELECT source, n_tokens, (cum - n_tokens) // {textstats.PACK_CHUNK} "
-        f"AS start_bin, (cum - 1) // {textstats.PACK_CHUNK} AS end_bin FROM x)",
-    )
-    + "SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs, "
-    "CAST(SUM(n_tokens) AS BIGINT) AS total_tokens, "
-    "CAST(MAX(end_bin) + 1 AS BIGINT) AS n_bins, "
-    "CAST(SUM(CASE WHEN start_bin <> end_bin THEN 1 ELSE 0 END) "
-    "AS BIGINT) AS n_split_docs FROM b GROUP BY source",
-)
-def q_token_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequence-packing accounting (textstats.token_packing): documents
-    concatenated in (source, doc_id) order and chunked into 512-token
-    context windows — per shard, how many windows the stream fills and
-    how many documents straddle a boundary.  Pure window-cumsum integer
-    arithmetic, so the oracle replays it bit-for-bit."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return textstats.token_packing(docs)
-
-
-@query(
-    "dsir_weights",
-    _with(
-        f"toks AS ({_TOKS_DUCK})",
-        f"base AS (SELECT doc_id, t, {_KEEP_CASE_DUCK} AS keep FROM toks)",
-        "bg0 AS (SELECT doc_id, keep, t[u.pos] || ' ' || t[u.pos+1] AS "
-        "bigram FROM base, LATERAL (SELECT unnest(generate_series(1, "
-        "greatest(len(t) - 1, 0))) AS pos) u)",
-        "bg AS MATERIALIZED (SELECT doc_id, keep, "
-        f"({dedup.horner_hash_sql('h')}) % {textstats.DSIR_BUCKETS} AS b "
-        "FROM (SELECT doc_id, keep, md5(bigram) AS h FROM bg0) x)",
-        "bucket AS (SELECT b, CAST(COUNT(*) AS BIGINT) AS cr, "
-        "CAST(SUM(keep) AS BIGINT) AS ct FROM bg GROUP BY b)",
-        "tot AS (SELECT CAST(SUM(cr) AS BIGINT) AS nr, "
-        "CAST(SUM(ct) AS BIGINT) AS nt FROM bucket)",
-        f"w AS (SELECT b, {textstats.DSIR_W_SQL} AS w FROM bucket, tot)",
-    )
-    + "SELECT bg.doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams, "
-    "CAST(SUM(w.w) AS BIGINT) AS score "
-    "FROM bg JOIN w ON w.b = bg.b GROUP BY bg.doc_id",
-)
-def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR-style importance weighting (textstats.dsir_weights): hashed
-    bigram features, add-one-smoothed log-ratio between the C4-gate
-    target slice and the raw corpus, per-bucket weights pinned to the
-    2^-13 integer grid by the shared DSIR_W_SQL fragment (the
-    integer-ratio ln contract), document score = exact BIGINT sum of its
-    occurrences' bucket weights."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return textstats.dsir_weights(docs)
-
-
-@query(
     "winnow_fingerprints",
     _with(
         f"d AS ({_DOCTOKS_DUCK})",
@@ -6111,114 +5595,6 @@ def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     return dedup.winnow_fingerprints(docs)
-
-
-# the add-one bigram-LM CTE chain + per-doc scoring select, shared by
-# bigram_ppl (the gate itself) and ccnet_buckets (the head/middle/tail
-# split over its scores) so the two oracles cannot drift
-_PPL_CTES = (
-    f"toks AS ({_TOKS_DUCK})",
-    f"base AS (SELECT doc_id, t, {_KEEP_CASE_DUCK} AS keep FROM toks)",
-    "bg0 AS (SELECT doc_id, keep, t[u.pos] AS w1tok, "
-    "t[u.pos] || ' ' || t[u.pos+1] AS bigram FROM base, "
-    "LATERAL (SELECT unnest(generate_series(1, greatest(len(t) - 1, "
-    "0))) AS pos) u)",
-    "occ AS MATERIALIZED (SELECT doc_id, keep, "
-    f"{dedup.horner_hash_sql('h1')} AS b1, "
-    f"{dedup.horner_hash_sql('h2')} AS b2 FROM (SELECT doc_id, keep, "
-    "md5(w1tok) AS h1, md5(bigram) AS h2 FROM bg0) x)",
-    "cbt AS (SELECT b2, CAST(COUNT(*) AS BIGINT) AS cb FROM occ "
-    "WHERE keep = 1 GROUP BY b2)",
-    "cut AS (SELECT b1, CAST(COUNT(*) AS BIGINT) AS cu FROM occ "
-    "WHERE keep = 1 GROUP BY b1)",
-    "vt AS (SELECT CAST(COUNT(DISTINCT tok) AS BIGINT) AS vv FROM "
-    "(SELECT unnest(t) AS tok FROM base WHERE keep = 1) z)",
-    "pairs AS (SELECT DISTINCT b1, b2 FROM occ)",
-    "wt0 AS (SELECT p.b1, p.b2, COALESCE(cbt.cb, 0) AS cb, "
-    "COALESCE(cut.cu, 0) AS cu, vt.vv AS vv FROM pairs p "
-    "LEFT JOIN cbt ON cbt.b2 = p.b2 LEFT JOIN cut ON cut.b1 = p.b1, "
-    "vt)",
-    f"wt AS (SELECT b1, b2, {textstats.PPL_W_SQL} AS w FROM wt0)",
-)
-_PPL_DOC_SELECT = (
-    "SELECT occ.doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams, "
-    "CAST(-SUM(wt.w) AS BIGINT) AS nll_q "
-    "FROM occ JOIN wt ON wt.b1 = occ.b1 AND wt.b2 = occ.b2 "
-    "GROUP BY occ.doc_id"
-)
-
-
-@query("bigram_ppl", _with(*_PPL_CTES) + _PPL_DOC_SELECT)
-def q_bigram_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet-style perplexity gate (textstats.bigram_ppl): an add-one
-    bigram LM trained on the C4-gate clean slice scores every document
-    by negative log-likelihood.  Each distinct bigram's log-probability
-    is pinned to the 2^-13 integer grid by the shared PPL_W_SQL
-    fragment (the DSIR integer-ratio ln contract), so nll_q is an
-    exact BIGINT sum."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return textstats.bigram_ppl(docs)
-
-
-@query(
-    "ccnet_buckets",
-    _with(
-        *_PPL_CTES,
-        f"ppl AS ({_PPL_DOC_SELECT})",
-        "sc AS (SELECT d.lang, p.n_bigrams, p.nll_q, "
-        "NTILE(3) OVER (PARTITION BY d.lang ORDER BY "
-        "(p.nll_q * 1024) // p.n_bigrams, p.doc_id) AS bucket "
-        "FROM ppl p JOIN documents d ON d.doc_id = p.doc_id)",
-    )
-    + "SELECT lang, CAST(bucket AS BIGINT) AS bucket, "
-    "CAST(COUNT(*) AS BIGINT) AS n_docs, "
-    "CAST(SUM(n_bigrams) AS BIGINT) AS total_bigrams, "
-    "CAST(SUM(nll_q) AS BIGINT) AS total_nll_q, "
-    "CAST(MIN(nll_q) AS BIGINT) AS min_nll_q, "
-    "CAST(MAX(nll_q) AS BIGINT) AS max_nll_q "
-    "FROM sc GROUP BY lang, bucket",
-)
-def q_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet head/middle/tail split (textstats.ccnet_buckets): documents
-    ordered within each language by exact-integer per-token nll from the
-    bigram LM, cut into three equal-count buckets.  The engine assembles
-    the rank two-level (per-key offsets + bounded within-key windows —
-    no per-language global window); the oracle is the textbook NTILE(3)
-    spelling, pinning the equivalence of the scalable plan to the
-    textbook one."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return textstats.ccnet_buckets(docs)
-
-
-@query(
-    "bpe_pairs",
-    _with(
-        f"toks AS ({_TOKS_DUCK})",
-        "w AS (SELECT unnest(t) AS w FROM toks)",
-        "p AS (SELECT substr(w, u.i, 2) AS pair FROM w, "
-        "LATERAL (SELECT unnest(generate_series(1, length(w) - 1)) "
-        "AS i) u WHERE length(w) >= 2)",
-        "c AS (SELECT pair, CAST(COUNT(*) AS BIGINT) AS cnt FROM p "
-        "GROUP BY pair)",
-    )
-    + "SELECT * FROM (SELECT CAST(ROW_NUMBER() OVER "
-    "(ORDER BY cnt DESC, pair) AS BIGINT) AS rank, pair, cnt FROM c) r "
-    "WHERE rank <= 20",
-)
-def q_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One BPE tokenizer-training step's statistic
-    (textstats.bpe_pair_counts): occurrence-weighted adjacent
-    character-pair frequencies, top 20; rank 1 is the merge classic BPE
-    performs next.  Map-side-combinable count onto an alphabet^2-bounded
-    key space; the top-k window runs on the tiny aggregated table."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return textstats.bpe_pair_counts(docs)
 
 
 # the synthetic corpus contains NO verbatim duplicates (every text is
@@ -6317,41 +5693,6 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "n_emails", "n_phones", "n_ips",
         F.md5("scrubbed").alias("scrub_digest"),
     )
-
-
-@query(
-    "lang_mix_sample",
-    _with(
-        "c AS (SELECT lang, COUNT(*) AS n_total FROM documents "
-        "GROUP BY lang)",
-        "m AS (SELECT MIN(n_total) AS n_min FROM c)",
-        "r AS (SELECT lang, n_total, CAST(FLOOR(1048576.0 * "
-        "SQRT(CAST(n_min AS DOUBLE) / CAST(n_total AS DOUBLE))) "
-        "AS BIGINT) AS thr FROM c, m)",
-        "hh AS (SELECT doc_id, lang, md5(CAST(doc_id AS VARCHAR)) AS h "
-        "FROM documents)",
-        f"hv AS (SELECT doc_id, lang, ({dedup.horner_hash_sql('h')}) "
-        "% 1048576 AS hv FROM hh)",
-    )
-    + "SELECT r.lang, CAST(r.n_total AS BIGINT) AS n_total, "
-    "CAST(SUM(CASE WHEN hv.hv < r.thr THEN 1 ELSE 0 END) AS BIGINT) "
-    "AS n_kept, r.thr FROM hv JOIN r ON r.lang = hv.lang "
-    "GROUP BY r.lang, r.n_total, r.thr",
-)
-def q_lang_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-based language mixing (textstats.temperature_mix_
-    sample, alpha=0.5): per-language deterministic down-sampling to the
-    sqrt-rebalanced distribution — the data-mixing stage between
-    filtering and training.  Keep decisions are a pure function of
-    doc_id (replayable under retries/AQE, the points_decimate
-    property), thresholds are exact integers, and alpha=0.5 keeps the
-    only float step at a correctly-rounded SQRT so the oracle matches
-    bit-for-bit.  Scale shape: two partial+final aggs with a broadcast
-    rates join between them; only (lang, int) rows shuffle."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return textstats.temperature_mix_sample(docs, alpha=0.5)
 
 
 from rgr_pdal_topo_spark.functions import hexcells as hexfn  # noqa: E402
@@ -6494,8 +5835,8 @@ def q_hex_ring_density(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_pages_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The north_star sentence composed END TO END in one plan — the
-    webtext flagship beside terrain_pipeline (point cloud) and
-    corpus_pipeline (text): coordinates extracted from each page's own
+    webtext flagship beside terrain_pipeline (point cloud):
+    coordinates extracted from each page's own
     markup (JVM regex over the binary payload) -> genuinely-hexagonal
     cell index at res 6 -> point-in-polygon join against the map-unit
     layer -> per-unit rollup (pages, distinct hex cells, distinct
@@ -6846,43 +6187,6 @@ def q_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "robust_outliers",
-    _with(
-        "s AS (SELECT lang, length(text) AS v FROM documents)",
-        "m AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n, "
-        "CAST(median(v) AS DOUBLE) AS med FROM s GROUP BY lang)",
-        "d AS (SELECT s.lang, abs(s.v - m.med) AS dev FROM s "
-        "JOIN m USING (lang))",
-        "md AS (SELECT lang, CAST(median(dev) AS DOUBLE) AS mad FROM d "
-        "GROUP BY lang)",
-        "o AS (SELECT d.lang, CAST(SUM(CASE WHEN d.dev > 3 * md.mad "
-        "THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers FROM d "
-        "JOIN md USING (lang) GROUP BY d.lang)",
-    )
-    + "SELECT m.lang, m.n, m.med, md.mad, o.n_outliers "
-    "FROM m JOIN md USING (lang) JOIN o USING (lang)",
-)
-def q_robust_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language robust length outliers: exact interpolated median,
-    exact MAD, and the 3-MAD fence census (operators/textstats.py
-    robust_outliers) — the contamination-proof outlier detector (mean
-    and stddev have unbounded breakdown; median/MAD survive anything
-    short of 50% junk).  The engine never gathers values per group:
-    both medians are COUNTING-SORT selections over (lang, value)
-    count folds — windows run over value-domain-bounded aggregates —
-    and every gate stays integer (the deviation pass runs on
-    2|v - med| = |2v - (a+b)|; the fence is 2*dev2 > 3*mad4).  The
-    oracle states the DEFINITION via DuckDB's native median() twice,
-    so the parity row certifies the counting-sort reformulation.
-    Medians and MAD are dyadic rationals — exact in float64 in both
-    engines; no rounding policy needed anywhere."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return textstats.robust_outliers(docs)
-
-
-@query(
     "setsim_pairs",
     _with(
         f"d AS ({_DOCTOKS_DUCK})",
@@ -7005,36 +6309,6 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     return dedup.containment_pairs(dedup.shingle_ids(docs))
-
-
-@query(
-    "pareto_skyline",
-    _with(
-        f"toks AS ({_TOKS_DUCK})",
-        "s AS (SELECT doc_id, n_chars, len(list_distinct(t)) "
-        "AS n_distinct_tokens FROM toks)",
-    )
-    + "SELECT doc_id, n_chars, n_distinct_tokens FROM s a "
-    "WHERE NOT EXISTS (SELECT 1 FROM s b "
-    "WHERE b.n_chars <= a.n_chars "
-    "AND b.n_distinct_tokens >= a.n_distinct_tokens "
-    "AND (b.n_chars < a.n_chars "
-    "OR b.n_distinct_tokens > a.n_distinct_tokens))",
-)
-def q_pareto_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """2-D Pareto skyline of the corpus under (MINIMIZE n_chars,
-    MAXIMIZE n_distinct_tokens) — operators/textstats.py
-    pareto_skyline.  The oracle is the textbook quadratic NOT-EXISTS
-    dominance spelling; the engine exploits the 2-D structure instead
-    (per-length max fold, strictly-increasing running max over the
-    LENGTH-sized aggregate, broadcast tag-back), so the parity row
-    proves the sort-and-sweep reformulation equals the definitional
-    dominance semantics — including the all-survive treatment of docs
-    tied on both coordinates.  All-integer; hash-exact."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return textstats.pareto_skyline(docs)
 
 
 @query(
@@ -7584,87 +6858,6 @@ def _vrm_core(spark: SparkSession, zt: DataFrame) -> DataFrame:
     )
 
 
-@query(
-    "langid_kappa",
-    _with(
-        f"d AS (SELECT doc_id, lang, {_LANGMARK_SQL} AS text "
-        "FROM documents)",
-        "toks AS (SELECT doc_id, lang, "
-        "list_filter(string_split(text, ' '), x -> x <> '') AS t FROM d)",
-        f"p AS (SELECT lang, {_PRED_LANG_CASE_DUCK} AS pred_lang "
-        "FROM toks)",
-        "ct AS (SELECT lang, pred_lang, CAST(COUNT(*) AS BIGINT) AS n "
-        "FROM p GROUP BY lang, pred_lang)",
-        "rm AS (SELECT lang AS lbl, CAST(SUM(n) AS BIGINT) AS r FROM ct "
-        "GROUP BY lang)",
-        "cm AS (SELECT pred_lang AS lbl, CAST(SUM(n) AS BIGINT) AS c "
-        "FROM ct GROUP BY pred_lang)",
-        "agg AS (SELECT CAST(SUM(n) AS BIGINT) AS nn, CAST(SUM(CASE "
-        "WHEN lang = pred_lang THEN n ELSE 0 END) AS BIGINT) AS diag "
-        "FROM ct)",
-        "pe AS (SELECT CAST(COALESCE(SUM(rm.r * cm.c), 0) AS BIGINT) AS "
-        "rc FROM rm JOIN cm ON cm.lbl = rm.lbl)",
-    )
-    + "SELECT nn AS n, diag AS n_correct, rc AS pe_num, "
-    "ROUND(CAST(diag AS DOUBLE) / CAST(nn AS DOUBLE), 6) AS accuracy, "
-    "ROUND(CAST(nn * diag - rc AS DOUBLE) / "
-    "CAST(nn * nn - rc AS DOUBLE), 6) AS kappa "
-    "FROM agg CROSS JOIN pe",
-)
-def q_langid_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohen's kappa for the language-ID classifier against the
-    declared label — chance-corrected agreement, the single number the
-    langid_confusion matrix is usually reduced to (accuracy alone
-    overstates a classifier that just predicts the majority language;
-    kappa subtracts exactly that).
-
-    Exactness: kappa = (po - pe) / (1 - pe) multiplied through by N^2
-    becomes (N*diag - sum_l r_l*c_l) / (N^2 - sum_l r_l*c_l) — ONE
-    division of two exact BIGINTs (marginal products joined on the
-    label, absent labels contribute 0); accuracy is one more.  Same
-    planted langmark corpus as langid_confusion, so the matrix has
-    real off-diagonal mass at every scale.
-
-    Scale shape: identical to langid_confusion — one scan folds to the
-    languages^2 census; marginals, products, and the scalar all run on
-    that matrix."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").selectExpr(
-        "doc_id", "lang", f"{_LANGMARK_SQL} AS text"
-    )
-    ct = (
-        textstats.langid_scores(docs)
-        .groupBy("lang", "pred_lang")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-    rm = ct.groupBy(F.col("lang").alias("lbl")).agg(
-        F.sum("n").cast("long").alias("r")
-    )
-    cm = ct.groupBy(F.col("pred_lang").alias("lbl")).agg(
-        F.sum("n").cast("long").alias("c")
-    )
-    agg = ct.agg(
-        F.sum("n").cast("long").alias("nn"),
-        F.sum(
-            F.when(F.col("lang") == F.col("pred_lang"), F.col("n"))
-            .otherwise(0)
-        ).cast("long").alias("diag"),
-    )
-    pe = rm.join(cm, "lbl").agg(
-        F.coalesce(F.sum(F.col("r") * F.col("c")), F.lit(0))
-        .cast("long").alias("rc")
-    )
-    return agg.crossJoin(F.broadcast(pe)).selectExpr(
-        "nn AS n",
-        "diag AS n_correct",
-        "rc AS pe_num",
-        "ROUND(CAST(diag AS DOUBLE) / CAST(nn AS DOUBLE), 6) AS accuracy",
-        "ROUND(CAST(nn * diag - rc AS DOUBLE) / "
-        "CAST(nn * nn - rc AS DOUBLE), 6) AS kappa",
-    )
-
-
 # Gini coefficient over sorted per-tile counts: with x_(1) <= ... <=
 # x_(n) ranked ascending, G = (2 * SUM(i * x_i) - (n + 1) * SUM(x_i)) /
 # (n * SUM(x_i)) — every accumulator an exact BIGINT, ties broken by
@@ -8049,87 +7242,6 @@ def _aniso_core(zt: DataFrame) -> DataFrame:
 
 
 @query(
-    "funnel_latency",
-    _with(
-        *_FUNNEL_CTE_LIST,
-        "d AS (SELECT CAST(FLOOR(epoch("
-        f"s{len(_FUNNEL_STAGES) - 1}.ts - s0.ts)) "
-        f"AS BIGINT) AS delta_s FROM s{len(_FUNNEL_STAGES) - 1} "
-        "JOIN s0 ON s0.user_id = "
-        f"s{len(_FUNNEL_STAGES) - 1}.user_id)",
-    )
-    + "SELECT CAST(COUNT(*) AS BIGINT) AS n_converts, "
-    "CAST(MIN(delta_s) AS BIGINT) AS min_s, "
-    "CAST(MAX(delta_s) AS BIGINT) AS max_s, "
-    "CAST(2 * median(delta_s) AS BIGINT) AS med2_s, "
-    "ROUND(CAST(SUM(delta_s) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6) "
-    "AS mean_s FROM d",
-)
-def q_funnel_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-to-convert distribution for the full funnel: per user who
-    completes signup -> ... -> purchase (the EXACT stage semantics
-    funnel_steps counts, via the shared _funnel_frames chain), the
-    seconds from first signup touch to the purchase touch — count,
-    min, max, MEDIAN, mean.  Conversion RATE (funnel_steps)
-    says how many; THIS says how long — the other number a growth
-    team reads.
-
-    Exactness: deltas are exact integer seconds — timestampdiff
-    micros DIV 1e6 engine-side, FLOOR(epoch(interval)) oracle-side,
-    both flooring the SAME fractional difference (truncating each
-    endpoint first, as unix_timestamp would, reads one second short
-    whenever the sub-second parts straddle — caught live at sf0.01);
-    med2_s is TWICE the interpolated median as an exact
-    integer via the counting-sort selection (textstats.grouped_median2
-    — the robust_outliers machinery; DuckDB's median() of an even
-    count is the average of two integers, so 2x is integer-exact);
-    min/max/count exact, mean ONE division ROUND(,6).
-
-    Scale shape: the stage chain is users-sized joins (the
-    funnel_steps shape); the median's cumulative window runs over the
-    distinct-delta domain, never the user count."""
-    frames = _funnel_frames(spark, sf_dir)
-    s0, s_last = frames[0], frames[-1]
-    d = (
-        s_last.select(
-            "user_id", F.col("ts").alias("ts_end")
-        )
-        .join(
-            s0.select("user_id", F.col("ts").alias("ts_start")),
-            "user_id",
-        )
-        .select(
-            # FLOOR of the fractional delta (events carry sub-second
-            # parts; unix_timestamp would truncate EACH side first and
-            # read one second short when the fractions straddle).
-            # timestampdiff gives exact integer micros on NTZ inputs;
-            # deltas are non-negative so DIV == FLOOR.
-            F.expr(
-                "timestampdiff(MICROSECOND, ts_start, ts_end) "
-                "DIV 1000000"
-            ).cast("long").alias("delta_s")
-        )
-    )
-    m2 = textstats.grouped_median2(
-        d.withColumn("__g", F.lit(1)), ["__g"], "delta_s"
-    ).select(F.col("m2").alias("med2_s"))
-    agg = d.agg(
-        F.count(F.lit(1)).cast("long").alias("n_converts"),
-        F.min("delta_s").cast("long").alias("min_s"),
-        F.max("delta_s").cast("long").alias("max_s"),
-        F.sum("delta_s").cast("long").alias("sum_s"),
-    )
-    return agg.crossJoin(F.broadcast(m2)).selectExpr(
-        "n_converts",
-        "min_s",
-        "max_s",
-        "CAST(med2_s AS BIGINT) AS med2_s",
-        "ROUND(CAST(sum_s AS DOUBLE) / CAST(n_converts AS DOUBLE), 6) "
-        "AS mean_s",
-    )
-
-
-@query(
     "dedup_cluster_sizes",
     "WITH RECURSIVE "
     + _MINHASH_CTES[len("WITH "):].rstrip()
@@ -8216,84 +7328,6 @@ def q_dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ROUND(CAST(n_removable AS DOUBLE) / CAST(n_docs AS DOUBLE), "
             "6) AS dedup_rate",
         )
-    )
-
-
-#: second-largest of the four language scores via the max-of-pairwise-
-#: mins identity (ties collapse the margin to 0 automatically —
-#: a two-way tie makes the second max EQUAL the max), ONE spelling
-#: over columns a/b/c/d:
-_MARGIN_M2 = (
-    "GREATEST(LEAST(a, b), LEAST(a, c), LEAST(a, d), LEAST(b, c), "
-    "LEAST(b, d), LEAST(c, d))"
-)
-
-
-@query(
-    "langid_margin",
-    _with(
-        f"d AS (SELECT doc_id, lang, {_LANGMARK_SQL} AS text "
-        "FROM documents)",
-        "toks AS (SELECT doc_id, lang, "
-        "list_filter(string_split(text, ' '), x -> x <> '') AS t FROM d)",
-        "sc AS (SELECT lang, "
-        "CAST(len(list_filter(t, x -> x IN ('the','a','and','of','to'))) "
-        "AS BIGINT) AS a, "
-        "CAST(len(list_filter(t, x -> x IN ('el','la','de','que','y'))) "
-        "AS BIGINT) AS b, "
-        "CAST(len(list_filter(t, x -> x IN ('der','die','das','und',"
-        "'ist'))) AS BIGINT) AS c, "
-        "CAST(len(list_filter(t, x -> x IN ('le','la','de','et','les'))) "
-        "AS BIGINT) AS d, "
-        f"{_PRED_LANG_CASE_DUCK} AS pred_lang FROM toks)",
-        "mg AS (SELECT CAST(GREATEST(a, b, c, d) - "
-        + _MARGIN_M2
-        + " AS BIGINT) AS margin, CASE WHEN pred_lang = lang THEN 1 "
-        "ELSE 0 END AS is_correct FROM sc)",
-    )
-    + "SELECT margin, is_correct, CAST(COUNT(*) AS BIGINT) AS n_docs "
-    "FROM mg GROUP BY margin, is_correct",
-)
-def q_langid_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Confidence-margin census for the language-ID classifier: per
-    document, the top stopword score minus the runner-up (the
-    max-of-pairwise-mins identity computes the second max in one
-    branch-free spelling; ties collapse the margin to 0), crossed
-    with correctness — the table an operator reads to SET the
-    abstention threshold (langid_confusion says where errors go,
-    langid_kappa how much is chance; THIS says at what margin errors
-    actually live, and whether margin-0 docs should fall back to
-    'und').  Same planted langmark corpus as the confusion matrix.
-
-    Exactness: scores are integer stopword counts; GREATEST/LEAST
-    over integers, margin an exact BIGINT, counts exact — nothing to
-    round anywhere.
-
-    Scale shape: one scan folds per-doc scores to the (margin,
-    correct) census — output bounded by the max stopword count, not
-    the corpus."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").selectExpr(
-        "doc_id", "lang", f"{_LANGMARK_SQL} AS text"
-    )
-    sc = textstats.langid_scores(docs).select(
-        "lang",
-        F.col("score_en").cast("long").alias("a"),
-        F.col("score_es").cast("long").alias("b"),
-        F.col("score_de").cast("long").alias("c"),
-        F.col("score_fr").cast("long").alias("d"),
-        "pred_lang",
-    )
-    mg = sc.select(
-        (
-            F.greatest("a", "b", "c", "d") - F.expr(_MARGIN_M2)
-        ).cast("long").alias("margin"),
-        F.when(F.col("pred_lang") == F.col("lang"), 1)
-        .otherwise(0).alias("is_correct"),
-    )
-    return mg.groupBy("margin", "is_correct").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs")
     )
 
 
@@ -8479,7 +7513,7 @@ DRIVER_WINDOW: list[str] = [
     "mosaic_tiles",
     "profile_peaks", "stratified_sample",
     "extract_pages",
-    "terrain_pipeline", "corpus_pipeline",
+    "terrain_pipeline", "pip_partitioned",
     "manifest_bbox_scan", "manifest_incremental",
     "pages_geocode",
     "dedup_clusters",

@@ -356,39 +356,6 @@ def test_incremental_replayed_batch_emits_no_self_pairs(spark, tmp_path):
     assert {(r.doc_a, r.doc_b) for r in replay} == first
 
 
-def test_temperature_mix_sample_exact_and_deterministic(spark):
-    """alpha=0.5 language mixing: the rarest language keeps everything
-    (thr == MIX_M), every kept count equals an independent pure-Python
-    replay of the hash-threshold rule, and two runs agree exactly."""
-    import hashlib
-
-    from rgr_pdal_topo_spark.operators.textstats import (
-        MIX_M,
-        temperature_mix_sample,
-    )
-
-    rows = [(i, "en" if i % 10 else "fi") for i in range(1000)]
-    df = spark.createDataFrame(rows, "doc_id long, lang string")
-    got = {r.lang: r for r in temperature_mix_sample(df).collect()}
-    assert got["fi"].n_total == 100 and got["en"].n_total == 900
-    assert got["fi"].thr == MIX_M          # rarest language: keep all
-    assert got["fi"].n_kept == 100
-    assert got["en"].thr < MIX_M
-
-    def keep(doc_id, thr):
-        h = hashlib.md5(str(doc_id).encode()).hexdigest()
-        return (int(h[:15], 16) % MIX_M) < thr
-
-    import math
-    thr_en = math.floor(MIX_M * math.sqrt(100.0 / 900.0))
-    assert got["en"].thr == thr_en
-    want_en = sum(1 for i, l in rows if l == "en" and keep(i, thr_en))
-    assert got["en"].n_kept == want_en
-    assert 0 < got["en"].n_kept < 900      # genuinely downsampled
-    again = {r.lang: r.n_kept for r in temperature_mix_sample(df).collect()}
-    assert again == {l: r.n_kept for l, r in got.items()}
-
-
 def test_shingle_dup_stats_planted(spark):
     """A doc assembled from another doc's text shows the shared shingles
     as duplicated; unique text shows zero."""

@@ -51,6 +51,38 @@ def test_bench_headline_names_registered_queries():
     assert len(set(bench.HEADLINE)) == len(bench.HEADLINE)
 
 
+def test_docs_name_only_registered_queries():
+    """COVERAGE.md's `<name> ✓oracle` entries must name oracle-backed
+    queries, and the Driver query column of SURVEY.md's additions table
+    must name registered ones, so retiring a query without its doc rows
+    fails here."""
+    import re
+    from pathlib import Path
+
+    from rgr_pdal_topo_spark.queries import ORACLES, QUERIES
+
+    root = Path(__file__).resolve().parent.parent
+    cov = (root / "COVERAGE.md").read_text()
+    # a name right before the mark; "queries" is F13's "all grid queries"
+    names = re.findall(r"(?<![\w/])([a-z][a-z0-9_]*) ✓oracle", cov)
+    stale = sorted({n for n in names if n not in ORACLES} - {"queries"})
+    assert names and not stale, f"COVERAGE.md ✓oracle names: {stale}"
+
+    lines = (root / "SURVEY.md").read_text().splitlines()
+    head = lines.index("| Addition | Where | Driver query |")
+    tokens = []
+    for line in lines[head + 2:]:
+        if not line.startswith("|"):
+            break
+        col = re.split(r"[(+]", line.strip().strip("|").split("|")[-1])[0]
+        tokens += [
+            t for t in re.findall(r"\w+", col)
+            if t not in ("pytest", "plan", "pins")
+        ]
+    stale = sorted({t for t in tokens if t not in QUERIES})
+    assert tokens and not stale, f"SURVEY.md driver queries: {stale}"
+
+
 def test_default_driver_heap_fits_in_physical_memory(spark):
     """Without SPARK_GRAFT_DRIVER_MEM the driver heap is sized below the
     host's RAM, so the JVM cannot grow until the kernel kills it."""

@@ -180,33 +180,6 @@ def test_streaming_equals_batch(spark, tmp_path):
     np.testing.assert_allclose(got.sum_value, batch.sum_value, atol=2e-6)
 
 
-def test_langid_discriminates_languages(spark):
-    """The driver corpus is English-shaped for every lang label, so the
-    driver row only exercises the all-zero/en path — discrimination must
-    be pinned here: planted function-word texts predict their language,
-    and score ties keep the earlier code in the en<es<de<fr preference
-    order (strict > to switch)."""
-    from rgr_pdal_topo_spark.operators.textstats import langid_scores
-
-    rows = [
-        (1, "en", "the cat and the dog of a house to go"),
-        (2, "es", "el perro de la casa que ladra y corre"),
-        (3, "de", "der hund und die katze das ist gut"),
-        (4, "fr", "le chat et les chiens de le parc"),
-        (5, "tie", "la de"),  # es == fr == 2 -> es (earlier preference)
-        (6, "none", "zebra quark flux"),  # all-zero -> en default
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, lang string, text string")
-    got = {r.doc_id: r for r in langid_scores(df).collect()}
-    assert got[1].pred_lang == "en" and got[1].score_en == 6
-    assert got[2].pred_lang == "es" and got[2].score_es == 5
-    assert got[3].pred_lang == "de" and got[3].score_de == 5
-    assert got[4].pred_lang == "fr" and got[4].score_fr == 5
-    assert got[5].pred_lang == "es" and got[5].score_es == 2
-    assert got[5].score_fr == 2
-    assert got[6].pred_lang == "en" and got[6].score_en == 0
-
-
 def test_exact_dedup_groups_on_planted_duplicates(spark):
     """The driver corpus has no exact duplicate texts (every group_size
     is 1), so real grouping must be pinned here: planted duplicate texts
@@ -363,267 +336,6 @@ def test_session_window_boundary_semantics(spark, tmp_path):
     assert got == {1: 1, 2: 2}
 
 
-def test_dsir_weights_separates_target_from_junk(spark):
-    """DSIR sign semantics on a planted corpus: documents whose bigrams
-    live only in the C4-gate-passing (target) slice must outscore
-    documents built from gate-failing junk bigrams, with positive vs
-    negative scores respectively; bigram counts are exact."""
-    from rgr_pdal_topo_spark.operators import textstats
-
-    rows = []
-    # 6 target docs: 24 distinct tokens (pass the >= 20-token C4 gate),
-    # vocabulary disjoint from the junk slice
-    for i in range(6):
-        rows.append((i, " ".join(f"good{i}w{j}" for j in range(24))))
-    # 6 junk docs: 5 tokens (fail the gate), own vocabulary
-    for i in range(6, 12):
-        rows.append((i, " ".join(f"junk{i}w{j}" for j in range(5))))
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r["doc_id"]: (r["n_bigrams"], r["score"])
-        for r in textstats.dsir_weights(docs).collect()
-    }
-    assert set(got) == set(range(12))
-    for i in range(12):
-        assert got[i][0] == (23 if i < 6 else 4)
-    good = [got[i][1] for i in range(6)]
-    junk = [got[i][1] for i in range(6, 12)]
-    # every target doc outscores every junk doc; signs separate
-    assert min(good) > max(junk)
-    assert all(s > 0 for s in good) and all(s < 0 for s in junk)
-
-
-def test_source_quality_planted_rollup(spark):
-    """Hand-computed per-source rollup: gate pass counts, token totals,
-    and cross-document shingle duplication attributed to each source."""
-    from rgr_pdal_topo_spark.operators import textstats
-
-    rows = [
-        # src a: one gate-passing doc (24 tokens), one failing (5)
-        (0, "a", "en", " ".join(f"g{j}" for j in range(24))),
-        (1, "a", "en", "x1 x2 x3 x4 x5"),
-        # src b: the failing doc shares the shingle "x1 x2 x3" with doc 1;
-        # the passing doc has 23 tokens
-        (2, "b", "en", "x1 x2 x3 y1 y2"),
-        (3, "b", "en", " ".join(f"h{j}" for j in range(23))),
-    ]
-    docs = spark.createDataFrame(
-        rows, "doc_id long, source string, lang string, text string"
-    )
-    got = {
-        r["source"]: (
-            r["n_docs"], r["n_kept"], r["total_tokens"],
-            r["total_shingles"], r["total_dup_shingles"],
-        )
-        for r in textstats.source_quality(docs).collect()
-    }
-    assert got == {
-        # 22 + 3 shingles; the one shared shingle counts once per side
-        "a": (2, 1, 29, 25, 1),
-        "b": (2, 1, 28, 24, 1),
-    }
-
-
-def test_token_packing_planted_boundaries(spark):
-    """Hand-computed packing with chunk=512: boundary-straddling docs
-    counted, contiguous cumsum bins, zero-token docs excluded."""
-    from rgr_pdal_topo_spark.operators import textstats
-
-    def words(n):
-        return " ".join(f"w{j}" for j in range(n))
-
-    rows = [
-        (0, "a", ""),            # zero tokens -> excluded entirely
-        (1, "a", words(300)),    # [0, 299]    bin 0
-        (2, "a", words(300)),    # [300, 599]  bins 0-1 -> split
-        (3, "a", words(300)),    # [600, 899]  bin 1
-        (4, "b", words(100)),    # [0, 99]     bin 0
-        (5, "b", words(500)),    # [100, 599]  bins 0-1 -> split
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    got = {
-        r["source"]: (r["n_docs"], r["total_tokens"], r["n_bins"],
-                      r["n_split_docs"])
-        for r in textstats.token_packing(docs).collect()
-    }
-    assert got == {"a": (3, 900, 2, 1), "b": (2, 600, 2, 1)}
-
-
-def test_bigram_ppl_gibberish_scores_worse(spark):
-    """Gate semantics: a document whose bigrams all occur in the clean
-    (C4-gate-passing) slice scores a much lower per-token nll than a
-    same-length document of corpus-unseen gibberish bigrams; counts are
-    exact and every nll is positive."""
-    from rgr_pdal_topo_spark.operators import textstats
-
-    common = " ".join(f"c{j % 6}" for j in range(24))   # 24 toks, 6-word loop
-    rows = [(i, common) for i in range(8)]              # clean slice (pass gate)
-    rows.append((8, " ".join(f"c{j % 6}" for j in range(12))))  # fails gate
-    rows.append((9, " ".join(f"z{j}" for j in range(12))))      # gibberish
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r["doc_id"]: (r["n_bigrams"], r["nll_q"])
-        for r in textstats.bigram_ppl(docs).collect()
-    }
-    assert set(got) == set(range(10))
-    assert all(n == (23 if i < 8 else 11) for i, (n, _) in got.items())
-    assert all(v > 0 for _, v in got.values())
-    per_tok_seen = got[8][1] / got[8][0]     # bigrams all in the LM
-    per_tok_junk = got[9][1] / got[9][0]     # bigrams/contexts all unseen
-    assert per_tok_junk > 2 * per_tok_seen
-
-
-def test_release_pipeline_python_replay(spark):
-    """Full pure-Python replay of the composed release: exact-dedup
-    winners, C4 gate, stopword langid (with tie order), hash split,
-    BPE-estimate totals — over a corpus exercising every stage."""
-    import hashlib
-    import math
-
-    from pyspark.sql import functions as FF
-
-    from rgr_pdal_topo_spark.operators import dedup as dd
-    from rgr_pdal_topo_spark.operators import textstats
-
-    en = ("the a and of to " * 4).strip()          # 20 toks, passes
-    es = ("el la de que y " * 4).strip()           # 20 toks, passes, es
-    texts = {0: en, 1: en, 2: es, 3: "x1 x2 x3 x4 x5"}  # 1 dups 0; 3 fails
-    for i in range(4, 10):
-        texts[i] = ("the a and of to " * 3).strip() + (
-            f" u{i} v{i} w{i} z{i} q{i}"
-        )
-    docs = spark.createDataFrame(
-        [(i, "xx", t) for i, t in texts.items()],
-        "doc_id long, lang string, text string",
-    )
-
-    prof = {
-        "en": {"the", "a", "and", "of", "to"},
-        "es": {"el", "la", "de", "que", "y"},
-        "de": {"der", "die", "das", "und", "ist"},
-        "fr": {"le", "la", "de", "et", "les"},
-    }
-
-    def replay():
-        winners = {}
-        for i in sorted(texts):
-            winners.setdefault(texts[i], i)
-        out = {}
-        for i, t in texts.items():
-            if winners[t] != i:
-                continue
-            toks = [x for x in t.split(" ") if x]
-            n = len(toks)
-            avg = sum(len(x) for x in toks) / n
-            if not (n >= 20 and avg <= 12.0 and len(set(toks)) / n >= 0.1):
-                continue
-            scores = {c: sum(1 for x in toks if x in prof[c]) for c in prof}
-            pred, best = "en", scores["en"]
-            for c in ("es", "de", "fr"):
-                if scores[c] > best:
-                    pred, best = c, scores[c]
-            b = int(hashlib.md5(str(i).encode()).hexdigest()[:15], 16) % 10
-            split = {8: "val", 9: "test"}.get(b, "train")
-            bpe = sum(math.ceil(len(x) / 4) for x in toks)
-            d = out.setdefault((split, pred), [0, 0, 0])
-            d[0] += 1
-            d[1] += n
-            d[2] += bpe
-        return {k: tuple(v) for k, v in out.items()}
-
-    expected = replay()
-    assert len(expected) >= 2        # the corpus must exercise >1 group
-
-    winners = docs.groupBy(FF.md5("text").alias("dg")).agg(
-        FF.min("doc_id").alias("doc_id")
-    )
-    kept = docs.join(winners.select("doc_id"), "doc_id", "left_semi")
-    scored = textstats.quality_langid(kept).filter(FF.col("keep") == 1)
-    out = scored.withColumn("split", dd.split_col(FF.col("doc_id")))
-    rows = out.groupBy("split", "pred_lang").agg(
-        FF.count(FF.lit(1)).alias("n_docs"),
-        FF.sum("n_tokens").alias("total_tokens"),
-        FF.sum("bpe_tokens_est").alias("total_bpe_tokens"),
-    ).collect()
-    got = {
-        (r["split"], r["pred_lang"]): (
-            r["n_docs"], r["total_tokens"], r["total_bpe_tokens"]
-        )
-        for r in rows
-    }
-    assert got == expected
-
-
-def test_bpe_pair_counts_hand_computed(spark):
-    """Planted case: pair counts are occurrence-weighted ('ab' twice as a
-    word and once inside 'abc' -> 3), single-char words emit nothing,
-    ties and ordering are (cnt DESC, pair ASC), rank is 1-based."""
-    from rgr_pdal_topo_spark.operators import textstats
-
-    docs = spark.createDataFrame(
-        [(0, "ab ab abc"), (1, "bc a")], "doc_id long, text string"
-    )
-    got = [
-        (r["rank"], r["pair"], r["cnt"])
-        for r in textstats.bpe_pair_counts(docs).orderBy("rank").collect()
-    ]
-    assert got == [(1, "ab", 3), (2, "bc", 2)]
-
-
-def test_ccnet_buckets_matches_ntile_replay(spark):
-    """Pure-Python replay of the two-level rank: per-language NTILE(3)
-    over (integer per-token nll, doc_id) recomputed from bigram_ppl's
-    own output must reproduce ccnet_buckets' aggregation exactly —
-    pinning the offset+within-rank assembly AND the (rank-1)*3 div n + 1
-    tile formula against the textbook definition."""
-    from rgr_pdal_topo_spark.operators import textstats
-
-    # two languages, uneven doc counts (7 and 5) so ceil-first tile
-    # sizes differ (3/2/2 and 2/2/1); per-doc nll varies via gibberish
-    rows = []
-    did = 0
-    for lang, n_docs in (("en", 7), ("es", 5)):
-        clean = " ".join(f"{lang}w{j % 6}" for j in range(24))
-        for i in range(n_docs):
-            junk = " ".join(f"{lang}junk{did}x{j}" for j in range(i))
-            rows.append((did, (clean + " " + junk).strip(), lang))
-            did += 1
-    docs = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-
-    ppl = {
-        r["doc_id"]: (r["n_bigrams"], r["nll_q"])
-        for r in textstats.bigram_ppl(docs).collect()
-    }
-    lang_of = {r[0]: r[2] for r in rows}
-    expect: dict[tuple, list] = {}
-    for lang in ("en", "es"):
-        scored = sorted(
-            (nll * 1024 // nb, d)
-            for d, (nb, nll) in ppl.items()
-            if lang_of[d] == lang
-        )
-        n = len(scored)
-        for r0, (_, d) in enumerate(scored):
-            bucket = r0 * 3 // n + 1  # == NTILE(3) ceil-first sizes
-            nb, nll = ppl[d]
-            agg = expect.setdefault((lang, bucket), [0, 0, 0, None, None])
-            agg[0] += 1
-            agg[1] += nb
-            agg[2] += nll
-            agg[3] = nll if agg[3] is None else min(agg[3], nll)
-            agg[4] = nll if agg[4] is None else max(agg[4], nll)
-
-    got = {
-        (r["lang"], r["bucket"]): [
-            r["n_docs"], r["total_bigrams"], r["total_nll_q"],
-            r["min_nll_q"], r["max_nll_q"],
-        ]
-        for r in textstats.ccnet_buckets(docs).collect()
-    }
-    assert got == expect
-    assert {b for (_, b) in got} == {1, 2, 3}
-
-
 def _write_events(spark, rows, d=None):
     import os
     import tempfile
@@ -736,40 +448,6 @@ def test_tile_pyramid_partitions_pages_per_zoom(spark):
         cells[r.zoom] = cells.get(r.zoom, 0) + 1
     assert per_zoom == {5: n, 8: n, 12: n}
     assert cells[5] <= cells[8] <= cells[12]
-
-
-def test_langid_confusion_planted_matrix(spark):
-    """Exact matrix on a hand corpus: even-id de/es/fr docs carry the
-    planted marker and classify correctly; odd ids and zh default to
-    'en'; en rows are diagonal."""
-    import os
-    import tempfile
-
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    rows = [
-        (0, "the a and of to", "de"),   # even -> marker -> de
-        (1, "the a and of to", "de"),   # odd  -> en default
-        (2, "plain words here", "es"),  # even -> es
-        (3, "plain words here", "zh"),  # zh never planted -> en
-        (4, "the a and", "en"),         # en -> en (diagonal)
-    ]
-    docs = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string"
-    )
-    d = tempfile.mkdtemp()
-    docs.write.mode("overwrite").parquet(os.path.join(d, "documents.parquet"))
-    got = {
-        (r.lang, r.pred_lang): (r.is_correct, r.n_docs)
-        for r in QUERIES["langid_confusion"](spark, d).collect()
-    }
-    assert got == {
-        ("de", "de"): (1, 1),
-        ("de", "en"): (0, 1),
-        ("es", "es"): (1, 1),
-        ("zh", "en"): (0, 1),
-        ("en", "en"): (1, 1),
-    }
 
 
 def test_hotspot_cells_exceed_recomputed_expectation(spark):
@@ -910,98 +588,6 @@ def test_geary_c_checkerboard_vs_plane(spark):
     assert geary(plane) < 0.2
 
 
-def test_pareto_skyline_planted(spark, tmp_path):
-    """Hand corpus with every skyline edge case: strict dominance on
-    one axis, dominance with one tie, and a full two-coordinate tie
-    (BOTH docs survive — neither dominates the other)."""
-    rows = [
-        (0, "a"),          # len 1, div 1 — survives (nothing shorter)
-        (1, "a b"),        # len 3, div 2 — survives
-        (2, "a a a"),      # len 5, div 1 — dominated by doc 0 (shorter, same div)
-        (3, "a b c"),      # len 5, div 3 — survives
-        (4, "x y z"),      # len 5, div 3 — ties doc 3 on BOTH: survives too
-        (5, "a b c d e"),  # len 9, div 5 — survives
-        (6, "a b c d d"),  # len 9, div 4 — dominated by doc 5 (same len, more div)
-        (7, "aa bb"),      # len 5, div 2 — dominated by doc 1 (shorter, same div)
-    ]
-    spark.createDataFrame(rows, "doc_id long, text string").coalesce(
-        1
-    ).write.parquet(str(tmp_path / "documents.parquet"))
-
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    got = {
-        r.doc_id: (r.n_chars, r.n_distinct_tokens)
-        for r in QUERIES["pareto_skyline"](spark, str(tmp_path)).collect()
-    }
-    assert got == {0: (1, 1), 1: (3, 2), 3: (5, 3), 4: (5, 3), 5: (9, 5)}
-
-
-def test_pareto_skyline_frontier_is_strictly_increasing(spark):
-    """On the real sf0.001 corpus the surviving (length, diversity)
-    pairs must be strictly increasing in BOTH coordinates across
-    distinct lengths (the defining shape of a 2-D skyline), and every
-    survivor must be undominated under a brute-force pandas check."""
-    from rgr_pdal_topo_spark.operators import textstats as ts
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF_DIR, "documents")
-    sky = ts.pareto_skyline(docs).toPandas()
-    front = (
-        sky[["n_chars", "n_distinct_tokens"]]
-        .drop_duplicates()
-        .sort_values("n_chars")
-    )
-    assert front.n_chars.is_monotonic_increasing
-    assert front.n_distinct_tokens.is_monotonic_increasing
-    assert front.n_distinct_tokens.diff().dropna().gt(0).all()
-
-    stats = ts.text_stats(docs).toPandas()[
-        ["doc_id", "n_chars", "n_distinct_tokens"]
-    ]
-    for _, s in sky.iterrows():
-        dom = stats[
-            (stats.n_chars <= s.n_chars)
-            & (stats.n_distinct_tokens >= s.n_distinct_tokens)
-            & (
-                (stats.n_chars < s.n_chars)
-                | (stats.n_distinct_tokens > s.n_distinct_tokens)
-            )
-        ]
-        assert dom.empty, f"doc {s.doc_id} is dominated by {dom.doc_id.tolist()}"
-
-
-def test_robust_outliers_planted(spark, tmp_path):
-    """Hand corpus per the textbook MAD mechanics: odd group (exact
-    middle), even group (interpolated .5 median), and a planted giant
-    that the 3-MAD fence catches while the mean/stddev z-score would
-    be dragged by it."""
-    rows = [
-        # lang 'aa': lengths 3,5,7,9,1000 -> med 7, devs {4,2,0,2,993}
-        # -> MAD 2, fence 6: only the 1000-length doc is out
-        (0, "aaa", "aa"), (1, "aaaaa", "aa"), (2, "a" * 7, "aa"),
-        (3, "a" * 9, "aa"), (4, "a" * 1000, "aa"),
-        # lang 'bb': lengths 2,4,6,8 -> med 5.0, devs {3,1,1,3}
-        # -> MAD 2.0, fence 6.0: nobody is out
-        (5, "bb", "bb"), (6, "bbbb", "bb"), (7, "b" * 6, "bb"),
-        (8, "b" * 8, "bb"),
-    ]
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string"
-    ).coalesce(1).write.parquet(str(tmp_path / "documents.parquet"))
-
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    got = {
-        r.lang: (r.n, r.med, r.mad, r.n_outliers)
-        for r in QUERIES["robust_outliers"](spark, str(tmp_path)).collect()
-    }
-    assert got == {
-        "aa": (5, 7.0, 2.0, 1),
-        "bb": (4, 5.0, 2.0, 0),
-    }
-
-
 def test_vrm_plane_exactly_zero_and_numpy_parity(spark):
     """A planar DEM of ANY tilt has identical unit normals everywhere,
     so interior VRM is EXACTLY 0.0 with m == 9 (the property that
@@ -1073,42 +659,6 @@ def test_vrm_plane_exactly_zero_and_numpy_parity(spark):
     )
     assert (center["sx"], center["sy"], center["sz"]) == (sx, sy, sz)
     assert center["vrm"] == exp_vrm
-
-
-def test_langid_kappa_exact_endpoints(spark):
-    """Perfect agreement gives kappa EXACTLY 1.0; a constant-prediction
-    classifier gives kappa EXACTLY 0.0 even at 50% accuracy (the
-    chance-correction that separates kappa from accuracy) — every
-    accumulator an exact integer, the divisions land on exact values.
-    Odd doc_ids avoid the langmark injection (doc_id % 2 = 0)."""
-    import os
-    import tempfile
-
-    import pandas as pd
-
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    def run(texts, langs):
-        df = pd.DataFrame(
-            {
-                "doc_id": [2 * i + 1 for i in range(len(texts))],
-                "text": texts,
-                "lang": langs,
-                "source": ["s"] * len(texts),
-                "n_chars": [9] * len(texts),
-            }
-        )
-        with tempfile.TemporaryDirectory() as d:
-            df.to_parquet(os.path.join(d, "documents.parquet"))
-            [r] = QUERIES["langid_kappa"](spark, d).collect()
-        return r
-
-    en = "the a and of to"
-    de = "der die das und ist"
-    perfect = run([en, en, de, de], ["en", "en", "de", "de"])
-    assert (perfect["accuracy"], perfect["kappa"]) == (1.0, 1.0)
-    constant = run([en, en, en, en], ["en", "en", "de", "de"])
-    assert (constant["accuracy"], constant["kappa"]) == (0.5, 0.0)
 
 
 def test_tile_skew_planted(spark):
@@ -1205,84 +755,6 @@ def test_semivariogram_aniso_striped_fabric(spark):
         assert r["gamma"] == 2.0
     for h in (2, 4):
         assert got[("ns", h)]["sdiff2"] == 0
-
-
-def test_funnel_latency_planted(spark):
-    """Two converting users with hand-built stage chains (10 s and
-    20 s signup->purchase, one with straddling sub-second parts to
-    pin the fractional-floor rule), one non-converter: n = 2,
-    min 10, max 20, med2 = 30, mean 15.0."""
-    import os
-    import tempfile
-
-    import pandas as pd
-
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    t0 = pd.Timestamp("2024-01-01 12:00:00")
-    s = pd.Timedelta(seconds=1)
-    rows = []
-
-    def chain(uid, base, deltas):
-        for i, (et, dt) in enumerate(
-            zip(("signup", "view", "click", "purchase"), deltas)
-        ):
-            rows.append((len(rows), base + dt, uid, et, 1.0, "{}"))
-
-    # user 1: purchase at +10.9s from signup at +0.2s -> floor 10
-    chain(1, t0, [0.2 * s, 2 * s, 5 * s, 11.1 * s])
-    # user 2: signup +0, purchase +20s exactly
-    chain(2, t0, [0 * s, 6 * s, 12 * s, 20 * s])
-    # user 3: no purchase
-    chain(3, t0, [0 * s, 3 * s, 4 * s, 4 * s])
-    rows = [r for r in rows if not (r[2] == 3 and r[3] == "purchase")]
-    ev = pd.DataFrame(
-        rows,
-        columns=["event_id", "ts", "user_id", "event_type", "value", "props"],
-    ).astype({"ts": "datetime64[us]"})
-    with tempfile.TemporaryDirectory() as d:
-        ev.to_parquet(os.path.join(d, "events.parquet"))
-        [r] = QUERIES["funnel_latency"](spark, d).collect()
-    assert (r["n_converts"], r["min_s"], r["max_s"]) == (2, 10, 20)
-    assert r["med2_s"] == 30
-    assert r["mean_s"] == 15.0
-
-
-def test_langid_margin_planted(spark):
-    """Hand-built margins: a doc with 3 'the' + 1 'der' has margin 2
-    and is correct for lang=en; a doc tying en and de at 2-2 has
-    margin 0 (the pairwise-min identity collapses ties); a pure-de
-    doc labeled en is incorrect at its margin.  Odd doc_ids dodge
-    the langmark injection."""
-    import os
-    import tempfile
-
-    import pandas as pd
-
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    df = pd.DataFrame(
-        {
-            "doc_id": [1, 3, 5],
-            "text": [
-                "the the the der x",        # en margin 2, correct
-                "the a der die x",          # 2-2 tie -> margin 0
-                "der die das und ist x",    # de, labeled en -> wrong
-            ],
-            "lang": ["en", "en", "en"],
-            "source": ["s"] * 3,
-            "n_chars": [9] * 3,
-        }
-    )
-    with tempfile.TemporaryDirectory() as d:
-        df.to_parquet(os.path.join(d, "documents.parquet"))
-        got = {
-            (r["margin"], r["is_correct"]): r["n_docs"]
-            for r in QUERIES["langid_margin"](spark, d).collect()
-        }
-    assert got[(2, 1)] == 1       # the-heavy doc
-    assert got[(0, 1)] == 1       # tie resolves to en (preference order)
-    assert got[(5, 0)] == 1       # pure-de doc mislabeled
 
 
 def test_resample_error_analytic(spark):

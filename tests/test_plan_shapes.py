@@ -424,18 +424,6 @@ def test_pii_scrub_zero_shuffle_no_python(spark):
     assert "Join" not in plan
 
 
-def test_lang_mix_sample_broadcasts_rates(spark):
-    """The mixing sampler's corpus side must join the per-language rates
-    by broadcast (never shuffle the documents) and aggregate
-    partial+final."""
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    plan = _plan(QUERIES["lang_mix_sample"](spark, SF_DIR))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-    assert plan.count("HashAggregate") >= 2
-
-
 def test_crawl_consolidation_single_partial_agg(spark):
     from rgr_pdal_topo_spark.operators import pages
 
@@ -451,26 +439,6 @@ def test_crawl_consolidation_single_partial_agg(spark):
     assert "Window" not in plan
     assert "Join" not in plan
     assert plan.count("Exchange") == 2
-
-
-def test_asof_join_single_shuffle_no_join(spark):
-    from rgr_pdal_topo_spark.operators import joins, pages
-
-    views = pages.view_log_df(spark, SF_DIR)
-    fetches = pages.fetch_log_df(spark, SF_DIR).select(
-        "url", "warc_epoch", F.md5("text").alias("digest")
-    )
-    plan = _plan(
-        joins.asof_join(
-            views, fetches, "url", "view_epoch", "warc_epoch", ["digest"]
-        )
-    )
-    assert "Join" not in plan  # zero join nodes — union + carry only
-    # exactly one exchange hashpartitions the union on the key
-    import re
-
-    hashparts = re.findall(r"Exchange hashpartitioning\(url", plan)
-    assert len(hashparts) == 1
 
 
 def test_dup_spans_windows_partition_by_doc(spark):
@@ -489,94 +457,6 @@ def test_dup_spans_windows_partition_by_doc(spark):
             assert "doc_id" in line
     # per-doc span and final stats aggs combine map-side
     assert "partial_count" in plan
-
-
-def test_dsir_weights_broadcasts_bucket_table(spark):
-    """The DSIR_BUCKETS-row weight table must broadcast into the scoring
-    join (the corpus never re-shuffles for it), the scalar totals must
-    never become a cartesian product, and the score agg combines
-    map-side."""
-    from rgr_pdal_topo_spark.operators import textstats
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF_DIR, "documents")
-    plan = _plan(textstats.dsir_weights(docs))
-    assert plan.count("BroadcastHashJoin") >= 1
-    assert "CartesianProduct" not in plan
-    assert "partial_sum" in plan
-
-
-def test_source_quality_rollup_is_partial_final(spark):
-    """The per-source rollup and the shingle document-frequency agg both
-    combine map-side; the doc-keyed joins never go cartesian."""
-    from rgr_pdal_topo_spark.operators import textstats
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF_DIR, "documents")
-    plan = _plan(textstats.source_quality(docs))
-    assert "partial_count" in plan and "partial_sum" in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_token_packing_windows_partition_by_shard(spark):
-    """The packing cumsum must never be a global window: every Window
-    node partitions by the shard column."""
-    from rgr_pdal_topo_spark.operators import textstats
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF_DIR, "documents")
-    plan = _plan(textstats.token_packing(docs))
-    assert "Window" in plan
-    for line in plan.splitlines():
-        if "Window [" in line:
-            assert "source" in line
-    assert "partial_sum" in plan
-
-
-def test_bigram_ppl_broadcasts_vocab_scalar(spark):
-    """The vocab-size scalar broadcasts (no cartesian), the LM tables
-    join back by key, and the count/score aggs combine map-side."""
-    from rgr_pdal_topo_spark.operators import textstats
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF_DIR, "documents")
-    plan = _plan(textstats.bigram_ppl(docs))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-    assert "partial_count" in plan and "partial_sum" in plan
-
-
-def test_bpe_pairs_topk_window_over_aggregated_pairs(spark):
-    """The pair count combines map-side onto the alphabet^2-bounded key
-    space; the ONE window (top-k rank) runs over that aggregated table,
-    never the corpus; no Python anywhere."""
-    from rgr_pdal_topo_spark.operators import textstats
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF_DIR, "documents")
-    plan = _plan(textstats.bpe_pair_counts(docs))
-    assert "partial_count" in plan
-    assert plan.count("Window [") == 1
-    assert "EvalPython" not in plan
-
-
-def test_ccnet_buckets_no_per_lang_global_window(spark):
-    """The scale contract: NO window partitions by lang alone over the
-    document stream — the row_number runs per (lang, key) and the
-    offset cumsum runs over the aggregated per-key table; the offset
-    and per-language-total joins broadcast."""
-    from rgr_pdal_topo_spark.operators import textstats
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF_DIR, "documents")
-    plan = _plan(textstats.ccnet_buckets(docs))
-    for line in plan.splitlines():
-        if "row_number" in line and "Window [" in line:
-            # within-rank partitions by BOTH lang and the nll key
-            assert "key" in line.split("windowspecdefinition")[1]
-    assert plan.count("BroadcastHashJoin") >= 2
-    assert "CartesianProduct" not in plan
-    assert "partial_count" in plan and "partial_sum" in plan
 
 
 def test_contour_cases_single_scan_no_self_join(spark):

@@ -3,6 +3,8 @@ box 'buildings' — roofs must classify non-ground, open terrain ground."""
 
 from __future__ import annotations
 
+import warnings
+
 import numpy as np
 import pandas as pd
 
@@ -44,6 +46,18 @@ def test_smrf_surface_removes_buildings():
     assert np.nanmax(out[12:18, 12:18]) < 1.0
     # terrain far away untouched
     assert abs(out[30, 30]) < 1e-12
+
+
+def test_smrf_surface_all_nan_tile_is_silent_nan():
+    """Edge tile: an all-NaN min-z grid (no points in the tile or its
+    halo) opens to an all-NaN surface without a warning."""
+    h = 2 * sum(range(1, 5))  # halo for the default max_window=4
+    p = np.full((6 + 2 * h, 6 + 2 * h), np.nan)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        out = smrf_surface(p, 1.0, 1.0)
+    assert out.shape == (6, 6)
+    assert np.isnan(out).all()
 
 
 def test_classify_ground_scene(spark):
