@@ -1,9 +1,10 @@
 #!/usr/bin/env python
 """Per-query bench drift table (VERDICT r3 "Next round" #6).
 
-The judge could not attribute minhash_buckets 1.0->1.4 s / sessionize
-0.56->0.74 s between rounds 2 and 3 without re-deriving that the code was
-diff-identical — this script makes drift adjudication a one-command diff.
+Per-query drift between rounds (sessionize 0.56->0.74 s between rounds
+2 and 3, say) could not be attributed without re-deriving that the code
+was diff-identical — this script makes drift adjudication a one-command
+diff.
 
 Reads every driver round file (BENCH_r*.json, payload under "parsed") plus
 the committed exclusive-run log (BENCH/exclusive_runs.jsonl: one JSON

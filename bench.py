@@ -27,8 +27,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # The headline subset: one per operator family (scan/derive, gridding agg,
 # stencil engine, spatial joins, dedup, relational, windows).  The
-# first 18 entries are the "comparable-20 subtotal" of BENCH/BASELINE.md
-# less its cosine_topk and text_stats, which are no longer registered.
+# first 17 entries are the "comparable-20 subtotal" of BENCH/BASELINE.md
+# less its cosine_topk, text_stats and MinHash-bucket entries, which are
+# no longer registered.
 # A query whose builder does its work eagerly (localCheckpoint or collect
 # at build time) is left out, because the noop-sink timing would measure
 # a checkpoint re-read, not the work; each such absence is noted where it
@@ -42,7 +43,6 @@ HEADLINE = [
     "knn_gps",
     "profile_extract",
     "hag",
-    "minhash_buckets",
     "tpch_pricing",
     "sessionize",
     "flow_chi",
@@ -54,16 +54,13 @@ HEADLINE = [
     "network_dissolve",
     "terrain_pipeline",
     "hex_pages",
-    # (neardup_incremental is absent: the LSH store protocol runs
-    # eagerly)
     "pip_rtree",
     "hex_ring_density",
     "pages_pipeline",
     "line_dedup",
     "crawl_latest",
-    # (dedup_keep, dup_spans and winnow_fingerprints are absent:
-    # connected components and the positional-shingle stream
-    # localCheckpoint inside the builder)
+    # (dup_spans and winnow_fingerprints are absent: the
+    # positional-shingle stream localCheckpoints inside the builder)
     "contour_cells",
     "aspect_rose",
     "hypsometry",
@@ -99,16 +96,13 @@ HEADLINE = [
     "geo_language_map",
     "good_turing",
     # (cost_distance is absent: the relaxation rounds checkpoint per
-    # step.  neardup_eval is absent: its shingle-id input
-    # localCheckpoints inside the builder.  basin_drainage times its OWN
-    # marginal plan over the shared memoized flow pass)
+    # step.  basin_drainage times its OWN marginal plan over the shared
+    # memoized flow pass)
     "vrm",
     "basin_drainage",
     "tile_skew",
     "openness",
     "semivariogram_aniso",
-    # (dedup_cluster_sizes is absent: its shingle-id input
-    # localCheckpoints inside the builder)
     "resample_error",
     # (order_census times its OWN marginal plan over the shared memoized
     # flow pass)

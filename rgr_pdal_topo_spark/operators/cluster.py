@@ -98,6 +98,75 @@ DBSCAN_MINPTS_FLOOR = 5     #: absolute core floor (small scales)
 DBSCAN_DENSITY_MULT = 8     #: relative floor: >= 8x uniform density
 
 
+def duplicate_components(pairs: DataFrame, max_rounds: int = 20) -> DataFrame:
+    """(doc_id, cluster): connected components of an undirected
+    (doc_a, doc_b) edge list, cluster = MIN id in the component.  Only
+    ids that appear in at least one edge are emitted; singletons are
+    trivially their own cluster.
+
+    Min-label propagation with per-round path compression (label <-
+    label-of-label), each round two hash joins over (id, label) rows.
+    Shallow graphs (``dbscan_grid``'s blob-shaped core-cell adjacency)
+    converge in a few rounds; a pathologically long chain at 100 TB
+    would call for the large-star/small-star CC algorithm — the loop
+    raises rather than silently truncating if it has not converged
+    within ``max_rounds``."""
+    sym = pairs.select(
+        F.col("doc_a").alias("x"), F.col("doc_b").alias("y")
+    ).union(pairs.select(F.col("doc_b").alias("x"), F.col("doc_a").alias("y")))
+    sym = sym.localCheckpoint(eager=True)
+    lab = (
+        sym.select("x").distinct()
+        .select(F.col("x").alias("id"), F.col("x").alias("lbl"))
+        .localCheckpoint(eager=True)
+    )
+    for _ in range(max_rounds):
+        nb = (
+            sym.join(
+                lab.select(F.col("id").alias("y"), F.col("lbl").alias("ylbl")),
+                "y",
+            )
+            .groupBy("x")
+            .agg(F.min("ylbl").alias("nlbl"))
+        )
+        # materialize before the compression self-join: prop feeds both
+        # sides and Spark would otherwise run the neighbor-min agg twice
+        prop = lab.join(nb, lab.id == nb.x, "left").select(
+            "id",
+            F.least(F.col("lbl"), F.coalesce(F.col("nlbl"), F.col("lbl")))
+            .alias("lbl"),
+        ).localCheckpoint(eager=True)
+        comp = (
+            prop.alias("a")
+            .join(
+                prop.select(
+                    F.col("id").alias("bid"), F.col("lbl").alias("blbl")
+                ),
+                F.col("a.lbl") == F.col("bid"),
+                "left",
+            )
+            .select(
+                F.col("a.id").alias("id"),
+                F.coalesce(F.col("blbl"), F.col("a.lbl")).alias("lbl"),
+            )
+            .localCheckpoint(eager=True)
+        )
+        n_moving = (
+            comp.alias("n")
+            .join(lab.alias("o"), "id")
+            .filter(F.col("n.lbl") != F.col("o.lbl"))
+            .count()
+        )
+        lab = comp
+        if n_moving == 0:
+            return lab.select(
+                F.col("id").alias("doc_id"), F.col("lbl").alias("cluster")
+            )
+    raise RuntimeError(
+        f"component labeling did not converge within {max_rounds} rounds"
+    )
+
+
 def dbscan_grid(pts: DataFrame) -> DataFrame:
     """(cluster, n_cells, n_points, min_gx, max_gx, min_gy, max_gy) —
     density-connected clusters of lattice cells.
@@ -109,8 +178,8 @@ def dbscan_grid(pts: DataFrame) -> DataFrame:
     floor keeps collision noise out when the lattice is nearly empty.
     Core cells 8-adjacent to each other are density-connected; clusters
     are the connected components (min-label propagation with path
-    compression, operators/dedup.py duplicate_components — shallow
-    blob graphs converge in ~2 rounds), singleton core cells are their
+    compression, ``duplicate_components`` — shallow blob graphs
+    converge in ~2 rounds), singleton core cells are their
     own cluster.  Everything is integer end to end: counts, the
     ceil-division threshold (one `div`), cell ids, extents.
 
@@ -162,8 +231,6 @@ def dbscan_grid(pts: DataFrame) -> DataFrame:
         )
         .distinct()
     )
-
-    from rgr_pdal_topo_spark.operators.dedup import duplicate_components
 
     comp = duplicate_components(edges).select(
         F.col("doc_id").alias("cid"), F.col("cluster")

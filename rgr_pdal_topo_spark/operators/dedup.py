@@ -5,14 +5,9 @@ is a pure DataFrame composition designed for the 100 TB shape:
 
   * exact:     one hash agg on md5(text) — the shuffle carries a 32-char
                digest, never the document body;
-  * minhash:   k-token shingles -> portable integer ids -> minhash
-               signatures -> LSH band buckets -> candidate pairs (band
-               bucket join replaces the all-pairs O(n^2)); oversized
-               buckets are capped before the self-join so one hot key can
-               never explode quadratically;
-  * simhash:   bitwise fingerprint via sign-of-weighted-sum over unigram
-               token ids;
-  * jaccard:   exact shingle-set verification on (small) candidate sets.
+  * jaccard:   exact shingle-set similarity — verification of given pairs,
+               or the complete prefix-filtered join (AllPairs) at a
+               rational threshold.
 
 PARITY DESIGN: shingle/token ids are the base-16 value of the first 15
 hex chars of md5 — a 60-bit space, pure string/integer built-ins that
@@ -22,21 +17,17 @@ shuffle wider than (doc_id, int64).  (Round 1 used dense_rank over the
 whole vocabulary — a single-partition global sort Spark itself warns
 about; this replaces it.)
 
-ID-SPACE BOUND: with 60-bit ids, a candidate pair's exact-Jaccard verify
-is perturbed only if two DIFFERENT shingles across the two documents
+ID-SPACE BOUND: with 60-bit ids, a pair's exact-Jaccard score is
+perturbed only if two DIFFERENT shingles across the two documents
 collide in id: for ~2,000-shingle pages that is 2000 * 2000 / 2^60
 ~ 3.5e-12 per pair — negligible at any corpus size, because Jaccard
 compares two documents' sets, never the whole corpus at once.  (The
 earlier 31-bit fold put that figure at ~2e-3 per pair and reached
 even-odds of SOME corpus-wide collision at ~65k distinct shingles;
-10^12-doc corpora hold ~10^13 distinct shingles.)  MinHash permutations
-map the 60-bit ids into the 31-bit signature space below — standard
-32-bit MinHash; a within-document permutation-value collision only
-matters if it lands exactly at the min, which perturbs one of 16
-signature slots with probability ~1e-6.
+10^12-doc corpora hold ~10^13 distinct shingles.)
 
 Reference behavior: text dedup for a Common-Crawl-style corpus (the graft
-payload); shingling follows the standard MinHash construction (Broder).
+payload); shingling follows the standard construction (Broder).
 """
 
 from __future__ import annotations
@@ -50,24 +41,7 @@ from pyspark.sql import functions as F
 ID_CHARS = 15
 ID_SPACE = 16 ** ID_CHARS  # 2^60
 
-# MinHash permutation parameters over prime P — P is the SIGNATURE space
-# (31-bit, standard 32-bit MinHash), not the id space.  Because ids are
-# 60-bit, a_j * tid would overflow int64; each permutation therefore
-# hashes the id's 31-bit low half and 29-bit high half separately:
-#   h_j(tid) = (a_j * (tid % 2^31) + c_j * (tid // 2^31) + b_j) % P
-# max intermediate < 2^62 + 2^60 + 2^31 < 2^63 — ANSI-safe in both
-# engines, and a proper 2-term universal-style hash of the full 60 bits
-# (ids differing only in high bits do not collide systematically).
-MINHASH_P = 2147483647
-N_PERM = 16
-MINHASH_A = [(2 * j + 1) * 2654435761 % MINHASH_P for j in range(N_PERM)]
-MINHASH_C = [(2 * j + 1) * 3266489917 % MINHASH_P for j in range(N_PERM)]
-MINHASH_B = [(j * 40503 + 12345) % MINHASH_P for j in range(N_PERM)]
-TID_SPLIT = 1 << 31  # lo = tid % TID_SPLIT, hi = tid // TID_SPLIT
-
-SIMHASH_BITS = 16
 SHINGLE_K = 3
-MAX_BUCKET = 64  # cap on band-bucket size before the candidate self-join
 
 _HEX = "0123456789abcdef"
 
@@ -118,9 +92,9 @@ def shingles(documents: DataFrame, k: int = SHINGLE_K) -> DataFrame:
 
 def _shingle_array(toks: Column, k: int, distinct: bool = True) -> Column:
     """array<string> of k-token shingles from a materialized token-array
-    column — the ONE spelling of the shingle window, shared by the
-    exploded (``shingles``) and row-local (``_shingle_tid_array``)
-    paths so they cannot drift apart.  DISTINCT by default (the dedup
+    column — the ONE spelling of the shingle window, shared by
+    ``shingles`` and the positional k-gram operators so they cannot
+    drift apart.  DISTINCT by default (the dedup
     semantics); ``distinct=False`` keeps every occurrence (the
     repetition-quality semantics — how often a shingle repeats IS the
     signal there)."""
@@ -146,34 +120,12 @@ def _portable_id(hex_col: str | Column) -> Column:
     return F.conv(F.substring(hex_col, 1, ID_CHARS), 16, 10).cast("long")
 
 
-def _permute(tid: Column, a: int, c: int, b: int, m: int) -> Column:
-    """(a * lo + c * hi + b) % m over the 60-bit id's (31-bit lo, 29-bit
-    hi) halves — the overflow-free permutation spelling shared by the
-    exploded and row-local minhash paths and mirrored in the oracles."""
-    lo = tid % F.lit(TID_SPLIT)
-    hi = F.shiftright(tid, 31)
-    return (F.lit(a) * lo + F.lit(c) * hi + F.lit(b)) % F.lit(m)
-
-
 def shingle_ids(documents: DataFrame, k: int = SHINGLE_K) -> DataFrame:
     """(doc_id, tid) distinct — portable integer shingle ids.  One narrow
     projection per row: no window, no dimension join, no broadcast."""
     return (
         shingles(documents, k)
         .withColumn("__h", F.md5("shingle"))
-        .select("doc_id", _portable_id("__h").alias("tid"))
-        .distinct()
-    )
-
-
-def token_ids(documents: DataFrame) -> DataFrame:
-    """(doc_id, tid) distinct — portable integer unigram-token ids (used by
-    simhash, whose fingerprint is a content distribution, not an n-gram
-    structure)."""
-    return (
-        tokens(documents)
-        .distinct()
-        .withColumn("__h", F.md5("tok"))
         .select("doc_id", _portable_id("__h").alias("tid"))
         .distinct()
     )
@@ -190,220 +142,6 @@ def exact_duplicates(documents: DataFrame) -> DataFrame:
             F.count(F.lit(1)).alias("group_size"),
         )
         .select("canonical_doc", "group_size")
-    )
-
-
-def minhash_signatures(doc_tids: DataFrame, n_perm: int = N_PERM) -> DataFrame:
-    """(doc_id, perm, minhash) long-form signature.
-
-    All ``n_perm`` mins are computed in ONE groupBy(doc_id) pass (16 agg
-    columns, then an unpivot) instead of exploding every (doc_id, tid)
-    row 16x through a permutation cross join — same values, 1/16th the
-    shuffle input at any scale."""
-    aggs = [
-        F.min(
-            _permute(
-                F.col("tid"), MINHASH_A[j], MINHASH_C[j], MINHASH_B[j],
-                MINHASH_P,
-            )
-        ).alias(f"m{j}")
-        for j in range(n_perm)
-    ]
-    wide = doc_tids.groupBy("doc_id").agg(*aggs)
-    stack = (
-        f"stack({n_perm}, "
-        + ", ".join(f"{j}, m{j}" for j in range(n_perm))
-        + ") AS (perm, minhash)"
-    )
-    return wide.select("doc_id", F.expr(stack))
-
-
-def _check_banding(bands: int, rows_per_band: int) -> None:
-    if bands * rows_per_band != N_PERM:
-        raise ValueError(
-            f"bands ({bands}) x rows_per_band ({rows_per_band}) must equal "
-            f"N_PERM ({N_PERM})"
-        )
-
-
-def _band_mix(
-    signatures: DataFrame, bands: int, rows_per_band: int
-) -> DataFrame:
-    """(doc_id, band, band_key): order-sensitive 31^pos mix of the band's
-    row minhashes (exact int64 arithmetic)."""
-    sig = signatures.withColumn(
-        "band", (F.col("perm") / F.lit(rows_per_band)).cast("int")
-    ).withColumn("pos", F.col("perm") % F.lit(rows_per_band))
-    return sig.groupBy("doc_id", "band").agg(
-        F.sum(
-            F.col("minhash")
-            * F.pow(F.lit(31.0), F.col("pos").cast("double")).cast("long")
-        ).alias("band_key")
-    )
-
-
-def _shingle_tid_array(k: int = SHINGLE_K) -> Column:
-    """array<long> of portable shingle ids for one document row (expects a
-    materialized ``__toks`` token-array column) — the row-local twin of
-    ``shingle_ids``, built from the same ``_shingle_array`` +
-    ``_portable_id`` spellings.  Duplicate ids are harmless under the min
-    that consumes them, so the exploded path's tid-level distinct is
-    skipped."""
-    return F.transform(
-        _shingle_array(F.col("__toks"), k),
-        lambda s: _portable_id(F.md5(s)),
-    )
-
-
-def minhash_bands_rowwise(
-    documents: DataFrame,
-    bands: int = 8,
-    rows_per_band: int = 2,
-    k: int = SHINGLE_K,
-) -> DataFrame:
-    """(doc_id, band, band_key) computed entirely ROW-LOCALLY: shingles,
-    permutation minima and the band mix are array expressions over each
-    document row, so the whole banding runs with ZERO shuffle — vs the
-    exploded chain _band_mix(minhash_signatures(shingle_ids(docs)))'s
-    three (explode-distinct, signature groupBy, band-mix groupBy).
-    Bit-identical output (tests/test_streaming_neardup.py pins the two
-    spellings to each other); docs with fewer than ``k`` tokens produce
-    no rows, matching the exploded path.
-
-    When to use which: higher-order-function lambdas are INTERPRETED
-    (no whole-stage codegen), and measured ~6x more CPU than the
-    exploded chain at sf0.1 — more than the chain's narrow integer
-    shuffles cost on a healthy cluster, so BATCH pipelines should keep
-    the exploded spelling.  This one exists for STREAMING, where it is
-    structural: the banding must reach ``applyInPandasWithState``
-    stateless (a pre-state groupBy would be a second stateful operator,
-    which Structured Streaming rejects), and for shuffle-starved
-    deployments where network, not CPU, is the binding constraint."""
-    _check_banding(bands, rows_per_band)
-    tids = (
-        documents.select("doc_id", _tok_array().alias("__toks"))
-        .select("doc_id", _shingle_tid_array(k).alias("__tids"))
-        .filter(F.size("__tids") > 0)
-    )
-
-    def perm_min(j: int) -> Column:
-        # nb: exactly ONE lambda parameter — pyspark reads the signature
-        # and a second parameter means (element, index)
-        return F.array_min(
-            F.transform(
-                F.col("__tids"),
-                lambda t: _permute(
-                    t, MINHASH_A[j], MINHASH_C[j], MINHASH_B[j], MINHASH_P
-                ),
-            )
-        ).alias(f"m{j}")
-
-    mins = tids.select("doc_id", *[perm_min(j) for j in range(N_PERM)])
-    band_keys = [
-        sum(
-            F.col(f"m{b * rows_per_band + pos}") * F.lit(31 ** pos)
-            for pos in range(rows_per_band)
-        ).alias(f"bk{b}")
-        for b in range(bands)
-    ]
-    stack = (
-        f"stack({bands}, "
-        + ", ".join(f"{b}, bk{b}" for b in range(bands))
-        + ") AS (band, band_key)"
-    )
-    return mins.select("doc_id", *band_keys).select("doc_id", F.expr(stack))
-
-
-def _bucket_stats(mixed: DataFrame) -> DataFrame:
-    return mixed.groupBy("band", "band_key").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.min("doc_id").alias("canonical_doc"),
-    )
-
-
-def lsh_band_buckets(
-    signatures: DataFrame, bands: int = 8, rows_per_band: int = 2
-) -> DataFrame:
-    """(band, band_key, n_docs, canonical_doc): docs sharing a band key are
-    near-dup candidates."""
-    _check_banding(bands, rows_per_band)
-    return _bucket_stats(_band_mix(signatures, bands, rows_per_band))
-
-
-def lsh_dropped_buckets(
-    signatures: DataFrame,
-    bands: int = 8,
-    rows_per_band: int = 2,
-    max_bucket: int = MAX_BUCKET,
-) -> DataFrame:
-    """(band, band_key, n_docs) for every bucket the size cap excludes from
-    the candidate self-join — the coverage ledger for the cap in
-    ``minhash_candidate_pairs``.  Empty iff the pair output is exhaustive."""
-    _check_banding(bands, rows_per_band)
-    mixed = _band_mix(signatures, bands, rows_per_band)
-    return (
-        mixed.groupBy("band", "band_key")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .filter(F.col("n_docs") > max_bucket)
-    )
-
-
-def lsh_drop_report(
-    signatures: DataFrame,
-    bands: int = 8,
-    rows_per_band: int = 2,
-    max_bucket: int = MAX_BUCKET,
-) -> DataFrame:
-    """One metrics row surfacing what the bucket cap skipped:
-    (n_dropped_buckets, n_docs_affected) where n_docs_affected counts
-    DISTINCT documents having at least one dropped bucket (such documents
-    may still pair through their other, smaller buckets).  At 100 TB this
-    row is the difference between "deduped everything" and "deduped
-    everything except these hot shards" — never let the cap drop silently."""
-    mixed = _band_mix(signatures, bands, rows_per_band)
-    dropped = mixed.join(
-        lsh_dropped_buckets(
-            signatures, bands, rows_per_band, max_bucket
-        ).select("band", "band_key"),
-        ["band", "band_key"],
-    )
-    return dropped.agg(
-        F.count_distinct("band", "band_key").alias("n_dropped_buckets"),
-        F.count_distinct("doc_id").alias("n_docs_affected"),
-    )
-
-
-def minhash_candidate_pairs(
-    signatures: DataFrame,
-    bands: int = 8,
-    rows_per_band: int = 2,
-    max_bucket: int = MAX_BUCKET,
-) -> DataFrame:
-    """Distinct candidate pairs (a < b) sharing at least one band key.
-
-    Buckets larger than ``max_bucket`` are dropped before the self-join: a
-    single hot band key would otherwise yield O(n^2) pairs.  (A bucket that
-    big means the banding is non-selective for that content — at 100 TB the
-    right response is to either tighten bands or route the bucket through
-    exact dedup, not to materialize the quadratic join.)  The drop is NOT
-    silent: ``lsh_drop_report`` / ``lsh_dropped_buckets`` enumerate exactly
-    what the cap excluded; pipelines should emit that row next to the
-    pairs."""
-    _check_banding(bands, rows_per_band)
-    mixed = _band_mix(signatures, bands, rows_per_band)
-    sizes = mixed.groupBy("band", "band_key").agg(
-        F.count(F.lit(1)).alias("__n")
-    )
-    capped = mixed.join(
-        sizes.filter(F.col("__n") <= max_bucket), ["band", "band_key"]
-    ).select("doc_id", "band", "band_key")
-    l = capped.select(F.col("doc_id").alias("doc_a"), "band", "band_key")
-    r = capped.select(F.col("doc_id").alias("doc_b"), "band", "band_key")
-    return (
-        l.join(r, ["band", "band_key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
     )
 
 
@@ -431,318 +169,6 @@ def jaccard_pairs(doc_tids: DataFrame, pairs: DataFrame) -> DataFrame:
     )
 
 
-def duplicate_components(pairs: DataFrame, max_rounds: int = 20) -> DataFrame:
-    """(doc_id, cluster): connected components of the verified near-dup
-    pair graph, cluster = MIN doc_id in the component — the canonical
-    assignment that completes the dedup pipeline (keep cluster == doc_id,
-    drop the rest).  Only docs that appear in at least one pair are
-    emitted; singletons are trivially their own cluster.
-
-    Min-label propagation with per-round path compression (label <-
-    label-of-label), each round two hash joins over (id, label) rows.
-    Near-dup components are shallow (stars/cliques around shared
-    templates), so few rounds suffice; a pathologically long chain at
-    100 TB would call for the large-star/small-star CC algorithm — the
-    loop raises rather than silently truncating if it has not converged
-    within ``max_rounds``."""
-    sym = pairs.select(
-        F.col("doc_a").alias("x"), F.col("doc_b").alias("y")
-    ).union(pairs.select(F.col("doc_b").alias("x"), F.col("doc_a").alias("y")))
-    sym = sym.localCheckpoint(eager=True)
-    lab = (
-        sym.select("x").distinct()
-        .select(F.col("x").alias("id"), F.col("x").alias("lbl"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_rounds):
-        nb = (
-            sym.join(
-                lab.select(F.col("id").alias("y"), F.col("lbl").alias("ylbl")),
-                "y",
-            )
-            .groupBy("x")
-            .agg(F.min("ylbl").alias("nlbl"))
-        )
-        # materialize before the compression self-join: prop feeds both
-        # sides and Spark would otherwise run the neighbor-min agg twice
-        prop = lab.join(nb, lab.id == nb.x, "left").select(
-            "id",
-            F.least(F.col("lbl"), F.coalesce(F.col("nlbl"), F.col("lbl")))
-            .alias("lbl"),
-        ).localCheckpoint(eager=True)
-        comp = (
-            prop.alias("a")
-            .join(
-                prop.select(
-                    F.col("id").alias("bid"), F.col("lbl").alias("blbl")
-                ),
-                F.col("a.lbl") == F.col("bid"),
-                "left",
-            )
-            .select(
-                F.col("a.id").alias("id"),
-                F.coalesce(F.col("blbl"), F.col("a.lbl")).alias("lbl"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        n_moving = (
-            comp.alias("n")
-            .join(lab.alias("o"), "id")
-            .filter(F.col("n.lbl") != F.col("o.lbl"))
-            .count()
-        )
-        lab = comp
-        if n_moving == 0:
-            return lab.select(
-                F.col("id").alias("doc_id"), F.col("lbl").alias("cluster")
-            )
-    raise RuntimeError(
-        f"component labeling did not converge within {max_rounds} rounds"
-    )
-
-
-def simhash_params(b: int) -> tuple[int, int, int]:
-    """Per-bit hash constants (P_b, Q_b, C_b) — shared with the DuckDB
-    oracle.  P_b/Q_b multiply the 60-bit token id's lo/hi halves (the same
-    split-hash spelling as ``_permute``); C_b is the additive term."""
-    return (
-        (2 * b + 3) * 2654435761 % MINHASH_P,
-        (2 * b + 3) * 3266489917 % MINHASH_P,
-        (b * 69621 + 7) % MINHASH_P,
-    )
-
-
-def simhash(doc_tids: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
-    """(doc_id, simhash): bit b = 1 iff sum over tokens of
-    (((P_b * lo(tid) + Q_b * hi(tid) + C_b) % 1000) - 499.5) > 0 —
-    all-integer/half-integer, bit-reproducible in any engine.  (lo < 2^31
-    and hi < 2^29 with P_b, Q_b < 2^31, so the two products stay inside
-    int64 — the split spelling exists exactly because tid itself is
-    60-bit; the per-bit sums are sums of half-integers,
-    exact in float64, so aggregation order cannot perturb the sign.)
-
-    All ``bits`` sums run as conditional aggregates in ONE
-    groupBy(doc_id) pass — the same one-pass shape as
-    ``minhash_signatures`` (a bit-table cross join would explode every
-    (doc_id, tid) row ``bits``-fold BEFORE the shuffle; this keeps the
-    shuffle input at exactly one row per (doc_id, tid))."""
-    aggs = []
-    for b in range(bits):
-        p, q, c = simhash_params(b)
-        contrib = (
-            _permute(F.col("tid"), p, q, c, 1000)
-        ).cast("double") - F.lit(499.5)
-        aggs.append(F.sum(contrib).alias(f"s{b}"))
-    wide = doc_tids.groupBy("doc_id").agg(*aggs)
-    acc = F.lit(0)
-    for b in range(bits):
-        acc = acc + F.when(F.col(f"s{b}") > 0, F.lit(1 << b)).otherwise(
-            F.lit(0)
-        )
-    return wide.select("doc_id", acc.cast("long").alias("simhash"))
-
-
-def _simhash_banded(sigs: DataFrame, n_bands: int, bits: int) -> DataFrame:
-    """(doc_id, simhash, band, band_key): one row per disjoint contiguous
-    bit range of the fingerprint — the shared banding for pair search and
-    the drop report."""
-    if bits % n_bands != 0:
-        raise ValueError(f"n_bands ({n_bands}) must divide bits ({bits})")
-    band_bits = bits // n_bands
-    mask = (1 << band_bits) - 1
-    stack = (
-        f"stack({n_bands}, "
-        + ", ".join(
-            f"{b}, shiftright(simhash, {b * band_bits}) & {mask}"
-            for b in range(n_bands)
-        )
-        + ") AS (band, band_key)"
-    )
-    return sigs.select("doc_id", "simhash", F.expr(stack))
-
-
-def simhash_drop_report(
-    sigs: DataFrame,
-    n_bands: int = 4,
-    bits: int = SIMHASH_BITS,
-    max_bucket: int = MAX_BUCKET,
-) -> DataFrame:
-    """One metrics row (n_dropped_buckets, n_docs_affected) for the
-    ``simhash_pairs`` bucket cap — the fingerprint-side twin of
-    ``lsh_drop_report``, same never-silent contract: emit this next to
-    the pairs so a hot shard skipped by the cap is visible, not implied
-    covered."""
-    banded = _simhash_banded(sigs, n_bands, bits)
-    hot = (
-        banded.groupBy("band", "band_key")
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > max_bucket)
-        .select("band", "band_key")
-    )
-    return banded.join(hot, ["band", "band_key"]).agg(
-        F.count_distinct("band", "band_key").alias("n_dropped_buckets"),
-        F.count_distinct("doc_id").alias("n_docs_affected"),
-    )
-
-
-def simhash_pairs(
-    sigs: DataFrame,
-    n_bands: int = 4,
-    bits: int = SIMHASH_BITS,
-    max_hamming: int | None = None,
-    max_bucket: int = MAX_BUCKET,
-) -> DataFrame:
-    """(doc_a, doc_b, hamming): SimHash near-dup pairs by pigeonhole
-    banding — the fingerprint-side twin of ``minhash_candidate_pairs``.
-
-    The ``bits``-bit fingerprint splits into ``n_bands`` disjoint
-    contiguous bit ranges; if two fingerprints differ in at most
-    ``n_bands - 1`` bits, at least one band is bit-identical (pigeonhole),
-    so an equi-join on (band, band_key) finds EVERY pair within that
-    Hamming radius — never an all-pairs compare.  Candidates are then
-    verified with the exact popcount of the XOR and filtered to
-    ``max_hamming`` (default ``n_bands - 1``, the radius the banding
-    guarantees exhaustive; a larger value returns best-effort extras).
-    This is the Manku/Jain/Sarma WWW'07 design (64-bit/4-band there)
-    at this engine's fingerprint width.
-
-    Scale notes: band keys ride the shuffle as one small int per
-    (doc, band) — ``n_bands`` rows per doc, same fan-out as MinHash LSH
-    banding.  Bucket selectivity is 2^(bits/n_bands) values per band, so
-    at corpus scale call ``simhash`` with a wider fingerprint (e.g.
-    bits=32 -> 256 buckets/band at n_bands=4) rather than shrinking
-    bands below the recall you need.  Buckets above ``max_bucket`` are
-    dropped before the self-join — same O(n^2) rationale and the same
-    "never silent" contract as ``minhash_candidate_pairs``
-    (``simhash_drop_report`` surfaces what the cap excluded)."""
-    if max_hamming is None:
-        max_hamming = n_bands - 1
-    banded = _simhash_banded(sigs, n_bands, bits)
-    sizes = banded.groupBy("band", "band_key").agg(
-        F.count(F.lit(1)).alias("__n")
-    )
-    capped = banded.join(
-        sizes.filter(F.col("__n") <= max_bucket), ["band", "band_key"]
-    ).select("doc_id", "simhash", "band", "band_key")
-    l = capped.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("simhash").alias("__sa"),
-        "band",
-        "band_key",
-    )
-    r = capped.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("simhash").alias("__sb"),
-        "band",
-        "band_key",
-    )
-    cand = (
-        l.join(r, ["band", "band_key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "__sa", "__sb")
-        .distinct()
-    )
-    ham = F.bit_count(F.col("__sa").bitwiseXOR(F.col("__sb"))).cast("int")
-    return (
-        cand.withColumn("hamming", ham)
-        .filter(F.col("hamming") <= F.lit(max_hamming))
-        .select("doc_a", "doc_b", "hamming")
-    )
-
-
-# ---------------------------------------------------------------------------
-# incremental near-dup: a persistent LSH index over manifest snapshots
-# ---------------------------------------------------------------------------
-
-def incremental_near_dups(
-    spark,
-    new_docs: DataFrame,
-    store_root: str,
-    bands: int = 8,
-    rows_per_band: int = 2,
-    max_bucket: int = MAX_BUCKET,
-    n_files: int = 4,
-) -> DataFrame:
-    """Near-dup pairs for ONE NEW BATCH against everything seen so far,
-    without recomputing the corpus — the shape incremental training-data
-    ingestion needs at 10^12 docs (re-banding the whole lake per WARC
-    drop is the quadratic trap).
-
-    The signature store is a MANIFEST TABLE (sources/manifest.py) of
-    banded keys ``(doc_id, band, band_key)``, range-clustered on
-    ``band_key`` so the probe join prunes store files by key range.
-    Protocol per batch:
-
-    1. band the new docs (one groupBy, as the batch path);
-    2. read the store PINNED at its current snapshot (later appends
-       cannot leak into this read — the exactly-once trick the
-       SnapshotConsumer uses);
-    3. emit new-vs-store and new-vs-new candidate pairs through the
-       usual bucket-size cap, sized over store+batch TOGETHER;
-    4. commit the new keys as the next snapshot (atomic visibility: a
-       crash before the commit re-processes the batch, never halves it).
-
-    Pair-set semantics vs one batch-mode run over the union: identical
-    while no bucket crosses ``max_bucket`` BETWEEN batches; a bucket
-    that grows past the cap mid-stream keeps the pairs it emitted while
-    small (no retraction), where batch mode would drop them all — the
-    incremental output is a superset in exactly that case, and
-    ``lsh_dropped_buckets`` over the store enumerates the affected keys.
-    Caller contract: doc_ids are unique across all batches.
-    """
-    from rgr_pdal_topo_spark.sources import manifest as man
-
-    mixed_new = _band_mix(
-        minhash_signatures(token_ids(new_docs)), bands, rows_per_band
-    )
-    log = man.snapshots(store_root)
-    mixed_old = (
-        man.scan(spark, store_root, snapshot=log[-1]["id"]) if log else None
-    )
-    union = (
-        mixed_new if mixed_old is None
-        else mixed_old.unionByName(mixed_new)
-    )
-    keep = (
-        union.groupBy("band", "band_key")
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") <= max_bucket)
-        .select("band", "band_key")
-    )
-    cn = mixed_new.join(keep, ["band", "band_key"]).select(
-        "doc_id", "band", "band_key"
-    )
-    l = cn.select(F.col("doc_id").alias("doc_a"), "band", "band_key")
-    r = cn.select(F.col("doc_id").alias("doc_b"), "band", "band_key")
-    pairs = (
-        l.join(r, ["band", "band_key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-    )
-    if mixed_old is not None:
-        co = mixed_old.join(keep, ["band", "band_key"]).select(
-            F.col("doc_id").alias("doc_o"), "band", "band_key"
-        )
-        cross = (
-            cn.join(co, ["band", "band_key"])
-            .select(
-                F.least("doc_id", "doc_o").alias("doc_a"),
-                F.greatest("doc_id", "doc_o").alias("doc_b"),
-            )
-            # a doc_id present in BOTH the store and this batch (e.g. a
-            # batch replayed after a crash between commit() and the
-            # caller persisting the pairs) would otherwise emit a
-            # self-pair through least/greatest
-            .filter(F.col("doc_a") != F.col("doc_b"))
-        )
-        pairs = pairs.unionByName(cross)
-    pairs = pairs.distinct().localCheckpoint(eager=True)
-    # materialized BEFORE the commit: the pair plan must never observe
-    # the store state that includes this batch's own keys
-    man.commit(mixed_new, store_root, ["band_key"], n_files=n_files)
-    return pairs
-
-
 # ---------------------------------------------------------------------------
 # benchmark decontamination
 # ---------------------------------------------------------------------------
@@ -760,11 +186,10 @@ def decontaminate(
     Scale shape: the benchmark side is eval-suite-sized (thousands of
     documents), so its distinct shingle ids BROADCAST; the corpus side
     is one shingle projection + semi-join + partial/final count —
-    nothing wider than (doc_id, int64) ever shuffles, the same property
-    the MinHash path has.  ``n_hits`` counts DISTINCT overlapping
-    shingles (shingle_ids is distinct per doc), so thresholding on it
-    expresses the usual "quarantine at >= N colliding n-grams" policy
-    rather than a boolean.
+    nothing wider than (doc_id, int64) ever shuffles.  ``n_hits``
+    counts DISTINCT overlapping shingles (shingle_ids is distinct per
+    doc), so thresholding on it expresses the usual "quarantine at >= N
+    colliding n-grams" policy rather than a boolean.
     """
     corpus = shingle_ids(documents, k)
     bench = F.broadcast(shingle_ids(benchmark, k).select("tid").distinct())
@@ -826,8 +251,8 @@ def shingle_dup_stats(documents: DataFrame, k: int = SHINGLE_K) -> DataFrame:
     Scale shape: shingles fold to 60-bit ids so nothing wider than
     (doc_id, int64) shuffles; the document-frequency agg is
     partial+final; the join back to shingle rows is tid-keyed — the one
-    genuine corpus-sized shuffle join here, the same cost class as the
-    LSH banding join (both sides partition on the shingle id).  A
+    genuine corpus-sized shuffle join here (both sides partition on the
+    shingle id).  A
     document's shingle occurring twice WITHIN it counts once
     (shingle_ids is distinct per doc), so df >= 2 means "some other
     document shares it"."""
@@ -883,7 +308,7 @@ def duplicated_spans(
     Scale shape: positional k-grams fold to 60-bit ids so nothing wider
     than (doc_id, int, int64) shuffles; the corpus-frequency agg is
     partial+final on tid; the hit filter is a tid-keyed equi-join (both
-    sides partition on tid — LSH-banding cost class); the island merge
+    sides partition on tid); the island merge
     is a per-doc window, bounded by document length, partitioned on
     doc_id — no global window anywhere."""
     d = documents.select("doc_id", _tok_array().alias("toks"))
@@ -974,8 +399,8 @@ def line_dedup(
     document-frequency agg is distinct + partial/final count, and the
     resulting boilerplate id set BROADCASTS (ids only, ~8 bytes each:
     a >=k-doc line set is ~10^7-10^8 even at web scale; past that,
-    flip the marker join to a tid-keyed shuffle semi-join, the same
-    cost class as LSH banding).  The single wide shuffle is the
+    flip the marker join to a tid-keyed shuffle semi-join).  The
+    single wide shuffle is the
     reassembly groupBy(doc_id) — that is the rewrite itself, it
     replaces the corpus, and it parallelizes perfectly on doc_id."""
     lines = documents.select(
@@ -1092,48 +517,6 @@ def split_leakage(documents: DataFrame) -> DataFrame:
             F.sum(F.coalesce(F.col("leak_near"), F.lit(0))).alias(
                 "n_near_leaked"
             ),
-        )
-    )
-
-
-def survivor_stats(
-    docs: DataFrame, components: DataFrame, group_col: str = "lang"
-) -> DataFrame:
-    """Per-``group_col`` corpus effect of the dedup pass: (group, n_docs,
-    n_kept, n_dropped, chars_total, chars_kept) — all exact BIGINTs.
-
-    The end-product every dedup pipeline actually ships is the KEEP list
-    (cluster canonical = MIN doc_id survives, other members drop) plus
-    the before/after accounting that goes in the datasheet.  ``docs``
-    contributes only (doc_id, group, n_chars) — bodies never enter the
-    join — and the drop flag arrives by a narrow left join on doc_id, so
-    the plan is one slim shuffle join + one partial/final agg no matter
-    how large the corpus.  Docs in no component are kept by definition
-    (duplicate_components emits members only)."""
-    drops = components.filter(F.col("doc_id") != F.col("cluster")).select(
-        "doc_id", F.lit(1).alias("is_dropped")
-    )
-    slim = docs.select("doc_id", group_col, "n_chars")
-    flagged = slim.join(drops, "doc_id", "left")
-    dropped = F.coalesce(F.col("is_dropped"), F.lit(0)).cast("long")
-    return (
-        flagged.groupBy(group_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(dropped).alias("n_dropped"),
-            F.sum("n_chars").alias("chars_total"),
-            F.sum(
-                F.when(F.col("is_dropped").isNull(), F.col("n_chars"))
-                .otherwise(F.lit(0))
-            ).alias("chars_kept"),
-        )
-        .select(
-            group_col,
-            "n_docs",
-            (F.col("n_docs") - F.col("n_dropped")).alias("n_kept"),
-            "n_dropped",
-            "chars_total",
-            "chars_kept",
         )
     )
 

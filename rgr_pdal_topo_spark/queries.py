@@ -2208,309 +2208,6 @@ _SHID_DUCK = (
     f"SELECT DISTINCT doc_id, {dedup.horner_hash_sql('h')} AS tid FROM "
     "(SELECT doc_id, md5(shingle) AS h FROM sh) hh"
 )
-_TOKS_SET_DUCK = (
-    "SELECT DISTINCT doc_id, tok FROM (SELECT doc_id, "
-    "unnest(string_split(text, ' ')) AS tok FROM documents) u WHERE tok <> ''"
-)
-_TOKID_DUCK = (
-    f"SELECT DISTINCT doc_id, {dedup.horner_hash_sql('h')} AS tid FROM "
-    "(SELECT doc_id, md5(tok) AS h FROM toks) hh"
-)
-_PERMS_DUCK = "SELECT * FROM (VALUES " + ", ".join(
-    f"({j}, {dedup.MINHASH_A[j]}, {dedup.MINHASH_C[j]}, "
-    f"{dedup.MINHASH_B[j]})"
-    for j in range(dedup.N_PERM)
-) + ") AS p(perm, a, c, b)"
-# 60-bit tids: a * tid would overflow BIGINT, so permutations hash the
-# (31-bit lo, 29-bit hi) halves — dedup._permute's oracle twin
-_SIG_DUCK = (
-    "SELECT doc_id, perm, MIN((a * (tid % 2147483648) + "
-    "c * (tid // 2147483648) + b) % 2147483647) AS minhash "
-    "FROM dt CROSS JOIN perms GROUP BY doc_id, perm"
-)
-_BANDS_DUCK = (
-    "SELECT doc_id, CAST(FLOOR(perm / 2.0) AS INT) AS band, "
-    "CAST(SUM(minhash * (CASE WHEN perm % 2 = 0 THEN 1 ELSE 31 END)) "
-    "AS BIGINT) AS band_key FROM sig "
-    "GROUP BY doc_id, CAST(FLOOR(perm / 2.0) AS INT)"
-)
-
-_MINHASH_CTES = _with(
-    f"d AS ({_DOCTOKS_DUCK})",
-    f"sh AS ({_SHINGLES_DUCK})",
-    f"dt AS MATERIALIZED ({_SHID_DUCK})",
-    f"perms AS ({_PERMS_DUCK})",
-    f"sig AS ({_SIG_DUCK})",
-    f"bandmix AS MATERIALIZED ({_BANDS_DUCK})",
-)
-
-
-@query(
-    "minhash_buckets",
-    _MINHASH_CTES
-    + "SELECT band, band_key, COUNT(*) AS n_docs, MIN(doc_id) AS "
-    "canonical_doc FROM bandmix GROUP BY band, band_key",
-)
-def q_minhash_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH band buckets over 3-token shingles (16 perms, 8 bands x
-    2 rows).  All hashing is explicit integer arithmetic
-    (oracle-replicable).  Keeps the exploded codegen chain: the
-    bit-identical zero-shuffle rowwise spelling (minhash_bands_rowwise)
-    measured ~6x slower here — interpreted higher-order-function lambdas
-    lose more CPU than the narrow integer shuffles cost."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    sig = dedup.minhash_signatures(dedup.shingle_ids(docs))
-    return dedup.lsh_band_buckets(sig)
-
-
-# capped LSH candidates + exact-Jaccard intersection — ONE definition
-# shared by the minhash_pairs and dedup_clusters oracles (the cap, the
-# banding join shape and the verify join must never drift apart)
-_CAND_JACCARD_CTES = (
-    "bsz AS (SELECT band, band_key, COUNT(*) AS n FROM bandmix "
-    "GROUP BY band, band_key), "
-    "capped AS (SELECT m.* FROM bandmix m JOIN bsz ON bsz.band = m.band "
-    f"AND bsz.band_key = m.band_key AND bsz.n <= {dedup.MAX_BUCKET}), "
-    "cpairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b "
-    "FROM capped a JOIN capped b ON a.band = b.band AND "
-    "a.band_key = b.band_key AND a.doc_id < b.doc_id), "
-    "sizes AS (SELECT doc_id, COUNT(*) AS sz FROM dt GROUP BY doc_id), "
-    "inter AS (SELECT p.doc_a, p.doc_b, COUNT(*) AS inter FROM cpairs p "
-    "JOIN dt x ON x.doc_id = p.doc_a JOIN dt y ON y.doc_id = p.doc_b "
-    "AND y.tid = x.tid GROUP BY p.doc_a, p.doc_b)"
-)
-
-
-@query(
-    "minhash_pairs",
-    _MINHASH_CTES.rstrip()
-    + ", " + _CAND_JACCARD_CTES + " "
-    "SELECT i.doc_a, i.doc_b, i.inter, "
-    "ROUND(CAST(i.inter AS DOUBLE) / CAST(sa.sz + sb.sz - i.inter AS DOUBLE), "
-    "6) AS jaccard FROM inter i "
-    "JOIN sizes sa ON sa.doc_id = i.doc_a JOIN sizes sb ON sb.doc_id = i.doc_b",
-)
-def q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH candidate pairs (bucket-capped) + exact shingle-set (n-gram)
-    Jaccard verification."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    # dt feeds the signatures plus three sides of the Jaccard verify;
-    # Spark does not CSE common subplans across joins, so materialize the
-    # shingle+md5 pipeline once (the oracle marks the same CTE
-    # MATERIALIZED for the same reason)
-    dt = dedup.shingle_ids(docs).localCheckpoint(eager=True)
-    sig = dedup.minhash_signatures(dt)
-    pairs = dedup.minhash_candidate_pairs(sig)
-    jc = dedup.jaccard_pairs(dt, pairs)
-    return jc.select(
-        "doc_a", "doc_b", "inter", F.round("jaccard", 6).alias("jaccard")
-    )
-
-
-_VERIFIED_PAIRS_SQL = (
-    _CAND_JACCARD_CTES
-    + ", verified AS (SELECT i.doc_a, i.doc_b FROM inter i "
-    "JOIN sizes sa ON sa.doc_id = i.doc_a "
-    "JOIN sizes sb ON sb.doc_id = i.doc_b "
-    "WHERE CAST(i.inter AS DOUBLE) / "
-    "CAST(sa.sz + sb.sz - i.inter AS DOUBLE) >= 0.5)"
-)
-
-
-@query(
-    "dedup_clusters",
-    "WITH RECURSIVE "
-    + _MINHASH_CTES[len("WITH "):].rstrip()
-    + ", "
-    + _VERIFIED_PAIRS_SQL
-    + ", sym AS (SELECT doc_a AS x, doc_b AS y FROM verified "
-    "UNION ALL SELECT doc_b, doc_a FROM verified), "
-    "reach(x, y) AS (SELECT x, y FROM sym "
-    "UNION SELECT r.x, s.y FROM reach r JOIN sym s ON s.x = r.y) "
-    "SELECT x AS doc_id, LEAST(x, MIN(y)) AS cluster "
-    "FROM reach GROUP BY x",
-)
-def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full near-dup dedup pipeline end to end: shingle ids ->
-    MinHash signatures -> capped LSH candidate pairs -> exact Jaccard
-    verification (>= 0.5) -> CONNECTED COMPONENTS over the verified pair
-    graph, cluster = min doc_id (the canonical to keep).  The engine
-    labels components by min-label propagation with path compression
-    (O(~diameter/2) join rounds — operators/dedup.duplicate_components);
-    the oracle computes the transitive closure with a recursive CTE and
-    takes the component minimum.  The Jaccard threshold compares a
-    single correctly-rounded division of identical integer operands, so
-    the verified edge set is engine-exact."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    dt = dedup.shingle_ids(docs).localCheckpoint(eager=True)
-    sig = dedup.minhash_signatures(dt)
-    cand = dedup.minhash_candidate_pairs(sig)
-    jc = dedup.jaccard_pairs(dt, cand)
-    verified = jc.filter(F.col("jaccard") >= 0.5).select("doc_a", "doc_b")
-    return dedup.duplicate_components(verified)
-
-
-@query(
-    "neardup_incremental",
-    _with(
-        f"toks AS ({_TOKS_SET_DUCK})",
-        f"dt AS MATERIALIZED ({_TOKID_DUCK})",
-        f"perms AS ({_PERMS_DUCK})",
-        f"sig AS ({_SIG_DUCK})",
-        f"bandmix AS MATERIALIZED ({_BANDS_DUCK})",
-        # the incremental protocol replayed exactly: batch 1 (even ids)
-        # caps buckets over ITS OWN rows; batch 2 (odd ids) caps over
-        # store + batch TOGETHER and emits only pairs touching an odd id
-        "bsz1 AS (SELECT band, band_key, COUNT(*) AS n FROM bandmix "
-        "WHERE doc_id % 2 = 0 GROUP BY band, band_key)",
-        "cap1 AS (SELECT m.* FROM bandmix m JOIN bsz1 ON "
-        "bsz1.band = m.band AND bsz1.band_key = m.band_key "
-        f"AND bsz1.n <= {dedup.MAX_BUCKET} WHERE m.doc_id % 2 = 0)",
-        "bsz2 AS (SELECT band, band_key, COUNT(*) AS n FROM bandmix "
-        "GROUP BY band, band_key)",
-        "cap2 AS (SELECT m.* FROM bandmix m JOIN bsz2 ON "
-        "bsz2.band = m.band AND bsz2.band_key = m.band_key "
-        f"AND bsz2.n <= {dedup.MAX_BUCKET})",
-    )
-    + "SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b "
-    "FROM cap1 a JOIN cap1 b ON a.band = b.band "
-    "AND a.band_key = b.band_key AND a.doc_id < b.doc_id "
-    "UNION "
-    "SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b "
-    "FROM cap2 a JOIN cap2 b ON a.band = b.band "
-    "AND a.band_key = b.band_key AND a.doc_id < b.doc_id "
-    "AND (a.doc_id % 2 = 1 OR b.doc_id % 2 = 1)",
-)
-def q_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental near-dup ingestion through the PERSISTENT LSH store
-    (operators/dedup.incremental_near_dups): the corpus arrives as two
-    batches (even doc_ids, then odd), each banded once and probed
-    against the store pinned at its pre-batch snapshot, with the new
-    keys committed as the next snapshot.  The oracle replays the
-    protocol itself — batch 1's bucket cap sized over batch 1 alone,
-    batch 2's over store+batch together, batch 2 emitting only pairs
-    that touch a new id — so it also witnesses the DOCUMENTED
-    divergence from one batch-mode run: a bucket crossing the cap
-    between batches keeps the pairs it emitted while small (no
-    retraction), where batch mode drops them all.  Equality with batch
-    mode when no bucket crosses the cap mid-stream, exactly-once pair
-    split, and crash-replay self-pair immunity are pinned in
-    tests/test_dedup.py."""
-    import shutil
-    import tempfile
-
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    store = tempfile.mkdtemp(prefix="lsh_store_q_")
-    try:
-        p1 = dedup.incremental_near_dups(
-            spark, docs.filter(F.pmod(F.col("doc_id"), F.lit(2)) == 0), store
-        )
-        p2 = dedup.incremental_near_dups(
-            spark, docs.filter(F.pmod(F.col("doc_id"), F.lit(2)) == 1), store
-        )
-    finally:
-        # both pair sets are eagerly checkpointed inside the operator,
-        # so the store is droppable before the caller consumes them
-        shutil.rmtree(store, ignore_errors=True)
-    return p1.unionByName(p2)
-
-
-_BITS_DUCK = "SELECT * FROM (VALUES " + ", ".join(
-    "({}, {}, {}, {})".format(b, *dedup.simhash_params(b))
-    for b in range(dedup.SIMHASH_BITS)
-) + ") AS bt(bit, p, q, c)"
-# split-half contribution hash — dedup.simhash's oracle twin (60-bit tids)
-_PERBIT_DUCK = (
-    "SELECT doc_id, bit, SUM(CAST((p * (tid % 2147483648) + "
-    "q * (tid // 2147483648) + c) % 1000 AS "
-    "DOUBLE) - 499.5) AS s FROM dt CROSS JOIN bits GROUP BY doc_id, bit"
-)
-
-
-@query(
-    "simhash",
-    _with(
-        f"toks AS ({_TOKS_SET_DUCK})",
-        f"dt AS MATERIALIZED ({_TOKID_DUCK})",
-        f"bits AS ({_BITS_DUCK})",
-        f"perbit AS ({_PERBIT_DUCK})",
-    )
-    + "SELECT doc_id, CAST(SUM((CASE WHEN s > 0 THEN 1 ELSE 0 END) * "
-    "CAST(POWER(2.0, bit) AS BIGINT)) AS BIGINT) AS simhash "
-    "FROM perbit GROUP BY doc_id",
-)
-def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """16-bit SimHash fingerprint (sign-of-weighted-sum; exact half-integer
-    arithmetic -> bit-reproducible)."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return dedup.simhash(dedup.token_ids(docs))
-
-
-_SIMHASH_PAIRS_BITS = 32
-_SIMHASH_PAIRS_BANDS = 4
-_BITS32_DUCK = "SELECT * FROM (VALUES " + ", ".join(
-    "({}, {}, {}, {})".format(b, *dedup.simhash_params(b))
-    for b in range(_SIMHASH_PAIRS_BITS)
-) + ") AS bt(bit, p, q, c)"
-_SIMHASH_PAIRS_SQL = (
-    _with(
-        f"toks AS ({_TOKS_SET_DUCK})",
-        f"dt AS MATERIALIZED ({_TOKID_DUCK})",
-        f"bits AS ({_BITS32_DUCK})",
-        f"perbit AS ({_PERBIT_DUCK})",
-        "sh AS MATERIALIZED (SELECT doc_id, CAST(SUM((CASE WHEN s > 0 THEN "
-        "1 ELSE 0 END) * CAST(POWER(2.0, bit) AS BIGINT)) AS BIGINT) AS "
-        "simhash FROM perbit GROUP BY doc_id)",
-        "bands AS (SELECT * FROM (VALUES (0), (1), (2), (3)) AS b(band))",
-        "banded AS MATERIALIZED (SELECT doc_id, simhash, band, "
-        "(simhash >> (band * 8)) & 255 AS band_key FROM sh CROSS JOIN bands)",
-        "szs AS (SELECT band, band_key, COUNT(*) AS n FROM banded "
-        "GROUP BY band, band_key)",
-        f"capped AS (SELECT bd.* FROM banded bd JOIN szs "
-        f"USING (band, band_key) WHERE szs.n <= {dedup.MAX_BUCKET})",
-        "cand AS (SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b, "
-        "l.simhash AS sa, r.simhash AS sb FROM capped l JOIN capped r "
-        "ON l.band = r.band AND l.band_key = r.band_key "
-        "AND l.doc_id < r.doc_id)",
-    )
-    + "SELECT doc_a, doc_b, CAST(bit_count(xor(sa, sb)) AS INT) AS hamming "
-    f"FROM cand WHERE bit_count(xor(sa, sb)) <= {_SIMHASH_PAIRS_BANDS - 1}"
-)
-
-
-@query("simhash_pairs", _SIMHASH_PAIRS_SQL)
-def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs via pigeonhole banding (Manku WWW'07 shape):
-    a 32-bit fingerprint split into 4 disjoint 8-bit bands; any pair
-    within Hamming <= 3 shares a band verbatim, so the equi-join on
-    (band, band_key) is exhaustive at that radius — no all-pairs compare.
-    Candidates verified with the exact XOR popcount.  32 bits (not the
-    signature query's 16) so each band spans 256 buckets: selectivity is
-    what keeps bucket sizes — and thus the self-join — bounded at corpus
-    scale.  All-integer arithmetic end to end -> engine-exact."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    # sigs feeds the bucket-size pass plus both self-join sides; Spark
-    # does not CSE common subplans across joins, so materialize the
-    # tokenize->md5->32-bit-agg pipeline once (same rationale and oracle
-    # MATERIALIZED twin as q_minhash_pairs)
-    sigs = dedup.simhash(
-        dedup.token_ids(docs), bits=_SIMHASH_PAIRS_BITS
-    ).localCheckpoint(eager=True)
-    return dedup.simhash_pairs(
-        sigs, n_bands=_SIMHASH_PAIRS_BANDS, bits=_SIMHASH_PAIRS_BITS
-    )
 
 
 @query(
@@ -6139,54 +5836,6 @@ def q_crawl_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "dedup_keep",
-    "WITH RECURSIVE "
-    + _MINHASH_CTES[len("WITH "):].rstrip()
-    + ", "
-    + _VERIFIED_PAIRS_SQL
-    + ", sym AS (SELECT doc_a AS x, doc_b AS y FROM verified "
-    "UNION ALL SELECT doc_b, doc_a FROM verified), "
-    "reach(x, y) AS (SELECT x, y FROM sym "
-    "UNION SELECT r.x, s.y FROM reach r JOIN sym s ON s.x = r.y), "
-    "comp AS (SELECT x AS doc_id, LEAST(x, MIN(y)) AS cluster "
-    "FROM reach GROUP BY x), "
-    "drops AS (SELECT doc_id FROM comp WHERE cluster <> doc_id) "
-    "SELECT d.lang, CAST(COUNT(*) AS BIGINT) AS n_docs, "
-    "CAST(COUNT(*) - COUNT(dr.doc_id) AS BIGINT) AS n_kept, "
-    "CAST(COUNT(dr.doc_id) AS BIGINT) AS n_dropped, "
-    "CAST(SUM(d.n_chars) AS BIGINT) AS chars_total, "
-    "CAST(SUM(CASE WHEN dr.doc_id IS NULL THEN d.n_chars ELSE 0 END) "
-    "AS BIGINT) AS chars_kept "
-    "FROM documents d LEFT JOIN drops dr ON dr.doc_id = d.doc_id "
-    "GROUP BY d.lang",
-)
-def q_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The dedup pipeline's actual deliverable: the KEEP decision and
-    the before/after datasheet accounting (operators/dedup.py
-    survivor_stats).  Shingles -> MinHash -> capped LSH candidates ->
-    exact Jaccard >= 0.5 -> connected components -> cluster canonical
-    (MIN doc_id) survives, other members drop — then per-language doc
-    and character counts before/after, the numbers a corpus release
-    publishes.  Oracle = dedup_clusters' recursive-CTE closure plus a
-    LEFT JOIN replay of the keep rule; every output is an exact BIGINT.
-
-    Scale shape: the drop list joins on (doc_id) only — bodies never
-    shuffle — and the final agg is one partial+final groupBy(lang); at
-    100 TB the drop list is a fraction of the corpus and this is the
-    same slim anti-join discipline as exact_dedup."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    dt = dedup.shingle_ids(docs).localCheckpoint(eager=True)
-    sig = dedup.minhash_signatures(dt)
-    cand = dedup.minhash_candidate_pairs(sig)
-    jc = dedup.jaccard_pairs(dt, cand)
-    verified = jc.filter(F.col("jaccard") >= 0.5).select("doc_a", "doc_b")
-    comp = dedup.duplicate_components(verified)
-    return dedup.survivor_stats(docs, comp, "lang")
-
-
-@query(
     "setsim_pairs",
     _with(
         f"d AS ({_DOCTOKS_DUCK})",
@@ -6208,8 +5857,8 @@ def q_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_setsim_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT set-similarity self-join at Jaccard >= 4/5 over the 3-gram
     shingle-id sets (operators/dedup.py allpairs_jaccard) — the
-    completeness-guaranteed near-dup join: unlike minhash_pairs /
-    simhash_pairs, NO qualifying pair can be missed, which is exactly
+    completeness-guaranteed near-dup join: unlike probabilistic
+    banding, NO qualifying pair can be missed, which is exactly
     what this parity row certifies (the oracle is the definitional
     quadratic: every shingle-sharing pair's exact intersection, size
     join, integer threshold — pairs sharing no shingle have J = 0 and
@@ -6946,77 +6595,6 @@ def _tile_skew_core(cells: DataFrame) -> DataFrame:
     )
 
 
-@query(
-    "neardup_eval",
-    _MINHASH_CTES.rstrip()
-    + ", " + _CAND_JACCARD_CTES + ", "
-    "ti AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, "
-    "CAST(COUNT(*) AS BIGINT) AS inter FROM dt a JOIN dt b "
-    "ON a.tid = b.tid AND a.doc_id < b.doc_id GROUP BY 1, 2), "
-    "truth AS (SELECT ti.doc_a, ti.doc_b FROM ti "
-    "JOIN sizes x ON x.doc_id = ti.doc_a "
-    "JOIN sizes y ON y.doc_id = ti.doc_b "
-    f"WHERE {dedup.ALLPAIRS_DEN} * ti.inter >= "
-    f"{dedup.ALLPAIRS_NUM} * (x.sz + y.sz - ti.inter)), "
-    "tc AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_truth FROM truth), "
-    "cc AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_cand FROM cpairs), "
-    "hc AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_hit FROM truth t "
-    "JOIN cpairs p ON p.doc_a = t.doc_a AND p.doc_b = t.doc_b) "
-    "SELECT n_truth, n_cand, n_hit, "
-    "CASE WHEN n_truth > 0 THEN ROUND(CAST(n_hit AS DOUBLE) / "
-    "CAST(n_truth AS DOUBLE), 6) END AS recall, "
-    "CASE WHEN n_cand > 0 THEN ROUND(CAST(n_hit AS DOUBLE) / "
-    "CAST(n_cand AS DOUBLE), 6) END AS precision "
-    "FROM tc CROSS JOIN cc CROSS JOIN hc",
-)
-def q_neardup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall/precision of the MinHash-LSH CANDIDATE stage against the
-    exact set-similarity ground truth (setsim_pairs' AllPairs join at
-    the same Jaccard >= 4/5 threshold) — the evaluation every dedup
-    pipeline owes its users: banding is probabilistic (a >= tau pair
-    can land in no shared band) and bucket caps drop pairs on purpose,
-    so recall < 1 is a MEASURED property, not a surprise; precision
-    says how much exact-verification work the candidates cost.
-    Composes two independently-verified subsystems (LSH banding;
-    AllPairs exact join) into the report that judges one against the
-    other.
-
-    Exactness: both pair sets are integer-keyed and integer-gated
-    (the rational tau gate); counts are exact; recall/precision are
-    ONE guarded division each, ROUND(,6).
-
-    Scale shape: truth pairs come from the shingle-id equi-join
-    (shared-shingle pairs only, never the full cross); candidates
-    from the capped band buckets; the evaluation joins two pair
-    tables on their keys and folds to one row."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    dt = dedup.shingle_ids(docs).localCheckpoint(eager=True)
-    cand = dedup.minhash_candidate_pairs(
-        dedup.minhash_signatures(dt)
-    ).select("doc_a", "doc_b")
-    truth = dedup.allpairs_jaccard(dt).select("doc_a", "doc_b")
-    tc = truth.agg(F.count(F.lit(1)).cast("long").alias("n_truth"))
-    cc = cand.agg(F.count(F.lit(1)).cast("long").alias("n_cand"))
-    hc = truth.join(cand, ["doc_a", "doc_b"]).agg(
-        F.count(F.lit(1)).cast("long").alias("n_hit")
-    )
-    return (
-        tc.crossJoin(F.broadcast(cc))
-        .crossJoin(F.broadcast(hc))
-        .selectExpr(
-            "n_truth",
-            "n_cand",
-            "n_hit",
-            "CASE WHEN n_truth > 0 THEN ROUND(CAST(n_hit AS DOUBLE) / "
-            "CAST(n_truth AS DOUBLE), 6) END AS recall",
-            "CASE WHEN n_cand > 0 THEN ROUND(CAST(n_hit AS DOUBLE) / "
-            "CAST(n_cand AS DOUBLE), 6) END AS precision",
-        )
-    )
-
-
 #: openness sample tangent, ONE spelling: (zs - z0) is an exact Q20
 #: integer, the denominator is a product of exact doubles (step *
 #: cell-size * sqrt(1 or 2), sqrt correctly rounded), so the tangent is
@@ -7242,96 +6820,6 @@ def _aniso_core(zt: DataFrame) -> DataFrame:
 
 
 @query(
-    "dedup_cluster_sizes",
-    "WITH RECURSIVE "
-    + _MINHASH_CTES[len("WITH "):].rstrip()
-    + ", "
-    + _VERIFIED_PAIRS_SQL
-    + ", sym AS (SELECT doc_a AS x, doc_b AS y FROM verified "
-    "UNION ALL SELECT doc_b, doc_a FROM verified), "
-    "reach(x, y) AS (SELECT x, y FROM sym "
-    "UNION SELECT r.x, s.y FROM reach r JOIN sym s ON s.x = r.y), "
-    "lab AS (SELECT x AS doc_id, LEAST(x, MIN(y)) AS cluster "
-    "FROM reach GROUP BY x), "
-    "cs AS (SELECT cluster, CAST(COUNT(*) AS BIGINT) AS sz FROM lab "
-    "GROUP BY cluster), "
-    "h AS (SELECT sz, CAST(COUNT(*) AS BIGINT) AS n_clusters FROM cs "
-    "GROUP BY sz), "
-    "tot AS (SELECT CAST((SELECT COUNT(*) FROM documents) AS BIGINT) "
-    "AS n_docs, CAST(COALESCE(SUM(sz * n_clusters), 0) AS BIGINT) AS "
-    "n_clustered, CAST(COALESCE(SUM((sz - 1) * n_clusters), 0) AS "
-    "BIGINT) AS n_removable FROM h) "
-    "SELECT h.sz, h.n_clusters, tot.n_docs, tot.n_clustered, "
-    "tot.n_removable, ROUND(CAST(tot.n_removable AS DOUBLE) / "
-    "CAST(tot.n_docs AS DOUBLE), 6) AS dedup_rate "
-    "FROM h CROSS JOIN tot",
-)
-def q_dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cluster-size census over the near-dup connected components + the
-    corpus dedup rate — the capacity-planning numbers a dedup job
-    publishes BEFORE anyone deletes anything (how many docs sit in
-    2-clusters vs giant components decides keep-one-per-cluster
-    savings, and a single giant component is the classic
-    over-aggressive-threshold symptom this census makes visible):
-    per-size cluster counts, total clustered docs, removable docs
-    (size - 1 per cluster — the keep-the-canonical rule), and
-    removable/corpus as the dedup rate.
-
-    Exactness: composes dedup_clusters' engine path (min-label
-    propagation) / oracle path (recursive-CTE closure) unchanged,
-    then pure integer folds; the rate is ONE division, ROUND(,6).
-
-    Scale shape: the component labels fold to cluster sizes, sizes to
-    the size histogram — each strictly smaller than the last; the
-    scalar totals ride the histogram."""
-    from pyspark.sql import Window
-
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    dt = dedup.shingle_ids(docs).localCheckpoint(eager=True)
-    sig = dedup.minhash_signatures(dt)
-    cand = dedup.minhash_candidate_pairs(sig)
-    jc = dedup.jaccard_pairs(dt, cand)
-    verified = jc.filter(F.col("jaccard") >= 0.5).select("doc_a", "doc_b")
-    lab = dedup.duplicate_components(verified)
-    cs = lab.groupBy("cluster").agg(
-        F.count(F.lit(1)).cast("long").alias("sz")
-    )
-    h = cs.groupBy("sz").agg(
-        F.count(F.lit(1)).cast("long").alias("n_clusters")
-    )
-    nd = docs.agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
-    full = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    return (
-        h.crossJoin(F.broadcast(nd))
-        .select(
-            "sz",
-            "n_clusters",
-            "n_docs",
-            F.coalesce(
-                F.sum(F.col("sz") * F.col("n_clusters")).over(full), F.lit(0)
-            ).cast("long").alias("n_clustered"),
-            F.coalesce(
-                F.sum((F.col("sz") - 1) * F.col("n_clusters")).over(full),
-                F.lit(0),
-            ).cast("long").alias("n_removable"),
-        )
-        .selectExpr(
-            "sz",
-            "n_clusters",
-            "n_docs",
-            "n_clustered",
-            "n_removable",
-            "ROUND(CAST(n_removable AS DOUBLE) / CAST(n_docs AS DOUBLE), "
-            "6) AS dedup_rate",
-        )
-    )
-
-
-@query(
     "resample_error",
     _BASE.rstrip()
     + f", gmean AS ({GRID_MEAN_CTE}), "
@@ -7516,14 +7004,14 @@ DRIVER_WINDOW: list[str] = [
     "terrain_pipeline", "pip_partitioned",
     "manifest_bbox_scan", "manifest_incremental",
     "pages_geocode",
-    "dedup_clusters",
+    "reproject_utm",
     "crawl_latest", "grid_mean_salted", "pip_stats",
     "pages_pip", "pip_pairs",
     "manifest_delete_scan", "manifest_bloom_scan", "pip_rtree",
     "hex_ring_density", "decontaminate", "repetition_stats",
     "url_canonicalize",
     "grid_extent", "grid_stats", "detrend_grid",
-    "neardup_incremental", "profile_extract", "events_hourly",
+    "radial_histogram", "profile_extract", "events_hourly",
     "fft_parseval",
 ]
 

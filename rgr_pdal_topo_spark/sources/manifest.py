@@ -25,10 +25,9 @@ of the Iceberg design the engine actually relies on, from scratch:
   stats PROVE no row can match) and the residual row filter is always
   re-applied, so correctness never depends on stats.
 * **never-silent metrics** — :func:`scan_report` returns how many files
-  each predicate kept/skipped (the ``lsh_drop_report`` doctrine: a scan
-  that silently read 1/800th of the table and a scan that pruned
-  796 files look identical in the result schema; the report is how you
-  tell).
+  each predicate kept/skipped: a scan that silently read 1/800th of the
+  table and a scan that pruned 796 files look identical in the result
+  schema; the report is how you tell.
 * **time travel / incremental** — ``snapshot=k`` reads the table as of
   snapshot k; ``since_snapshot=k`` reads only files added after k (the
   CDC-style incremental consumer the resumable-pipeline story needs:

@@ -1,8 +1,7 @@
 """Streaming conversion funnel (SURVEY.md §2.10): the batch
 funnel_steps query as an ``applyInPandasWithState`` state machine —
 the event-SEQUENCING member of the custom stateful family beside the
-per-cell gridding fold (stateful.py), streaming dedup (dedup.py) and
-bounded-state near-dup (neardup.py).
+per-cell gridding fold (stateful.py).
 
 State per user: (stage, rep_ts_us, rep_id) — the funnel stage reached
 so far and the (timestamp, event_id) of the stage's representative

@@ -1,38 +1,11 @@
-"""Dedup operator tests: shingling, LSH recall/selectivity, bucket caps,
-digest-keyed exact dedup.
-
-The recall test builds a controlled corpus: base docs drawn from disjoint
-seeded vocabularies (near-zero cross Jaccard) plus one near-duplicate per
-base doc (one token substituted -> 3-shingle Jaccard ~0.7), and asserts the
-LSH candidate set finds the planted pairs without drowning in noise.
+"""Dedup operator tests: shingling, portable ids, digest-keyed exact
+dedup, the pair operators' semantics, and the connected-components
+labeling that ``cluster.dbscan_grid`` runs on its core-cell graph.
 """
 
 from __future__ import annotations
 
-import random
-
-import pytest
-
-from pyspark.sql import functions as F
-
-from rgr_pdal_topo_spark.operators import dedup
-
-
-def _corpus(n_base: int = 30, n_tok: int = 20, seed: int = 7):
-    rng = random.Random(seed)
-    rows = []
-    for i in range(n_base):
-        toks = [f"w{i}_{rng.randrange(10**6)}" for _ in range(n_tok)]
-        rows.append((i, " ".join(toks)))
-        dup = list(toks)
-        dup[n_tok // 2] = "CHANGED"
-        rows.append((1000 + i, " ".join(dup)))
-    return rows
-
-
-@pytest.fixture(scope="module")
-def docs(spark):
-    return spark.createDataFrame(_corpus(), "doc_id long, text string")
+from rgr_pdal_topo_spark.operators import cluster, dedup
 
 
 def test_shingles_short_docs(spark):
@@ -44,36 +17,6 @@ def test_shingles_short_docs(spark):
         (r.doc_id, r.shingle) for r in dedup.shingles(df, k=3).collect()
     }
     assert got == {(2, "a b c"), (3, "a b c"), (3, "b c d")}
-
-
-def test_minhash_lsh_recall_and_selectivity(docs):
-    sig = dedup.minhash_signatures(dedup.shingle_ids(docs))
-    pairs = dedup.minhash_candidate_pairs(sig).collect()
-    got = {(r.doc_a, r.doc_b) for r in pairs}
-    planted = {(i, 1000 + i) for i in range(30)}
-    recall = len(got & planted) / len(planted)
-    assert recall >= 0.9, f"LSH recall {recall} < 0.9 on planted near-dups"
-    # selectivity: disjoint-vocab pairs should essentially never collide
-    n_docs = 60
-    all_pairs = n_docs * (n_docs - 1) // 2
-    assert len(got) <= len(planted) + 0.02 * all_pairs, (
-        f"{len(got)} candidates for {len(planted)} true pairs — banding "
-        "is not selective"
-    )
-
-
-def test_bucket_cap_prevents_quadratic_blowup(spark):
-    # 20 identical docs -> every band bucket has 20 members; with a cap of
-    # 10 the capped join must produce NO pairs (the group belongs to exact
-    # dedup), with the default cap it produces all 190.
-    df = spark.createDataFrame(
-        [(i, "the same exact document text repeated verbatim here")
-         for i in range(20)],
-        "doc_id long, text string",
-    )
-    sig = dedup.minhash_signatures(dedup.shingle_ids(df))
-    assert dedup.minhash_candidate_pairs(sig, max_bucket=10).count() == 0
-    assert dedup.minhash_candidate_pairs(sig).count() == 190
 
 
 def test_exact_dedup_digest_grouping(spark):
@@ -111,111 +54,6 @@ def test_horner_hash_matches_duckdb(spark, ddb):
     assert all(0 <= t < dedup.ID_SPACE for t in got)
 
 
-def test_lsh_drop_report_surfaces_hot_buckets(spark):
-    """The bucket cap must not drop silently: a planted hot bucket (25
-    identical docs, every band over the cap of 10) shows up in the report
-    with the right bucket and doc counts, and a corpus with no hot buckets
-    reports zeros."""
-    hot = spark.createDataFrame(
-        [(i, "the same exact document text repeated verbatim here")
-         for i in range(25)],
-        "doc_id long, text string",
-    )
-    sig = dedup.minhash_signatures(dedup.shingle_ids(hot))
-    rep = dedup.lsh_drop_report(sig, max_bucket=10).first()
-    # identical docs -> identical signatures -> all 8 band buckets hot
-    assert rep.n_dropped_buckets == 8
-    assert rep.n_docs_affected == 25
-    assert dedup.lsh_dropped_buckets(sig, max_bucket=10).count() == 8
-    # and the pair join is empty exactly when the report is non-empty
-    assert dedup.minhash_candidate_pairs(sig, max_bucket=10).count() == 0
-
-    cold = spark.createDataFrame(
-        [(1, "one doc alone"), (2, "a different text entirely now")],
-        "doc_id long, text string",
-    )
-    csig = dedup.minhash_signatures(dedup.shingle_ids(cold))
-    crep = dedup.lsh_drop_report(csig, max_bucket=10).first()
-    assert (crep.n_dropped_buckets, crep.n_docs_affected) == (0, 0)
-
-
-def test_simhash_one_pass_no_explode(spark):
-    """The simhash agg must not widen the shuffle: no bit-table cross join
-    (16x pre-shuffle explode), no broadcast, exactly one aggregation key
-    (doc_id) — the same one-pass shape as minhash_signatures."""
-    df = spark.createDataFrame(
-        [(1, "alpha beta gamma"), (2, "delta beta zeta epsilon")],
-        "doc_id long, text string",
-    )
-    sh = dedup.simhash(dedup.token_ids(df))
-    plan = sh._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoop" not in plan
-    assert "BroadcastExchange" not in plan
-    # values: sign-of-sum per bit over the token-id set, reference spelling
-    tids = {
-        r.doc_id: [] for r in dedup.token_ids(df).collect()
-    }
-    for r in dedup.token_ids(df).collect():
-        tids[r.doc_id].append(r.tid)
-    exp = {}
-    for d, ts in tids.items():
-        v = 0
-        for b in range(dedup.SIMHASH_BITS):
-            p, q, c = dedup.simhash_params(b)
-            s = sum(
-                ((p * (t % 2**31) + q * (t >> 31) + c) % 1000) - 499.5
-                for t in ts
-            )
-            if s > 0:
-                v |= 1 << b
-        exp[d] = v
-    got = {r.doc_id: r.simhash for r in sh.collect()}
-    assert got == exp
-
-
-def test_simhash_pairs_pigeonhole_exhaustive(docs):
-    """Banding must find EVERY pair within Hamming <= n_bands - 1 (the
-    pigeonhole guarantee), and nothing beyond the radius — verified
-    against a brute-force all-pairs popcount on the same fingerprints."""
-    bits, n_bands = 32, 4
-    sigs = dedup.simhash(dedup.token_ids(docs), bits=bits)
-    got = {
-        (r.doc_a, r.doc_b): r.hamming
-        for r in dedup.simhash_pairs(
-            sigs, n_bands=n_bands, bits=bits, max_bucket=10**6
-        ).collect()
-    }
-    fp = {r.doc_id: r.simhash for r in sigs.collect()}
-    ids = sorted(fp)
-    exp = {}
-    for i, a in enumerate(ids):
-        for b in ids[i + 1:]:
-            h = bin(fp[a] ^ fp[b]).count("1")
-            if h <= n_bands - 1:
-                exp[(a, b)] = h
-    assert got == exp
-    assert exp, "planted near-dups should land within the Hamming radius"
-
-
-def test_simhash_pairs_bucket_cap(spark):
-    """A hot band bucket (here: identical fingerprints) above max_bucket is
-    excluded from the self-join instead of going quadratic."""
-    df = spark.createDataFrame(
-        [(i, "same text everywhere") for i in range(8)],
-        "doc_id long, text string",
-    )
-    sigs = dedup.simhash(dedup.token_ids(df), bits=32)
-    assert dedup.simhash_pairs(sigs, bits=32, max_bucket=4).count() == 0
-    assert dedup.simhash_pairs(sigs, bits=32, max_bucket=8).count() == 28
-    # the cap is never silent: all 4 bands of the identical fingerprints
-    # blow the cap, and every doc is affected
-    rep = dedup.simhash_drop_report(sigs, bits=32, max_bucket=4).collect()[0]
-    assert (rep.n_dropped_buckets, rep.n_docs_affected) == (4, 8)
-    rep = dedup.simhash_drop_report(sigs, bits=32, max_bucket=8).collect()[0]
-    assert (rep.n_dropped_buckets, rep.n_docs_affected) == (0, 0)
-
-
 def test_duplicate_components_chain_and_clique(spark):
     """Component labeling: a 4-chain (needs propagation across hops), a
     3-clique, and an isolated pair all resolve to min-doc_id clusters;
@@ -228,66 +66,10 @@ def test_duplicate_components_chain_and_clique(spark):
     )
     got = {
         r.doc_id: r.cluster
-        for r in dedup.duplicate_components(pairs).collect()
+        for r in cluster.duplicate_components(pairs).collect()
     }
     assert got == {10: 10, 11: 10, 12: 10, 13: 10,
                    5: 5, 6: 5, 7: 5, 2: 2, 9: 2}
-
-
-def test_incremental_near_dups_matches_batch(spark, tmp_path):
-    """Two-batch incremental processing over the persistent LSH store
-    emits exactly the batch-mode pair set (no bucket crosses the cap
-    here), split correctly across the two calls."""
-    import os
-
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    full = {
-        (r.doc_a, r.doc_b)
-        for r in dedup.minhash_candidate_pairs(
-            dedup.minhash_signatures(dedup.token_ids(docs))
-        ).collect()
-    }
-    store = str(tmp_path / "lsh_store")
-    os.makedirs(store)
-    half = docs.agg(F.expr("percentile(doc_id, 0.5)")).collect()[0][0]
-    b1 = docs.filter(F.col("doc_id") <= half)
-    b2 = docs.filter(F.col("doc_id") > half)
-    p1 = {
-        (r.doc_a, r.doc_b)
-        for r in dedup.incremental_near_dups(spark, b1, store).collect()
-    }
-    p2 = {
-        (r.doc_a, r.doc_b)
-        for r in dedup.incremental_near_dups(spark, b2, store).collect()
-    }
-    assert p1 | p2 == full
-    assert not (p1 & p2)  # each pair delivered exactly once
-    # batch 2's pairs include cross-batch candidates found via the store
-    assert any(a <= half < b or b <= half < a for a, b in p2) or not p2
-
-
-def test_incremental_store_is_idempotent_readable(spark, tmp_path):
-    """The store is a manifest table: a re-run of the same batch against
-    a PINNED snapshot cannot see its own keys (no self-pairs beyond the
-    genuine ones), and the store accumulates one snapshot per batch."""
-    import os
-
-    from rgr_pdal_topo_spark.sources import manifest as man
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    store = str(tmp_path / "lsh_store2")
-    os.makedirs(store)
-    dedup.incremental_near_dups(
-        spark, docs.filter(F.col("doc_id") < 20), store
-    )
-    dedup.incremental_near_dups(
-        spark, docs.filter(F.col("doc_id").between(20, 39)), store
-    )
-    ids = [s["id"] for s in man.snapshots(store)]
-    assert ids == [1, 2]
 
 
 def test_decontaminate_planted_overlap(spark):
@@ -331,29 +113,6 @@ def test_repetition_stats_planted_spam(spark):
     assert got[2] == (7, 7, 1)
     # the spam doc's top-shingle ratio strictly dominates the clean one
     assert got[1][2] * got[2][0] > got[2][2] * got[1][0]
-
-
-def test_incremental_replayed_batch_emits_no_self_pairs(spark, tmp_path):
-    """A batch REPLAYED after a crash between commit() and the caller
-    persisting its pairs puts the same doc_ids in both the store and
-    the batch; the new-vs-store cross join must not emit (d, d)."""
-    import os
-
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    batch = docs.filter(F.col("doc_id") < 30)
-    store = str(tmp_path / "lsh_store3")
-    os.makedirs(store)
-    first = {
-        (r.doc_a, r.doc_b)
-        for r in dedup.incremental_near_dups(spark, batch, store).collect()
-    }
-    replay = dedup.incremental_near_dups(spark, batch, store).collect()
-    assert all(r.doc_a != r.doc_b for r in replay)
-    # the replay re-finds exactly the original pair set (via new-vs-new
-    # and new-vs-store routes), nothing else
-    assert {(r.doc_a, r.doc_b) for r in replay} == first
 
 
 def test_shingle_dup_stats_planted(spark):
@@ -404,35 +163,6 @@ def test_line_dedup_planted_boilerplate(spark):
     assert got[3] == (3, 2, 0, "gamma opening\n" + promo)
     # a document that was pure boilerplate is present and empty
     assert got[4] == (1, 0, 0, "")
-
-
-def test_survivor_stats_planted_keep_rule(spark):
-    """Cluster canonical (MIN doc_id) survives; docs outside any
-    component are kept; character accounting is exact."""
-    docs = spark.createDataFrame(
-        [
-            (0, "en", 10),
-            (1, "en", 20),   # cluster {1,2,3} -> keep 1, drop 2 and 3
-            (2, "en", 30),
-            (3, "de", 40),
-            (4, "de", 50),
-        ],
-        "doc_id long, lang string, n_chars long",
-    )
-    comp = spark.createDataFrame(
-        [(1, 1), (2, 1), (3, 1)], "doc_id long, cluster long"
-    )
-    got = {
-        r["lang"]: (
-            r["n_docs"], r["n_kept"], r["n_dropped"],
-            r["chars_total"], r["chars_kept"],
-        )
-        for r in dedup.survivor_stats(docs, comp).collect()
-    }
-    assert got == {
-        "en": (3, 2, 1, 60, 30),   # doc 2 dropped (30 chars)
-        "de": (2, 1, 1, 90, 50),   # doc 3 dropped (40 chars)
-    }
 
 
 def test_duplicated_spans_planted(spark):
@@ -814,69 +544,3 @@ def test_good_turing_hand_computed(spark):
     assert out[2]["n_r"] == 2
     assert out[2]["n_next"] is None and out[2]["r_star"] is None
     assert set(out) == {1, 2}
-
-
-def test_neardup_eval_identical_docs_full_recall(spark):
-    """Two identical docs are a guaranteed truth pair AND a guaranteed
-    LSH candidate (identical signatures share every band), so with no
-    other qualifying pair recall is EXACTLY 1.0; the unrelated doc
-    creates no truth pair."""
-    import os
-    import tempfile
-
-    import pandas as pd
-
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    df = pd.DataFrame(
-        {
-            "doc_id": [1, 2, 3],
-            "text": [
-                "the quick brown fox jumps over the lazy dog",
-                "the quick brown fox jumps over the lazy dog",
-                "entirely different words about spark and parquet files",
-            ],
-            "lang": ["en"] * 3,
-            "source": ["s"] * 3,
-            "n_chars": [44, 44, 54],
-        }
-    )
-    with tempfile.TemporaryDirectory() as d:
-        df.to_parquet(os.path.join(d, "documents.parquet"))
-        [r] = QUERIES["neardup_eval"](spark, d).collect()
-    assert r["n_truth"] == 1 and r["n_hit"] == 1
-    assert r["recall"] == 1.0
-    assert r["n_cand"] >= 1
-
-
-def test_dedup_cluster_sizes_planted(spark):
-    """A triangle of identical docs plus a pair plus a singleton:
-    sizes {3: 1, 2: 1}, clustered 5, removable 3, rate 3/6."""
-    import os
-    import tempfile
-
-    import pandas as pd
-
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    a = "the quick brown fox jumps over the lazy dog tonight"
-    b = "pack my box with five dozen liquor jugs right now ok"
-    df = pd.DataFrame(
-        {
-            "doc_id": [1, 2, 3, 4, 5, 6],
-            "text": [a, a, a, b, b,
-                     "completely unrelated content about spark engines"],
-            "lang": ["en"] * 6,
-            "source": ["s"] * 6,
-            "n_chars": [50] * 6,
-        }
-    )
-    with tempfile.TemporaryDirectory() as d:
-        df.to_parquet(os.path.join(d, "documents.parquet"))
-        rows = {
-            r["sz"]: r for r in QUERIES["dedup_cluster_sizes"](spark, d).collect()
-        }
-    assert rows[3]["n_clusters"] == 1 and rows[2]["n_clusters"] == 1
-    r = rows[3]
-    assert (r["n_docs"], r["n_clustered"], r["n_removable"]) == (6, 5, 3)
-    assert r["dedup_rate"] == 0.5

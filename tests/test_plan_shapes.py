@@ -155,23 +155,6 @@ def test_stateful_stream_uses_state_operator(spark):
     assert "FlatMapGroupsInPandasWithState" in plan
 
 
-def test_minhash_plan_has_no_global_window(spark):
-    """Round-1's token ids used dense_rank over the whole vocabulary — a
-    single-partition WindowExec Spark itself warns about.  The md5+Horner
-    spelling must keep the signature pipeline window-free and must not
-    broadcast a vocabulary dimension."""
-    from rgr_pdal_topo_spark.operators import dedup
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF_DIR, "documents")
-    sig = dedup.minhash_signatures(dedup.shingle_ids(docs))
-    plan = _plan(sig)
-    assert "Window" not in plan
-    # the one-pass signature agg has NO broadcast at all (the old 16-row
-    # permutation cross join is gone too)
-    assert plan.count("BroadcastExchange") == 0
-
-
 def test_cell_index_is_pure_codegen(spark):
     """The spatial-index encode must stay JVM-side: no Python eval node,
     no shuffle — one projected scan."""
@@ -328,31 +311,6 @@ def test_points_decimate_is_scan_side(spark):
     from rgr_pdal_topo_spark.queries import QUERIES
 
     plan = _plan(QUERIES["points_decimate"](spark, SF_DIR))
-    assert "Exchange" not in plan
-    assert "EvalPython" not in plan
-
-
-def test_simhash_pairs_banded_equi_join(spark):
-    """The SimHash pair search must be the banded equi-join, never an
-    all-pairs compare: no cartesian / nested-loop node anywhere, and the
-    fingerprint build itself stays the one-pass window-free agg."""
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    plan = _plan(QUERIES["simhash_pairs"](spark, SF_DIR))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "Window" not in plan
-
-
-def test_minhash_rowwise_banding_zero_shuffle(spark):
-    """The streaming-legal row-local banding must plan as a pure
-    projection: zero Exchange, zero Python — the property that makes it
-    admissible before applyInPandasWithState."""
-    from rgr_pdal_topo_spark.operators import dedup
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF_DIR, "documents")
-    plan = _plan(dedup.minhash_bands_rowwise(docs))
     assert "Exchange" not in plan
     assert "EvalPython" not in plan
 
