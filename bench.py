@@ -26,7 +26,7 @@ if REPO not in sys.path:
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # The headline subset: one per operator family (scan/derive, gridding agg,
-# stencil engine, spatial joins, dedup, relational, windows).  The
+# stencil engine, spatial joins, relational, windows).  The
 # first 17 entries are the "comparable-20 subtotal" of BENCH/BASELINE.md
 # less its cosine_topk, text_stats and MinHash-bucket entries, which are
 # no longer registered.
@@ -57,10 +57,7 @@ HEADLINE = [
     "pip_rtree",
     "hex_ring_density",
     "pages_pipeline",
-    "line_dedup",
     "crawl_latest",
-    # (dup_spans and winnow_fingerprints are absent: the
-    # positional-shingle stream localCheckpoints inside the builder)
     "contour_cells",
     "aspect_rose",
     "hypsometry",
@@ -81,12 +78,8 @@ HEADLINE = [
     "trade_volumes",
     "adaptive_grid",
     "geary_c",
-    "editdist_pairs",
     "market_share",
-    "setsim_pairs",
     "hilbert_locality",
-    "containment_pairs",
-    "bag_jaccard",
     "dbscan_grid",
     # (hand times its OWN marginal plan over the shared memoized flow
     # pass)
@@ -94,7 +87,6 @@ HEADLINE = [
     "geomorphons",
     "zonal_overlay",
     "geo_language_map",
-    "good_turing",
     # (cost_distance is absent: the relaxation rounds checkpoint per
     # step.  basin_drainage times its OWN marginal plan over the shared
     # memoized flow pass)

@@ -4,9 +4,9 @@ Re-expresses the capabilities of the OpenTopography/RGR-pdal-topo reference
 toolkit (point-cloud -> DEM gridding, windowed topographic-metric stencils,
 point-in-polygon / kNN / profile-projection joins, SMRF-style ground
 classification) as idiomatic Spark DataFrame plans over a Common-Crawl-style
-web-page table treated as a point payload, plus the large-scale
-training-data-pipeline operators (dedup, text analysis)
-such a table needs.
+web-page table treated as a point payload, plus the page-table
+operators (text extraction, geocoding, crawl consolidation) such a table
+needs.
 
 Design rules (see SURVEY.md):
   * DataFrame / Spark SQL only — no RDDs, no per-row Python UDFs.

@@ -149,9 +149,9 @@ def consolidate_crawl(fetches: DataFrame) -> DataFrame:
     content versions, latest capture epoch, latest content digest.
 
     Scale shape: ONE groupBy(url) with full partial aggregation; content
-    travels as its md5 digest (never the body — same bounded-row-width
-    rule as exact_duplicates, operators/dedup.py:181), and the latest
-    digest rides a max_by (argmax struct-max, no window).  Capture epochs
+    travels as its md5 digest (never the body, so the shuffle row width
+    stays bounded), and the latest digest rides a max_by (argmax
+    struct-max, no window).  Capture epochs
     are unique per url so the argmax is deterministic."""
     digest = F.md5("text")
     return fetches.groupBy("url").agg(

@@ -20,7 +20,8 @@ from pyspark.sql import functions as F
 
 from rgr_pdal_topo_spark import synth
 from rgr_pdal_topo_spark.grid import DEFAULT_GRID as G
-from rgr_pdal_topo_spark.operators import dedup, gridding, joins
+from rgr_pdal_topo_spark.operators import gridding, joins
+from rgr_pdal_topo_spark.session import eager_jobs
 from rgr_pdal_topo_spark.sources.tables import register_views
 from rgr_pdal_topo_spark.synth import (
     gps_df,
@@ -2171,249 +2172,6 @@ _shared_sql(
 )
 
 
-# ---------------------------------------------------------------------------
-# dedup (documents)
-# ---------------------------------------------------------------------------
-
-@query(
-    "dedup_exact",
-    # grouping on md5(text) (not text): the shuffle carries a 32-char
-    # digest instead of the document body — same groups, bounded width
-    "SELECT MIN(doc_id) AS canonical_doc, COUNT(*) AS group_size "
-    "FROM documents GROUP BY md5(text)",
-)
-def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup: one hash agg on the content digest (A-class at any
-    scale; operators/dedup.py exact_duplicates)."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    return dedup.exact_duplicates(load_table(spark, sf_dir, "documents"))
-
-
-# Shingle/token ids are md5 -> base-16 Horner fold of the first 15 hex
-# chars — an exact 60-bit value, no modulus involved
-# (dedup.horner_hash_sql): pure built-ins, identical in both engines, and —
-# unlike round 1's dense_rank spelling — no global window, no vocabulary
-# broadcast, no shuffle wider than (doc_id, int64).
-_DOCTOKS_DUCK = (
-    "SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') "
-    "AS toks FROM documents"
-)
-_SHINGLES_DUCK = (
-    "SELECT DISTINCT doc_id, toks[u.pos] || ' ' || toks[u.pos+1] || ' ' || "
-    "toks[u.pos+2] AS shingle FROM d, LATERAL (SELECT "
-    "unnest(generate_series(1, greatest(len(toks) - 2, 0))) AS pos) u"
-)
-_SHID_DUCK = (
-    f"SELECT DISTINCT doc_id, {dedup.horner_hash_sql('h')} AS tid FROM "
-    "(SELECT doc_id, md5(shingle) AS h FROM sh) hh"
-)
-
-
-@query(
-    "decontaminate",
-    _with(
-        f"d AS ({_DOCTOKS_DUCK})",
-        f"sh AS ({_SHINGLES_DUCK})",
-        f"dt AS MATERIALIZED ({_SHID_DUCK})",
-        "bt AS (SELECT DISTINCT tid FROM dt WHERE doc_id % 97 = 0)",
-    )
-    + "SELECT dt.doc_id, COUNT(*) AS n_hits, "
-    "CAST(CASE WHEN dt.doc_id % 97 = 0 THEN 1 ELSE 0 END AS INT) "
-    "AS in_bench FROM dt JOIN bt ON dt.tid = bt.tid GROUP BY dt.doc_id",
-)
-def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination (dedup.decontaminate): every document
-    sharing a 3-token shingle with the "eval set" (here: doc_id % 97
-    == 0 — the eval members flag themselves with in_bench=1, exactly
-    the self-hit a real decontamination run sees when the benchmark
-    leaked into the crawl).  Shingle ids reuse the ONE Horner-fold
-    spelling the MinHash oracles pin, so contamination counts are
-    integer-exact across engines.
-
-    Scale shape: broadcast the eval-suite-sized benchmark ids, semi-join
-    the corpus shingle projection, one partial+final count — nothing
-    wider than (doc_id, int64) shuffles."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    bench = docs.filter(F.col("doc_id") % 97 == 0)
-    hits = dedup.decontaminate(docs, bench)
-    return hits.select(
-        "doc_id",
-        "n_hits",
-        (F.col("doc_id") % 97 == 0).cast("int").alias("in_bench"),
-    )
-
-
-# non-DISTINCT shingles: every occurrence — repetition is the signal
-_SHINGLES_RAW_DUCK = (
-    "SELECT doc_id, toks[u.pos] || ' ' || toks[u.pos+1] || ' ' || "
-    "toks[u.pos+2] AS shingle FROM d, LATERAL (SELECT "
-    "unnest(generate_series(1, greatest(len(toks) - 2, 0))) AS pos) u"
-)
-
-
-@query(
-    "repetition_stats",
-    _with(
-        f"d AS ({_DOCTOKS_DUCK})",
-        f"shr AS ({_SHINGLES_RAW_DUCK})",
-        "per AS (SELECT doc_id, tid, COUNT(*) AS n FROM (SELECT doc_id, "
-        f"{dedup.horner_hash_sql('h')} AS tid FROM (SELECT doc_id, "
-        "md5(shingle) AS h FROM shr) hh) t GROUP BY doc_id, tid)",
-    )
-    + "SELECT doc_id, CAST(SUM(n) AS BIGINT) AS n_shingles, "
-    "COUNT(*) AS n_distinct, CAST(MAX(n) AS BIGINT) AS top_count "
-    "FROM per GROUP BY doc_id",
-)
-def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style repeated-n-gram quality signal
-    (dedup.repetition_stats): per-document total/distinct/top-shingle
-    occurrence counts — boilerplate and template spam show a dominant
-    shingle, and thresholds like ``top_count * 10 > n_shingles`` are
-    the standard repetition filters.  All-integer output; the oracle
-    replays the same Horner shingle ids WITHOUT the distinct step
-    (repetition is precisely what dedup's distinct throws away).
-
-    Scale shape: shuffle is (doc_id, int64) into two nested
-    partial+final aggs — the same narrow-shuffle property as the
-    MinHash path."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return dedup.repetition_stats(docs)
-
-
-# Line-dedup fixture: the synthetic corpus is single-line, so the query
-# derives a multi-line corpus with ONE replace chain whose text is
-# byte-identical in both engines (replace + chr(10) are literal-string
-# builtins in Spark SQL and DuckDB alike).  Breaking before three of
-# the most common vocabulary words yields ~2.5 lines/doc at sf0.01 with
-# 64 lines shared by >= 3 docs — the boilerplate set is non-vacuous at
-# every test scale (asserted by the planted-case unit test).
-_MULTILINE_EXPR = (
-    "replace(replace(replace(text, ' the ', chr(10) || 'the '), "
-    "' a ', chr(10) || 'a '), ' value ', chr(10) || 'value ')"
-)
-_MULTILINE_DOCS_DUCK = (
-    f"SELECT doc_id, {_MULTILINE_EXPR} AS text FROM documents"
-)
-
-
-@query(
-    "line_dedup",
-    _with(
-        f"d AS ({_MULTILINE_DOCS_DUCK})",
-        "l AS (SELECT t.doc_id, t.ls[u.pos] AS line, u.pos FROM "
-        "(SELECT doc_id, string_split(text, chr(10)) AS ls FROM d) t, "
-        "LATERAL (SELECT unnest(generate_series(1, len(t.ls))) AS pos) u)",
-        f"li AS (SELECT doc_id, pos, line, {dedup.horner_hash_sql('h')} "
-        "AS lid FROM (SELECT doc_id, pos, line, md5(line) AS h FROM l) t)",
-        "b AS (SELECT lid FROM (SELECT DISTINCT doc_id, lid FROM li) t "
-        f"GROUP BY lid HAVING COUNT(*) >= {dedup.LINE_MIN_DOCS})",
-        "m AS (SELECT li.doc_id, li.pos, li.line, li.lid, "
-        "b.lid IS NOT NULL AS isb FROM li LEFT JOIN b ON li.lid = b.lid)",
-    )
-    + "SELECT doc_id, COUNT(*) AS n_lines, "
-    "CAST(SUM(CASE WHEN isb THEN 0 ELSE 1 END) AS BIGINT) AS n_kept, "
-    "CAST(COUNT(*) - COUNT(DISTINCT lid) AS BIGINT) AS n_intra_dup, "
-    "COALESCE(string_agg(CASE WHEN isb THEN NULL ELSE line END, "
-    "chr(10) ORDER BY pos), '') AS clean_text "
-    "FROM m GROUP BY doc_id",
-)
-def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet/RefinedWeb boilerplate-line removal (dedup.line_dedup):
-    lines repeated across >= 3 distinct documents are dropped and each
-    document is reassembled from its surviving lines in order, with the
-    within-doc duplicate-line count as a free quality signal.  The
-    value hash covers the reassembled clean_text byte-for-byte, so
-    ordering, joining, and the boilerplate set must ALL agree with the
-    oracle.  Reference analogue: the classification-based point
-    filtering in the reference drops whole classes before gridding
-    (pointCloudCreation.py:184,306 — the "nonoise" / ground-range
-    PDAL stages); this is that stage's webtext twin, dropping the
-    boilerplate class before corpus stats.
-
-    Scale shape: detection shuffles (doc_id, int64) only; the
-    boilerplate id set broadcasts; the one wide shuffle is the
-    reassembly groupBy — the rewrite itself."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.expr(_MULTILINE_EXPR).alias("text")
-    )
-    return dedup.line_dedup(docs)
-
-
-# Planted single-typo mirrors for editdist_pairs (the pii_scrub
-# discipline: the word-salad corpus has no char-level
-# near-dups, and edit-distance detection exists to find exactly the
-# one-character mirror a shingle smears out — so both engines plant
-# one per doc_id = 0 mod 20, substituting char 11 with 'x', a letter
-# absent from the 31-token vocab, so the planted distance is exactly 1
-# and the length/lang blocking key is preserved).
-_EDIT_ALL_DUCK = (
-    "SELECT doc_id, text, lang, n_chars FROM documents "
-    "UNION ALL SELECT doc_id + 10000000, "
-    "SUBSTR(text, 1, 10) || 'x' || SUBSTR(text, 12), lang, n_chars "
-    "FROM documents WHERE doc_id % 20 = 0"
-)
-
-
-@query(
-    "editdist_pairs",
-    _with(
-        f"ad AS ({_EDIT_ALL_DUCK})",
-        f"pp AS (SELECT doc_id, SUBSTR(text, 1, "
-        f"{dedup.EDITDIST_PREFIX}) AS p, lang, n_chars FROM ad)",
-        "pr AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, "
-        "CAST(levenshtein(a.p, b.p) AS BIGINT) AS dist "
-        "FROM pp a JOIN pp b ON b.lang = a.lang "
-        "AND b.n_chars = a.n_chars AND a.doc_id < b.doc_id)",
-    )
-    + f"SELECT doc_a, doc_b, dist FROM pr "
-    f"WHERE dist <= {dedup.EDITDIST_MAX}",
-)
-def q_editdist_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Character-level near-dup pairs by Levenshtein distance over
-    64-char prefixes, blocked on the exact (lang, n_chars) key
-    (operators/dedup.py:editdist_pairs) — the single-typo mirror
-    detector that completes the near-dup family: one char edit flips
-    every k-gram it touches (invisible to MinHash/SimHash at small
-    distance) but costs edit distance 1.  Mirrors are PLANTED in both
-    engines (_EDIT_ALL_DUCK: char 11 -> 'x', a letter outside the
-    corpus vocabulary, so planted distance is exactly 1 and the
-    blocking key survives).
-
-    Exactness: classic DP on ASCII prefixes — identical integers in
-    both engines.  The engine passes the threshold so Spark's banded
-    early-exit DP (levenshtein(l, r, 2), -1 past the cap) does the
-    filtering; the oracle runs the full DP and applies the same cap.
-
-    Scale shape: one projection, one self-equi-join on the narrow
-    block key (the sorted-neighborhood compromise — blocks stay small
-    because the length distribution is wide), banded DP inside
-    whole-stage codegen; never cartesian, no Python."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    mirrors = docs.filter(F.col("doc_id") % 20 == 0).select(
-        (F.col("doc_id") + 10000000).alias("doc_id"),
-        F.concat(
-            F.substring("text", 1, 10),
-            F.lit("x"),
-            F.expr("substring(text, 12)"),
-        ).alias("text"),
-        "lang",
-        "n_chars",
-    )
-    all_docs = docs.select(
-        "doc_id", "text", "lang", "n_chars"
-    ).unionAll(mirrors)
-    return dedup.editdist_pairs(all_docs)
-
-
 @query(
     "multimodal_meta",
     "SELECT doc_id, octet_length(encode(text)) AS payload_bytes, "
@@ -3888,29 +3646,32 @@ def q_manifest_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rgr_pdal_topo_spark.sources.tables import load_table
 
     root = _manifest_scratch("spark_graft_manifest_scan")
-    docs = load_table(spark, sf_dir, "documents")
-    mx = docs.agg(F.max("doc_id")).collect()[0][0]
-    man.commit(
-        docs.filter(F.col("doc_id") <= mx // 2), root, ["doc_id"], n_files=4
-    )
-    man.commit(
-        docs.filter(F.col("doc_id") > mx // 2), root, ["doc_id"], n_files=4
-    )
-
-    # identical arithmetic to the oracle's subquery bounds
-    lo, hi = math.floor(mx * 0.1), math.floor(mx * 0.3)
-    pred = {"doc_id": (lo, hi)}
-    rep = man.scan_report(root, pred)
-    if rep["files_skipped"] == 0:  # loud: pruning must actually skip
-        raise RuntimeError(f"manifest kept all files: {rep}")
-    return (
-        man.scan(spark, root, pred)
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").alias("total_chars"),
+    with eager_jobs(spark):
+        docs = load_table(spark, sf_dir, "documents")
+        mx = docs.agg(F.max("doc_id")).collect()[0][0]
+        man.commit(
+            docs.filter(F.col("doc_id") <= mx // 2), root, ["doc_id"],
+            n_files=4,
         )
-    )
+        man.commit(
+            docs.filter(F.col("doc_id") > mx // 2), root, ["doc_id"],
+            n_files=4,
+        )
+
+        # identical arithmetic to the oracle's subquery bounds
+        lo, hi = math.floor(mx * 0.1), math.floor(mx * 0.3)
+        pred = {"doc_id": (lo, hi)}
+        rep = man.scan_report(root, pred)
+        if rep["files_skipped"] == 0:  # loud: pruning must actually skip
+            raise RuntimeError(f"manifest kept all files: {rep}")
+        return (
+            man.scan(spark, root, pred)
+            .groupBy("lang")
+            .agg(
+                F.count(F.lit(1)).alias("n_docs"),
+                F.sum("n_chars").alias("total_chars"),
+            )
+        )
 
 
 @query(
@@ -4050,38 +3811,42 @@ def q_manifest_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     root, state = os.path.join(base, "tbl"), os.path.join(base, "state")
     os.makedirs(root)
 
-    docs = load_table(spark, sf_dir, "documents")
-    mx = docs.agg(F.max("doc_id")).collect()[0][0]
-    third = mx // 3
-    man.commit(docs.filter(F.col("doc_id") <= third), root, ["doc_id"])
-    man.commit(
-        docs.filter(
-            (F.col("doc_id") > third) & (F.col("doc_id") <= 2 * third)
-        ),
-        root,
-        ["doc_id"],
-    )
-
-    def per_batch(df: DataFrame) -> DataFrame:
-        return df.groupBy("lang").agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").alias("total_chars"),
+    with eager_jobs(spark):
+        docs = load_table(spark, sf_dir, "documents")
+        mx = docs.agg(F.max("doc_id")).collect()[0][0]
+        third = mx // 3
+        man.commit(docs.filter(F.col("doc_id") <= third), root, ["doc_id"])
+        man.commit(
+            docs.filter(
+                (F.col("doc_id") > third) & (F.col("doc_id") <= 2 * third)
+            ),
+            root,
+            ["doc_id"],
         )
 
-    if SnapshotConsumer(root, state).run(spark, per_batch) != [1, 2]:
-        raise RuntimeError("expected snapshots [1, 2] in the first pass")
-    man.commit(docs.filter(F.col("doc_id") > 2 * third), root, ["doc_id"])
-    resumed = SnapshotConsumer(root, state)  # fresh process stand-in
-    if resumed.run(spark, per_batch) != [3]:  # loud: ONLY the new batch
-        raise RuntimeError("resume must process exactly snapshot 3")
-    return (
-        resumed.outputs(spark)
-        .groupBy("lang")
-        .agg(
-            F.sum("n_docs").alias("n_docs"),
-            F.sum("total_chars").alias("total_chars"),
+        def per_batch(df: DataFrame) -> DataFrame:
+            return df.groupBy("lang").agg(
+                F.count(F.lit(1)).alias("n_docs"),
+                F.sum("n_chars").alias("total_chars"),
+            )
+
+        if SnapshotConsumer(root, state).run(spark, per_batch) != [1, 2]:
+            raise RuntimeError("expected snapshots [1, 2] in the first "
+                               "pass")
+        man.commit(
+            docs.filter(F.col("doc_id") > 2 * third), root, ["doc_id"]
         )
-    )
+        resumed = SnapshotConsumer(root, state)  # fresh process stand-in
+        if resumed.run(spark, per_batch) != [3]:  # loud: ONLY the new one
+            raise RuntimeError("resume must process exactly snapshot 3")
+        return (
+            resumed.outputs(spark)
+            .groupBy("lang")
+            .agg(
+                F.sum("n_docs").alias("n_docs"),
+                F.sum("total_chars").alias("total_chars"),
+            )
+        )
 
 
 @query(
@@ -4110,22 +3875,27 @@ def q_manifest_meta_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rgr_pdal_topo_spark.sources.tables import load_table
 
     root = _manifest_scratch("spark_graft_manifest_meta")
-    docs = load_table(spark, sf_dir, "documents")
-    mx = docs.agg(F.max("doc_id")).collect()[0][0]
-    man.commit(
-        docs.filter(F.col("doc_id") <= mx // 2), root, ["doc_id"], n_files=4
-    )
-    man.commit(
-        docs.filter(F.col("doc_id") > mx // 2), root, ["doc_id"], n_files=4
-    )
-    lo, hi = math.floor(mx * 0.55), math.floor(mx * 0.75)
-    pruned, rep = man.scan_via_metadata(spark, root, {"doc_id": (lo, hi)})
-    if rep["files_skipped"] == 0:  # loud: pruning must actually skip
-        raise RuntimeError(f"metadata tier kept all files: {rep}")
-    return pruned.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_chars").alias("total_chars"),
-    )
+    with eager_jobs(spark):
+        docs = load_table(spark, sf_dir, "documents")
+        mx = docs.agg(F.max("doc_id")).collect()[0][0]
+        man.commit(
+            docs.filter(F.col("doc_id") <= mx // 2), root, ["doc_id"],
+            n_files=4,
+        )
+        man.commit(
+            docs.filter(F.col("doc_id") > mx // 2), root, ["doc_id"],
+            n_files=4,
+        )
+        lo, hi = math.floor(mx * 0.55), math.floor(mx * 0.75)
+        pruned, rep = man.scan_via_metadata(
+            spark, root, {"doc_id": (lo, hi)}
+        )
+        if rep["files_skipped"] == 0:  # loud: pruning must actually skip
+            raise RuntimeError(f"metadata tier kept all files: {rep}")
+        return pruned.groupBy("lang").agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_chars").alias("total_chars"),
+        )
 
 
 @query(
@@ -4203,26 +3973,29 @@ def q_manifest_bloom_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rgr_pdal_topo_spark.sources.tables import load_table
 
     root = _manifest_scratch("spark_graft_manifest_bloom")
-    docs = load_table(spark, sf_dir, "documents")
-    man.commit(docs, root, ["n_chars"], n_files=8, bloom_cols=["doc_id"])
-    mx = docs.agg(F.max("doc_id")).collect()[0][0]
-    target = math.floor(mx * 0.37)
-    rep = man.scan_report(root, eq={"doc_id": target})
-    stripped = [
-        {k: v for k, v in e.items() if k != "bloom"}
-        for e in man.manifest_entries(root)
-    ]
-    kept_stats_only, _ = man.prune(stripped, None, {"doc_id": target})
-    if rep["files_kept"] >= len(kept_stats_only):
-        raise RuntimeError(
-            f"bloom added no skipping: {rep} vs stats-only "
-            f"{len(kept_stats_only)}"
+    with eager_jobs(spark):
+        docs = load_table(spark, sf_dir, "documents")
+        man.commit(
+            docs, root, ["n_chars"], n_files=8, bloom_cols=["doc_id"]
         )
-    if rep["files_skipped"] < rep["files_total"] // 2:
-        raise RuntimeError(f"weak bloom pruning: {rep}")
-    return man.scan(spark, root, eq={"doc_id": target}).select(
-        "doc_id", "lang", "n_chars"
-    )
+        mx = docs.agg(F.max("doc_id")).collect()[0][0]
+        target = math.floor(mx * 0.37)
+        rep = man.scan_report(root, eq={"doc_id": target})
+        stripped = [
+            {k: v for k, v in e.items() if k != "bloom"}
+            for e in man.manifest_entries(root)
+        ]
+        kept_stats_only, _ = man.prune(stripped, None, {"doc_id": target})
+        if rep["files_kept"] >= len(kept_stats_only):
+            raise RuntimeError(
+                f"bloom added no skipping: {rep} vs stats-only "
+                f"{len(kept_stats_only)}"
+            )
+        if rep["files_skipped"] < rep["files_total"] // 2:
+            raise RuntimeError(f"weak bloom pruning: {rep}")
+        return man.scan(spark, root, eq={"doc_id": target}).select(
+            "doc_id", "lang", "n_chars"
+        )
 
 
 _UTMX_DUCK, _UTMY_DUCK = rasterops.utm_forward_sql("lon", "lat", zone=31)
@@ -5185,188 +4958,6 @@ _ENT_H_SQL = (
 
 
 @query(
-    "shingle_dup_stats",
-    _with(
-        f"d AS ({_DOCTOKS_DUCK})",
-        f"sh AS ({_SHINGLES_DUCK})",
-        f"dt AS MATERIALIZED ({_SHID_DUCK})",
-        "dfreq AS (SELECT tid, COUNT(*) AS df FROM dt GROUP BY tid)",
-    )
-    + "SELECT dt.doc_id, CAST(COUNT(*) AS BIGINT) AS n_shingles, "
-    "CAST(SUM(CASE WHEN dfreq.df >= 2 THEN 1 ELSE 0 END) AS BIGINT) "
-    "AS n_dup, ROUND(CAST(SUM(CASE WHEN dfreq.df >= 2 THEN 1 ELSE 0 "
-    "END) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6) AS dup_ratio "
-    "FROM dt JOIN dfreq ON dfreq.tid = dt.tid GROUP BY dt.doc_id",
-)
-def q_shingle_dup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-duplication signal (dedup.shingle_dup_stats): per document,
-    the count and fraction of its distinct 3-token shingles shared with
-    at least one OTHER document — RefinedWeb's duplicated-n-gram family,
-    the between-exact-dedup-and-MinHash quality gate.  The ratio is one
-    correctly-rounded division of identical integer operands, so the
-    oracle matches bit-for-bit."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return dedup.shingle_dup_stats(docs)
-
-
-# positional (non-distinct) 3-token shingles — dup_spans' oracle needs the
-# POSITION of every occurrence, where _SHINGLES_DUCK deduplicates per doc
-_PSH_DUCK = (
-    "SELECT doc_id, u.pos AS pos, md5(toks[u.pos] || ' ' || toks[u.pos+1] "
-    "|| ' ' || toks[u.pos+2]) AS h FROM d, LATERAL (SELECT "
-    "unnest(generate_series(1, greatest(len(toks) - 2, 0))) AS pos) u"
-)
-
-
-@query(
-    "dup_spans",
-    _with(
-        f"d AS ({_DOCTOKS_DUCK})",
-        f"psh AS ({_PSH_DUCK})",
-        "pt AS MATERIALIZED (SELECT doc_id, pos, "
-        f"{dedup.horner_hash_sql('h')} AS tid FROM psh)",
-        "dup AS (SELECT tid FROM pt GROUP BY tid HAVING COUNT(*) >= 2)",
-        "hits AS (SELECT doc_id, pos FROM pt JOIN dup USING (tid))",
-        "isl AS (SELECT doc_id, pos, CASE WHEN LAG(pos) OVER w IS NULL "
-        "OR pos > LAG(pos) OVER w + 2 THEN 1 ELSE 0 END AS is_new "
-        "FROM hits WINDOW w AS (PARTITION BY doc_id ORDER BY pos))",
-        "sid AS (SELECT doc_id, pos, SUM(is_new) OVER ("
-        "PARTITION BY doc_id ORDER BY pos ROWS BETWEEN UNBOUNDED "
-        "PRECEDING AND CURRENT ROW) AS span_id FROM isl)",
-        "spans AS (SELECT doc_id, MIN(pos) AS s, MAX(pos) + 2 AS e "
-        "FROM sid GROUP BY doc_id, span_id)",
-    )
-    + "SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_spans, "
-    "CAST(MAX(e - s + 1) AS BIGINT) AS max_span, "
-    "CAST(SUM(e - s + 1) AS BIGINT) AS dup_tokens "
-    "FROM spans WHERE e - s + 1 >= 6 GROUP BY doc_id",
-)
-def q_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Maximal duplicated-span detection (dedup.duplicated_spans) — the
-    positional ExactSubstr signal: per document, the count / longest /
-    total token length of maximal runs of corpus-duplicated 3-gram
-    windows (>= 6 tokens) — what a suffix-array removal pass would
-    actually cut.  Everything is exact integer arithmetic over the
-    portable 60-bit shingle ids, and the island merge is the sessionize
-    lag-window pattern, so the oracle replays it row for row."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return dedup.duplicated_spans(docs)
-
-
-@query(
-    "winnow_fingerprints",
-    _with(
-        f"d AS ({_DOCTOKS_DUCK})",
-        f"psh AS ({_PSH_DUCK})",
-        "pt AS MATERIALIZED (SELECT doc_id, pos, "
-        f"{dedup.horner_hash_sql('h')} AS tid FROM psh)",
-        "ends AS (SELECT * FROM (SELECT doc_id, pos AS q, "
-        "MIN(tid) OVER (PARTITION BY doc_id ORDER BY pos "
-        "ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS min_h, "
-        "MAX(pos) OVER (PARTITION BY doc_id) AS m FROM pt) z "
-        "WHERE q >= 4)",
-        "cand AS (SELECT doc_id, q, min_h, m, q - u.o AS pos FROM ends, "
-        "LATERAL (SELECT unnest(generate_series(0, 3)) AS o) u)",
-        "sel AS (SELECT DISTINCT doc_id, m, sel_pos, min_h FROM ("
-        "SELECT c.doc_id, c.q, c.min_h, c.m, MAX(p.pos) AS sel_pos "
-        "FROM cand c JOIN pt p ON p.doc_id = c.doc_id "
-        "AND p.pos = c.pos WHERE p.tid = c.min_h "
-        "GROUP BY c.doc_id, c.q, c.min_h, c.m) g)",
-    )
-    + "SELECT doc_id, CAST(MAX(m) AS BIGINT) AS n_grams, "
-    "CAST(COUNT(*) AS BIGINT) AS n_selected, "
-    "CAST(bit_xor(xor(min_h, sel_pos)) AS BIGINT) AS fp_xor "
-    "FROM sel GROUP BY doc_id",
-)
-def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robust winnowing (dedup.winnow_fingerprints, the MOSS scheme):
-    rightmost minimum of each 4-window of 3-gram hashes selected as the
-    document's fingerprint sketch; every window is guaranteed a
-    fingerprint, density ~2/(w+1).  All-integer (60-bit portable
-    hashes, xor folds), so the oracle replays selection bit-for-bit."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return dedup.winnow_fingerprints(docs)
-
-
-# the synthetic corpus contains NO verbatim duplicates (every text is
-# unique), so the exact-digest arm of the split audit would be
-# structurally vacuous on it; plant deterministic mirror pages — two
-# docs per 31-bucket share one exact text — the same planted-case
-# discipline as pii_scrub, spelled identically in both engines
-_MIRROR_PLANT_SQL = (
-    "CASE WHEN doc_id % 31 < 2 THEN 'mirror boilerplate page ' || "
-    "CAST(doc_id // 31 AS VARCHAR) ELSE text END"
-)
-
-
-@query(
-    "split_leakage",
-    _with(
-        f"pl AS (SELECT doc_id, {_MIRROR_PLANT_SQL} AS text "
-        "FROM documents)",
-        "s AS (SELECT doc_id, text, CASE WHEN "
-        f"({dedup.horner_hash_sql('h')}) % {dedup.N_SPLIT_BUCKETS} = "
-        f"{dedup.VAL_BUCKET} THEN 'val' WHEN "
-        f"({dedup.horner_hash_sql('h')}) % {dedup.N_SPLIT_BUCKETS} = "
-        f"{dedup.TEST_BUCKET} THEN 'test' ELSE 'train' END AS split "
-        "FROM (SELECT doc_id, text, md5(CAST(doc_id AS VARCHAR)) AS h "
-        "FROM pl) hh)",
-        "dg AS (SELECT doc_id, split, md5(text) AS dg FROM s)",
-        "tdg AS (SELECT DISTINCT dg FROM dg WHERE split = 'train')",
-        "ex AS (SELECT d.doc_id, d.split, CASE WHEN t.dg IS NULL THEN 0 "
-        "ELSE 1 END AS leak_exact FROM dg d LEFT JOIN tdg t "
-        "ON t.dg = d.dg WHERE d.split <> 'train')",
-        "d AS (SELECT doc_id, list_filter(string_split(text, ' '), "
-        "t -> t <> '') AS toks FROM s)",
-        f"sh AS ({_SHINGLES_DUCK})",
-        f"dt AS MATERIALIZED ({_SHID_DUCK})",
-        "dts AS (SELECT dt.doc_id, dt.tid, s.split FROM dt "
-        "JOIN s ON s.doc_id = dt.doc_id)",
-        "ttid AS (SELECT DISTINCT tid FROM dts WHERE split = 'train')",
-        "ov AS (SELECT e.doc_id, COUNT(*) AS n_own, "
-        "SUM(CASE WHEN t.tid IS NULL THEN 0 ELSE 1 END) AS n_shared "
-        "FROM dts e LEFT JOIN ttid t ON t.tid = e.tid "
-        "WHERE e.split <> 'train' GROUP BY e.doc_id)",
-        "nr AS (SELECT doc_id, CASE WHEN 2 * n_shared >= n_own THEN 1 "
-        "ELSE 0 END AS leak_near FROM ov)",
-    )
-    + "SELECT ex.split, CAST(COUNT(*) AS BIGINT) AS n_docs, "
-    "CAST(SUM(ex.leak_exact) AS BIGINT) AS n_exact_leaked, "
-    "CAST(SUM(COALESCE(nr.leak_near, 0)) AS BIGINT) AS n_near_leaked "
-    "FROM ex LEFT JOIN nr ON nr.doc_id = ex.doc_id GROUP BY ex.split",
-)
-def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train/val/test split + cross-split contamination audit
-    (dedup.split_col + dedup.split_leakage): deterministic mod-10
-    hash-bucket assignment, then per eval split the count of documents
-    leaked from train verbatim (md5 digest) or as near-duplicates
-    (>= 50% one-sided shingle containment).  All counts are exact
-    BIGINTs over the portable 60-bit ids, so the oracle replays the
-    audit bit-for-bit.  Mirror pages are planted first (two docs per
-    31-bucket share one exact text) because the synthetic corpus has no
-    verbatim duplicates — without them the exact arm can never fire."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.when(
-            F.col("doc_id") % 31 < 2,
-            F.concat(
-                F.lit("mirror boilerplate page "),
-                F.expr("CAST(doc_id DIV 31 AS STRING)"),
-            ),
-        ).otherwise(F.col("text")).alias("text"),
-    )
-    return dedup.split_leakage(docs)
-
-
-@query(
     "pii_scrub",
     _with(f"p AS (SELECT doc_id, {_PII_PLANT_SQL} AS ptext FROM documents)")
     + f"SELECT doc_id, {_PII_COUNTS[0]} AS n_emails, "
@@ -5836,131 +5427,6 @@ def q_crawl_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "setsim_pairs",
-    _with(
-        f"d AS ({_DOCTOKS_DUCK})",
-        f"sh AS ({_SHINGLES_DUCK})",
-        f"dt AS MATERIALIZED ({_SHID_DUCK})",
-        "sz AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS s FROM dt "
-        "GROUP BY doc_id)",
-        "i AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, "
-        "CAST(COUNT(*) AS BIGINT) AS inter FROM dt a JOIN dt b "
-        "ON a.tid = b.tid AND a.doc_id < b.doc_id GROUP BY 1, 2)",
-    )
-    + "SELECT doc_a, doc_b, inter, x.s + y.s - inter AS uni, "
-    "ROUND(CAST(inter AS DOUBLE) / CAST(x.s + y.s - inter AS DOUBLE), 6) "
-    "AS jaccard FROM i "
-    "JOIN sz x ON x.doc_id = doc_a JOIN sz y ON y.doc_id = doc_b "
-    f"WHERE {dedup.ALLPAIRS_DEN} * inter >= "
-    f"{dedup.ALLPAIRS_NUM} * (x.s + y.s - inter)",
-)
-def q_setsim_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT set-similarity self-join at Jaccard >= 4/5 over the 3-gram
-    shingle-id sets (operators/dedup.py allpairs_jaccard) — the
-    completeness-guaranteed near-dup join: unlike probabilistic
-    banding, NO qualifying pair can be missed, which is exactly
-    what this parity row certifies (the oracle is the definitional
-    quadratic: every shingle-sharing pair's exact intersection, size
-    join, integer threshold — pairs sharing no shingle have J = 0 and
-    cannot qualify).  The engine generates candidates by AllPairs
-    prefix filtering (rarest p = s - ceil(tau*s) + 1 ids vs the full
-    stream) and verifies exactly, so a green row proves the prefix
-    completeness lemma held on real data.  All gates integer; the one
-    float is a correctly-rounded division, ROUND(,6)-guarded."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return dedup.allpairs_jaccard(dedup.shingle_ids(docs))
-
-
-@query(
-    "bag_jaccard",
-    _with(
-        f"d AS ({_DOCTOKS_DUCK})",
-        f"sh AS ({_SHINGLES_DUCK})",
-        f"dt AS MATERIALIZED ({_SHID_DUCK})",
-        "sz AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS s FROM dt "
-        "GROUP BY doc_id)",
-        "i AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, "
-        "CAST(COUNT(*) AS BIGINT) AS inter FROM dt a JOIN dt b "
-        "ON a.tid = b.tid AND a.doc_id < b.doc_id GROUP BY 1, 2)",
-        "pr AS (SELECT doc_a, doc_b FROM i "
-        "JOIN sz x ON x.doc_id = doc_a JOIN sz y ON y.doc_id = doc_b "
-        f"WHERE {dedup.ALLPAIRS_DEN} * inter >= "
-        f"{dedup.ALLPAIRS_NUM} * (x.s + y.s - inter))",
-        "tf AS (SELECT doc_id, u.tok AS tok, CAST(COUNT(*) AS BIGINT) "
-        "AS tf FROM d, LATERAL (SELECT unnest(toks) AS tok) u "
-        "GROUP BY 1, 2)",
-        "tt AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS tot FROM d)",
-        "sm AS (SELECT pr.doc_a, pr.doc_b, "
-        "CAST(SUM(LEAST(a.tf, b.tf)) AS BIGINT) AS w_inter FROM pr "
-        "JOIN tf a ON a.doc_id = pr.doc_a "
-        "JOIN tf b ON b.doc_id = pr.doc_b AND b.tok = a.tok "
-        "GROUP BY 1, 2)",
-    )
-    + "SELECT doc_a, doc_b, w_inter, "
-    "ta.tot + tb.tot - w_inter AS w_uni, "
-    "ROUND(CAST(w_inter AS DOUBLE) / "
-    "CAST(ta.tot + tb.tot - w_inter AS DOUBLE), 6) AS w_jaccard "
-    "FROM sm JOIN tt ta ON ta.doc_id = doc_a "
-    "JOIN tt tb ON tb.doc_id = doc_b",
-)
-def q_bag_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted (multiset) Jaccard rescoring of the exact near-dup
-    pairs (operators/dedup.py bag_jaccard over the setsim_pairs
-    survivors): J_w = sum min(tf)/sum max(tf) on token BAGS — the
-    repetition-aware second stage that separates "same vocabulary" from
-    "same document" (a doc looping one sentence 50x ties on set Jaccard
-    and collapses on the bag score).  The sum(max) identity
-    (tot_a + tot_b - sum(min)) keeps it one shared-token join;
-    all-integer, one guarded division.  The oracle recomputes the pair
-    set definitionally and restates the bag formula, so the row
-    certifies the two-stage composition end to end."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.allpairs_jaccard(dedup.shingle_ids(docs)).select(
-        "doc_a", "doc_b"
-    )
-    return dedup.bag_jaccard(docs, pairs)
-
-
-@query(
-    "containment_pairs",
-    _with(
-        f"d AS ({_DOCTOKS_DUCK})",
-        f"sh AS ({_SHINGLES_DUCK})",
-        f"dt AS MATERIALIZED ({_SHID_DUCK})",
-        "sz AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS s FROM dt "
-        "GROUP BY doc_id)",
-        "i AS (SELECT a.doc_id AS doc_sub, b.doc_id AS doc_sup, "
-        "CAST(COUNT(*) AS BIGINT) AS inter FROM dt a JOIN dt b "
-        "ON a.tid = b.tid AND a.doc_id <> b.doc_id GROUP BY 1, 2)",
-    )
-    + "SELECT doc_sub, doc_sup, inter, sz.s AS size_sub, "
-    "ROUND(CAST(inter AS DOUBLE) / CAST(sz.s AS DOUBLE), 6) "
-    "AS containment FROM i JOIN sz ON sz.doc_id = doc_sub "
-    f"WHERE {dedup.CONTAIN_DEN} * inter >= {dedup.CONTAIN_NUM} * sz.s",
-)
-def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT asymmetric containment join at |A n B|/|A| >= 9/10 over
-    the shingle-id sets (operators/dedup.py containment_pairs) — the
-    quote / mirror / provenance detector where symmetric Jaccard is
-    blind (a paragraph quoted inside a book: J ~ 0, containment ~ 1).
-    Candidates come from Bayardo's index-prefix-probe-full scheme —
-    FORCED here, unlike setsim_pairs' prefix-prefix, because
-    containment implies no size bound on the superset side (the
-    docstring carries both lemmas).  All gates integer; the oracle is
-    the definitional quadratic, so a green row certifies the
-    subset-side prefix completeness lemma on real data.  Ordered
-    pairs by contract: exact duplicates appear in both directions."""
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return dedup.containment_pairs(dedup.shingle_ids(docs))
-
-
-@query(
     "dbscan_grid",
     "WITH RECURSIVE "
     f"dpts AS ({synth.dbscan_points_sql()}), "
@@ -5997,7 +5463,7 @@ def q_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     transitive merging end to end (one 18-cell cluster must emerge).
     Engine: one partial+final count fold, 8-offset explode equi-join
     on the core set only, min-label propagation with path compression
-    (the dedup CC machinery reused on a spatial graph); oracle: the
+    (cluster.duplicate_components on a spatial graph); oracle: the
     definitional quadratic adjacency join + recursive-CTE closure.
     Everything integer — threshold included (one ceil-division) — so
     parity is exact with no rounding policy."""
@@ -6305,62 +5771,6 @@ def q_geo_language_map(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_langs",
         "top_lang",
         F.expr(_ENT_H_SQL).alias("lang_entropy"),
-    )
-
-
-@query(
-    "good_turing",
-    _with(
-        f"d AS ({_DOCTOKS_DUCK})",
-        f"sh AS ({_SHINGLES_DUCK})",
-        f"dt AS ({_SHID_DUCK})",
-        "df AS (SELECT tid, CAST(COUNT(*) AS BIGINT) AS r FROM dt "
-        "GROUP BY tid)",
-        "ff AS (SELECT r, CAST(COUNT(*) AS BIGINT) AS n_r FROM df "
-        "GROUP BY r)",
-        "nx AS (SELECT f.r, f.n_r, f2.n_r AS n_next FROM ff f "
-        "LEFT JOIN ff f2 ON f2.r = f.r + 1)",
-    )
-    + "SELECT r, n_r, n_next, "
-    "ROUND(CAST((r + 1) * n_next AS DOUBLE) / CAST(n_r AS DOUBLE), 6) "
-    "AS r_star FROM nx",
-)
-def q_good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Simple Good-Turing frequency-of-frequencies over the shingle
-    document counts (Good 1953; Gale & Sampson 1995): N_r = number of
-    shingle types seen in exactly r documents, with the adjusted
-    count r* = (r+1) N_{r+1} / N_r — the smoothing estimator behind
-    n-gram language models, and the principled answer to "how much of
-    the NEXT document's shingle mass have we never seen" (the unseen
-    mass is N_1 / N).  All counts exact BIGINTs (two partial+final
-    folds: type counts, then count-of-counts onto an r-domain-sized
-    table); r* is ONE shared guarded division, NULL where N_{r+1} is
-    empty (the raw estimator's gap — Gale-Sampson smooth over it;
-    surfacing the gap honestly IS the table's point).  The
-    count-of-counts table is the job-sizing view of the whole dedup
-    family: its head says how much of the corpus is hapax (untouched
-    by dedup), its tail how deep the duplication runs."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    df = dedup.shingle_ids(docs).groupBy("tid").agg(
-        F.count(F.lit(1)).alias("r")
-    )
-    ff = df.groupBy("r").agg(F.count(F.lit(1)).alias("n_r"))
-    nx = ff.join(
-        ff.select(
-            (F.col("r") - 1).alias("r"), F.col("n_r").alias("n_next")
-        ),
-        "r",
-        "left",
-    )
-    return nx.select(
-        "r",
-        "n_r",
-        "n_next",
-        F.round(
-            ((F.col("r") + 1) * F.col("n_next")).cast("double")
-            / F.col("n_r").cast("double"),
-            6,
-        ).alias("r_star"),
     )
 
 
@@ -6992,7 +6402,7 @@ DRIVER_WINDOW: list[str] = [
     "grid_idw_filled", "binned_intensity",
     "knn_gps",
     "stencil_suite", "hag", "grid_residuals",
-    "dup_spans", "geomorphons",
+    "flow_order", "geomorphons",
     "points_decimate", "lineage_resume",
     "smrf_ground",
     "multimodal_features", "hand", "flow_chi", "flow_basins",
@@ -7008,7 +6418,7 @@ DRIVER_WINDOW: list[str] = [
     "crawl_latest", "grid_mean_salted", "pip_stats",
     "pages_pip", "pip_pairs",
     "manifest_delete_scan", "manifest_bloom_scan", "pip_rtree",
-    "hex_ring_density", "decontaminate", "repetition_stats",
+    "hex_ring_density", "flow_maxl", "flow_main_path",
     "url_canonicalize",
     "grid_extent", "grid_stats", "detrend_grid",
     "radial_histogram", "profile_extract", "events_hourly",

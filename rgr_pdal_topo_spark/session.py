@@ -54,6 +54,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        # a cold terrain pass generates ~150 classes; the default cache
+        # of 100 makes every repeat in the same JVM recompile them
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()),

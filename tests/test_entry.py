@@ -96,3 +96,31 @@ def test_default_driver_heap_fits_in_physical_memory(spark):
         .byteStringAsBytes(spark.conf.get("spark.driver.memory"))
     phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
     assert 0 < heap < phys
+
+
+def test_repeated_plans_reuse_generated_code(spark):
+    """The session's codegen cache holds more classes than Spark's
+    default of 100: compiling 110 distinct one-stage plans a second time
+    compiles no class and runs no Spark job."""
+    sc = spark.sparkContext
+    compiles = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+
+    def compile_all():
+        for i in range(110):
+            spark.range(1).selectExpr(
+                f"id * {i + 3} + {i} AS v"
+            )._jdf.queryExecution().toRdd()
+
+    group = "codegen-cache"
+    sc.setJobGroup(group, group)
+    try:
+        compile_all()
+        before = compiles.getCount()
+        compile_all()
+        after = compiles.getCount()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert after == before
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []

@@ -180,23 +180,6 @@ def test_streaming_equals_batch(spark, tmp_path):
     np.testing.assert_allclose(got.sum_value, batch.sum_value, atol=2e-6)
 
 
-def test_exact_dedup_groups_on_planted_duplicates(spark):
-    """The driver corpus has no exact duplicate texts (every group_size
-    is 1), so real grouping must be pinned here: planted duplicate texts
-    collapse to min-doc_id canonicals with correct group sizes."""
-    from rgr_pdal_topo_spark.operators.dedup import exact_duplicates
-
-    rows = [(i, "common crawl page body") for i in (5, 9, 2)] + [
-        (7, "unique page"), (8, "another unique page"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        (r.canonical_doc, r.group_size)
-        for r in exact_duplicates(df).collect()
-    }
-    assert got == {(2, 3), (7, 1), (8, 1)}
-
-
 def test_lineage_fingerprint_version_mismatch_is_loud(spark, tmp_path):
     """A manifest written by a DIFFERENT fingerprint algorithm (or one
     predating versioning) must raise a rebuild instruction, not flag

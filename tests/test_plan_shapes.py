@@ -245,13 +245,15 @@ def test_eager_builders_tag_every_build_job(spark, tmp_path):
     """Every job the eager builders start before returning carries the
     builder job tag, inside the caller's job group: the fill_dem rounds
     (3x3 tiles), the kNN checkpoint and fallback test, pip_join's
-    strategy count, the rtree's polygon collect and BatchCheckpointer.run."""
+    strategy count, the rtree's polygon collect, BatchCheckpointer.run and
+    the manifest builders' reads, bound collects and commits."""
     import numpy as np
     import pandas as pd
 
     from rgr_pdal_topo_spark.grid import GridSpec
     from rgr_pdal_topo_spark.operators import flow, joins
     from rgr_pdal_topo_spark.plans.lineage import BatchCheckpointer
+    from rgr_pdal_topo_spark.queries import QUERIES
     from rgr_pdal_topo_spark.session import EAGER_JOB_TAG
     from rgr_pdal_topo_spark.synth import gps_df, points_df, polygons_df
 
@@ -274,6 +276,9 @@ def test_eager_builders_tag_every_build_job(spark, tmp_path):
         BatchCheckpointer(str(tmp_path / "cp"), n_batches=2).run(
             pts, lambda df: df
         )
+        for name in ("manifest_scan", "manifest_incremental",
+                     "manifest_meta_scan", "manifest_bloom_scan"):
+            QUERIES[name](spark, SF_DIR)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
@@ -399,24 +404,6 @@ def test_crawl_consolidation_single_partial_agg(spark):
     assert plan.count("Exchange") == 2
 
 
-def test_dup_spans_windows_partition_by_doc(spark):
-    """The island merge must never use a global (single-partition)
-    window: every Window node partitions by doc_id."""
-    from rgr_pdal_topo_spark.operators import dedup
-    from rgr_pdal_topo_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF_DIR, "documents")
-    plan = _plan(dedup.duplicated_spans(docs))
-    assert "Window" in plan
-    # a global window would print "Window [...]" with no partition spec;
-    # every window line here must carry the doc_id partitioning
-    for line in plan.splitlines():
-        if "Window [" in line:
-            assert "doc_id" in line
-    # per-doc span and final stats aggs combine map-side
-    assert "partial_count" in plan
-
-
 def test_contour_cases_single_scan_no_self_join(spark):
     """The quad assembly must be the replicate-to-blocks spelling, not
     self-joins: ONE scan of the source, NO join nodes, exactly two
@@ -479,20 +466,6 @@ def test_pair_statistics_never_cartesian(spark):
         assert plan.count("Generate explode") == 1, name
 
 
-def test_editdist_pairs_blocked_join_no_cartesian(spark):
-    """editdist_pairs candidates come from the (lang, n_chars) block
-    equi-join — never a cartesian/nested-loop product — and the banded
-    DP stays JVM-side (no Python/Arrow eval node)."""
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    plan = _plan(QUERIES["editdist_pairs"](spark, SF_DIR))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan \
-        or "BroadcastHashJoin" in plan
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-
-
 def test_market_share_broadcast_chain(spark):
     """The Q8-shaped 8-table join must stream the fact ONCE through a
     chain of broadcast hash joins — no sort-merge/shuffled join, no
@@ -504,29 +477,6 @@ def test_market_share_broadcast_chain(spark):
     assert "SortMergeJoin" not in plan
     assert "ShuffledHashJoin" not in plan
     assert "CartesianProduct" not in plan
-
-
-def test_setsim_pairs_prefix_equi_join(spark):
-    """The exact set-similarity join must stay the prefix-filtered
-    equi-join on tid: no cartesian / nested-loop node anywhere, and no
-    Python in the plan (ids are pure-Column md5/Horner arithmetic)."""
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    plan = _plan(QUERIES["setsim_pairs"](spark, SF_DIR))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "EvalPython" not in plan
-
-
-def test_containment_pairs_prefix_equi_join(spark):
-    """The containment join must stay the index-prefix-probe-full
-    equi-join on tid: no cartesian / nested-loop node, no Python."""
-    from rgr_pdal_topo_spark.queries import QUERIES
-
-    plan = _plan(QUERIES["containment_pairs"](spark, SF_DIR))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "EvalPython" not in plan
 
 
 def test_geomorphons_equi_join_no_python(spark):

@@ -1,5 +1,5 @@
 """Property-based tests (hypothesis) for the exact-arithmetic layers:
-cell-index hierarchy and the portable dedup hash.  These run pure numpy /
+cell-index hierarchy and the quantization twins.  These run pure numpy /
 DuckDB (no Spark) so hundreds of examples stay fast."""
 
 from __future__ import annotations
@@ -10,7 +10,6 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from rgr_pdal_topo_spark.functions import cells
-from rgr_pdal_topo_spark.operators import dedup
 
 _lon = st.floats(min_value=-179.999, max_value=179.999,
                  allow_nan=False, allow_infinity=False)
@@ -44,22 +43,6 @@ def test_s2_id_round_trip_face_and_range(lon, lat):
     face = cid >> (2 * cells.S2_LEVEL)
     assert 0 <= face <= 5
     assert 0 <= cid - (face << (2 * cells.S2_LEVEL)) < 1 << (2 * cells.S2_LEVEL)
-
-
-@settings(max_examples=100, deadline=None)
-@given(st.text(min_size=0, max_size=40))
-def test_portable_hash_cross_engine(s):
-    con = duckdb.connect()
-    expr = dedup.horner_hash_sql("h")
-    got = con.execute(
-        f"SELECT {expr} FROM (SELECT md5(?) AS h)", [s]
-    ).fetchone()[0]
-    # DuckDB Horner == the engine's conv spelling == value in [0, P)
-    import hashlib
-
-    hx = hashlib.md5(s.encode("utf-8")).hexdigest()
-    assert got == int(hx[:15], 16)
-    assert 0 <= got < dedup.ID_SPACE
 
 
 @settings(max_examples=200, deadline=None)
